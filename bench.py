@@ -269,9 +269,11 @@ def main() -> None:
     # structurally per-query and the run continues.
     # Per-query WARMUP pass (untimed): the first execution of a query in
     # a session pays one-off costs the steady state doesn't — codegen
-    # compilation of its specific operator chain, broadcast build,
-    # shuffle-file allocation. Round-8 measurement: first samples ran
-    # 1.3-6x their settled times (multimodal_extract 2.6s -> 0.42s
+    # compilation of its operator chains, broadcast build, shuffle-file
+    # allocation. The session's 4000-entry class cache (session.py) keeps
+    # those classes across the timed passes; at Spark's default of 100 the
+    # heavy queries recompiled on every sample. Round-8 measurement: first
+    # samples ran 1.3-6x their settled times (multimodal_extract 2.6s -> 0.42s
     # steady), so with only N_RUNS timed samples the min still carried
     # warmup and round-over-round totals drifted ~10% on nothing.
     raw_runs: dict[str, list[float]] = {name: [] for name in BENCH_QUERIES}

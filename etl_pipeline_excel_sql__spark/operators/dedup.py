@@ -509,9 +509,13 @@ def minhash_lsh_pairs_ingest_indexed(
     This removes the fused ingest's one documented non-incremental
     cost: the corpus re-scan + signature rebuild inside every
     evaluation. At 100 TB that scan is the difference between an ingest
-    costing O(batch + index-probe) and O(corpus); the index is
-    corpus-sized ROWS of ints/hashes (what a production near-dup
-    service persists between batches), never documents.
+    costing O(batch + index-probe) and O(corpus). The index is
+    corpus-sized and is NOT hash-only: ``bands`` holds integer
+    (id, band, bucket) rows, but ``sets`` holds each id's distinct
+    shingle STRINGS (``collect_set`` of the shingle column). Each token
+    appears in up to ``shingle_n`` shingles, so ``sets`` can store
+    several times a document's token text; an ingest probe reads it in
+    place of the documents.
 
     Pair-for-pair identical to the inline fused pass: the persisted
     tables are built with the same expressions over the same

@@ -472,9 +472,10 @@ def _incremental_dispositions(
     * **clusters** — the ``dedup_clusters_incremental`` IVM: persisted
       labels collapse to star edges, delta edges are the cross
       (batch × corpus) and within-batch band joins, components run on
-      the skinny union. Corpus text is touched ONLY by the cross
-      probe's signature build — the one documented non-incremental
-      cost (persisting corpus band tables would eliminate it too).
+      the skinny union. Corpus text is never re-read: the cross probe
+      joins the batch's bands against the persisted corpus band table
+      (``mh_bands``) and verifies against the persisted shingle sets
+      (``mh_sets``), both from the state directory.
     * **decontam** — the batch's k-grams probe the persisted digest
       sets both ways: new bench digests ⋈ the corpus ``train_idx``
       inverted index (newly published benchmarks retro-contaminate old

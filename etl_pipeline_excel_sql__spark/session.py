@@ -37,10 +37,24 @@ def get_session(
       actual map output sizes.
     * **UTC session timezone** — deterministic timestamp semantics across
       drivers/executors and vs. the DuckDB oracle.
-    * **Arrow on** — any residual driver transfer (template-scale sinks,
-      ``toPandas``) and all Pandas UDFs move columnar, not pickled rows.
+    * **Arrow on** — ``toPandas`` and all Pandas UDFs move columnar.
+      The template-scale Excel sinks (``sinks/excel_writer.py``) use
+      ``collect()``, which Arrow does not cover: they receive pickled
+      ``Row`` objects.
     * **Broadcast threshold 64 MB** — dimension tables (region/nation/
       customer-slices) broadcast instead of shuffling the fact table.
+    * **Generated-class cache of 4000 entries** — Spark caches compiled
+      codegen classes in a JVM-wide LRU that holds 100 by default. One
+      evaluation of ``curate_pack_pipeline`` alone compiles ~130
+      classes, so at the default every warm pass of the iterative
+      curation queries recompiles its whole working set. A pass over
+      ``bench.py``'s query list at sf0.001 compiles ~2300 distinct
+      classes plus ~190 new ones on every later pass; an LRU smaller
+      than that evicts each class just before its next use (at 2000
+      entries a second pass still recompiled ~1860), so the cache is
+      sized with headroom above it. The conf is static: it takes effect only if
+      this builder creates the session, so a session built elsewhere
+      before this call keeps 100 entries.
     """
     par = default_parallelism()
     builder = (
@@ -55,6 +69,7 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         # TIMESTAMP(NANOS) parquet (events.ts) arrives as raw nano longs;
         # sources/registry.py converts to microsecond timestamps explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pandas as pd
+
 from etl_pipeline_excel_sql__spark.plans.extended_queries import (
     q_approx_distinct,
 )
@@ -31,8 +33,6 @@ def test_zscore_pandas_udf_twin_matches_expressions(spark, sf_dir):
     batches + numpy vectorization — the escape hatch for semantics the
     built-ins can't express (numeric agreement to float tolerance; the
     expression path is the oracle-exact one)."""
-    import pandas as pd
-
     from etl_pipeline_excel_sql__spark.plans.extended_queries import q_window_zscore
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
@@ -64,22 +64,21 @@ def test_zscore_pandas_udf_twin_matches_expressions(spark, sf_dir):
 
 
 def test_grouped_agg_pandas_udf_matches_expression(spark, sf_dir):
-    """The GROUPED_AGG pandas_udf surface (Arrow-batched aggregate UDF —
+    """The grouped-aggregate pandas_udf surface (a Series -> scalar
+    type-hinted, Arrow-batched aggregate UDF —
     the third vectorized flavor next to mapInPandas/applyInPandas): a
     quantity-weighted mean per return flag must equal the expression
     twin to float tolerance. Expressions stay the hot path (codegen);
     this proves the escape hatch works when an aggregate genuinely
-    can't be expressed."""
-    import pandas as pd
+    can't be expressed. The type hints are resolved against this module's
+    globals, so ``pd`` must be imported at module level."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-    # multi-arg grouped aggregates need the explicit functionType — the
-    # type-hint inference path only recognizes single-Series signatures
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def wmean(v, w):
+    @pandas_udf("double")
+    def wmean(v: pd.Series, w: pd.Series) -> float:
         return float((v * w).sum() / w.sum())
 
     li = load_table(spark, "lineitem", sf_dir)

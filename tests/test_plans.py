@@ -89,6 +89,24 @@ def test_no_codegen_compile_failures_on_ann_paths(spark):
         spark.conf.set("spark.sql.codegen.fallback", "true")
 
 
+def test_warm_curation_passes_compile_nothing(spark):
+    """Generated classes survive between evaluations. Spark's class cache
+    holds 100 entries by default and ``curate_pack_pipeline`` alone
+    compiles ~130 per evaluation, so at the default every pass
+    recompiles; the session's 4000-entry cache must hold the curation
+    working set, and a third pass over it compiles nothing."""
+    from etl_pipeline_excel_sql__spark.plans import QUERIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4000"
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for _ in range(3):
+        before = compiles.getCount()
+        for name in ("perceptron_quality", "curate_pack_pipeline"):
+            QUERIES[name](spark, SF).write.format("noop").mode("overwrite").save()
+    assert compiles.getCount() - before == 0
+
+
 def test_brute_force_corpus_never_shuffles_before_scoring(spark):
     plan = _plan(spark, "ann_brute_topk")
     # one broadcast (query side) before scoring; the only Exchange is the
