@@ -30,6 +30,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from etl_pipeline_excel_sql__spark.operators.iterative import (  # noqa: E402
+    release_persisted,
+)
 from etl_pipeline_excel_sql__spark.plans import QUERIES  # noqa: E402
 from etl_pipeline_excel_sql__spark.session import get_session  # noqa: E402
 
@@ -238,11 +241,7 @@ def run_one(spark, name: str, sf_dir: str, gc_log: list | None = None) -> float:
     # has swept per-query since round 6; the bench must too, or it
     # measures suite-order memory pressure instead of the queries.
     # Sweep time is excluded from the sample — it is harness bookkeeping.
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in list(jmap.keySet().toArray()):
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
+    release_persisted(spark)
     return dt
 
 

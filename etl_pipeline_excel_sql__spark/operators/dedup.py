@@ -31,6 +31,10 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
     simhash_expr,
 )
 from etl_pipeline_excel_sql__spark.functions.text import shingles, ws_tokens
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    SignatureCache,
+    shared_slot,
+)
 
 
 #: Mersenne prime 2**31 - 1: modulus (and bitmask) for the affine MinHash
@@ -135,35 +139,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-class SignatureCache:
-    """Caller-owned persist slot: holding at most ONE lingering persisted
-    DataFrame, swapped atomically per call.
-
-    ``minhash_lsh_pairs`` / ``minhash_lsh_pairs_cross`` persist their
-    signature tables through a slot like this; the module-global default
-    slots bound storage across looped invocations but are shared — an
-    interleaved second caller unpersists the first caller's still-wanted
-    cache (correct but silently recomputes). Callers that interleave or
-    multi-thread pass their own ``SignatureCache`` so lifetimes follow
-    their call sequence (see tests/test_iterative.py).
-    """
-
-    def __init__(self) -> None:
-        self._df: DataFrame | None = None
-
-    def swap(self, df: DataFrame) -> DataFrame:
-        """Persist ``df``, release the previously held table, hold ``df``."""
-        df = df.persist()
-        if self._df is not None:
-            self._df.unpersist()
-        self._df = df
-        return df
-
-
-#: Previous invocation's persisted signature table (see minhash_lsh_pairs).
-_DEFAULT_SIG_CACHE = SignatureCache()
-
-
 def _minhash_signatures(exploded: DataFrame, num_hashes: int) -> DataFrame:
     """(__id, s0..s{k-1}) MinHash signature table from (__id, __sh)
     shingle rows — the ONE definition both the self-join and the
@@ -238,14 +213,8 @@ def minhash_lsh_pairs(
 
     Output: ``id_a, id_b, jaccard_sim`` with ``id_a < id_b``.
 
-    Lifetime note: each call unpersists the previous call's signature
-    cache through its ``cache`` slot (default: a module-global slot,
-    bounded to one lingering table). A result held from an earlier call
-    stays CORRECT — persist keeps lineage, unlike a checkpoint — but
-    recomputes on next read, and concurrent callers sharing the default
-    slot may unpersist each other's still-running cache. Interleaved or
-    multi-threaded callers pass their own :class:`SignatureCache` so
-    each call sequence owns its lifetime.
+    The signature table persists through ``cache`` under the slot rule
+    of :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
 
     ``exploded``: prebuilt ``(__id, __sh)`` shingle-occurrence frame
     (post empty-document filter, same ``shingle_n``); callers that feed
@@ -264,14 +233,12 @@ def minhash_lsh_pairs(
         exploded = shingle_rows(df, text_col, id_col, shingle_n)
     # The signature table is tiny (one row per doc, k ints) but its subtree
     # (explode + window + md5) is expensive, and the band self-join would
-    # recompute it once per side — persist the result, not the heavy rows.
-    # Bounded cache lifetime: each invocation unpersists the previous
-    # call's signature table (a localCheckpoint would also scope cleanup
-    # but costs ~3x the persist path on the bench), so looped invocations
-    # hold at most one lingering cache.
-    sig = (cache or _DEFAULT_SIG_CACHE).swap(
-        _minhash_signatures(exploded, num_hashes)
+    # recompute it once per side — persist the result, not the heavy rows
+    # (a localCheckpoint costs ~3x the persist path on the bench).
+    slot = cache or shared_slot(
+        exploded.sparkSession, "dedup.signatures", SignatureCache
     )
+    sig = slot.swap(_minhash_signatures(exploded, num_hashes))
     bands = sig.select("__id", _minhash_band_expr(num_hashes, band_rows))
     cand = (
         bands.alias("l")
@@ -290,11 +257,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard_sim") >= threshold)
         .select("id_a", "id_b", "jaccard_sim")
     )
-
-
-#: bounded cache handle for minhash_lsh_pairs_cross (same doctrine as
-#: the self-join slot: at most one lingering persisted signature table).
-_DEFAULT_SIG_CACHE_CROSS = SignatureCache()
 
 
 def minhash_lsh_pairs_cross(
@@ -338,7 +300,10 @@ def minhash_lsh_pairs_cross(
     tagged = tagged.filter(F.size(ws_tokens(F.col(text_col))) > 0)
     exploded = shingle_rows(tagged, text_col, id_col, shingle_n)
     sides = tagged.select(F.col(id_col).alias("__id"), "__side")
-    sig = (cache or _DEFAULT_SIG_CACHE_CROSS).swap(
+    slot = cache or shared_slot(
+        tagged.sparkSession, "dedup.cross_signatures", SignatureCache
+    )
+    sig = slot.swap(
         _minhash_signatures(exploded, num_hashes).join(sides, "__id")
     )
     bands = sig.select(
@@ -406,10 +371,7 @@ def minhash_lsh_pairs_ingest(
     r13): the two sides' id spaces must be DISJOINT — callers split one
     table by a partition predicate. An id on both sides would merge the
     two documents' shingle rows into one signature/set and emit wrong
-    pairs. Cache note: shares ``_DEFAULT_SIG_CACHE_CROSS`` semantics —
-    interleaved cross/ingest callers should pass their own
-    :class:`SignatureCache` (each call retires the slot's previous
-    table).
+    pairs. Its default signature slot is the cross function's.
     """
     assert num_hashes % band_rows == 0
 
@@ -423,7 +385,10 @@ def minhash_lsh_pairs_ingest(
     tagged = tagged.filter(F.size(ws_tokens(F.col(text_col))) > 0)
     exploded = shingle_rows(tagged, text_col, id_col, shingle_n)
     sides = tagged.select(F.col(id_col).alias("__id"), "__side")
-    sig = (cache or _DEFAULT_SIG_CACHE_CROSS).swap(
+    slot = cache or shared_slot(
+        tagged.sparkSession, "dedup.cross_signatures", SignatureCache
+    )
+    sig = slot.swap(
         _minhash_signatures(exploded, num_hashes).join(sides, "__id")
     )
     bands = sig.select(
@@ -483,11 +448,6 @@ def minhash_index_tables(
     return bands, sets
 
 
-#: ingest's own default cache slot (ADVICE r13: sharing the cross slot
-#: let interleaved cross/ingest callers evict each other's cache).
-_DEFAULT_SIG_CACHE_INGEST = SignatureCache()
-
-
 def minhash_lsh_pairs_ingest_indexed(
     new_df: DataFrame,
     corpus_bands: DataFrame,
@@ -534,9 +494,10 @@ def minhash_lsh_pairs_ingest_indexed(
 
     new_df = new_df.filter(F.size(ws_tokens(F.col(text_col))) > 0)
     exploded = shingle_rows(new_df, text_col, id_col, shingle_n)
-    sig = (cache or _DEFAULT_SIG_CACHE_INGEST).swap(
-        _minhash_signatures(exploded, num_hashes)
+    slot = cache or shared_slot(
+        new_df.sparkSession, "dedup.ingest_signatures", SignatureCache
     )
+    sig = slot.swap(_minhash_signatures(exploded, num_hashes))
     new_b = sig.select("__id", _minhash_band_expr(num_hashes, band_rows))
     cand_cross = (
         new_b.alias("l")

@@ -26,7 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.operators.iterative import LineageTruncator
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    LineageTruncator,
+    shared_slot,
+)
 
 PAGERANK_SCALE = 10**9
 PAGERANK_DAMPING_PCT = 85
@@ -204,11 +207,6 @@ def pagerank_unrolled_sql(
     return "WITH " + ",\n".join(parts)
 
 
-#: call-spanning truncator for triangle_participation's pair table —
-#: each call's eager cut retires the previous call's blocks.
-_tri_trunc: LineageTruncator | None = None
-
-
 def triangle_participation(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -243,25 +241,18 @@ def triangle_participation(
     subtrees that must not re-run per consumer (same practice as
     ngram_containment_pairs).
 
-    Lifetime contract: the materialization is truncator-scoped — the next
-    call through the SAME truncator retires this call's localCheckpoint
-    blocks, so only the most recent such result may still be read (an
-    older result has no lineage to recompute freed blocks). The default
-    is a module-global truncator shared by all callers; interleaved or
-    multi-threaded callers pass a caller-owned ``truncator`` so each call
-    sequence has its own lifetime (see tests/test_iterative.py).
+    The materialization goes through ``truncator`` under the slot rule
+    of :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
     """
     # Bounded block storage: LineageTruncator's eager cut materializes
     # the pair table once for its four consumers AND retires the
     # previous invocation's blocks (DataFrame.unpersist cannot free a
     # localCheckpoint's internal RDD — the truncator tracks the actual
     # persisted-RDD ids).
-    global _tri_trunc
     spark = pairs.sparkSession
-    if truncator is None:
-        if _tri_trunc is None or _tri_trunc.spark is not spark:
-            _tri_trunc = LineageTruncator(spark)
-        truncator = _tri_trunc
+    truncator = truncator or shared_slot(
+        spark, "graph.triangles", lambda: LineageTruncator(spark)
+    )
     pairs = truncator.truncate(pairs.select(id_a, id_b))
     e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     deg = (

@@ -45,10 +45,10 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
 from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
-
-#: Previous invocation's persisted feature table (see perceptron_scores).
-_last_feats: DataFrame | None = None
-
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    SignatureCache,
+    shared_slot,
+)
 
 def feature_buckets(
     docs: DataFrame,
@@ -162,30 +162,18 @@ def perceptron_scores(
 ) -> DataFrame:
     """Train, then score every document with the trained weights:
     ``(doc_id, y, margin, pred)`` — ``pred`` is ±1 (margin 0 → -1, the
-    mistake-driven convention), all integers, engine-exact."""
-    global _last_feats
+    mistake-driven convention), all integers, engine-exact. The feature
+    table persists through a default slot under the slot rule of
+    :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`."""
     # One feature pass shared by every training round and the final
-    # scoring join (the word_frequencies doctrine). Lifetime follows the
-    # similarity._last_keys contract: each call drops the PREVIOUS
-    # call's cache (bounded to one lingering table; results stay correct
-    # via lineage, the harness sweeps persisted blocks per query).
-    # Drop it BEFORE persisting the new frame: a repeat invocation
-    # builds an IDENTICAL plan, the CacheManager dedups the new
-    # persist() onto the old entry, and unpersisting the old frame
-    # afterwards would evict BOTH — leaving every training round to
-    # rebuild the feature table from scratch (observed: 16 s vs 7 s at
-    # sf0.1 on the second call).
-    if _last_feats is not None:
-        _last_feats.unpersist()
-        _last_feats = None
-    feats = (
+    # scoring join (the word_frequencies doctrine).
+    feats = shared_slot(
+        docs.sparkSession, "perceptron.features", SignatureCache
+    ).swap(
         feature_buckets(
             docs, label, n_buckets, text_col=text_col, id_col=id_col
-        )
-        .repartition("doc_id")
-        .persist()
+        ).repartition("doc_id")
     )
-    _last_feats = feats
     w = perceptron_train(feats, n_buckets, rounds)
     return _margins(feats, docs.sparkSession, w).select(
         "doc_id",

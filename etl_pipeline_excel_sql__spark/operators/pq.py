@@ -38,23 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.operators.iterative import LineageTruncator
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    LineageTruncator,
+    shared_slot,
+)
 
 #: Micro-unit scale for ADC distance accumulation.
 ADC_SCALE = 1_000_000
-
-#: Call-spanning default truncators (same doctrine as
-#: similarity._kmeans_trunc): the NEXT call through the same global
-#: retires this call's final localCheckpoint blocks, so repeated
-#: training/search calls (a bench loop, a long session) hold bounded
-#: block storage instead of leaking one corpus-sized assignment table
-#: per call. Consequence: only the most recent call's result through a
-#: given global may still be read lazily — interleaved callers pass a
-#: caller-owned ``truncator`` (see tests/test_iterative.py's pattern).
-_pq_trunc: LineageTruncator | None = None
-_ivfpq_coarse_trunc: LineageTruncator | None = None
-_ivfpq_resid_trunc: LineageTruncator | None = None
-
 
 def _argmin_struct(sub: int) -> F.Column:
     """``min(when(sub == s, struct(d, code)))`` — the per-subspace
@@ -90,14 +80,6 @@ def _scored_rows(
             "__d", F.expr(l2sq_sub_sql(vec_col, "centroid", "sub", subdim))
         )
     )
-
-
-def _global_trunc(name: str, spark) -> LineageTruncator:
-    t = globals()[name]
-    if t is None or t.spark is not spark:
-        t = LineageTruncator(spark)
-        globals()[name] = t
-    return t
 
 
 def l2sq_sub_sql(vec: str, cent: str, sub_col: str, subdim: int) -> str:
@@ -218,14 +200,15 @@ def pq_train_codebooks(
     and every consumer of the returned codebooks (the encoder, the ADC
     lookup table, the next round) reads ≤128 materialized rows instead
     of re-running the training subtree or reading a corpus-sized
-    checkpoint. Same ``truncator`` lifetime contract as before: blocks
-    retire on the next call through the same (default: module-global)
-    truncator, so only the most recent call's codebooks stay readable."""
+    checkpoint. The cuts go through ``truncator`` under the slot rule of
+    :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`."""
     if dims % m != 0:
         raise ValueError(f"pq: dims ({dims}) not divisible by m ({m})")
     subdim = dims // m
     spark = corpus.sparkSession
-    trunc = truncator or _global_trunc("_pq_trunc", spark)
+    trunc = truncator or shared_slot(
+        spark, "pq.codebooks", lambda: LineageTruncator(spark)
+    )
     seeds = (
         corpus.orderBy(id_col)
         .limit(ncodes)
@@ -618,7 +601,9 @@ def ivfpq_topk(
     """
     subdim = dims // m
     spark = corpus.sparkSession
-    trunc = _global_trunc("_ivfpq_coarse_trunc", spark)
+    trunc = shared_slot(
+        spark, "pq.ivfpq_coarse", lambda: LineageTruncator(spark)
+    )
 
     assigned, coarse_final = _coarse_kmeans(
         corpus, ncells, iters, id_col, vec_col, dims, trunc
@@ -833,14 +818,18 @@ def ivfpq_residual_topk(
     """
     subdim = dims // m
     spark = corpus.sparkSession
-    trunc = _global_trunc("_ivfpq_coarse_trunc", spark)
+    trunc = shared_slot(
+        spark, "pq.ivfpq_coarse", lambda: LineageTruncator(spark)
+    )
 
     assigned, coarse_final = _coarse_kmeans(
         corpus, ncells, iters, id_col, vec_col, dims, trunc
     )
 
     # --- residuals: v - ccent(cell(v)), materialized once ------------
-    resid_trunc = _global_trunc("_ivfpq_resid_trunc", spark)
+    resid_trunc = shared_slot(
+        spark, "pq.ivfpq_residuals", lambda: LineageTruncator(spark)
+    )
     resid = resid_trunc.truncate(
         assigned.join(F.broadcast(coarse_final), "cell").select(
             id_col,

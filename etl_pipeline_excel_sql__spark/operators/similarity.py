@@ -29,6 +29,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.vectors import cosine, dot, l2_norm_sq
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    LineageTruncator,
+    SignatureCache,
+    shared_slot,
+)
 
 
 def brute_force_topk(
@@ -306,12 +311,6 @@ def _assign_broadcast(
     )
 
 
-#: call-spanning truncator for kmeans_train_assign's per-round
-#: assignments — round i's eager cut retires round i-1's blocks, and the
-#: next call retires the last round's.
-_kmeans_trunc = None
-
-
 def kmeans_train_assign(
     corpus: DataFrame,
     ncells: int = 8,
@@ -338,29 +337,15 @@ def kmeans_train_assign(
     driver never collects them. Empty cells drop out naturally (their
     group vanishes), mirrored by the oracle's GROUP BY.
 
-    Lifetime contract: storage is bounded by a truncator that retires the
-    PREVIOUS call's localCheckpoint blocks on the next call. Only the
-    MOST RECENT call through a given truncator may still be read — a
-    DataFrame held from an earlier call has no lineage to recompute its
-    freed blocks and fails with block-not-found. The default is a
-    module-global truncator shared by all callers, so interleaved or
-    concurrent calls invalidate each other's results; pass a caller-owned
-    ``truncator`` (an ``operators.iterative.LineageTruncator``) to scope
-    the lifetime to YOUR call sequence instead — each truncator's results
-    are independent (see tests/test_iterative.py's interleaving test).
+    Round cuts go through ``truncator`` under the slot rule of
+    :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
     """
     if iters < 1:
         raise ValueError("kmeans_train_assign: iters must be >= 1")
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
-    )
-
-    global _kmeans_trunc
     spark = corpus.sparkSession
-    if truncator is None:
-        if _kmeans_trunc is None or _kmeans_trunc.spark is not spark:
-            _kmeans_trunc = LineageTruncator(spark)
-        truncator = _kmeans_trunc
+    truncator = truncator or shared_slot(
+        spark, "similarity.kmeans", lambda: LineageTruncator(spark)
+    )
     # seed centroids stay LAZY: round 1's cut evaluates them once.
     cents = (
         corpus.orderBy(id_col)
@@ -425,10 +410,6 @@ def ivf_topk_trained(
     )
 
 
-#: Previous invocation's persisted SRP key table (see cosine_neardup_pairs).
-_last_keys: DataFrame | None = None
-
-
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float,
@@ -456,11 +437,9 @@ def cosine_neardup_pairs(
     variant, ``block_col=None`` + ``srp_bits=0`` for exact all-pairs (only
     sane on small corpora).
 
-    Lifetime note: with SRP enabled, each call unpersists the previous
-    call's key cache (module-global, bounded to one lingering table).
-    Older results stay correct (persist keeps lineage) but recompute on
-    next read; not thread-safe — serialize calls in multi-threaded
-    drivers (same contract as ``dedup.minhash_lsh_pairs``).
+    With SRP enabled, the key table persists through a default slot
+    under the slot rule of
+    :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
     """
     cols = [
         F.col(id_col).alias("__id"),
@@ -474,16 +453,6 @@ def cosine_neardup_pairs(
     if srp_bits:
         from etl_pipeline_excel_sql__spark.functions.vectors import srp_buckets_long
 
-        global _last_keys
-        # Drop the previous call's cache BEFORE persisting the new one:
-        # a repeat invocation builds an identical plan, the CacheManager
-        # dedups the new persist() onto the old entry, and a
-        # persist-then-unpersist order would evict BOTH (the perceptron
-        # _last_feats lesson — both sides of the self-join would then
-        # recompute the signature subtree).
-        if _last_keys is not None:
-            _last_keys.unpersist()
-            _last_keys = None
         keys = srp_buckets_long(
             corpus.select(
                 F.col(id_col).alias("__id"),
@@ -497,12 +466,13 @@ def cosine_neardup_pairs(
             srp_tables,
             extra_cols=("__block",) if block_col else (),
             plane_stride=srp_plane_stride,
-        ).persist()
+        )
         # The key table is tiny (srp_tables rows of four scalars per
-        # vector) but its signature subtree is wide; both sides of the
-        # self-join read it, so persist and drop the previous call's cache
-        # (bounded to one lingering table, as in dedup.minhash_lsh_pairs).
-        _last_keys = keys
+        # vector) but its signature subtree is wide, and both sides of
+        # the self-join read it.
+        keys = shared_slot(
+            corpus.sparkSession, "similarity.srp_keys", SignatureCache
+        ).swap(keys)
         key_cols = (["__block"] if block_col else []) + ["__table", "__bucket"]
         cand = (
             keys.select(F.col("__id").alias("id_a"), *key_cols)

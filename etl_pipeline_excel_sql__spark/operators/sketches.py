@@ -32,6 +32,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    SignatureCache,
+    shared_slot,
+)
 
 #: register count (p = 6 bits). alpha_64 = 0.709 (Flajolet et al. 2007).
 HLL_M = 64
@@ -46,9 +50,6 @@ HLL_ALPHA_DEN = 1000
 
 #: max rank: 54 payload bits all zero -> rho = 55.
 _RHO_MAX = 55
-
-#: Previous invocation's persisted hit table (see hll_registers).
-_last_hit: DataFrame | None = None
 
 
 def _rho(r: Column) -> Column:
@@ -71,14 +72,9 @@ def hll_registers(
     groups × m rows, and referenced by both the grid and the join), so
     the corpus is scanned exactly once, by the hit aggregate. (Every
     group has ≥1 row, hence ≥1 hit register, so the hit table's group
-    set is complete.) Cache lifetime follows the perceptron
-    ``_last_feats`` contract: each call drops the previous call's entry
-    BEFORE persisting (persist-then-unpersist on an identical plan
-    evicts both)."""
-    global _last_hit
-    if _last_hit is not None:
-        _last_hit.unpersist()
-        _last_hit = None
+    set is complete.) The hit table persists through a default slot under
+    the slot rule of
+    :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`."""
     h = md5_hash60(F.col(value_col))
     hit = (
         df.select(*group_cols, h.alias("__h"))
@@ -89,9 +85,10 @@ def hll_registers(
         )
         .groupBy(*group_cols, "reg")
         .agg(F.max("__rho").alias("rho"))
-        .persist()
     )
-    _last_hit = hit
+    hit = shared_slot(
+        df.sparkSession, "sketches.hll_hits", SignatureCache
+    ).swap(hit)
     grid = (
         hit.select(*group_cols)
         .distinct()

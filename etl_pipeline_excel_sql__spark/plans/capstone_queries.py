@@ -66,7 +66,10 @@ from etl_pipeline_excel_sql__spark.plans.spans_queries import (
     SPAN_BENCH_MOD,
     SPAN_K,
 )
-from etl_pipeline_excel_sql__spark.sources.registry import load_table
+from etl_pipeline_excel_sql__spark.sources.registry import (
+    built_dir,
+    load_table,
+)
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -350,21 +353,15 @@ def _manifest_of(disp: DataFrame) -> DataFrame:
 
 # --- incremental manifest ingest (round 13) ---------------------------------
 
-#: persisted corpus-only curation state per (process, corpus version):
-#: quality scores, cluster labels, the k-gram decontam digest index,
-#: bench digests, and baseline contamination flags — everything an
-#: ingest needs so batch arrival touches batch text plus skinny integer
-#: artifacts, never a corpus re-scan (except the documented cross-probe
-#: signature build). Fingerprint-keyed + atexit-cleaned (ADVICE r12).
-_CURATION_STATE_DIRS: dict[tuple, str] = {}
-
-
 def _curation_state(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once corpus-only curation state under one scratch dir.
+    """Build-once corpus-only curation state under one
+    :func:`~etl_pipeline_excel_sql__spark.sources.registry.built_dir`.
 
-    Five parquet artifacts over the NON-batch side (sources outside
+    Parquet artifacts over the NON-batch side (sources outside
     ``NEW_SOURCES``), the state a production curation service persists
-    between ingests:
+    between ingests — everything an ingest needs so batch arrival
+    touches batch text plus skinny integer artifacts, never a corpus
+    re-scan:
 
     * ``scores``    — (doc_id, lang, n_tokens, __score) per trainable
       doc: quality scoring is a pure per-doc map, so batch scores union
@@ -401,59 +398,50 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         MINHASH_THRESHOLD,
         NEW_SOURCES,
     )
-    from etl_pipeline_excel_sql__spark.sources.registry import (
-        corpus_fingerprint,
-        scratch_dir,
-    )
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    path = _CURATION_STATE_DIRS.get(key)
-    if path is not None:
-        return path
-    path = scratch_dir("curation_state_")
-    docs = load_table(spark, "documents", sf_dir)
-    corpus = docs.filter(~F.col("source").isin(*NEW_SOURCES))
-    bench = corpus.filter(F.col("doc_id") % SPAN_BENCH_MOD == 0)
-    train = corpus.filter(F.col("doc_id") % SPAN_BENCH_MOD != 0)
+    def build(path: str) -> None:
+        docs = load_table(spark, "documents", sf_dir)
+        corpus = docs.filter(~F.col("source").isin(*NEW_SOURCES))
+        bench = corpus.filter(F.col("doc_id") % SPAN_BENCH_MOD == 0)
+        train = corpus.filter(F.col("doc_id") % SPAN_BENCH_MOD != 0)
+        _quality_scores(train).write.mode("overwrite").parquet(
+            f"{path}/scores"
+        )
+        base_pairs = minhash_lsh_pairs(
+            corpus,
+            "text",
+            "doc_id",
+            num_hashes=MINHASH_K,
+            band_rows=MINHASH_BAND_ROWS,
+            shingle_n=MINHASH_SHINGLE_N,
+            threshold=MINHASH_THRESHOLD,
+        ).select("id_a", "id_b")
+        connected_components(base_pairs).select(
+            "member_id", "cluster_id"
+        ).write.mode("overwrite").parquet(f"{path}/labels")
+        kgram_rows(train, "text", "doc_id", SPAN_K).select(
+            "doc_id", "h"
+        ).distinct().write.mode("overwrite").parquet(f"{path}/train_idx")
+        kgram_rows(bench, "text", "doc_id", SPAN_K).select(
+            "h"
+        ).distinct().write.mode("overwrite").parquet(f"{path}/bench_h")
+        spark.read.parquet(f"{path}/train_idx").join(
+            spark.read.parquet(f"{path}/bench_h"), "h"
+        ).select("doc_id").distinct().write.mode("overwrite").parquet(
+            f"{path}/contam0"
+        )
+        mh_bands, mh_sets = minhash_index_tables(
+            corpus,
+            "text",
+            "doc_id",
+            num_hashes=MINHASH_K,
+            band_rows=MINHASH_BAND_ROWS,
+            shingle_n=MINHASH_SHINGLE_N,
+        )
+        mh_bands.write.mode("overwrite").parquet(f"{path}/mh_bands")
+        mh_sets.write.mode("overwrite").parquet(f"{path}/mh_sets")
 
-    _quality_scores(train).write.mode("overwrite").parquet(
-        f"{path}/scores"
-    )
-    base_pairs = minhash_lsh_pairs(
-        corpus,
-        "text",
-        "doc_id",
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
-        threshold=MINHASH_THRESHOLD,
-    ).select("id_a", "id_b")
-    connected_components(base_pairs).select(
-        "member_id", "cluster_id"
-    ).write.mode("overwrite").parquet(f"{path}/labels")
-    kgram_rows(train, "text", "doc_id", SPAN_K).select(
-        "doc_id", "h"
-    ).distinct().write.mode("overwrite").parquet(f"{path}/train_idx")
-    kgram_rows(bench, "text", "doc_id", SPAN_K).select(
-        "h"
-    ).distinct().write.mode("overwrite").parquet(f"{path}/bench_h")
-    spark.read.parquet(f"{path}/train_idx").join(
-        spark.read.parquet(f"{path}/bench_h"), "h"
-    ).select("doc_id").distinct().write.mode("overwrite").parquet(
-        f"{path}/contam0"
-    )
-    mh_bands, mh_sets = minhash_index_tables(
-        corpus,
-        "text",
-        "doc_id",
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
-    )
-    mh_bands.write.mode("overwrite").parquet(f"{path}/mh_bands")
-    mh_sets.write.mode("overwrite").parquet(f"{path}/mh_sets")
-    _CURATION_STATE_DIRS[key] = path
-    return path
+    return built_dir("curation_state_", sf_dir, build)
 
 
 def _incremental_dispositions(

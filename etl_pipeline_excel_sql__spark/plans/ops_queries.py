@@ -29,10 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.sources.registry import (
-    corpus_fingerprint,
-    scratch_dir,
-)
+from etl_pipeline_excel_sql__spark.sources.registry import built_dir
 from etl_pipeline_excel_sql__spark.functions.hashing import (
     H60_SQL,
     md5_hash60,
@@ -365,14 +362,6 @@ QUERIES["shard_rebalance_audit"] = q_shard_rebalance_audit
 
 # --- ring-sharded sink write-path audit (round 12) ---------------------------
 
-#: one resharded table dir per (process, corpus version) — the
-#: bm25_serve_topk index-dir convention: repeated gate/bench invocations
-#: reuse the on-disk table instead of leaking a fresh mkdtemp per call.
-#: Keyed on (sf_dir, corpus fingerprint) so in-process corpus
-#: regeneration rebuilds the table (ADVICE r12); atexit-cleaned.
-_RING_DIRS: dict[tuple, str] = {}
-
-
 def q_ring_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `shard_rebalance_audit` ring DEPLOYED as a sink, audited from
     the FILES: write the documents table parquet-partitioned by its
@@ -397,10 +386,7 @@ def q_ring_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-    ring_key = (sf_dir, corpus_fingerprint(sf_dir))
-    path = _RING_DIRS.get(ring_key)
-    if path is None:
-        path = scratch_dir("ring_shard_tbl_")
+    def build(path: str) -> None:
         docs = load_table(spark, "documents", sf_dir).select("doc_id")
         write_ring_sharded(
             docs, path, "doc_id", SHARD_N, SHARD_VNODES, RING_SPACE
@@ -408,8 +394,10 @@ def q_ring_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         reshard_add_shard(
             spark, path, "doc_id", SHARD_N, SHARD_VNODES, RING_SPACE
         )
-        _RING_DIRS[ring_key] = path
-    after = spark.read.parquet(path)
+
+    # One resharded table per (process, corpus version): repeated
+    # gate/bench invocations reuse it instead of rewriting it per call.
+    after = spark.read.parquet(built_dir("ring_shard_tbl_", sf_dir, build))
     old_pts = ring_points(SHARD_N, SHARD_VNODES, RING_SPACE)
     with_old = ring_assign(
         after, "doc_id", old_pts, RING_SPACE, out_col="__old_shard"

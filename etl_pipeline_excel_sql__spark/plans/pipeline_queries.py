@@ -26,7 +26,6 @@ from etl_pipeline_excel_sql__spark.functions.text import (
 )
 from etl_pipeline_excel_sql__spark.operators.dedup import (
     MINHASH_PRIME,
-    SignatureCache,
     affine_consts,
     exact_dedup,
     jaccard_prefix_pairs,
@@ -35,6 +34,11 @@ from etl_pipeline_excel_sql__spark.operators.dedup import (
     ngram_jaccard_pairs,
     shingle_rows,
     simhash_signatures,
+)
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    LineageTruncator,
+    SignatureCache,
+    shared_slot,
 )
 from etl_pipeline_excel_sql__spark.operators.multimodal import (
     documents_as_media,
@@ -47,9 +51,8 @@ from etl_pipeline_excel_sql__spark.operators.similarity import (
     ivf_topk_trained,
 )
 from etl_pipeline_excel_sql__spark.sources.registry import (
-    corpus_fingerprint,
+    built_dir,
     load_table,
-    scratch_dir,
 )
 
 # --- Spark queries ----------------------------------------------------------
@@ -1302,15 +1305,6 @@ QUERIES["dedup_incremental"] = q_dedup_incremental
 
 # --- incremental cluster-state maintenance (round 12) ------------------------
 
-#: persisted corpus-only cluster labels per (process, corpus version) —
-#: the bm25_serve/jaccard-truth build-once/load-many seam: the base
-#: state a production ingest loads, never recomputes. Keyed on
-#: (sf_dir, corpus fingerprint), not sf_dir alone, so an in-process
-#: corpus regeneration invalidates the artifact instead of silently
-#: desyncing from the oracle (ADVICE r12); dirs are atexit-cleaned.
-_CLUSTER_STATE_DIRS: dict[tuple, str] = {}
-
-
 def q_dedup_clusters_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1347,10 +1341,9 @@ def q_dedup_clusters_incremental(
     new_docs = docs.filter(is_new)
     corpus = docs.filter(~is_new)
 
-    state_key = (sf_dir, corpus_fingerprint(sf_dir))
-    path = _CLUSTER_STATE_DIRS.get(state_key)
-    if path is None:
-        path = scratch_dir("cluster_state_")
+    def build(path: str) -> None:
+        """The corpus-only state a production ingest loads, never
+        recomputes: cluster labels plus the MinHash band/set index."""
         base_pairs = minhash_lsh_pairs(
             corpus,
             "text",
@@ -1378,7 +1371,8 @@ def q_dedup_clusters_incremental(
         )
         mh_bands.write.mode("overwrite").parquet(f"{path}/mh_bands")
         mh_sets.write.mode("overwrite").parquet(f"{path}/mh_sets")
-        _CLUSTER_STATE_DIRS[state_key] = path
+
+    path = built_dir("cluster_state_", sf_dir, build)
     state = spark.read.parquet(f"{path}/labels")
 
     delta = minhash_lsh_pairs_ingest_indexed(
@@ -1463,34 +1457,18 @@ QUERIES["split_leakage_audit"] = q_split_leakage_audit
 
 # --- LSH recall audit (round 10) -------------------------------------------
 
-#: Bounded persist slot for the audit's shared shingle frame (the
-#: minhash_lsh_pairs cache doctrine: at most one lingering table).
-_AUDIT_SHINGLE_CACHE = SignatureCache()
-
-#: One persisted exact-truth parquet per (process, sf_dir) — the
-#: build-once/load-many seam (the ``bm25_serve_topk`` index-dir
-#: convention): ``lsh_recall_audit`` and ``minhash_band_tuning`` grade
-#: against the SAME prefix-join truth set over the same corpus, so
-#: rebuilding it per query paid the full prefix join twice per bench
-#: run (round-11 verdict item 2). At 100 TB the honest shape is the
-#: same artifact computed once (on a stratified sample) and loaded by
-#: every audit that needs it. Keyed on (sf_dir, corpus fingerprint) so
-#: in-process corpus regeneration invalidates the artifact (ADVICE
-#: r12); dirs are atexit-cleaned via scratch_dir.
-_TRUTH_DIRS: dict[tuple, str] = {}
-
-
 def _shared_jaccard_truth(
     spark: SparkSession, sf_dir: str, docs: DataFrame, exploded: DataFrame
 ) -> DataFrame:
     """Exact J >= 1/2 truth pairs for ``sf_dir``, built once per process
     (prefix-filter join over ``exploded``), persisted as parquet, and
     LOADED on every later call — subsequent audits pay a skinny
-    (id_a, id_b, jaccard_ppm) scan instead of the corpus prefix join."""
-    truth_key = (sf_dir, corpus_fingerprint(sf_dir))
-    path = _TRUTH_DIRS.get(truth_key)
-    if path is None:
-        path = scratch_dir("jaccard_truth_")
+    (id_a, id_b, jaccard_ppm) scan instead of the corpus prefix join.
+    ``lsh_recall_audit`` and ``minhash_band_tuning`` grade against this
+    SAME truth set, so neither pays the prefix join per query (round-11
+    verdict item 2)."""
+
+    def build(path: str) -> None:
         jaccard_prefix_pairs(
             docs,
             "text",
@@ -1502,8 +1480,8 @@ def _shared_jaccard_truth(
         ).select("id_a", "id_b", "jaccard_ppm").write.mode(
             "overwrite"
         ).parquet(path)
-        _TRUTH_DIRS[truth_key] = path
-    return spark.read.parquet(path)
+
+    return spark.read.parquet(built_dir("jaccard_truth_", sf_dir, build))
 
 
 def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1524,7 +1502,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both sides start from the same shingle-occurrence sub-DAG
     (``shingle_rows`` over the non-blank corpus), so the audit builds it
-    ONCE, persists it through a bounded :class:`SignatureCache` slot, and
+    ONCE, persists it through a default :class:`SignatureCache` slot, and
     feeds it to both operators via their ``exploded`` hook — one corpus
     scan + shingle explode instead of two (round-10 verdict item 2).
     The truth set itself is the per-(process, sf) parquet artifact
@@ -1534,9 +1512,9 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).filter(
         F.size(ws_tokens(F.col("text"))) > 0
     )
-    exploded = _AUDIT_SHINGLE_CACHE.swap(
-        shingle_rows(docs, "text", "doc_id", MINHASH_SHINGLE_N)
-    )
+    exploded = shared_slot(
+        spark, "pipeline.audit_shingles", SignatureCache
+    ).swap(shingle_rows(docs, "text", "doc_id", MINHASH_SHINGLE_N))
     truth = _shared_jaccard_truth(spark, sf_dir, docs, exploded).select(
         "id_a", "id_b", "jaccard_ppm"
     )
@@ -1601,22 +1579,6 @@ LSH_AUDIT_SAMPLE_BUDGET = 2000
 #: deterministic doc-sample salt (split_train_val hash convention)
 LSH_AUDIT_SAMPLE_SALT = "lsr:"
 
-#: bounded lineage truncator for the sampled audit's shingle frame.
-#: Round-13 optimization: the frame is SAMPLE-sized (~LSH_AUDIT_SAMPLE_
-#: BUDGET docs), but a persist slot keeps its full logical subtree, so
-#: the two pair generators' many references blew the static plan up to
-#: 1415 lines / 118 Exchange nodes and the query paid seconds of
-#: driver-side planning + AQE re-optimization (guide §3.3 "very large
-#: plans: materialise an intermediate to truncate"). An eager
-#: localCheckpoint cuts every downstream subtree to a short leaf:
-#: measured min-of-6 at sf0.1 5.72 s → 3.72 s, identical rows. The
-#: truncator retires the previous call's blocks (bounded storage, the
-#: kmeans_train_assign doctrine); cost of materializing the cut is
-#: sample-scale, NOT corpus-scale, which is why checkpoint beats
-#: persist here while the corpus-scale signature caches keep persist.
-_AUDIT_SAMPLED_TRUNC = None
-
-
 def q_lsh_recall_audit_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1644,13 +1606,9 @@ def q_lsh_recall_audit_sampled(
     shingle the survivors. Output: per J-decile band, sampled truth
     count, band-join hits, recall ppm — all-integer.
 
-    Lifetime hazard (ADVICE r13, mirrors minhash_lsh_pairs' note):
-    construction EAGERLY checkpoints the shingle frame and the next
-    call through the module truncator retires this call's blocks — a
-    DataFrame held from an earlier invocation has no lineage to
-    recompute the freed blocks and fails hard on re-read (the old
-    persist slot silently recomputed instead). Hold at most the most
-    recent invocation's result, or evaluate before re-invoking.
+    Construction EAGERLY checkpoints the shingle frame through a default
+    truncator, so the slot rule of
+    :mod:`~etl_pipeline_excel_sql__spark.operators.iterative` applies.
     """
     docs = load_table(spark, "documents", sf_dir).filter(
         F.size(ws_tokens(F.col("text"))) > 0
@@ -1674,14 +1632,20 @@ def q_lsh_recall_audit_sampled(
         )
         .drop("__n")
     )
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
+    # Round-13 optimization: the frame is SAMPLE-sized, but a persist
+    # slot keeps its full logical subtree, so the two pair generators'
+    # many references blew the static plan up to 1415 lines / 118
+    # Exchange nodes and the query paid seconds of driver-side planning
+    # + AQE re-optimization (guide §3.3 "very large plans: materialise
+    # an intermediate to truncate"). An eager localCheckpoint cuts every
+    # downstream subtree to a short leaf: measured min-of-6 at sf0.1
+    # 5.72 s → 3.72 s, identical rows. The cut is sample-scale, NOT
+    # corpus-scale, which is why checkpoint beats persist here while
+    # the corpus-scale signature caches keep persist.
+    trunc = shared_slot(
+        spark, "pipeline.audit_sample", lambda: LineageTruncator(spark)
     )
-
-    global _AUDIT_SAMPLED_TRUNC
-    if _AUDIT_SAMPLED_TRUNC is None or _AUDIT_SAMPLED_TRUNC.spark is not spark:
-        _AUDIT_SAMPLED_TRUNC = LineageTruncator(spark)
-    exploded = _AUDIT_SAMPLED_TRUNC.truncate(
+    exploded = trunc.truncate(
         shingle_rows(sampled, "text", "doc_id", MINHASH_SHINGLE_N)
     )
     truth = jaccard_prefix_pairs(
@@ -1864,13 +1828,6 @@ QUERIES["cluster_safe_splits"] = q_cluster_safe_splits
 #: candidate budget at the target recall.
 BAND_TUNING_ROWS = (1, 2, 3, 4, 6)
 
-#: bounded persist slots for the tuning table's shared frames: the
-#: shingle explode feeds the truth join AND the signature build; the
-#: 12-hash signature table is re-banded once per config.
-_TUNE_SHINGLE_CACHE = SignatureCache()
-_TUNE_SIG_CACHE = SignatureCache()
-
-
 def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LSH banding TUNING TABLE: for every (band_rows r, bands b =
     12/r) configuration of the same 12-hash MinHash signature, the
@@ -1897,10 +1854,14 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).filter(
         F.size(ws_tokens(F.col("text"))) > 0
     )
-    exploded = _TUNE_SHINGLE_CACHE.swap(
-        shingle_rows(docs, "text", "doc_id", MINHASH_SHINGLE_N)
-    )
-    sig = _TUNE_SIG_CACHE.swap(_minhash_signatures(exploded, MINHASH_K))
+    # Default persist slots: the shingle explode feeds the truth join AND
+    # the signature build; the signature table is re-banded per config.
+    exploded = shared_slot(
+        spark, "pipeline.tuning_shingles", SignatureCache
+    ).swap(shingle_rows(docs, "text", "doc_id", MINHASH_SHINGLE_N))
+    sig = shared_slot(
+        spark, "pipeline.tuning_signatures", SignatureCache
+    ).swap(_minhash_signatures(exploded, MINHASH_K))
     truth = _shared_jaccard_truth(spark, sf_dir, docs, exploded).select(
         "id_a", "id_b"
     )

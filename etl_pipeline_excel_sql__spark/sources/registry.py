@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,13 +44,12 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
     """Cheap content-identity key for the corpus at ``sf_dir`` — the
     (path, mtime_ns, size) triples of the table's parquet file(s).
 
-    Derived per-(process, sf) artifacts (the persisted Jaccard-truth
-    parquet, the incremental cluster state, the resharded ring table,
-    ADVICE r12) key their caches on this, not on ``sf_dir`` alone: if
-    the corpus at the same path is REGENERATED in-process (e.g.
-    ``gen_scaled_testdata`` then re-bench in one session), the
-    fingerprint changes and the stale artifact is rebuilt instead of
-    silently desyncing from the oracle, which reads the live files.
+    :func:`built_dir` keys every derived per-(process, sf) artifact on
+    this, not on ``sf_dir`` alone (ADVICE r12): if the corpus at the
+    same path is REGENERATED in-process (e.g. ``gen_scaled_testdata``
+    then re-bench in one session), the fingerprint changes and the stale
+    artifact is rebuilt instead of silently desyncing from the oracle,
+    which reads the live files.
     """
     import pathlib
 
@@ -65,17 +65,39 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
 
 
 def scratch_dir(prefix: str) -> str:
-    """``tempfile.mkdtemp`` with atexit removal — every per-(process, sf)
-    derived-artifact dir (truth parquet, cluster state, ring table, bm25
-    index) goes through here so nothing lingers past the process
-    (ADVICE r12: the caches previously leaked their dirs for the
-    machine's lifetime)."""
+    """``tempfile.mkdtemp`` with atexit removal — every :func:`built_dir`
+    goes through here so nothing lingers past the process (ADVICE r12:
+    the caches previously leaked their dirs for the machine's
+    lifetime)."""
     import atexit
     import shutil
     import tempfile
 
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
+#: Build-once dirs: (prefix, sf_dir, corpus fingerprint) -> path.
+_BUILT_DIRS: dict[tuple, str] = {}
+
+
+def built_dir(prefix: str, sf_dir: str, build: Callable[[str], None]) -> str:
+    """The dir of a derived artifact built once per (process, corpus
+    version) and loaded by every later call: the persisted Jaccard
+    truth, cluster and curation state, the resharded ring table and the
+    bm25 serving index.
+
+    The first call for a key makes a :func:`scratch_dir` and runs
+    ``build(path)`` into it. The path is registered only after ``build``
+    returns, so a failed build is retried on the next call instead of
+    being read half-written."""
+    key = (prefix, sf_dir, corpus_fingerprint(sf_dir))
+    path = _BUILT_DIRS.get(key)
+    if path is None:
+        path = scratch_dir(prefix)
+        build(path)
+        _BUILT_DIRS[key] = path
     return path
 
 

@@ -43,16 +43,16 @@ def test_shared_jaccard_truth_builds_once_per_sf(spark, tiny_sf):
         docs, "text", "doc_id", pq.MINHASH_SHINGLE_N
     ).withColumn("__id", bump_udf("__id"))
 
-    from etl_pipeline_excel_sql__spark.sources.registry import (
-        corpus_fingerprint,
-    )
+    from etl_pipeline_excel_sql__spark.sources import registry
 
-    truth_key = (tiny_sf, corpus_fingerprint(tiny_sf))
-    pq._TRUTH_DIRS.pop(truth_key, None)
+    truth_key = (
+        "jaccard_truth_", tiny_sf, registry.corpus_fingerprint(tiny_sf)
+    )
+    registry._BUILT_DIRS.pop(truth_key, None)
     first = pq._shared_jaccard_truth(spark, tiny_sf, docs, exploded)
     rows1 = sorted((r.id_a, r.id_b, r.jaccard_ppm) for r in first.collect())
     bumps_after_build = acc.value
-    assert truth_key in pq._TRUTH_DIRS
+    assert truth_key in registry._BUILT_DIRS
 
     second = pq._shared_jaccard_truth(spark, tiny_sf, docs, exploded)
     rows2 = sorted((r.id_a, r.id_b, r.jaccard_ppm) for r in second.collect())
@@ -63,7 +63,7 @@ def test_shared_jaccard_truth_builds_once_per_sf(spark, tiny_sf):
     )
     # docs 1 and 4 are identical -> at least that exact pair in truth
     assert (1, 4, 1000000) in rows1
-    pq._TRUTH_DIRS.pop(truth_key, None)
+    registry._BUILT_DIRS.pop(truth_key, None)
 
 
 def test_noun_block_guards_short_names(spark):

@@ -261,6 +261,9 @@ def main() -> int:
         return run_chunked(args)
 
     import __spark_entry__ as entrymod
+    from etl_pipeline_excel_sql__spark.operators.iterative import (
+        release_persisted,
+    )
     from etl_pipeline_excel_sql__spark.session import get_session
 
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
@@ -431,11 +434,7 @@ def main() -> int:
         # localCheckpoint blocks persisted — unevictable, so 206 queries
         # accumulate them in the driver JVM. The harness owns the
         # session and queries are independent: sweep them every query.
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
+        release_persisted(spark)
     print(f"\n{len(names) - len(failures)}/{len(names)} passed")
     if args.json:
         import json
