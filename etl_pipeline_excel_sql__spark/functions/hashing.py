@@ -43,53 +43,6 @@ def md5_hash60_seeded(col: Column | str, seed: int) -> Column:
     return md5_hash60(F.concat(F.lit(f"{seed}:"), c))
 
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature: array of ``num_hashes`` min-over-shingles values.
-
-    ``array_min(transform(shingles, s -> hash_i(s)))`` per hash family —
-    all vectorized array expressions, no UDF, no shuffle. Empty shingle sets
-    yield NULL entries (callers filter empty docs first).
-    """
-    # NB: the per-seed lambda must be built by a factory — a default-arg
-    # lambda (``lambda s, i=i``) would be treated by PySpark as the two-arg
-    # (element, index) form and silently rebind ``i`` to the index column.
-    def _seeded(seed: int):
-        prefix = f"{seed}:"
-        return lambda s: F.conv(
-            F.substring(F.md5(F.concat(F.lit(prefix), s)), 1, 15), 16, 10
-        ).cast("bigint")
-
-    sigs = [
-        F.array_min(F.transform(shingles, _seeded(i))) for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
-def simhash_expr(tokens_col_name: str, bits: int = 32) -> Column:
-    """SimHash over a token-array column: sign of the per-bit vote sum.
-
-    For each bit j, every token votes +1 if bit j of its 60-bit hash is set,
-    else -1; the fingerprint sets bit j when the vote sum is positive.
-
-    Built as a SQL lambda expression (``F.expr``) because the shift amount is
-    itself a lambda variable, which the Python ``shiftright`` API doesn't
-    accept. Still fully codegen'd — no UDF. Takes a column *name* (attach the
-    token array with ``withColumn`` first).
-    """
-    t = tokens_col_name
-    hs = f"transform({t}, tk -> cast(conv(substring(md5(tk), 1, 15), 16, 10) as bigint))"
-    votes = (
-        f"transform(sequence(0, {bits - 1}), j -> "
-        f"CASE WHEN aggregate({hs}, cast(0 as bigint), "
-        f"(acc, h) -> acc + (shiftright(h, j) & 1) * 2 - 1) > 0 "
-        f"THEN cast(1 as bigint) ELSE cast(0 as bigint) END)"
-    )
-    return F.expr(
-        f"aggregate(zip_with({votes}, sequence(0, {bits - 1}), "
-        f"(b, j) -> shiftleft(b, j)), cast(0 as bigint), (acc, v) -> acc + v)"
-    )
-
-
 def rolling_fingerprint(tokens: Column, modulus: int = 1 << 40) -> Column:
     """Polynomial rolling hash of a token sequence (order-sensitive).
 

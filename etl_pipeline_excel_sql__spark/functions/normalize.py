@@ -1,17 +1,12 @@
 """Name/text normalizers (SURVEY.md §2.6 T3-T5).
 
-These operate on *metadata* (column names, filenames) so they are pure Python
-driver functions — no executor involvement. ``norm_header_col`` /
-``normalize_colname_col`` expose the same semantics as Column expressions for
-use on data (text analysis, §2.9 tokenization paths).
+These operate on *metadata* (column names, filenames), so they are plain
+Python functions with no executor involvement.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def norm_header(s: str | None) -> str:
@@ -53,21 +48,3 @@ def normalize_colname(s: str | None) -> str:
 def safe_fname_token(s: str) -> str:
     """Filename sanitizer: ``\\/:*?"<>|`` → ``_`` (reference Upload.py:105-107)."""
     return re.sub(r'[\\/:*?"<>|]', "_", s)
-
-
-def norm_header_col(col: Column | str) -> Column:
-    """:func:`norm_header` as a codegen'd Column expression (for data, not names)."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.regexp_replace(c, r"[\xa0\r\n]", " ")
-    s = F.lower(F.trim(s))
-    s = F.regexp_replace(s, r"[\s_]+", " ")
-    s = F.regexp_replace(s, r"[^a-z0-9 ]+", "")
-    return F.trim(F.regexp_replace(s, r" +", " "))
-
-
-def normalize_colname_col(col: Column | str) -> Column:
-    """:func:`normalize_colname` as a Column expression."""
-    c = F.col(col) if isinstance(col, str) else col
-    s = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-    s = F.regexp_replace(s, r"[^a-z0-9]+", "_")
-    return F.regexp_replace(s, r"^_+|_+$", "")

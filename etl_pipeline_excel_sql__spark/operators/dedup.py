@@ -10,8 +10,8 @@ Five strategies, all shuffle-conscious:
   pairs collide in ≥1 band with high probability, so the O(n²) pair space
   never materializes. Banding keys are small ints+hashes — the shuffle
   carries signatures, not documents.
-* **SimHash** — per-document fingerprint; grouping by fingerprint (or by
-  fingerprint prefix + hamming verification) catches near-identical docs.
+* **SimHash** — per-document fingerprint; grouping by fingerprint catches
+  near-identical docs.
 * **n-gram Jaccard** — exact verification primitive, also usable standalone
   with a cheap blocking key.
 * **embedding cosine** — near-dup by vector similarity (see similarity.py
@@ -25,12 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.hashing import (
-    md5_hash60,
-    minhash_signature,
-    simhash_expr,
-)
-from etl_pipeline_excel_sql__spark.functions.text import shingles, ws_tokens
+from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
+from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
 from etl_pipeline_excel_sql__spark.operators.iterative import (
     SignatureCache,
     shared_slot,
@@ -115,20 +111,6 @@ def shingle_sets(
         shingle_rows(df, text_col, id_col, n)
         .groupBy("__id")
         .agg(F.collect_set("__sh").alias("__sh"))
-    )
-
-
-def with_minhash(
-    df: DataFrame,
-    text_col: str,
-    num_hashes: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Attach ``__shingles`` and ``__minhash`` (array<bigint>) columns."""
-    toks = ws_tokens(F.col(text_col))
-    sh = shingles(toks, shingle_n)
-    return df.withColumn("__shingles", sh).withColumn(
-        "__minhash", minhash_signature(F.col("__shingles"), num_hashes)
     )
 
 
@@ -334,92 +316,6 @@ def minhash_lsh_pairs_cross(
     )
 
 
-def minhash_lsh_pairs_ingest(
-    new_df: DataFrame,
-    corpus_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 12,
-    band_rows: int = 2,
-    shingle_n: int = 3,
-    threshold: float = 0.2,
-    cache: SignatureCache | None = None,
-) -> DataFrame:
-    """ALL delta edges of an ingest in one pass: cross (new × corpus)
-    AND within-batch (new × new, ``id_a < id_b``) near-dup pairs from
-    ONE tagged signature build — ``(id_a, id_b, jaccard_sim)``.
-
-    Round-13 optimization (guide §1.2 "don't compute things twice"):
-    the ingest callers (``dedup_clusters_incremental``, the incremental
-    curation manifest) previously called :func:`minhash_lsh_pairs_cross`
-    and then :func:`minhash_lsh_pairs` over the batch — re-shingling and
-    re-signaturing the batch a second time and re-aggregating its
-    shingle sets for a second verification join. Both band joins are
-    derivable from the cross function's tagged signature table, and one
-    union'd candidate list verifies against ONE shingle-set aggregate.
-    Pair-for-pair identical to the old union: the side-restricted band
-    joins partition the tagged self-join's pair space (cross edges have
-    one id per side, within edges two new ids — disjoint classes), and
-    verification arithmetic is unchanged.
-
-    Output columns are the COMPONENT-EDGE shape (``id_a``/``id_b``;
-    cross rows carry (new, corpus), within rows (min, max) of the batch
-    pair) — callers that need the cross rows' side semantics keep using
-    :func:`minhash_lsh_pairs_cross`.
-
-    Precondition (inherited from :func:`minhash_lsh_pairs_cross`, ADVICE
-    r13): the two sides' id spaces must be DISJOINT — callers split one
-    table by a partition predicate. An id on both sides would merge the
-    two documents' shingle rows into one signature/set and emit wrong
-    pairs. Its default signature slot is the cross function's.
-    """
-    assert num_hashes % band_rows == 0
-
-    tagged = new_df.select(
-        F.col(id_col), F.col(text_col), F.lit("new").alias("__side")
-    ).unionByName(
-        corpus_df.select(
-            F.col(id_col), F.col(text_col), F.lit("corpus").alias("__side")
-        )
-    )
-    tagged = tagged.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    exploded = shingle_rows(tagged, text_col, id_col, shingle_n)
-    sides = tagged.select(F.col(id_col).alias("__id"), "__side")
-    slot = cache or shared_slot(
-        tagged.sparkSession, "dedup.cross_signatures", SignatureCache
-    )
-    sig = slot.swap(
-        _minhash_signatures(exploded, num_hashes).join(sides, "__id")
-    )
-    bands = sig.select(
-        "__id", "__side", _minhash_band_expr(num_hashes, band_rows)
-    )
-    new_b = bands.filter(F.col("__side") == "new").drop("__side")
-    cor_b = bands.filter(F.col("__side") == "corpus").drop("__side")
-    cand_cross = (
-        new_b.alias("l")
-        .join(cor_b.alias("r"), on=["band", "bucket"])
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-    )
-    cand_within = (
-        new_b.alias("l")
-        .join(new_b.alias("r"), on=["band", "bucket"])
-        .filter(F.col("l.__id") < F.col("r.__id"))
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-    )
-    cand = cand_cross.unionByName(cand_within).distinct()
-    sets = exploded.groupBy("__id").agg(F.collect_set("__sh").alias("__sh"))
-    sh_a = sets.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
-    sh_b = sets.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
-    return (
-        cand.join(sh_a, on="id_a")
-        .join(sh_b, on="id_b")
-        .withColumn("jaccard_sim", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-    )
-
-
 def minhash_index_tables(
     corpus: DataFrame,
     text_col: str,
@@ -460,16 +356,15 @@ def minhash_lsh_pairs_ingest_indexed(
     threshold: float = 0.2,
     cache: SignatureCache | None = None,
 ) -> DataFrame:
-    """:func:`minhash_lsh_pairs_ingest` against a PERSISTED corpus index
-    (round 14): all delta edges of an ingest — cross (new × corpus) and
-    within-batch (``id_a < id_b``) — touching ONLY batch text plus the
+    """All delta edges of an ingest against a PERSISTED corpus index: cross
+    (new × corpus) and within-batch (``id_a < id_b``) near-dup pairs as
+    ``(id_a, id_b, jaccard_sim)``, touching ONLY batch text plus the
     skinny persisted ``(bands, sets)`` tables from
     :func:`minhash_index_tables`.
 
-    This removes the fused ingest's one documented non-incremental
-    cost: the corpus re-scan + signature rebuild inside every
-    evaluation. At 100 TB that scan is the difference between an ingest
-    costing O(batch + index-probe) and O(corpus). The index is
+    The corpus is never re-scanned or re-signatured per evaluation. At
+    100 TB that scan is the difference between an ingest costing
+    O(batch + index-probe) and O(corpus). The index is
     corpus-sized and is NOT hash-only: ``bands`` holds integer
     (id, band, bucket) rows, but ``sets`` holds each id's distinct
     shingle STRINGS (``collect_set`` of the shingle column). Each token
@@ -477,10 +372,14 @@ def minhash_lsh_pairs_ingest_indexed(
     several times a document's token text; an ingest probe reads it in
     place of the documents.
 
-    Pair-for-pair identical to the inline fused pass: the persisted
-    tables are built with the same expressions over the same
-    empty-filtered corpus, the side-restricted band joins partition the
-    tagged self-join's pair space exactly as before, and verification
+    Output columns are the COMPONENT-EDGE shape: cross rows carry
+    (new, corpus), within rows (min, max) of the batch pair.
+
+    Pair-for-pair identical to signaturing batch and corpus inline: the
+    persisted tables are built with the same expressions over the same
+    empty-filtered corpus, the side-restricted band joins partition a
+    tagged self-join's pair space (cross edges have one id per side,
+    within edges two new ids — disjoint classes), and verification
     reads the same distinct-shingle sets (batch side fresh, corpus side
     persisted; array element order is irrelevant to
     ``array_intersect``/``array_union`` sizes). The shared DuckDB
@@ -535,9 +434,7 @@ def simhash_signatures(
     fingerprint assembled from the vote signs. Integer sums are
     order-independent, so the result is deterministic and oracle-exact;
     everything runs in whole-stage codegen with map-side partial
-    aggregation (the single-expression fold in
-    functions/hashing.simhash_expr is the portable-but-interpreted
-    equivalent, kept for expression-only contexts).
+    aggregation.
 
     Documents with no tokens keep a fingerprint of 0 (left join back).
     """
@@ -565,42 +462,6 @@ def simhash_signatures(
     signed = votes.select("doc_id", sig.alias("simhash"))
     return ids.join(signed, on="doc_id", how="left").select(
         "doc_id", F.coalesce("simhash", F.lit(0).cast("bigint")).alias("simhash")
-    )
-
-
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    bits: int = 32,
-    max_hamming: int = 3,
-    prefix_bits: int = 16,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, blocked on a prefix.
-
-    Documents sharing the top ``prefix_bits`` of their fingerprint are
-    candidates (at most ``bits - prefix_bits`` differing low bits can pass
-    anyway when ``max_hamming`` is small relative to the prefix). Verification
-    is ``bit_count(xor) <= max_hamming``.
-    """
-    sigs = simhash_signatures(df, text_col, id_col, bits)
-    pref = F.shiftright(F.col("simhash"), bits - prefix_bits)
-    blocked = sigs.withColumn("block", pref)
-    a = blocked.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"), "block"
-    )
-    b = blocked.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"), "block"
-    )
-    return (
-        a.join(b, on="block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 

@@ -238,32 +238,6 @@ def ivf_topk(
     )
 
 
-def kmeans_assign(
-    corpus: DataFrame,
-    cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dims: int | None = 64,
-) -> DataFrame:
-    """Assign each vector to its max-cosine centroid (ties → lowest cell).
-
-    Centroids broadcast (tiny); the corpus never shuffles — assignment is a
-    map-side scan plus a per-vector top-1 window on the id (the window
-    shuffle carries ncells rows per vector, nothing else).
-    """
-    scored = corpus.select(
-        F.col(id_col), F.col(vec_col)
-    ).crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", cosine(F.col(vec_col), F.col("centroid"), dims)
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("cell").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, vec_col, "cell")
-    )
-
-
 def _assign_broadcast(
     corpus: DataFrame,
     cents: DataFrame,

@@ -580,7 +580,8 @@ def _kmeans_means_sql(src: str, dims: int) -> str:
 
 
 def _kmeans_assign_sql(cents: str, dims: int) -> str:
-    """Max-cosine assignment (ties → lowest cell), mirrors kmeans_assign."""
+    """Max-cosine assignment (ties → lowest cell), mirrors
+    ``similarity._assign_broadcast``."""
     return f"""
   SELECT vec_id, embedding, cell FROM (
     SELECT e.vec_id, e.embedding, i.cell,

@@ -6,10 +6,9 @@ ends with ``toPandas()``/``collect()`` of an already-reduced frame, then a
 local render. Everything upstream (filtering, ordering, diff classification)
 stays distributed.
 
-The render targets an abstract :class:`CellGrid`; the openpyxl adapter is
-import-gated (the library isn't in this container), so all placement logic —
-skip-columns, header matching, highlight fills — is real and unit-tested
-against the in-memory grid.
+The render targets an abstract :class:`CellGrid`, so all placement logic —
+skip-columns, header matching, highlight fills — is unit-tested against the
+in-memory grid; ``sinks/xlsx.py`` writes a grid to a real .xlsx file.
 
 Reference semantics replicated (citations for parity):
 
@@ -67,9 +66,8 @@ class CellGrid:
     rich: dict[tuple[int, int], list[tuple[str, str | None]]] = field(
         default_factory=dict
     )
-    #: VBA module name → macro source (K4). The grid carries macro TEXT the
-    #: way a real .xlsm carries its vbaProject — writing it into a live
-    #: workbook needs a COM/VBA host, which no analytics engine has.
+    #: VBA module name → macro source (K4); ``sinks/xlsx.grid_to_xlsx``
+    #: stores the modules as the workbook's ``xl/vbaProject.bin``.
     vba_modules: dict[str, str] = field(default_factory=dict)
 
     def set(self, row: int, col: int, value: Any) -> None:
@@ -266,41 +264,3 @@ def write_highlighted_diff(
         if is_new:
             grid.fill(r, 1, FILL_CHANGED)
     return len(rows)
-
-
-def grid_to_openpyxl(grid: CellGrid, path: str, sheet_name: str = "Sheet1"):
-    """Persist a CellGrid as a real .xlsx — only when openpyxl is available
-    (import-gated; not present in this container)."""
-    try:
-        from openpyxl import Workbook
-        from openpyxl.styles import PatternFill
-    except ImportError as exc:  # pragma: no cover
-        raise NotImplementedError(
-            "openpyxl is not installed; CellGrid is the supported in-memory "
-            "representation here"
-        ) from exc
-    wb = Workbook()
-    ws = wb.active
-    ws.title = sheet_name
-    for (r, c), v in grid.cells.items():
-        if (r, c) in grid.rich:
-            from openpyxl.cell.rich_text import CellRichText, TextBlock
-            from openpyxl.cell.text import InlineFont
-
-            ws.cell(row=r, column=c).value = CellRichText(
-                *[
-                    TextBlock(
-                        font=InlineFont(color=argb) if argb else InlineFont(),
-                        text=text,
-                    )
-                    for text, argb in grid.rich[(r, c)]
-                ]
-            )
-            continue
-        ws.cell(row=r, column=c, value=v)
-    for (r, c), argb in grid.fills.items():
-        ws.cell(row=r, column=c).fill = PatternFill(
-            start_color=argb, end_color=argb, fill_type="solid"
-        )
-    wb.save(path)
-    return path

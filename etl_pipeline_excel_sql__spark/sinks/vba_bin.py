@@ -23,8 +23,11 @@ HONESTY NOTE: this container has no Excel and no independent OLE/VBA
 tooling, so conformance is demonstrated by (a) structure-by-citation
 against the public spec and (b) round-trip through the spec-driven
 readers in this module and :func:`cfb.read_cfb` — NOT by opening in
-Excel. The macro source text part (``xl/vbaSource/``) remains the
-lossless source of truth alongside the binary part.
+Excel. This part is the workbook's only copy of the macros:
+:func:`sinks.xlsx.xlsx_to_grid` reads modules back with
+:func:`read_vba_project_bin`. Names and sources are encoded as strict
+cp1252 (``CODEPAGE``), so a module the reader could not return exactly
+fails at write time with ``UnicodeEncodeError``.
 """
 
 from __future__ import annotations

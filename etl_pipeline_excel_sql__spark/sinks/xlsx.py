@@ -11,12 +11,13 @@ engine's needs, not a general library:
   ints, floats, and ISO-formatted dates);
 * per-cell PatternFill solid colors (K5 diff highlighting);
 * rich-text runs with per-run font colors (D3 word-level diffs);
-* the K4 macro persisted BOTH ways: a real ``xl/vbaProject.bin`` built to
+* the K4 macro stored once, as a real ``xl/vbaProject.bin`` built to
   the public [MS-CFB]/[MS-OVBA] specs (``sinks/vba_bin.py``; workbook
-  switches to the macroEnabled content type + vbaProject relationship),
-  and the ``xl/vbaSource/*.vba`` text parts as the lossless read-back
-  path. In-container validation is spec-citation + round-trip through
-  independent spec-driven readers — no Excel exists here to open it.
+  switches to the macroEnabled content type + vbaProject relationship)
+  and read back through the same module's spec-driven reader. Module
+  names and sources are strict cp1252, so the writer rejects anything
+  the reader could not return. Validation is spec-citation + round-trip
+  through independent spec-driven readers, not Excel.
 
 Reference behaviors replicated: fill colors ``FF94DCF8``/``FFED8EDA``
 (Compare.py:14-15), red rich-text words (Compare.py:87-110).
@@ -30,6 +31,10 @@ from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import CellGrid
+from etl_pipeline_excel_sql__spark.sinks.vba_bin import (
+    build_vba_project_bin,
+    read_vba_project_bin,
+)
 
 _NS = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 
@@ -37,7 +42,6 @@ _CONTENT_TYPES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">
 <Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>
 <Default Extension="xml" ContentType="application/xml"/>
-<Default Extension="vba" ContentType="text/plain"/>
 <Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>
 <Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>
 <Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>
@@ -156,8 +160,8 @@ def _cell_xml(ref: str, value, style_idx: int, runs) -> str:
 
 
 def grid_to_xlsx(grid: CellGrid, path: str, sheet_name: str = "Sheet1") -> None:
-    """Write the grid as a real .xlsx (values, fills, rich text, stored
-    VBA source parts)."""
+    """Write the grid as a real .xlsx (values, fills, rich text, and the
+    VBA modules as ``xl/vbaProject.bin``)."""
     fill_colors = sorted({c for c in grid.fills.values()})
     fill_idx = {c: i + 1 for i, c in enumerate(fill_colors)}  # cell-xf index
 
@@ -199,18 +203,11 @@ def grid_to_xlsx(grid: CellGrid, path: str, sheet_name: str = "Sheet1") -> None:
             # Real [MS-OVBA] binary project (see sinks/vba_bin.py for the
             # conformance story) — the macro-enabled OPC layout Excel
             # expects: bin part + vbaProject relationship + macroEnabled
-            # main content type. The plain-text source parts below stay
-            # as the lossless read-back path.
-            from etl_pipeline_excel_sql__spark.sinks.vba_bin import (
-                build_vba_project_bin,
-            )
-
+            # main content type.
             z.writestr(
                 "xl/vbaProject.bin",
                 build_vba_project_bin(dict(grid.vba_modules)),
             )
-        for module, code in sorted(grid.vba_modules.items()):
-            z.writestr(f"xl/vbaSource/{module}.vba", code)
 
 
 _CELL_REF_RE = re.compile(r"^([A-Z]+)([0-9]+)$")
@@ -218,7 +215,8 @@ _CELL_REF_RE = re.compile(r"^([A-Z]+)([0-9]+)$")
 
 def xlsx_to_grid(path: str) -> CellGrid:
     """Read a grid back from an .xlsx written by :func:`grid_to_xlsx`
-    (inline strings/numbers, solid fills, rich runs, stored VBA parts)."""
+    (inline strings/numbers, solid fills, rich runs, VBA modules from
+    ``xl/vbaProject.bin``)."""
     ns = {"m": _NS}
     grid = CellGrid()
     with zipfile.ZipFile(path) as z:
@@ -266,8 +264,8 @@ def xlsx_to_grid(path: str) -> CellGrid:
                 if v is not None:
                     f = float(v)
                     grid.set(r, c, int(f) if f.is_integer() and "." not in v and "e" not in v.lower() else f)
-        for name in z.namelist():
-            if name.startswith("xl/vbaSource/") and name.endswith(".vba"):
-                module = name[len("xl/vbaSource/") : -len(".vba")]
-                grid.vba_modules[module] = z.read(name).decode("utf-8")
+        if "xl/vbaProject.bin" in z.namelist():
+            grid.vba_modules.update(
+                read_vba_project_bin(z.read("xl/vbaProject.bin"))
+            )
     return grid

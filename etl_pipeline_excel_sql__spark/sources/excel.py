@@ -6,9 +6,9 @@ is defined over that canonical form. Template workbooks are small, so the
 read happens on the driver and is parallelized afterwards via
 ``spark.createDataFrame`` (same boundary the JDBC driver uses for metadata).
 
-openpyxl/xlrd are not installed in this container, so the xlsx path is
-import-gated; :func:`grid_to_dataframe` provides the same semantics from an
-in-memory :class:`~...sinks.excel_writer.CellGrid`, and
+:func:`read_xlsx_all_string` reads a workbook through the native stdlib
+reader (``sinks/xlsx.py``) into a :class:`~...sinks.excel_writer.CellGrid`;
+:func:`grid_to_dataframe` turns any grid into the all-string frame, and
 :func:`read_csv_all_string` is the distributed all-string scan for
 file-backed snapshots of any size.
 """
@@ -19,31 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import CellGrid
-
-
-def read_excel_all_string(
-    spark: SparkSession, path: str, sheet_name: str | int | None = None
-) -> DataFrame:
-    """Read a workbook sheet with every column as StringType.
-
-    ``sheet_name=None`` selects the active (first) sheet, mirroring the
-    reference's default-to-active behavior (Compare.py:125-126).
-    """
-    try:
-        import pandas as pd
-
-        pdf = pd.read_excel(
-            path,
-            sheet_name=sheet_name if sheet_name is not None else 0,
-            dtype=str,
-            engine="openpyxl",
-        )
-    except ImportError:
-        # No pandas excel engine in this environment — fall back to the
-        # native stdlib reader (sinks/xlsx.py), which covers workbooks
-        # this engine writes plus any inline-string/number sheet1.
-        return read_xlsx_all_string(spark, path)
-    return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None))
 
 
 def read_xlsx_all_string(

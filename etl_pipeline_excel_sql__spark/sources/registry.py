@@ -156,12 +156,6 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
     return {t: load_table(spark, t, sf_dir) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every corpus table as a temp view for ``spark.sql`` use."""
-    for t, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(t)
-
-
 @dataclass(frozen=True)
 class JdbcSource:
     """Declarative JDBC source (reference Download.py:78-86 semantics).

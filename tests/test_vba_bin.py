@@ -123,7 +123,29 @@ def test_xlsm_opc_layout(tmp_path):
         assert "vbaProject.bin" in rels and "relationships/vbaProject" in rels
         bin_modules = read_vba_project_bin(z.read("xl/vbaProject.bin"))
     assert bin_modules == dict(g.vba_modules)
-    # text parts still round-trip through the normal reader
+    # the normal reader returns the same modules from the .bin part
+    assert xlsx_to_grid(path).vba_modules == g.vba_modules
+
+
+def test_macros_stored_once_in_vba_project_bin(tmp_path):
+    """The .bin part is the only copy of the macros: a cp1252 non-ASCII
+    module name and a source with mixed newlines read back exactly, and
+    no plain-text source part is written beside it."""
+    g = CellGrid()
+    g.cells[(1, 1)] = "hola"
+    inject_vba_guard(g)
+    g.vba_modules["Módulo2"] = (
+        "Attribute VB_Name = \"Módulo2\"\r\n"
+        "Sub Año()\n  MsgBox \"€ señal\"\r\nEnd Sub\n"
+    )
+    path = str(tmp_path / "out.xlsm")
+    grid_to_xlsx(g, path)
+    with zipfile.ZipFile(path) as z:
+        names = z.namelist()
+        ct = z.read("[Content_Types].xml").decode()
+    assert "xl/vbaProject.bin" in names
+    assert not [n for n in names if n.startswith("xl/vbaSource/")]
+    assert 'Extension="vba"' not in ct
     assert xlsx_to_grid(path).vba_modules == g.vba_modules
 
 

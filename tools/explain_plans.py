@@ -1,12 +1,23 @@
-"""Regenerate PLANS.md: formatted physical plans for headline queries with
-scale commentary. Run: python tools/explain_plans.py"""
+"""Dump formatted physical plans.
+
+    python tools/explain_plans.py [--sf DIR]
+        regenerate PLANS.md: headline queries with scale commentary
+        (default sf0.01).
+    python tools/explain_plans.py --tag TAG [--round RDIR] [--sf DIR] name ...
+        write each named query's plan to plans/<RDIR>/<name>_<TAG>.txt
+        (``TAG`` is e.g. "before" or "after"; ``--round`` defaults to r14,
+        ``--sf`` to $SPARK_GRAFT_SF_DIR or sf0.1) and print its Exchange
+        count.
+"""
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 COMMENTARY = {
     "download_pipeline": (
@@ -642,32 +653,60 @@ COMMENTARY = {
 }
 
 
+def formatted_plan(df) -> str:
+    """``df``'s formatted physical plan as text.
+
+    ``df._jdf.queryExecution()`` is the JVM bridge (classic sessions only;
+    a Connect session has no ``_jdf``): ``explain(mode=...)`` prints to
+    stdout, and the bridge returns the same text as a string.
+    """
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf")
+    ap.add_argument("--round", default="r14")
+    ap.add_argument("--tag")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    if bool(args.tag) != bool(args.names):
+        ap.error("--tag and query names go together")
+
     from etl_pipeline_excel_sql__spark.plans import QUERIES
     from etl_pipeline_excel_sql__spark.session import get_session
+    from etl_pipeline_excel_sql__spark.sources.registry import DEFAULT_SF_DIR
 
     spark = get_session()
     spark.sparkContext.setLogLevel("ERROR")
+    if args.names:
+        out_dir = ROOT / "plans" / args.round
+        out_dir.mkdir(parents=True, exist_ok=True)
+        for name in args.names:
+            plan = formatted_plan(QUERIES[name](spark, args.sf or DEFAULT_SF_DIR))
+            p = out_dir / f"{name}_{args.tag}.txt"
+            p.write_text(plan)
+            n_ex = plan.count("Exchange")
+            print(f"wrote {p} ({len(plan.splitlines())} lines, {n_ex} Exchange)")
+        return
+
     sf = "/root/testdata/sf0.01"
+    if args.sf:
+        sf = args.sf
 
     out = [
         "# PLANS — physical-plan evidence for headline queries",
         "",
         "Generated by `python tools/explain_plans.py` (Spark "
-        f"{spark.version}, sf0.01 statistics). Each section: why the plan "
-        "is the one we want at scale, then the formatted plan.",
+        f"{spark.version}, {Path(sf).name} statistics). Each section: why "
+        "the plan is the one we want at scale, then the formatted plan.",
         "",
     ]
     for name, note in COMMENTARY.items():
-        plan = (
-            QUERIES[name](spark, sf)
-            ._jdf.queryExecution()
-            .explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-        )
+        plan = formatted_plan(QUERIES[name](spark, sf))
         # keep the operator tree + scan details, drop codegen ids noise
         lines = [l.rstrip() for l in plan.splitlines()]
         out += [f"## {name}", "", note, "", "```"]
