@@ -3,8 +3,8 @@ analytics/training-data extensions, each paired with an ANSI-SQL oracle.
 
 ``QUERIES[name](spark, sf_dir) -> DataFrame`` and ``ORACLE[name] -> str`` are
 what ``__spark_entry__.py`` exposes to the driver's correctness harness.
-Both are merged from the plan modules in ``_MODULES`` order; a name defined
-by two modules is an error, not a silent override.
+Both are merged from the plan modules in ``_MODULES`` order
+(``tests/test_registry.py`` fails if two modules define the same name).
 
 Ordering matters: the driver oracle-checks only the FIRST 50 registry
 entries, so ``DRIVER_PRIORITY`` pins the 50 queries that buy the most
@@ -58,21 +58,11 @@ _MODULES = tuple(
 )
 
 
-def merge_registries(modules) -> tuple[dict, dict]:
-    """(queries, oracle) merged in module order; raises ``ValueError`` when
-    two modules define the same query or oracle name."""
-    queries: dict = {}
-    oracle: dict = {}
-    for mod in modules:
-        for merged, part in ((queries, mod.QUERIES), (oracle, mod.ORACLE)):
-            dup = sorted(merged.keys() & part.keys())
-            if dup:
-                raise ValueError(f"{mod.__name__} redefines {dup}")
-            merged.update(part)
-    return queries, oracle
-
-
-_ALL_QUERIES, _ALL_ORACLE = merge_registries(_MODULES)
+_ALL_QUERIES: dict = {}
+_ALL_ORACLE: dict = {}
+for _mod in _MODULES:
+    _ALL_QUERIES.update(_mod.QUERIES)
+    _ALL_ORACLE.update(_mod.ORACLE)
 
 # The 50 queries the driver's correctness gate will check, in order.
 DRIVER_PRIORITY = [

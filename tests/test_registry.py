@@ -71,33 +71,12 @@ def test_no_cross_module_name_collisions():
         for m in dir(plans)
         if m.endswith("_queries") and hasattr(getattr(plans, m), "QUERIES")
     ]
-    seen: dict[str, str] = {}
-    for mod in modules:
-        for name in mod.QUERIES:
-            assert name not in seen, (
-                f"{name} defined in both {seen[name]} and {mod.__name__}"
-            )
-            seen[name] = mod.__name__
-    assert len(seen) == len(plans.QUERIES)
-
-
-def test_merge_registries_rejects_a_name_two_modules_define():
-    from types import SimpleNamespace
-
-    a = SimpleNamespace(
-        __name__="fake_a", QUERIES={"q": 1, "a": 2}, ORACLE={"q": "SELECT 1"}
-    )
-    b = SimpleNamespace(__name__="fake_b", QUERIES={"q": 3}, ORACLE={})
-    with pytest.raises(ValueError, match=r"fake_b redefines \['q'\]"):
-        plans.merge_registries([a, b])
-    oracle_only = SimpleNamespace(
-        __name__="fake_c", QUERIES={"c": 4}, ORACLE={"q": "SELECT 2"}
-    )
-    with pytest.raises(ValueError, match=r"fake_c redefines \['q'\]"):
-        plans.merge_registries([a, oracle_only])
-    d = SimpleNamespace(
-        __name__="fake_d", QUERIES={"z": 5, "b": 6}, ORACLE={"z": "SELECT 3"}
-    )
-    queries, oracle = plans.merge_registries([a, d])
-    assert list(queries) == ["q", "a", "z", "b"]
-    assert oracle == {"q": "SELECT 1", "z": "SELECT 3"}
+    for attr in ("QUERIES", "ORACLE"):
+        seen: dict[str, str] = {}
+        for mod in modules:
+            for name in getattr(mod, attr):
+                assert name not in seen, (
+                    f"{name} defined in both {seen[name]} and {mod.__name__}"
+                )
+                seen[name] = mod.__name__
+        assert len(seen) == len(getattr(plans, attr))

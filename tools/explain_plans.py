@@ -1,8 +1,8 @@
 """Dump formatted physical plans.
 
-    python tools/explain_plans.py [--sf DIR]
+    python tools/explain_plans.py
         regenerate PLANS.md: headline queries with scale commentary
-        (default sf0.01).
+        (sf0.01 statistics).
     python tools/explain_plans.py --tag TAG [--round RDIR] [--sf DIR] name ...
         write each named query's plan to plans/<RDIR>/<name>_<TAG>.txt
         (``TAG`` is e.g. "before" or "after"; ``--round`` defaults to r14,
@@ -669,12 +669,14 @@ def formatted_plan(df) -> str:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf")
-    ap.add_argument("--round", default="r14")
+    ap.add_argument("--round")
     ap.add_argument("--tag")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
-    if bool(args.tag) != bool(args.names):
-        ap.error("--tag and query names go together")
+    if bool(args.tag) != bool(args.names) or (
+        not args.names and (args.sf or args.round)
+    ):
+        ap.error("--tag, --sf and --round go with query names")
 
     from etl_pipeline_excel_sql__spark.plans import QUERIES
     from etl_pipeline_excel_sql__spark.session import get_session
@@ -683,7 +685,7 @@ def main() -> None:
     spark = get_session()
     spark.sparkContext.setLogLevel("ERROR")
     if args.names:
-        out_dir = ROOT / "plans" / args.round
+        out_dir = ROOT / "plans" / (args.round or "r14")
         out_dir.mkdir(parents=True, exist_ok=True)
         for name in args.names:
             plan = formatted_plan(QUERIES[name](spark, args.sf or DEFAULT_SF_DIR))
@@ -694,15 +696,13 @@ def main() -> None:
         return
 
     sf = "/root/testdata/sf0.01"
-    if args.sf:
-        sf = args.sf
 
     out = [
         "# PLANS — physical-plan evidence for headline queries",
         "",
         "Generated by `python tools/explain_plans.py` (Spark "
-        f"{spark.version}, {Path(sf).name} statistics). Each section: why "
-        "the plan is the one we want at scale, then the formatted plan.",
+        f"{spark.version}, sf0.01 statistics). Each section: why the plan "
+        "is the one we want at scale, then the formatted plan.",
         "",
     ]
     for name, note in COMMENTARY.items():
