@@ -44,7 +44,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
 #: Headline set: the flagship pipeline, the scale-critical shuffles/joins,
-#: and one representative per operator family.
+#: and one representative per operator family. Append-only: new queries go
+#: at the end and existing ones never move, so per-query timings stay
+#: aligned with earlier BENCH_*.json reports.
 BENCH_QUERIES = [
     "download_pipeline",
     "diff_cells",
@@ -66,29 +68,21 @@ BENCH_QUERIES = [
     "text_quality",
     "text_fingerprint",
     "multimodal_extract",
-    # round-2 additions (kept after the round-1 set so per-query
-    # round-over-round comparison stays aligned)
     "dedup_clusters",
     "text_tfidf_topk",
     "tpch_q21_sole_late_supplier",
     "tpch_q8_market_share",
     "decontam_overlap",
     "text_repetition",
-    # round-3 additions (appended; earlier ordering preserved for
-    # round-over-round comparison)
     "corpus_curate_pipeline",
     "pagerank_nations",
     "asof_join_nearest",
-    # round-4 additions (appended; earlier ordering preserved for
-    # round-over-round comparison)
     "window_range_frame",
     "band_join_recent_errors",
     "text_passage_dedup",
-    # round-4c/4d additions (appended; earlier ordering preserved)
     "basket_lift",
     "events_twap",
     "global_row_number",
-    # round-6 additions (appended; earlier ordering preserved)
     "mix_domains",
     "dedup_kcore",
     "bpe_vocab",
@@ -96,18 +90,15 @@ BENCH_QUERIES = [
     "ivfpq_adc",
     "ivfpq_residual_adc",
     "semantic_dedup_keep",
-    # round-7 additions (appended; earlier ordering preserved)
     "dedup_spans",
     "dedup_span_trim",
     "decontam_spans",
     "bpe_token_ids",
     "pack_token_ids",
     "curate_pack_pipeline",
-    # round-8 additions (appended; earlier ordering preserved)
     "bm25_topk",
     "hybrid_rrf_topk",
     "perceptron_quality",
-    # round-8b additions (appended; earlier ordering preserved)
     "cdc_chunk_stats",
     "hll_distinct_shingles",
     "cms_heavy_hitters",
@@ -115,20 +106,13 @@ BENCH_QUERIES = [
     "cluster_balanced_sample",
     "exact_price_quantiles",
     "ccnet_ppl_buckets",
-    # round-9 additions (appended; earlier ordering preserved)
     "bm25_serve_topk",
     "bm25_incremental_topk",
     "phrase_search_topk",
     "skipgram_top_pairs",
     "hard_negatives_topk",
     "rag_context_pipeline",
-    # round-10 additions (appended; earlier ordering preserved):
-    # the serving hot path in isolation — build+save happen once in the
-    # untimed warmup, timed samples are load+score only (verdict #4)
     "bm25_serve_score_topk",
-    # round-10 new families (record linkage + join-view IVM + classifier
-    # calibration + PRF second-stage retrieval), plus first bench rows
-    # for the existing behavior-analytics pair
     "funnel_conversion",
     "cohort_retention",
     "linkage_best_match",
@@ -136,9 +120,6 @@ BENCH_QUERIES = [
     "perceptron_calibration",
     "bm25_prf_topk",
     "dedup_jaccard_prefix",
-    # round-10 second batch (appended; earlier ordering preserved):
-    # quantized-serving ANN, margin mining, LPA communities, DSIR
-    # selection, and the LSH recall audit
     "ann_sq8_rerank",
     "margin_mining_topk",
     "label_propagation",
@@ -147,34 +128,18 @@ BENCH_QUERIES = [
     "winnow_fingerprint",
     "quality_domain_rank",
     "postings_compression",
-    # round-11 additions (appended; earlier ordering preserved): the
-    # composed entity-resolution capstone (exact collapse -> blocked
-    # fuzzy pairs -> connected components -> entity rollup)
     "entity_resolution_pipeline",
-    # round-11 second batch: session-view IVM with boundary stitching,
-    # token-budget curation selection (two-phase prefix sum in quality
-    # order), cluster-keyed leakage-free split assignment
     "incremental_session_merge",
     "curation_budget_select",
     "cluster_safe_splits",
-    # the left-outer stream-stream interval join (state-timeout path)
     "stream_join_left",
-    # round-11 third batch: per-language quality/length skyline,
-    # consistent-hashing rebalance audit, LSH banding tuning table
     "pareto_quality_length",
     "shard_rebalance_audit",
     "minhash_band_tuning",
-    # corpus-health composition rows + tokenizer fertility audit
     "dup_size_spectrum",
     "effective_corpus_size",
     "bpe_fertility_by_lang",
-    # round-12 full pretraining-curation capstone (quality gate ->
-    # keeper collapse -> decontam -> budget selection, attributed)
     "pretrain_curation_pipeline",
-    # round-13 additions (appended; earlier ordering preserved): the
-    # incremental-ingest capstone (persisted state + batch delta), the
-    # release diff over its manifests, the O(sample) sampled-truth LSH
-    # audit, and the kept-set manifest deliverable
     "pretrain_kept_manifest",
     "pretrain_manifest_incremental",
     "manifest_release_diff",

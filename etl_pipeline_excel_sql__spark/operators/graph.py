@@ -42,7 +42,6 @@ def pagerank_integer(
     iters: int = 8,
     scale: int = PAGERANK_SCALE,
     damping_pct: int = PAGERANK_DAMPING_PCT,
-    broadcast_ranks: bool = True,
     truncate_lineage: bool = True,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -59,15 +58,10 @@ def pagerank_integer(
     (100*n_nodes)``. All floor divisions; rank mass shrinks by at most a
     few ulps of the scale per iteration, identically in every engine.
 
-    ``broadcast_ranks`` picks the join strategy for the per-iteration
-    rank×edge join. True (default) broadcasts the |V|-row rank vector to
-    the edge side — right whenever |V| fits in the broadcast budget (one
-    shuffle per iteration: the ``groupBy(dst)`` contribution sum). For
-    web-scale |V| that broadcast is the scale killer, so False switches to
-    a plain keyed shuffle join on ``src`` — ranks and edges co-partition
-    by src (two shuffles per iteration, both key-only rows), and no single
-    executor ever materializes the full rank vector. Results are
-    bit-identical either way (integer arithmetic is order-free).
+    The per-iteration rank×edge join always broadcasts the |V|-row rank
+    vector to the edge side, so the only shuffle per iteration is the
+    ``groupBy(dst)`` contribution sum. |V| must therefore fit in the
+    broadcast budget.
 
     ``checkpoint_dir`` switches per-iteration lineage truncation from
     ``localCheckpoint`` to a reliable ``checkpoint`` under the given
@@ -111,9 +105,7 @@ def pagerank_integer(
         "node", F.lit(scale // n_nodes).cast("bigint").alias("r")
     )
     for _ in range(iters):
-        rank_side = r.withColumnRenamed("node", "src")
-        if broadcast_ranks:
-            rank_side = F.broadcast(rank_side)
+        rank_side = F.broadcast(r.withColumnRenamed("node", "src"))
         contrib = (
             ew.join(rank_side, "src")
             .select(

@@ -4,9 +4,9 @@ Image/audio/video payloads are ``binary`` columns with a metadata struct
 (modality, mime, width/height/duration, ...). The Spark-side machinery —
 schemas, batch iteration via ``mapInPandas``, partition sizing — is real and
 tested; the actual codec work is stubbed behind ``_decode_*`` functions
-because media libraries are not available in this environment (each raises
-``NotImplementedError`` unless ``fake=True``, which produces deterministic
-pseudo-features so the distributed plumbing is testable end-to-end).
+because media libraries are not available in this environment (each
+produces deterministic pseudo-features so the distributed plumbing is
+testable end-to-end).
 
 Scale notes: payload columns are heavy — the iterator-of-batches shape of
 ``mapInPandas`` keeps memory bounded by the Arrow batch size, payloads never
@@ -57,19 +57,15 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _decode_image(payload: bytes, fake: bool) -> list[float]:
+def _decode_image(payload: bytes) -> list[float]:
     """STUB: real implementation would decode via PIL/libvips and return
     pixel-statistics features. Not available in this container."""
-    if not fake:
-        raise NotImplementedError("image decoding requires a codec library")
     h = hashlib.md5(payload).digest()
     return [b / 255.0 for b in h[:8]]
 
 
-def _decode_audio(payload: bytes, fake: bool) -> list[float]:
+def _decode_audio(payload: bytes) -> list[float]:
     """STUB: real implementation would use soundfile/librosa frame features."""
-    if not fake:
-        raise NotImplementedError("audio decoding requires a codec library")
     h = hashlib.md5(b"audio:" + payload).digest()
     return [b / 255.0 for b in h[:8]]
 
@@ -77,7 +73,7 @@ def _decode_audio(payload: bytes, fake: bool) -> list[float]:
 _DECODERS = {"image": _decode_image, "audio": _decode_audio}
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode payloads → feature vectors via Arrow-batched ``mapInPandas``.
 
     The UDF receives an iterator of pandas batches (bounded memory) and
@@ -93,7 +89,7 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
             for modality, payload in zip(batch["modality"], batch["payload"]):
                 data = bytes(payload) if payload is not None else b""
                 decoder = _DECODERS.get(modality)
-                feats.append(decoder(data, fake) if decoder else None)
+                feats.append(decoder(data) if decoder else None)
                 hashes.append(hashlib.md5(data).hexdigest())
                 sizes.append(len(data))
             yield pd.DataFrame(
@@ -141,9 +137,7 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _resize_image(payload: bytes, width: int, height: int, fake: bool) -> bytes:
-    if not fake:
-        raise NotImplementedError("image resizing requires a codec library")
+def _resize_image(payload: bytes, width: int, height: int) -> bytes:
     # Deterministic fake: stretch the content hash to the target pixel
     # count so output size tracks (width, height) and content.
     seed = hashlib.md5(payload).digest()
@@ -151,9 +145,7 @@ def _resize_image(payload: bytes, width: int, height: int, fake: bool) -> bytes:
     return (seed * (n // len(seed) + 1))[:n]
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, fake: bool = True
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """Resize image payloads to (width, height) via ``mapInPandas``.
 
     Same bounded-memory iterator shape as ``extract_features``; the
@@ -170,7 +162,7 @@ def resize_images(
             out = []
             for payload in batch["payload"]:
                 data = bytes(payload) if payload is not None else b""
-                out.append(_resize_image(data, width, height, fake))
+                out.append(_resize_image(data, width, height))
             yield pd.DataFrame(
                 {
                     "media_id": batch["media_id"],
@@ -185,9 +177,7 @@ def resize_images(
     return media.mapInPandas(_resize, schema=RESIZED_SCHEMA)
 
 
-def sample_frames(
-    media: DataFrame, every_ms: int = 1000, fake: bool = True
-) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Sample frames from video payloads — a 1-to-N ``mapInPandas``.
 
     Demonstrates the cardinality-changing iterator shape: each input row
@@ -200,9 +190,7 @@ def sample_frames(
     plumbing.
     """
 
-    def _frame_at(payload: bytes, ms: int, fake_: bool) -> bytes:
-        if not fake_:
-            raise NotImplementedError("frame sampling requires a codec library")
+    def _frame_at(payload: bytes, ms: int) -> bytes:
         return hashlib.md5(payload + str(ms).encode()).digest()
 
     def _sample(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -217,7 +205,7 @@ def sample_frames(
                     ids.append(media_id)
                     idxs.append(i)
                     tss.append(ms)
-                    frames.append(_frame_at(data, ms, fake))
+                    frames.append(_frame_at(data, ms))
             yield pd.DataFrame(
                 {
                     "media_id": pd.array(ids, dtype="int64"),

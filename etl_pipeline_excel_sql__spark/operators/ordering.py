@@ -18,26 +18,17 @@ def categorical_order(
     col: str,
     categories: list[str],
     tiebreak_cols: list[str] | None = None,
-    keep_unlisted: bool = False,
 ) -> DataFrame:
     """Order rows by the fixed category list, with explicit tiebreaks.
 
-    Unlisted category values sort last (``array_position`` = 0 → remapped to
-    +inf rank) and are dropped unless ``keep_unlisted`` — the reference's ALL
-    path only writes listed ministries (its IN-list filter runs first).
-    NULL categories are unlisted-by-definition: without the explicit
-    isNull branch, ``array_position(cats, NULL)`` is NULL, which would
-    bypass the filter semantics and sort FIRST (Spark's asc_nulls_first)
-    instead of in the trailing unlisted block.
+    Unlisted category values are dropped — the reference's ALL path only
+    writes listed ministries (its IN-list filter runs first). An unlisted
+    value has ``array_position`` 0 and a NULL category has a NULL
+    position, so the ``_ord > 0`` filter drops both.
     """
     cats = F.array(*[F.lit(c) for c in categories])
-    pos = F.array_position(cats, F.col(col))
-    rank = F.when(
-        F.col(col).isNull() | (pos == 0), F.lit(len(categories) + 1)
-    ).otherwise(pos)
-    out = df.withColumn("_ord", rank.cast("int"))
-    if not keep_unlisted:
-        out = out.filter(F.col("_ord") <= len(categories))
+    pos = F.array_position(cats, F.col(col)).cast("int")
+    out = df.withColumn("_ord", pos).filter(F.col("_ord") > 0)
     return out.orderBy("_ord", *(tiebreak_cols or []))
 
 

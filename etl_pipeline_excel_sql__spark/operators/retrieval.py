@@ -31,9 +31,6 @@ Cross-engine exactness doctrine (the repo's float rules):
   guard — see ``tests/test_oracle_types.py`` and ``check_oracle.py
   --pandas-canon``, which reproduced the driver's exact 49/50 verdict
   locally.)
-* ``log_idf=True`` switches production scoring to Robertson's textbook
-  ``ln`` form — libm, per-engine last-ulp behavior, same plan shape, NO
-  cross-engine hash guarantee; documented here rather than hidden.
 * Per-(query, doc) totals sum integer micro-units, so the aggregate is
   order-free and exact under any partitioning (the
   ``emb_label_centroids`` pattern).
@@ -218,37 +215,13 @@ def bm25_scores_from_index(
     query_terms: DataFrame,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    log_idf: bool = False,
 ) -> DataFrame:
     """Score a bounded query batch against a (built or loaded) index —
     identical arithmetic to ``bm25_scores``, which is this function over
     a freshly-built index."""
-    n_docs, total_toks = idx.n_docs, idx.total_toks
-    if log_idf:
-        matched = bm25_matched_terms(idx, query_terms)
-        # production ``ln`` idf: libm, no cross-engine hash guarantee
-        # (module doctrine) — the plan shape is identical to the exact
-        # path, only the per-term expression differs.
-        idf = F.log(
-            ((F.lit(n_docs) - F.col("df")).cast("double") + F.lit(0.5))
-            / (F.col("df").cast("double") + F.lit(0.5))
-        )
-        avgdl = float(total_toks) / float(n_docs)
-        dnorm = F.lit(1.0 - b) + F.lit(b) * (
-            F.col("dl").cast("double") / F.lit(avgdl)
-        )
-        contrib = idf * (
-            (F.col("tf").cast("double") * F.lit(k1 + 1.0))
-            / (F.col("tf").cast("double") + F.lit(k1) * dnorm)
-        )
-        contrib_u = F.floor(contrib * F.lit(BM25_SCALE)).cast("bigint")
-        return matched.groupBy("query_id", "doc_id").agg(
-            F.count(F.lit(1)).cast("int").alias("n_hit"),
-            F.sum(contrib_u).alias("score_u"),
-        )
-    # float-free registered path: one decimal(38,0) integer division per
-    # term (module doctrine; constants from _rational_coeffs), factored
-    # through bm25_term_contribs so the gate can check it pre-aggregation.
+    # float-free: one decimal(38,0) integer division per term (module
+    # doctrine; constants from _rational_coeffs), factored through
+    # bm25_term_contribs so the gate can check it pre-aggregation.
     per_term = bm25_term_contribs(idx, query_terms, k1=k1, b=b)
     return per_term.groupBy("query_id", "doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_hit"),
@@ -318,7 +291,6 @@ def bm25_scores(
     id_col: str = "doc_id",
     k1: float = BM25_K1,
     b: float = BM25_B,
-    log_idf: bool = False,
 ) -> DataFrame:
     """BM25 score of every (query, document) pair with ≥1 matching term.
 
@@ -333,7 +305,6 @@ def bm25_scores(
         query_terms,
         k1=k1,
         b=b,
-        log_idf=log_idf,
     )
 
 
@@ -343,14 +314,11 @@ def bm25_topk(
     k: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    log_idf: bool = False,
 ) -> DataFrame:
     """Top-``k`` documents per query by BM25, deterministic ties
     (score_u DESC, doc_id ASC) → ``(query_id, doc_id, n_hit, score_u,
     rank)``."""
-    scored = bm25_scores(
-        docs, query_terms, text_col=text_col, id_col=id_col, log_idf=log_idf
-    )
+    scored = bm25_scores(docs, query_terms, text_col=text_col, id_col=id_col)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u").desc(), F.col("doc_id").asc()
     )

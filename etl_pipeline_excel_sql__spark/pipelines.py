@@ -43,6 +43,7 @@ from etl_pipeline_excel_sql__spark.operators.reconcile import (
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import (
     DEFAULT_SKIP_COLS,
     CellGrid,
+    inject_vba_guard,
     stamp_run_date,
     write_header_matched,
     write_highlighted_diff,
@@ -111,10 +112,6 @@ def download_pipeline(
         # K4 (Download.py:203-227): the paste-guard macro source is stored
         # on the grid verbatim (a VBA host is needed to execute it; none
         # exists in an analytics engine — see sinks.excel_writer).
-        from etl_pipeline_excel_sql__spark.sinks.excel_writer import (
-            inject_vba_guard,
-        )
-
         inject_vba_guard(grid)
         notes.append("vba-injection: recorded (paste-guard module stored)")
     return PipelineResult(grid=grid, rows_written=n, notes=notes)

@@ -585,14 +585,9 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_train_merges_from_words,
         word_frequencies,
     )
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
-    )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = LineageTruncator(spark).truncate(
-        word_frequencies(docs, "text")
-    )
+    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
     # batch_pairs > 1 is the production trainer shape (provably
     # identical merges, fewer driver round-trips — see _accept_batch);
     # q_bpe_train stays at the sequential default so BOTH paths sit
@@ -639,14 +634,9 @@ def q_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_packed_for_harness,
         word_frequencies,
     )
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
-    )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = LineageTruncator(spark).truncate(
-        word_frequencies(docs, "text")
-    )
+    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(
@@ -692,14 +682,9 @@ def q_pack_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_packed_for_harness,
         word_frequencies,
     )
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
-    )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = LineageTruncator(spark).truncate(
-        word_frequencies(docs, "text")
-    )
+    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(
@@ -905,14 +890,9 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_train_merges_from_words,
         word_frequencies,
     )
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
-    )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = LineageTruncator(spark).truncate(
-        word_frequencies(docs, "text")
-    )
+    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(

@@ -56,7 +56,6 @@ from etl_pipeline_excel_sql__spark.functions.text import (
     stopword_hits,
     ws_tokens,
 )
-from etl_pipeline_excel_sql__spark.operators.iterative import LineageTruncator
 from etl_pipeline_excel_sql__spark.operators.spans import kgram_rows
 from etl_pipeline_excel_sql__spark.plans.quality_queries import (
     BUDGET_DEN,
@@ -107,7 +106,7 @@ def _quality_scores(train: DataFrame) -> DataFrame:
     )
 
 
-def _rank_permille(spark: SparkSession, scored: DataFrame) -> DataFrame:
+def _rank_permille(scored: DataFrame) -> DataFrame:
     """Per-language permille calibration over a scores frame, lineage-
     truncated: ranked feeds the keeper rule, the disposition CASE, the
     budget prefix sum, and the final aggregate — truncate the skinny
@@ -117,7 +116,7 @@ def _rank_permille(spark: SparkSession, scored: DataFrame) -> DataFrame:
         F.col("__score").desc(), F.col("doc_id").asc()
     )
     wn = Window.partitionBy("lang")
-    return LineageTruncator(spark).truncate(
+    return (
         scored.withColumn("__r", F.row_number().over(wl))
         .withColumn("__n", F.count(F.lit(1)).over(wn))
         .select(
@@ -128,6 +127,7 @@ def _rank_permille(spark: SparkSession, scored: DataFrame) -> DataFrame:
             .cast("bigint")
             .alias("permille"),
         )
+        .localCheckpoint(eager=True)
     )
 
 
@@ -148,7 +148,7 @@ def _curation_dispositions(
 
     # stage 2 scoring + per-language permille calibration (the
     # quality_domain_rank arithmetic, over trainable docs only)
-    ranked = _rank_permille(spark, _quality_scores(train))
+    ranked = _rank_permille(_quality_scores(train))
 
     # stage 3 inputs: full-corpus near-dup groups (singletons key to
     # themselves); the pair DAG feeds only connected_components, which
@@ -168,11 +168,10 @@ def _curation_dispositions(
         .distinct()
         .withColumn("__contam", F.lit(1))
     )
-    return _stage_dispositions(spark, ranked, groups, contam), bench
+    return _stage_dispositions(ranked, groups, contam), bench
 
 
 def _stage_dispositions(
-    spark: SparkSession,
     ranked: DataFrame,
     groups: DataFrame,
     contam: DataFrame,
@@ -203,7 +202,7 @@ def _stage_dispositions(
     # quality-passing member, __keeper is NULL and the != comparison is
     # NULL too, so its contaminated quality-passing members fall through
     # to dropped_contaminated — identical CASE semantics in both twins.
-    staged = LineageTruncator(spark).truncate(
+    staged = (
         flags.join(keepers, "group_id", "left").select(
             "doc_id",
             "group_id",
@@ -223,6 +222,7 @@ def _stage_dispositions(
             )
             .alias("early"),
         )
+        .localCheckpoint(eager=True)
     )
 
     # stage 5: two-phase distributed exclusive prefix sum over the
@@ -507,7 +507,7 @@ def _incremental_dispositions(
     scores = spark.read.parquet(f"{path}/scores").unionByName(
         _quality_scores(batch_train)
     )
-    ranked = _rank_permille(spark, scores)
+    ranked = _rank_permille(scores)
 
     # clusters: star edges ∪ delta (cross + within probing the
     # PERSISTED corpus band/set index — round 14; previously the cross
@@ -566,7 +566,7 @@ def _incremental_dispositions(
         .withColumn("__contam", F.lit(1))
     )
 
-    return _stage_dispositions(spark, ranked, groups, contam)
+    return _stage_dispositions(ranked, groups, contam)
 
 
 def q_pretrain_manifest_incremental(
@@ -621,9 +621,7 @@ def q_manifest_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _curation_state(spark, sf_dir)
     # previous release: manifest from the persisted corpus-only state
-    ranked_prev = _rank_permille(
-        spark, spark.read.parquet(f"{path}/scores")
-    )
+    ranked_prev = _rank_permille(spark.read.parquet(f"{path}/scores"))
     labels = spark.read.parquet(f"{path}/labels").select(
         F.col("member_id").alias("doc_id"), "cluster_id"
     )
@@ -642,12 +640,12 @@ def q_manifest_release_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__contam", F.lit(1))
     )
     prev_m = _manifest_of(
-        _stage_dispositions(spark, ranked_prev, groups_prev, contam_prev)
+        _stage_dispositions(ranked_prev, groups_prev, contam_prev)
     )
 
     # current release + its disposition frame (for removal attribution)
-    cur_disp = LineageTruncator(spark).truncate(
-        _incremental_dispositions(spark, sf_dir)
+    cur_disp = _incremental_dispositions(spark, sf_dir).localCheckpoint(
+        eager=True
     )
     cur_m = _manifest_of(cur_disp)
 

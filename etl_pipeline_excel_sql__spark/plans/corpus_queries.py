@@ -42,9 +42,7 @@ BENCH_MOD = 37
 HIST_BUCKET = 50_000.0
 
 
-def q_decontam_overlap(
-    spark: SparkSession, sf_dir: str, bench_docs: DataFrame | None = None
-) -> DataFrame:
+def q_decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training docs contaminated by benchmark n-gram overlap.
 
     Output: (doc_id, n_overlap_shingles) for every training document that
@@ -62,31 +60,16 @@ def q_decontam_overlap(
     small bench ⇒ the old zero-corpus-shuffle broadcast plan, oversize
     bench ⇒ graceful shuffle join on the shingle key
     (``tests/test_plan_census.py`` pins both behaviors).
-
-    Pass ``bench_docs`` (a bounded external eval table with a ``text``
-    column) for the production shape: every corpus document is then
-    treated as training side.
     """
     docs = load_table(spark, "documents", sf_dir)
     sh = shingles(ws_tokens(F.col("text")), DECONTAM_SHINGLE_N)
     shingled = docs.filter(F.size(ws_tokens(F.col("text"))) > 0).select(
         "doc_id", F.explode(sh).alias("sh")
     )
-    if bench_docs is None:
-        bench = (
-            shingled.filter(F.col("doc_id") % BENCH_MOD == 0)
-            .select("sh")
-            .distinct()
-        )
-        train = shingled.filter(F.col("doc_id") % BENCH_MOD != 0)
-    else:
-        bench_sh = shingles(ws_tokens(F.col("text")), DECONTAM_SHINGLE_N)
-        bench = (
-            bench_docs.filter(F.size(ws_tokens(F.col("text"))) > 0)
-            .select(F.explode(bench_sh).alias("sh"))
-            .distinct()
-        )
-        train = shingled
+    bench = (
+        shingled.filter(F.col("doc_id") % BENCH_MOD == 0).select("sh").distinct()
+    )
+    train = shingled.filter(F.col("doc_id") % BENCH_MOD != 0)
     return (
         train.join(bench, "sh")
         .groupBy("doc_id")
@@ -300,18 +283,8 @@ ORACLE: dict[str, str] = {
         GROUP BY CAST(floor(o_totalprice / 50000.0) AS BIGINT)""",
 }
 
-def _q_decontam_overlap_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-arg registry adapter for :func:`q_decontam_overlap`.
-
-    The registry contract (tests/test_registry.py) pins every QUERIES
-    entry to exactly ``(spark, sf_dir)``; the production ``bench_docs``
-    parameter stays on the underlying function for direct callers.
-    """
-    return q_decontam_overlap(spark, sf_dir)
-
-
 QUERIES = {
-    "decontam_overlap": _q_decontam_overlap_registry,
+    "decontam_overlap": q_decontam_overlap,
     "text_repetition": q_text_repetition,
     "agg_median_price": q_agg_median_price,
     "agg_price_histogram": q_agg_price_histogram,

@@ -284,7 +284,7 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = documents_as_media(load_table(spark, "documents", sf_dir))
-    return extract_features(media, fake=True).select(
+    return extract_features(media).select(
         "media_id", "n_bytes", "content_hash"
     )
 
@@ -300,7 +300,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = documents_as_media(load_table(spark, "documents", sf_dir))
-    frames = sample_frames(media, every_ms=100, fake=True)
+    frames = sample_frames(media, every_ms=100)
     return frames.select(
         "media_id",
         "frame_index",

@@ -211,9 +211,6 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_packed_for_harness,
         word_frequencies,
     )
-    from etl_pipeline_excel_sql__spark.operators.iterative import (
-        LineageTruncator,
-    )
     from etl_pipeline_excel_sql__spark.plans.analytics5_queries import (
         BPE_TRAIN_MERGES,
         PACK_IDS_RANGE,
@@ -221,18 +218,12 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    # one truncator PER persisted variable — a truncator retires its
-    # prior cut on the next truncate, so sharing one across trimmed and
-    # words would free trimmed's blocks while the encoder still reads
-    # them (checkpointRDDBlockIdNotFound at materialize time)
-    trimmed = LineageTruncator(spark).truncate(
-        trim_duplicated_spans(docs, k=SPAN_K).select(
-            "doc_id", F.col("text_clean").alias("text")
-        )
+    trimmed = (
+        trim_duplicated_spans(docs, k=SPAN_K)
+        .select("doc_id", F.col("text_clean").alias("text"))
+        .localCheckpoint(eager=True)
     )
-    words = LineageTruncator(spark).truncate(
-        word_frequencies(trimmed, "text")
-    )
+    words = word_frequencies(trimmed, "text").localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(

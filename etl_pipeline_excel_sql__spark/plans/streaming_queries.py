@@ -137,7 +137,7 @@ def q_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — the query is batch-split-agnostic instead of silently
     assuming one batch."""
     ev = read_events_stream(spark, sf_dir)
-    totals = running_user_totals_stream(ev, exact_micros=True)
+    totals = running_user_totals_stream(ev)
     drained = run_to_memory_sink(
         totals, _sink_name("stream_user_totals"), output_mode="update"
     )

@@ -26,7 +26,6 @@ def default_parallelism() -> int:
 def get_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -82,6 +81,4 @@ def get_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -37,6 +37,11 @@ FILL_CHANGED = "FF94DCF8"  # light blue (Compare.py:161)
 FILL_CLEARED = "FFED8EDA"  # pink (Compare.py:163)
 FONT_DIFF_WORD = "FFFF0000"  # red changed-word font (Compare.py:101)
 
+#: Row cap of every sink below: template workbooks are reference-scale, so
+#: a larger frame is an upstream mistake and fails instead of OOMing the
+#: driver.
+MAX_SINK_ROWS = 100_000
+
 
 def word_runs(words: list) -> list[tuple[str, str | None]]:
     """D3 render half: ``<col>__words`` structs → rich-text runs.
@@ -98,9 +103,18 @@ def convert_value(v: Any) -> Any:
         return ""
     if isinstance(v, float) and v != v:  # NaN
         return ""
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return v
     return v
+
+
+def _collect_bounded(df: DataFrame) -> list:
+    """Collect at most ``MAX_SINK_ROWS`` rows; raise if there are more."""
+    rows = df.limit(MAX_SINK_ROWS + 1).collect()
+    if len(rows) > MAX_SINK_ROWS:
+        raise ValueError(
+            f"Excel sink got >{MAX_SINK_ROWS} rows; this sink is for "
+            "template-scale output — reduce upstream"
+        )
+    return rows
 
 
 def write_positional(
@@ -109,14 +123,12 @@ def write_positional(
     row_start: int = 8,
     col_start: int = 1,
     skip_cols: frozenset[int] = DEFAULT_SKIP_COLS,
-    max_rows: int = 100_000,
 ) -> int:
     """K1: positional cell writer with skip-columns.
 
     DataFrame column *i* (0-based) lands in the *i*-th non-skipped Excel
-    column at or after ``col_start``. Bounded collect (template-scale sink;
-    the ``max_rows`` guard turns an accidental huge frame into an error
-    instead of a driver OOM). Returns rows written.
+    column at or after ``col_start``. Bounded collect (``MAX_SINK_ROWS``).
+    Returns rows written.
     """
     n_cols = len(df.columns)
     targets: list[int] = []
@@ -126,12 +138,7 @@ def write_positional(
             targets.append(c)
         c += 1
 
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError(
-            f"positional Excel sink got >{max_rows} rows; this sink is for "
-            "template-scale output — reduce upstream"
-        )
+    rows = _collect_bounded(df)
     for i, row in enumerate(rows):
         for j, value in enumerate(row):
             grid.set(row_start + i, targets[j], convert_value(value))
@@ -191,7 +198,6 @@ def write_header_matched(
     grid: CellGrid,
     mapping: dict[str, int],
     first_data_row: int = 6,
-    max_rows: int = 100_000,
 ) -> int:
     """K2: header-matched append writer.
 
@@ -200,9 +206,7 @@ def write_header_matched(
     empty row at/after ``first_data_row``. Returns total rows written (the
     reference's ``total_written`` tally, Upload.py:200-224).
     """
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError("header-matched Excel sink got too many rows")
+    rows = _collect_bounded(df)
     r = first_data_row
     while any(grid.get(r, c + 1) not in (None, "") for c in mapping.values()):
         r += 1
@@ -222,7 +226,6 @@ def write_highlighted_diff(
     key: str,
     compare_cols: list[str],
     header_row: int = 1,
-    max_rows: int = 100_000,
     word_diff_cols: list[str] | None = None,
 ) -> int:
     """K5: render a snapshot_diff result as a highlighted sheet.
@@ -241,9 +244,7 @@ def write_highlighted_diff(
     for j, c in enumerate(compare_cols, start=2):
         grid.set(header_row, j, c)
 
-    rows = diff.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
-        raise ValueError("diff Excel sink got too many rows")
+    rows = _collect_bounded(diff)
     for i, row in enumerate(rows):
         r = header_row + 1 + i
         d = row.asDict()

@@ -282,7 +282,7 @@ def run_with_state_metrics(
 
 
 def running_user_totals_stream(
-    events: DataFrame, state_timeout_ms: int = 0, exact_micros: bool = False
+    events: DataFrame, state_timeout_ms: int = 0
 ) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``:
     per-user lifetime event count and value sum, emitted on every update.
@@ -295,34 +295,24 @@ def running_user_totals_stream(
     REMOVED (bounding state by active users, not all-time users) and
     starts from zero on its next event; 0 keeps state forever.
 
-    ``exact_micros=True`` switches the sum to FLOOR-quantized integer
-    micro-units (``floor(v * 1e6 + 0.5)`` per row, int64 accumulation) and
-    renames it ``total_value_micros`` — a float sum depends on Arrow batch
-    row order and can never be value-hash-gated; integer addition is
-    associative, so the quantized total is bit-identical to any batch
-    engine applying the same per-row formula.
+    The sum ``total_value_micros`` is in FLOOR-quantized integer
+    micro-units (``floor(v * 1e6 + 0.5)`` per row, int64 accumulation) —
+    a float sum depends on Arrow batch row order and can never be
+    value-hash-gated; integer addition is associative, so the quantized
+    total is bit-identical to any batch engine applying the same per-row
+    formula.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    val_field = (
-        StructField("total_value_micros", LongType())
-        if exact_micros
-        else StructField("total_value", DoubleType())
-    )
     output_schema = StructType(
         [
             StructField("user_id", LongType()),
             StructField("n_events", LongType()),
-            val_field,
+            StructField("total_value_micros", LongType()),
         ]
     )
     state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField(
-                "s", LongType() if exact_micros else DoubleType()
-            ),
-        ]
+        [StructField("n", LongType()), StructField("s", LongType())]
     )
 
     def update(key, pdfs, state: "GroupState"):
@@ -334,16 +324,11 @@ def running_user_totals_stream(
             # totals restart from zero on its next event
             state.remove()
             return
-        n, s = state.get if state.exists else (0, 0 if exact_micros else 0.0)
+        n, s = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            if exact_micros:
-                v = pdf["value"].to_numpy(dtype="float64")
-                s += int(
-                    np.floor(v * 1e6 + 0.5).astype("int64").sum()
-                )
-            else:
-                s += float(pdf["value"].sum())
+            v = pdf["value"].to_numpy(dtype="float64")
+            s += int(np.floor(v * 1e6 + 0.5).astype("int64").sum())
         state.update((n, s))
         if state_timeout_ms > 0:
             state.setTimeoutDuration(state_timeout_ms)
@@ -351,9 +336,7 @@ def running_user_totals_stream(
             {
                 "user_id": [key[0]],
                 "n_events": [n],
-                (
-                    "total_value_micros" if exact_micros else "total_value"
-                ): [s],
+                "total_value_micros": [s],
             }
         )
 

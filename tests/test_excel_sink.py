@@ -8,6 +8,7 @@ import pytest
 
 from etl_pipeline_excel_sql__spark.operators.diff import snapshot_diff
 from etl_pipeline_excel_sql__spark.operators.reconcile import reconcile_schema
+from etl_pipeline_excel_sql__spark.sinks import excel_writer
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import (
     FILL_CHANGED,
     FILL_CLEARED,
@@ -34,10 +35,20 @@ def test_positional_writer_skips_formula_columns(spark):
     assert (8, 9) not in grid.cells
 
 
-def test_positional_writer_row_cap(spark):
+@pytest.mark.parametrize(
+    "write",
+    [
+        lambda df: write_positional(df, CellGrid()),
+        lambda df: write_header_matched(df, CellGrid(), {"v": 0}),
+        lambda df: write_highlighted_diff(df, CellGrid(), "v", []),
+    ],
+    ids=["positional", "header_matched", "highlighted_diff"],
+)
+def test_writer_row_cap(spark, monkeypatch, write):
+    monkeypatch.setattr(excel_writer, "MAX_SINK_ROWS", 5)
     df = spark.range(10).selectExpr("cast(id as string) as v")
     with pytest.raises(ValueError, match="template-scale"):
-        write_positional(df, CellGrid(), max_rows=5)
+        write(df)
 
 
 def test_stamp_run_date():

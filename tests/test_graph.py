@@ -28,10 +28,9 @@ def test_pagerank_rewards_indegree(spark, sf_dir):
     assert ranks[-1] > ranks[0]  # graph is not rank-uniform
 
 
-def test_pagerank_keyed_join_mode_matches_broadcast(spark):
-    """broadcast_ranks=False (the beyond-broadcast-scale |V| path) is
-    bit-identical to the broadcast path, and its plan carries no forced
-    broadcast of the rank side."""
+def test_pagerank_broadcasts_rank_vector(spark):
+    """One iteration's plan has exactly two forced broadcasts: the |V|-row
+    rank vector and the dangling-mass singleton."""
     from etl_pipeline_excel_sql__spark.operators.graph import pagerank_integer
 
     edges = spark.createDataFrame(
@@ -39,29 +38,11 @@ def test_pagerank_keyed_join_mode_matches_broadcast(spark):
         "src long, dst long, w long",
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "node long")
-    kwargs = dict(n_nodes=5, iters=4)
-    bcast = pagerank_integer(edges, nodes, broadcast_ranks=True, **kwargs)
-    keyed = pagerank_integer(edges, nodes, broadcast_ranks=False, **kwargs)
-    a = {r.node: r.r for r in bcast.collect()}
-    b = {r.node: r.r for r in keyed.collect()}
-    assert a == b
-    # The operator must not FORCE a broadcast of the |V|-row rank vector in
-    # keyed mode (Catalyst may still pick one at toy scale; the *hint* is
-    # what breaks at web scale). One iteration's plan has exactly two forced
-    # broadcasts in bcast mode (rank vector + dangling-mass singleton) and
-    # one in keyed mode (the singleton, legitimate at any |V|).
-    one_b = pagerank_integer(
-        edges, nodes, n_nodes=5, iters=1, broadcast_ranks=True,
-        truncate_lineage=False,
+    one = pagerank_integer(
+        edges, nodes, n_nodes=5, iters=1, truncate_lineage=False
     )
-    one_k = pagerank_integer(
-        edges, nodes, n_nodes=5, iters=1, broadcast_ranks=False,
-        truncate_lineage=False,
-    )
-    plan_b = one_b._jdf.queryExecution().analyzed().toString()
-    plan_k = one_k._jdf.queryExecution().analyzed().toString()
-    assert plan_b.count("ResolvedHint") == 2
-    assert plan_k.count("ResolvedHint") == 1
+    plan = one._jdf.queryExecution().analyzed().toString()
+    assert plan.count("ResolvedHint") == 2
 
 
 def test_pagerank_overflow_guard_raises(spark):

@@ -4,11 +4,9 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.operators.multimodal import (
-    _decode_image,
     documents_as_media,
     extract_features,
 )
@@ -22,19 +20,14 @@ def _media(spark):
 
 
 def test_extract_features_fake_decode(spark):
-    out = {r.media_id: r for r in extract_features(_media(spark), fake=True).collect()}
+    out = {r.media_id: r for r in extract_features(_media(spark)).collect()}
     assert out[1].n_bytes == len(b"hello world")
     assert out[1].content_hash == hashlib.md5(b"hello world").hexdigest()
     assert len(out[1].features) == 8
     assert all(0.0 <= f <= 1.0 for f in out[1].features)
     # deterministic fake: same payload -> same features
-    again = {r.media_id: r for r in extract_features(_media(spark), fake=True).collect()}
+    again = {r.media_id: r for r in extract_features(_media(spark)).collect()}
     assert out[1].features == again[1].features
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        _decode_image(b"xx", fake=False)
 
 
 def test_unknown_modality_yields_null_features(spark):
@@ -42,7 +35,7 @@ def test_unknown_modality_yields_null_features(spark):
         [(1, "video", "video/mp4", bytearray(b"abc"))],
         "media_id long, modality string, mime string, payload binary",
     )
-    row = extract_features(media, fake=True).collect()[0]
+    row = extract_features(media).collect()[0]
     assert row.features is None
     assert row.n_bytes == 3
 
@@ -55,20 +48,18 @@ def test_resize_images_updates_metadata_and_payload(spark):
 
     out = {
         r.media_id: r
-        for r in resize_images(_media(spark), 64, 32, fake=True).collect()
+        for r in resize_images(_media(spark), 64, 32).collect()
     }
     assert out[1].width == 64 and out[1].height == 32
-    assert bytes(out[1].payload) == _resize_image(b"hello world", 64, 32, True)
+    assert bytes(out[1].payload) == _resize_image(b"hello world", 64, 32)
     # output size tracks the requested dimensions
     assert len(out[1].payload) == 64 * 32 // 64
-    with pytest.raises(NotImplementedError):
-        _resize_image(b"xx", 4, 4, fake=False)
 
 
 def test_sample_frames_is_one_to_many(spark):
     from etl_pipeline_excel_sql__spark.operators.multimodal import sample_frames
 
-    frames = sample_frames(_media(spark), every_ms=4, fake=True).collect()
+    frames = sample_frames(_media(spark), every_ms=4).collect()
     by_id = {}
     for r in frames:
         by_id.setdefault(r.media_id, []).append(r)

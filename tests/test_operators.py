@@ -196,10 +196,6 @@ def test_categorical_order(spark):
     )
     out = categorical_order(df, "cat", ["z", "x", "y"], tiebreak_cols=["i"]).collect()
     assert [r.cat for r in out] == ["z", "x", "y"]
-    out2 = categorical_order(
-        df, "cat", ["z", "x"], tiebreak_cols=["i"], keep_unlisted=True
-    ).collect()
-    assert [r.cat for r in out2] == ["z", "x", "y", "unlisted"]
 
 
 def _embeddings(spark):

@@ -124,11 +124,7 @@ def test_rrf_fuse_integer_arithmetic_and_outer_semantics(spark):
 
 def test_bm25_plan_shape(spark, sf_dir):
     """The query side broadcasts; the corpus term table must not."""
-    from etl_pipeline_excel_sql__spark.plans.retrieval_queries import (
-        _query_terms_df,
-        q_bm25_topk,
-    )
-    from etl_pipeline_excel_sql__spark.sources.registry import load_table
+    from etl_pipeline_excel_sql__spark.plans.retrieval_queries import q_bm25_topk
 
     plan = q_bm25_topk(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # the bounded query list
@@ -142,16 +138,6 @@ def test_bm25_plan_shape(spark, sf_dir):
     for q, ranks in by_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
     assert all(r.n_hit >= 1 for r in rows)
-    # log-idf production variant runs (no oracle claim, plan identical)
-    from etl_pipeline_excel_sql__spark.operators.retrieval import bm25_topk
-
-    log_rows = bm25_topk(
-        load_table(spark, "documents", sf_dir),
-        _query_terms_df(spark),
-        k=10,
-        log_idf=True,
-    ).collect()
-    assert len(log_rows) == len(rows)
 
 
 def test_bm25_integer_scores_pin_double_form(spark, sf_dir):

@@ -215,12 +215,14 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     )
     q.awaitTermination()
     rows = spark.table("state_test").collect()
-    per_user: dict[int, list[tuple[int, float]]] = {}
+    per_user: dict[int, list[tuple[int, int]]] = {}
     for r in rows:
-        per_user.setdefault(r.user_id, []).append((r.n_events, r.total_value))
+        per_user.setdefault(r.user_id, []).append(
+            (r.n_events, r.total_value_micros)
+        )
     # user 1: batch1 emits (2, 5.0); batch2 emits the carried-forward (3, 15.0)
-    assert (2, 5.0) in per_user[1] and (3, 15.0) in per_user[1]
-    assert per_user[2] == [(1, 5.0)]
+    assert (2, 5_000_000) in per_user[1] and (3, 15_000_000) in per_user[1]
+    assert per_user[2] == [(1, 5_000_000)]
 
 
 def test_dedup_stream_drops_redelivered_ids(spark, tmp_path):
@@ -402,12 +404,10 @@ def test_user_totals_timeout_wiring(spark, sf_dir):
     )
 
     ev = read_events_stream(spark, sf_dir)
-    armed = running_user_totals_stream(
-        ev, state_timeout_ms=5000, exact_micros=True
-    )
+    armed = running_user_totals_stream(ev, state_timeout_ms=5000)
     plan = armed._jdf.queryExecution().analyzed().toString()
     assert "ProcessingTimeTimeout" in plan
-    untimed = running_user_totals_stream(ev, exact_micros=True)
+    untimed = running_user_totals_stream(ev)
     plan2 = untimed._jdf.queryExecution().analyzed().toString()
     assert "NoTimeout" in plan2 and "ProcessingTimeTimeout" not in plan2
 

@@ -182,9 +182,7 @@ COMMENTARY = {
         "vector, so the only per-round shuffle is the contribution "
         "groupBy(dst) with map-side partials. Rank lineage is truncated "
         "every round — the un-truncated plan doubles per iteration "
-        "(2^iters analysis cost, observed 65 s → ~2 s at sf0.001). For "
-        "|V| beyond broadcast scale, broadcast_ranks=False switches the "
-        "rank join to a keyed shuffle — plan-tested, bit-identical values."
+        "(2^iters analysis cost, observed 65 s → ~2 s at sf0.001)."
     ),
     "corpus_curate_pipeline": (
         "End-to-end curation: quality gate and split tag fuse into the "
