@@ -218,10 +218,6 @@ def connected_components(
       graph). Converges on EVERY graph shape.
     * ``"star"`` — pure large/small-star alternation from round 0
       [Kiveris et al., SoCC'14]; O(log² n) rounds on any shape.
-    * ``"propagate"`` — pure propagation; raises ``RuntimeError`` after
-      ``max_iters`` rounds on diameter > max_iters graphs (the round-4
-      behavior, kept for callers that WANT the cliff as an anomaly
-      detector on supposedly-shallow graphs).
 
     ``checkpoint_dir`` switches per-round lineage truncation from
     ``localCheckpoint`` (fast, sandbox default, NOT fault-tolerant) to a
@@ -229,7 +225,7 @@ def connected_components(
     cluster) so an executor loss mid-loop cannot kill a long job.
     Values are identical in every mode/algorithm.
     """
-    if algorithm not in ("auto", "star", "propagate"):
+    if algorithm not in ("auto", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
     spark = pairs.sparkSession
     # Separate truncators: edges are read every round and must never be
@@ -245,7 +241,7 @@ def connected_components(
     # subtree (SRP cosine verify, LSH banding) that re-execution tripled
     # the job. Measured at sf0.1 on the SRP cosine pairs: 13.7 s → 3.9 s
     # for the full components run. The truncator retires these blocks at
-    # its next cut (propagate path) or end of job (star path).
+    # its next cut (auto path) or end of job (star path).
     pairs_m = edge_trunc.truncate(pairs.select(id_a, id_b))
     sym = pairs_m.select(
         F.col(id_a).alias("u"), F.col(id_b).alias("v")
@@ -272,9 +268,9 @@ def connected_components(
         )
         return _with_sizes(labels)
 
-    # propagation path (pure or as the auto fast path). Self-loops make
-    # "min over self" part of the same aggregate as "min over neighbors"
-    # — one groupBy per round instead of a join + least().
+    # auto path: propagation first. Self-loops make "min over self" part
+    # of the same aggregate as "min over neighbors" — one groupBy per
+    # round instead of a join + least().
     nodes = sym.select("u").distinct()  # sym is symmetric: u covers v too
     # Materialize the self-looped edge set: it is re-read every round.
     # This second cut derives cheaply from the stored pair blocks and
@@ -282,13 +278,8 @@ def connected_components(
     edges = edge_trunc.truncate(
         sym.union(nodes.select("u", F.col("u").alias("v"))).distinct()
     )
-    budget = propagate_rounds if algorithm == "auto" else max_iters
-    labels, converged = _propagate_labels(edges, loop_trunc, budget)
+    labels, converged = _propagate_labels(edges, loop_trunc, propagate_rounds)
     if not converged:
-        if algorithm == "propagate":
-            raise RuntimeError(
-                f"connected_components: no fixpoint in {max_iters} rounds"
-            )
         # auto fallback: contract by partial labels (same-label nodes are
         # proven co-component), star-resolve the contraction, compose.
         # The contracted edge set has one node per surviving label.

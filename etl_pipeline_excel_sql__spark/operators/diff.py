@@ -106,18 +106,24 @@ def snapshot_diff(
     One shuffle (the join) — or zero when the old side broadcasts.
     """
     word_diff_cols = word_diff_cols or []
-    if old_order_col:
-        old = dedup_last_wins(old, key, old_order_col)
-    else:
-        # No explicit order: any-wins dedup, still deterministic per key set.
-        old = dedup_last_wins(
-            old.withColumn("__ord", F.monotonically_increasing_id()), key, "__ord"
-        ).drop("__ord")
-
-    old_clean = old.filter(to_str(F.col(key)) != "").select(
-        to_str(F.col(key)).alias(key),
+    # Trim and drop blank keys BEFORE the last-wins dedup: the reference
+    # keys its lookup on the stripped value (Compare.py:59-62), so "A" and
+    # " A" are one old row. No explicit order: any-wins dedup.
+    order = (
+        F.col(old_order_col) if old_order_col else F.monotonically_increasing_id()
+    )
+    old_clean = dedup_last_wins(
+        old.select(
+            to_str(F.col(key)).alias(key),
+            order.alias("__ord"),
+            *[to_str(F.col(c)).alias(f"__old_{c}") for c in compare_cols],
+        ).filter(F.col(key) != ""),
+        key,
+        "__ord",
+    ).select(
+        key,
         F.lit(True).alias("__in_old"),
-        *[to_str(F.col(c)).alias(f"__old_{c}") for c in compare_cols],
+        *[f"__old_{c}" for c in compare_cols],
     )
     new_clean = new.filter(to_str(F.col(key)) != "").select(
         to_str(F.col(key)).alias(key),

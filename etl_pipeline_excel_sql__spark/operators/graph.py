@@ -324,9 +324,8 @@ def kcore_membership(
     Round-count contract: peeling finishes in "degeneracy depth" rounds
     — small for the blob-shaped graphs this targets, but a pathological
     chain with k=2 peels one node per end per round, so an adversarial
-    input can exceed ``max_iters``; the hard RuntimeError is the same
-    anomaly-detector contract as ``connected_components(algorithm=
-    "propagate")``. (A Montresor-style h-index iteration trades this for
+    input can exceed ``max_iters``, and the hard RuntimeError is the
+    anomaly detector. (A Montresor-style h-index iteration trades this for
     full coreness at more per-round work — out of scope until a caller
     needs core NUMBERS rather than k-membership.)
     """

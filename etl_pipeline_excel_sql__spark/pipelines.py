@@ -7,8 +7,9 @@ CellGrid sink; everything between is lazy and distributed.
 
 * :func:`download_pipeline` — §3.1: extract → filter → drop → date/percent
   formatting → positional rename → positional Excel write with skip-columns
-  + run-date stamp (+ a recorded no-op standing in for the VBA injection,
-  which is template plumbing, not analytics — Download.py:203-227).
+  + run-date stamp (+ the VBA paste-guard macro, stored on the grid and
+  written as ``xl/vbaProject.bin`` by ``sinks/xlsx.py`` —
+  Download.py:203-227).
 * :func:`upload_pipeline` — §3.2: extract once → IN-list filter → empty
   guard → header scan + schema reconciliation → ministry block ordering →
   header-matched write with a written-rows tally.
@@ -66,7 +67,7 @@ class EmptySourceError(RuntimeError):
 class PipelineResult:
     grid: CellGrid
     rows_written: int
-    #: side-channel notes (e.g. the recorded VBA-injection no-op)
+    #: side-channel notes (e.g. that the VBA paste-guard macro was stored)
     notes: list[str] = field(default_factory=list)
 
 
@@ -110,8 +111,8 @@ def download_pipeline(
     notes = []
     if inject_vba:
         # K4 (Download.py:203-227): the paste-guard macro source is stored
-        # on the grid verbatim (a VBA host is needed to execute it; none
-        # exists in an analytics engine — see sinks.excel_writer).
+        # on the grid verbatim; grid_to_xlsx writes it as xl/vbaProject.bin
+        # (executing it needs a VBA host, which Excel provides).
         inject_vba_guard(grid)
         notes.append("vba-injection: recorded (paste-guard module stored)")
     return PipelineResult(grid=grid, rows_written=n, notes=notes)

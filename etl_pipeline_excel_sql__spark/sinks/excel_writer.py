@@ -2,9 +2,9 @@
 
 Template workbooks are O(10²-10³) rows (reference scale), so the sink is the
 one legitimate driver materialization in the engine: the distributed plan
-ends with ``toPandas()``/``collect()`` of an already-reduced frame, then a
-local render. Everything upstream (filtering, ordering, diff classification)
-stays distributed.
+ends with a bounded ``limit().collect()`` of an already-reduced frame
+(:func:`_collect_bounded`), then a local render. Everything upstream
+(filtering, ordering, diff classification) stays distributed.
 
 The render targets an abstract :class:`CellGrid`, so all placement logic —
 skip-columns, header matching, highlight fills — is unit-tested against the
@@ -186,9 +186,9 @@ def inject_vba_guard(
 
     The reference drives a live Excel COM host (``workbook.VBProject...
     AddFromString``); this engine stores the identical macro source on the
-    grid so a downstream .xlsm writer with a VBA host can install it —
-    the stored-string fidelity half of K4, without pretending to execute
-    VBA.
+    grid, and ``sinks/xlsx.grid_to_xlsx`` writes it into the workbook as
+    ``xl/vbaProject.bin`` (a macro-enabled .xlsm). Executing it is Excel's
+    job; the engine never runs VBA.
     """
     grid.vba_modules[module] = vba_paste_guard_code(columns)
 

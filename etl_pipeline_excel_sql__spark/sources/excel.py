@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import CellGrid
 
@@ -39,11 +40,13 @@ def grid_to_dataframe(
     Row *r* of the sheet becomes frame row *r - header_row - 1*, with an
     explicit ``_row_ordinal`` column — the D4 positional-alignment hazard
     (Compare.py:173-176) resolved by carrying the ordinal instead of
-    trusting physical order.
+    trusting physical order. Header cells name the columns verbatim (any
+    character, any value type); only a missing or blank one becomes
+    ``col<c>``.
     """
     max_col = max((c for _, c in grid.cells), default=0)
     headers = [
-        str(grid.get(header_row, c) or f"col{c}") for c in range(1, max_col + 1)
+        _header_name(grid.get(header_row, c), c) for c in range(1, max_col + 1)
     ]
     rows = []
     for r in range(header_row + 1, grid.max_row() + 1):
@@ -52,8 +55,16 @@ def grid_to_dataframe(
             for c in range(1, max_col + 1)
         ]
         rows.append((*vals, r - header_row - 1))
-    schema_cols = ", ".join(f"`{h}` string" for h in headers)
-    return spark.createDataFrame(rows, f"{schema_cols}, _row_ordinal long")
+    schema = StructType(
+        [StructField(h, StringType()) for h in headers]
+        + [StructField("_row_ordinal", LongType())]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def _header_name(value, c: int) -> str:
+    name = "" if value is None else str(value)
+    return name if name.strip() else f"col{c}"
 
 
 def read_csv_all_string(

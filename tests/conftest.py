@@ -1,48 +1,14 @@
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
+from typing import Any, NamedTuple
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF_SMOKE = "/root/testdata/sf0.001"
-
-
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "exhaustive: registry-wide census sweeps and long randomized "
-        "parity suites — deselected by default so the driver's suite "
-        "run fits its budget (r13 verdict #1: 416 tests / ~32 min "
-        "overran the gate at ~69%); run them with "
-        "SPARK_GRAFT_FULL_TESTS=1.",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    """Default tier = everything except ``exhaustive``.
-
-    The exhaustive tier holds (a) the five registry-wide plan/type
-    census sweeps (~915 s of the 1932 s round-13 suite — they analyze
-    all 269 registered queries and grow with the registry, not with
-    the code under test) and (b) the longest hypothesis parity suites
-    (their operators are additionally pinned by the driver's DuckDB
-    oracle gate on every run). ``SPARK_GRAFT_FULL_TESTS=1`` restores
-    the full 416-test suite — CI/judge evidence runs use it; the
-    default keeps ``python -m pytest tests/ -x -q`` inside the
-    driver's pytest budget.
-    """
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    deselected = [i for i in items if i.get_closest_marker("exhaustive")]
-    if deselected:
-        config.hook.pytest_deselected(items=deselected)
-        items[:] = [
-            i for i in items if not i.get_closest_marker("exhaustive")
-        ]
 
 
 @pytest.fixture(scope="session")
@@ -59,3 +25,45 @@ def sf_dir() -> str:
     if not Path(SF_SMOKE).is_dir():
         pytest.skip(f"generated test corpus missing: {SF_SMOKE}")
     return SF_SMOKE
+
+
+class BuiltQuery(NamedTuple):
+    """What the registry-wide census tests read of one built query."""
+
+    schema: Any  # pyspark StructType
+    optimized: Any  # JVM optimized logical plan
+    executed: Any  # JVM executed physical plan, session conf as is
+    executed_no_auto_broadcast: Any  # same, autoBroadcastJoinThreshold=-1
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir) -> dict[str, BuiltQuery]:
+    """Every registry query built ONCE at sf0.001, shared by the census
+    tests (plan invariants, corpus broadcasts, float doctrine, oracle
+    types, hashable result columns).
+
+    Each record is taken right after its build: a later build retires the
+    shared slots that this frame's cache substitution reads. The
+    no-auto-broadcast plan is re-planned from the held logical plan, not
+    by calling the query again — a held frame's cached ``executedPlan``
+    ignores a conf change, while the re-plan drops the engine's automatic
+    broadcasts and keeps ``F.broadcast`` hints.
+    """
+    from etl_pipeline_excel_sql__spark.plans import QUERIES
+
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(threshold)
+    of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    built: dict[str, BuiltQuery] = {}
+    for name, fn in QUERIES.items():
+        df = fn(spark, sf_dir)
+        qe = df._jdf.queryExecution()
+        optimized, executed = qe.optimizedPlan(), qe.executedPlan()
+        spark.conf.set(threshold, "-1")
+        try:
+            replanned = of_rows(spark._jsparkSession, qe.logical())
+            no_auto = replanned.queryExecution().executedPlan()
+        finally:
+            spark.conf.set(threshold, default)
+        built[name] = BuiltQuery(df.schema, optimized, executed, no_auto)
+    return built

@@ -58,7 +58,6 @@ def _pandas_asof(lrows, rrows, direction):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.exhaustive
 @given(lrows=left_rows, rrows=right_rows)
 def test_asof_matches_pandas(spark, direction, lrows, rrows):
     left = spark.createDataFrame(lrows, "k long, t long")

@@ -14,7 +14,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from etl_pipeline_excel_sql__spark.plans.analytics6_queries import BAND_US
-import pytest
 
 # --- band join ---------------------------------------------------------
 
@@ -38,7 +37,6 @@ def _brute_counts(probes, builds):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.exhaustive
 @given(probes=probe_rows, builds=build_rows)
 def test_bucketed_band_join_equals_brute_force(
     spark, probes, builds, tmp_path_factory
@@ -123,7 +121,6 @@ def _brute_passage_dedup(texts, w, max_df):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.exhaustive
 @given(texts=doc_texts)
 def test_passage_dedup_equals_brute_force(spark, texts, tmp_path_factory):
     """The distributed md5-keyed passage dedup must reproduce the naive

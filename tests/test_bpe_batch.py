@@ -81,7 +81,6 @@ def test_batched_equals_sequential_adversarial_corpus(spark):
         assert _train(spark, texts, 8, bp) == want, f"batch_pairs={bp}"
 
 
-@pytest.mark.exhaustive
 @pytest.mark.parametrize("seed", [7, 21])
 def test_batched_equals_sequential_random_tiny_alphabet(spark, seed):
     """Random words over a 2-letter alphabet maximize run overlaps and
@@ -99,7 +98,6 @@ def test_batched_equals_sequential_random_tiny_alphabet(spark, seed):
         assert _train(spark, texts, 10, bp) == want, f"batch_pairs={bp}"
 
 
-@pytest.mark.exhaustive
 def test_batched_round_count_evidence(spark):
     """VERDICT r6 item 4's done-bar: >=10x fewer driver round-trips for
     the SAME merge table. 30 disjoint two-letter words merge in ONE
@@ -202,7 +200,6 @@ def test_adaptive_width_equals_sequential_adversarial(spark):
     ] == want
 
 
-@pytest.mark.exhaustive
 def test_adaptive_width_round_count_evidence(spark):
     """VERDICT r7 item 4's done-bar: on a corpus with many batchable
     merges, the geometric width schedule needs >=10x fewer driver

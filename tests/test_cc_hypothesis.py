@@ -11,7 +11,6 @@ and per-component sizes.
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -50,7 +49,6 @@ def _uf_components(pairs):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.exhaustive
 @given(pairs=edges)
 def test_cc_matches_union_find(spark, pairs):
     _assert_cc_matches(spark, pairs, algorithm="auto")
@@ -61,7 +59,6 @@ def test_cc_matches_union_find(spark, pairs):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.exhaustive
 @given(pairs=edges)
 def test_cc_star_matches_union_find(spark, pairs):
     """Pure large/small-star alternation on the same adversarial shapes."""
@@ -74,21 +71,6 @@ def test_cc_long_path_converges(spark):
     inside the O(log^2 n) budget and still label by component minimum."""
     pairs = [(i, i + 1) for i in range(200)]
     _assert_cc_matches(spark, pairs, algorithm="auto")
-
-
-def test_cc_propagate_still_raises_on_long_chains(spark):
-    """algorithm='propagate' keeps the round-4 refusal contract."""
-    import pytest
-
-    from etl_pipeline_excel_sql__spark.operators.clusters import (
-        connected_components,
-    )
-
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(df, algorithm="propagate").collect()
 
 
 def _assert_cc_matches(spark, pairs, algorithm):

@@ -9,7 +9,6 @@ once; the accumulator test here pins single evaluation the same way
 the LPA fix.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.operators.clusters import (
@@ -42,7 +41,6 @@ def test_split_audit_zero_leaks_and_conservation(spark):
     assert sum(r.n_groups for r in rows) == 95
 
 
-@pytest.mark.exhaustive
 def test_split_audit_cluster_members_share_split(spark):
     """Direct check of the construction: all members of each component
     get the identical split label (probed via the group-keyed hash)."""

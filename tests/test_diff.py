@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -116,7 +115,6 @@ def _naive_diff(old_rows, new_rows_):
         unique_by=lambda r: r[0],
     ),
 )
-@pytest.mark.exhaustive
 def test_diff_matches_naive_model(spark, old, new):
     # last-wins needs a unique (key, ord): dedupe collisions deterministically
     seen = {}
@@ -134,6 +132,18 @@ def test_diff_matches_naive_model(spark, old, new):
         for r in snapshot_diff(old_df, new_df, "k", ["v"], old_order_col="ord").collect()
     }
     assert got == _naive_diff(old, new)
+
+
+def test_padded_old_keys_dedup_to_one_row(spark):
+    # The old snapshot is keyed on the STRIPPED key (Compare.py:59-62):
+    # "A" and " A" are one old row, last wins, so one new row renders once.
+    old = _df(spark, [("A", "x", 1), (" A", "y", 2)])
+    new = _df(spark, [("A", "y", 1)])
+    rows = [
+        (r.k, r.row_status, r.v__status, r.v__old, r.v__new)
+        for r in snapshot_diff(old, new, "k", ["v"], old_order_col="ord").collect()
+    ]
+    assert rows == [("A", "present", "same", "y", "y")]
 
 
 def test_diff_with_empty_old_snapshot(spark):

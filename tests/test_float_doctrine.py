@@ -34,9 +34,6 @@ Classes (a query can be in several):
 """
 
 from __future__ import annotations
-import pytest
-
-SF = "/root/testdata/sf0.001"
 
 FP = ("double", "float")
 INTEGRAL = ("long", "integer", "short", "byte")
@@ -185,17 +182,14 @@ def _walk_plan(p, out):
         _walk_plan(ch.apply(i), out)
 
 
-@pytest.mark.exhaustive
-def test_double_boundary_classes_match_reviewed_whitelists(spark):
-    from etl_pipeline_excel_sql__spark.plans import QUERIES
-
+def test_double_boundary_classes_match_reviewed_whitelists(registry_plans):
     got_sorted, got_quant = set(), set()
     walk_errors: dict[str, list[str]] = {}
-    for name, fn in sorted(QUERIES.items()):
+    for name, built in sorted(registry_plans.items()):
         if name.startswith("stream_"):
             continue
         out: dict = {}
-        _walk_plan(fn(spark, SF)._jdf.queryExecution().optimizedPlan(), out)
+        _walk_plan(built.optimized, out)
         if out.get("sorted"):
             got_sorted.add(name)
         if out.get("quant"):

@@ -9,7 +9,6 @@ import hashlib
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-import pytest
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
@@ -32,7 +31,6 @@ rows_strategy = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.exhaustive
 @given(rows=rows_strategy)
 def test_global_row_numbers_equals_naive_sort(spark, rows):
     """The two-phase decomposition must reproduce the naive global

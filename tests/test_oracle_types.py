@@ -18,14 +18,10 @@ registry scans in seconds with no Spark session.
 
 from __future__ import annotations
 
-import os
-
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-
-SF = os.environ.get("SPARK_GRAFT_SF_DIR_TINY", "/root/testdata/sf0.001")
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "
@@ -36,10 +32,10 @@ FORBIDDEN = ("HUGEINT", "UHUGEINT")
 
 
 @pytest.fixture(scope="module")
-def con():
+def con(sf_dir):
     c = duckdb.connect()
     for t in TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+        c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return c
 
 
@@ -58,21 +54,20 @@ DUCK_TO_SPARK = {
 }
 
 
-@pytest.mark.exhaustive
-def test_spark_and_oracle_column_types_align(con, spark):
+def test_spark_and_oracle_column_types_align(con, registry_plans):
     """Exact width/type parity between each Spark result schema and its
     oracle's final projection. The driver observably tolerates integer
     WIDTH differences (dedup_spans was gate-green with int32-vs-BIGINT),
     but int-vs-float killed bm25_topk for two rounds — exact parity
     keeps the whole axis closed instead of relying on which leniencies
     the driver's hash happens to have."""
-    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql()
     mismatches: dict[str, dict] = {}
     for name in sorted(oracles):
         if name.startswith("stream_"):
             continue  # streaming queries execute eagerly; covered by sweeps
-        sdf = queries[name](spark, SF)
-        stypes = {f.name: f.dataType.typeName() for f in sdf.schema.fields}
+        schema = registry_plans[name].schema
+        stypes = {f.name: f.dataType.typeName() for f in schema.fields}
         rel = con.sql(f"SELECT * FROM ({oracles[name]}) LIMIT 0")
         dtypes = dict(zip(rel.columns, (str(t) for t in rel.types)))
         diffs = {}

@@ -1,6 +1,7 @@
-"""Repo-wide physical-plan census: ONE test that compiles every batch
-registry query and asserts the global plan invariants the per-query
-tests assert locally.
+"""Repo-wide physical-plan census: ONE test that reads every batch
+registry query's plan (built once per session by the ``registry_plans``
+fixture) and asserts the global plan invariants the per-query tests
+assert locally.
 
 Invariants (the ones that decide 100 TB viability):
 - NO CartesianProduct anywhere, ever.
@@ -12,16 +13,11 @@ Invariants (the ones that decide 100 TB viability):
   aggregates, centroids, SRP planes, probe-date lists) — anything else
   is an accidental unbounded nested loop.
 
-Streaming queries are excluded: invoking them executes the stream (the
-memory-sink drain happens inside the query function), and their state
-machines are covered by test_streaming.py and the oracle gate.
-Iterative queries (connected components, PageRank, IVF training) run
-driver actions during CONSTRUCTION; compiling them here is a real but
-bounded cost (~seconds each at sf0.001).
+Streaming queries are excluded: their state machines are covered by
+test_streaming.py and the oracle gate.
 """
 
 from __future__ import annotations
-import pytest
 
 SF = "/root/testdata/sf0.001"
 
@@ -105,18 +101,13 @@ BNLJ_WHITELIST = {
 }
 
 
-@pytest.mark.exhaustive
-def test_every_batch_query_obeys_global_plan_invariants(spark):
-    from etl_pipeline_excel_sql__spark.plans import QUERIES
-
+def test_every_batch_query_obeys_global_plan_invariants(registry_plans):
     offenders: dict[str, list[str]] = {}
     unexpected_bnlj: list[str] = []
-    for name, fn in QUERIES.items():
+    for name, built in registry_plans.items():
         if name.startswith("stream_"):
             continue
-        plan = (
-            fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        )
+        plan = built.executed.toString()
         bad = []
         if "CartesianProduct" in plan:
             bad.append("CartesianProduct")
@@ -333,24 +324,15 @@ def _find_corpus_broadcasts(node, out):
         _find_corpus_broadcasts(c, out)
 
 
-@pytest.mark.exhaustive
-def test_no_unreviewed_corpus_derived_broadcasts(spark):
-    from etl_pipeline_excel_sql__spark.plans import QUERIES
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+def test_no_unreviewed_corpus_derived_broadcasts(registry_plans):
     offenders: dict[str, list[str]] = {}
-    try:
-        for name, fn in QUERIES.items():
-            if name.startswith("stream_"):
-                continue
-            plan = fn(spark, SF)._jdf.queryExecution().executedPlan()
-            bad: list[str] = []
-            _find_corpus_broadcasts(plan, bad)
-            if bad and name not in CORPUS_BROADCAST_WHITELIST:
-                offenders[name] = [b[:200] for b in bad]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    for name, built in registry_plans.items():
+        if name.startswith("stream_"):
+            continue
+        bad: list[str] = []
+        _find_corpus_broadcasts(built.executed_no_auto_broadcast, bad)
+        if bad and name not in CORPUS_BROADCAST_WHITELIST:
+            offenders[name] = [b[:200] for b in bad]
     assert not offenders, (
         "forced broadcast of a corpus-derived frame (the decontam-r4 "
         "scale bug) outside the reviewed whitelist — size-gate it (drop "

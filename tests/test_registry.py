@@ -11,7 +11,6 @@ from __future__ import annotations
 import inspect
 
 from etl_pipeline_excel_sql__spark import plans
-import pytest
 
 
 def test_window_is_50_unique_oracle_backed():
@@ -35,8 +34,7 @@ def test_oracle_keys_subset_of_queries_and_are_sql_strings():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
 
 
-@pytest.mark.exhaustive
-def test_no_query_returns_array_map_or_struct(spark, sf_dir):
+def test_no_query_returns_array_map_or_struct(registry_plans):
     """The verification harness canonicalizes result frames via pandas
     sort/factorize, which requires hashable cells — the ``array_funcs``
     doctrine (``plans/extended_queries.py``). A registered query that
@@ -47,14 +45,11 @@ def test_no_query_returns_array_map_or_struct(spark, sf_dir):
     """
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from etl_pipeline_excel_sql__spark import plans
-
     offenders = {}
-    for name, fn in sorted(plans.QUERIES.items()):
-        schema = fn(spark, sf_dir).schema
+    for name, built in sorted(registry_plans.items()):
         bad = [
             f.name
-            for f in schema.fields
+            for f in built.schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
         if bad:

@@ -33,6 +33,20 @@ def test_grid_to_dataframe_all_string_with_ordinal(spark):
     assert rows == {"a": ("42", 0), "b": (None, 1)}
 
 
+def test_grid_to_dataframe_keeps_any_header_verbatim(spark):
+    # Header cells come from outside the program: a backtick must not
+    # break the schema, a numeric 0 is a name, only blank/missing fall back.
+    grid = CellGrid()
+    grid.set(1, 1, "a`b")
+    grid.set(1, 2, 0)
+    grid.set(1, 3, "  ")
+    grid.set(2, 1, "x")
+    grid.set(2, 4, "y")  # column 4 has no header cell at all
+    df = grid_to_dataframe(spark, grid)
+    assert df.columns == ["a`b", "0", "col3", "col4", "_row_ordinal"]
+    assert [tuple(r) for r in df.collect()] == [("x", None, None, "y", 0)]
+
+
 def test_csv_all_string_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, 2.5, "x"), (2, 3.0, None)], "a int, b double, c string")
     path = str(tmp_path / "csv")

@@ -22,20 +22,13 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import BENCH_QUERIES  # noqa: E402
+from bench import BENCH_QUERIES, run_one  # noqa: E402
 from etl_pipeline_excel_sql__spark.plans import QUERIES  # noqa: E402
 from etl_pipeline_excel_sql__spark.session import get_session  # noqa: E402
-
-
-def run_one(spark, name: str, sf_dir: str) -> float:
-    t0 = time.time()
-    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return round(time.time() - t0, 3)
 
 
 def srp_diagnostics(spark, sf_dir: str) -> dict:
@@ -147,8 +140,8 @@ def main() -> None:
                 except Exception as exc:  # noqa: BLE001
                     errors[n] = f"{type(exc).__name__}: {exc}"[:500]
 
-    small = {n: min(r) for n, r in raw["small"].items() if r}
-    big = {n: min(r) for n, r in raw["big"].items() if r}
+    small = {n: round(min(r), 3) for n, r in raw["small"].items() if r}
+    big = {n: round(min(r), 3) for n, r in raw["big"].items() if r}
     # Timings are rounded to ms; clamp the denominator so a sub-ms
     # small-SF sample can't ZeroDivisionError away a completed probe.
     ratios = {
