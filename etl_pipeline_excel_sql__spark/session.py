@@ -37,9 +37,10 @@ def get_session(
     * **UTC session timezone** — deterministic timestamp semantics across
       drivers/executors and vs. the DuckDB oracle.
     * **Arrow on** — ``toPandas`` and all Pandas UDFs move columnar.
-      The template-scale Excel sinks (``sinks/excel_writer.py``) use
-      ``collect()``, which Arrow does not cover: they receive pickled
-      ``Row`` objects.
+      The template-scale Excel source and sinks cross the driver boundary
+      as Arrow whatever this flag says: ``sources/excel.py`` hands Spark a
+      ``pyarrow.Table`` and ``sinks/excel_writer.py`` collects with
+      ``toArrow()``.
     * **Broadcast threshold 64 MB** — dimension tables (region/nation/
       customer-slices) broadcast instead of shuffling the fact table.
     * **Generated-class cache of 4000 entries** — Spark caches compiled

@@ -2,9 +2,10 @@
 
 Template workbooks are O(10²-10³) rows (reference scale), so the sink is the
 one legitimate driver materialization in the engine: the distributed plan
-ends with a bounded ``limit().collect()`` of an already-reduced frame
-(:func:`_collect_bounded`), then a local render. Everything upstream
-(filtering, ordering, diff classification) stays distributed.
+ends with a bounded ``limit().toArrow()`` of an already-reduced frame
+(:func:`_collect_bounded`), then a local render that fills the grid column
+by column. Everything upstream (filtering, ordering, diff classification)
+stays distributed.
 
 The render targets an abstract :class:`CellGrid`, so all placement logic —
 skip-columns, header matching, highlight fills — is unit-tested against the
@@ -25,9 +26,10 @@ from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row
 
 #: Excel 1-based column indexes the positional writer must skip — template
 #: formula columns (Download.py:173).
@@ -43,8 +45,9 @@ FONT_DIFF_WORD = "FFFF0000"  # red changed-word font (Compare.py:101)
 MAX_SINK_ROWS = 100_000
 
 
-def word_runs(words: list) -> list[tuple[str, str | None]]:
-    """D3 render half: ``<col>__words`` structs → rich-text runs.
+def word_runs(words: list[dict]) -> list[tuple[str, str | None]]:
+    """D3 render half: ``<col>__words`` structs (as Arrow's ``{"word",
+    "same"}`` dicts) → rich-text runs.
 
     Reference semantics (Compare.py:95-108): iterate NEW tokens; a token is
     red unless the old token at the same position equals it, and every
@@ -52,8 +55,8 @@ def word_runs(words: list) -> list[tuple[str, str | None]]:
     """
     runs: list[tuple[str, str | None]] = []
     for i, w in enumerate(words):
-        text = w.word if i == len(words) - 1 else w.word + " "
-        runs.append((text, None if w.same else FONT_DIFF_WORD))
+        text = w["word"] if i == len(words) - 1 else w["word"] + " "
+        runs.append((text, None if w["same"] else FONT_DIFF_WORD))
     return runs
 
 
@@ -106,15 +109,50 @@ def convert_value(v: Any) -> Any:
     return v
 
 
-def _collect_bounded(df: DataFrame) -> list:
-    """Collect at most ``MAX_SINK_ROWS`` rows; raise if there are more."""
-    rows = df.limit(MAX_SINK_ROWS + 1).collect()
-    if len(rows) > MAX_SINK_ROWS:
+def _collect_bounded(df: DataFrame) -> pa.Table:
+    """Collect at most ``MAX_SINK_ROWS`` rows as one Arrow table; raise if
+    there are more."""
+    table = df.limit(MAX_SINK_ROWS + 1).toArrow()
+    if table.num_rows > MAX_SINK_ROWS:
         raise ValueError(
             f"Excel sink got >{MAX_SINK_ROWS} rows; this sink is for "
             "template-scale output — reduce upstream"
         )
-    return rows
+    return table
+
+
+def _row_form(t: pa.DataType) -> Callable[[Any], Any] | None:
+    """Map a ``to_pylist()`` value of Arrow type ``t`` to what ``collect()``
+    gives for it, or None where the two already agree.
+
+    Arrow hands back timestamps as UTC-aware datetimes, structs as dicts
+    and maps as ``(key, value)`` lists; ``collect()`` gives naive local
+    datetimes, ``Row`` objects and dicts. Cells keep the ``collect()`` form
+    so that a written value renders as ``str(value)`` always did.
+    """
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return lambda v: v.astimezone().replace(tzinfo=None)
+    if pa.types.is_struct(t):
+        fields = [(f.name, _row_form(f.type)) for f in t]
+        return lambda d: Row(**{n: _apply(conv, d[n]) for n, conv in fields})
+    if pa.types.is_map(t):
+        key, item = _row_form(t.key_type), _row_form(t.item_type)
+        return lambda kvs: {_apply(key, k): _apply(item, v) for k, v in kvs}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        elem = _row_form(t.value_type)
+        return None if elem is None else (lambda xs: [_apply(elem, x) for x in xs])
+    return None
+
+
+def _apply(f: Callable[[Any], Any] | None, v: Any) -> Any:
+    return v if f is None or v is None else f(v)
+
+
+def _cell_values(column: pa.ChunkedArray) -> list:
+    """One collected column as the values the cells receive."""
+    values = column.to_pylist()
+    f = _row_form(column.type)
+    return values if f is None else [_apply(f, v) for v in values]
 
 
 def write_positional(
@@ -138,11 +176,11 @@ def write_positional(
             targets.append(c)
         c += 1
 
-    rows = _collect_bounded(df)
-    for i, row in enumerate(rows):
-        for j, value in enumerate(row):
-            grid.set(row_start + i, targets[j], convert_value(value))
-    return len(rows)
+    table = _collect_bounded(df)
+    for column, c in zip(table.columns, targets):
+        for r, value in enumerate(_cell_values(column), start=row_start):
+            grid.set(r, c, convert_value(value))
+    return table.num_rows
 
 
 def stamp_run_date(
@@ -206,18 +244,15 @@ def write_header_matched(
     empty row at/after ``first_data_row``. Returns total rows written (the
     reference's ``total_written`` tally, Upload.py:200-224).
     """
-    rows = _collect_bounded(df)
+    table = _collect_bounded(df)
     r = first_data_row
     while any(grid.get(r, c + 1) not in (None, "") for c in mapping.values()):
         r += 1
-    cols = list(df.columns)
-    written = 0
-    for row in rows:
-        for name, excel_idx in mapping.items():
-            grid.set(r, excel_idx + 1, convert_value(row[cols.index(name)]))
-        r += 1
-        written += 1
-    return written
+    for name, excel_idx in mapping.items():
+        values = _cell_values(table.column(table.column_names.index(name)))
+        for i, value in enumerate(values, start=r):
+            grid.set(i, excel_idx + 1, convert_value(value))
+    return table.num_rows
 
 
 def write_highlighted_diff(
@@ -244,24 +279,36 @@ def write_highlighted_diff(
     for j, c in enumerate(compare_cols, start=2):
         grid.set(header_row, j, c)
 
-    rows = _collect_bounded(diff)
-    for i, row in enumerate(rows):
-        r = header_row + 1 + i
-        d = row.asDict()
-        grid.set(r, 1, d[key])
-        is_new = d["row_status"] == "new"
-        for j, c in enumerate(compare_cols, start=2):
-            new_val = d[f"{c}__new"]
-            grid.set(r, j, convert_value(new_val))
-            if is_new:
-                grid.fill(r, j, FILL_CHANGED)
-            elif d.get(f"{c}__status") == "changed":
-                grid.fill(r, j, FILL_CHANGED)
-                words = d.get(f"{c}__words")
-                if c in word_diff_cols and words and new_val not in (None, ""):
-                    grid.set_rich(r, j, word_runs(words))
-            elif d.get(f"{c}__status") == "cleared":
-                grid.fill(r, j, FILL_CLEARED)
-        if is_new:
+    table = _collect_bounded(diff)
+    n = table.num_rows
+    # last same-named column wins, as it did in ``Row.asDict()``
+    index = {name: i for i, name in enumerate(table.column_names)}
+
+    def raw(name: str) -> list:
+        if name not in index:
+            return [None] * n
+        return table.column(index[name]).to_pylist()
+
+    rows = range(header_row + 1, header_row + 1 + n)
+    is_new = [s == "new" for s in table.column(index["row_status"]).to_pylist()]
+    keys = _cell_values(table.column(index[key]))
+    for r, k, new_row in zip(rows, keys, is_new):
+        grid.set(r, 1, k)
+        if new_row:
             grid.fill(r, 1, FILL_CHANGED)
-    return len(rows)
+    for j, c in enumerate(compare_cols, start=2):
+        new_vals = _cell_values(table.column(index[f"{c}__new"]))
+        words = raw(f"{c}__words") if c in word_diff_cols else [None] * n
+        for r, new_val, status, w, new_row in zip(
+            rows, new_vals, raw(f"{c}__status"), words, is_new
+        ):
+            grid.set(r, j, convert_value(new_val))
+            if new_row:
+                grid.fill(r, j, FILL_CHANGED)
+            elif status == "changed":
+                grid.fill(r, j, FILL_CHANGED)
+                if w and new_val not in (None, ""):
+                    grid.set_rich(r, j, word_runs(w))
+            elif status == "cleared":
+                grid.fill(r, j, FILL_CLEARED)
+    return n

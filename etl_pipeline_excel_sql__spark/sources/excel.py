@@ -3,8 +3,11 @@
 The reference reads every cell as a string to avoid dtype surprises
 (``pd.read_excel(..., dtype=str)`` — Compare.py:41-43) and the diff engine
 is defined over that canonical form. Template workbooks are small, so the
-read happens on the driver and is parallelized afterwards via
-``spark.createDataFrame`` (same boundary the JDBC driver uses for metadata).
+read happens on the driver, and the grid crosses into Spark as one Arrow
+table: ``spark.createDataFrame(<pyarrow.Table>, schema)`` makes a
+``LocalRelation`` below ``spark.sql.execution.arrow.localRelationThreshold``
+(48 MB by default), so the optimizer knows the frame's size and folds
+filters and projections over it at plan time.
 
 :func:`read_xlsx_all_string` reads a workbook through the native stdlib
 reader (``sinks/xlsx.py``) into a :class:`~...sinks.excel_writer.CellGrid`;
@@ -15,6 +18,7 @@ file-backed snapshots of any size.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -48,18 +52,21 @@ def grid_to_dataframe(
     headers = [
         _header_name(grid.get(header_row, c), c) for c in range(1, max_col + 1)
     ]
-    rows = []
-    for r in range(header_row + 1, grid.max_row() + 1):
-        vals = [
-            None if grid.get(r, c) is None else str(grid.get(r, c))
-            for c in range(1, max_col + 1)
-        ]
-        rows.append((*vals, r - header_row - 1))
+    n_rows = max(grid.max_row() - header_row, 0)
+    columns: list[list[str | None]] = [[None] * n_rows for _ in headers]
+    for (r, c), value in grid.cells.items():
+        if r > header_row and c >= 1 and value is not None:
+            columns[c - 1][r - header_row - 1] = str(value)
+    table = pa.Table.from_arrays(
+        [pa.array(col, pa.string()) for col in columns]
+        + [pa.array(range(n_rows), pa.int64())],
+        names=[*headers, "_row_ordinal"],
+    )
     schema = StructType(
         [StructField(h, StringType()) for h in headers]
         + [StructField("_row_ordinal", LongType())]
     )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(table, schema)
 
 
 def _header_name(value, c: int) -> str:

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import datetime as dt
+from decimal import Decimal
 
 import pytest
+from pyspark.sql import Row
 
 from etl_pipeline_excel_sql__spark.operators.diff import snapshot_diff
 from etl_pipeline_excel_sql__spark.operators.reconcile import reconcile_schema
@@ -49,6 +51,89 @@ def test_writer_row_cap(spark, monkeypatch, write):
     df = spark.range(10).selectExpr("cast(id as string) as v")
     with pytest.raises(ValueError, match="template-scale"):
         write(df)
+
+
+#: One changed row and one new row of a diff-shaped frame holding each
+#: value type whose Python form differs between ``collect()`` and Arrow.
+TYPED_FRAME_SQL = """
+SELECT * FROM VALUES
+  ('k1', 'changed', timestamp'2024-03-01 12:34:56.123456', date'2024-03-01',
+   cast(1.5 AS decimal(10,2)), cast('NaN' AS double), cast(NULL AS string),
+   'a b', 'changed',
+   array(named_struct('word', 'a', 'same', true),
+         named_struct('word', 'b', 'same', false)),
+   map('x', 1)),
+  ('k2', 'new', NULL, NULL, NULL, cast(2.25 AS double), 's', NULL, NULL, NULL,
+   NULL)
+  AS t(k, row_status, ts__new, d__new, dec__new, nan__new, s__new, v__new,
+       v__status, v__words, m__new)
+"""
+# The row path's form of the timestamp: naive, in the process's local time.
+_TS = dt.datetime.fromtimestamp(1709296496).replace(microsecond=123456)
+_WORDS = [Row(word="a", same=True), Row(word="b", same=False)]
+_K1 = ["k1", "changed", _TS, dt.date(2024, 3, 1), Decimal("1.50"), "", "",
+       "a b", "changed", _WORDS, {"x": 1}]
+_K2 = ["k2", "new", "", "", "", 2.25, "s", "", "", "", ""]
+_DIFF_COLS = ["ts", "d", "dec", "nan", "s", "v", "m"]
+
+
+def _cells(rows, first_row, cols):
+    return {
+        (r, c): v
+        for r, row in enumerate(rows, start=first_row)
+        for c, v in zip(cols, row)
+    }
+
+
+@pytest.mark.parametrize(
+    "write, cells, fills, rich",
+    [
+        (
+            lambda df, g: write_positional(df, g),
+            _cells([_K1, _K2], 8, [1, 2, 3, 4, 5, 6, 7, 8, 10, 11, 12]),
+            {},
+            {},
+        ),
+        (
+            lambda df, g: write_header_matched(
+                df, g, {c: i for i, c in enumerate(df.columns)}
+            ),
+            _cells([_K1, _K2], 6, range(1, 12)),
+            {},
+            {},
+        ),
+        (
+            lambda df, g: write_highlighted_diff(
+                df, g, "k", _DIFF_COLS, word_diff_cols=["v"]
+            ),
+            _cells(
+                [
+                    ["k", *_DIFF_COLS],
+                    ["k1", _TS, dt.date(2024, 3, 1), Decimal("1.50"), "", "",
+                     "a b", {"x": 1}],
+                    ["k2", "", "", "", 2.25, "s", "", ""],
+                ],
+                1,
+                range(1, 9),
+            ),
+            {(2, 7): FILL_CHANGED, **{(3, c): FILL_CHANGED for c in range(1, 9)}},
+            {(2, 7): [("a ", None), ("b", "FFFF0000")]},
+        ),
+    ],
+    ids=["positional", "header_matched", "highlighted_diff"],
+)
+def test_writer_cells_keep_row_path_values(spark, write, cells, fills, rich):
+    """Every sink writes the values that ``collect()`` gave: naive local
+    timestamps, ``Row`` structs, dict maps, ``''`` for null and NaN."""
+    df = spark.sql(TYPED_FRAME_SQL)
+    grid = CellGrid()
+    assert write(df, grid) == 2
+    assert grid.cells == cells
+    assert {k: type(v) for k, v in grid.cells.items()} == {
+        k: type(v) for k, v in cells.items()
+    }
+    assert grid.fills == fills
+    assert grid.rich == rich
 
 
 def test_stamp_run_date():

@@ -21,10 +21,10 @@ from __future__ import annotations
 
 SF = "/root/testdata/sf0.001"
 
-#: queries whose plan legitimately contains BroadcastNestedLoopJoin —
-#: every one is a broadcast of a singleton or model-sized frame.
+#: queries whose plan at sf0.001 legitimately contains
+#: BroadcastNestedLoopJoin — every one is a broadcast of a singleton or
+#: model-sized frame. An entry whose plan has none fails as stale.
 BNLJ_WHITELIST = {
-    "agg_skew_salted",  # salt-range replicate of the tiny build side
     "ann_brute_topk",  # query vectors broadcast against the corpus scan
     "ann_filtered_topk",  # same, after the keyword prefilter
     "ann_ivf_topk",  # broadcast centroids / probe lists
@@ -33,11 +33,8 @@ BNLJ_WHITELIST = {
     "ann_sq8_rerank",  # broadcast singleton per-dim maxabs row (the
     #               vec_quantize_int8 pattern) + bounded 5-row query-code
     #               batch against the corpus scan
-    "ann_srp_buckets",  # broadcast SRP hyperplanes
     "margin_mining_topk",  # 8-row probe set broadcast against the corpus
     #               scan (the ann_brute_topk pattern)
-    "cluster_balanced_sample",  # broadcast ncells-row trained centroids
-    #               (kmeans_train_assign's bounded quantizer, as ann_ivf_topk)
     "hybrid_rrf_topk",  # composes brute_force_topk; inherits its bounded
     #               query-vector broadcast BNLJ (3-row probe set)
     "rag_context_pipeline",  # composes hybrid_rrf_topk; same bounded
@@ -50,39 +47,19 @@ BNLJ_WHITELIST = {
     "ivfpq_residual_adc",  # same bounded coarse-centroid cross-joins
     #               (the residual path shares the coarse quantizer)
     "neardup_cosine",  # broadcast SRP planes
-    "semantic_dedup_keep",  # broadcast SRP planes feeding the keep-set
-    "dedup_clusters",  # SRP planes inside the LSH pair generator
-    "dedup_triangles",  # same pair generator
-    "graph_cluster_coeff",  # same pair generator
-    "pagerank_nations",  # broadcast dangling-mass singleton
-    "corr_regression",  # broadcast scalar moment row
     "events_decay_score",  # broadcast max-timestamp anchor scalar
-    "decontam_overlap",  # broadcast benchmark shingle set membership
     "tpch_q11_important_stock",  # broadcast global-share scalar
-    "tpch_q14_promo_share",  # broadcast scalar denominator
-    "tpch_q15_top_supplier",  # broadcast scalar max
     "tpch_q22_dormant_customers",  # broadcast avg-balance scalar
-    "scalar_subquery",  # the scalar subquery itself
     "basket_lift",  # broadcast n_orders singleton
     "scd2_pointintime",  # broadcast 3-row probe-date list
     "exact_price_quantiles",  # rank table (pcts x n-scalar crossJoin) +
     #               non-equi locate against the ~1.6k-row bucket table
     "ccnet_ppl_buckets",  # composes exact_quantiles (same bounded locate)
     #               + the 2-cutoff scalar row broadcast over the scores
-    "emb_label_centroids",  # broadcast dim-count singleton
-    "emb_centroid_distances",  # centroid base relation reuse
-    "emb_gram_matrix",  # broadcast scale singleton
-    "vec_quantize_int8",  # broadcast per-dim max row
-    "ngram_lm_score",  # broadcast vocab-total scalar
     "kn_lm_score",  # broadcast bigram-type-count scalar
     "vocab_coverage",  # broadcast top-V vocab list
-    "text_tfidf_topk",  # broadcast doc-count scalar
     "heavy_hitter_terms",  # broadcast doc-count scalar
-    "corpus_length_profile",  # broadcast count row
-    "text_top_terms",  # broadcast count row
-    "cohort_retention",  # broadcast cohort-day row
     "funnel_conversion",  # crossJoin of four single-row stage counts
-    "multimodal_frames",  # broadcast frame-tick sequence
     "incremental_session_merge",  # broadcast batch-cutoff scalar row
     "curation_budget_select",  # broadcast corpus-token-total scalar
     "pretrain_curation_pipeline",  # broadcast eligible-token-total scalar
@@ -92,8 +69,6 @@ BNLJ_WHITELIST = {
     #               scalar) over the persisted state + batch delta
     "manifest_release_diff",  # composes both releases' disposition
     #               DAGs; inherits their budget-total scalar broadcasts
-    "lsh_recall_audit_sampled",  # broadcast 1-row corpus-count frame
-    #               (the ppm sampling threshold)
     "quality_budget_tradeoff",  # broadcast 6-row rung list against the
     #               <=1001-row bucket table + the budget-total scalar
     "minhash_band_tuning",  # broadcast truth-count scalar row
@@ -103,7 +78,7 @@ BNLJ_WHITELIST = {
 
 def test_every_batch_query_obeys_global_plan_invariants(registry_plans):
     offenders: dict[str, list[str]] = {}
-    unexpected_bnlj: list[str] = []
+    got_bnlj: set[str] = set()
     for name, built in registry_plans.items():
         if name.startswith("stream_"):
             continue
@@ -115,16 +90,16 @@ def test_every_batch_query_obeys_global_plan_invariants(registry_plans):
             bad.append("BatchEvalPython(row-at-a-time UDF)")
         if bad:
             offenders[name] = bad
-        if (
-            "BroadcastNestedLoopJoin" in plan
-            and name not in BNLJ_WHITELIST
-        ):
-            unexpected_bnlj.append(name)
+        if "BroadcastNestedLoopJoin" in plan:
+            got_bnlj.add(name)
     assert not offenders, offenders
+    unexpected_bnlj = got_bnlj - BNLJ_WHITELIST
+    stale_bnlj = BNLJ_WHITELIST - got_bnlj
     assert not unexpected_bnlj, (
         "BroadcastNestedLoopJoin outside the singleton whitelist — "
-        f"audit these for unbounded nested loops: {unexpected_bnlj}"
+        f"audit these for unbounded nested loops: {sorted(unexpected_bnlj)}"
     )
+    assert not stale_bnlj, f"stale BNLJ_WHITELIST entries: {sorted(stale_bnlj)}"
 
 
 def test_decontam_size_gates_the_bench_join(spark):
@@ -238,8 +213,6 @@ CORPUS_BROADCAST_WHITELIST = {
     "ann_brute_topk": "query set is vec_id < 5 — constant-range predicate",
     "ann_filtered_topk": "same constant-range query set",
     "ann_ivf_topk": "query set vec_id < 5; probe list = queries x nprobe",
-    "cluster_balanced_sample": "trained centroid table — ncells rows by "
-    "construction (the ann_ivf_topk quantizer argument)",
     "ann_recall": "composes brute + ivf; same bounded query set",
     "hybrid_rrf_topk": "composes brute_force_topk; dense query set is "
     "vec_id < 3 — constant-range predicate (the BM25 query side is a "
@@ -326,11 +299,14 @@ def _find_corpus_broadcasts(node, out):
 
 def test_no_unreviewed_corpus_derived_broadcasts(registry_plans):
     offenders: dict[str, list[str]] = {}
+    broadcasting: set[str] = set()
     for name, built in registry_plans.items():
         if name.startswith("stream_"):
             continue
         bad: list[str] = []
         _find_corpus_broadcasts(built.executed_no_auto_broadcast, bad)
+        if bad:
+            broadcasting.add(name)
         if bad and name not in CORPUS_BROADCAST_WHITELIST:
             offenders[name] = [b[:200] for b in bad]
     assert not offenders, (
@@ -338,6 +314,8 @@ def test_no_unreviewed_corpus_derived_broadcasts(registry_plans):
         "scale bug) outside the reviewed whitelist — size-gate it (drop "
         f"the F.broadcast hint) or justify it above: {offenders}"
     )
+    stale = set(CORPUS_BROADCAST_WHITELIST) - broadcasting
+    assert not stale, f"stale CORPUS_BROADCAST_WHITELIST entries: {sorted(stale)}"
 
 
 def test_corpus_broadcast_census_catches_the_reverted_site(spark):

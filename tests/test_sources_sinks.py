@@ -31,6 +31,11 @@ def test_grid_to_dataframe_all_string_with_ordinal(spark):
     ]
     rows = {r.Key: (r.Val, r._row_ordinal) for r in df.collect()}
     assert rows == {"a": ("42", 0), "b": (None, 1)}
+    # the grid crosses as Arrow into a local relation, not pickled rows
+    # in an RDD, so the optimizer knows its size at plan time
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert "LogicalRDD" not in plan, plan
 
 
 def test_grid_to_dataframe_keeps_any_header_verbatim(spark):
