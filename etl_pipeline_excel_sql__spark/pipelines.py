@@ -10,9 +10,9 @@ CellGrid sink; everything between is lazy and distributed.
   + run-date stamp (+ the VBA paste-guard macro, stored on the grid and
   written as ``xl/vbaProject.bin`` by ``sinks/xlsx.py`` —
   Download.py:203-227).
-* :func:`upload_pipeline` — §3.2: extract once → IN-list filter → empty
-  guard → header scan + schema reconciliation → ministry block ordering →
-  header-matched write with a written-rows tally.
+* :func:`upload_pipeline` — §3.2: extract once → IN-list filter → header
+  scan + schema reconciliation → ministry block ordering → header-matched
+  write with a written-rows tally → empty guard on that tally.
 * :func:`compare_pipeline` — §3.3: two snapshots → key resolution →
   last-wins dedup → diff classification (+ word diff) → highlighted render.
 """
@@ -38,6 +38,7 @@ from etl_pipeline_excel_sql__spark.functions.normalize import (
 from etl_pipeline_excel_sql__spark.operators.diff import snapshot_diff
 from etl_pipeline_excel_sql__spark.operators.ordering import categorical_order
 from etl_pipeline_excel_sql__spark.operators.reconcile import (
+    EmptyIntersectionError,
     apply_reconciliation,
     reconcile_schema,
 )
@@ -128,8 +129,15 @@ def upload_pipeline(
     first_data_row: int = 6,
     order_tiebreak: list[str] | None = None,
 ) -> PipelineResult:
-    """§3.2 Upload: filter (F1/F2) → guard (F4) → reconcile (S3/T3/P3) →
-    block order (O1) → header-matched write (K2) with rows tally (A1).
+    """§3.2 Upload: filter (F1/F2) → reconcile (S3/T3/P3) → block order
+    (O1) → header-matched write (K2) with rows tally (A1) → guard (F4).
+
+    The F4 empty guard runs no job of its own: the write's one collect
+    tells it, and 0 rows written (which writes no cell) raises
+    :class:`EmptySourceError`. Only when reconciliation fails does a
+    separate ``isEmpty`` job run, so that an empty extract still reports
+    as :class:`EmptySourceError` rather than
+    :class:`~...operators.reconcile.EmptyIntersectionError`.
 
     ``ministry='ALL'`` writes every listed ministry in declaration order;
     the reference re-filtered the frame once per ministry (N scans,
@@ -139,10 +147,14 @@ def upload_pipeline(
         df = source.filter(F.col("Ministry").isin(ministry_list))
     else:
         df = source.filter(F.col("Ministry") == F.lit(ministry))
-    if df.isEmpty():
-        raise EmptySourceError(f"no rows for ministry selection {ministry!r}")
-
-    rec = reconcile_schema(df.columns, template_header_cells, manual_overrides)
+    no_rows = f"no rows for ministry selection {ministry!r}"
+    try:
+        rec = reconcile_schema(df.columns, template_header_cells, manual_overrides)
+    except EmptyIntersectionError:
+        # F4 outranks the header check: an empty extract reports as such.
+        if df.isEmpty():
+            raise EmptySourceError(no_rows) from None
+        raise
     if ministry == "ALL":
         # Order BEFORE the reconciliation projection: the template may
         # legitimately lack a 'Ministry' header, in which case
@@ -171,6 +183,9 @@ def upload_pipeline(
     grid = grid if grid is not None else CellGrid()
     mapping = {c: rec.mapping[c] for c in df.columns}
     n = write_header_matched(df, grid, mapping, first_data_row=first_data_row)
+    if n == 0:
+        # F4 read off the sink's own collect: 0 rows wrote no cell.
+        raise EmptySourceError(no_rows)
     return PipelineResult(grid=grid, rows_written=n)
 
 
@@ -224,17 +239,14 @@ def compare_pipeline(
             "ambiguous column resolution — multiple wanted names map to "
             f"the same old-snapshot column: {collided}"
         )
-    renames = {v: k for k, v in resolution.items() if v != k}
-    q1_aligned = q1.select(
-        *[F.col(c).alias(renames.get(c, c)) for c in q1.columns]
-    )
     diff = snapshot_diff(
-        q1_aligned,
+        q1,
         q2,
         key=key,
         compare_cols=compare_cols,
         word_diff_cols=word_diff_cols,
         old_order_col=old_order_col,
+        old_names=resolution,
     )
     grid = grid if grid is not None else CellGrid()
     n = write_highlighted_diff(

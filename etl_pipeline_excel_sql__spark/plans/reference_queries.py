@@ -171,9 +171,7 @@ def q_diff_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_word_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 positional word diff, exploded per token (Compare.py:87-110)."""
     docs = load_table(spark, "documents", sf_dir)
-    old = F.col("text")
-    new = F.concat(F.replace(F.col("text"), F.lit("table"), F.lit("tbl")), F.lit(" zz"))
-    wd = word_diff(old, new)
+    wd = word_diff("text", "concat(replace(text, 'table', 'tbl'), ' zz')")
     return docs.select("doc_id", F.posexplode(wd).alias("idx", "w")).select(
         "doc_id", "idx", F.col("w.word").alias("word"), F.col("w.same").alias("same")
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 import re
 import zipfile
 from xml.etree import ElementTree as ET
+from xml.parsers import expat
 from xml.sax.saxutils import escape
 
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import CellGrid
@@ -212,11 +213,18 @@ def grid_to_xlsx(grid: CellGrid, path: str, sheet_name: str = "Sheet1") -> None:
 
 _CELL_REF_RE = re.compile(r"^([A-Z]+)([0-9]+)$")
 
+#: Namespaced names as expat reports them (``namespace_separator=" "``).
+_C, _R, _T, _V, _COLOR = (f"{_NS} {t}" for t in ("c", "r", "t", "v", "color"))
+
 
 def xlsx_to_grid(path: str) -> CellGrid:
     """Read a grid back from an .xlsx written by :func:`grid_to_xlsx`
     (inline strings/numbers, solid fills, rich runs, VBA modules from
-    ``xl/vbaProject.bin``)."""
+    ``xl/vbaProject.bin``).
+
+    The sheet is read in one streaming expat pass (:class:`_SheetReader`);
+    no element tree is built for it.
+    """
     ns = {"m": _NS}
     grid = CellGrid()
     with zipfile.ZipFile(path) as z:
@@ -230,42 +238,85 @@ def xlsx_to_grid(path: str) -> CellGrid:
             fid = int(xf.get("fillId", "0"))
             xf_fill.append(fill_rgbs[fid] if fid < len(fill_rgbs) else None)
 
-        sheet = ET.fromstring(z.read("xl/worksheets/sheet1.xml"))
-        for cell in sheet.findall("m:sheetData/m:row/m:c", ns):
-            m = _CELL_REF_RE.match(cell.get("r", ""))
-            if not m:
-                continue
-            r, c = int(m.group(2)), _letter_col(m.group(1))
-            argb = xf_fill[int(cell.get("s", "0"))]
-            if argb:
-                grid.fill(r, c, argb)
-            if cell.get("t") == "inlineStr":
-                is_el = cell.find("m:is", ns)
-                runs = is_el.findall("m:r", ns)
-                if runs:
-                    out_runs: list[tuple[str, str | None]] = []
-                    for run in runs:
-                        color = run.find("m:rPr/m:color", ns)
-                        t = run.find("m:t", ns)
-                        out_runs.append(
-                            (
-                                t.text or "",
-                                color.get("rgb") if color is not None else None,
-                            )
-                        )
-                    grid.set_rich(r, c, out_runs)
-                else:
-                    t = is_el.find("m:t", ns)
-                    grid.set(r, c, t.text or "" if t is not None else "")
-            elif cell.get("t") == "b":
-                grid.set(r, c, cell.findtext("m:v", None, ns) == "1")
-            else:
-                v = cell.findtext("m:v", None, ns)
-                if v is not None:
-                    f = float(v)
-                    grid.set(r, c, int(f) if f.is_integer() and "." not in v and "e" not in v.lower() else f)
+        reader = _SheetReader(grid, xf_fill)
+        parser = expat.ParserCreate(namespace_separator=" ")
+        parser.buffer_text = True
+        parser.StartElementHandler = reader.start
+        parser.EndElementHandler = reader.end
+        parser.CharacterDataHandler = reader.chars
+        parser.Parse(z.read("xl/worksheets/sheet1.xml"), True)
         if "xl/vbaProject.bin" in z.namelist():
             grid.vba_modules.update(
                 read_vba_project_bin(z.read("xl/vbaProject.bin"))
             )
     return grid
+
+
+class _SheetReader:
+    """expat callbacks that fill a :class:`CellGrid` from ``sheet1.xml``.
+
+    A ``<c>`` start places the cell and its fill; the text of its ``<v>``
+    or ``<t>`` (inline string), or its ``<r>`` runs (rich text), is
+    gathered until the ``<c>`` end writes the value.
+    """
+
+    def __init__(self, grid: CellGrid, xf_fill: list[str | None]) -> None:
+        self.grid, self.xf_fill = grid, xf_fill
+        #: (row, col, t attribute) of the open cell; None outside a cell
+        self.cell: tuple[int, int, str | None] | None = None
+        #: text of the open ``<t>``/``<v>``; None outside one
+        self.text: str | None = None
+        #: the open cell's ``<v>`` or plain ``<t>`` text
+        self.value: str | None = None
+        self.runs: list[tuple[str, str | None]] = []
+        #: [text, colour] of the open ``<r>``; None outside a run
+        self.run: list | None = None
+
+    def start(self, name: str, attrs: dict[str, str]) -> None:
+        if name == _C:
+            m = _CELL_REF_RE.match(attrs.get("r", ""))
+            if m is None:
+                self.cell = None
+                return
+            r, c = int(m.group(2)), _letter_col(m.group(1))
+            argb = self.xf_fill[int(attrs.get("s", "0"))]
+            if argb:
+                self.grid.fill(r, c, argb)
+            self.cell = (r, c, attrs.get("t"))
+            self.value = None
+            self.runs = []
+        elif name == _T or name == _V:
+            self.text = ""
+        elif name == _R:
+            self.run = ["", None]
+        elif name == _COLOR and self.run is not None:
+            self.run[1] = attrs.get("rgb")
+
+    def chars(self, data: str) -> None:
+        if self.text is not None:
+            self.text += data
+
+    def end(self, name: str) -> None:
+        if name == _T or name == _V:
+            if self.run is not None:
+                self.run[0] = self.text
+            else:
+                self.value = self.text
+            self.text = None
+        elif name == _R:
+            self.runs.append(tuple(self.run))
+            self.run = None
+        elif name == _C and self.cell is not None:
+            r, c, kind = self.cell
+            v = self.value
+            if kind == "inlineStr":
+                if self.runs:
+                    self.grid.set_rich(r, c, self.runs)
+                else:
+                    self.grid.set(r, c, v or "")
+            elif kind == "b":
+                self.grid.set(r, c, v == "1")
+            elif v is not None:
+                f = float(v)
+                self.grid.set(r, c, int(f) if f.is_integer() and "." not in v and "e" not in v.lower() else f)
+            self.cell = None

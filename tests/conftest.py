@@ -44,10 +44,12 @@ def registry_plans(spark, sf_dir) -> dict[str, BuiltQuery]:
 
     Each record is taken right after its build: a later build retires the
     shared slots that this frame's cache substitution reads. The
-    no-auto-broadcast plan is re-planned from the held logical plan, not
+    no-auto-broadcast plan is re-planned from the held analyzed plan, not
     by calling the query again — a held frame's cached ``executedPlan``
     ignores a conf change, while the re-plan drops the engine's automatic
-    broadcasts and keeps ``F.broadcast`` hints.
+    broadcasts and keeps ``F.broadcast`` hints. The analyzed plan, not the
+    parsed one: a frame built by ``spark.sql`` with DataFrame arguments
+    parses to names of temp views that are dropped once the call returns.
     """
     from etl_pipeline_excel_sql__spark.plans import QUERIES
 
@@ -61,7 +63,7 @@ def registry_plans(spark, sf_dir) -> dict[str, BuiltQuery]:
         optimized, executed = qe.optimizedPlan(), qe.executedPlan()
         spark.conf.set(threshold, "-1")
         try:
-            replanned = of_rows(spark._jsparkSession, qe.logical())
+            replanned = of_rows(spark._jsparkSession, qe.analyzed())
             no_auto = replanned.queryExecution().executedPlan()
         finally:
             spark.conf.set(threshold, default)

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.operators.diff import (
     dedup_last_wins,
@@ -54,7 +53,7 @@ def test_word_diff_reference_example(spark):
     df = spark.createDataFrame(
         [("on track for spring", "delayed until fall spring extra")], "old string, new string"
     )
-    out = df.select(word_diff(F.col("old"), F.col("new")).alias("wd")).collect()[0].wd
+    out = df.select(word_diff("old", "new").alias("wd")).collect()[0].wd
     words = [w.word for w in out]
     same = [w.same for w in out]
     assert words == ["delayed", "until", "fall", "spring", "extra"]
@@ -64,12 +63,13 @@ def test_word_diff_reference_example(spark):
 def test_word_diff_old_longer_truncates(spark):
     # reference iterates only new tokens: old overhang is ignored
     df = spark.createDataFrame([("a b c d", "a x")], "old string, new string")
-    out = df.select(word_diff(F.col("old"), F.col("new")).alias("wd")).collect()[0].wd
+    out = df.select(word_diff("old", "new").alias("wd")).collect()[0].wd
     assert [(w.word, w.same) for w in out] == [("a", True), ("x", False)]
 
 
 def _naive_diff(old_rows, new_rows_):
-    """Reference-faithful Python model of D1/D2/J3 (last-wins by ord)."""
+    """Reference-faithful Python model of D1/D2/D3/J3 (last-wins by ord):
+    key -> (row_status, status, old, new, words)."""
     lookup = {}
     for k, v, o in sorted(old_rows, key=lambda r: r[2]):
         k = (k or "").strip()
@@ -82,16 +82,25 @@ def _naive_diff(old_rows, new_rows_):
             continue
         v = (v or "").strip()
         if k not in lookup:
-            out[k] = ("new", None)
+            out[k] = ("new", None, None, v, None)
+            continue
+        o = lookup[k]
+        if o != "" and v == "":
+            s = "cleared"
+        elif v != o:
+            s = "changed"
         else:
-            o = lookup[k]
-            if o != "" and v == "":
-                s = "cleared"
-            elif v != o:
-                s = "changed"
-            else:
-                s = "same"
-            out[k] = ("present", s)
+            s = "same"
+        words = None
+        if s == "changed" and v != "":
+            # Compare.py:95-108: iterate NEW tokens; a token is the same
+            # only when the old token at its index equals it.
+            old_toks = o.split()
+            words = [
+                (w, i < len(old_toks) and old_toks[i] == w)
+                for i, w in enumerate(v.split())
+            ]
+        out[k] = ("present", s, o, v, words)
     return out
 
 
@@ -100,7 +109,7 @@ def _naive_diff(old_rows, new_rows_):
     old=st.lists(
         st.tuples(
             st.sampled_from(["a", "b", "c", "d", ""]),
-            st.sampled_from(["", "x", "y", " y "]),
+            st.sampled_from(["", "x", "y", " y ", "x y", "a b c"]),
             st.integers(0, 10),
         ),
         max_size=8,
@@ -108,7 +117,7 @@ def _naive_diff(old_rows, new_rows_):
     new=st.lists(
         st.tuples(
             st.sampled_from(["a", "b", "c", "e", ""]),
-            st.sampled_from(["", "x", "z"]),
+            st.sampled_from(["", "x", "z", "x z", " x  y w "]),
             st.integers(0, 10),
         ),
         max_size=8,
@@ -127,9 +136,18 @@ def test_diff_matches_naive_model(spark, old, new):
     new_df = _df(spark, new) if new else _df(spark, [("a", "x", 0)])
     if not new:
         new = [("a", "x", 0)]
+    diff = snapshot_diff(
+        old_df, new_df, "k", ["v"], word_diff_cols=["v"], old_order_col="ord"
+    )
     got = {
-        r.k: (r.row_status, r.v__status)
-        for r in snapshot_diff(old_df, new_df, "k", ["v"], old_order_col="ord").collect()
+        r.k: (
+            r.row_status,
+            r.v__status,
+            r.v__old,
+            r.v__new,
+            None if r.v__words is None else [(w.word, w.same) for w in r.v__words],
+        )
+        for r in diff.collect()
     }
     assert got == _naive_diff(old, new)
 
@@ -157,6 +175,5 @@ def test_diff_with_empty_old_snapshot(spark):
 def test_word_diff_blank_new_single_empty_token(spark):
     # blank new text tokenizes to one empty token; diff still total
     df = spark.createDataFrame([("a b", " ")], "old string, new string")
-    from pyspark.sql import functions as F
-    out = df.select(word_diff(F.col("old"), F.col("new")).alias("wd")).collect()[0].wd
+    out = df.select(word_diff("old", "new").alias("wd")).collect()[0].wd
     assert [(w.word, w.same) for w in out] == [("", False)]

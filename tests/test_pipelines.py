@@ -101,6 +101,17 @@ def test_upload_pipeline_empty_guard(tracker):
         )
 
 
+def test_upload_pipeline_empty_guard_outranks_header_mismatch(tracker):
+    # No rows AND no matching header: the empty extract is what reports.
+    with pytest.raises(EmptySourceError):
+        upload_pipeline(
+            tracker,
+            ministry="NOPE",
+            ministry_list=["MOH"],
+            template_header_cells=["no such header"],
+        )
+
+
 def test_resolve_columns():
     assert resolve_columns(
         ["OB Main ID", "Status Notes", "Gone"],
@@ -108,7 +119,11 @@ def test_resolve_columns():
     ) == {"OB Main ID": "OB Main ID", "Status Notes": "STATUS_NOTES", "Gone": None}
 
 
-def test_compare_pipeline_end_to_end(spark):
+@pytest.fixture()
+def snapshots(spark):
+    """Old/new Compare snapshots: a changed word-diff cell, a cleared cell,
+    a duplicate old key (last wins by ``ord``), a blank key and a new row;
+    the old side spells the compared header differently."""
     q1 = spark.createDataFrame(
         [
             ("P1", "on track for spring", "a"),
@@ -128,6 +143,11 @@ def test_compare_pipeline_end_to_end(spark):
         ],
         "`OB Main ID` string, `Status Notes` string, other string",
     )
+    return q1, q2
+
+
+def test_compare_pipeline_end_to_end(snapshots):
+    q1, q2 = snapshots
     diff, res = compare_pipeline(
         q1,
         q2,
@@ -159,3 +179,95 @@ def test_compare_pipeline_rejects_ambiguous_resolution(spark):
     q2 = spark.createDataFrame([(1, "x", "y")], "a_b long, `a b` string, v string")
     with pytest.raises(KeyError, match="ambiguous"):
         compare_pipeline(q1, q2, key="a_b", compare_cols=["a b"])
+
+
+def test_compare_pipeline_any_header_text(spark):
+    """Headers with a dot, a backtick, a space or braces name one column
+    each, as the workbook reader keeps them verbatim; the old side's
+    ``X_Y`` is resolved to ``x y`` by normalized name."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    def frame(rows, names):
+        return spark.createDataFrame(
+            rows, StructType([StructField(n, StringType()) for n in names])
+        )
+
+    q1 = frame(
+        [("K1", "open", "v", "b"), ("K2", "a", "b", "b")],
+        ["Unit.Cost", "a`b", "X_Y", "{n}"],
+    )
+    q2 = frame(
+        [("K1", "closed now", "v", "b"), ("K2", "a", "", "b"), ("K3", "n", "n", "b")],
+        ["Unit.Cost", "a`b", "x y", "{n}"],
+    )
+    diff, res = compare_pipeline(
+        q1,
+        q2,
+        key="Unit.Cost",
+        compare_cols=["a`b", "x y", "{n}"],
+        word_diff_cols=["a`b"],
+    )
+    assert diff.columns[:5] == [
+        "Unit.Cost", "row_status", "a`b__status", "a`b__old", "a`b__new",
+    ]
+    g = res.grid
+    assert [g.get(1, c) for c in (1, 2, 3, 4)] == ["Unit.Cost", "a`b", "x y", "{n}"]
+    row = {g.get(r, 1): r for r in range(2, 5)}
+    assert set(row) == {"K1", "K2", "K3"}
+
+    def fills(key):
+        return [g.fills.get((row[key], c)) for c in (1, 2, 3, 4)]
+
+    assert fills("K1") == [None, FILL_CHANGED, None, None]
+    assert g.rich[(row["K1"], 2)] == [("closed ", "FFFF0000"), ("now", "FFFF0000")]
+    assert fills("K2") == [None, None, FILL_CLEARED, None]
+    assert fills("K3") == [FILL_CHANGED] * 4
+
+
+def test_pipeline_job_budgets(spark, tracker, snapshots):
+    """Spark jobs each pipeline runs on these fixtures, counted in a job
+    group of its own: one more eager action anywhere fails here.
+
+    Upload answers its F4 empty guard from the sink's collect, so it runs
+    one job; Compare's jobs are its old side's shuffle, the broadcast and
+    the sink's collect."""
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    q1, q2 = snapshots
+    counts = {
+        "download": jobs("budget-download", lambda: download_pipeline(
+            tracker,
+            filter_col="Ministry",
+            filter_value="MOH",
+            drop_cols=["Risks to Project Cost"],
+            date_cols=["RFP Issuance"],
+            percent_cols=["Design Readiness"],
+            run_date=dt.date(2026, 8, 13),
+        )),
+        "upload": jobs("budget-upload", lambda: upload_pipeline(
+            tracker,
+            ministry="ALL",
+            ministry_list=["MOH", "MAG"],
+            template_header_cells=["ob main id", "MINISTRY", "Status_Notes"],
+            order_tiebreak=["OB Main ID"],
+        )),
+        "compare": jobs("budget-compare", lambda: compare_pipeline(
+            q1,
+            q2,
+            key="OB Main ID",
+            compare_cols=["Status Notes"],
+            word_diff_cols=["Status Notes"],
+            old_order_col="ord",
+        )),
+    }
+    assert counts == {"download": 1, "upload": 1, "compare": 4}

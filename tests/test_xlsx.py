@@ -58,6 +58,33 @@ def test_grid_round_trip_values_fills_rich_vba(tmp_path):
     assert back.vba_modules == g.vba_modules
 
 
+def test_grid_round_trip_edge_values(tmp_path):
+    """Values whose text or type a reader could bend, each read back with
+    its type: True/False must not turn into 1/0, nor -3 into -3.0."""
+    g = CellGrid()
+    values = ["", "  padded  ", "<&>\"'", True, False, -3, 1e-07, 0.5, "x"]
+    for c, v in enumerate(values, start=1):
+        g.set(2, c, v)
+    g.fill(2, 6, FILL_CLEARED)                       # fill on a numeric cell
+    g.set_rich(3, 1, [("no colour", None)])         # run without rPr
+    g.set_rich(3, 2, [(" a ", "FFFF0000"), ("b", None)])
+    g.set(4, 27, "AA")                               # past Z
+    g.set(4, 53, 53)
+    g.fill(4, 53, FILL_CHANGED)
+
+    path = str(tmp_path / "edge.xlsx")
+    grid_to_xlsx(g, path)
+    back = xlsx_to_grid(path)
+
+    def typed(cells):
+        return {k: (type(v), v) for k, v in cells.items()}
+
+    assert typed(back.cells) == typed(g.cells)
+    assert back.fills == g.fills
+    assert back.rich == g.rich
+    assert back.vba_modules == {}
+
+
 def test_xlsx_is_a_real_zip_package(tmp_path):
     g = CellGrid()
     g.set(1, 1, "x <&> 'quoted'")   # XML escaping must round-trip
