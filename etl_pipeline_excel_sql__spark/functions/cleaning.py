@@ -28,7 +28,7 @@ def null_literal_to_null(col: Column | str) -> Column:
     return F.when(c == F.lit("NULL"), F.lit(None)).otherwise(c)
 
 
-def date_reformat(col: Column | str, fmt: str = "MM-dd-yyyy") -> Column:
+def date_reformat(col: Column | str) -> Column:
     """Parse-coerce-reformat a date-ish column to ``MM-dd-yyyy`` strings.
 
     Reference semantics (Download.py:130-136): ``pd.to_datetime(...,
@@ -38,7 +38,7 @@ def date_reformat(col: Column | str, fmt: str = "MM-dd-yyyy") -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     ts = F.try_to_timestamp(c.cast("string"))
-    return F.date_format(ts, fmt)
+    return F.date_format(ts, "MM-dd-yyyy")
 
 
 def percent_format(col: Column | str) -> Column:

@@ -43,7 +43,7 @@ def md5_hash60_seeded(col: Column | str, seed: int) -> Column:
     return md5_hash60(F.concat(F.lit(f"{seed}:"), c))
 
 
-def rolling_fingerprint(tokens: Column, modulus: int = 1 << 40) -> Column:
+def rolling_fingerprint(tokens: Column) -> Column:
     """Polynomial rolling hash of a token sequence (order-sensitive).
 
     ``acc = (acc * 31 + md5_60(token) % mod) % mod`` left fold. The modulus
@@ -51,6 +51,7 @@ def rolling_fingerprint(tokens: Column, modulus: int = 1 << 40) -> Column:
     :func:`md5_hash60` of the whole text, this fingerprint is stable under
     chunked/streaming computation (fold is associative-composable by segment).
     """
+    modulus = 1 << 40
     return F.aggregate(
         tokens,
         F.lit(0).cast("bigint"),

@@ -45,6 +45,13 @@ def normalize_colname(s: str | None) -> str:
     return s.strip("_")
 
 
+def quote(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier, whatever its text:
+    ``F.col(quote(name))`` resolves a header with dots, backticks or
+    spaces as the one column it names."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def safe_fname_token(s: str) -> str:
     """Filename sanitizer: ``\\/:*?"<>|`` → ``_`` (reference Upload.py:105-107)."""
     return re.sub(r'[\\/:*?"<>|]', "_", s)

@@ -52,10 +52,10 @@ def zorder_key(a: Column, b: Column, bits: int = ZORDER_BITS) -> Column:
     return out.cast("bigint")
 
 
-def zorder_key_sql(a: str, b: str, bits: int = ZORDER_BITS) -> str:
+def zorder_key_sql(a: str, b: str) -> str:
     """DuckDB twin — the identical shift/mask sum."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"(({a} >> {i}) & 1) * {1 << (2 * i)}")
         terms.append(f"(({b} >> {i}) & 1) * {1 << (2 * i + 1)}")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"

@@ -7,12 +7,12 @@ probe-side shuffle carries only rows that pass the filter — for a 5%-
 selective dimension that is a 20× smaller shuffle, bought for one broadcast
 of a few KB of bitmap words.
 
-Representation: an ``m_bits``-bit filter stored as ``m_bits/64`` bigint
+Representation: an ``M_BITS``-bit filter stored as ``M_BITS/64`` bigint
 words, built with a ``bit_or`` aggregate over per-key set-bit masks —
 fully partial-aggregatable (map-side combine on every executor, tiny
-merge). Membership is tested with ``k`` independent 60-bit md5 hash
+merge). Membership is tested with ``K`` independent 60-bit md5 hash
 families (same primitive as every other hash in the engine —
-``functions/hashing.md5_hash60_seeded``), probed via ``k`` broadcast
+``functions/hashing.md5_hash60_seeded``), probed via ``K`` broadcast
 joins against the word table: a row survives only if every probed word
 has its bit set. Absent word index ⇒ bit unset ⇒ row cannot match — the
 inner join drops it, which is exactly the Bloom contract (no false
@@ -31,36 +31,28 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60_seeded
 
-#: Default filter geometry: 2^16 bits = 1024 bigint words (~8 KB broadcast).
-DEFAULT_M_BITS = 1 << 16
-DEFAULT_K = 2
+#: Filter geometry: 2^16 bits = 1024 bigint words (~8 KB broadcast).
+M_BITS = 1 << 16
+K = 2
 
 
-def _bit_pos(key: Column, seed: int, m_bits: int) -> Column:
+def _bit_pos(key: Column, seed: int) -> Column:
     """Bit position of hash family ``seed`` for ``key`` (non-negative)."""
-    return md5_hash60_seeded(key, seed) % F.lit(m_bits).cast("bigint")
+    return md5_hash60_seeded(key, seed) % F.lit(M_BITS).cast("bigint")
 
 
-def bloom_build(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Aggregate the key side into Bloom words ``(word_idx, word)``.
 
-    One narrow shuffle of at most ``m_bits/64`` rows; the per-partition
+    One narrow shuffle of at most ``M_BITS/64`` rows; the per-partition
     ``bit_or`` partials mean the full key set never moves.
     """
     key = F.col(key_col).cast("string")
-    # ONE scan of the key side: all k bit positions per key in a single
-    # explode (a per-seed select unioned k times would re-run the build
-    # subtree k times — no exchange reuse, since the hash exprs differ).
-    bits = keys.select(
-        F.explode(
-            F.array(*[_bit_pos(key, seed, m_bits) for seed in range(k)])
-        ).alias("pos")
-    )
+    # ONE scan of the key side: all K bit positions per key in a single
+    # explode (a per-seed select unioned K times would re-run the build
+    # subtree K times — no exchange reuse, since the hash exprs differ).
+    pos = [_bit_pos(key, seed) for seed in range(K)]
+    bits = keys.select(F.explode(F.array(*pos)).alias("pos"))
     return (
         bits.select(
             F.expr("pos DIV 64").alias("word_idx"),
@@ -76,21 +68,17 @@ def bloom_build(
 
 
 def bloom_prefilter(
-    probe: DataFrame,
-    probe_key: str,
-    bloom_words: DataFrame,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
+    probe: DataFrame, probe_key: str, bloom_words: DataFrame
 ) -> DataFrame:
     """Keep only probe rows whose key passes the Bloom filter.
 
-    ``k`` broadcast hash joins (each against the ≤``m_bits/64``-row word
+    ``K`` broadcast hash joins (each against the ≤``M_BITS/64``-row word
     table) and a bit test each — no shuffle of the probe side at all.
     """
     out = probe
     key = F.col(probe_key).cast("string")
-    for seed in range(k):
-        pos = _bit_pos(key, seed, m_bits)
+    for seed in range(K):
+        pos = _bit_pos(key, seed)
         words = F.broadcast(
             bloom_words.withColumnRenamed("word_idx", f"_wi{seed}")
             .withColumnRenamed("word", f"_w{seed}")

@@ -194,7 +194,6 @@ def bpe_train_merges(
     text_col: str,
     n_merges: int,
     checkpoint_dir: str | None = None,
-    batch_pairs: int = 1,
 ) -> DataFrame:
     """Train ``n_merges`` BPE merges over whitespace-tokenized ``docs``.
 
@@ -203,15 +202,11 @@ def bpe_train_merges(
     frequency that made the pair win its round. Stops early (fewer rows)
     if no adjacent pair remains. The result is a small local DataFrame
     (the trained artifact), deterministic for a given corpus.
-    ``batch_pairs`` (see :func:`bpe_train_merges_from_words`) trades
-    nothing: the merge table is identical, only the driver round-trip
-    count shrinks.
     """
     if n_merges < 1:
         raise ValueError("bpe_train_merges: n_merges must be >= 1")
     return bpe_train_merges_from_words(
-        word_frequencies(docs, text_col), n_merges, checkpoint_dir,
-        batch_pairs=batch_pairs,
+        word_frequencies(docs, text_col), n_merges, checkpoint_dir
     )
 
 
@@ -488,7 +483,6 @@ def bpe_doc_token_ids(
     text_col: str,
     merges: list[tuple[str, str]],
     words: DataFrame | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The tokenizer last mile: every document as a training-ready
     token-id array — ``(doc_id, n_subwords, token_ids)``.
@@ -528,7 +522,7 @@ def bpe_doc_token_ids(
         )
     )
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "w"),
     )
     per_doc = (
@@ -544,7 +538,7 @@ def bpe_doc_token_ids(
         )
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
             "doc_id",
@@ -606,7 +600,7 @@ alpha AS MATERIALIZED (
 
 
 def bpe_token_ids_unrolled_sql(
-    docs_cte: str, text_col: str, n_merges: int, prefix_ctes: str = ""
+    docs_cte: str, text_col: str, n_merges: int
 ) -> str:
     """DuckDB oracle twin of train-then-:func:`bpe_doc_token_ids`: the
     unrolled merge chain (``w{n}`` carries the word string), the
@@ -615,7 +609,7 @@ def bpe_token_ids_unrolled_sql(
     per-document ordered flatten. ``token_ids`` is rendered to a
     space-delimited string (:func:`render_packed_for_harness` twin)."""
     return (
-        _token_ids_ctes(docs_cte, text_col, n_merges, prefix_ctes)
+        _token_ids_ctes(docs_cte, text_col, n_merges)
         + f"""
 SELECT d.doc_id,
        CAST(COALESCE(len(p.tids), 0) AS INT) AS n_subwords,

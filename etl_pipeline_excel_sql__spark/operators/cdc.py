@@ -48,12 +48,7 @@ CDC_WINDOW = 2
 CDC_DIVISOR = 8
 
 
-def cdc_chunk_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    divisor: int = CDC_DIVISOR,
-) -> DataFrame:
+def cdc_chunk_rows(docs: DataFrame, divisor: int = CDC_DIVISOR) -> DataFrame:
     """One row per content-defined chunk: ``(doc_id, chunk_no, pos0,
     n_toks, digest)`` with ``pos0`` the 0-based token index of the
     chunk start and ``digest`` the md5 of the space-joined chunk.
@@ -69,8 +64,7 @@ def cdc_chunk_rows(
     if divisor < 1:
         raise ValueError("cdc_chunk_rows: divisor must be >= 1")
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "__t"),
+        "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "__t")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     gram = F.concat_ws(" ", F.lag("__t", 1).over(w), F.col("__t"))
@@ -114,7 +108,7 @@ def cdc_mark_duplicates(chunks: DataFrame) -> DataFrame:
     the digest is size-gated by the engine (corpus-derived build side —
     forced broadcast here is the banned census pattern).
     """
-    packed = packed_doc_pos("doc_id", "pos0")
+    packed = packed_doc_pos("pos0")
     dd = chunks.groupBy("digest").agg(
         F.count(F.lit(1)).alias("__cnt"),
         F.min(packed).alias("__keepk"),
@@ -134,21 +128,14 @@ def cdc_mark_duplicates(chunks: DataFrame) -> DataFrame:
     )
 
 
-def cdc_doc_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    divisor: int = CDC_DIVISOR,
-) -> DataFrame:
+def cdc_doc_stats(docs: DataFrame) -> DataFrame:
     """Per-document chunk-dedup profile: ``(doc_id, n_chunks, n_tokens,
     cut_chunks, cut_tokens, cut_ppm)`` — what fraction of each document
     a chunk store would NOT re-store (exact parts-per-million, integer
     DIV so the value hashes cross-engine). Documents with zero tokens
     have no chunks and are absent, like ``kgram_rows``' short-doc rule.
     """
-    marked = cdc_mark_duplicates(
-        cdc_chunk_rows(docs, text_col, id_col, divisor)
-    )
+    marked = cdc_mark_duplicates(cdc_chunk_rows(docs))
     cut_toks = F.sum(
         F.when(F.col("cut"), F.col("n_toks")).otherwise(F.lit(0))
     )
@@ -172,11 +159,7 @@ def cdc_doc_stats(
 
 
 def cdc_incremental_stats(
-    batch: DataFrame,
-    store_digests: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    divisor: int = CDC_DIVISOR,
+    batch: DataFrame, store_digests: DataFrame
 ) -> DataFrame:
     """Production ingest shape (the chunk-level analogue of
     ``dedup_incremental`` / ``dedup_spans_incremental``): per incoming
@@ -189,7 +172,7 @@ def cdc_incremental_stats(
     pattern); only cross-set membership is tested, never within-batch
     pairs.
     """
-    chunks = cdc_chunk_rows(batch, text_col, id_col, divisor)
+    chunks = cdc_chunk_rows(batch)
     store = store_digests.select("digest").distinct().withColumn(
         "__in", F.lit(1)
     )
@@ -222,20 +205,13 @@ def cdc_incremental_stats(
     )
 
 
-def cdc_corpus_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    divisor: int = CDC_DIVISOR,
-) -> DataFrame:
+def cdc_corpus_stats(docs: DataFrame) -> DataFrame:
     """One-row corpus storage profile: total/unique chunks, tokens a
     content-addressed store actually keeps, the savings in exact ppm,
     and mean chunk length ×100 (how close the boundary rule's expected
-    ``divisor``-token chunks land in practice).
+    ``CDC_DIVISOR``-token chunks land in practice).
     """
-    marked = cdc_mark_duplicates(
-        cdc_chunk_rows(docs, text_col, id_col, divisor)
-    )
+    marked = cdc_mark_duplicates(cdc_chunk_rows(docs))
     return marked.agg(
         F.count(F.lit(1)).alias("total_chunks"),
         F.countDistinct("digest").alias("unique_chunks"),

@@ -28,7 +28,7 @@ unconverged, CONTRACTS the graph by the partial labels (nodes sharing a
 label are provably in one component, so the contracted graph has one
 node per label and is diameter/propagate_rounds times smaller) and
 finishes with the star alternation on the contraction. The round-4
-``RuntimeError`` cliff on diameter > max_iters graphs is gone.
+``RuntimeError`` cliff on graphs of diameter > ``STAR_MAX_ROUNDS`` is gone.
 """
 
 from __future__ import annotations
@@ -37,6 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.operators.iterative import LineageTruncator
+
+#: round budget of the star alternation (theory bound O(log² n)).
+STAR_MAX_ROUNDS = 25
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -78,11 +81,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     return children.union(selfs).distinct()
 
 
-def _star_labels(
-    edges: DataFrame,
-    trunc: LineageTruncator,
-    max_iters: int,
-) -> DataFrame:
+def _star_labels(edges: DataFrame, trunc: LineageTruncator) -> DataFrame:
     """Run the large/small-star alternation to a star-set; return
     (node, lbl) for every node in ``edges`` (canonical a < b, distinct,
     no self-loops). lbl = component minimum id.
@@ -111,7 +110,7 @@ def _star_labels(
     n_e = e.count()
     if n_e == 0:
         return e.select(F.col("a").alias("node"), F.col("b").alias("lbl"))
-    for _ in range(max_iters):
+    for _ in range(STAR_MAX_ROUNDS):
         # The convergence probe runs INSIDE the truncating action, while
         # the previous cut's blocks are still alive (the truncator
         # retires them only after the new cut materializes).
@@ -130,7 +129,7 @@ def _star_labels(
         n_e = n2
     else:
         raise RuntimeError(
-            f"star alternation: no fixpoint in {max_iters} rounds "
+            f"star alternation: no fixpoint in {STAR_MAX_ROUNDS} rounds "
             "(theory bound is O(log^2 n) — this indicates a bug)"
         )
     # Defensive star-set verification: roots (a side) must never appear
@@ -192,9 +191,6 @@ def _propagate_labels(
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 25,
     checkpoint_dir: str | None = None,
     algorithm: str = "auto",
     propagate_rounds: int = 8,
@@ -202,11 +198,11 @@ def connected_components(
     """Resolve an undirected pair graph into components.
 
     Returns ``(member_id, cluster_id, cluster_size)`` for every node that
-    appears in ``pairs``; ``cluster_id`` is the minimum node id in the
-    component (deterministic, no RNG), ``cluster_size`` the component's
-    node count. Nodes with no edges (singletons) are by definition absent
-    — callers wanting them keep a left-anti of the corpus against this
-    result.
+    appears in the ``(id_a, id_b)`` ``pairs``; ``cluster_id`` is the
+    minimum node id in the component (deterministic, no RNG),
+    ``cluster_size`` the component's node count. Nodes with no edges
+    (singletons) are by definition absent — callers wanting them keep a
+    left-anti of the corpus against this result.
 
     ``algorithm``:
 
@@ -242,10 +238,12 @@ def connected_components(
     # the job. Measured at sf0.1 on the SRP cosine pairs: 13.7 s → 3.9 s
     # for the full components run. The truncator retires these blocks at
     # its next cut (auto path) or end of job (star path).
-    pairs_m = edge_trunc.truncate(pairs.select(id_a, id_b))
+    pairs_m = edge_trunc.truncate(pairs.select("id_a", "id_b"))
     sym = pairs_m.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).union(pairs_m.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+        F.col("id_a").alias("u"), F.col("id_b").alias("v")
+    ).union(
+        pairs_m.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
+    )
 
     if algorithm == "star":
         # `canon` (which _star_labels truncates via loop_trunc) and
@@ -260,7 +258,7 @@ def connected_components(
             .distinct()
         )
         nodes = sym.select("u").distinct()
-        star = _star_labels(canon, loop_trunc, max_iters)
+        star = _star_labels(canon, loop_trunc)
         labels = star.union(
             nodes.join(
                 star.select(F.col("node").alias("u")), "u", "left_anti"
@@ -296,7 +294,7 @@ def connected_components(
             .distinct()
         )
         star_trunc = LineageTruncator(spark, checkpoint_dir)
-        roots = _star_labels(contracted, star_trunc, max_iters).select(
+        roots = _star_labels(contracted, star_trunc).select(
             F.col("node").alias("lbl"), F.col("lbl").alias("root")
         )
         # Labels absent from the contraction are already component minima.
@@ -322,16 +320,14 @@ def cluster_safe_split_audit(
     docs: DataFrame,
     pairs: DataFrame,
     salt: str,
-    id_col: str = "doc_id",
-    train_pct: int = 80,
-    val_pct: int = 10,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Leakage-free train/val/test assignment + self-audit, one pair pass.
 
-    Assigns every document in ``docs`` to a split keyed by its near-dup
-    CLUSTER (``group_id = coalesce(component(min-id), own id)``) so no
-    near-duplicate pair can straddle splits, then PROVES it by joining
+    Assigns every ``doc_id`` in ``docs`` to an 80/10/10 train/val/test
+    split keyed by its near-dup CLUSTER (``group_id =
+    coalesce(component(min-id), own id)``) so no near-duplicate pair
+    ``(id_a, id_b)`` can straddle splits, then PROVES it by joining
     the same pair list against the assignment and counting straddlers.
 
     The pair frame feeds two consumers — :func:`connected_components`
@@ -349,11 +345,11 @@ def cluster_safe_split_audit(
     trunc = LineageTruncator(spark, checkpoint_dir)
     pairs_m = trunc.truncate(pairs.select("id_a", "id_b"))
     comp = connected_components(pairs_m).select(
-        F.col("member_id").alias(id_col), "cluster_id"
+        F.col("member_id").alias("doc_id"), "cluster_id"
     )
-    grouped = docs.select(id_col).join(comp, id_col, "left").select(
-        id_col,
-        F.coalesce(F.col("cluster_id"), F.col(id_col))
+    grouped = docs.select("doc_id").join(comp, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("cluster_id"), F.col("doc_id"))
         .cast("bigint")
         .alias("group_id"),
     )
@@ -372,23 +368,23 @@ def cluster_safe_split_audit(
         % 100
     )
     assigned = grouped.select(
-        id_col,
+        "doc_id",
         "group_id",
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < 80, "train")
+        .when(bucket < 90, "val")
         .otherwise("test")
         .alias("split"),
     )
     leaks = (
         pairs_m.join(
             assigned.select(
-                F.col(id_col).alias("id_a"), F.col("split").alias("split_a")
+                F.col("doc_id").alias("id_a"), F.col("split").alias("split_a")
             ),
             "id_a",
         )
         .join(
             assigned.select(
-                F.col(id_col).alias("id_b"), F.col("split").alias("split_b")
+                F.col("doc_id").alias("id_b"), F.col("split").alias("split_b")
             ),
             "id_b",
         )

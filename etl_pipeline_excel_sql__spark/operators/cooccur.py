@@ -21,21 +21,17 @@ from pyspark.sql import functions as F
 from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
 
 
-def skipgram_counts(
-    docs: DataFrame,
-    window: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def skipgram_counts(docs: DataFrame, window: int) -> DataFrame:
     """Forward skip-gram pair counts ``(center, context, dist, n_pairs)``
-    — one row per (ordered pair, distance ≤ window) actually observed.
+    of ``(doc_id, text)`` documents — one row per (ordered pair,
+    distance ≤ window) actually observed.
     Distance is emitted so a consumer can apply 1/d context weighting
     (word2vec's sampling-window equivalence) without recounting."""
     if window < 1:
         raise ValueError("skipgram_counts: window must be >= 1")
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "center"),
+        "doc_id",
+        F.posexplode(ws_tokens(F.col("text"))).alias("pos", "center"),
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [
@@ -59,18 +55,12 @@ def skipgram_counts(
     )
 
 
-def skipgram_top_pairs(
-    docs: DataFrame,
-    window: int,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def skipgram_top_pairs(docs: DataFrame, window: int, k: int) -> DataFrame:
     """The ``k`` most frequent forward pairs, distances summed —
     deterministic ties (n_pairs DESC, center ASC, context ASC). A
     TakeOrdered top-k over the pair table, never a full sort."""
     totals = (
-        skipgram_counts(docs, window, text_col, id_col)
+        skipgram_counts(docs, window)
         .groupBy("center", "context")
         .agg(F.sum("n_pairs").alias("n_pairs"))
     )

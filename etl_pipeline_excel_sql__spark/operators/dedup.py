@@ -425,12 +425,12 @@ def minhash_lsh_pairs_ingest_indexed(
 
 
 def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 32
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
-    """Per-document SimHash fingerprint (bigint).
+    """Per-document 32-bit SimHash fingerprint (bigint).
 
     Shape: explode tokens → one codegen'd md5 hash per token → ``groupBy``
-    with ``bits`` integer vote-sum aggregates (±1 per token per bit) →
+    with 32 integer vote-sum aggregates (±1 per token per bit) →
     fingerprint assembled from the vote signs. Integer sums are
     order-independent, so the result is deterministic and oracle-exact;
     everything runs in whole-stage codegen with map-side partial
@@ -451,11 +451,11 @@ def simhash_signatures(
                     F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1
                 ).cast("bigint")
             ).alias(f"v{j}")
-            for j in range(bits)
+            for j in range(32)
         ]
     )
     sig = F.lit(0).cast("bigint")
-    for j in range(bits):
+    for j in range(32):
         sig = sig + F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("bigint")).otherwise(
             F.lit(0).cast("bigint")
         )
@@ -469,11 +469,11 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     threshold: float = 0.1,
     bottom_k: int = 2,
 ) -> DataFrame:
-    """Blocked exact n-gram Jaccard: bottom-k sketch blocking + exact verify.
+    """Blocked exact word-3-gram Jaccard: bottom-k sketch blocking + exact
+    verify.
 
     Blocking key: each document's ``bottom_k`` smallest 60-bit shingle
     hashes (a bottom-k min-hash sketch). Unlike the earlier first-token +
@@ -497,9 +497,9 @@ def ngram_jaccard_pairs(
     # out and reading it back (contrast ngram_containment_pairs, whose
     # shingle-hash table feeds three heavier consumers and measured 3×
     # faster checkpointed). Re-measure before "optimizing" this.
-    sets = shingle_sets(df, text_col, id_col, shingle_n)
+    sets = shingle_sets(df, text_col, id_col, 3)
     hrows = (
-        shingle_rows(df, text_col, id_col, shingle_n)
+        shingle_rows(df, text_col, id_col, 3)
         .select("__id", md5_hash60(F.col("__sh")).alias("__h"))
         .distinct()
     )
@@ -684,12 +684,10 @@ def ngram_containment_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    shingle_n: int = 3,
     threshold: float = 0.5,
     bottom_k: int = 2,
-    max_df: int = 1000,
 ) -> DataFrame:
-    """Blocked exact n-gram CONTAINMENT: |A∩B| / min(|A|,|B|).
+    """Blocked exact word-3-gram CONTAINMENT: |A∩B| / min(|A|,|B|).
 
     Containment is the asymmetric near-dup metric Jaccard misses: a short
     document fully embedded in a much longer one scores
@@ -703,11 +701,11 @@ def ngram_containment_pairs(
     contained document is always a candidate — the bottom-k-vs-bottom-k
     blocking Jaccard uses would miss it (B's own smallest hashes come
     from B's extra content). Block size equals a shingle's document
-    frequency; ``max_df`` drops boilerplate shingles whose blocks would
-    otherwise grow with corpus size (a doc whose ONLY sketch hashes are
-    corpus-wide boilerplate is not a meaningful containment candidate —
-    callers tuning for a larger corpus can raise the cap; keep any
-    external oracle's constant in sync with it).
+    frequency; shingles in more than 1000 documents are dropped from the
+    index as boilerplate whose blocks would otherwise grow with corpus
+    size (a doc whose ONLY sketch hashes are corpus-wide boilerplate is
+    not a meaningful containment candidate; the oracle of
+    ``dedup_containment`` spells the same cap).
     Verification is exact over full shingle sets; integer set sizes
     divide as doubles (IEEE-identical on any engine).
     """
@@ -718,18 +716,16 @@ def ngram_containment_pairs(
     # three times (df-cap, inverted index, bottom-k keys) — without
     # materialization each consumer re-runs the shingle+md5 subtree over
     # the full corpus. Both tables are (id, hash)-shaped, never documents.
-    sets = shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(
-        eager=False
-    )
+    sets = shingle_sets(df, text_col, id_col, 3).localCheckpoint(eager=False)
     hrows = (
-        shingle_rows(df, text_col, id_col, shingle_n)
+        shingle_rows(df, text_col, id_col, 3)
         .select("__id", md5_hash60(F.col("__sh")).alias("__h"))
         .distinct()
         .localCheckpoint(eager=False)
     )
     dfreq = hrows.groupBy("__h").agg(F.count(F.lit(1)).alias("__df"))
     index = hrows.join(
-        dfreq.filter(F.col("__df") <= max_df).select("__h"), on="__h"
+        dfreq.filter(F.col("__df") <= 1000).select("__h"), on="__h"
     )
     w = Window.partitionBy("__id").orderBy("__h")
     keys = (

@@ -36,18 +36,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.cleaning import to_str
+from etl_pipeline_excel_sql__spark.functions.normalize import quote
 
 ROW_NEW = "new"
 ROW_PRESENT = "present"
 CELL_SAME = "same"
 CELL_CHANGED = "changed"
 CELL_CLEARED = "cleared"
-
-
-def quote(name: str) -> str:
-    """``name`` as one backtick-quoted SQL identifier, whatever its text."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def canon(expr: str) -> str:
@@ -209,9 +204,3 @@ def snapshot_diff(
           WHERE n.__k <> ''
         )"""
     return new.sparkSession.sql(statement, old=old, new=new)
-
-
-def new_rows(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
-    """D2/J2 as a standalone anti-join: new-snapshot rows with unseen keys."""
-    o = old.filter(to_str(F.col(key)) != "").select(to_str(F.col(key)).alias(key))
-    return new.filter(to_str(F.col(key)) != "").join(o, on=key, how="left_anti")

@@ -154,8 +154,6 @@ def pagerank_unrolled_sql(
     nodes_cte: str,
     n_nodes: int,
     iters: int = 8,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = PAGERANK_DAMPING_PCT,
 ) -> str:
     """DuckDB oracle twin: the same iteration unrolled as chained CTEs.
 
@@ -163,6 +161,7 @@ def pagerank_unrolled_sql(
     (node). Returns the WITH-clause body up to and including ``r{iters}``;
     the caller appends its own final SELECT over ``r{iters}``.
     """
+    scale, damping_pct = PAGERANK_SCALE, PAGERANK_DAMPING_PCT
     base = ((100 - damping_pct) * scale) // (100 * n_nodes)
     # Every chained CTE is AS MATERIALIZED: r{i} references r{i-1} twice
     # (dangling-mass sum + contribution join), so inlined CTEs re-evaluate
@@ -201,8 +200,6 @@ def pagerank_unrolled_sql(
 
 def triangle_participation(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     with_degrees: bool = False,
     truncator: LineageTruncator | None = None,
 ) -> DataFrame:
@@ -245,8 +242,8 @@ def triangle_participation(
     truncator = truncator or shared_slot(
         spark, "graph.triangles", lambda: LineageTruncator(spark)
     )
-    pairs = truncator.truncate(pairs.select(id_a, id_b))
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    pairs = truncator.truncate(pairs.select("id_a", "id_b"))
+    e = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     deg = (
         e.select(F.col("u").alias("n"))
         .union(e.select(F.col("v").alias("n")))
@@ -267,9 +264,7 @@ def triangle_participation(
     # against the CANONICAL edge list (triangle edge may run either way
     # in the orientation, but always exists as least/greatest in pairs)
     wedges = o1.join(o2, "apex").filter(F.col("x") < F.col("y"))
-    closing = pairs.select(
-        F.col(id_a).alias("x"), F.col(id_b).alias("y")
-    )
+    closing = pairs.select(F.col("id_a").alias("x"), F.col("id_b").alias("y"))
     tri = wedges.join(closing, ["x", "y"])
     nodes = (
         tri.select(F.col("apex").alias("node"))
@@ -297,8 +292,6 @@ def triangle_participation(
 def kcore_membership(
     pairs: DataFrame,
     k: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iters: int = 50,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -334,7 +327,7 @@ def kcore_membership(
     spark = pairs.sparkSession
     trunc = LineageTruncator(spark, checkpoint_dir)
     e = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
@@ -375,8 +368,6 @@ def kcore_membership(
 def label_propagation(
     pairs: DataFrame,
     rounds: int = 3,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan/Albert/Kumara,
@@ -411,7 +402,7 @@ def label_propagation(
     adj_trunc = LineageTruncator(spark, checkpoint_dir)
     trunc = LineageTruncator(spark, checkpoint_dir)
     e = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()

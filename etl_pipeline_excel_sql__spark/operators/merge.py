@@ -69,9 +69,6 @@ def scd2_upsert(
     key: str,
     tracked_cols: list[str],
     load_date: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    is_current: str = "is_current",
 ) -> DataFrame:
     """SCD-2 MERGE: changed rows are *versioned*, not overwritten.
 
@@ -90,8 +87,8 @@ def scd2_upsert(
     both count as changes. One full-outer shuffle on the key, same as
     SCD-1; history rows pass through without joining.
     """
-    cur = target.filter(F.col(is_current))
-    hist = target.filter(~F.col(is_current))
+    cur = target.filter(F.col("is_current"))
+    hist = target.filter(~F.col("is_current"))
     s = source.select(
         F.col(key).alias("__s_key"),
         *[F.col(c).alias(f"__s_{c}") for c in tracked_cols],
@@ -104,7 +101,7 @@ def scd2_upsert(
     changed = (
         F.col("__in_s").isNotNull() & F.col(key).isNotNull() & ~same
     )
-    out_cols = [key, *tracked_cols, valid_from, valid_to, is_current]
+    out_cols = [key, *tracked_cols, "valid_from", "valid_to", "is_current"]
 
     unchanged = j.filter(
         F.col("__s_key").isNull() | (F.col(key).isNotNull() & same)
@@ -112,16 +109,16 @@ def scd2_upsert(
     closed = j.filter(changed).select(
         key,
         *tracked_cols,
-        F.col(valid_from),
-        F.lit(load_date).alias(valid_to),
-        F.lit(False).alias(is_current),
+        F.col("valid_from"),
+        F.lit(load_date).alias("valid_to"),
+        F.lit(False).alias("is_current"),
     )
     opened = j.filter(changed | F.col(key).isNull()).select(
         F.col("__s_key").alias(key),
         *[F.col(f"__s_{c}").alias(c) for c in tracked_cols],
-        F.lit(load_date).alias(valid_from),
-        F.lit(None).cast("string").alias(valid_to),
-        F.lit(True).alias(is_current),
+        F.lit(load_date).alias("valid_from"),
+        F.lit(None).cast("string").alias("valid_to"),
+        F.lit(True).alias("is_current"),
     )
     return hist.select(*out_cols).unionByName(unchanged).unionByName(
         closed

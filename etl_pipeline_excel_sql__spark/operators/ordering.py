@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.functions.normalize import quote
+
 
 def categorical_order(
     df: DataFrame,
@@ -27,9 +29,10 @@ def categorical_order(
     position, so the ``_ord > 0`` filter drops both.
     """
     cats = F.array(*[F.lit(c) for c in categories])
-    pos = F.array_position(cats, F.col(col)).cast("int")
+    pos = F.array_position(cats, F.col(quote(col))).cast("int")
     out = df.withColumn("_ord", pos).filter(F.col("_ord") > 0)
-    return out.orderBy("_ord", *(tiebreak_cols or []))
+    ties = [F.col(quote(c)) for c in tiebreak_cols or []]
+    return out.orderBy("_ord", *ties)
 
 
 def global_row_numbers(

@@ -54,11 +54,10 @@ def feature_buckets(
     docs: DataFrame,
     label: Column,
     n_buckets: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Binary hashing-trick features: one row per DISTINCT (doc, bucket)
-    with the doc's ±1 ``y`` — ``(doc_id, bucket, y)``.
+    """Binary hashing-trick features of ``(doc_id, text)`` documents: one
+    row per DISTINCT (doc, bucket) with the doc's ±1 ``y`` — ``(doc_id,
+    bucket, y)``.
 
     ``label`` is a ±1 integer Column over the docs frame (the
     deterministic supervision source). Distinctness makes features
@@ -67,9 +66,9 @@ def feature_buckets(
     """
     return (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             label.cast("int").alias("y"),
-            F.explode(ws_tokens(F.col(text_col))).alias("__term"),
+            F.explode(ws_tokens(F.col("text"))).alias("__term"),
         )
         .select(
             "doc_id",
@@ -157,8 +156,6 @@ def perceptron_scores(
     label: Column,
     n_buckets: int,
     rounds: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Train, then score every document with the trained weights:
     ``(doc_id, y, margin, pred)`` — ``pred`` is ±1 (margin 0 → -1, the
@@ -170,9 +167,7 @@ def perceptron_scores(
     feats = shared_slot(
         docs.sparkSession, "perceptron.features", SignatureCache
     ).swap(
-        feature_buckets(
-            docs, label, n_buckets, text_col=text_col, id_col=id_col
-        ).repartition("doc_id")
+        feature_buckets(docs, label, n_buckets).repartition("doc_id")
     )
     w = perceptron_train(feats, n_buckets, rounds)
     return _margins(feats, docs.sparkSession, w).select(

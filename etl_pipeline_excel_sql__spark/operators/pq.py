@@ -63,18 +63,13 @@ def _argmin_struct(sub: int) -> F.Column:
 
 
 def _scored_rows(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    vec_col: str,
-    id_col: str,
-    subdim: int,
-    m: int,
+    corpus: DataFrame, codebooks: DataFrame, vec_col: str, subdim: int, m: int
 ) -> DataFrame:
     """One candidate row per (vector, subspace, code) with its unrolled
     squared-L2 distance — the map-side fan-out every assignment pass
     scores. Codebooks broadcast; no shuffle."""
     return (
-        _sub_rows(corpus, id_col, vec_col, m)
+        _sub_rows(corpus, vec_col, m)
         .join(F.broadcast(codebooks), "sub")
         .withColumn(
             "__d", F.expr(l2sq_sub_sql(vec_col, "centroid", "sub", subdim))
@@ -98,23 +93,18 @@ def l2sq_sub_sql(vec: str, cent: str, sub_col: str, subdim: int) -> str:
     return " + ".join(terms)
 
 
-def _sub_rows(corpus: DataFrame, id_col: str, vec_col: str, m: int) -> DataFrame:
+def _sub_rows(corpus: DataFrame, vec_col: str, m: int) -> DataFrame:
     """One row per (vector, subspace): the training/encoding fan-out.
     Narrow (explode of a literal sequence) — no shuffle."""
     return corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col(vec_col),
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
     )
 
 
 def _assign_codes(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    vec_col: str,
-    id_col: str,
-    subdim: int,
-    m: int,
+    corpus: DataFrame, codebooks: DataFrame, vec_col: str, subdim: int, m: int
 ) -> DataFrame:
     """Per (vector, subspace): the argmin-distance code, as
     ``(id, sub, code, vec)`` rows.
@@ -129,13 +119,13 @@ def _assign_codes(
     Identical values: struct-min ordering (d ASC, code ASC) is exactly
     the old ``min_by(code, struct(d, code))`` tie-break.
     """
-    scored = _scored_rows(corpus, codebooks, vec_col, id_col, subdim, m)
-    per_id = scored.groupBy(id_col).agg(
+    scored = _scored_rows(corpus, codebooks, vec_col, subdim, m)
+    per_id = scored.groupBy("vec_id").agg(
         *[_argmin_struct(s) for s in range(m)],
         F.first(vec_col).alias(vec_col),
     )
     return per_id.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.posexplode(
             F.array(*[F.col(f"__c{s}.code") for s in range(m)])
         ).alias("sub", "code"),
@@ -180,7 +170,6 @@ def pq_train_codebooks(
     m: int = 8,
     ncodes: int = 16,
     iters: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     dims: int = 64,
     truncator: LineageTruncator | None = None,
@@ -210,11 +199,11 @@ def pq_train_codebooks(
         spark, "pq.codebooks", lambda: LineageTruncator(spark)
     )
     seeds = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(ncodes)
         .select(
             F.col(vec_col),
-            (F.row_number().over(Window.orderBy(id_col)) - 1)
+            (F.row_number().over(Window.orderBy("vec_id")) - 1)
             .cast("int")
             .alias("code"),
         )
@@ -232,7 +221,7 @@ def pq_train_codebooks(
         ).alias("centroid"),
     )
     for _ in range(iters):
-        assigned = _assign_codes(corpus, cb, vec_col, id_col, subdim, m)
+        assigned = _assign_codes(corpus, cb, vec_col, subdim, m)
         cb = trunc.truncate(_codebook_means(assigned, vec_col, subdim))
     return cb
 
@@ -240,13 +229,12 @@ def pq_train_codebooks(
 def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 8,
     dims: int = 64,
 ) -> DataFrame:
     """Encode every vector as its ``m`` nearest-codebook codes →
-    (id, codes) with ``codes`` ordered by subspace. The 32×-compressed
+    (vec_id, codes) with ``codes`` ordered by subspace. The 32×-compressed
     search artifact; at scale this is what you persist and broadcast-
     search against, not the float vectors.
 
@@ -256,12 +244,12 @@ def pq_encode(
     (id, sub, code, vec) rows to a second ``collect_list`` shuffle just
     to re-assemble the array the first aggregate already knew."""
     subdim = dims // m
-    scored = _scored_rows(corpus, codebooks, vec_col, id_col, subdim, m)
-    per_id = scored.groupBy(id_col).agg(
+    scored = _scored_rows(corpus, codebooks, vec_col, subdim, m)
+    per_id = scored.groupBy("vec_id").agg(
         *[_argmin_struct(s) for s in range(m)]
     )
     return per_id.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.array(*[F.col(f"__c{s}.code") for s in range(m)]).alias("codes"),
     )
 
@@ -271,8 +259,6 @@ def pq_adc_topk(
     codebooks: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     dims: int = 64,
 ) -> DataFrame:
@@ -287,15 +273,15 @@ def pq_adc_topk(
     (ties → lowest neighbor id; self-matches excluded)."""
     subdim = dims // m
     dtable = (
-        _sub_rows(queries, id_col, vec_col, m)
-        .withColumnRenamed(id_col, "query_id")
+        _sub_rows(queries, "embedding", m)
+        .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebooks), "sub")
         .select(
             "query_id",
             "sub",
             "code",
             F.floor(
-                F.expr(l2sq_sub_sql(vec_col, "centroid", "sub", subdim))
+                F.expr(l2sq_sub_sql("embedding", "centroid", "sub", subdim))
                 * ADC_SCALE
             )
             .cast("bigint")
@@ -303,7 +289,7 @@ def pq_adc_topk(
         )
     )
     exploded = codes.select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         F.posexplode("codes").alias("sub", "code"),
     )
     ranked = (
@@ -429,10 +415,10 @@ def pq_adc_sql(
     iters: int,
     dims: int,
     k: int,
-    query_pred: str = "vec_id < 5",
 ) -> str:
     """Oracle twin of the full train → encode → :func:`pq_adc_topk`
-    pipeline (same micro-unit floor, same tie-breaks)."""
+    pipeline for the queries ``vec_id < 5`` (same micro-unit floor, same
+    tie-breaks)."""
     subdim = dims // m
     subs = f"(SELECT UNNEST(range(0, {m})) AS sub)"
     parts = pq_unrolled_ctes(m, ncodes, iters, dims)
@@ -441,7 +427,7 @@ def pq_adc_sql(
   SELECT q.vec_id AS query_id, s.sub, c.code,
          CAST(floor(({_pq_l2_duck('q.embedding', 'c.centroid', 's.sub', subdim)})
               * {ADC_SCALE}) AS BIGINT) AS d_micros
-  FROM (SELECT vec_id, embedding FROM embeddings WHERE {query_pred}) q,
+  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q,
        {subs} s
   JOIN cbf c ON c.sub = s.sub
 )"""
@@ -481,8 +467,6 @@ def _coarse_kmeans(
     corpus: DataFrame,
     ncells: int,
     iters: int,
-    id_col: str,
-    vec_col: str,
     dims: int,
     trunc: LineageTruncator,
 ) -> tuple[DataFrame, DataFrame]:
@@ -503,11 +487,11 @@ def _coarse_kmeans(
     and the next round's broadcast reads ncells materialized rows
     instead of a corpus-sized checkpoint."""
     seeds = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(ncells)
         .select(
-            F.col(vec_col),
-            (F.row_number().over(Window.orderBy(id_col)) - 1)
+            F.col("embedding"),
+            (F.row_number().over(Window.orderBy("vec_id")) - 1)
             .cast("int")
             .alias("cell"),
         )
@@ -515,20 +499,18 @@ def _coarse_kmeans(
     # seed centroids stay LAZY: round 1's cut evaluates them once.
     cb = seeds.select(
         "cell",
-        F.expr(
-            f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
-        ).alias("ccent"),
+        F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("ccent"),
     )
 
     def _assign_cells(cb: DataFrame) -> DataFrame:
         scored = corpus.crossJoin(F.broadcast(cb)).withColumn(
-            "__d", F.expr(l2sq_full_sql(vec_col, "ccent", dims))
+            "__d", F.expr(l2sq_full_sql("embedding", "ccent", dims))
         )
-        return scored.groupBy(id_col).agg(
+        return scored.groupBy("vec_id").agg(
             F.min_by(
                 F.col("cell"), F.struct(F.col("__d").alias("d"), F.col("cell"))
             ).alias("cell"),
-            F.first(vec_col).alias(vec_col),
+            F.first("embedding").alias("embedding"),
         )
 
     def _cell_means(assigned: DataFrame) -> DataFrame:
@@ -540,7 +522,7 @@ def _coarse_kmeans(
         per_dim = (
             assigned.select(
                 "cell",
-                F.posexplode(vec_col).alias("i0", "__raw"),
+                F.posexplode("embedding").alias("i0", "__raw"),
             )
             .withColumn("__v", F.col("__raw").cast("double"))
             .groupBy("cell", "i0")
@@ -579,8 +561,6 @@ def ivfpq_topk(
     ncodes: int = 16,
     iters: int = 2,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int = 64,
 ) -> DataFrame:
     """The full IVF-PQ composition: L2 coarse cells prune the corpus,
@@ -605,24 +585,21 @@ def ivfpq_topk(
         spark, "pq.ivfpq_coarse", lambda: LineageTruncator(spark)
     )
 
-    assigned, coarse_final = _coarse_kmeans(
-        corpus, ncells, iters, id_col, vec_col, dims, trunc
-    )
+    assigned, coarse_final = _coarse_kmeans(corpus, ncells, iters, dims, trunc)
 
     # --- fine quantizer: PQ codebooks + codes, cell kept alongside ---
     codebooks = pq_train_codebooks(
-        corpus, m=m, ncodes=ncodes, iters=iters,
-        id_col=id_col, vec_col=vec_col, dims=dims,
+        corpus, m=m, ncodes=ncodes, iters=iters, dims=dims
     )
-    codes = pq_encode(
-        corpus, codebooks, id_col=id_col, vec_col=vec_col, m=m, dims=dims
-    ).join(assigned.select(id_col, "cell"), id_col)
+    codes = pq_encode(corpus, codebooks, m=m, dims=dims).join(
+        assigned.select("vec_id", "cell"), "vec_id"
+    )
 
     # --- query: probe nprobe nearest cells, ADC within ---------------
     probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding"))
         .crossJoin(F.broadcast(coarse_final))
-        .withColumn("__d", F.expr(l2sq_full_sql(vec_col, "ccent", dims)))
+        .withColumn("__d", F.expr(l2sq_full_sql("embedding", "ccent", dims)))
         .withColumn(
             "__rn",
             F.row_number().over(
@@ -635,15 +612,15 @@ def ivfpq_topk(
         .select("query_id", "cell")
     )
     dtable = (
-        _sub_rows(queries, id_col, vec_col, m)
-        .withColumnRenamed(id_col, "query_id")
+        _sub_rows(queries, "embedding", m)
+        .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebooks), "sub")
         .select(
             "query_id",
             "sub",
             "code",
             F.floor(
-                F.expr(l2sq_sub_sql(vec_col, "centroid", "sub", subdim))
+                F.expr(l2sq_sub_sql("embedding", "centroid", "sub", subdim))
                 * ADC_SCALE
             )
             .cast("bigint")
@@ -652,7 +629,7 @@ def ivfpq_topk(
     )
     in_cells = codes.join(
         F.broadcast(probes), "cell"
-    ).select("query_id", F.col(id_col).alias("neighbor_id"), "codes")
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "codes")
     ranked = (
         in_cells.select(
             "query_id", "neighbor_id", F.posexplode("codes").alias("sub", "code")
@@ -738,7 +715,6 @@ def ivfpq_sql(
     iters: int,
     dims: int,
     k: int,
-    query_pred: str = "vec_id < 5",
 ) -> str:
     """DuckDB oracle twin of :func:`ivfpq_topk`: unrolled L2 coarse
     k-means + the PQ chain + probed-cell ADC, same tie-breaks and
@@ -755,7 +731,7 @@ def ivfpq_sql(
            row_number() OVER (PARTITION BY q.vec_id
              ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', dims)} ASC,
                       c.cell ASC) AS rn
-    FROM (SELECT vec_id, embedding FROM embeddings WHERE {query_pred}) q
+    FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
     CROSS JOIN ccf c
   ) WHERE rn <= {nprobe}
 )"""
@@ -765,7 +741,7 @@ def ivfpq_sql(
   SELECT q.vec_id AS query_id, s.sub, c.code,
          CAST(floor(({_pq_l2_duck('q.embedding', 'c.centroid', 's.sub', subdim)})
               * {ADC_SCALE}) AS BIGINT) AS d_micros
-  FROM (SELECT vec_id, embedding FROM embeddings WHERE {query_pred}) q,
+  FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q,
        {subs} s
   JOIN cbf c ON c.sub = s.sub
 )"""
@@ -797,8 +773,6 @@ def ivfpq_residual_topk(
     ncodes: int = 16,
     iters: int = 2,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int = 64,
 ) -> DataFrame:
     """Canonical IVFADC [Jégou et al., TPAMI 2011 §IV]: PQ codes quantize
@@ -822,9 +796,7 @@ def ivfpq_residual_topk(
         spark, "pq.ivfpq_coarse", lambda: LineageTruncator(spark)
     )
 
-    assigned, coarse_final = _coarse_kmeans(
-        corpus, ncells, iters, id_col, vec_col, dims, trunc
-    )
+    assigned, coarse_final = _coarse_kmeans(corpus, ncells, iters, dims, trunc)
 
     # --- residuals: v - ccent(cell(v)), materialized once ------------
     resid_trunc = shared_slot(
@@ -832,28 +804,27 @@ def ivfpq_residual_topk(
     )
     resid = resid_trunc.truncate(
         assigned.join(F.broadcast(coarse_final), "cell").select(
-            id_col,
+            "vec_id",
             "cell",
             F.expr(
-                f"zip_with({vec_col}, ccent, (x, y) -> CAST(x AS DOUBLE) - y)"
+                "zip_with(embedding, ccent, (x, y) -> CAST(x AS DOUBLE) - y)"
             ).alias("resid"),
         )
     )
 
     # --- fine quantizer on residuals ---------------------------------
     codebooks = pq_train_codebooks(
-        resid, m=m, ncodes=ncodes, iters=iters,
-        id_col=id_col, vec_col="resid", dims=dims,
+        resid, m=m, ncodes=ncodes, iters=iters, vec_col="resid", dims=dims
     )
-    codes = pq_encode(
-        resid, codebooks, id_col=id_col, vec_col="resid", m=m, dims=dims
-    ).join(resid.select(id_col, "cell"), id_col)
+    codes = pq_encode(resid, codebooks, vec_col="resid", m=m, dims=dims).join(
+        resid.select("vec_id", "cell"), "vec_id"
+    )
 
     # --- query: probe cells, cell-dependent residual lookup tables ---
     probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
+        queries.select(F.col("vec_id").alias("query_id"), F.col("embedding"))
         .crossJoin(F.broadcast(coarse_final))
-        .withColumn("__d", F.expr(l2sq_full_sql(vec_col, "ccent", dims)))
+        .withColumn("__d", F.expr(l2sq_full_sql("embedding", "ccent", dims)))
         .withColumn(
             "__rn",
             F.row_number().over(
@@ -867,7 +838,7 @@ def ivfpq_residual_topk(
             "query_id",
             "cell",
             F.expr(
-                f"zip_with({vec_col}, ccent, (x, y) -> CAST(x AS DOUBLE) - y)"
+                "zip_with(embedding, ccent, (x, y) -> CAST(x AS DOUBLE) - y)"
             ).alias("qresid"),
         )
     )
@@ -899,7 +870,7 @@ def ivfpq_residual_topk(
         .select(
             "query_id",
             "cell",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.posexplode("codes").alias("sub", "code"),
         )
         .join(F.broadcast(dtable), ["query_id", "cell", "sub", "code"])
@@ -932,7 +903,6 @@ def ivfpq_residual_sql(
     iters: int,
     dims: int,
     k: int,
-    query_pred: str = "vec_id < 5",
 ) -> str:
     """DuckDB oracle twin of :func:`ivfpq_residual_topk`: the coarse
     chain, the residual table, the PQ chain over residuals (via the
@@ -962,7 +932,7 @@ def ivfpq_residual_sql(
            row_number() OVER (PARTITION BY q.vec_id
              ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', dims)} ASC,
                       c.cell ASC) AS rn
-    FROM (SELECT vec_id, embedding FROM embeddings WHERE {query_pred}) q
+    FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
     CROSS JOIN ccf c
   ) WHERE rn <= {nprobe}
 )"""

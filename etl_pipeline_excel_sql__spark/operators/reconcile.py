@@ -20,7 +20,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.normalize import norm_header
+from etl_pipeline_excel_sql__spark.functions.normalize import (
+    norm_header,
+    quote,
+)
 
 MAX_HEADER_COLS = 500
 MAX_CONSECUTIVE_BLANKS = 10
@@ -108,4 +111,4 @@ def apply_reconciliation(df: DataFrame, result: ReconcileResult) -> DataFrame:
     Output column names are the *source* names; the writer uses
     ``result.mapping`` for physical placement.
     """
-    return df.select(*[F.col(c) for c in result.mapping])
+    return df.select(*[F.col(quote(c)) for c in result.mapping])

@@ -87,8 +87,8 @@ def _rational_coeffs(k1: float, b: float, scale: int) -> tuple[int, int, int, in
           = [(2(N-df)+1) · C1·T·tf] DIV [(2df+1) · (C2·T·tf + C3·T + C4·dl·N)]
 
     where ``C1 = (p+q)·s·scale``, ``C2 = q·s``, ``C3 = p·(s-r)``,
-    ``C4 = p·r``, reduced by their gcd. Defaults (k1=1.2, b=0.75,
-    scale=10⁶) give (22_000_000, 10, 3, 9)."""
+    ``C4 = p·r``, reduced by their gcd. The engine's ``BM25_K1``,
+    ``BM25_B`` and ``BM25_SCALE`` give (22_000_000, 10, 3, 9)."""
     fk1, fb = Fraction(str(k1)), Fraction(str(b))
     p, q = fk1.numerator, fk1.denominator
     r, s = fb.numerator, fb.denominator
@@ -119,15 +119,13 @@ class Bm25Index:
         self.total_toks = total_toks
 
 
-def bm25_build_index(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> Bm25Index:
-    """One tokenization pass → the four index statistics (module
-    doctrine: two hash aggregates over the exploded term table; the
-    scalars are exact longs so avgdl is ONE double division)."""
+def bm25_build_index(docs: DataFrame) -> Bm25Index:
+    """One tokenization pass over ``(doc_id, text)`` documents → the four
+    index statistics (module doctrine: two hash aggregates over the
+    exploded term table; the scalars are exact longs so avgdl is ONE
+    double division)."""
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ws_tokens(F.col(text_col))).alias("term"),
+        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -150,17 +148,12 @@ def bm25_matched_terms(idx: Bm25Index, query_terms: DataFrame) -> DataFrame:
     )
 
 
-def bm25_term_contribs(
-    idx: Bm25Index,
-    query_terms: DataFrame,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
+def bm25_term_contribs(idx: Bm25Index, query_terms: DataFrame) -> DataFrame:
     """Per-term integer micro-unit contributions PRE-aggregation:
     ``(query_id, doc_id, term, tf, df, dl, contrib_u)`` where
     ``contrib_u`` is the single cleared-denominator integer division of
     the module doctrine — the exact-arithmetic stage in isolation."""
-    c1, c2, c3, c4 = _rational_coeffs(k1, b, BM25_SCALE)
+    c1, c2, c3, c4 = _rational_coeffs(BM25_K1, BM25_B, BM25_SCALE)
     n_docs, total_toks = idx.n_docs, idx.total_toks
     _check_bm25_headroom(n_docs, total_toks, c1)
     dec = "decimal(38,0)"
@@ -211,10 +204,7 @@ def _check_bm25_headroom(n_docs: int, total_toks: int, c1: int) -> None:
 
 
 def bm25_scores_from_index(
-    idx: Bm25Index,
-    query_terms: DataFrame,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    idx: Bm25Index, query_terms: DataFrame
 ) -> DataFrame:
     """Score a bounded query batch against a (built or loaded) index —
     identical arithmetic to ``bm25_scores``, which is this function over
@@ -222,19 +212,14 @@ def bm25_scores_from_index(
     # float-free: one decimal(38,0) integer division per term (module
     # doctrine; constants from _rational_coeffs), factored through
     # bm25_term_contribs so the gate can check it pre-aggregation.
-    per_term = bm25_term_contribs(idx, query_terms, k1=k1, b=b)
+    per_term = bm25_term_contribs(idx, query_terms)
     return per_term.groupBy("query_id", "doc_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_hit"),
         F.sum("contrib_u").alias("score_u"),
     )
 
 
-def bm25_index_upsert(
-    idx: Bm25Index,
-    new_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> Bm25Index:
+def bm25_index_upsert(idx: Bm25Index, new_docs: DataFrame) -> Bm25Index:
     """Merge a batch of NEW documents into a built/loaded index without
     re-tokenizing the existing corpus — every index statistic is
     additive over disjoint document sets: tf rows are per-(doc, term)
@@ -246,8 +231,7 @@ def bm25_index_upsert(
     before any merged table exists (see inline comment).
     """
     new_toks = new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ws_tokens(F.col(text_col))).alias("term"),
+        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("term")
     )
     new_tf = new_toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
@@ -284,14 +268,7 @@ def bm25_index_upsert(
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame, query_terms: DataFrame) -> DataFrame:
     """BM25 score of every (query, document) pair with ≥1 matching term.
 
     ``query_terms`` is a bounded ``(query_id, term)`` table (a serving
@@ -300,25 +277,14 @@ def bm25_scores(
     per-term contributions (see module doctrine) and ``n_hit`` the
     matched-term count.
     """
-    return bm25_scores_from_index(
-        bm25_build_index(docs, text_col, id_col),
-        query_terms,
-        k1=k1,
-        b=b,
-    )
+    return bm25_scores_from_index(bm25_build_index(docs), query_terms)
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: DataFrame, k: int) -> DataFrame:
     """Top-``k`` documents per query by BM25, deterministic ties
     (score_u DESC, doc_id ASC) → ``(query_id, doc_id, n_hit, score_u,
     rank)``."""
-    scored = bm25_scores(docs, query_terms, text_col=text_col, id_col=id_col)
+    scored = bm25_scores(docs, query_terms)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u").desc(), F.col("doc_id").asc()
     )
@@ -334,8 +300,6 @@ def bm25_prf_expand(
     query_terms: DataFrame,
     fb_docs: int,
     fb_terms: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """Pseudo-relevance-feedback query expansion (Rocchio's integer
     core): run the first BM25 pass, take each query's top ``fb_docs``
@@ -349,7 +313,7 @@ def bm25_prf_expand(
     term-harvest join probes the corpus tf table with a tiny build side;
     term selection is one (query, term) aggregate over those bounded
     postings."""
-    scored = bm25_scores_from_index(idx, query_terms, k1=k1, b=b)
+    scored = bm25_scores_from_index(idx, query_terms)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u").desc(), F.col("doc_id").asc()
     )
@@ -386,15 +350,13 @@ def bm25_prf_topk(
     k: int,
     fb_docs: int,
     fb_terms: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Two-pass BM25 with pseudo-relevance feedback: expand each query
     with the ``fb_terms`` most frequent new terms of its ``fb_docs``
     top documents, rescore, return top-``k`` — the classic second-stage
     retrieval DAG, float-free end to end. ONE index build feeds both
     passes."""
-    idx = bm25_build_index(docs, text_col, id_col)
+    idx = bm25_build_index(docs)
     expanded = bm25_prf_expand(idx, query_terms, fb_docs, fb_terms)
     scored = bm25_scores_from_index(idx, expanded)
     w = Window.partitionBy("query_id").orderBy(
@@ -407,24 +369,17 @@ def bm25_prf_topk(
     )
 
 
-def positional_postings(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Positional inverted-index rows ``(doc_id, pos, term)`` — the
-    classic IR structure BM25's bag-of-words index can't answer phrase
-    queries from. One tokenize pass, narrow (posexplode)."""
+def positional_postings(docs: DataFrame) -> DataFrame:
+    """Positional inverted-index rows ``(doc_id, pos, term)`` of
+    ``(doc_id, text)`` documents — the classic IR structure BM25's
+    bag-of-words index can't answer phrase queries from. One tokenize
+    pass, narrow (posexplode)."""
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "term"),
+        "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "term")
     )
 
 
-def phrase_match_counts(
-    docs: DataFrame,
-    phrase_terms: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_match_counts(docs: DataFrame, phrase_terms: DataFrame) -> DataFrame:
     """Exact-phrase occurrence counts: ``(phrase_id, doc_id, n_occ)``
     for every document containing each phrase at least once.
 
@@ -441,7 +396,7 @@ def phrase_match_counts(
     corpus to matching terms BEFORE any aggregate, and both aggregates
     key on (phrase, doc[, anchor]) — no self-join of the postings.
     """
-    hits = positional_postings(docs, text_col, id_col).join(
+    hits = positional_postings(docs).join(
         F.broadcast(phrase_terms), on="term"
     )
     anchors = (
@@ -463,17 +418,11 @@ def phrase_match_counts(
     )
 
 
-def phrase_topk(
-    docs: DataFrame,
-    phrase_terms: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def phrase_topk(docs: DataFrame, phrase_terms: DataFrame, k: int) -> DataFrame:
     """Top-``k`` documents per phrase by occurrence count, deterministic
     ties (n_occ DESC, doc_id ASC) — pure-integer hash inputs end to
     end."""
-    counts = phrase_match_counts(docs, phrase_terms, text_col, id_col)
+    counts = phrase_match_counts(docs, phrase_terms)
     w = Window.partitionBy("phrase_id").orderBy(
         F.col("n_occ").desc(), F.col("doc_id").asc()
     )
@@ -484,13 +433,9 @@ def phrase_topk(
     )
 
 
-def rrf_fuse(
-    rank_a: DataFrame,
-    rank_b: DataFrame,
-    rrf_k: int = RRF_K,
-) -> DataFrame:
+def rrf_fuse(rank_a: DataFrame, rank_b: DataFrame) -> DataFrame:
     """Reciprocal-rank fusion of two ``(query_id, doc_id, rank)`` lists:
-    ``rrf_u = Σ RRF_SCALE DIV (rrf_k + rank)`` over the lists the doc
+    ``rrf_u = Σ RRF_SCALE DIV (RRF_K + rank)`` over the lists the doc
     appears in (full outer join — a doc ranked by one side only gets
     that side's contribution). Pure integer arithmetic; the fused rank
     breaks ties (rrf_u DESC, doc_id ASC)."""
@@ -500,11 +445,11 @@ def rrf_fuse(
     # integer DIV, not /: exact in both engines, no float anywhere
     contrib_a = F.when(
         F.col("__ra").isNotNull(),
-        F.expr(f"CAST({RRF_SCALE} AS BIGINT) DIV ({rrf_k} + __ra)"),
+        F.expr(f"CAST({RRF_SCALE} AS BIGINT) DIV ({RRF_K} + __ra)"),
     ).otherwise(F.lit(0).cast("bigint"))
     contrib_b = F.when(
         F.col("__rb").isNotNull(),
-        F.expr(f"CAST({RRF_SCALE} AS BIGINT) DIV ({rrf_k} + __rb)"),
+        F.expr(f"CAST({RRF_SCALE} AS BIGINT) DIV ({RRF_K} + __rb)"),
     ).otherwise(F.lit(0).cast("bigint"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("rrf_u").desc(), F.col("doc_id").asc()

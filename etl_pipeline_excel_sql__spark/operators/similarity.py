@@ -40,8 +40,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
@@ -52,14 +50,14 @@ def brute_force_topk(
     # Norms are per-vector: compute them once per side, not once per pair —
     # cuts the pair-scoring arithmetic to a dot product plus one divide.
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q))
@@ -84,9 +82,6 @@ def hard_negatives_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
     dims: int | None = None,
 ) -> DataFrame:
     """Contrastive-training hard-negative mining: for each query vector,
@@ -104,16 +99,16 @@ def hard_negatives_topk(
     DOUBLE_SORTED review class, like the rest of the ANN family).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("query_label"),
+        F.col("embedding").alias("__qvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
+        F.col("embedding").alias("__cvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q))
@@ -144,7 +139,6 @@ def hard_negatives_topk(
 def cell_centroids(
     corpus: DataFrame,
     cell_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-cell mean vector: posexplode → mean per (cell, dim) → re-assemble.
 
@@ -164,7 +158,8 @@ def cell_centroids(
     "optimizing" this again.
     """
     exploded = corpus.select(
-        F.col(cell_col).alias("cell"), F.posexplode(vec_col).alias("dim", "val")
+        F.col(cell_col).alias("cell"),
+        F.posexplode("embedding").alias("dim", "val"),
     )
     per_dim = exploded.groupBy("cell", "dim").agg(
         (
@@ -186,8 +181,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cell_col: str = "label",
     dims: int | None = 64,
 ) -> DataFrame:
@@ -197,11 +190,11 @@ def ivf_topk(
     cell) but the corpus scan drops to ~nprobe/ncells of brute force.
     Output schema matches :func:`brute_force_topk`.
     """
-    cents = cell_centroids(corpus, cell_col, vec_col)
+    cents = cell_centroids(corpus, cell_col)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
     )
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("__cell_sim").desc(), F.col("cell").asc()
@@ -214,9 +207,9 @@ def ivf_topk(
         .select("query_id", "__qvec", "__qnorm", "cell")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
         F.col(cell_col).alias("cell"),
     )
     scored = (
@@ -239,11 +232,7 @@ def ivf_topk(
 
 
 def _assign_broadcast(
-    corpus: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dims: int,
+    corpus: DataFrame, cents: DataFrame, dims: int
 ) -> DataFrame:
     """Max-cosine assignment with centroids as a broadcast TABLE.
 
@@ -267,10 +256,10 @@ def _assign_broadcast(
     from etl_pipeline_excel_sql__spark.functions.vectors import cosine_sql
 
     scored = corpus.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", F.expr(cosine_sql(vec_col, "centroid", dims))
+        "__sim", F.expr(cosine_sql("embedding", "centroid", dims))
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("vec_id")
         .agg(
             F.max_by(
                 F.col("cell"),
@@ -279,9 +268,9 @@ def _assign_broadcast(
                     (-F.col("cell")).alias("nc"),
                 ),
             ).alias("cell"),
-            F.first(vec_col).alias(vec_col),
+            F.first("embedding").alias("embedding"),
         )
-        .select(id_col, vec_col, "cell")
+        .select("vec_id", "embedding", "cell")
     )
 
 
@@ -289,8 +278,6 @@ def kmeans_train_assign(
     corpus: DataFrame,
     ncells: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int = 64,
     truncator=None,
 ) -> DataFrame:
@@ -322,17 +309,17 @@ def kmeans_train_assign(
     )
     # seed centroids stay LAZY: round 1's cut evaluates them once.
     cents = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(ncells)
         .select(
-            F.col(id_col),
-            F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias(
+            F.col("vec_id"),
+            F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias(
                 "centroid"
             ),
         )
         .withColumn(
             "cell",
-            (F.row_number().over(Window.orderBy(id_col)) - 1).cast("int"),
+            (F.row_number().over(Window.orderBy("vec_id")) - 1).cast("int"),
         )
         .select("cell", "centroid")
     )
@@ -348,48 +335,33 @@ def kmeans_train_assign(
     # retires the final cut — the same lifetime contract as before.
     for _ in range(iters - 1):
         cents = truncator.truncate(
-            cell_centroids(
-                _assign_broadcast(corpus, cents, id_col, vec_col, dims),
-                "cell",
-                vec_col,
-            )
+            cell_centroids(_assign_broadcast(corpus, cents, dims), "cell")
         )
-    return truncator.truncate(
-        _assign_broadcast(corpus, cents, id_col, vec_col, dims)
-    )
+    return truncator.truncate(_assign_broadcast(corpus, cents, dims))
 
 
 def ivf_topk_trained(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    nprobe: int = 2,
     ncells: int = 8,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int = 64,
 ) -> DataFrame:
     """IVF ANN over TRAINED k-means cells (no label stand-in).
 
     Trains ``ncells`` centroids with :func:`kmeans_train_assign`, then runs
-    the standard IVF probe (``nprobe`` nearest cells per query, exact
+    the standard IVF probe (the 2 nearest cells per query, exact
     cosine inside). Same output schema as :func:`brute_force_topk`; recall
     vs brute force is measured in tests/test_operators.py.
     """
-    assigned = kmeans_train_assign(corpus, ncells, iters, id_col, vec_col, dims)
-    return ivf_topk(
-        assigned, queries, k=k, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col, cell_col="cell", dims=dims,
-    )
+    assigned = kmeans_train_assign(corpus, ncells, iters, dims)
+    return ivf_topk(assigned, queries, k=k, cell_col="cell", dims=dims)
 
 
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = "label",
     dims: int | None = None,
     srp_bits: int = 0,
     srp_tables: int = 1,
@@ -399,7 +371,7 @@ def cosine_neardup_pairs(
 
     Candidate generation composes two keys:
 
-    * ``block_col`` — hard partition (IVF-style cell / label);
+    * the ``label`` column — hard partition (IVF-style cell / label);
     * ``srp_bits``/``srp_tables`` — multi-table signed-random-projection
       LSH: each vector gets ``srp_tables`` independent ``srp_bits``-bit
       signatures, and a pair is a candidate when it matches in ANY table.
@@ -407,38 +379,35 @@ def cosine_neardup_pairs(
     With SRP enabled, no cell is quadratic: the self-join key is
     (block, table, bucket), and the shuffle carries only (id, key) rows —
     vectors re-join only for the surviving candidates, which get EXACT
-    cosine verification. Pass ``srp_bits=0`` for the per-cell all-pairs
-    variant, ``block_col=None`` + ``srp_bits=0`` for exact all-pairs (only
-    sane on small corpora).
+    cosine verification. Pass ``srp_bits=0`` for the per-label all-pairs
+    variant.
 
     With SRP enabled, the key table persists through a default slot
     under the slot rule of
     :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
     """
-    cols = [
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__vec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__norm"),
-    ]
-    if block_col:
-        cols.append(F.col(block_col).alias("__block"))
-    base = corpus.select(*cols)
+    base = corpus.select(
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").alias("__vec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__norm"),
+        F.col("label").alias("__block"),
+    )
 
     if srp_bits:
         from etl_pipeline_excel_sql__spark.functions.vectors import srp_buckets_long
 
         keys = srp_buckets_long(
             corpus.select(
-                F.col(id_col).alias("__id"),
-                *([F.col(block_col).alias("__block")] if block_col else []),
-                F.col(vec_col).alias("__vec"),
+                F.col("vec_id").alias("__id"),
+                F.col("label").alias("__block"),
+                F.col("embedding").alias("__vec"),
             ),
             "__id",
             "__vec",
             srp_bits,
             dims,
             srp_tables,
-            extra_cols=("__block",) if block_col else (),
+            extra_cols=("__block",),
             plane_stride=srp_plane_stride,
         )
         # The key table is tiny (srp_tables rows of four scalars per
@@ -447,7 +416,7 @@ def cosine_neardup_pairs(
         keys = shared_slot(
             corpus.sparkSession, "similarity.srp_keys", SignatureCache
         ).swap(keys)
-        key_cols = (["__block"] if block_col else []) + ["__table", "__bucket"]
+        key_cols = ["__block", "__table", "__bucket"]
         cand = (
             keys.select(F.col("__id").alias("id_a"), *key_cols)
             .join(
@@ -474,17 +443,15 @@ def cosine_neardup_pairs(
             F.col("__id").alias("id_a"),
             F.col("__vec").alias("vec_a"),
             F.col("__norm").alias("norm_a"),
-            *([F.col("__block")] if block_col else []),
+            F.col("__block"),
         )
         b = base.select(
             F.col("__id").alias("id_b"),
             F.col("__vec").alias("vec_b"),
             F.col("__norm").alias("norm_b"),
-            *([F.col("__block")] if block_col else []),
+            F.col("__block"),
         )
-        joined = (a.join(b, on="__block") if block_col else a.crossJoin(b)).filter(
-            F.col("id_a") < F.col("id_b")
-        )
+        joined = a.join(b, on="__block").filter(F.col("id_a") < F.col("id_b"))
     return (
         joined.withColumn(
             "cosine_sim",
@@ -498,8 +465,6 @@ def cosine_neardup_pairs(
 
 def srp_candidate_stats(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = "label",
     dims: int | None = None,
     srp_bits: int = 6,
@@ -541,9 +506,9 @@ def srp_candidate_stats(
     n_vectors = corpus.count()
     keys = srp_buckets_long(
         corpus.select(
-            F.col(id_col).alias("__id"),
+            F.col("vec_id").alias("__id"),
             *([F.col(block_col).alias("__block")] if block_col else []),
-            F.col(vec_col).alias("__vec"),
+            F.col("embedding").alias("__vec"),
         ),
         "__id",
         "__vec",
@@ -584,23 +549,18 @@ def srp_candidate_stats(
     }
 
 
-def gram_matrix(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    dims: int = 64,
-    scale: float = 1e6,
-) -> DataFrame:
+def gram_matrix(corpus: DataFrame, dims: int = 64) -> DataFrame:
     """Distributed Gram matrix X'X over the embedding corpus (upper
     triangle) — the one-pass reduction PCA / whitening / covariance
     preprocessing needs.
 
     Arrow ``mapInPandas`` computes per-batch partial Grams as a single
     numpy ``int64`` matmul over FLOOR-quantized micro-units
-    (``floor(x·scale + 0.5)`` per element): integer products and sums are
+    (``floor(x·10⁶ + 0.5)`` per element): integer products and sums are
     associative, so the merged result is bit-identical under any batch
     split or partition order — a float matmul here would drift in the
     last ulps per batch boundary and could never be value-hash-gated.
-    Magnitudes: |q| ≤ |x|·scale, so unit-norm-ish embeddings stay far
+    Magnitudes: |q| ≤ |x|·10⁶, so unit-norm-ish embeddings stay far
     inside int64 through products and corpus-level sums.
 
     Scale shape: each batch emits dims·(dims+1)/2 rows (model-sized, data
@@ -618,8 +578,8 @@ def gram_matrix(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            Q = np.floor(X * scale + 0.5).astype("int64")
+            X = np.stack(pdf["embedding"].to_numpy()).astype("float64")
+            Q = np.floor(X * 1e6 + 0.5).astype("int64")
             G = Q.T @ Q
             yield pd.DataFrame(
                 {
@@ -629,7 +589,7 @@ def gram_matrix(
                 }
             )
 
-    parts = corpus.select(vec_col).mapInPandas(
+    parts = corpus.select("embedding").mapInPandas(
         partial_gram, "i int, j int, partial long"
     )
     return parts.groupBy("i", "j").agg(
@@ -642,8 +602,6 @@ def sq8_rerank_topk(
     queries: DataFrame,
     k: int = 10,
     candidates: int = 30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int = 64,
 ) -> DataFrame:
     """Two-stage serving ANN: int8 scalar-quantized candidate generation
@@ -675,7 +633,7 @@ def sq8_rerank_topk(
             *[
                 F.max(
                     F.abs(
-                        F.element_at(F.col(vec_col), i + 1).cast("double")
+                        F.element_at(F.col("embedding"), i + 1).cast("double")
                     )
                 )
                 for i in range(dims)
@@ -702,12 +660,12 @@ def sq8_rerank_topk(
         )
 
     q_codes = queries.crossJoin(F.broadcast(maxabs)).select(
-        F.col(id_col).alias("query_id"),
-        _codes(F.col(vec_col)).alias("__qc"),
+        F.col("vec_id").alias("query_id"),
+        _codes(F.col("embedding")).alias("__qc"),
     )
     c_codes = corpus.crossJoin(F.broadcast(maxabs)).select(
-        F.col(id_col).alias("neighbor_id"),
-        _codes(F.col(vec_col)).alias("__cc"),
+        F.col("vec_id").alias("neighbor_id"),
+        _codes(F.col("embedding")).alias("__cc"),
     )
     terms = [
         F.element_at(F.col("__qc"), i + 1)
@@ -729,14 +687,14 @@ def sq8_rerank_topk(
         .drop("__crank")
     )
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
     )
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
     )
     rer = (
         cv.join(F.broadcast(cand), "neighbor_id")
@@ -763,8 +721,6 @@ def margin_topk(
     k_nn: int = 4,
     candidates: int = 20,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dims: int = 64,
 ) -> DataFrame:
     """Margin-scored mining pairs (the bitext-mining criterion of
@@ -791,14 +747,14 @@ def margin_topk(
     among its top-``candidates`` forward neighbors.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col(vec_col), dims)).alias("__cnorm"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cvec"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q))

@@ -27,22 +27,20 @@ def salted_count_sum(
     df: DataFrame,
     group_cols: list[str],
     sum_col: str,
-    salt_buckets: int = 16,
-    sum_type: str = "decimal(12,2)",
 ) -> DataFrame:
-    """Two-stage count+sum aggregation over a salted key.
+    """Two-stage count+sum aggregation over a 16-way salted key.
 
     Output: ``group_cols..., n_rows, sum_<sum_col>`` — identical to the
     direct ``groupBy(group_cols).agg(count, sum)`` (decimal sums are exact
     and order-independent, so the two-stage merge is value-identical).
     """
-    salt = (F.rand(seed=13) * salt_buckets).cast("int").alias("__salt")
+    salt = (F.rand(seed=13) * 16).cast("int").alias("__salt")
     partial = (
         df.select(*group_cols, F.col(sum_col), salt)
         .groupBy(*group_cols, "__salt")
         .agg(
             F.count(F.lit(1)).alias("__n"),
-            F.sum(F.col(sum_col).cast(sum_type)).alias("__s"),
+            F.sum(F.col(sum_col).cast("decimal(12,2)")).alias("__s"),
         )
     )
     return partial.groupBy(*group_cols).agg(
@@ -55,23 +53,22 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    salt_buckets: int = 8,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join with the big side salted and the small side replicated.
 
-    ``small`` is exploded ``salt_buckets``× (one copy per salt value), the
-    skewed ``big`` side gets a random salt, and the join runs on
-    (key, salt) — a hot key's rows now land on ``salt_buckets`` reducers
-    instead of one. Result equals ``big.join(small, key, how)`` for inner /
-    left joins (each big row still matches exactly its key's small rows).
+    ``small`` is exploded 8× (one copy per salt value), the skewed
+    ``big`` side gets a random salt, and the join runs on (key, salt) —
+    a hot key's rows now land on 8 reducers instead of one. Result equals
+    ``big.join(small, key, how)`` for inner / left joins (each big row
+    still matches exactly its key's small rows).
     """
     if how not in ("inner", "left"):
         raise ValueError("salted_join supports inner/left joins")
-    salt_b = (F.rand(seed=17) * salt_buckets).cast("int")
+    salt_b = (F.rand(seed=17) * 8).cast("int")
     big_s = big.withColumn("__salt", salt_b)
     small_s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(8)]))
     )
     out = big_s.join(small_s, on=[key, "__salt"], how=how)
     return out.drop("__salt")

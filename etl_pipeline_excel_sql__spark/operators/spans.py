@@ -82,7 +82,7 @@ _POS_BITS = 21
 _DOC_ID_MAX = (1 << (63 - _POS_BITS)) - 1
 
 
-def packed_doc_pos(doc_col: str = "doc_id", pos_col: str = "pos"):
+def packed_doc_pos(pos_col: str = "pos"):
     """``doc_id·2^21 + pos`` with the documented bounds ENFORCED: a
     corpus that breaks them (a ≥2M-token document or a doc_id ≥ 2^42)
     would silently alias packed keys across (doc_id, pos) pairs and
@@ -93,11 +93,11 @@ def packed_doc_pos(doc_col: str = "doc_id", pos_col: str = "pos"):
     in_bounds = (
         (F.col(pos_col) >= 0)
         & (F.col(pos_col) < F.lit(1 << _POS_BITS))
-        & (F.col(doc_col) >= 0)
-        & (F.col(doc_col) <= F.lit(_DOC_ID_MAX))
+        & (F.col("doc_id") >= 0)
+        & (F.col("doc_id") <= F.lit(_DOC_ID_MAX))
     )
     return F.when(
-        in_bounds, F.col(doc_col) * (1 << _POS_BITS) + F.col(pos_col)
+        in_bounds, F.col("doc_id") * (1 << _POS_BITS) + F.col(pos_col)
     ).otherwise(
         F.raise_error(
             F.concat(
@@ -105,7 +105,7 @@ def packed_doc_pos(doc_col: str = "doc_id", pos_col: str = "pos"):
                     "packed_doc_pos: (doc_id, pos) outside packed-key "
                     f"bounds (pos < 2^{_POS_BITS}, doc_id <= {_DOC_ID_MAX}): "
                 ),
-                F.col(doc_col).cast("string"),
+                F.col("doc_id").cast("string"),
                 F.lit(", "),
                 F.col(pos_col).cast("string"),
             )
@@ -116,11 +116,9 @@ def packed_doc_pos(doc_col: str = "doc_id", pos_col: str = "pos"):
 _packed_key = packed_doc_pos
 
 
-def cut_occurrences(
-    occ: DataFrame, min_count: int = 2
-) -> DataFrame:
+def cut_occurrences(occ: DataFrame) -> DataFrame:
     """Occurrences to remove: every (doc_id, pos) of a k-gram seen
-    ``min_count``+ times corpus-wide, EXCEPT the canonical first
+    2+ times corpus-wide, EXCEPT the canonical first
     occurrence (minimal (doc_id, pos) — one surviving copy per
     duplicated k-gram, the paper's keep-one semantics).
 
@@ -146,7 +144,7 @@ def cut_occurrences(
             F.count(F.lit(1)).alias("__cnt"),
             F.min(packed).alias("__keepk"),
         )
-        .filter(F.col("__cnt") >= min_count)
+        .filter(F.col("__cnt") >= 2)
         .select("h", "__keepk")
     )
     return (
@@ -196,33 +194,22 @@ def merge_islands(cut: DataFrame, k: int) -> DataFrame:
     )
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """Maximal duplicated-substring spans per document (see module doc).
+def duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
+    """Maximal duplicated-substring spans per ``(doc_id, text)`` document
+    (see module doc).
 
     Returns ``(doc_id, span_start, span_end, span_len)`` — every token
     range (≥ k tokens) whose every k-gram also occurs elsewhere in the
     corpus (or earlier in the same document), minus the one canonical
     first occurrence kept per k-gram.
     """
-    occ = kgram_rows(docs, text_col, id_col, k)
-    return merge_islands(cut_occurrences(occ, min_count), k)
+    occ = kgram_rows(docs, "text", "doc_id", k)
+    return merge_islands(cut_occurrences(occ), k)
 
 
-def trim_duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
-    """Apply span dedup: every document with its duplicated spans cut
-    out — ``(doc_id, n_tokens, n_cut, text_clean)``.
+def trim_duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
+    """Apply span dedup: every ``(doc_id, text)`` document with its
+    duplicated spans cut out — ``(doc_id, n_tokens, n_cut, text_clean)``.
 
     Every input document appears exactly once (empty or fully-duplicated
     documents included, with ``text_clean = ''``); surviving tokens are
@@ -232,11 +219,10 @@ def trim_duplicated_spans(
     exchange until the final per-doc reassembly.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "tok"),
+        "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "tok")
     )
     covered = (
-        cut_occurrences(kgram_rows(docs, text_col, id_col, k), min_count)
+        cut_occurrences(kgram_rows(docs, "text", "doc_id", k))
         .select(
             "doc_id",
             F.explode(
@@ -257,8 +243,7 @@ def trim_duplicated_spans(
         ).alias("__text"),
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(ws_tokens(F.col(text_col))).alias("n_tokens"),
+        "doc_id", F.size(ws_tokens(F.col("text"))).alias("n_tokens")
     )
     return base.join(rebuilt, "doc_id", "left").select(
         "doc_id",
@@ -273,12 +258,10 @@ def trim_duplicated_spans(
 def contaminated_spans(
     docs: DataFrame,
     bench_hashes: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
 ) -> DataFrame:
-    """Span-level decontamination: the exact regions of training
-    documents that overlap a benchmark k-gram set — ``(doc_id,
+    """Span-level decontamination: the exact regions of ``(doc_id, text)``
+    training documents that overlap a benchmark k-gram set — ``(doc_id,
     span_start, span_end, span_len)``.
 
     ``decontam_overlap`` answers *which documents* touch the benchmark;
@@ -289,7 +272,7 @@ def contaminated_spans(
     bench side of ``decontam_overlap`` it is joined size-gated, never
     force-broadcast.
     """
-    occ = kgram_rows(docs, text_col, id_col, k)
+    occ = kgram_rows(docs, "text", "doc_id", k)
     hit = occ.join(bench_hashes.select("h").distinct(), "h").select(
         "doc_id", "pos"
     )

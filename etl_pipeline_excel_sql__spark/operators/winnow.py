@@ -61,29 +61,23 @@ POS_CAP = 1 << 20
 WS_CLASS = r"[ \t\n\x0B\f\r]+"
 
 
-def _normalized(text_col: str) -> F.Column:
-    """lower(trim(collapse-whitespace)) — the winnowing preprocessor.
+def _normalized() -> F.Column:
+    """lower(trim(collapse-whitespace)) of ``text`` — the winnowing
+    preprocessor.
     DuckDB twin: ``lower(trim(regexp_replace(x, WS_CLASS, ' ', 'g')))``
     (DuckDB needs the explicit 'g'; Spark replaces all by default)."""
-    return F.lower(F.trim(F.regexp_replace(F.col(text_col), WS_CLASS, " ")))
+    return F.lower(F.trim(F.regexp_replace(F.col("text"), WS_CLASS, " ")))
 
 
 def winnow_fingerprint_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 8,
-    w: int = 4,
+    df: DataFrame, k: int = 8, w: int = 4
 ) -> DataFrame:
     """Per-document winnowing summary: ``doc_id, n_kgrams, n_fp,
     density_ppm`` where ``n_fp`` is the selected-fingerprint count and
     ``density_ppm = n_fp·1e6 DIV n_windows`` (paper expectation
     ~2/(w+1); guarantee ≥ 1/w since one pick per window, each pick
     covering at most w windows)."""
-    norm = _normalized(text_col)
-    base = df.select(
-        F.col(id_col).alias("doc_id"), norm.alias("__t")
-    ).filter(
+    base = df.select("doc_id", _normalized().alias("__t")).filter(
         (F.length("__t") >= k + w - 1) & (F.length("__t") < POS_CAP)
     )
     # Round-13 optimization (guide §4.1 "prefer built-ins"/§1.2): explode

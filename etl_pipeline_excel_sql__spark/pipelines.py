@@ -33,6 +33,7 @@ from etl_pipeline_excel_sql__spark.functions.cleaning import (
 from etl_pipeline_excel_sql__spark.functions.normalize import (
     norm_header,
     normalize_colname,
+    quote,
     safe_fname_token,
 )
 from etl_pipeline_excel_sql__spark.operators.diff import snapshot_diff
@@ -72,10 +73,10 @@ class PipelineResult:
     notes: list[str] = field(default_factory=list)
 
 
-def output_filename(prefix: str, when: _dt.date, ext: str = ".xlsx") -> str:
-    """S4 dated-output naming: ``{PREFIX}_{MM_DD_YYYY}{ext}``, sanitized
+def output_filename(prefix: str, when: _dt.date) -> str:
+    """S4 dated-output naming: ``{PREFIX}_{MM_DD_YYYY}.xlsx``, sanitized
     (Download.py:65-75, Upload.py:98-113)."""
-    return safe_fname_token(f"{prefix}_{when.strftime('%m_%d_%Y')}") + ext
+    return safe_fname_token(f"{prefix}_{when.strftime('%m_%d_%Y')}") + ".xlsx"
 
 
 def download_pipeline(
@@ -86,29 +87,29 @@ def download_pipeline(
     date_cols: list[str],
     percent_cols: list[str],
     run_date: _dt.date,
-    grid: CellGrid | None = None,
-    row_start: int = 8,
     skip_cols: frozenset[int] = DEFAULT_SKIP_COLS,
     inject_vba: bool = False,
 ) -> PipelineResult:
-    """§3.1 Download: filter → drop → T1/T2 formatting → P2 → K1/K3 write.
+    """§3.1 Download: filter → drop → T1/T2 formatting → P2 → K1/K3 write,
+    rows from (8, 1) as in Download.py:160-201.
 
     The filter participates in the lazy plan, so unlike the reference
     (which pulled the whole table over ODBC and filtered client-side,
-    Download.py:85-89) the predicate reaches the source scan.
+    Download.py:85-89) the predicate reaches the source scan. Column
+    names may hold any header text.
     """
-    df = source.filter(F.col(filter_col) == F.lit(filter_value))
+    df = source.filter(F.col(quote(filter_col)) == F.lit(filter_value))
     df = df.drop(*drop_cols)
     for c in date_cols:
-        df = df.withColumn(c, date_reformat(c))
+        df = df.withColumn(c, date_reformat(F.col(quote(c))))
     for c in percent_cols:
-        df = df.withColumn(c, percent_format(c))
+        df = df.withColumn(c, percent_format(F.col(quote(c))))
     # P2: erase names to ordinals before positional writing (Download.py:157)
     df = df.toDF(*[str(i) for i in range(len(df.columns))])
 
-    grid = grid if grid is not None else CellGrid()
+    grid = CellGrid()
     stamp_run_date(grid, run_date)
-    n = write_positional(df, grid, row_start=row_start, skip_cols=skip_cols)
+    n = write_positional(df, grid, skip_cols=skip_cols)
     notes = []
     if inject_vba:
         # K4 (Download.py:203-227): the paste-guard macro source is stored
@@ -124,9 +125,6 @@ def upload_pipeline(
     ministry: str,
     ministry_list: list[str],
     template_header_cells: list[str | None],
-    manual_overrides: dict[str, str] | None = None,
-    grid: CellGrid | None = None,
-    first_data_row: int = 6,
     order_tiebreak: list[str] | None = None,
 ) -> PipelineResult:
     """§3.2 Upload: filter (F1/F2) → reconcile (S3/T3/P3) → block order
@@ -149,7 +147,7 @@ def upload_pipeline(
         df = source.filter(F.col("Ministry") == F.lit(ministry))
     no_rows = f"no rows for ministry selection {ministry!r}"
     try:
-        rec = reconcile_schema(df.columns, template_header_cells, manual_overrides)
+        rec = reconcile_schema(df.columns, template_header_cells)
     except EmptyIntersectionError:
         # F4 outranks the header check: an empty extract reports as such.
         if df.isEmpty():
@@ -180,9 +178,9 @@ def upload_pipeline(
         ).drop("_ord")
     df = apply_reconciliation(df, rec)
 
-    grid = grid if grid is not None else CellGrid()
+    grid = CellGrid()
     mapping = {c: rec.mapping[c] for c in df.columns}
-    n = write_header_matched(df, grid, mapping, first_data_row=first_data_row)
+    n = write_header_matched(df, grid, mapping)
     if n == 0:
         # F4 read off the sink's own collect: 0 rows wrote no cell.
         raise EmptySourceError(no_rows)
@@ -215,7 +213,6 @@ def compare_pipeline(
     compare_cols: list[str],
     word_diff_cols: list[str] | None = None,
     old_order_col: str | None = None,
-    grid: CellGrid | None = None,
 ) -> tuple[DataFrame, PipelineResult]:
     """§3.3 Compare: resolve columns (P4) → diff (J1-J3, D1-D3) → render (K5).
 
@@ -248,7 +245,7 @@ def compare_pipeline(
         old_order_col=old_order_col,
         old_names=resolution,
     )
-    grid = grid if grid is not None else CellGrid()
+    grid = CellGrid()
     n = write_highlighted_diff(
         diff, grid, key, compare_cols, word_diff_cols=word_diff_cols
     )

@@ -53,13 +53,11 @@ def q_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A hot grouping key (few distinct return flags over all of lineitem)
     is exactly the shape that funnels one reducer at 100 TB; the salt
-    spreads stage one over ``salt_buckets`` partitions and the merge is
+    spreads stage one over 16 partitions and the merge is
     value-identical because counts and DECIMAL sums are associative.
     """
     li = load_table(spark, "lineitem", sf_dir)
-    out = salted_count_sum(
-        li, ["l_returnflag"], "l_extendedprice", salt_buckets=16
-    )
+    out = salted_count_sum(li, ["l_returnflag"], "l_extendedprice")
     return out.select(
         "l_returnflag",
         "n_rows",

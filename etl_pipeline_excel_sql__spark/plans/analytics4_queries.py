@@ -104,7 +104,7 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, "supplier", sf_dir).select(
         F.col("s_suppkey").alias("l_suppkey"), "s_name"
     )
-    return salted_join(li, s, key="l_suppkey", salt_buckets=8).select(
+    return salted_join(li, s, key="l_suppkey").select(
         "l_orderkey", "l_suppkey", "s_name", "l_quantity"
     )
 

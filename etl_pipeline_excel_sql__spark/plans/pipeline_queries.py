@@ -168,7 +168,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_signatures(
-        load_table(spark, "documents", sf_dir), "text", "doc_id", bits=32
+        load_table(spark, "documents", sf_dir), "text", "doc_id"
     )
 
 
@@ -177,7 +177,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "documents", sf_dir),
         "text",
         "doc_id",
-        shingle_n=3,
         threshold=NGRAM_THRESHOLD,
         bottom_k=NGRAM_BOTTOM_K,
     )
@@ -213,7 +212,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "documents", sf_dir),
         "text",
         "doc_id",
-        shingle_n=3,
         threshold=CONTAINMENT_THRESHOLD,
         bottom_k=NGRAM_BOTTOM_K,
     )
@@ -231,7 +229,6 @@ def q_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_neardup_pairs(
         emb,
         threshold=COSINE_THRESHOLD,
-        block_col="label",
         dims=EMB_DIMS,
         srp_bits=adaptive_srp_bits(emb.count()),
         srp_tables=SRP_NEARDUP_TABLES,
@@ -252,7 +249,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         emb.filter(F.col("vec_id") < 5),
         k=5,
-        nprobe=2,
         ncells=IVF_NCELLS,
         iters=IVF_ITERS,
         dims=EMB_DIMS,
@@ -917,7 +913,6 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cosine_neardup_pairs(
         emb,
         threshold=COSINE_THRESHOLD,
-        block_col="label",
         dims=EMB_DIMS,
         srp_bits=adaptive_srp_bits(emb.count()),
         srp_tables=SRP_NEARDUP_TABLES,

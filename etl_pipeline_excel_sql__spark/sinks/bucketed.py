@@ -22,25 +22,18 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     num_buckets: int = 16,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Save as a bucketed (optionally sorted) managed table.
-
-    Sorting within buckets additionally enables merge-join without a sort
-    step and better min/max skipping.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
+    """Save as a bucketed managed table, replacing any previous one."""
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     writer.saveAsTable(table)
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, on: list[str]
 ) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — no exchange."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
+    """Inner-join two same-bucketed tables on their bucket key — no
+    exchange."""
+    return spark.table(left_table).join(spark.table(right_table), on=on)
 
 
 # --- consistent-hash (vnode ring) sharded sink (round 12) -------------------
@@ -61,6 +54,8 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (  # noqa: E402
 
 #: ring-point salt prefix (matches the audit's `ring:s:v` convention)
 RING_POINT_SALT = "ring"
+#: key salt prefix: a row's ring position is md5-60 of "doc:<key>"
+RING_KEY_SALT = "doc:"
 
 
 def ring_points(n_shards: int, vnodes: int, ring_space: int) -> list[tuple[int, int]]:
@@ -86,7 +81,6 @@ def ring_assign(
     points: list[tuple[int, int]],
     ring_space: int,
     out_col: str = "shard",
-    salt: str = "doc:",
 ) -> DataFrame:
     """Append the ring-owner shard of each row's key — a PURE MAP.
 
@@ -107,7 +101,7 @@ def ring_assign(
         ]
     )
     h = md5_hash60(
-        F.concat(F.lit(salt), F.col(key_col).cast("string"))
+        F.concat(F.lit(RING_KEY_SALT), F.col(key_col).cast("string"))
     ) % F.lit(ring_space)
     init = F.lit(ring_space * 256 + 255).cast("bigint")
     owner = (
@@ -133,11 +127,10 @@ def write_ring_sharded(
     n_shards: int,
     vnodes: int,
     ring_space: int,
-    salt: str = "doc:",
 ) -> None:
     """Write `df` as parquet partitioned by its ring-owner shard."""
     pts = ring_points(n_shards, vnodes, ring_space)
-    assigned = ring_assign(df, key_col, pts, ring_space, "shard", salt)
+    assigned = ring_assign(df, key_col, pts, ring_space, "shard")
     assigned.write.mode("overwrite").partitionBy("shard").parquet(path)
 
 
@@ -148,7 +141,6 @@ def reshard_add_shard(
     n_shards_old: int,
     vnodes: int,
     ring_space: int,
-    salt: str = "doc:",
 ) -> int:
     """Grow a ring-sharded table from N to N+1 shards IN PLACE; returns
     the number of rows moved.
@@ -165,9 +157,7 @@ def reshard_add_shard(
     cur = spark.read.parquet(path)
     data_cols = [c for c in cur.columns if c != "shard"]
     pts_new = ring_points(n_shards_old + 1, vnodes, ring_space)
-    re = ring_assign(
-        cur, key_col, pts_new, ring_space, "__new_shard", salt
-    )
+    re = ring_assign(cur, key_col, pts_new, ring_space, "__new_shard")
     moved = re.filter(F.col("shard") != F.col("__new_shard"))
     if moved.filter(F.col("__new_shard") != n_shards_old).limit(1).count():
         raise RuntimeError(

@@ -15,7 +15,7 @@ Reference semantics replicated (citations for parity):
 
 * K1 positional writer starting at (row 8, col 1) skipping template formula
   columns (Download.py:160-201, skip list :173, conversions :186-193);
-* K2 header-matched append at first_data_row=6 in a fixed block order with a
+* K2 header-matched append from row 6 in a fixed block order with a
   written-rows tally (Upload.py:148-224);
 * K3 run-date stamp cell (Download.py:165-169);
 * K5 highlighted diff copy — blue ``FF94DCF8`` changed/new, pink
@@ -183,22 +183,20 @@ def write_positional(
     return table.num_rows
 
 
-def stamp_run_date(
-    grid: CellGrid, when: _dt.date, row: int = 4, col: int = 11
-) -> None:
+def stamp_run_date(grid: CellGrid, when: _dt.date) -> None:
     """K3: run-date stamp into K4 (row 4, col 11), ``MM/DD/YYYY``."""
-    grid.set(row, col, when.strftime("%m/%d/%Y"))
+    grid.set(4, 11, when.strftime("%m/%d/%Y"))
 
 
 #: Columns the reference's paste guard protects (Download.py:214).
 VBA_GUARD_COLUMNS = ("C", "D", "E", "J", "K", "AI", "AH", "AP")
 
 
-def vba_paste_guard_code(columns: tuple[str, ...] = VBA_GUARD_COLUMNS) -> str:
+def vba_paste_guard_code() -> str:
     """The reference's Worksheet_SelectionChange paste guard, verbatim
     semantics (Download.py:208-224): undo any paste into a validated
-    column whose validation type is not list (3)."""
-    ranges = ", ".join(f"{c}:{c}" for c in columns)
+    ``VBA_GUARD_COLUMNS`` column whose validation type is not list (3)."""
+    ranges = ", ".join(f"{c}:{c}" for c in VBA_GUARD_COLUMNS)
     return f'''Private Sub Worksheet_SelectionChange(ByVal Target As Range)
     Dim cell As Range
     On Error Resume Next
@@ -215,12 +213,9 @@ End Sub
 '''
 
 
-def inject_vba_guard(
-    grid: CellGrid,
-    module: str = "Sheet1",
-    columns: tuple[str, ...] = VBA_GUARD_COLUMNS,
-) -> None:
-    """K4 (Download.py:203-227): attach the paste-guard macro to the sink.
+def inject_vba_guard(grid: CellGrid) -> None:
+    """K4 (Download.py:203-227): attach the paste-guard macro to the sink
+    as the ``Sheet1`` module.
 
     The reference drives a live Excel COM host (``workbook.VBProject...
     AddFromString``); this engine stores the identical macro source on the
@@ -228,24 +223,22 @@ def inject_vba_guard(
     ``xl/vbaProject.bin`` (a macro-enabled .xlsm). Executing it is Excel's
     job; the engine never runs VBA.
     """
-    grid.vba_modules[module] = vba_paste_guard_code(columns)
+    grid.vba_modules["Sheet1"] = vba_paste_guard_code()
 
 
 def write_header_matched(
-    df: DataFrame,
-    grid: CellGrid,
-    mapping: dict[str, int],
-    first_data_row: int = 6,
+    df: DataFrame, grid: CellGrid, mapping: dict[str, int]
 ) -> int:
     """K2: header-matched append writer.
 
     ``mapping`` (source column → 0-based template column index) comes from
     operators/reconcile.reconcile_schema. Rows append starting at the first
-    empty row at/after ``first_data_row``. Returns total rows written (the
+    empty row at/after the template's first data row, 6. Returns total rows
+    written (the
     reference's ``total_written`` tally, Upload.py:200-224).
     """
     table = _collect_bounded(df)
-    r = first_data_row
+    r = 6
     while any(grid.get(r, c + 1) not in (None, "") for c in mapping.values()):
         r += 1
     for name, excel_idx in mapping.items():
@@ -260,12 +253,12 @@ def write_highlighted_diff(
     grid: CellGrid,
     key: str,
     compare_cols: list[str],
-    header_row: int = 1,
     word_diff_cols: list[str] | None = None,
 ) -> int:
     """K5: render a snapshot_diff result as a highlighted sheet.
 
-    Column layout: key, then the ``__new`` value of each compared column.
+    Column layout: a header in row 1, then per row the key and the
+    ``__new`` value of each compared column.
     Fill rules (Compare.py:179-210): whole row blue when ``row_status='new'``;
     per-cell blue when changed, pink when cleared. For ``word_diff_cols``
     (the reference's WORD_DIFF_COLUMNS), a changed cell with a non-empty new
@@ -275,9 +268,9 @@ def write_highlighted_diff(
     Returns rows rendered.
     """
     word_diff_cols = word_diff_cols or []
-    grid.set(header_row, 1, key)
+    grid.set(1, 1, key)
     for j, c in enumerate(compare_cols, start=2):
-        grid.set(header_row, j, c)
+        grid.set(1, j, c)
 
     table = _collect_bounded(diff)
     n = table.num_rows
@@ -289,7 +282,7 @@ def write_highlighted_diff(
             return [None] * n
         return table.column(index[name]).to_pylist()
 
-    rows = range(header_row + 1, header_row + 1 + n)
+    rows = range(2, 2 + n)
     is_new = [s == "new" for s in table.column(index["row_status"]).to_pylist()]
     keys = _cell_values(table.column(index[key]))
     for r, k, new_row in zip(rows, keys, is_new):

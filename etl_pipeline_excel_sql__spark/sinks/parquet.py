@@ -25,45 +25,36 @@ def write_parquet_partitioned(
     path: str,
     partition_cols: list[str] | None = None,
     files_per_partition: int = 1,
-    max_records_per_file: int = 5_000_000,
-    mode: str = "overwrite",
 ) -> None:
-    """Partitioned parquet write with controlled file counts.
+    """Partitioned parquet overwrite with controlled file counts, at most
+    5M rows per file.
 
     With ``partition_cols``, rows are first repartitioned on those columns
     (optionally salted to ``files_per_partition`` files each) so every
     output directory gets a small, predictable number of well-filled files
     instead of one shard per upstream task.
     """
-    writer = df
+    writer = df.write
     if partition_cols:
+        keys = [F.col(c) for c in partition_cols]
         if files_per_partition > 1:
             salt = (F.rand(seed=7) * files_per_partition).cast("int")
-            writer = df.withColumn("__salt", salt).repartition(
-                *[F.col(c) for c in partition_cols], F.col("__salt")
+            df = df.withColumn("__salt", salt).repartition(
+                *keys, F.col("__salt")
             ).drop("__salt")
         else:
-            writer = df.repartition(*[F.col(c) for c in partition_cols])
-        (
-            writer.write.mode(mode)
-            .option("maxRecordsPerFile", max_records_per_file)
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
-    else:
-        (
-            df.write.mode(mode)
-            .option("maxRecordsPerFile", max_records_per_file)
-            .parquet(path)
-        )
+            df = df.repartition(*keys)
+        writer = df.write.partitionBy(*partition_cols)
+    writer = writer.mode("overwrite").option("maxRecordsPerFile", 5_000_000)
+    writer.parquet(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def compact_parquet(
@@ -92,7 +83,7 @@ def compact_parquet(
     return n_files
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (columnar, stripe-statistics pushdown on read — the
     Hive-ecosystem sibling of the parquet path)."""
-    df.write.mode(mode).orc(path)
+    df.write.mode("overwrite").orc(path)

@@ -37,6 +37,7 @@ import struct
 from etl_pipeline_excel_sql__spark.sinks.cfb import CfbWriter, read_cfb
 
 CODEPAGE = 1252  # Windows-1252, PROJECTCODEPAGE below
+PROJECT_NAME = "VBAProject"  # PROJECTNAME, Excel's default
 
 
 # -- [MS-OVBA] 2.4.1 compression container --------------------------------
@@ -120,8 +121,8 @@ def _rec(rec_id: int, payload: bytes) -> bytes:
     return struct.pack("<HI", rec_id, len(payload)) + payload
 
 
-def _dir_stream(modules: dict[str, str], project_name: str) -> bytes:
-    mb = project_name.encode("cp1252")
+def _dir_stream(modules: dict[str, str]) -> bytes:
+    mb = PROJECT_NAME.encode("cp1252")
     info = b"".join(
         [
             _rec(0x0001, struct.pack("<I", 1)),  # PROJECTSYSKIND: Win32
@@ -167,11 +168,11 @@ def _dir_stream(modules: dict[str, str], project_name: str) -> bytes:
     return info + mods + terminator
 
 
-def _project_stream(modules: dict[str, str], project_name: str) -> bytes:
+def _project_stream(modules: dict[str, str]) -> bytes:
     lines = ['ID="{00000000-0000-0000-0000-000000000000}"']
     lines += [f"Module={m}" for m in sorted(modules)]
     lines += [
-        f'Name="{project_name}"',
+        f'Name="{PROJECT_NAME}"',
         'HelpContextID="0"',
         'VersionCompatible32="393222000"',
         "",
@@ -191,19 +192,17 @@ def _projectwm_stream(modules: dict[str, str]) -> bytes:
     return bytes(out)
 
 
-def build_vba_project_bin(
-    modules: dict[str, str], project_name: str = "VBAProject"
-) -> bytes:
+def build_vba_project_bin(modules: dict[str, str]) -> bytes:
     """Serialize VBA module sources into a vbaProject.bin CFB file."""
     w = CfbWriter()
-    w.add_stream(("PROJECT",), _project_stream(modules, project_name))
+    w.add_stream(("PROJECT",), _project_stream(modules))
     w.add_stream(("PROJECTwm",), _projectwm_stream(modules))
     # 2.3.4.1: 7-byte header (Reserved1 0x61CC, Version, Reserved2);
     # everything after is performance cache a reader MUST ignore.
     w.add_stream(
         ("VBA", "_VBA_PROJECT"), struct.pack("<HHBH", 0x61CC, 0xFFFF, 0, 0)
     )
-    w.add_stream(("VBA", "dir"), compress(_dir_stream(modules, project_name)))
+    w.add_stream(("VBA", "dir"), compress(_dir_stream(modules)))
     for name, src in sorted(modules.items()):
         # MODULEOFFSET 0: compressed source starts at byte 0 of the stream
         w.add_stream(("VBA", name), compress(src.encode("cp1252")))

@@ -71,7 +71,7 @@ _ROOT_RELS = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 
 _WORKBOOK = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-<sheets><sheet name="{name}" sheetId="1" r:id="rId1"/></sheets>
+<sheets><sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets>
 </workbook>
 """
 
@@ -160,9 +160,9 @@ def _cell_xml(ref: str, value, style_idx: int, runs) -> str:
     )
 
 
-def grid_to_xlsx(grid: CellGrid, path: str, sheet_name: str = "Sheet1") -> None:
-    """Write the grid as a real .xlsx (values, fills, rich text, and the
-    VBA modules as ``xl/vbaProject.bin``)."""
+def grid_to_xlsx(grid: CellGrid, path: str) -> None:
+    """Write the grid as a real one-sheet .xlsx (values, fills, rich text,
+    and the VBA modules as ``xl/vbaProject.bin``)."""
     fill_colors = sorted({c for c in grid.fills.values()})
     fill_idx = {c: i + 1 for i, c in enumerate(fill_colors)}  # cell-xf index
 
@@ -193,7 +193,7 @@ def grid_to_xlsx(grid: CellGrid, path: str, sheet_name: str = "Sheet1") -> None:
             _CONTENT_TYPES_MACRO if has_macros else _CONTENT_TYPES,
         )
         z.writestr("_rels/.rels", _ROOT_RELS)
-        z.writestr("xl/workbook.xml", _WORKBOOK.format(name=escape(sheet_name)))
+        z.writestr("xl/workbook.xml", _WORKBOOK)
         z.writestr(
             "xl/_rels/workbook.xml.rels",
             _WORKBOOK_RELS_MACRO if has_macros else _WORKBOOK_RELS,

@@ -20,28 +20,23 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from etl_pipeline_excel_sql__spark.sinks.excel_writer import CellGrid
 
 
-def read_xlsx_all_string(
-    spark: SparkSession, path: str, header_row: int = 1
-) -> DataFrame:
+def read_xlsx_all_string(spark: SparkSession, path: str) -> DataFrame:
     """S2 via the native .xlsx reader: workbook → CellGrid →
     all-string DataFrame with explicit row ordinals (no openpyxl)."""
     from etl_pipeline_excel_sql__spark.sinks.xlsx import xlsx_to_grid
 
-    return grid_to_dataframe(spark, xlsx_to_grid(path), header_row=header_row)
+    return grid_to_dataframe(spark, xlsx_to_grid(path))
 
 
-def grid_to_dataframe(
-    spark: SparkSession, grid: CellGrid, header_row: int = 1
-) -> DataFrame:
-    """All-string DataFrame from an in-memory grid (header row → names).
+def grid_to_dataframe(spark: SparkSession, grid: CellGrid) -> DataFrame:
+    """All-string DataFrame from an in-memory grid (row 1 → names).
 
-    Row *r* of the sheet becomes frame row *r - header_row - 1*, with an
+    Row *r* of the sheet becomes frame row *r - 2*, with an
     explicit ``_row_ordinal`` column — the D4 positional-alignment hazard
     (Compare.py:173-176) resolved by carrying the ordinal instead of
     trusting physical order. Header cells name the columns verbatim (any
@@ -49,14 +44,12 @@ def grid_to_dataframe(
     ``col<c>``.
     """
     max_col = max((c for _, c in grid.cells), default=0)
-    headers = [
-        _header_name(grid.get(header_row, c), c) for c in range(1, max_col + 1)
-    ]
-    n_rows = max(grid.max_row() - header_row, 0)
+    headers = [_header_name(grid.get(1, c), c) for c in range(1, max_col + 1)]
+    n_rows = max(grid.max_row() - 1, 0)
     columns: list[list[str | None]] = [[None] * n_rows for _ in headers]
     for (r, c), value in grid.cells.items():
-        if r > header_row and c >= 1 and value is not None:
-            columns[c - 1][r - header_row - 1] = str(value)
+        if r > 1 and c >= 1 and value is not None:
+            columns[c - 1][r - 2] = str(value)
     table = pa.Table.from_arrays(
         [pa.array(col, pa.string()) for col in columns]
         + [pa.array(range(n_rows), pa.int64())],
@@ -74,14 +67,12 @@ def _header_name(value, c: int) -> str:
     return name if name.strip() else f"col{c}"
 
 
-def read_csv_all_string(
-    spark: SparkSession, path: str, header: bool = True
-) -> DataFrame:
-    """Distributed all-string scan of a CSV snapshot (the scale path for
-    S2 semantics: ``inferSchema=false`` keeps every column StringType)."""
-    df = (
-        spark.read.option("header", str(header).lower())
+def read_csv_all_string(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed all-string scan of a headed CSV snapshot (the scale path
+    for S2 semantics: ``inferSchema=false`` types every column StringType,
+    whatever its header text)."""
+    return (
+        spark.read.option("header", "true")
         .option("inferSchema", "false")
         .csv(path)
     )
-    return df.select([F.col(c).cast("string").alias(c) for c in df.columns])

@@ -40,9 +40,9 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def corpus_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
+def corpus_fingerprint(sf_dir: str) -> tuple:
     """Cheap content-identity key for the corpus at ``sf_dir`` — the
-    (path, mtime_ns, size) triples of the table's parquet file(s).
+    (path, mtime_ns, size) triples of ``documents.parquet``'s file(s).
 
     :func:`built_dir` keys every derived per-(process, sf) artifact on
     this, not on ``sf_dir`` alone (ADVICE r12): if the corpus at the
@@ -53,7 +53,7 @@ def corpus_fingerprint(sf_dir: str, table: str = "documents") -> tuple:
     """
     import pathlib
 
-    p = pathlib.Path(sf_dir) / f"{table}.parquet"
+    p = pathlib.Path(sf_dir) / "documents.parquet"
     if p.is_dir():
         return tuple(
             (str(q.relative_to(p)), q.stat().st_mtime_ns, q.stat().st_size)

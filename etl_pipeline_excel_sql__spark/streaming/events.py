@@ -89,18 +89,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def windowed_counts_stream(
-    events: DataFrame, watermark: str = "1 hour", window: str = "1 hour"
-) -> DataFrame:
-    """Watermarked tumbling-window counts/sums by event type.
+def windowed_counts_stream(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) tumbling-window (1 hour) counts/sums by event
+    type.
 
     Late rows beyond the watermark are dropped and their state evicted —
     bounded state at any input rate. Output matches the batch
     ``window_agg_events`` query on the same (complete) input.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # Cross-engine float parity: a double SUM accumulates in
@@ -126,27 +125,28 @@ def windowed_counts_stream(
     )
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap: str = "30 minutes 1 microsecond",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Gap-based sessionization with ``session_window`` (merging state).
+def sessionize_stream(events: DataFrame) -> DataFrame:
+    """Gap-based sessionization with ``session_window`` (merging state),
+    watermarked at 1 hour.
 
     Equivalent to the batch lag/cumsum sessionization for a complete input:
-    both split a user's event sequence at >gap silences. The default gap
-    carries a 1 µs pad because the two formulations disagree at EXACTLY the
-    gap boundary: the batch rule (``diff > 30min`` starts a session) keeps
-    a 30:00.000000 silence in-session, while ``session_window``'s window is
-    the half-open ``[start, start+gap)`` and would split it. With
+    both split a user's event sequence at >30 min silences. The session
+    gap, ``30 minutes 1 microsecond``, carries a 1 µs pad because the two
+    formulations disagree at EXACTLY the gap boundary: the batch rule
+    (``diff > 30min`` starts a session) keeps a 30:00.000000 silence
+    in-session, while ``session_window``'s window is the half-open
+    ``[start, start+gap)`` and would split it. With
     microsecond-resolution timestamps, ``diff < 30min + 1µs`` and
     ``diff <= 30min`` are identical predicates, so the pad makes the
     streaming and batch sessionizations equivalent for every input rather
     than merely for inputs with no exact-boundary silences.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(
+            F.session_window("ts", "30 minutes 1 microsecond").alias("w"),
+            "user_id",
+        )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -168,28 +168,20 @@ def enrich_stream(events: DataFrame, dim: DataFrame, key: str) -> DataFrame:
     return events.join(F.broadcast(dim), on=key, how="left")
 
 
-def stream_state_partitions() -> int:
-    """Shuffle/state-store partition count for STATEFUL streams, sized
-    to STATE, not to cores (round 14, guide §2; r13 verdict #4).
-
-    A stateful streaming query fixes its state-store partition count at
-    the first micro-batch (it is baked into the checkpoint), so it is a
-    DESIGN parameter to choose per stream, not a runtime knob: one state
-    store instance per partition per stateful operator runs every
-    micro-batch whether or not it holds keys. Defaulting it to the core
-    count (32 locally) made each micro-batch of the drains pay 32 state
-    store tasks over a watermark-horizon working set of a few thousand
-    keys — the r13 scaling probe measured ``stream_join_left`` 3×
-    FASTER at 8 cores than 32 for exactly this reason. The default (8)
-    matches the measured working set of the bounded event drains; a
-    production deployment sizes it to expected state rows / target
-    state-per-partition via ``SPARK_GRAFT_STREAM_SHUFFLE`` (e.g.
-    hundreds for a multi-GB state) — it is a data-shape parameter, so
-    there is deliberately NO scaling with local core count.
-    """
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+#: Shuffle/state-store partition count for STATEFUL streams, sized to
+#: STATE, not to cores (round 14, guide §2; r13 verdict #4). A stateful
+#: streaming query fixes its state-store partition count at the first
+#: micro-batch (it is baked into the checkpoint), so it is a DESIGN
+#: parameter, not a runtime knob: one state store instance per partition
+#: per stateful operator runs every micro-batch whether or not it holds
+#: keys. Sizing it to the core count (32 locally) made each micro-batch
+#: of the drains pay 32 state store tasks over a watermark-horizon working
+#: set of a few thousand keys — the r13 scaling probe measured
+#: ``stream_join_left`` 3× FASTER at 8 than 32 for exactly this reason.
+#: 8 matches the measured working set of the bounded event drains; it is
+#: a data-shape value, so there is deliberately NO scaling with local
+#: core count.
+STREAM_STATE_PARTITIONS = 8
 
 
 class _stream_shuffle_conf:
@@ -205,7 +197,7 @@ class _stream_shuffle_conf:
     def __enter__(self):
         self._prior = self._spark.conf.get("spark.sql.shuffle.partitions")
         self._spark.conf.set(
-            "spark.sql.shuffle.partitions", str(stream_state_partitions())
+            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
         )
         return self
 
@@ -353,11 +345,10 @@ def running_user_totals_stream(
     )
 
 
-def dedup_events_stream(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+def dedup_events_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup: first occurrence of each ``event_id`` wins;
-    re-deliveries inside the watermark horizon are dropped statefully.
+    re-deliveries inside the 1-hour watermark horizon are dropped
+    statefully.
 
     ``dropDuplicatesWithinWatermark`` keys state by event_id and evicts
     entries once the watermark passes them — bounded state for at-least-
@@ -365,27 +356,25 @@ def dedup_events_stream(
     batch ``exact_dedup``/``dedup_lastwins`` operators. State carries only
     the key and its watermark timestamp, never the payload.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
 
-def sliding_counts_stream(
-    events: DataFrame,
-    watermark: str = "1 hour",
-    window: str = "2 hours",
-    slide: str = "1 hour",
-) -> DataFrame:
-    """Watermarked sliding-window counts by event type.
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) sliding-window (2 hours, sliding by 1 hour)
+    counts by event type.
 
-    Each event contributes to window/slide overlapping windows; state per
+    Each event contributes to two overlapping windows; state per
     open window is evicted at the watermark exactly as in the tumbling
     case. The batch twin is a groupBy over the same ``F.window`` columns —
     the streaming test asserts equality on complete input.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(
+            F.window("ts", "2 hours", "1 hour").alias("w"), "event_type"
+        )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -397,10 +386,8 @@ def sliding_counts_stream(
     )
 
 
-def m4_downsample_stream(
-    events: DataFrame, watermark: str = "1 hour", window: str = "1 hour"
-) -> DataFrame:
-    """Watermarked M4 downsampling: (min, max, first, last) per
+def m4_downsample_stream(events: DataFrame) -> DataFrame:
+    """Watermarked (1 hour) M4 downsampling: (min, max, first, last) per
     (event_type, hour window) BY THE STREAMING ENGINE.
 
     first/last are ``min_by``/``max_by`` over the (epoch-micros,
@@ -412,8 +399,8 @@ def m4_downsample_stream(
     """
     key = F.struct(F.unix_micros(F.col("ts")).alias("tus"), F.col("event_id"))
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
             F.min("value").alias("v_min"),
@@ -436,17 +423,14 @@ def m4_downsample_stream(
 
 
 def purchase_attribution_stream(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "2 hours",
-    watermark: str = "4 hours",
+    clicks: DataFrame, purchases: DataFrame
 ) -> DataFrame:
     """Stream-stream interval join: purchases attributed to a prior click
-    by the same user within ``horizon``.
+    by the same user within 2 hours.
 
-    Both inputs are watermarked so the join state is bounded: a buffered
-    click can be evicted once the purchase-side watermark passes
-    ``click.ts + horizon``. The time-range predicate makes this an
+    Both inputs are watermarked (4 hours) so the join state is bounded: a
+    buffered click can be evicted once the purchase-side watermark passes
+    ``click.ts + 2 hours``. The time-range predicate makes this an
     interval join — Spark keys state by user and prunes per the range.
     Inner join only here; outer stream-stream joins emit nulls at
     watermark expiry with the same state bounds.
@@ -455,20 +439,20 @@ def purchase_attribution_stream(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
+    ).withWatermark("click_ts", "4 hours")
     p = purchases.select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("purchase_ts"),
         F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", watermark)
+    ).withWatermark("purchase_ts", "4 hours")
     return c.join(
         p,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
+            <= F.col("click_ts") + F.expr("INTERVAL 2 hours")
         ),
     ).select(
         F.col("c_user").alias("user_id"),
@@ -482,10 +466,8 @@ def purchase_attribution_stream(
     )
 
 
-def hll_users_stream(
-    events: DataFrame, watermark: str = "1 hour", window: str = "1 hour"
-) -> DataFrame:
-    """Per-window distinct-user HLL BY THE STREAMING ENGINE — the
+def hll_users_stream(events: DataFrame) -> DataFrame:
+    """Per-hour-window distinct-user HLL BY THE STREAMING ENGINE — the
     sketch as bounded streaming state.
 
     ``COUNT(DISTINCT)`` is unsupported in streaming for the same reason
@@ -520,8 +502,8 @@ def hll_users_stream(
         _rho(F.expr(f"__h DIV {HLL_M}")).alias("rho"),
     )
     regs = (
-        keyed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
+        keyed.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(
             *[
                 F.max(F.when(F.col("reg") == j, F.col("rho"))).alias(
@@ -557,10 +539,8 @@ def hll_users_stream(
     )
 
 
-def cms_cells_stream(
-    events: DataFrame, watermark: str = "1 hour", window: str = "1 hour"
-) -> DataFrame:
-    """Per-window Count-Min cells BY THE STREAMING ENGINE — the
+def cms_cells_stream(events: DataFrame) -> DataFrame:
+    """Per-hour-window Count-Min cells BY THE STREAMING ENGINE — the
     frequency sketch as bounded streaming state, the CMS twin of
     ``hll_users_stream``.
 
@@ -593,8 +573,8 @@ def cms_cells_stream(
         ).alias("row", "col"),
     )
     return (
-        cells.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "row", "col")
+        cells.withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "row", "col")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -608,23 +588,21 @@ def cms_cells_stream(
 
 
 def left_attribution_stream(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "2 hours",
-    watermark: str = "4 hours",
+    clicks: DataFrame, purchases: DataFrame
 ) -> DataFrame:
     """LEFT-OUTER stream-stream interval join: every click, attributed
-    to a purchase within ``horizon`` when one exists, emitted with NULL
+    to a purchase within 2 hours when one exists, emitted with NULL
     purchase columns when none arrives — the state-timeout semantics
     :func:`purchase_attribution_stream` (inner) does not exercise.
 
     The engine buffers an unmatched click until the purchase-side
-    watermark proves no future match is possible (``click_ts + horizon``
-    behind the watermark), THEN emits the null row — so outer results
-    near the end of a bounded drain are withheld by construction (the
-    watermark never advances past the final events). Callers comparing
-    against a batch twin must restrict BOTH sides to clicks older than
-    ``max_ts − watermark − horizon`` (plus a safety margin): see
+    watermark (4 hours) proves no future match is possible
+    (``click_ts + 2 hours`` behind the watermark), THEN emits the null
+    row — so outer results near the end of a bounded drain are withheld
+    by construction (the watermark never advances past the final
+    events). Callers comparing against a batch twin must restrict BOTH
+    sides to clicks older than ``max_ts − 4 h − 2 h`` (plus a safety
+    margin): see
     ``q_stream_join_left``. State stays bounded exactly as in the inner
     join; the outer behavior only changes what is emitted at eviction.
     Emits the raw ``click_ts`` alongside the formatted time so the
@@ -634,20 +612,20 @@ def left_attribution_stream(
         F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
         F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
+    ).withWatermark("click_ts", "4 hours")
     p = purchases.select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("purchase_ts"),
         F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", watermark)
+    ).withWatermark("purchase_ts", "4 hours")
     return c.join(
         p,
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
+            <= F.col("click_ts") + F.expr("INTERVAL 2 hours")
         ),
         "leftOuter",
     ).select(

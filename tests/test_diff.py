@@ -7,7 +7,6 @@ from hypothesis import strategies as st
 
 from etl_pipeline_excel_sql__spark.operators.diff import (
     dedup_last_wins,
-    new_rows,
     snapshot_diff,
     word_diff,
 )
@@ -34,8 +33,6 @@ def test_blank_keys_dropped_and_new_rows(spark):
     assert rows["b"].row_status == "new"
     # new rows skip cell classification (D2 precedence, Compare.py:179-185)
     assert rows["b"].v__status is None
-    nr = new_rows(old, new, "k")
-    assert {r.k for r in nr.collect()} == {"b"}
 
 
 def test_cell_classification(spark):

@@ -147,7 +147,7 @@ def test_header_matched_writer_appends_after_existing(spark):
     res = reconcile_schema(["Ministry", "Cost"], ["ministry", "cost"])
     grid = CellGrid()
     grid.set(6, 1, "existing")  # row 6 occupied -> append starts at 7
-    n = write_header_matched(df, grid, res.mapping, first_data_row=6)
+    n = write_header_matched(df, grid, res.mapping)
     assert n == 2
     assert grid.get(7, 1) == "m1" and grid.get(7, 2) == 10
     assert grid.get(8, 1) == "m2" and grid.get(8, 2) == 20

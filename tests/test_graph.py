@@ -78,7 +78,7 @@ def test_triangle_participation_bounded_block_storage(spark):
     )
     counts = []
     for _ in range(3):
-        triangle_participation(pairs, "id_a", "id_b").collect()
+        triangle_participation(pairs).collect()
         counts.append(len(_persisted_rdd_ids(spark)))
     assert counts[2] <= counts[0] + 1  # bounded, not one new table per call
 

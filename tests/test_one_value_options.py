@@ -1,16 +1,20 @@
-"""Every on/off option in the package is used both ways (no Spark needed).
+"""Every option in the package is set by some caller (no Spark needed).
 
 A keyword option with a ``True``/``False`` default selects between two
 code paths. When every caller outside ``tests/`` passes the same value,
 the other path runs only in tests or nowhere, and the option should be a
-constant. The census resolves calls by function name across the package,
-``tools/``, ``perfbench/``, ``bench.py`` and ``__spark_entry__.py``:
+constant. More generally, a keyword option of any default that no caller
+sets, tests included, is a constant spelled as a parameter. The census
+resolves calls by function name across the package, ``tools/``,
+``perfbench/``, ``bench.py`` and ``__spark_entry__.py`` (and ``tests/``
+for the any-default rule):
 
 * a call that omits the option passes its default;
 * a call that forwards a same-named parameter of its enclosing function
   passes whatever values that function receives;
-* any other non-literal argument, ``*args`` or ``**kwargs`` counts as
-  both values.
+* a literal argument passes its value, so a literal equal to the default
+  sets nothing;
+* any other argument, ``*args`` or ``**kwargs`` counts as every value.
 
 A second rule: a ``LineageTruncator`` that is constructed and
 ``.truncate``d in one expression has no prior cut to retire, so the
@@ -26,7 +30,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = ROOT / "etl_pipeline_excel_sql__spark"
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
-BOTH = frozenset({True, False})
+ANY = "<any value>"
 
 #: Options that keep one value in use, with the reason they stay.
 KEPT = {
@@ -38,10 +42,31 @@ KEPT = {
     ),
 }
 
+_CHECKPOINT_DIR = (
+    "deployment path for reliable checkpoints; tests set the same "
+    "parameter on connected_components and pagerank_integer"
+)
+_CALLER_SLOT = (
+    "the caller-owned slot of operators/iterative.py's lifetime rule; "
+    "omitted, the call uses the session's shared_slot default"
+)
 
-def _caller_sources() -> list[Path]:
+#: Keyword options that no caller sets, with the reason they stay.
+KEPT_UNSET = {
+    "bpe_train_merges.checkpoint_dir": _CHECKPOINT_DIR,
+    "bpe_train_merges_from_words.checkpoint_dir": _CHECKPOINT_DIR,
+    "cluster_safe_split_audit.checkpoint_dir": _CHECKPOINT_DIR,
+    "kcore_membership.checkpoint_dir": _CHECKPOINT_DIR,
+    "label_propagation.checkpoint_dir": _CHECKPOINT_DIR,
+    "minhash_lsh_pairs_cross.cache": _CALLER_SLOT,
+    "minhash_lsh_pairs_ingest_indexed.cache": _CALLER_SLOT,
+    "pq_train_codebooks.truncator": _CALLER_SLOT,
+}
+
+
+def _caller_sources(tests: bool = False) -> list[Path]:
     paths = sorted(PKG.rglob("*.py"))
-    for d in ("tools", "perfbench"):
+    for d in ("tools", "perfbench") + (("tests",) if tests else ()):
         paths += sorted((ROOT / d).rglob("*.py"))
     return paths + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 
@@ -50,9 +75,17 @@ def _trees(paths):
     return [(p, ast.parse(p.read_text(), str(p))) for p in paths]
 
 
-def _bool_options(trees):
+def _value(expr, fallback=ANY):
+    try:
+        return repr(ast.literal_eval(expr))
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return fallback
+
+
+def _options(trees, keep):
     """(function name, option) → (position or None, default) for every
-    bool-literal-defaulted parameter of a package function."""
+    defaulted parameter of a package function for which
+    ``keep(function name, default)`` holds."""
     opts = {}
     for path, tree in trees:
         if not path.is_relative_to(PKG):
@@ -66,9 +99,9 @@ def _bool_options(trees):
             pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
             pairs += [(k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d]
             for arg, d in pairs:
-                if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                if keep(fn.name, d):
                     i = pos.index(arg) - skip if arg in pos else None
-                    opts[(fn.name, arg.arg)] = (i, d.value)
+                    opts[(fn.name, arg.arg)] = (i, _value(d, ast.dump(d)))
     return opts
 
 
@@ -94,10 +127,10 @@ def _calls(trees):
     return out
 
 
-def _census() -> dict[str, set]:
-    """``"function.option"`` → the values its non-test callers pass."""
-    trees = _trees(_caller_sources())
-    opts = _bool_options(trees)
+def _census(keep, tests: bool = False) -> dict[str, tuple[str, set]]:
+    """``"function.option"`` → (its default, the values its callers pass)."""
+    trees = _trees(_caller_sources(tests))
+    opts = _options(trees, keep)
     by_name = defaultdict(list)
     for name, call, params, encl in _calls(trees):
         by_name[name].append((call, params, encl))
@@ -108,7 +141,7 @@ def _census() -> dict[str, set]:
         for call, params, encl in by_name.get(fn, []):
             kw = {k.arg: k.value for k in call.keywords}
             if None in kw or any(isinstance(a, ast.Starred) for a in call.args):
-                values[(fn, opt)] |= BOTH
+                values[(fn, opt)].add(ANY)
                 continue
             if opt in kw:
                 expr = kw[opt]
@@ -117,36 +150,97 @@ def _census() -> dict[str, set]:
             else:
                 values[(fn, opt)].add(default)
                 continue
-            if isinstance(expr, ast.Constant) and isinstance(expr.value, bool):
-                values[(fn, opt)].add(expr.value)
-            elif isinstance(expr, ast.Name) and expr.id in params:
+            if isinstance(expr, ast.Name) and expr.id in params:
                 forwards[(fn, opt)].add((encl, expr.id))
             else:
-                values[(fn, opt)] |= BOTH
+                values[(fn, opt)].add(_value(expr))
     changed = True
     while changed:
         changed = False
         for key, srcs in forwards.items():
             for src in srcs:
-                extra = values.get(src, BOTH) - values[key]
+                extra = values.get(src, {ANY}) - values[key]
                 if extra:
                     values[key] |= extra
                     changed = True
     return {
-        f"{fn}.{opt}": vals
+        f"{fn}.{opt}": (opts[(fn, opt)][1], vals)
         for (fn, opt), vals in values.items()
         if by_name.get(fn)
     }
 
 
+def _is_bool(name, default):
+    return isinstance(default, ast.Constant) and isinstance(default.value, bool)
+
+
+def _is_public(name, default):
+    return not name.startswith("_")
+
+
 def test_every_bool_option_is_passed_both_ways():
-    census = _census()
-    one_value = sorted(k for k, v in census.items() if len(v) < 2)
+    census = _census(_is_bool)
+    one_value = sorted(
+        k for k, (_, v) in census.items() if ANY not in v and len(v) < 2
+    )
     # KEPT entries must still be found: this also shows the census
     # resolves calls at all
     assert set(KEPT) <= set(one_value), sorted(set(KEPT) - set(one_value))
     flipped_by_none = [k for k in one_value if k not in KEPT]
     assert not flipped_by_none, flipped_by_none
+
+
+def test_every_keyword_option_is_set_by_some_caller():
+    census = _census(_is_public, tests=True)
+    unset = sorted(k for k, (d, v) in census.items() if not v - {d})
+    # a stale KEPT_UNSET entry fails too
+    assert unset == sorted(KEPT_UNSET), (len(unset), unset)
+
+
+#: The environment variables the package may read: where it runs, not how
+#: it computes.
+ENV_SETTINGS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_SF_DIR"}
+
+
+def _is_environ(node) -> bool:
+    return getattr(node, "attr", getattr(node, "id", None)) == "environ"
+
+
+def test_every_environment_read_is_a_deployment_setting():
+    """``os.environ[k]``, ``os.environ.get(k)``, ``k in os.environ`` and
+    ``os.getenv(k)`` in the package name a literal ``ENV_SETTINGS`` key;
+    any other use of the environment fails too."""
+    bad = []
+    for path, tree in _trees(sorted(PKG.rglob("*.py"))):
+        where = path.relative_to(ROOT)
+        seen = set()
+        for node in ast.walk(tree):
+            key = environ = None
+            if isinstance(node, ast.Subscript) and _is_environ(node.value):
+                environ, key = node.value, node.slice
+            elif isinstance(node, ast.Compare) and any(
+                _is_environ(c) for c in node.comparators
+            ):
+                environ, key = node.comparators[0], node.left
+            elif isinstance(node, ast.Call):
+                f = node.func
+                if isinstance(f, ast.Attribute) and _is_environ(f.value):
+                    environ = f.value
+                elif getattr(f, "attr", getattr(f, "id", None)) == "getenv":
+                    environ = f
+                key = node.args[0] if environ and node.args else None
+            if environ is None:
+                continue
+            seen.add(id(environ))
+            name = key.value if isinstance(key, ast.Constant) else None
+            if name not in ENV_SETTINGS:
+                bad.append(f"{where}:{node.lineno}: {name!r}")
+        bad += [
+            f"{where}:{n.lineno}: unrecognised use of the environment"
+            for n in ast.walk(tree)
+            if _is_environ(n) and id(n) not in seen
+        ]
+    assert not bad, bad
 
 
 def test_no_one_shot_lineage_truncator():

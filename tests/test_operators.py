@@ -71,7 +71,7 @@ def test_simhash_exact_dups_equal_neardups_close(spark):
 
 def test_ngram_jaccard_blocked(spark):
     pairs = {(r.id_a, r.id_b): r.jaccard_sim for r in ngram_jaccard_pairs(
-        _docs(spark), "text", "doc_id", shingle_n=3, threshold=0.1).collect()}
+        _docs(spark), "text", "doc_id", threshold=0.1).collect()}
     assert pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs
 
@@ -91,7 +91,7 @@ def test_containment_catches_embedded_document(spark):
     out = {
         (r.id_a, r.id_b): r.containment
         for r in ngram_containment_pairs(
-            df, "text", "doc_id", shingle_n=3, threshold=0.5
+            df, "text", "doc_id", threshold=0.5
         ).collect()
     }
     assert out == {(1, 2): 1.0}
@@ -231,7 +231,7 @@ def test_ivf_topk_probes_nearest_cells(spark):
 def test_cosine_neardup_pairs_blocked(spark):
     emb = _embeddings(spark)
     pairs = {(r.id_a, r.id_b) for r in cosine_neardup_pairs(
-        emb, threshold=0.9, block_col="label", dims=4).collect()}
+        emb, threshold=0.9, dims=4).collect()}
     assert pairs == {(1, 2), (1, 5), (2, 5)}
 
 
@@ -296,7 +296,7 @@ def test_ngram_jaccard_blocking_resists_first_token_skew(spark):
     pairs = {
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", shingle_n=3, threshold=0.5
+            df, "text", "doc_id", threshold=0.5
         ).collect()
     }
     assert (500, 501) in pairs
@@ -341,8 +341,7 @@ def test_cosine_neardup_srp_prefilter_shrinks_candidates(spark):
     pairs = {
         (r.id_a, r.id_b)
         for r in cosine_neardup_pairs(
-            emb, threshold=0.99, block_col="label", dims=16,
-            srp_bits=6, srp_tables=3,
+            emb, threshold=0.99, dims=16, srp_bits=6, srp_tables=3,
         ).collect()
     }
     assert (1000, 1001) in pairs
@@ -367,7 +366,7 @@ def test_ivf_trained_recall_vs_brute_force(spark, sf_dir):
     ivf = {
         (r.query_id, r.neighbor_id)
         for r in ivf_topk_trained(
-            emb, q, k=5, nprobe=2, ncells=8, iters=2, dims=64
+            emb, q, k=5, ncells=8, iters=2, dims=64
         ).collect()
     }
     recall = len(bf & ivf) / len(bf)

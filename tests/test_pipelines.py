@@ -112,6 +112,47 @@ def test_upload_pipeline_empty_guard_outranks_header_mismatch(tracker):
         )
 
 
+def test_pipelines_take_any_header_text(spark):
+    """Caller-supplied names resolve as the one column they name: a dot in
+    a header is text, not a struct-field path."""
+    src = spark.createDataFrame(
+        [
+            ("P1", "MOH", "2024-01-15", "0.876", "r1"),
+            ("P2", "MAG", "2023-06-30", "0.5", "r2"),
+            ("P3", "MOH", "garbage", "1.0", "r3"),
+        ],
+        "`OB.Main ID` string, Ministry string, `RFP.Date` string, "
+        "`Design.Readiness` string, `Risk.Notes` string",
+    )
+    res = download_pipeline(
+        src,
+        filter_col="OB.Main ID",
+        filter_value="P1",
+        drop_cols=["Risk.Notes"],
+        date_cols=["RFP.Date"],
+        percent_cols=["Design.Readiness"],
+        run_date=dt.date(2026, 8, 13),
+        skip_cols=frozenset(),
+    )
+    assert res.rows_written == 1
+    assert [res.grid.get(8, c) for c in range(1, 6)] == [
+        "P1", "MOH", "01-15-2024", "88%", None,
+    ]
+    template = ["OB.Main ID", "Design.Readiness"]
+    res = upload_pipeline(
+        src, ministry="ALL", ministry_list=["MOH", "MAG"],
+        template_header_cells=template,
+    )
+    rows = [(res.grid.get(r, 1), res.grid.get(r, 2)) for r in (6, 7, 8)]
+    assert rows == [("P1", "0.876"), ("P3", "1.0"), ("P2", "0.5")]
+    res = upload_pipeline(
+        src, ministry="MAG", ministry_list=["MOH", "MAG"],
+        template_header_cells=template,
+    )
+    assert res.rows_written == 1
+    assert (res.grid.get(6, 1), res.grid.get(6, 2)) == ("P2", "0.5")
+
+
 def test_resolve_columns():
     assert resolve_columns(
         ["OB Main ID", "Status Notes", "Gone"],

@@ -53,13 +53,18 @@ def test_grid_to_dataframe_keeps_any_header_verbatim(spark):
 
 
 def test_csv_all_string_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([(1, 2.5, "x"), (2, 3.0, None)], "a int, b double, c string")
+    df = spark.createDataFrame(
+        [(1, 2.5, "x", 9.5), (2, 3.0, None, None)],
+        "a int, b double, c string, `Unit.Cost` double",
+    )
     path = str(tmp_path / "csv")
     write_csv(df, path)
     back = read_csv_all_string(spark, path)
+    # a dot in a header is text, not a struct-field path
+    assert back.columns == ["a", "b", "c", "Unit.Cost"]
     assert all(f.dataType.simpleString() == "string" for f in back.schema.fields)
-    got = {r.a: (r.b, r.c) for r in back.collect()}
-    assert got["1"] == ("2.5", "x")
+    got = {r.a: (r.b, r.c, r["Unit.Cost"]) for r in back.collect()}
+    assert got["1"] == ("2.5", "x", "9.5")
     assert got["2"][0] == "3.0"
 
 

@@ -38,7 +38,6 @@ def test_stats_internally_consistent_and_bound_the_operator(spark, sf_dir):
     verified = cosine_neardup_pairs(
         emb,
         threshold=0.0,
-        block_col="label",
         dims=EMB_DIMS,
         srp_bits=SRP_NEARDUP_BITS,
         srp_tables=SRP_NEARDUP_TABLES,

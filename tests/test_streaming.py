@@ -146,7 +146,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .load(str(src))
     )
     events = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    counts = windowed_counts_stream(events, watermark="1 hour", window="1 hour")
+    counts = windowed_counts_stream(events)
     q = (
         counts.writeStream.format("memory")
         .queryName("late_test")
@@ -274,7 +274,7 @@ def test_dedup_stream_drops_redelivered_ids(spark, tmp_path):
     )
     events = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     q = (
-        dedup_events_stream(events, watermark="1 hour")
+        dedup_events_stream(events)
         .writeStream.format("memory")
         .queryName("dedup_stream_test")
         .outputMode("append")

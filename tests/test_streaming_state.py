@@ -79,7 +79,7 @@ def test_sessionize_state_is_bounded_by_watermark_horizon(spark, tmp_path):
     # session_window aggregation only supports append output: a session
     # row is emitted once, when the watermark finalizes it.
     result, metrics = run_with_state_metrics(
-        sessionize_stream(events, watermark="1 hour"),
+        sessionize_stream(events),
         "sess_state_test",
         output_mode="append",
     )
@@ -120,9 +120,7 @@ def test_sliding_counts_state_is_bounded_by_watermark_horizon(
 
     events = _multi_batch_source(spark, tmp_path, [batch0, batch1, batch2])
     result, metrics = run_with_state_metrics(
-        sliding_counts_stream(
-            events, watermark="1 hour", window="2 hours", slide="1 hour"
-        ),
+        sliding_counts_stream(events),
         "slide_state_test",
     )
 
@@ -156,7 +154,7 @@ def test_cms_cells_state_is_capped_at_sketch_size(spark, tmp_path):
     batch2 = [(200_000, BASE + 51 * H, 5, "click", 1.0, "{}")]
     events = _multi_batch_source(spark, tmp_path, [batch0, batch1, batch2])
     result, metrics = run_with_state_metrics(
-        cms_cells_stream(events, watermark="1 hour"),
+        cms_cells_stream(events),
         "cms_state_test",
         output_mode="update",
     )

@@ -198,9 +198,9 @@ COMMENTARY = {
         "bit-identical across engines."
     ),
     "join_skew_salted": (
-        "Salted hot-key join: the small side expands salt_buckets× via "
+        "Salted hot-key join: the small side expands 8× via "
         "explode, the big side tags a random salt, and the join keys "
-        "include __salt — a hot key's probe rows spread over salt_buckets "
+        "include __salt — a hot key's probe rows spread over 8 "
         "reducers. Results equal the plain join (oracle-verified); salt "
         "only changes physical placement."
     ),
