@@ -46,10 +46,10 @@ def ws_token_count(col: Column | str) -> Column:
     return F.size(ws_tokens(col))
 
 
-def bpe_token_count(col: Column | str) -> Column:
-    """Count of BPE-ish pre-tokens (word runs + individual symbols)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_SPLIT_RE), 0))
+def bpe_token_count() -> Column:
+    """Count of ``text``'s BPE-ish pre-tokens (word runs + individual
+    symbols)."""
+    return F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_SPLIT_RE), 0))
 
 
 def shingles(tokens: Column, n: int = 3) -> Column:

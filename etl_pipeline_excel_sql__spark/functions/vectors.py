@@ -102,11 +102,13 @@ def cosine(a: Column | str, b: Column | str, dims: int | None = None) -> Column:
     )
 
 
-def cosine_sql(a: str, b: str, dims: int) -> str:
-    """Cosine as one SQL string (see :func:`dot_sql` for why text)."""
+def cosine_sql(dims: int) -> str:
+    """Cosine of ``embedding`` and ``centroid`` as one SQL string (see
+    :func:`dot_sql` for why text)."""
     return (
-        f"(({dot_sql(a, b, dims)}) / (SQRT({l2_norm_sq_sql(a, dims)})"
-        f" * SQRT({l2_norm_sq_sql(b, dims)})))"
+        f"(({dot_sql('embedding', 'centroid', dims)})"
+        f" / (SQRT({l2_norm_sq_sql('embedding', dims)})"
+        f" * SQRT({l2_norm_sq_sql('centroid', dims)})))"
     )
 
 

@@ -41,13 +41,14 @@ def _bit_pos(key: Column, seed: int) -> Column:
     return md5_hash60_seeded(key, seed) % F.lit(M_BITS).cast("bigint")
 
 
-def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
-    """Aggregate the key side into Bloom words ``(word_idx, word)``.
+def bloom_build(keys: DataFrame) -> DataFrame:
+    """Aggregate the ``o_orderkey`` side into Bloom words ``(word_idx,
+    word)``.
 
     One narrow shuffle of at most ``M_BITS/64`` rows; the per-partition
     ``bit_or`` partials mean the full key set never moves.
     """
-    key = F.col(key_col).cast("string")
+    key = F.col("o_orderkey").cast("string")
     # ONE scan of the key side: all K bit positions per key in a single
     # explode (a per-seed select unioned K times would re-run the build
     # subtree K times — no exchange reuse, since the hash exprs differ).
@@ -67,16 +68,14 @@ def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-def bloom_prefilter(
-    probe: DataFrame, probe_key: str, bloom_words: DataFrame
-) -> DataFrame:
-    """Keep only probe rows whose key passes the Bloom filter.
+def bloom_prefilter(probe: DataFrame, bloom_words: DataFrame) -> DataFrame:
+    """Keep only probe rows whose ``l_orderkey`` passes the Bloom filter.
 
     ``K`` broadcast hash joins (each against the ≤``M_BITS/64``-row word
     table) and a bit test each — no shuffle of the probe side at all.
     """
     out = probe
-    key = F.col(probe_key).cast("string")
+    key = F.col("l_orderkey").cast("string")
     for seed in range(K):
         pos = _bit_pos(key, seed)
         words = F.broadcast(

@@ -191,7 +191,6 @@ def _accept_batch(
 
 def bpe_train_merges(
     docs: DataFrame,
-    text_col: str,
     n_merges: int,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -206,16 +205,16 @@ def bpe_train_merges(
     if n_merges < 1:
         raise ValueError("bpe_train_merges: n_merges must be >= 1")
     return bpe_train_merges_from_words(
-        word_frequencies(docs, text_col), n_merges, checkpoint_dir
+        word_frequencies(docs), n_merges, checkpoint_dir
     )
 
 
-def word_frequencies(docs: DataFrame, text_col: str) -> DataFrame:
+def word_frequencies(docs: DataFrame) -> DataFrame:
     """The one corpus pass: distinct words with corpus frequencies —
     train AND encode consume this table; compute (and, in a pipeline,
     persist) it once rather than re-exploding the corpus per stage."""
     return (
-        docs.select(F.explode(ws_tokens(F.col(text_col))).alias("w"))
+        docs.select(F.explode(ws_tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -324,7 +323,7 @@ def bpe_train_merges_from_words(
     return local_df(spark, merges, MERGES_SCHEMA)
 
 
-def _bpe_cte_parts(docs_cte: str, text_col: str, n_merges: int) -> list[str]:
+def _bpe_cte_parts(docs_cte: str, n_merges: int) -> list[str]:
     """The shared unrolled-round CTE chain: ``w0`` (char-split distinct
     words) through ``w{n}`` (fully merged), with ``m{i}`` holding round
     i's winning pair. Every CTE is MATERIALIZED — each round references
@@ -337,7 +336,7 @@ def _bpe_cte_parts(docs_cte: str, text_col: str, n_merges: int) -> list[str]:
                         i -> substr(w, CAST(i AS INT), 1)) AS syms
   FROM (
     SELECT UNNEST(list_filter(
-             regexp_split_to_array(trim(t.{text_col}), '\\s+'),
+             regexp_split_to_array(trim(t.text), '\\s+'),
              x -> x <> '')) AS w
     FROM ({docs_cte}) t
   )
@@ -375,13 +374,13 @@ def _bpe_cte_parts(docs_cte: str, text_col: str, n_merges: int) -> list[str]:
     return parts
 
 
-def bpe_unrolled_sql(docs_cte: str, text_col: str, n_merges: int) -> str:
-    """DuckDB oracle twin of :func:`bpe_train_merges`.
+def bpe_unrolled_sql(n_merges: int) -> str:
+    """DuckDB oracle twin of :func:`bpe_train_merges` over ``documents``.
 
-    ``docs_cte`` must yield the text column. Returns a complete query
-    producing ``(merge_rank, left, right, pair_count)``.
+    Returns a complete query producing ``(merge_rank, left, right,
+    pair_count)``.
     """
-    parts = _bpe_cte_parts(docs_cte, text_col, n_merges)
+    parts = _bpe_cte_parts("SELECT text FROM documents", n_merges)
     final = "\nUNION ALL\n".join(
         f"SELECT CAST({i - 1} AS INT) AS merge_rank, a AS \"left\","
         f" b AS \"right\", CAST(cnt AS BIGINT) AS pair_count FROM m{i}"
@@ -390,13 +389,12 @@ def bpe_unrolled_sql(docs_cte: str, text_col: str, n_merges: int) -> str:
     return "WITH " + ",\n".join(parts) + "\n" + final
 
 
-def bpe_vocab_unrolled_sql(
-    docs_cte: str, text_col: str, n_merges: int, top_k: int
-) -> str:
+def bpe_vocab_unrolled_sql(n_merges: int, top_k: int) -> str:
     """DuckDB oracle twin of train-then-apply (:func:`bpe_train_merges`
-    feeding :func:`bpe_subword_vocab`): the fully merged word table
-    ``w{n}`` exploded into weighted subword frequencies, top-``top_k``."""
-    parts = _bpe_cte_parts(docs_cte, text_col, n_merges)
+    feeding :func:`bpe_subword_vocab`) over ``documents``: the fully
+    merged word table ``w{n}`` exploded into weighted subword
+    frequencies, top-``top_k``."""
+    parts = _bpe_cte_parts("SELECT text FROM documents", n_merges)
     final = f"""SELECT subword, CAST(SUM(freq) AS BIGINT) AS n_occurrences
 FROM (SELECT freq, UNNEST(syms) AS subword FROM w{n_merges})
 GROUP BY subword
@@ -407,7 +405,6 @@ LIMIT {top_k}"""
 
 def bpe_encode_words(
     docs: DataFrame,
-    text_col: str,
     merges: list[tuple[str, str]],
     words: DataFrame | None = None,
 ) -> DataFrame:
@@ -425,7 +422,7 @@ def bpe_encode_words(
     artifact, exactly what a tokenizer file ships), this applies it.
     """
     if words is None:
-        words = word_frequencies(docs, text_col)
+        words = word_frequencies(docs)
     out = words.select(
         "w",
         "freq",
@@ -480,7 +477,6 @@ def bpe_vocab_ids(
 
 def bpe_doc_token_ids(
     docs: DataFrame,
-    text_col: str,
     merges: list[tuple[str, str]],
     words: DataFrame | None = None,
 ) -> DataFrame:
@@ -506,10 +502,10 @@ def bpe_doc_token_ids(
     """
     spark = docs.sparkSession
     if words is None:
-        words = word_frequencies(docs, text_col)
+        words = word_frequencies(docs)
     vocab = bpe_vocab_ids(words, merges)
     vdf = local_df(spark, vocab, "sym string, id int")
-    enc = bpe_encode_words(docs, text_col, merges, words=words)
+    enc = bpe_encode_words(docs, merges, words=words)
     wids = (
         enc.select("w", F.posexplode("syms").alias("sp", "sym"))
         .join(F.broadcast(vdf), "sym")
@@ -523,7 +519,7 @@ def bpe_doc_token_ids(
     )
     toks = docs.select(
         "doc_id",
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "w"),
+        F.posexplode(ws_tokens(F.col("text"))).alias("pos", "w"),
     )
     per_doc = (
         toks.join(wids, "w")
@@ -551,7 +547,7 @@ def bpe_doc_token_ids(
 
 
 def _token_ids_ctes(
-    docs_cte: str, text_col: str, n_merges: int, prefix_ctes: str = ""
+    docs_cte: str, n_merges: int, prefix_ctes: str = ""
 ) -> str:
     """Shared oracle CTE chain ending at ``perdoc(doc_id, tids)`` —
     per-document token-id arrays (see :func:`bpe_token_ids_unrolled_sql`
@@ -560,7 +556,7 @@ def _token_ids_ctes(
     chain a DERIVED corpus — e.g. the span-trimmed documents of
     ``plans/spans_queries.q_curate_pack_pipeline`` — as ``docs_cte``
     referencing those CTEs."""
-    parts = _bpe_cte_parts(docs_cte, text_col, n_merges)
+    parts = _bpe_cte_parts(docs_cte, n_merges)
     merge_ids = "\n    UNION ALL\n".join(
         f"    SELECT a || b AS sym,"
         f" (SELECT COUNT(*) FROM alpha) + {i - 1} AS id FROM m{i}"
@@ -589,7 +585,7 @@ alpha AS MATERIALIZED (
 ), tokpos AS MATERIALIZED (
   SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS w
   FROM (SELECT doc_id, list_filter(
-          regexp_split_to_array(trim(t.{text_col}), '\\s+'), x -> x <> '') AS t
+          regexp_split_to_array(trim(t.text), '\\s+'), x -> x <> '') AS t
         FROM ({docs_cte}) t)
 ), perdoc AS MATERIALIZED (
   SELECT doc_id, flatten(list(ids ORDER BY pos)) AS tids
@@ -599,30 +595,28 @@ alpha AS MATERIALIZED (
     )
 
 
-def bpe_token_ids_unrolled_sql(
-    docs_cte: str, text_col: str, n_merges: int
-) -> str:
-    """DuckDB oracle twin of train-then-:func:`bpe_doc_token_ids`: the
+def bpe_token_ids_unrolled_sql(n_merges: int) -> str:
+    """DuckDB oracle twin of train-then-:func:`bpe_doc_token_ids` over
+    ``documents``: the
     unrolled merge chain (``w{n}`` carries the word string), the
     alphabet+merges id table (binary UTF-8 sort == the Python code
     point sort — portable on every plane), per-word id arrays, and the
     per-document ordered flatten. ``token_ids`` is rendered to a
     space-delimited string (:func:`render_packed_for_harness` twin)."""
     return (
-        _token_ids_ctes(docs_cte, text_col, n_merges)
-        + f"""
+        _token_ids_ctes("SELECT doc_id, text FROM documents", n_merges)
+        + """
 SELECT d.doc_id,
        CAST(COALESCE(len(p.tids), 0) AS INT) AS n_subwords,
        array_to_string(COALESCE(p.tids, CAST([] AS INT[])), ' ')
            AS token_ids
-FROM (SELECT doc_id FROM ({docs_cte}) t) d
+FROM (SELECT doc_id FROM (SELECT doc_id, text FROM documents) t) d
 LEFT JOIN perdoc p USING (doc_id)"""
     )
 
 
 def bpe_packed_sequences_unrolled_sql(
-    docs_cte: str, text_col: str, n_merges: int, seq_len: int,
-    prefix_ctes: str = "",
+    docs_cte: str, n_merges: int, seq_len: int, prefix_ctes: str = "",
 ) -> str:
     """DuckDB oracle twin of :func:`pack token ids <bpe_doc_token_ids>`
     → fixed-length LM sequences: the single global prefix-sum window
@@ -632,7 +626,7 @@ def bpe_packed_sequences_unrolled_sql(
     on the Spark side (the harness canonicalizer needs hashable
     cells — the ``array_funcs`` doctrine)."""
     return (
-        _token_ids_ctes(docs_cte, text_col, n_merges, prefix_ctes)
+        _token_ids_ctes(docs_cte, n_merges, prefix_ctes)
         + f""",
 offs AS MATERIALIZED (
   SELECT doc_id, tids,
@@ -742,7 +736,6 @@ def render_packed_for_harness(df: DataFrame) -> DataFrame:
 
 def bpe_subword_vocab(
     docs: DataFrame,
-    text_col: str,
     merges: list[tuple[str, str]],
     top_k: int = 40,
     words: DataFrame | None = None,
@@ -757,7 +750,7 @@ def bpe_subword_vocab(
     ``words`` shares a prebuilt :func:`word_frequencies` table (one
     corpus pass for train AND apply).
     """
-    enc = bpe_encode_words(docs, text_col, merges, words=words)
+    enc = bpe_encode_words(docs, merges, words=words)
     return (
         enc.select("freq", F.explode("syms").alias("subword"))
         .groupBy("subword")

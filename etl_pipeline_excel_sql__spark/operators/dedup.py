@@ -46,9 +46,7 @@ def affine_consts(k: int) -> list[tuple[int, int]]:
     ]
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup: one keeper (min id) per distinct content hash.
 
     Output: ``content_hash, keeper_id, dup_count`` — join back on the hash to
@@ -56,18 +54,16 @@ def exact_dedup(
     per distinct hash per partition.
     """
     return (
-        df.select(md5_hash60(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        df.select(md5_hash60(F.col("text")).alias("content_hash"), "doc_id")
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).cast("bigint").alias("keeper_id"),
+            F.min("doc_id").cast("bigint").alias("keeper_id"),
             F.count(F.lit(1)).cast("bigint").alias("dup_count"),
         )
     )
 
 
-def shingle_rows(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
+def shingle_rows(df: DataFrame, n: int) -> DataFrame:
     """Exploded (id, shingle) rows via posexplode + window ``lead``.
 
     Equivalent to exploding :func:`...text.shingles` but ~10× faster: the
@@ -83,8 +79,8 @@ def shingle_rows(
     no token rows).
     """
     toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("__pos", "__t"),
+        F.col("doc_id").alias("__id"),
+        F.posexplode(ws_tokens(F.col("text"))).alias("__pos", "__t"),
     )
     if n == 1:
         return toks.select("__id", F.col("__t").alias("__sh"))
@@ -103,12 +99,11 @@ def shingle_rows(
     return windowed.filter(keep).select("__id", sh.alias("__sh"))
 
 
-def shingle_sets(
-    df: DataFrame, text_col: str, id_col: str, n: int
-) -> DataFrame:
-    """(id, distinct-shingle-array) — the verification-side shingle sets."""
+def shingle_sets(df: DataFrame) -> DataFrame:
+    """(id, distinct word-3-gram array) — the verification-side shingle
+    sets."""
     return (
-        shingle_rows(df, text_col, id_col, n)
+        shingle_rows(df, 3)
         .groupBy("__id")
         .agg(F.collect_set("__sh").alias("__sh"))
     )
@@ -168,8 +163,6 @@ def _minhash_band_expr(num_hashes: int, band_rows: int):
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 12,
     band_rows: int = 2,
     shingle_n: int = 3,
@@ -202,8 +195,8 @@ def minhash_lsh_pairs(
     (post empty-document filter, same ``shingle_n``); callers that feed
     several operators from one corpus scan (e.g. the LSH recall audit,
     which shares it with :func:`jaccard_prefix_pairs`) build and persist
-    it once and pass it here — ``df``/``text_col``/``shingle_n`` are
-    then ignored for shingling.
+    it once and pass it here — ``df``/``shingle_n`` are then ignored for
+    shingling.
     """
     assert num_hashes % band_rows == 0
 
@@ -211,8 +204,8 @@ def minhash_lsh_pairs(
         # Empty/whitespace-only documents have no shingles: they vanish
         # from the exploded side naturally, and the oracle twin filters
         # them the same way — the invariant must not depend on content.
-        df = df.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-        exploded = shingle_rows(df, text_col, id_col, shingle_n)
+        df = df.filter(F.size(ws_tokens(F.col("text"))) > 0)
+        exploded = shingle_rows(df, shingle_n)
     # The signature table is tiny (one row per doc, k ints) but its subtree
     # (explode + window + md5) is expensive, and the band self-join would
     # recompute it once per side — persist the result, not the heavy rows
@@ -244,8 +237,6 @@ def minhash_lsh_pairs(
 def minhash_lsh_pairs_cross(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 12,
     band_rows: int = 2,
     shingle_n: int = 3,
@@ -273,15 +264,13 @@ def minhash_lsh_pairs_cross(
     assert num_hashes % band_rows == 0
 
     tagged = new_df.select(
-        F.col(id_col), F.col(text_col), F.lit("new").alias("__side")
+        "doc_id", "text", F.lit("new").alias("__side")
     ).unionByName(
-        corpus_df.select(
-            F.col(id_col), F.col(text_col), F.lit("corpus").alias("__side")
-        )
+        corpus_df.select("doc_id", "text", F.lit("corpus").alias("__side"))
     )
-    tagged = tagged.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    exploded = shingle_rows(tagged, text_col, id_col, shingle_n)
-    sides = tagged.select(F.col(id_col).alias("__id"), "__side")
+    tagged = tagged.filter(F.size(ws_tokens(F.col("text"))) > 0)
+    exploded = shingle_rows(tagged, shingle_n)
+    sides = tagged.select(F.col("doc_id").alias("__id"), "__side")
     slot = cache or shared_slot(
         tagged.sparkSession, "dedup.cross_signatures", SignatureCache
     )
@@ -318,8 +307,6 @@ def minhash_lsh_pairs_cross(
 
 def minhash_index_tables(
     corpus: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 12,
     band_rows: int = 2,
     shingle_n: int = 3,
@@ -336,8 +323,8 @@ def minhash_index_tables(
     path's ONE remaining corpus text scan (r13 verdict: "persisting
     corpus band tables would eliminate it too").
     """
-    corpus = corpus.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    exploded = shingle_rows(corpus, text_col, id_col, shingle_n)
+    corpus = corpus.filter(F.size(ws_tokens(F.col("text"))) > 0)
+    exploded = shingle_rows(corpus, shingle_n)
     sig = _minhash_signatures(exploded, num_hashes)
     bands = sig.select("__id", _minhash_band_expr(num_hashes, band_rows))
     sets = exploded.groupBy("__id").agg(F.collect_set("__sh").alias("__sh"))
@@ -348,8 +335,6 @@ def minhash_lsh_pairs_ingest_indexed(
     new_df: DataFrame,
     corpus_bands: DataFrame,
     corpus_sets: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 12,
     band_rows: int = 2,
     shingle_n: int = 3,
@@ -391,8 +376,8 @@ def minhash_lsh_pairs_ingest_indexed(
     """
     assert num_hashes % band_rows == 0
 
-    new_df = new_df.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-    exploded = shingle_rows(new_df, text_col, id_col, shingle_n)
+    new_df = new_df.filter(F.size(ws_tokens(F.col("text"))) > 0)
+    exploded = shingle_rows(new_df, shingle_n)
     slot = cache or shared_slot(
         new_df.sparkSession, "dedup.ingest_signatures", SignatureCache
     )
@@ -424,9 +409,7 @@ def minhash_lsh_pairs_ingest_indexed(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """Per-document 32-bit SimHash fingerprint (bigint).
 
     Shape: explode tokens → one codegen'd md5 hash per token → ``groupBy``
@@ -438,10 +421,9 @@ def simhash_signatures(
 
     Documents with no tokens keep a fingerprint of 0 (left join back).
     """
-    ids = df.select(F.col(id_col).alias("doc_id"))
+    ids = df.select("doc_id")
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(ws_tokens(F.col(text_col))).alias("t"),
+        "doc_id", F.explode(ws_tokens(F.col("text"))).alias("t")
     )
     h = md5_hash60(F.col("t"))
     votes = toks.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
@@ -467,8 +449,6 @@ def simhash_signatures(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     threshold: float = 0.1,
     bottom_k: int = 2,
 ) -> DataFrame:
@@ -490,16 +470,16 @@ def ngram_jaccard_pairs(
     carrying only (id, key) → distinct pairs → join back the shingle sets →
     codegen'd ``array_intersect``/``array_union`` Jaccard.
     """
-    df = df.filter(F.size(ws_tokens(F.col(text_col))) > 0)
+    df = df.filter(F.size(ws_tokens(F.col("text"))) > 0)
     # No materialization here, deliberately: an A/B at sf0.1 measured
     # the lazy-localCheckpoint variant ~10% SLOWER than recomputation —
     # the explode+md5 subtree is cheap relative to writing its output
     # out and reading it back (contrast ngram_containment_pairs, whose
     # shingle-hash table feeds three heavier consumers and measured 3×
     # faster checkpointed). Re-measure before "optimizing" this.
-    sets = shingle_sets(df, text_col, id_col, 3)
+    sets = shingle_sets(df)
     hrows = (
-        shingle_rows(df, text_col, id_col, 3)
+        shingle_rows(df, 3)
         .select("__id", md5_hash60(F.col("__sh")).alias("__h"))
         .distinct()
     )
@@ -529,8 +509,6 @@ def ngram_jaccard_pairs(
 
 def jaccard_prefix_pairs(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     shingle_n: int = 3,
     threshold_num: int = 1,
     threshold_den: int = 2,
@@ -560,8 +538,8 @@ def jaccard_prefix_pairs(
 
     ``exploded``: prebuilt ``(__id, __sh)`` shingle-occurrence frame
     shared with other operators over the same corpus (see
-    :func:`minhash_lsh_pairs`); when given, ``df``/``text_col``/
-    ``shingle_n`` are ignored for shingling.
+    :func:`minhash_lsh_pairs`); when given, ``df``/``shingle_n`` are
+    ignored for shingling.
 
     The distinct ``(__id, __h)`` shingle-hash frame is referenced FOUR
     times (frequency aggregate, prefix ranking, both sides of the
@@ -572,8 +550,8 @@ def jaccard_prefix_pairs(
     """
     p, q = threshold_num, threshold_den
     if exploded is None:
-        df = df.filter(F.size(ws_tokens(F.col(text_col))) > 0)
-        exploded = shingle_rows(df, text_col, id_col, shingle_n)
+        df = df.filter(F.size(ws_tokens(F.col("text"))) > 0)
+        exploded = shingle_rows(df, shingle_n)
     hrows = (
         exploded
         .select("__id", md5_hash60(F.col("__sh")).alias("__h"))
@@ -682,8 +660,6 @@ def jaccard_prefix_pairs(
 
 def ngram_containment_pairs(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     threshold: float = 0.5,
     bottom_k: int = 2,
 ) -> DataFrame:
@@ -711,14 +687,14 @@ def ngram_containment_pairs(
     """
     from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
 
-    df = df.filter(F.size(ws_tokens(F.col(text_col))) > 0)
+    df = df.filter(F.size(ws_tokens(F.col("text"))) > 0)
     # sets is consumed twice (both sides of the verify join) and hrows
     # three times (df-cap, inverted index, bottom-k keys) — without
     # materialization each consumer re-runs the shingle+md5 subtree over
     # the full corpus. Both tables are (id, hash)-shaped, never documents.
-    sets = shingle_sets(df, text_col, id_col, 3).localCheckpoint(eager=False)
+    sets = shingle_sets(df).localCheckpoint(eager=False)
     hrows = (
-        shingle_rows(df, text_col, id_col, 3)
+        shingle_rows(df, 3)
         .select("__id", md5_hash60(F.col("__sh")).alias("__h"))
         .distinct()
         .localCheckpoint(eager=False)

@@ -71,23 +71,22 @@ def _scored_rows(
     return (
         _sub_rows(corpus, vec_col, m)
         .join(F.broadcast(codebooks), "sub")
-        .withColumn(
-            "__d", F.expr(l2sq_sub_sql(vec_col, "centroid", "sub", subdim))
-        )
+        .withColumn("__d", F.expr(l2sq_sub_sql(vec_col, subdim)))
     )
 
 
-def l2sq_sub_sql(vec: str, cent: str, sub_col: str, subdim: int) -> str:
-    """Unrolled squared-L2 between subspace ``sub_col`` of full vector
-    ``vec`` and subdim-length centroid ``cent`` — Spark-SQL text, and
-    byte-compatible with DuckDB given 1-based list indexing on both
-    sides. Left-associative ``+`` chain: bit-identical IEEE order in
-    both engines (same doctrine as ``functions/vectors.dot_sql``)."""
+def l2sq_sub_sql(vec: str, subdim: int) -> str:
+    """Unrolled squared-L2 between subspace ``sub`` of full vector ``vec``
+    and the subdim-length ``centroid`` — Spark SQL text. DuckDB rejects
+    ``element_at`` on lists, so the oracle uses the twin
+    :func:`_pq_l2_duck`; both keep the same left-associative ``+`` term
+    order, so the IEEE evaluation order is bit-identical (same doctrine
+    as ``functions/vectors.dot_sql``)."""
     terms = []
     for i in range(1, subdim + 1):
         d = (
-            f"(CAST(element_at({vec}, {sub_col} * {subdim} + {i}) AS DOUBLE)"
-            f" - CAST(element_at({cent}, {i}) AS DOUBLE))"
+            f"(CAST(element_at({vec}, sub * {subdim} + {i}) AS DOUBLE)"
+            f" - CAST(element_at(centroid, {i}) AS DOUBLE))"
         )
         terms.append(f"{d} * {d}")
     return " + ".join(terms)
@@ -280,10 +279,7 @@ def pq_adc_topk(
             "query_id",
             "sub",
             "code",
-            F.floor(
-                F.expr(l2sq_sub_sql("embedding", "centroid", "sub", subdim))
-                * ADC_SCALE
-            )
+            F.floor(F.expr(l2sq_sub_sql("embedding", subdim)) * ADC_SCALE)
             .cast("bigint")
             .alias("d_micros"),
         )
@@ -449,15 +445,16 @@ FROM (
 ) WHERE rank <= {k}"""
 
 
-def l2sq_full_sql(a: str, b: str, dims: int) -> str:
-    """Unrolled full-vector squared L2 (Spark & DuckDB compatible given
-    both use 1-based element_at/indexing via :func:`l2sq_sub_sql`'s
-    conventions) — here with plain 1..dims indices on both sides."""
+def l2sq_full_sql(dims: int) -> str:
+    """Unrolled full-vector squared L2 between ``embedding`` and the
+    coarse centroid ``ccent`` — Spark SQL text with 1-based indices.
+    The oracle uses the DuckDB twin :func:`_l2_full_duck`; both keep the
+    same left-associative ``+`` term order."""
     terms = []
     for i in range(1, dims + 1):
         d = (
-            f"(CAST(element_at({a}, {i}) AS DOUBLE)"
-            f" - CAST(element_at({b}, {i}) AS DOUBLE))"
+            f"(CAST(element_at(embedding, {i}) AS DOUBLE)"
+            f" - CAST(element_at(ccent, {i}) AS DOUBLE))"
         )
         terms.append(f"{d} * {d}")
     return " + ".join(terms)
@@ -504,7 +501,7 @@ def _coarse_kmeans(
 
     def _assign_cells(cb: DataFrame) -> DataFrame:
         scored = corpus.crossJoin(F.broadcast(cb)).withColumn(
-            "__d", F.expr(l2sq_full_sql("embedding", "ccent", dims))
+            "__d", F.expr(l2sq_full_sql(dims))
         )
         return scored.groupBy("vec_id").agg(
             F.min_by(
@@ -599,7 +596,7 @@ def ivfpq_topk(
     probes = (
         queries.select(F.col("vec_id").alias("query_id"), F.col("embedding"))
         .crossJoin(F.broadcast(coarse_final))
-        .withColumn("__d", F.expr(l2sq_full_sql("embedding", "ccent", dims)))
+        .withColumn("__d", F.expr(l2sq_full_sql(dims)))
         .withColumn(
             "__rn",
             F.row_number().over(
@@ -619,10 +616,7 @@ def ivfpq_topk(
             "query_id",
             "sub",
             "code",
-            F.floor(
-                F.expr(l2sq_sub_sql("embedding", "centroid", "sub", subdim))
-                * ADC_SCALE
-            )
+            F.floor(F.expr(l2sq_sub_sql("embedding", subdim)) * ADC_SCALE)
             .cast("bigint")
             .alias("d_micros"),
         )
@@ -824,7 +818,7 @@ def ivfpq_residual_topk(
     probes = (
         queries.select(F.col("vec_id").alias("query_id"), F.col("embedding"))
         .crossJoin(F.broadcast(coarse_final))
-        .withColumn("__d", F.expr(l2sq_full_sql("embedding", "ccent", dims)))
+        .withColumn("__d", F.expr(l2sq_full_sql(dims)))
         .withColumn(
             "__rn",
             F.row_number().over(
@@ -855,10 +849,7 @@ def ivfpq_residual_topk(
             "cell",
             "sub",
             "code",
-            F.floor(
-                F.expr(l2sq_sub_sql("qresid", "centroid", "sub", subdim))
-                * ADC_SCALE
-            )
+            F.floor(F.expr(l2sq_sub_sql("qresid", subdim)) * ADC_SCALE)
             .cast("bigint")
             .alias("d_micros"),
         )

@@ -256,7 +256,7 @@ def _assign_broadcast(
     from etl_pipeline_excel_sql__spark.functions.vectors import cosine_sql
 
     scored = corpus.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", F.expr(cosine_sql("embedding", "centroid", dims))
+        "__sim", F.expr(cosine_sql(dims))
     )
     return (
         scored.groupBy("vec_id")

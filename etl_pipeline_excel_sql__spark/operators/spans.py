@@ -40,9 +40,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
 
 
-def kgram_rows(
-    docs: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
+def kgram_rows(docs: DataFrame, k: int) -> DataFrame:
     """One row per k-token window: ``(doc_id, pos, h)`` with ``pos`` the
     0-based token index of the window start and ``h`` the md5 of the
     space-joined window.
@@ -55,8 +53,7 @@ def kgram_rows(
     if k < 1:
         raise ValueError("kgram_rows: k must be >= 1")
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(ws_tokens(F.col(text_col))).alias("pos", "__t"),
+        "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "__t")
     )
     if k == 1:
         return toks.select("doc_id", "pos", F.md5(F.col("__t")).alias("h"))
@@ -203,7 +200,7 @@ def duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
     corpus (or earlier in the same document), minus the one canonical
     first occurrence kept per k-gram.
     """
-    occ = kgram_rows(docs, "text", "doc_id", k)
+    occ = kgram_rows(docs, k)
     return merge_islands(cut_occurrences(occ), k)
 
 
@@ -222,7 +219,7 @@ def trim_duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
         "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "tok")
     )
     covered = (
-        cut_occurrences(kgram_rows(docs, "text", "doc_id", k))
+        cut_occurrences(kgram_rows(docs, k))
         .select(
             "doc_id",
             F.explode(
@@ -272,7 +269,7 @@ def contaminated_spans(
     bench side of ``decontam_overlap`` it is joined size-gated, never
     force-broadcast.
     """
-    occ = kgram_rows(docs, "text", "doc_id", k)
+    occ = kgram_rows(docs, k)
     hit = occ.join(bench_hashes.select("h").distinct(), "h").select(
         "doc_id", "pos"
     )

@@ -557,15 +557,13 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_excel_sql__spark.operators.bpe import bpe_train_merges
 
     docs = load_table(spark, "documents", sf_dir)
-    return bpe_train_merges(docs, "text", BPE_TRAIN_MERGES)
+    return bpe_train_merges(docs, BPE_TRAIN_MERGES)
 
 
 def _bpe_train_sql() -> str:
     from etl_pipeline_excel_sql__spark.operators.bpe import bpe_unrolled_sql
 
-    return bpe_unrolled_sql(
-        "SELECT text FROM documents", "text", BPE_TRAIN_MERGES
-    )
+    return bpe_unrolled_sql(BPE_TRAIN_MERGES)
 
 
 ORACLE["bpe_train"] = _bpe_train_sql()
@@ -587,7 +585,7 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
+    words = word_frequencies(docs).localCheckpoint(eager=True)
     # batch_pairs > 1 is the production trainer shape (provably
     # identical merges, fewer driver round-trips — see _accept_batch);
     # q_bpe_train stays at the sequential default so BOTH paths sit
@@ -598,9 +596,7 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             words, BPE_TRAIN_MERGES, batch_pairs=4, max_batch_pairs=64
         ).collect()
     ]
-    return bpe_subword_vocab(
-        docs, "text", merges, top_k=BPE_VOCAB_TOP_K, words=words
-    )
+    return bpe_subword_vocab(docs, merges, top_k=BPE_VOCAB_TOP_K, words=words)
 
 
 def _bpe_vocab_sql() -> str:
@@ -608,10 +604,7 @@ def _bpe_vocab_sql() -> str:
         bpe_vocab_unrolled_sql,
     )
 
-    return bpe_vocab_unrolled_sql(
-        "SELECT text FROM documents", "text", BPE_TRAIN_MERGES,
-        BPE_VOCAB_TOP_K,
-    )
+    return bpe_vocab_unrolled_sql(BPE_TRAIN_MERGES, BPE_VOCAB_TOP_K)
 
 
 ORACLE["bpe_vocab"] = _bpe_vocab_sql()
@@ -636,7 +629,7 @@ def q_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
+    words = word_frequencies(docs).localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(
@@ -644,7 +637,7 @@ def q_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
     return render_packed_for_harness(
-        bpe_doc_token_ids(docs, "text", merges, words=words)
+        bpe_doc_token_ids(docs, merges, words=words)
     )
 
 
@@ -653,9 +646,7 @@ def _bpe_token_ids_sql() -> str:
         bpe_token_ids_unrolled_sql,
     )
 
-    return bpe_token_ids_unrolled_sql(
-        "SELECT doc_id, text FROM documents", "text", BPE_TRAIN_MERGES
-    )
+    return bpe_token_ids_unrolled_sql(BPE_TRAIN_MERGES)
 
 
 ORACLE["bpe_token_ids"] = _bpe_token_ids_sql()
@@ -684,14 +675,14 @@ def q_pack_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
+    words = word_frequencies(docs).localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(
             words, BPE_TRAIN_MERGES, batch_pairs=4, max_batch_pairs=64
         ).collect()
     ]
-    ids = bpe_doc_token_ids(docs, "text", merges, words=words)
+    ids = bpe_doc_token_ids(docs, merges, words=words)
     return render_packed_for_harness(
         pack_lm_sequences(ids, PACK_SEQ_LEN, range_size=PACK_IDS_RANGE)
     )
@@ -703,7 +694,7 @@ def _pack_token_ids_sql() -> str:
     )
 
     return bpe_packed_sequences_unrolled_sql(
-        "SELECT doc_id, text FROM documents", "text", BPE_TRAIN_MERGES,
+        "SELECT doc_id, text FROM documents", BPE_TRAIN_MERGES,
         PACK_SEQ_LEN,
     )
 
@@ -892,14 +883,14 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    words = word_frequencies(docs, "text").localCheckpoint(eager=True)
+    words = word_frequencies(docs).localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(
             words, BPE_TRAIN_MERGES, batch_pairs=4, max_batch_pairs=64
         ).collect()
     ]
-    ids = bpe_doc_token_ids(docs, "text", merges, words=words).select(
+    ids = bpe_doc_token_ids(docs, merges, words=words).select(
         "doc_id", "n_subwords"
     )
     per = ids.join(
@@ -925,9 +916,7 @@ def _bpe_fertility_sql() -> str:
         bpe_token_ids_unrolled_sql,
     )
 
-    ids = bpe_token_ids_unrolled_sql(
-        "SELECT doc_id, text FROM documents", "text", BPE_TRAIN_MERGES
-    )
+    ids = bpe_token_ids_unrolled_sql(BPE_TRAIN_MERGES)
     toks = (
         "list_filter(regexp_split_to_array(trim(text), '\\s+'),"
         " t -> t <> '')"

@@ -277,9 +277,12 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each event matched to the user's latest order at-or-before
-    the event time (union-and-window plan — one shuffle total)."""
+def _asof_orders(
+    spark: SparkSession, sf_dir: str, direction: str, prefix: str
+) -> DataFrame:
+    """Each event matched to one of the user's orders by time in
+    ``direction`` (union-and-window plan, one shuffle); the order's key
+    and price come out as ``{prefix}orderkey`` / ``{prefix}totalprice``."""
     ev = load_table(spark, "events", sf_dir).select("event_id", "user_id", "ts")
     o = load_table(spark, "orders", sf_dir).select(
         F.col("o_custkey").alias("user_id"), "o_orderdate", "o_orderkey", "o_totalprice"
@@ -291,61 +294,32 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_time="ts",
         right_time="o_orderdate",
         right_values=["o_orderkey", "o_totalprice"],
+        direction=direction,
     )
     return out.select(
         "event_id",
         "user_id",
-        F.col("o_orderkey").alias("asof_orderkey"),
-        F.col("o_totalprice").alias("asof_totalprice"),
+        F.col("o_orderkey").alias(f"{prefix}orderkey"),
+        F.col("o_totalprice").alias(f"{prefix}totalprice"),
     )
+
+
+def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each event matched to the user's latest order at-or-before
+    the event time."""
+    return _asof_orders(spark, sf_dir, "backward", "asof_")
 
 
 def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join: each event matched to the user's EARLIEST order
-    at-or-after the event time (same union-and-window plan, one shuffle)."""
-    ev = load_table(spark, "events", sf_dir).select("event_id", "user_id", "ts")
-    o = load_table(spark, "orders", sf_dir).select(
-        F.col("o_custkey").alias("user_id"), "o_orderdate", "o_orderkey", "o_totalprice"
-    )
-    out = asof_join(
-        ev,
-        o,
-        key="user_id",
-        left_time="ts",
-        right_time="o_orderdate",
-        right_values=["o_orderkey", "o_totalprice"],
-        direction="forward",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("o_orderkey").alias("next_orderkey"),
-        F.col("o_totalprice").alias("next_totalprice"),
-    )
+    at-or-after the event time."""
+    return _asof_orders(spark, sf_dir, "forward", "next_")
 
 
 def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest as-of join: the closer of the backward/forward matches in
     absolute time distance; exact ties prefer backward (pandas semantics)."""
-    ev = load_table(spark, "events", sf_dir).select("event_id", "user_id", "ts")
-    o = load_table(spark, "orders", sf_dir).select(
-        F.col("o_custkey").alias("user_id"), "o_orderdate", "o_orderkey", "o_totalprice"
-    )
-    out = asof_join(
-        ev,
-        o,
-        key="user_id",
-        left_time="ts",
-        right_time="o_orderdate",
-        right_values=["o_orderkey", "o_totalprice"],
-        direction="nearest",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("o_orderkey").alias("near_orderkey"),
-        F.col("o_totalprice").alias("near_totalprice"),
-    )
+    return _asof_orders(spark, sf_dir, "nearest", "near_")
 
 
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -158,11 +158,9 @@ def _curation_dispositions(
     # stage 4 input: trainable docs sharing any k-gram with the bench
     # split. Corpus-derived digest set — size-gated join, no broadcast
     # hint (the decontam_spans doctrine).
-    bench_h = kgram_rows(bench, "text", "doc_id", SPAN_K).select(
-        "h"
-    ).distinct()
+    bench_h = kgram_rows(bench, SPAN_K).select("h").distinct()
     contam = (
-        kgram_rows(train, "text", "doc_id", SPAN_K)
+        kgram_rows(train, SPAN_K)
         .join(bench_h, "h")
         .select("doc_id")
         .distinct()
@@ -409,8 +407,6 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         )
         base_pairs = minhash_lsh_pairs(
             corpus,
-            "text",
-            "doc_id",
             num_hashes=MINHASH_K,
             band_rows=MINHASH_BAND_ROWS,
             shingle_n=MINHASH_SHINGLE_N,
@@ -419,10 +415,10 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         connected_components(base_pairs).select(
             "member_id", "cluster_id"
         ).write.mode("overwrite").parquet(f"{path}/labels")
-        kgram_rows(train, "text", "doc_id", SPAN_K).select(
+        kgram_rows(train, SPAN_K).select(
             "doc_id", "h"
         ).distinct().write.mode("overwrite").parquet(f"{path}/train_idx")
-        kgram_rows(bench, "text", "doc_id", SPAN_K).select(
+        kgram_rows(bench, SPAN_K).select(
             "h"
         ).distinct().write.mode("overwrite").parquet(f"{path}/bench_h")
         spark.read.parquet(f"{path}/train_idx").join(
@@ -432,8 +428,6 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         )
         mh_bands, mh_sets = minhash_index_tables(
             corpus,
-            "text",
-            "doc_id",
             num_hashes=MINHASH_K,
             band_rows=MINHASH_BAND_ROWS,
             shingle_n=MINHASH_SHINGLE_N,
@@ -521,8 +515,6 @@ def _incremental_dispositions(
         batch,
         spark.read.parquet(f"{path}/mh_bands"),
         spark.read.parquet(f"{path}/mh_sets"),
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -543,17 +535,13 @@ def _incremental_dispositions(
     )
 
     # decontam: persisted digest sets probed by the batch's k-grams
-    new_bench_h = kgram_rows(batch_bench, "text", "doc_id", SPAN_K).select(
-        "h"
-    ).distinct()
+    new_bench_h = kgram_rows(batch_bench, SPAN_K).select("h").distinct()
     all_bench_h = (
         spark.read.parquet(f"{path}/bench_h")
         .unionByName(new_bench_h)
         .distinct()
     )
-    batch_kg = kgram_rows(batch_train, "text", "doc_id", SPAN_K).select(
-        "doc_id", "h"
-    )
+    batch_kg = kgram_rows(batch_train, SPAN_K).select("doc_id", "h")
     contam = (
         spark.read.parquet(f"{path}/contam0")
         .unionByName(

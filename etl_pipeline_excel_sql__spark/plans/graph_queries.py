@@ -242,19 +242,20 @@ def q_dedup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcore_membership(pairs, k=2)
 
 
-def kcore_unrolled_sql(edges_cte: str, k: int, rounds: int) -> str:
-    """DuckDB oracle twin of :func:`kcore_membership`: peeling unrolled
-    as chained CTEs. Returns a COMPLETE query (leading WITH included);
-    ``edges_cte`` must yield (id_a, id_b) in any form — e0 replays the
-    Spark side's canonicalization (self-loop filter, least/greatest,
-    distinct), so duplicated/reversed/self pairs cannot desync the twins.
+def kcore_unrolled_sql(edges_cte: str) -> str:
+    """DuckDB oracle twin of :func:`kcore_membership` at ``k=2``: peeling
+    unrolled as chained CTEs. Returns a COMPLETE query (leading WITH
+    included); ``edges_cte`` must yield (id_a, id_b) in any form — e0
+    replays the Spark side's canonicalization (self-loop filter,
+    least/greatest, distinct), so duplicated/reversed/self pairs cannot
+    desync the twins.
 
-    ``rounds`` must be >= the graph's actual peeling depth or the oracle
-    is NOT the fixpoint — measured depth is 2 on the near-dup graph at
-    every driver SF (sf0.001/0.01/0.1), so the registered query unrolls
-    6 for margin; an insufficient unroll shows up as a value-hash
-    mismatch at the gate rather than passing silently, because the Spark
-    side always runs to the true fixpoint.
+    The 6 unrolled rounds must be >= the graph's actual peeling depth or
+    the oracle is NOT the fixpoint — measured depth is 2 on the near-dup
+    graph at every driver SF (sf0.001/0.01/0.1), so 6 is margin; an
+    insufficient unroll shows up as a value-hash mismatch at the gate
+    rather than passing silently, because the Spark side always runs to
+    the true fixpoint.
     """
     # Every CTE is MATERIALIZED: each round references the previous edge
     # set three times (degree count + two semi-join sides), and DuckDB
@@ -266,20 +267,20 @@ def kcore_unrolled_sql(edges_cte: str, k: int, rounds: int) -> str:
   FROM ({edges_cte}) WHERE id_a <> id_b
 )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, 7):
         p = i - 1
         parts.append(
             f"""s{i} AS MATERIALIZED (
   SELECT n FROM (SELECT a AS n FROM e{p} UNION ALL SELECT b FROM e{p})
-  GROUP BY n HAVING COUNT(*) >= {k}
+  GROUP BY n HAVING COUNT(*) >= 2
 ), e{i} AS MATERIALIZED (
   SELECT e.a, e.b FROM e{p} e
   JOIN s{i} sa ON e.a = sa.n
   JOIN s{i} sb ON e.b = sb.n
 )"""
         )
-    final = f"""SELECT node, CAST(COUNT(*) AS BIGINT) AS core_degree
-FROM (SELECT a AS node FROM e{rounds} UNION ALL SELECT b AS node FROM e{rounds})
+    final = """SELECT node, CAST(COUNT(*) AS BIGINT) AS core_degree
+FROM (SELECT a AS node FROM e6 UNION ALL SELECT b AS node FROM e6)
 GROUP BY node"""
     return "WITH " + ",\n".join(parts) + "\n" + final
 
@@ -291,7 +292,7 @@ def _kcore_sql() -> str:
 
     # e0 is MATERIALIZED, so inlining the full MinHash pipeline here
     # still runs it exactly once.
-    return kcore_unrolled_sql(_MINHASH_SQL, k=2, rounds=6)
+    return kcore_unrolled_sql(_MINHASH_SQL)
 
 
 ORACLE["dedup_kcore"] = _kcore_sql()

@@ -388,20 +388,14 @@ def q_ring_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(path: str) -> None:
         docs = load_table(spark, "documents", sf_dir).select("doc_id")
-        write_ring_sharded(
-            docs, path, "doc_id", SHARD_N, SHARD_VNODES, RING_SPACE
-        )
-        reshard_add_shard(
-            spark, path, "doc_id", SHARD_N, SHARD_VNODES, RING_SPACE
-        )
+        write_ring_sharded(docs, path, SHARD_N, SHARD_VNODES, RING_SPACE)
+        reshard_add_shard(spark, path, SHARD_N, SHARD_VNODES, RING_SPACE)
 
     # One resharded table per (process, corpus version): repeated
     # gate/bench invocations reuse it instead of rewriting it per call.
     after = spark.read.parquet(built_dir("ring_shard_tbl_", sf_dir, build))
     old_pts = ring_points(SHARD_N, SHARD_VNODES, RING_SPACE)
-    with_old = ring_assign(
-        after, "doc_id", old_pts, RING_SPACE, out_col="__old_shard"
-    )
+    with_old = ring_assign(after, old_pts, RING_SPACE, out_col="__old_shard")
     return with_old.groupBy(F.col("shard").cast("bigint").alias("shard")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(

@@ -121,7 +121,7 @@ def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         ws_token_count("text").cast("bigint").alias("n_ws_tokens"),
-        bpe_token_count("text").cast("bigint").alias("n_bpe_tokens"),
+        bpe_token_count().cast("bigint").alias("n_bpe_tokens"),
     )
 
 
@@ -151,14 +151,12 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup(load_table(spark, "documents", sf_dir), "text", "doc_id")
+    return exact_dedup(load_table(spark, "documents", sf_dir))
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
         load_table(spark, "documents", sf_dir),
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -167,16 +165,12 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_signatures(
-        load_table(spark, "documents", sf_dir), "text", "doc_id"
-    )
+    return simhash_signatures(load_table(spark, "documents", sf_dir))
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         load_table(spark, "documents", sf_dir),
-        "text",
-        "doc_id",
         threshold=NGRAM_THRESHOLD,
         bottom_k=NGRAM_BOTTOM_K,
     )
@@ -197,8 +191,6 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return jaccard_prefix_pairs(
         load_table(spark, "documents", sf_dir),
-        "text",
-        "doc_id",
         shingle_n=3,
         threshold_num=PREFIX_JACCARD_NUM,
         threshold_den=PREFIX_JACCARD_DEN,
@@ -210,8 +202,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     short document embedded in a longer one, which Jaccard scores near 0."""
     return ngram_containment_pairs(
         load_table(spark, "documents", sf_dir),
-        "text",
-        "doc_id",
         threshold=CONTAINMENT_THRESHOLD,
         bottom_k=NGRAM_BOTTOM_K,
     )
@@ -826,8 +816,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_lsh_pairs(
         load_table(spark, "documents", sf_dir),
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -869,8 +857,6 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_lsh_pairs(
         load_table(spark, "documents", sf_dir),
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -1101,7 +1087,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     toks = docs.select(
         "doc_id",
-        bpe_token_count("text").cast("bigint").alias("n_tokens"),
+        bpe_token_count().cast("bigint").alias("n_tokens"),
         # integer DIV, not float division — exact for any 64-bit id
         F.expr(f"CAST(doc_id DIV {PACK_RANGE} AS BIGINT)").alias("__rng"),
     )
@@ -1248,8 +1234,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs_cross(
         docs.filter(is_new),
         docs.filter(~is_new),
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -1342,8 +1326,6 @@ def q_dedup_clusters_incremental(
         recomputes: cluster labels plus the MinHash band/set index."""
         base_pairs = minhash_lsh_pairs(
             corpus,
-            "text",
-            "doc_id",
             num_hashes=MINHASH_K,
             band_rows=MINHASH_BAND_ROWS,
             shingle_n=MINHASH_SHINGLE_N,
@@ -1359,8 +1341,6 @@ def q_dedup_clusters_incremental(
         # non-incremental cost the r13 fused pass still paid.
         mh_bands, mh_sets = minhash_index_tables(
             corpus,
-            "text",
-            "doc_id",
             num_hashes=MINHASH_K,
             band_rows=MINHASH_BAND_ROWS,
             shingle_n=MINHASH_SHINGLE_N,
@@ -1375,8 +1355,6 @@ def q_dedup_clusters_incremental(
         new_docs,
         spark.read.parquet(f"{path}/mh_bands"),
         spark.read.parquet(f"{path}/mh_sets"),
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -1467,8 +1445,6 @@ def _shared_jaccard_truth(
     def build(path: str) -> None:
         jaccard_prefix_pairs(
             docs,
-            "text",
-            "doc_id",
             shingle_n=MINHASH_SHINGLE_N,
             threshold_num=PREFIX_JACCARD_NUM,
             threshold_den=PREFIX_JACCARD_DEN,
@@ -1510,15 +1486,13 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exploded = shared_slot(
         spark, "pipeline.audit_shingles", SignatureCache
-    ).swap(shingle_rows(docs, "text", "doc_id", MINHASH_SHINGLE_N))
+    ).swap(shingle_rows(docs, MINHASH_SHINGLE_N))
     truth = _shared_jaccard_truth(spark, sf_dir, docs, exploded).select(
         "id_a", "id_b", "jaccard_ppm"
     )
     cand = (
         minhash_lsh_pairs(
             docs,
-            "text",
-            "doc_id",
             num_hashes=MINHASH_K,
             band_rows=MINHASH_BAND_ROWS,
             shingle_n=MINHASH_SHINGLE_N,
@@ -1642,12 +1616,10 @@ def q_lsh_recall_audit_sampled(
         spark, "pipeline.audit_sample", lambda: LineageTruncator(spark)
     )
     exploded = trunc.truncate(
-        shingle_rows(sampled, "text", "doc_id", MINHASH_SHINGLE_N)
+        shingle_rows(sampled, MINHASH_SHINGLE_N)
     )
     truth = jaccard_prefix_pairs(
         sampled,
-        "text",
-        "doc_id",
         shingle_n=MINHASH_SHINGLE_N,
         threshold_num=PREFIX_JACCARD_NUM,
         threshold_den=PREFIX_JACCARD_DEN,
@@ -1656,8 +1628,6 @@ def q_lsh_recall_audit_sampled(
     cand = (
         minhash_lsh_pairs(
             sampled,
-            "text",
-            "doc_id",
             num_hashes=MINHASH_K,
             band_rows=MINHASH_BAND_ROWS,
             shingle_n=MINHASH_SHINGLE_N,
@@ -1854,7 +1824,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the signature build; the signature table is re-banded per config.
     exploded = shared_slot(
         spark, "pipeline.tuning_shingles", SignatureCache
-    ).swap(shingle_rows(docs, "text", "doc_id", MINHASH_SHINGLE_N))
+    ).swap(shingle_rows(docs, MINHASH_SHINGLE_N))
     sig = shared_slot(
         spark, "pipeline.tuning_signatures", SignatureCache
     ).swap(_minhash_signatures(exploded, MINHASH_K))

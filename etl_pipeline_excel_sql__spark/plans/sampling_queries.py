@@ -129,8 +129,8 @@ def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey"
     )
-    words = bloom_build(urgent, "o_orderkey")
-    candidates = bloom_prefilter(li, "l_orderkey", words)
+    words = bloom_build(urgent)
+    candidates = bloom_prefilter(li, words)
     return (
         candidates.join(
             urgent,

@@ -171,7 +171,7 @@ def q_decontam_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(F.col("doc_id") % SPAN_BENCH_MOD != 0)
     return contaminated_spans(
         train,
-        kgram_rows(bench, "text", "doc_id", SPAN_K).select("h"),
+        kgram_rows(bench, SPAN_K).select("h"),
         k=SPAN_K,
     )
 
@@ -223,14 +223,14 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("text_clean").alias("text"))
         .localCheckpoint(eager=True)
     )
-    words = word_frequencies(trimmed, "text").localCheckpoint(eager=True)
+    words = word_frequencies(trimmed).localCheckpoint(eager=True)
     merges = [
         (r.left, r.right)
         for r in bpe_train_merges_from_words(
             words, BPE_TRAIN_MERGES, batch_pairs=4, max_batch_pairs=64
         ).collect()
     ]
-    ids = bpe_doc_token_ids(trimmed, "text", merges, words=words)
+    ids = bpe_doc_token_ids(trimmed, merges, words=words)
     return render_packed_for_harness(
         pack_lm_sequences(ids, PACK_SEQ_LEN, range_size=PACK_IDS_RANGE)
     )
@@ -255,7 +255,6 @@ trimmed AS MATERIALIZED (
     )
     return bpe_packed_sequences_unrolled_sql(
         "SELECT doc_id, text FROM trimmed",
-        "text",
         BPE_TRAIN_MERGES,
         PACK_SEQ_LEN,
         prefix_ctes=prefix,
@@ -286,7 +285,7 @@ def q_dedup_spans_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % SPAN_BATCH_MOD != 0)
     return contaminated_spans(
         batch,
-        kgram_rows(corpus, "text", "doc_id", SPAN_K).select("h"),
+        kgram_rows(corpus, SPAN_K).select("h"),
         k=SPAN_K,
     )
 

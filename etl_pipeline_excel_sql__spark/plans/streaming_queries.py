@@ -158,7 +158,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("user_id"), "c_name", "c_mktsegment"
     )
-    enriched = enrich_stream(ev, cust, "user_id").select(
+    enriched = enrich_stream(ev, cust).select(
         "event_id", "user_id", "c_name", "c_mktsegment"
     )
     return run_to_memory_sink(

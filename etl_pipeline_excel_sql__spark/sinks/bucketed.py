@@ -77,12 +77,11 @@ def ring_points(n_shards: int, vnodes: int, ring_space: int) -> list[tuple[int, 
 
 def ring_assign(
     df: DataFrame,
-    key_col: str,
     points: list[tuple[int, int]],
     ring_space: int,
     out_col: str = "shard",
 ) -> DataFrame:
-    """Append the ring-owner shard of each row's key — a PURE MAP.
+    """Append the ring-owner shard of each row's ``doc_id`` — a PURE MAP.
 
     Ownership is the packed arg-min over the literal ring array
     (`F.aggregate` over ≤ a few hundred struct literals, whole-stage
@@ -101,7 +100,7 @@ def ring_assign(
         ]
     )
     h = md5_hash60(
-        F.concat(F.lit(RING_KEY_SALT), F.col(key_col).cast("string"))
+        F.concat(F.lit(RING_KEY_SALT), F.col("doc_id").cast("string"))
     ) % F.lit(ring_space)
     init = F.lit(ring_space * 256 + 255).cast("bigint")
     owner = (
@@ -123,21 +122,20 @@ def ring_assign(
 def write_ring_sharded(
     df: DataFrame,
     path: str,
-    key_col: str,
     n_shards: int,
     vnodes: int,
     ring_space: int,
 ) -> None:
-    """Write `df` as parquet partitioned by its ring-owner shard."""
+    """Write `df` as parquet partitioned by its ``doc_id`` ring-owner
+    shard."""
     pts = ring_points(n_shards, vnodes, ring_space)
-    assigned = ring_assign(df, key_col, pts, ring_space, "shard")
+    assigned = ring_assign(df, pts, ring_space, "shard")
     assigned.write.mode("overwrite").partitionBy("shard").parquet(path)
 
 
 def reshard_add_shard(
     spark: SparkSession,
     path: str,
-    key_col: str,
     n_shards_old: int,
     vnodes: int,
     ring_space: int,
@@ -157,7 +155,7 @@ def reshard_add_shard(
     cur = spark.read.parquet(path)
     data_cols = [c for c in cur.columns if c != "shard"]
     pts_new = ring_points(n_shards_old + 1, vnodes, ring_space)
-    re = ring_assign(cur, key_col, pts_new, ring_space, "__new_shard")
+    re = ring_assign(cur, pts_new, ring_space, "__new_shard")
     moved = re.filter(F.col("shard") != F.col("__new_shard"))
     if moved.filter(F.col("__new_shard") != n_shards_old).limit(1).count():
         raise RuntimeError(

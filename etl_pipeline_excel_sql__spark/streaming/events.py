@@ -158,14 +158,14 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def enrich_stream(events: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """Stream-static enrichment join.
+def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
+    """Stream-static enrichment join on ``user_id``.
 
     The static side is re-read per micro-batch and broadcast (dimension-
     sized); no state is kept, so this composes freely with downstream
     watermarked aggregations.
     """
-    return events.join(F.broadcast(dim), on=key, how="left")
+    return events.join(F.broadcast(dim), on="user_id", how="left")
 
 
 #: Shuffle/state-store partition count for STATEFUL streams, sized to

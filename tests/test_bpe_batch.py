@@ -64,7 +64,7 @@ def _reference_merges(texts: list[str], n: int) -> list[tuple]:
 
 def _train(spark, texts, n, batch_pairs, stats=None):
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    words = word_frequencies(df, "text")
+    words = word_frequencies(df)
     got = bpe_train_merges_from_words(
         words, n, batch_pairs=batch_pairs, stats=stats
     )
@@ -127,10 +127,10 @@ def test_batched_on_testdata_documents(spark, sf_dir):
     docs = load_table(spark, "documents", sf_dir)
     want = [
         (r.merge_rank, r.left, r.right, r.pair_count)
-        for r in bpe_train_merges(docs, "text", 6).collect()
+        for r in bpe_train_merges(docs, 6).collect()
     ]
     stats: dict = {}
-    words = word_frequencies(docs, "text")
+    words = word_frequencies(docs)
     got = [
         (r.merge_rank, r.left, r.right, r.pair_count)
         for r in bpe_train_merges_from_words(
@@ -181,7 +181,7 @@ def test_accept_batch_walk_stops():
 def test_batch_pairs_validation(spark):
     df = spark.createDataFrame([("a b",)], ["text"])
     with pytest.raises(ValueError, match="batch_pairs"):
-        bpe_train_merges_from_words(word_frequencies(df, "text"), 3, batch_pairs=0)
+        bpe_train_merges_from_words(word_frequencies(df), 3, batch_pairs=0)
 
 
 def test_adaptive_width_equals_sequential_adversarial(spark):
@@ -191,7 +191,7 @@ def test_adaptive_width_equals_sequential_adversarial(spark):
     texts = ["low lower lowest", "new newer newest", "aaaa ab", "low low"]
     want = _reference_merges(texts, 8)
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    words = word_frequencies(df, "text")
+    words = word_frequencies(df)
     got = bpe_train_merges_from_words(
         words, 8, batch_pairs=1, max_batch_pairs=256
     )
@@ -246,7 +246,7 @@ def test_adaptive_width_backs_off_on_partial_acceptance(spark):
     want = _reference_merges(texts, 12)
     assert len(want) >= 8
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    words = word_frequencies(df, "text")
+    words = word_frequencies(df)
     got = bpe_train_merges_from_words(
         words, 12, batch_pairs=2, max_batch_pairs=32
     )
@@ -259,5 +259,5 @@ def test_max_batch_pairs_validation(spark):
     df = spark.createDataFrame([("a b",)], ["text"])
     with pytest.raises(ValueError, match="max_batch_pairs"):
         bpe_train_merges_from_words(
-            word_frequencies(df, "text"), 3, batch_pairs=8, max_batch_pairs=4
+            word_frequencies(df), 3, batch_pairs=8, max_batch_pairs=4
         )

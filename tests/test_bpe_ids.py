@@ -22,9 +22,9 @@ def test_ids_decode_back_to_the_text(spark):
     }
     df = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
     merges = [
-        (r.left, r.right) for r in bpe_train_merges(df, "text", 5).collect()
+        (r.left, r.right) for r in bpe_train_merges(df, 5).collect()
     ]
-    words = word_frequencies(df, "text")
+    words = word_frequencies(df)
     vocab = bpe_vocab_ids(words, merges)
     sym_of = {i: s for s, i in vocab}
     # id layout: alphabet sorted by code point, then merges in rank order
@@ -36,7 +36,7 @@ def test_ids_decode_back_to_the_text(spark):
 
     rows = {
         r.doc_id: (r.n_subwords, list(r.token_ids))
-        for r in bpe_doc_token_ids(df, "text", merges).collect()
+        for r in bpe_doc_token_ids(df, merges).collect()
     }
     assert set(rows) == set(texts)  # every doc, empty included
     assert rows[3] == (0, [])
@@ -50,7 +50,7 @@ def test_ids_decode_back_to_the_text(spark):
 
 def test_vocab_collision_raises(spark):
     df = spark.createDataFrame([("ab ab",)], ["text"])
-    words = word_frequencies(df, "text")
+    words = word_frequencies(df)
     with pytest.raises(ValueError, match="collides"):
         bpe_vocab_ids(words, [("a", "b"), ("a", "b")])
 
@@ -67,9 +67,9 @@ def test_pack_lm_sequences_reorders_nothing(spark):
     }
     df = spark.createDataFrame(list(texts.items()), ["doc_id", "text"])
     merges = [
-        (r.left, r.right) for r in bpe_train_merges(df, "text", 4).collect()
+        (r.left, r.right) for r in bpe_train_merges(df, 4).collect()
     ]
-    ids = bpe_doc_token_ids(df, "text", merges)
+    ids = bpe_doc_token_ids(df, merges)
     by_doc = {
         r.doc_id: list(r.token_ids) for r in ids.collect()
     }

@@ -90,7 +90,7 @@ def test_ring_assign_matches_audit_arithmetic(spark):
     pts = ring_points(SHARD_N, SHARD_VNODES, RING_SPACE)
     got = {
         r.doc_id: r.shard
-        for r in ring_assign(docs, "doc_id", pts, RING_SPACE).collect()
+        for r in ring_assign(docs, pts, RING_SPACE).collect()
     }
     # audit-style owner: broadcast ring join + packed-min groupBy
     ring = spark.createDataFrame(pts, ["shard", "point"])
@@ -136,9 +136,7 @@ def test_ring_sharded_write_and_reshard(spark, tmp_path):
     docs = spark.range(0, 2000).select(
         F.col("id").alias("doc_id"), (F.col("id") * 7).alias("payload")
     )
-    write_ring_sharded(
-        docs, path, "doc_id", SHARD_N, SHARD_VNODES, RING_SPACE
-    )
+    write_ring_sharded(docs, path, SHARD_N, SHARD_VNODES, RING_SPACE)
     before = spark.read.parquet(path)
     assert before.count() == 2000
     owners_before = {
@@ -154,9 +152,7 @@ def test_ring_sharded_write_and_reshard(spark, tmp_path):
                 if f.endswith(".parquet")
             }
 
-    n_moved = reshard_add_shard(
-        spark, path, "doc_id", SHARD_N, SHARD_VNODES, RING_SPACE
-    )
+    n_moved = reshard_add_shard(spark, path, SHARD_N, SHARD_VNODES, RING_SPACE)
     after = spark.read.parquet(path)
     rows_after = {
         r.doc_id: (int(r.shard), r.payload)
@@ -169,7 +165,7 @@ def test_ring_sharded_write_and_reshard(spark, tmp_path):
     pts_new = ring_points(SHARD_N + 1, SHARD_VNODES, RING_SPACE)
     want_after = {
         r.doc_id: r.shard
-        for r in ring_assign(docs, "doc_id", pts_new, RING_SPACE).collect()
+        for r in ring_assign(docs, pts_new, RING_SPACE).collect()
     }
     assert {k: v[0] for k, v in rows_after.items()} == want_after
     movers = {k for k in rows_after if rows_after[k][0] != owners_before[k]}

@@ -118,8 +118,6 @@ def test_dedup_incremental_equals_filtered_self_join(spark, sf_dir):
     }
     allp = minhash_lsh_pairs(
         docs,
-        "text",
-        "doc_id",
         num_hashes=MINHASH_K,
         band_rows=MINHASH_BAND_ROWS,
         shingle_n=MINHASH_SHINGLE_N,
@@ -200,7 +198,7 @@ def test_bpe_train_matches_reference_implementation(spark):
     df = spark.createDataFrame([(t,) for t in texts], ["text"])
     got = [
         (r.merge_rank, r.left, r.right, r.pair_count)
-        for r in bpe_train_merges(df, "text", 8).collect()
+        for r in bpe_train_merges(df, 8).collect()
     ]
     assert got == reference(texts, 8)
 
@@ -212,15 +210,15 @@ def test_bpe_train_early_stop_and_validation(spark):
 
     # single-char words: no adjacent pair ever -> empty merge table
     df = spark.createDataFrame([("a b c a",)], ["text"])
-    assert bpe_train_merges(df, "text", 4).count() == 0
+    assert bpe_train_merges(df, 4).count() == 0
     # "ab" has exactly one merge; asking for 5 stops after 1
     df2 = spark.createDataFrame([("ab ab",)], ["text"])
-    got = bpe_train_merges(df2, "text", 5).collect()
+    got = bpe_train_merges(df2, 5).collect()
     assert [(r.merge_rank, r.left, r.right, r.pair_count) for r in got] == [
         (0, "a", "b", 2)
     ]
     with pytest.raises(ValueError):
-        bpe_train_merges(df, "text", 0)
+        bpe_train_merges(df, 0)
 
 
 def test_bpe_encode_applies_merges_in_order(spark):
@@ -238,11 +236,11 @@ def test_bpe_encode_applies_merges_in_order(spark):
     )
     merges = [
         (r.left, r.right)
-        for r in bpe_train_merges(df, "text", 4).collect()
+        for r in bpe_train_merges(df, 4).collect()
     ]
     enc = {
         r.w: (r.freq, list(r.syms))
-        for r in bpe_encode_words(df, "text", merges).collect()
+        for r in bpe_encode_words(df, merges).collect()
     }
     # reference apply: start from chars, replay merges left-to-right
     def ref_apply(w):
@@ -264,7 +262,7 @@ def test_bpe_encode_applies_merges_in_order(spark):
 
     vocab = {
         r.subword: r.n_occurrences
-        for r in bpe_subword_vocab(df, "text", merges, top_k=50).collect()
+        for r in bpe_subword_vocab(df, merges, top_k=50).collect()
     }
     want: dict[str, int] = {}
     for w, f in words.items():

@@ -149,9 +149,9 @@ def test_caller_owned_signature_cache_scopes_minhash_persist(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir).limit(200)
     c1, c2 = SignatureCache(), SignatureCache()
-    p1 = minhash_lsh_pairs(docs, "text", "doc_id", cache=c1)
+    p1 = minhash_lsh_pairs(docs, cache=c1)
     n1 = p1.count()
-    p2 = minhash_lsh_pairs(docs.limit(100), "text", "doc_id", cache=c2)
+    p2 = minhash_lsh_pairs(docs.limit(100), cache=c2)
     # Both results remain consistent after interleaving (persist keeps
     # lineage, so this is a correctness re-read, not a crash test).
     assert p1.count() == n1
@@ -181,10 +181,10 @@ def test_default_signature_slot_stays_cached_on_repeat_calls(
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     docs = load_table(spark, "documents", sf_dir).limit(200)
-    n = minhash_lsh_pairs(docs, "text", "doc_id").count()
+    n = minhash_lsh_pairs(docs).count()
     if rdd_sweep:
         _unpersist_rdd_ids(spark, _persisted_rdd_ids(spark))
-    again = minhash_lsh_pairs(docs, "text", "doc_id")
+    again = minhash_lsh_pairs(docs)
     held = shared_slot(spark, "dedup.signatures", SignatureCache)._df
     assert held.storageLevel.useMemory is True
     assert again.count() == n

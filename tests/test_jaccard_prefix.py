@@ -56,7 +56,7 @@ def test_prefix_join_matches_brute_force_exactly(spark):
             r["jaccard_ppm"],
         )
         for r in jaccard_prefix_pairs(
-            ddf, "text", "doc_id", threshold_num=p, threshold_den=q
+            ddf, threshold_num=p, threshold_den=q
         ).collect()
     }
     assert got == expect

@@ -28,7 +28,7 @@ def test_bpe_merges_round_trip_drives_identical_encoding(
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     docs = load_table(spark, "documents", sf_dir).limit(100)
-    words = word_frequencies(docs, "text")
+    words = word_frequencies(docs)
     trained = bpe_train_merges_from_words(words, 6, batch_pairs=4)
     fresh = [(r.left, r.right) for r in trained.orderBy("merge_rank").collect()]
 
@@ -37,8 +37,8 @@ def test_bpe_merges_round_trip_drives_identical_encoding(
     loaded = load_bpe_merges(spark, path)
     assert loaded == fresh
 
-    a = bpe_doc_token_ids(docs, "text", fresh, words=words).collect()
-    b = bpe_doc_token_ids(docs, "text", loaded, words=words).collect()
+    a = bpe_doc_token_ids(docs, fresh, words=words).collect()
+    b = bpe_doc_token_ids(docs, loaded, words=words).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 

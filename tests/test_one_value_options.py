@@ -16,7 +16,12 @@ for the any-default rule):
   sets nothing;
 * any other argument, ``*args`` or ``**kwargs`` counts as every value.
 
-A second rule: a ``LineageTruncator`` that is constructed and
+The same resolver checks two more rules. A required parameter of a
+public function called outside ``tests/`` that every call, tests
+included, passes one literal is a constant too. A keyword option that
+only tests set is listed with its reason, so a new one is a decision.
+
+One rule outside the census: a ``LineageTruncator`` that is constructed and
 ``.truncate``d in one expression has no prior cut to retire, so the
 call is a plain ``localCheckpoint(eager=True)``.
 """
@@ -63,6 +68,76 @@ KEPT_UNSET = {
     "pq_train_codebooks.truncator": _CALLER_SLOT,
 }
 
+_TEST_SEAM = "a test drives a path the registry's fixed inputs never reach"
+
+#: Keyword options that only tests set, with the reason they stay.
+SET_ONLY_BY_TESTS = {
+    "bpe_train_merges_from_words.stats": (
+        "out-parameter: tests read the driver round count to pin job scaling"
+    ),
+    "cdc_chunk_rows.divisor": "tests pin the chunk-boundary parity contract",
+    "compact_parquet.target_file_bytes": (
+        "deployment file-size target of a function only tests reach"
+    ),
+    "connected_components.checkpoint_dir": _CHECKPOINT_DIR,
+    "connected_components.propagate_rounds": _TEST_SEAM,
+    "download_pipeline.skip_cols": (
+        "reference sheet layout; tests pin a different skip list"
+    ),
+    "get_session.master": "deployment setting; tests build a small session",
+    "get_session.shuffle_partitions": (
+        "deployment setting; tests build a small session"
+    ),
+    "ivf_topk.nprobe": _TEST_SEAM,
+    "kcore_membership.max_iters": "tests pin the non-convergence error",
+    "kmeans_train_assign.truncator": _CALLER_SLOT,
+    "load_path.fmt": "file-format contract of a loader only tests reach",
+    "load_path.schema": "file-format contract of a loader only tests reach",
+    "minhash_lsh_pairs.cache": _CALLER_SLOT,
+    "pagerank_integer.checkpoint_dir": _CHECKPOINT_DIR,
+    "pagerank_integer.damping_pct": _TEST_SEAM,
+    "pagerank_integer.scale": _TEST_SEAM,
+    "pagerank_integer.truncate_lineage": KEPT["pagerank_integer.truncate_lineage"],
+    "reconcile_schema.manual_overrides": (
+        "the reference Upload's user rename map; tests pin its contract"
+    ),
+    "run_with_state_metrics.output_mode": _TEST_SEAM,
+    "running_user_totals_stream.state_timeout_ms": (
+        "tests pin state expiry, which the bounded registry drain never hits"
+    ),
+    "salted_join.how": _TEST_SEAM,
+    "srp_candidate_stats.block_col": _TEST_SEAM,
+    "triangle_participation.truncator": _CALLER_SLOT,
+    "upload_pipeline.order_tiebreak": (
+        "the reference Upload's row order; tests pin the tie-break"
+    ),
+    "write.mode": "JdbcSink write-mode contract; tests pin each mode",
+    "write_bucketed.num_buckets": "layout knob of a writer only tests reach",
+    "write_parquet_partitioned.files_per_partition": (
+        "layout knob of a writer only tests reach"
+    ),
+    "write_parquet_partitioned.partition_cols": (
+        "layout knob of a writer only tests reach"
+    ),
+    "write_positional.col_start": (
+        "reference sheet layout; tests place a grid elsewhere"
+    ),
+    "write_positional.row_start": (
+        "reference sheet layout; tests place a grid elsewhere"
+    ),
+    "write_positional.skip_cols": (
+        "reference sheet layout; tests pin a different skip list"
+    ),
+    "write_zordered.bits": "layout knob of a writer only tests reach",
+    "zorder_key.bits": "tests pin the bit-width bounds",
+}
+
+#: Required parameters that every caller passes one literal, with the
+#: reason they stay.
+KEPT_REQUIRED = {
+    "scd2_upsert.load_date": "per-run input data (the load date), not a setting",
+}
+
 
 def _caller_sources(tests: bool = False) -> list[Path]:
     paths = sorted(PKG.rglob("*.py"))
@@ -82,10 +157,12 @@ def _value(expr, fallback=ANY):
         return fallback
 
 
-def _options(trees, keep):
+def _options(trees, keep, required: bool = False):
     """(function name, option) → (position or None, default) for every
     defaulted parameter of a package function for which
-    ``keep(function name, default)`` holds."""
+    ``keep(function name, default)`` holds. With ``required``, the
+    undefaulted parameters instead, each with ``ANY`` as its default, so
+    a call that omits one counts as any value."""
     opts = {}
     for path, tree in trees:
         if not path.is_relative_to(PKG):
@@ -96,12 +173,23 @@ def _options(trees, keep):
             a = fn.args
             pos = a.posonlyargs + a.args
             skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
-            pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
-            pairs += [(k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+            n_req = len(pos) - len(a.defaults)
+            if required:
+                pairs = [(x, None) for x in pos[skip:n_req]]
+                pairs += [
+                    (k, None) for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is None
+                ]
+            else:
+                pairs = list(zip(pos[n_req:], a.defaults))
+                pairs += [
+                    (k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d
+                ]
             for arg, d in pairs:
                 if keep(fn.name, d):
                     i = pos.index(arg) - skip if arg in pos else None
-                    opts[(fn.name, arg.arg)] = (i, _value(d, ast.dump(d)))
+                    dflt = ANY if d is None else _value(d, ast.dump(d))
+                    opts[(fn.name, arg.arg)] = (i, dflt)
     return opts
 
 
@@ -127,10 +215,12 @@ def _calls(trees):
     return out
 
 
-def _census(keep, tests: bool = False) -> dict[str, tuple[str, set]]:
+def _census(
+    keep, tests: bool = False, required: bool = False
+) -> dict[str, tuple[str, set]]:
     """``"function.option"`` → (its default, the values its callers pass)."""
     trees = _trees(_caller_sources(tests))
-    opts = _options(trees, keep)
+    opts = _options(trees, keep, required)
     by_name = defaultdict(list)
     for name, call, params, encl in _calls(trees):
         by_name[name].append((call, params, encl))
@@ -195,6 +285,33 @@ def test_every_keyword_option_is_set_by_some_caller():
     unset = sorted(k for k, (d, v) in census.items() if not v - {d})
     # a stale KEPT_UNSET entry fails too
     assert unset == sorted(KEPT_UNSET), (len(unset), unset)
+
+
+def test_options_set_only_by_tests_are_listed():
+    """An option that no caller outside ``tests/`` sets, but a test does,
+    is either a contract a test pins or a path only a test reaches; each
+    one carries its reason in ``SET_ONLY_BY_TESTS``."""
+    outside = _census(_is_public)
+    census = _census(_is_public, tests=True)
+    only = sorted(
+        k for k, (d, v) in census.items()
+        if v - {d} and (k not in outside or not outside[k][1] - {d})
+    )
+    # a stale SET_ONLY_BY_TESTS entry fails too
+    assert only == sorted(SET_ONLY_BY_TESTS), (len(only), only)
+
+
+def test_every_required_parameter_takes_two_values():
+    """A required parameter of a public function called outside ``tests/``
+    that every call, tests included, passes one literal is a constant."""
+    outside = _census(_is_public, required=True)
+    census = _census(_is_public, tests=True, required=True)
+    one_value = sorted(
+        k for k, (_, v) in census.items()
+        if k in outside and ANY not in v and len(v) == 1
+    )
+    # a stale KEPT_REQUIRED entry fails too
+    assert one_value == sorted(KEPT_REQUIRED), (len(one_value), one_value)
 
 
 #: The environment variables the package may read: where it runs, not how

@@ -33,14 +33,14 @@ def _docs(spark):
 
 
 def test_exact_dedup(spark):
-    out = exact_dedup(_docs(spark), "text", "doc_id").collect()
+    out = exact_dedup(_docs(spark)).collect()
     by_keeper = {r.keeper_id: r.dup_count for r in out}
     assert by_keeper[1] == 2          # docs 1 and 4 share a hash
     assert sum(by_keeper.values()) == 5
 
 
 def test_shingle_rows_short_doc_whole_text(spark):
-    rows = shingle_rows(_docs(spark), "text", "doc_id", 3).collect()
+    rows = shingle_rows(_docs(spark), 3).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r["__id"], []).append(r["__sh"])
@@ -51,7 +51,7 @@ def test_shingle_rows_short_doc_whole_text(spark):
 
 def test_minhash_finds_near_and_exact_dups(spark):
     pairs = minhash_lsh_pairs(
-        _docs(spark), "text", "doc_id", num_hashes=12, band_rows=2,
+        _docs(spark), num_hashes=12, band_rows=2,
         shingle_n=3, threshold=0.2,
     ).collect()
     got = {(r.id_a, r.id_b): r.jaccard_sim for r in pairs}
@@ -62,7 +62,7 @@ def test_minhash_finds_near_and_exact_dups(spark):
 
 def test_simhash_exact_dups_equal_neardups_close(spark):
     sigs = {r.doc_id: r.simhash for r in
-            simhash_signatures(_docs(spark), "text", "doc_id").collect()}
+            simhash_signatures(_docs(spark)).collect()}
     assert sigs[1] == sigs[4]
     ham_12 = bin(sigs[1] ^ sigs[2]).count("1")
     ham_13 = bin(sigs[1] ^ sigs[3]).count("1")
@@ -71,7 +71,7 @@ def test_simhash_exact_dups_equal_neardups_close(spark):
 
 def test_ngram_jaccard_blocked(spark):
     pairs = {(r.id_a, r.id_b): r.jaccard_sim for r in ngram_jaccard_pairs(
-        _docs(spark), "text", "doc_id", threshold=0.1).collect()}
+        _docs(spark), threshold=0.1).collect()}
     assert pairs[(1, 4)] == 1.0
     assert (1, 2) in pairs
 
@@ -90,9 +90,7 @@ def test_containment_catches_embedded_document(spark):
     )
     out = {
         (r.id_a, r.id_b): r.containment
-        for r in ngram_containment_pairs(
-            df, "text", "doc_id", threshold=0.5
-        ).collect()
+        for r in ngram_containment_pairs(df, threshold=0.5).collect()
     }
     assert out == {(1, 2): 1.0}
 
@@ -277,7 +275,7 @@ def test_ngram_jaccard_blocking_resists_first_token_skew(spark):
     from pyspark.sql import functions as F
     from etl_pipeline_excel_sql__spark.operators.dedup import shingle_rows
 
-    hrows = shingle_rows(df, "text", "doc_id", 3).select(
+    hrows = shingle_rows(df, 3).select(
         "__id",
         F.conv(F.substring(F.md5(F.col("__sh")), 1, 15), 16, 10)
         .cast("bigint")
@@ -295,9 +293,7 @@ def test_ngram_jaccard_blocking_resists_first_token_skew(spark):
 
     pairs = {
         (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(
-            df, "text", "doc_id", threshold=0.5
-        ).collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
     }
     assert (500, 501) in pairs
 

@@ -55,9 +55,7 @@ def test_minhash_band_join_carries_no_documents(spark):
     from etl_pipeline_excel_sql__spark.operators.dedup import minhash_lsh_pairs
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-    pairs = minhash_lsh_pairs(
-        load_table(spark, "documents", SF), "text", "doc_id"
-    )
+    pairs = minhash_lsh_pairs(load_table(spark, "documents", SF))
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     # the join keys are (band, bucket) hash columns — text enters only the

@@ -39,9 +39,9 @@ def test_shared_jaccard_truth_builds_once_per_sf(spark, tiny_sf):
         return x
 
     bump_udf = F.udf(bump, "bigint")
-    exploded = shingle_rows(
-        docs, "text", "doc_id", pq.MINHASH_SHINGLE_N
-    ).withColumn("__id", bump_udf("__id"))
+    exploded = shingle_rows(docs, pq.MINHASH_SHINGLE_N).withColumn(
+        "__id", bump_udf("__id")
+    )
 
     from etl_pipeline_excel_sql__spark.sources import registry
 

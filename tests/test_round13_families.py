@@ -26,7 +26,7 @@ def test_truth_cache_invalidates_on_corpus_regen(spark, tmp_path):
         docs = spark.read.parquet(sf + "/documents.parquet").filter(
             F.size(ws_tokens(F.col("text"))) > 0
         )
-        exploded = shingle_rows(docs, "text", "doc_id", pq.MINHASH_SHINGLE_N)
+        exploded = shingle_rows(docs, pq.MINHASH_SHINGLE_N)
         got = pq._shared_jaccard_truth(spark, sf, docs, exploded)
         return sorted((r.id_a, r.id_b, r.jaccard_ppm) for r in got.collect())
 
@@ -90,10 +90,8 @@ def test_reshard_empty_donor_partition_deleted(spark, tmp_path):
 
     path = str(tmp_path / "ring_tbl")
     df = spark.createDataFrame([(k,) for k in keys], ["doc_id"])
-    write_ring_sharded(df, path, "doc_id", n_old, vnodes, ring_space)
-    n_moved = reshard_add_shard(
-        spark, path, "doc_id", n_old, vnodes, ring_space
-    )
+    write_ring_sharded(df, path, n_old, vnodes, ring_space)
+    n_moved = reshard_add_shard(spark, path, n_old, vnodes, ring_space)
     assert n_moved == 200
 
     after = spark.read.parquet(path)

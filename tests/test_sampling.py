@@ -71,8 +71,8 @@ def test_bloom_prefilter_transparent_and_selective(spark, sf_dir):
     urgent = orders.filter(
         F.col("o_orderpriority") == "1-URGENT"
     ).select("o_orderkey")
-    words = bloom_build(urgent, "o_orderkey")
-    candidates = bloom_prefilter(li, "l_orderkey", words)
+    words = bloom_build(urgent)
+    candidates = bloom_prefilter(li, words)
     exact = li.join(
         urgent, li.l_orderkey == urgent.o_orderkey, "left_semi"
     )

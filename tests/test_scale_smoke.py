@@ -58,7 +58,7 @@ def test_exact_dedup_two_million_rows(spark):
             "text"
         ),
     )
-    out = exact_dedup(df, "text", "doc_id")
+    out = exact_dedup(df)
     stats = out.agg(
         F.count(F.lit(1)).alias("groups"),
         F.sum("dup_count").alias("total"),

@@ -112,7 +112,7 @@ def test_contaminated_spans_against_bench(spark):
     got = {
         (r.doc_id, r.span_start, r.span_end)
         for r in contaminated_spans(
-            train, kgram_rows(bench, "text", "doc_id", _K).select("h"), k=_K
+            train, kgram_rows(bench, _K).select("h"), k=_K
         ).collect()
     }
     # docs 2 and 6 quote doc 1's sentence; doc 6 entirely
@@ -164,7 +164,7 @@ def test_incremental_spans_cross_set_only(spark):
     got = {
         (r.doc_id, r.span_start, r.span_end)
         for r in contaminated_spans(
-            dfb, kgram_rows(dfc, "text", "doc_id", k).select("h"), k=k
+            dfb, kgram_rows(dfc, k).select("h"), k=k
         ).collect()
     }
     # "beta gamma delta" (positions 1..4) is in the corpus; the

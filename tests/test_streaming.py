@@ -84,7 +84,7 @@ def test_stream_static_enrichment(spark, sf_dir):
     dim = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    stream = enrich_stream(read_events_stream(spark, sf_dir), dim, "user_id")
+    stream = enrich_stream(read_events_stream(spark, sf_dir), dim)
     got = run_to_memory_sink(
         stream.select("event_id", "user_id", "c_mktsegment"),
         "enrich_test",

@@ -67,9 +67,7 @@ def span_diagnostics(spark, sf_dir: str) -> dict:
     from etl_pipeline_excel_sql__spark.plans.spans_queries import SPAN_K
     from pyspark.sql import functions as F
 
-    grams = kgram_rows(
-        load_table(spark, "documents", sf_dir), "text", "doc_id", SPAN_K
-    )
+    grams = kgram_rows(load_table(spark, "documents", sf_dir), SPAN_K)
     occ = grams.groupBy("h").agg(F.count(F.lit(1)).alias("cnt"))
     row = occ.agg(
         F.sum("cnt").alias("kgram_rows"),
