@@ -46,6 +46,13 @@ def ws_token_count(col: Column | str) -> Column:
     return F.size(ws_tokens(col))
 
 
+def has_ws_tokens() -> Column:
+    """``text`` holds at least one whitespace token: the empty-document
+    filter of the shingling operators. Their DuckDB oracle twins apply
+    the same filter, so every Spark side must spell it this one way."""
+    return ws_token_count(F.col("text")) > 0
+
+
 def bpe_token_count() -> Column:
     """Count of ``text``'s BPE-ish pre-tokens (word runs + individual
     symbols)."""

@@ -136,15 +136,13 @@ def _plain_column_name(c) -> str:
     return name
 
 
-def srp_signature(
-    a: Column | str, bits: int, dims: int, plane_offset: int = 0
-) -> Column:
-    """Signed-random-projection LSH signature (for ANN bucketing).
+def srp_signature(a: Column | str) -> Column:
+    """Signed-random-projection LSH signature (for ANN bucketing): an
+    8-bit integer bucket id over the first 64 components of ``a``.
 
     Hyperplane components derive from md5 -- reproducible anywhere, no
-    stored model. Returns a ``bits``-bit integer bucket id.
-    ``plane_offset`` selects an independent hyperplane family (table t of a
-    multi-table scheme uses ``plane_offset = t * bits``).
+    stored model. Hyperplanes 0..7 are the first table of
+    :func:`srp_planes_df` at any stride.
 
     The expression is generated as ONE SQL string and parsed JVM-side:
     building the ~2,000-node tree through per-op Python calls costs seconds
@@ -155,37 +153,16 @@ def srp_signature(
     """
     col = _plain_column_name(a)
     bit_sqls = []
-    for jj in range(bits):
-        j = plane_offset + jj
+    for j in range(8):
         terms = " + ".join(
             f"CAST(element_at({col}, {i + 1}) AS DOUBLE) * {_srp_plane(j, i)!r}D"
-            for i in range(dims)
+            for i in range(64)
         )
         bit_sqls.append(
-            f"(CASE WHEN ({terms}) > 0 THEN CAST({1 << jj} AS BIGINT) "
+            f"(CASE WHEN ({terms}) > 0 THEN CAST({1 << j} AS BIGINT) "
             f"ELSE CAST(0 AS BIGINT) END)"
         )
     return F.expr(" + ".join(bit_sqls))
-
-
-def srp_signatures(
-    a: Column, bits: int, dims: int, tables: int
-) -> Column:
-    """``tables`` independent SRP signatures → ``array<bigint>``.
-
-    Table ``t`` uses hyperplanes ``t*bits .. (t+1)*bits-1``, so every table
-    is an independent ``bits``-bit hash family; a multi-table LSH candidate
-    filter keeps pairs matching in ANY table (recall ``1-(1-p^bits)^tables``
-    for per-plane agreement probability ``p = 1 - θ/π``).
-
-    NOTE: this fuses tables×bits×dims products into one projection — fine
-    up to ~512 terms, but beyond that janino rejects the generated method
-    and eval silently degrades to interpreted. Multi-table callers on the
-    hot path should prefer :func:`srp_buckets_long`.
-    """
-    return F.array(
-        *[srp_signature(a, bits, dims, plane_offset=t * bits) for t in range(tables)]
-    )
 
 
 def srp_planes_df(
@@ -201,8 +178,8 @@ def srp_planes_df(
     (identical doubles), just computed driver-side once.
 
     ``plane_stride`` fixes table ``t``'s flat plane indices at
-    ``t*stride .. t*stride+bits-1`` (default ``stride=bits``, the
-    :func:`srp_signatures` layout). Callers that derive ``bits`` from
+    ``t*stride .. t*stride+bits-1`` (default ``stride=bits``, so tables
+    never share a plane). Callers that derive ``bits`` from
     the corpus size pass a CONSTANT stride ≥ max bits so the plane
     family is a prefix-stable function of (t, j): growing ``bits`` adds
     planes without re-seeding the ones already in use — and the oracle

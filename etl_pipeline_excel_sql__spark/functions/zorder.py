@@ -8,8 +8,7 @@ min/max column statistics, and a table range-partitioned + sorted by
 ONE column has useless stats on every other filter column. Sorting by
 the interleaved key makes each output file cover a small RECTANGLE in
 (a, b) space, so min/max footer stats prune files for predicates on
-EITHER dimension (see ``sinks/layout.write_zordered`` and the pruning
-measurement in ``tests/test_zorder.py``).
+EITHER dimension.
 
 Pure integer shift/mask arithmetic — bit-identical in every engine, so
 the key itself is oracle-gated like any other value.

@@ -1,10 +1,9 @@
-"""Batch MERGE (SCD-1 upsert) and soft-delete — the lakehouse write patterns.
+"""Batch MERGE (SCD-1 and SCD-2 upserts) — the lakehouse write patterns.
 
 Without a transactional table format in this container (Delta/Iceberg), the
 engine expresses MERGE as a full-outer join + coalesce rewrite — exactly the
 shuffle work a format's MERGE does under the hood, minus the commit
-protocol. One shuffle on the key for both sides; at scale the join benefits
-from both tables being bucketed on the merge key (sinks/bucketed.py).
+protocol. One shuffle on the key for both sides.
 """
 
 from __future__ import annotations
@@ -40,27 +39,6 @@ def merge_upsert(
             for c in update_cols
         ],
     )
-
-
-def merge_with_deletes(
-    target: DataFrame,
-    source: DataFrame,
-    key: str,
-    update_cols: list[str],
-    delete_flag: str,
-) -> DataFrame:
-    """MERGE with delete semantics: source rows flagged ``delete_flag=true``
-    remove the key; others upsert as in :func:`merge_upsert`.
-
-    NULL flags are upserts: ``~col`` alone would treat NULL as
-    not-matching on BOTH branches and silently DROP the row from the
-    merge (feeds often populate the flag only for deletions).
-    """
-    flag = F.coalesce(F.col(delete_flag), F.lit(False))
-    deletes = source.filter(flag).select(key)
-    upserts = source.filter(~flag)
-    merged = merge_upsert(target, upserts.drop(delete_flag), key, update_cols)
-    return merged.join(deletes, on=key, how="left_anti")
 
 
 def scd2_upsert(

@@ -116,17 +116,6 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("mime", StringType(), True),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
 FRAME_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -135,46 +124,6 @@ FRAME_SCHEMA = StructType(
         StructField("payload", BinaryType(), True),
     ]
 )
-
-
-def _resize_image(payload: bytes, width: int, height: int) -> bytes:
-    # Deterministic fake: stretch the content hash to the target pixel
-    # count so output size tracks (width, height) and content.
-    seed = hashlib.md5(payload).digest()
-    n = max(width * height // 64, 1)
-    return (seed * (n // len(seed) + 1))[:n]
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize image payloads to (width, height) via ``mapInPandas``.
-
-    Same bounded-memory iterator shape as ``extract_features``; the
-    payload is transformed in place (narrow map, no shuffle) and the
-    output carries the new dimensions as typed metadata. The codec is
-    stubbed (no media libraries in this environment); the Spark-side
-    batching, schema, and partitioning are real.
-    """
-
-    def _resize(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for batch in batches:
-            out = []
-            for payload in batch["payload"]:
-                data = bytes(payload) if payload is not None else b""
-                out.append(_resize_image(data, width, height))
-            yield pd.DataFrame(
-                {
-                    "media_id": batch["media_id"],
-                    "modality": batch["modality"],
-                    "mime": batch["mime"],
-                    "width": pd.array([width] * len(batch), dtype="int64"),
-                    "height": pd.array([height] * len(batch), dtype="int64"),
-                    "payload": out,
-                }
-            )
-
-    return media.mapInPandas(_resize, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:

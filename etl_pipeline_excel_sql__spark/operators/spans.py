@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
+from etl_pipeline_excel_sql__spark.functions.text import ws_token_count, ws_tokens
 
 
 def kgram_rows(docs: DataFrame, k: int) -> DataFrame:
@@ -240,7 +240,7 @@ def trim_duplicated_spans(docs: DataFrame, k: int = 8) -> DataFrame:
         ).alias("__text"),
     )
     base = docs.select(
-        "doc_id", F.size(ws_tokens(F.col("text"))).alias("n_tokens")
+        "doc_id", ws_token_count(F.col("text")).alias("n_tokens")
     )
     return base.join(rebuilt, "doc_id", "left").select(
         "doc_id",

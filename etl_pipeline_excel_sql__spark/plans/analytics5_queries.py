@@ -875,7 +875,7 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     subword counts are skinny rows, so the added cost over encoding is
     one map-side-combined groupBy. Output all-integer, fertility in
     ppm (1e6 = one subword per word)."""
-    from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
+    from etl_pipeline_excel_sql__spark.functions.text import ws_token_count
     from etl_pipeline_excel_sql__spark.operators.bpe import (
         bpe_doc_token_ids,
         bpe_train_merges_from_words,
@@ -897,7 +897,7 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "lang",
-            F.size(ws_tokens(F.col("text"))).cast("bigint").alias("__nw"),
+            ws_token_count(F.col("text")).cast("bigint").alias("__nw"),
         ),
         "doc_id",
     )

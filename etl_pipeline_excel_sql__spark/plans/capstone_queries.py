@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from etl_pipeline_excel_sql__spark.functions.text import (
     STOPWORDS,
     stopword_hits,
+    ws_token_count,
     ws_tokens,
 )
 from etl_pipeline_excel_sql__spark.operators.spans import kgram_rows
@@ -290,7 +291,7 @@ def q_pretrain_curation_pipeline(
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
     )
     bench_row = bench.select(
-        F.size(ws_tokens(F.col("text"))).cast("bigint").alias("__ntok")
+        ws_token_count(F.col("text")).cast("bigint").alias("__ntok")
     ).agg(
         F.lit("benchmark").alias("disposition"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

@@ -685,13 +685,13 @@ def q_effective_corpus_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts ride skinny (doc, group, tokens) rows; the text never
     shuffles. Output per source: member docs, clusters kept, raw vs
     effective tokens, savings in ppm."""
-    from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
+    from etl_pipeline_excel_sql__spark.functions.text import ws_token_count
 
     groups = _neardup_groups(spark, sf_dir)
     toks = load_table(spark, "documents", sf_dir).select(
         "doc_id",
         "source",
-        F.size(ws_tokens(F.col("text"))).cast("bigint").alias("__ntok"),
+        ws_token_count(F.col("text")).cast("bigint").alias("__ntok"),
     )
     g = groups.join(toks, "doc_id")
     per_group = g.groupBy("group_id").agg(

@@ -29,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.text import shingles, ws_tokens
+from etl_pipeline_excel_sql__spark.functions.text import (
+    has_ws_tokens,
+    shingles,
+    ws_token_count,
+    ws_tokens,
+)
 from etl_pipeline_excel_sql__spark.plans.analytics_queries import DEC, dec_out
 from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
     _shingle_sql,
@@ -63,7 +68,7 @@ def q_decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, "documents", sf_dir)
     sh = shingles(ws_tokens(F.col("text")), DECONTAM_SHINGLE_N)
-    shingled = docs.filter(F.size(ws_tokens(F.col("text"))) > 0).select(
+    shingled = docs.filter(has_ws_tokens()).select(
         "doc_id", F.explode(sh).alias("sh")
     )
     bench = (
@@ -307,7 +312,7 @@ def q_corpus_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import SPLIT_SALT
 
     docs = load_table(spark, "documents", sf_dir)
-    n_tokens = F.size(ws_tokens(F.col("text")))
+    n_tokens = ws_token_count(F.col("text"))
     # md5 is computed in the scan projection so the dedup exchange carries
     # the 32-byte hash, never the document body.
     staged = docs.select(

@@ -1,11 +1,10 @@
 """Data-layout queries: the Z-order clustering key, oracle-gated.
 
-``zorder_key`` emits the Morton key the ``sinks/layout.write_zordered``
-clustered writer sorts by — (user, hour) over the events stream, the
-classic two-predicate audit-table layout. The key is pure shift/mask
-integer arithmetic (``functions/zorder``), so the oracle twin is exact;
-the layout's PRUNING value (narrow per-file min/max on both dimensions)
-is measured from real written parquet footers in ``tests/test_zorder.py``.
+``zorder_key`` emits the Morton key a Z-order clustered writer would sort
+by — (user, hour) over the events stream, the classic two-predicate
+audit-table layout. The key is pure shift/mask integer arithmetic
+(``functions/zorder``), so the oracle twin is exact. Only the key is
+computed: the engine writes no clustered layout.
 """
 
 from __future__ import annotations

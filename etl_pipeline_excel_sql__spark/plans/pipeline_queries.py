@@ -19,6 +19,7 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
 )
 from etl_pipeline_excel_sql__spark.functions.text import (
     bpe_token_count,
+    has_ws_tokens,
     lang_id,
     quality_features,
     ws_token_count,
@@ -789,7 +790,7 @@ def q_ann_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     return emb.select(
-        "vec_id", srp_signature(F.col("embedding"), bits=8, dims=64).alias("srp_bucket")
+        "vec_id", srp_signature(F.col("embedding")).alias("srp_bucket")
     )
 
 
@@ -1482,7 +1483,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     — built once, loaded by every audit thereafter.
     """
     docs = load_table(spark, "documents", sf_dir).filter(
-        F.size(ws_tokens(F.col("text"))) > 0
+        has_ws_tokens()
     )
     exploded = shared_slot(
         spark, "pipeline.audit_shingles", SignatureCache
@@ -1581,7 +1582,7 @@ def q_lsh_recall_audit_sampled(
     :mod:`~etl_pipeline_excel_sql__spark.operators.iterative` applies.
     """
     docs = load_table(spark, "documents", sf_dir).filter(
-        F.size(ws_tokens(F.col("text"))) > 0
+        has_ws_tokens()
     )
     n_frame = docs.agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
     ppm = F.least(
@@ -1818,7 +1819,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir).filter(
-        F.size(ws_tokens(F.col("text"))) > 0
+        has_ws_tokens()
     )
     # Default persist slots: the shingle explode feeds the truth join AND
     # the signature build; the signature table is re-banded per config.

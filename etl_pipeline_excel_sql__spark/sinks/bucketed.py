@@ -1,56 +1,20 @@
-"""Bucketed tables: pre-shuffled storage for co-located joins.
+"""Consistent-hash (vnode ring) sharded sink.
 
-At 100 TB the dominant cost of a fact-to-fact join is the shuffle. Bucketing
-pays that shuffle once at write time: both tables are hash-partitioned into
-the same number of buckets on the join key, so every subsequent join (or
-aggregation) on that key is a zero-exchange zip of matching buckets.
-``tests/test_bucketed.py`` asserts the bucketed join plan contains no
-Exchange while the plain-parquet twin does.
-
-This is the storage-layout complement to runtime choices (broadcast for
-dims, AQE for skew): use it for the handful of giant tables that join each
-other repeatedly on a stable key — e.g. orders ⋈ lineitem on the order key.
+The write-path deployment of the `shard_rebalance_audit` ring
+(plans/ops_queries.py): data lands partitioned by its ring-owner
+shard, and growing the fleet N -> N+1 rewrites ONLY the rows captured
+by the new shard's vnodes (~1/(N+1) of the corpus) plus the partitions
+they leave — never a full reshuffle (naive modulo placement moves
+~N/(N+1) of all keys). Ring arithmetic is identical to the audit so
+the DuckDB oracle twin can recompute ownership from first principles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 16,
-) -> None:
-    """Save as a bucketed managed table, replacing any previous one."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str]
-) -> DataFrame:
-    """Inner-join two same-bucketed tables on their bucket key — no
-    exchange."""
-    return spark.table(left_table).join(spark.table(right_table), on=on)
-
-
-# --- consistent-hash (vnode ring) sharded sink (round 12) -------------------
-#
-# The write-path deployment of the `shard_rebalance_audit` ring
-# (plans/ops_queries.py): data lands partitioned by its ring-owner
-# shard, and growing the fleet N -> N+1 rewrites ONLY the rows captured
-# by the new shard's vnodes (~1/(N+1) of the corpus) plus the partitions
-# they leave — never a full reshuffle (naive modulo placement moves
-# ~N/(N+1) of all keys). Ring arithmetic is identical to the audit so
-# the DuckDB oracle twin can recompute ownership from first principles.
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from etl_pipeline_excel_sql__spark.functions.hashing import (  # noqa: E402
-    md5_hash60,
-)
+from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
 
 #: ring-point salt prefix (matches the audit's `ring:s:v` convention)
 RING_POINT_SALT = "ring"

@@ -1,25 +1,23 @@
 """Trained-artifact persistence: the train-once / serve-many seam.
 
-Every iterative trainer in this engine emits a SMALL, bounded model
-table — BPE merges, PQ codebooks, k-means centroids, perceptron
-weights. In production those are trained on one (expensive) corpus
-pass and then consumed by many encode/serve jobs, so they must round-
-trip through storage without semantic drift. This module is that seam:
-parquet save/load with the artifact's schema ENFORCED on load (a
-column rename or type widening in storage fails loudly at load time,
-not as silently-wrong encodes three jobs later), plus the
-consumer-shaped accessors (ordered merge list, weight dict).
+Trained model tables (the BM25 index, or a bounded table such as PQ
+codebooks) are built on one (expensive) corpus pass and then consumed by many serve jobs, so they
+must round-trip through storage without semantic drift. This module is
+that seam: parquet save/load with the artifact's schema ENFORCED on load
+(a column rename or type widening in storage fails loudly at load time,
+not as silently-wrong results three jobs later).
 
-Artifacts are model-sized by construction (merges = vocab size,
-codebooks = m·ncodes, weights = n_buckets), so ``coalesce(1)`` writes
-one file — the read side broadcasts it exactly like the in-memory
-trained table, and nothing here touches corpus-scale data.
+Bounded artifacts (codebooks = m·ncodes rows, the BM25 corpus scalars)
+are written by ``coalesce(1)`` as one file — the read side broadcasts it
+exactly like the in-memory trained table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 
 
 def save_artifact(df: DataFrame, path: str) -> None:
@@ -46,71 +44,16 @@ def load_artifact(
     return spark.read.schema(expected_schema).parquet(path)
 
 
-def save_bpe_merges(merges: DataFrame, path: str) -> None:
-    save_artifact(merges, path)
-
-
-def load_bpe_merges(spark: SparkSession, path: str) -> list[tuple[str, str]]:
-    """The consumer shape: merges as the ordered (left, right) list that
-    ``bpe_encode_words`` / ``bpe_doc_token_ids`` take."""
-    from etl_pipeline_excel_sql__spark.operators.bpe import MERGES_SCHEMA
-
-    df = load_artifact(spark, path, MERGES_SCHEMA)
-    return [
-        (r["left"], r["right"])
-        for r in df.orderBy("merge_rank").collect()
-    ]
-
-
-def save_perceptron_weights(
-    spark: SparkSession, weights: dict[int, int], path: str
-) -> None:
-    rows = sorted(weights.items())
-    save_artifact(
-        local_df(spark, rows or [(-1, 0)], "bucket INT, w BIGINT"),
-        path,
-    )
-
-
-def load_perceptron_weights(spark: SparkSession, path: str) -> dict[int, int]:
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("bucket", IntegerType(), True),
-            StructField("w", LongType(), True),
-        ]
-    )
-    df = load_artifact(spark, path, schema)
-    return {
-        int(r["bucket"]): int(r["w"])
-        for r in df.collect()
-        if r["w"] and r["bucket"] >= 0
-    }
-
-
 # --- BM25 inverted-index persistence (operators/retrieval.Bm25Index) ---
 # tf/dl/df are corpus-vocabulary-scale (unlike the bounded artifacts
 # above), so they persist as ordinary partitionable parquet; only the
 # two corpus scalars ride a one-row artifact. Load enforces each
 # table's schema the same way load_artifact does.
 
-from pyspark.sql.types import (  # noqa: E402
-    LongType,
-    StructField,
-)
-from pyspark.sql.types import StringType as _Str  # noqa: E402
-from etl_pipeline_excel_sql__spark.functions.localframe import local_df
-
 BM25_TF_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
-        StructField("term", _Str()),
+        StructField("term", StringType()),
         StructField("tf", LongType()),
     ]
 )
@@ -118,7 +61,7 @@ BM25_DL_SCHEMA = StructType(
     [StructField("doc_id", LongType()), StructField("dl", LongType())]
 )
 BM25_DF_SCHEMA = StructType(
-    [StructField("term", _Str()), StructField("df", LongType())]
+    [StructField("term", StringType()), StructField("df", LongType())]
 )
 BM25_STATS_SCHEMA = StructType(
     [

@@ -10,10 +10,8 @@ table: ``spark.createDataFrame(<pyarrow.Table>, schema)`` makes a
 filters and projections over it at plan time.
 
 :func:`read_xlsx_all_string` reads a workbook through the native stdlib
-reader (``sinks/xlsx.py``) into a :class:`~...sinks.excel_writer.CellGrid`;
-:func:`grid_to_dataframe` turns any grid into the all-string frame, and
-:func:`read_csv_all_string` is the distributed all-string scan for
-file-backed snapshots of any size.
+reader (``sinks/xlsx.py``) into a :class:`~...sinks.excel_writer.CellGrid`,
+and :func:`grid_to_dataframe` turns any grid into the all-string frame.
 """
 
 from __future__ import annotations
@@ -66,13 +64,3 @@ def _header_name(value, c: int) -> str:
     name = "" if value is None else str(value)
     return name if name.strip() else f"col{c}"
 
-
-def read_csv_all_string(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed all-string scan of a headed CSV snapshot (the scale path
-    for S2 semantics: ``inferSchema=false`` types every column StringType,
-    whatever its header text)."""
-    return (
-        spark.read.option("header", "true")
-        .option("inferSchema", "false")
-        .csv(path)
-    )

@@ -195,51 +195,3 @@ class JdbcSource:
             reader = reader.option(k, v)
         return reader.load()
 
-
-#: File formats the generic path loader accepts. All are Spark built-ins
-#: (no extra packages); each supports predicate pushdown to a different
-#: degree — parquet/orc prune row groups/stripes by statistics, csv/json
-#: only skip whole files via partition pruning.
-FILE_FORMATS = ("parquet", "orc", "csv", "json")
-
-
-def load_path(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-    **options: str,
-) -> DataFrame:
-    """Load a file-based table of any supported format (lazy scan).
-
-    ``schema`` is REQUIRED for csv/json: without one, Spark runs a full
-    inference scan over the data before the real query — at 100 TB that
-    is a second pass over the corpus, and inferred types silently drift
-    with content (an all-digits id column becomes bigint in one
-    ingestion and string in the next). Columnar formats carry their own
-    schema, so it stays optional there. CSV defaults to header=true
-    (override via options).
-
-    A JSONL document corpus — the most common LLM-corpus interchange
-    format — is exactly ``load_path(spark, p, "json", schema=...)``;
-    round-trip covered in tests/test_sources_sinks.py.
-    """
-    ensure_session_confs(spark)
-    if fmt not in FILE_FORMATS:
-        raise ValueError(
-            f"load_path: fmt must be one of {FILE_FORMATS}, got {fmt!r}"
-        )
-    if fmt in ("csv", "json") and schema is None:
-        raise ValueError(
-            f"load_path: {fmt} requires an explicit schema — inference "
-            "scans the whole input once before the query and drifts with "
-            "content"
-        )
-    reader = spark.read.format(fmt)
-    if schema is not None:
-        reader = reader.schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", options.pop("header", "true"))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)

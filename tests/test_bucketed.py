@@ -1,72 +1,7 @@
-"""Bucketed join: the pre-paid shuffle must eliminate runtime exchanges."""
+"""Vnode-ring sharded sink: ownership agrees with the rebalance audit,
+and adding a shard moves only the rows the new shard captures."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from etl_pipeline_excel_sql__spark.sinks.bucketed import bucketed_join, write_bucketed
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    # disable auto-broadcast so the exchange comparison is about bucketing,
-    # not about one side being tiny
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    write_bucketed(
-        orders.withColumnRenamed("o_orderkey", "k"), "b_orders", ["k"], 8
-    )
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "k"), "b_lineitem", ["k"], 8
-    )
-    yield "b_orders", "b_lineitem"
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def _n_exchanges(df) -> int:
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Exchange hashpartitioning")
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed_tables):
-    lt, rt = bucketed_tables
-    joined = bucketed_join(spark, lt, rt, on=["k"])
-    assert _n_exchanges(joined) == 0
-
-    plain = spark.read.parquet(f"{sf_dir}/orders.parquet").join(
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
-        F.col("o_orderkey") == F.col("l_orderkey"),
-    )
-    assert _n_exchanges(plain) >= 1  # the shuffle bucketing pre-paid
-
-    # and the result is still correct
-    n = joined.count()
-    expected = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .join(
-            spark.read.parquet(f"{sf_dir}/orders.parquet"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .count()
-    )
-    assert n == expected
-
-
-def test_bucketed_groupby_has_no_exchange(spark, bucketed_tables):
-    lt, _ = bucketed_tables
-    agg = spark.table(lt).groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-    assert _n_exchanges(agg) == 0
-
-
-# --- vnode-ring sharded sink (round 12) --------------------------------------
 
 
 def test_ring_assign_matches_audit_arithmetic(spark):

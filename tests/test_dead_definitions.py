@@ -6,6 +6,10 @@ A top-level function or class counts as reached when some ``Name``,
 outside the definition itself. The rule is by name only, so it is
 generous (any same-named attribute counts) and never flags a live
 definition; what it does flag has no caller anywhere and should go.
+
+A stricter census counts only the names outside ``tests/``: a definition
+that only tests reach is surface no program uses, and stays only when
+``TEST_ONLY`` lists it with its reason.
 """
 
 from __future__ import annotations
@@ -38,19 +42,53 @@ def _names(node: ast.AST):
                 yield n.asname
 
 
-def test_every_top_level_definition_has_a_reference():
+def _unreached(tests: bool) -> list[tuple[str, str]]:
+    """(name, "path:line name") of every top-level package definition
+    whose name appears nowhere beyond its own body, counting the names
+    in ``tests/`` only when ``tests`` is true."""
     seen: Counter[str] = Counter()
     defs = []
     for path in _sources():
+        counted = tests or not path.is_relative_to(ROOT / "tests")
         for stmt in ast.parse(path.read_text(), str(path)).body:
             names = Counter(_names(stmt))
-            seen.update(names)
+            if counted:
+                seen.update(names)
             if isinstance(stmt, DEFS) and path.is_relative_to(PKG):
                 defs.append((path, stmt, names[stmt.name]))
     assert len(defs) > 500
-    dead = [
-        f"{path.relative_to(ROOT)}:{stmt.lineno} {stmt.name}"
+    return [
+        (stmt.name, f"{path.relative_to(ROOT)}:{stmt.lineno} {stmt.name}")
         for path, stmt, own in defs
         if seen[stmt.name] == own
     ]
+
+
+def test_every_top_level_definition_has_a_reference():
+    dead = [where for _, where in _unreached(tests=True)]
     assert not dead, dead
+
+
+#: Package definitions whose only callers are tests, with the reason each
+#: stays. Anything else that only tests reach is surface no program uses.
+TEST_ONLY = {
+    "_rho_int": (
+        "the Python reference test_rho_spark_matches_python compares "
+        "Spark's rho against"
+    ),
+    "output_filename": "SURVEY S4: the reference's dated output file name",
+    "run_with_state_metrics": (
+        "reads the state of the registry's streaming queries, which "
+        "test_streaming_state.py bounds"
+    ),
+}
+
+
+def test_every_definition_has_a_caller_outside_tests():
+    """A top-level package definition counts as reached only when its name
+    appears outside ``tests/`` beyond its own body; ``TEST_ONLY`` lists
+    the exceptions, and a stale entry fails too."""
+    test_only = _unreached(tests=False)
+    assert sorted(n for n, _ in test_only) == sorted(TEST_ONLY), sorted(
+        where for _, where in test_only
+    )

@@ -11,7 +11,6 @@ prove filter/projection pushdown reaches the remote query (VERDICT r3 ask
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.sources.registry import JdbcSource
 
@@ -60,119 +59,3 @@ def test_jdbc_filter_and_projection_pushdown(spark, derby_url):
     assert "grp" not in scan_line  # unused column pruned from the scan
     assert {r.k for r in df.collect()} == set(range(91, 100))
 
-
-def _read_all(spark, url, table):
-    return {
-        tuple(r)
-        for r in JdbcSource(url=url, table=table).load(spark).collect()
-    }
-
-
-def test_jdbc_sink_roundtrip_modes(spark, derby_url):
-    """Write-back contract (VERDICT r4 ask #5): parquet/Excel→SQL via
-    JdbcSink — append accumulates, truncate replaces rows while keeping
-    the table, recreate replaces rows and DDL; every mode round-trips
-    byte-identically through the partitioned JdbcSource read."""
-    from etl_pipeline_excel_sql__spark.sinks.jdbc import JdbcSink
-
-    sink = JdbcSink(url=derby_url, table="t_writeback")
-    first = spark.range(10).selectExpr("id AS k", "CONCAT('a', id) AS val")
-    sink.write(first, mode="recreate")
-    assert _read_all(spark, derby_url, "t_writeback") == {
-        (i, f"a{i}") for i in range(10)
-    }
-
-    more = spark.range(10, 15).selectExpr(
-        "id AS k", "CONCAT('a', id) AS val"
-    )
-    sink.write(more, mode="append")
-    assert _read_all(spark, derby_url, "t_writeback") == {
-        (i, f"a{i}") for i in range(15)
-    }
-
-    replacement = spark.range(3).selectExpr(
-        "id AS k", "CONCAT('b', id) AS val"
-    )
-    sink.write(replacement, mode="truncate")
-    assert _read_all(spark, derby_url, "t_writeback") == {
-        (i, f"b{i}") for i in range(3)
-    }
-
-    # recreate after a schema change: the new frame's shape wins
-    widened = spark.range(2).selectExpr(
-        "id AS k", "CONCAT('c', id) AS val", "CAST(id * 2 AS INT) AS extra"
-    )
-    sink.write(widened, mode="recreate")
-    assert _read_all(spark, derby_url, "t_writeback") == {
-        (0, "c0", 0),
-        (1, "c1", 2),
-    }
-
-
-def test_jdbc_sink_bounds_write_connections(spark, derby_url):
-    """A wide frame must not open one DB connection per input partition:
-    the sink coalesces to max_write_partitions before the write."""
-    from etl_pipeline_excel_sql__spark.sinks.jdbc import JdbcSink
-
-    wide = spark.range(0, 1000, 1, 64).selectExpr("id AS k")
-    assert wide.rdd.getNumPartitions() == 64
-    sink = JdbcSink(url=derby_url, table="t_bounded", max_write_partitions=4)
-    sink.write(wide, mode="recreate")
-    got = _read_all(spark, derby_url, "t_bounded")
-    assert got == {(i,) for i in range(1000)}
-
-
-def test_jdbc_sink_shuffle_before_write_keeps_upstream_parallelism(
-    spark, derby_url
-):
-    """shuffle_before_write=True bounds connections via repartition — an
-    Exchange above the upstream plan — so a wide upstream aggregation
-    keeps its parallelism instead of collapsing to max_write_partitions
-    tasks (the coalesce stage-collapse trade-off)."""
-    from etl_pipeline_excel_sql__spark.sinks.jdbc import JdbcSink
-
-    wide = (
-        spark.range(0, 1000, 1, 64)
-        .selectExpr("id % 100 AS k", "id AS v")
-        .groupBy("k")
-        .agg(F.sum("v").alias("s"))
-    )
-    sink = JdbcSink(
-        url=derby_url,
-        table="t_shuffled",
-        max_write_partitions=4,
-        shuffle_before_write=True,
-    )
-    sink.write(wide, mode="recreate")
-    got = _read_all(spark, derby_url, "t_shuffled")
-    want = {
-        (k, sum(v for v in range(1000) if v % 100 == k)) for k in range(100)
-    }
-    assert got == want
-    # Plan shape of the SINK's own bounding step (not a reconstruction):
-    # the repartition is a RoundRobin Exchange ABOVE the agg, not a
-    # coalesce that would cap the agg itself — and the default
-    # (shuffle_before_write=False) sink produces the Coalesce.
-    plan = sink.bounded(wide)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange RoundRobinPartitioning(4)" in plan
-    assert "Coalesce" not in plan
-    coalescing = JdbcSink(
-        url=derby_url, table="t_shuffled", max_write_partitions=4
-    )
-    plan2 = (
-        coalescing.bounded(wide)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Coalesce 4" in plan2
-    assert "RoundRobinPartitioning(4)" not in plan2
-
-
-def test_jdbc_sink_rejects_unknown_mode(spark, derby_url):
-    from etl_pipeline_excel_sql__spark.sinks.jdbc import JdbcSink
-
-    with pytest.raises(ValueError, match="mode must be one of"):
-        JdbcSink(url=derby_url, table="t_x").write(
-            spark.range(1), mode="upsert"
-        )

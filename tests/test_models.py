@@ -5,41 +5,11 @@ storage drift must fail at load, not as wrong encodes later."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.sinks.models import (
     load_artifact,
-    load_bpe_merges,
-    load_perceptron_weights,
     save_artifact,
-    save_bpe_merges,
-    save_perceptron_weights,
 )
-
-
-def test_bpe_merges_round_trip_drives_identical_encoding(
-    spark, sf_dir, tmp_path
-):
-    from etl_pipeline_excel_sql__spark.operators.bpe import (
-        bpe_doc_token_ids,
-        bpe_train_merges_from_words,
-        word_frequencies,
-    )
-    from etl_pipeline_excel_sql__spark.sources.registry import load_table
-
-    docs = load_table(spark, "documents", sf_dir).limit(100)
-    words = word_frequencies(docs)
-    trained = bpe_train_merges_from_words(words, 6, batch_pairs=4)
-    fresh = [(r.left, r.right) for r in trained.orderBy("merge_rank").collect()]
-
-    path = str(tmp_path / "merges")
-    save_bpe_merges(trained, path)
-    loaded = load_bpe_merges(spark, path)
-    assert loaded == fresh
-
-    a = bpe_doc_token_ids(docs, fresh, words=words).collect()
-    b = bpe_doc_token_ids(docs, loaded, words=words).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_pq_codebooks_round_trip_drives_identical_codes(
@@ -59,17 +29,6 @@ def test_pq_codebooks_round_trip_drives_identical_codes(
     a = {r.vec_id: r.codes for r in pq_encode(emb, cb, m=8, dims=64).collect()}
     b = {r.vec_id: r.codes for r in pq_encode(emb, cb2, m=8, dims=64).collect()}
     assert a == b
-
-
-def test_perceptron_weights_round_trip(spark, tmp_path):
-    w = {3: 5, 17: -2, 400: 1}
-    path = str(tmp_path / "weights")
-    save_perceptron_weights(spark, w, path)
-    assert load_perceptron_weights(spark, path) == w
-    # empty model round-trips to empty
-    path2 = str(tmp_path / "weights0")
-    save_perceptron_weights(spark, {}, path2)
-    assert load_perceptron_weights(spark, path2) == {}
 
 
 def test_schema_drift_fails_at_load(spark, tmp_path):

@@ -1,17 +1,15 @@
-"""SQL Server dialect coverage for the JDBC source/sink pair.
+"""SQL Server dialect coverage for the JDBC source.
 
 The reference's actual database is SQL Server over ODBC
 (Download.py:78-86); this repo's JDBC contract tests run against
 embedded Derby because no SQL Server exists in the container. These
 tests close the dialect gap without a server: they assert the exact SQL
 TEXT Spark's built-in ``MsSqlServerDialect`` generates for the
-operations ``JdbcSource`` / ``JdbcSink`` rely on — dialect resolution
-from the connection URL, CREATE TABLE column DDL (what
-``mode="recreate"`` executes), the TRUNCATE statement (``mode=
-"truncate"``), pushdown literal escaping, identifier quoting, and the
+operations ``JdbcSource`` relies on — dialect resolution from the
+connection URL, pushdown literal escaping, identifier quoting, and the
 TOP-N limit clause. A Spark upgrade that changed any of these texts —
-and would therefore change what the sink sends a production SQL Server
-— fails here by string.
+and would therefore change what the source sends a production SQL
+Server — fails here by string.
 """
 
 from __future__ import annotations
@@ -32,42 +30,6 @@ def mssql(spark):
 def test_sqlserver_url_resolves_to_mssql_dialect(mssql):
     _, _, dialect = mssql
     assert "MsSqlServerDialect" in dialect.toString()
-
-
-def test_create_table_column_ddl_text(mssql):
-    """The column DDL `mode="recreate"` would send: SQL Server types, not
-    ANSI defaults (NVARCHAR(MAX) for strings, BIT for booleans, DATETIME
-    for timestamps)."""
-    spark, jvm, dialect = mssql
-    jdbc_utils = getattr(
-        getattr(
-            jvm.org.apache.spark.sql.execution.datasources.jdbc,
-            "JdbcUtils$",
-        ),
-        "MODULE$",
-    )
-    jschema = (
-        spark._jsparkSession.sessionState()
-        .sqlParser()
-        .parseTableSchema("k INT, v STRING, b BOOLEAN, ts TIMESTAMP, r DOUBLE")
-    )
-    ddl = jdbc_utils.schemaString(
-        dialect, jschema, False, jvm.scala.Option.apply(None)
-    )
-    assert ddl == (
-        '"k" INTEGER , "v" NVARCHAR(MAX) , "b" BIT , '
-        '"ts" DATETIME , "r" DOUBLE PRECISION '
-    )
-
-
-def test_truncate_statement_text(mssql):
-    """JdbcSink mode="truncate" issues the dialect's truncate query —
-    TRUNCATE TABLE, keeping DDL/indexes/grants, not DELETE FROM."""
-    _, jvm, dialect = mssql
-    sql = dialect.getTruncateQuery(
-        "dbo.results", jvm.scala.Option.apply(None)
-    )
-    assert sql == "TRUNCATE TABLE dbo.results"
 
 
 def test_pushdown_literal_escaping(mssql):

@@ -40,22 +40,6 @@ def test_unknown_modality_yields_null_features(spark):
     assert row.n_bytes == 3
 
 
-def test_resize_images_updates_metadata_and_payload(spark):
-    from etl_pipeline_excel_sql__spark.operators.multimodal import (
-        _resize_image,
-        resize_images,
-    )
-
-    out = {
-        r.media_id: r
-        for r in resize_images(_media(spark), 64, 32).collect()
-    }
-    assert out[1].width == 64 and out[1].height == 32
-    assert bytes(out[1].payload) == _resize_image(b"hello world", 64, 32)
-    # output size tracks the requested dimensions
-    assert len(out[1].payload) == 64 * 32 // 64
-
-
 def test_sample_frames_is_one_to_many(spark):
     from etl_pipeline_excel_sql__spark.operators.multimodal import sample_frames
 

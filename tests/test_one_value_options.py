@@ -76,9 +76,6 @@ SET_ONLY_BY_TESTS = {
         "out-parameter: tests read the driver round count to pin job scaling"
     ),
     "cdc_chunk_rows.divisor": "tests pin the chunk-boundary parity contract",
-    "compact_parquet.target_file_bytes": (
-        "deployment file-size target of a function only tests reach"
-    ),
     "connected_components.checkpoint_dir": _CHECKPOINT_DIR,
     "connected_components.propagate_rounds": _TEST_SEAM,
     "download_pipeline.skip_cols": (
@@ -91,8 +88,6 @@ SET_ONLY_BY_TESTS = {
     "ivf_topk.nprobe": _TEST_SEAM,
     "kcore_membership.max_iters": "tests pin the non-convergence error",
     "kmeans_train_assign.truncator": _CALLER_SLOT,
-    "load_path.fmt": "file-format contract of a loader only tests reach",
-    "load_path.schema": "file-format contract of a loader only tests reach",
     "minhash_lsh_pairs.cache": _CALLER_SLOT,
     "pagerank_integer.checkpoint_dir": _CHECKPOINT_DIR,
     "pagerank_integer.damping_pct": _TEST_SEAM,
@@ -111,14 +106,6 @@ SET_ONLY_BY_TESTS = {
     "upload_pipeline.order_tiebreak": (
         "the reference Upload's row order; tests pin the tie-break"
     ),
-    "write.mode": "JdbcSink write-mode contract; tests pin each mode",
-    "write_bucketed.num_buckets": "layout knob of a writer only tests reach",
-    "write_parquet_partitioned.files_per_partition": (
-        "layout knob of a writer only tests reach"
-    ),
-    "write_parquet_partitioned.partition_cols": (
-        "layout knob of a writer only tests reach"
-    ),
     "write_positional.col_start": (
         "reference sheet layout; tests place a grid elsewhere"
     ),
@@ -128,7 +115,6 @@ SET_ONLY_BY_TESTS = {
     "write_positional.skip_cols": (
         "reference sheet layout; tests pin a different skip list"
     ),
-    "write_zordered.bits": "layout knob of a writer only tests reach",
     "zorder_key.bits": "tests pin the bit-width bounds",
 }
 

@@ -126,29 +126,6 @@ def test_pack_sequences_has_no_global_corpus_window(spark):
     assert "hashpartitioning(__rng" in plan
 
 
-def test_partitioned_write_prunes_on_read(spark, tmp_path):
-    """Partition pruning end-to-end: a status-partitioned dataset read
-    with a status filter must scan ONLY that partition's directory."""
-    from etl_pipeline_excel_sql__spark.sinks.parquet import (
-        write_parquet_partitioned,
-    )
-    from etl_pipeline_excel_sql__spark.sources.registry import load_table
-
-    out = str(tmp_path / "orders_by_status")
-    write_parquet_partitioned(
-        load_table(spark, "orders", SF),
-        out,
-        partition_cols=["o_orderstatus"],
-    )
-    import pyspark.sql.functions as F
-
-    df = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "o_orderstatus" in plan.split("PartitionFilters")[1].splitlines()[0]
-    assert df.count() > 0
-
-
 def test_tpch_q4_uses_semi_join(spark):
     """Q4's EXISTS must compile to a semi join (orders never duplicated)."""
     plan = _plan(spark, "tpch_q4_order_priority")

@@ -1,16 +1,11 @@
-"""Z-order layout: key correctness (against an independent bit-twiddle
-reference) and the actual PRUNING measurement — written parquet footers
-must show the Z-clustered layout bounding both dimensions per file,
-where a single-column sort bounds only its own."""
+"""Z-order key: correctness against an independent bit-twiddle
+reference, and the bit-width bounds."""
 
 from __future__ import annotations
-
-import glob
 
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.zorder import zorder_key
-from etl_pipeline_excel_sql__spark.sinks.layout import write_zordered
 
 
 def _ref_morton(a: int, b: int, bits: int) -> int:
@@ -33,72 +28,6 @@ def test_key_matches_reference_bits(spark):
         (a, b): _ref_morton(a & (2**21 - 1), b & (2**21 - 1), 21)
         for a, b in rows
     }
-
-
-def _file_ranges(path: str, cols: list[str]) -> list[dict]:
-    """Per-file (min, max) of each column from the parquet footers —
-    exactly the statistics a scan planner prunes with."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        mins = {c: None for c in cols}
-        maxs = {c: None for c in cols}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    s = col.statistics
-                    mins[name] = s.min if mins[name] is None else min(mins[name], s.min)
-                    maxs[name] = s.max if maxs[name] is None else max(maxs[name], s.max)
-        out.append({c: (mins[c], maxs[c]) for c in cols})
-    return out
-
-
-def test_zordered_layout_prunes_both_dimensions(spark, sf_dir, tmp_path):
-    """The scale claim, measured: for a small rectangle predicate on
-    (a, b), the fraction of files whose footer ranges overlap it must be
-    far lower under the Z-layout than under a sort on ``a`` alone
-    (which leaves ``b``'s per-file range ~full-width, so every file
-    survives a ``b`` predicate)."""
-    n = 20_000
-    side = 256
-    df = spark.range(n).select(
-        F.pmod(F.xxhash64(F.col("id")), F.lit(side)).alias("a"),
-        F.pmod(F.xxhash64(F.col("id") + 1_000_000), F.lit(side)).alias("b"),
-    )
-    n_files = 16
-    zpath, spath = str(tmp_path / "zord"), str(tmp_path / "asort")
-    write_zordered(df, zpath, "a", "b", n_files, bits=9)
-    (
-        df.repartitionByRange(n_files, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    def survivors(path, col, lo, hi):
-        ranges = _file_ranges(path, ["a", "b"])
-        assert len(ranges) >= n_files // 2  # actually multi-file
-        return sum(
-            1 for r in ranges if r[col][0] <= hi and r[col][1] >= lo
-        ), len(ranges)
-
-    # The discriminating predicate is on b ALONE (a unconstrained):
-    # the a-sorted layout leaves b ~full-width in every file (nothing
-    # prunes), while each Z file covers a small (a, b) rectangle.
-    for lo in (0, side // 2):
-        hi = lo + side // 16 - 1
-        z_hit, z_total = survivors(zpath, "b", lo, hi)
-        s_hit, s_total = survivors(spath, "b", lo, hi)
-        assert s_hit == s_total, "a-sort should not prune a b predicate"
-        assert z_hit / z_total <= 0.5, (lo, z_hit, z_total)
-    # and the Z layout still prunes on a as well (both dimensions live)
-    a_hit, a_total = survivors(zpath, "a", 0, side // 16 - 1)
-    assert a_hit / a_total <= 0.5, (a_hit, a_total)
 
 
 def test_zorder_bits_validation(spark):

@@ -346,10 +346,8 @@ COMMENTARY = {
     ),
     "zorder_key": (
         "Pure narrow map — 2x21 shift/mask terms in one WholeStageCodegen "
-        "projection over the events scan, zero shuffle at any scale. The "
-        "layout VALUE shows up at write time (sinks/layout.write_zordered: "
-        "one range shuffle + per-partition sort) and is measured from real "
-        "parquet footers in tests/test_zorder.py."
+        "projection over the events scan, zero shuffle at any scale. Only "
+        "the key is computed here; the engine writes no Z-clustered layout."
     ),
     "cdc_chunk_stats": (
         "The whole per-document phase — boundary lag, running-sum chunk "
