@@ -42,6 +42,13 @@ def ws_tokens(col: Column | str) -> Column:
     return F.array_remove(F.split(F.trim(c), r"\s+"), "")
 
 
+#: DuckDB twin of :func:`ws_tokens` over the ``text`` column, for the
+#: oracles.
+WS_TOKENS_SQL = (
+    "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
+)
+
+
 def ws_token_count(col: Column | str) -> Column:
     return F.size(ws_tokens(col))
 

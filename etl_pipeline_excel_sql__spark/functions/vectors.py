@@ -16,6 +16,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 
+#: Width of the ``embeddings`` table's vectors.
+EMB_DIMS = 64
+
 
 def dot_sql(a: str, b: str, dims: int) -> str:
     """Unrolled left-associative dot product as Spark-SQL text.

@@ -49,6 +49,14 @@ from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
 from etl_pipeline_excel_sql__spark.operators.iterative import LineageTruncator
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 
+#: Merge rounds of the registry's trained tables (small: each round is
+#: two bounded jobs over the distinct-word table, and the oracle twins
+#: unroll the same count), the subword-vocabulary size and the packed
+#: LM training-sequence length.
+BPE_TRAIN_MERGES = 6
+BPE_VOCAB_TOP_K = 40
+PACK_SEQ_LEN = 64
+
 MERGES_SCHEMA = StructType(
     [
         StructField("merge_rank", IntegerType(), False),
@@ -374,32 +382,32 @@ def _bpe_cte_parts(docs_cte: str, n_merges: int) -> list[str]:
     return parts
 
 
-def bpe_unrolled_sql(n_merges: int) -> str:
+def bpe_unrolled_sql() -> str:
     """DuckDB oracle twin of :func:`bpe_train_merges` over ``documents``.
 
     Returns a complete query producing ``(merge_rank, left, right,
     pair_count)``.
     """
-    parts = _bpe_cte_parts("SELECT text FROM documents", n_merges)
+    parts = _bpe_cte_parts("SELECT text FROM documents", BPE_TRAIN_MERGES)
     final = "\nUNION ALL\n".join(
         f"SELECT CAST({i - 1} AS INT) AS merge_rank, a AS \"left\","
         f" b AS \"right\", CAST(cnt AS BIGINT) AS pair_count FROM m{i}"
-        for i in range(1, n_merges + 1)
+        for i in range(1, BPE_TRAIN_MERGES + 1)
     )
     return "WITH " + ",\n".join(parts) + "\n" + final
 
 
-def bpe_vocab_unrolled_sql(n_merges: int, top_k: int) -> str:
+def bpe_vocab_unrolled_sql() -> str:
     """DuckDB oracle twin of train-then-apply (:func:`bpe_train_merges`
     feeding :func:`bpe_subword_vocab`) over ``documents``: the fully
     merged word table ``w{n}`` exploded into weighted subword
-    frequencies, top-``top_k``."""
-    parts = _bpe_cte_parts("SELECT text FROM documents", n_merges)
+    frequencies, top-``BPE_VOCAB_TOP_K``."""
+    parts = _bpe_cte_parts("SELECT text FROM documents", BPE_TRAIN_MERGES)
     final = f"""SELECT subword, CAST(SUM(freq) AS BIGINT) AS n_occurrences
-FROM (SELECT freq, UNNEST(syms) AS subword FROM w{n_merges})
+FROM (SELECT freq, UNNEST(syms) AS subword FROM w{BPE_TRAIN_MERGES})
 GROUP BY subword
 ORDER BY n_occurrences DESC, subword ASC
-LIMIT {top_k}"""
+LIMIT {BPE_VOCAB_TOP_K}"""
     return "WITH " + ",\n".join(parts) + "\n" + final
 
 
@@ -595,7 +603,7 @@ alpha AS MATERIALIZED (
     )
 
 
-def bpe_token_ids_unrolled_sql(n_merges: int) -> str:
+def bpe_token_ids_unrolled_sql() -> str:
     """DuckDB oracle twin of train-then-:func:`bpe_doc_token_ids` over
     ``documents``: the
     unrolled merge chain (``w{n}`` carries the word string), the
@@ -604,7 +612,7 @@ def bpe_token_ids_unrolled_sql(n_merges: int) -> str:
     per-document ordered flatten. ``token_ids`` is rendered to a
     space-delimited string (:func:`render_packed_for_harness` twin)."""
     return (
-        _token_ids_ctes("SELECT doc_id, text FROM documents", n_merges)
+        _token_ids_ctes("SELECT doc_id, text FROM documents", BPE_TRAIN_MERGES)
         + """
 SELECT d.doc_id,
        CAST(COALESCE(len(p.tids), 0) AS INT) AS n_subwords,
@@ -616,7 +624,7 @@ LEFT JOIN perdoc p USING (doc_id)"""
 
 
 def bpe_packed_sequences_unrolled_sql(
-    docs_cte: str, n_merges: int, seq_len: int, prefix_ctes: str = "",
+    docs_cte: str, prefix_ctes: str = ""
 ) -> str:
     """DuckDB oracle twin of :func:`pack token ids <bpe_doc_token_ids>`
     → fixed-length LM sequences: the single global prefix-sum window
@@ -626,7 +634,7 @@ def bpe_packed_sequences_unrolled_sql(
     on the Spark side (the harness canonicalizer needs hashable
     cells — the ``array_funcs`` doctrine)."""
     return (
-        _token_ids_ctes(docs_cte, n_merges, prefix_ctes)
+        _token_ids_ctes(docs_cte, BPE_TRAIN_MERGES, prefix_ctes)
         + f""",
 offs AS MATERIALIZED (
   SELECT doc_id, tids,
@@ -639,7 +647,7 @@ offs AS MATERIALIZED (
          unnest(tids) AS id
   FROM offs
 )
-SELECT CAST(g // {seq_len} AS BIGINT) AS seq_id,
+SELECT CAST(g // {PACK_SEQ_LEN} AS BIGINT) AS seq_id,
        CAST(COUNT(*) AS INT) AS n_filled,
        array_to_string(list(CAST(id AS INT) ORDER BY g), ' ') AS token_ids
 FROM flat GROUP BY 1"""
@@ -737,12 +745,11 @@ def render_packed_for_harness(df: DataFrame) -> DataFrame:
 def bpe_subword_vocab(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    top_k: int = 40,
     words: DataFrame | None = None,
 ) -> DataFrame:
     """Corpus subword frequency table under a merge list: the trained
     tokenizer's observed vocabulary — ``(subword, n_occurrences)``,
-    top-``top_k`` by (count DESC, subword ASC).
+    top-``BPE_VOCAB_TOP_K`` by (count DESC, subword ASC).
 
     Occurrences weight by word frequency (every instance of the word
     contributes each of its subwords once). Shuffle payload is
@@ -756,5 +763,5 @@ def bpe_subword_vocab(
         .groupBy("subword")
         .agg(F.sum("freq").cast("bigint").alias("n_occurrences"))
         .orderBy(F.col("n_occurrences").desc(), F.col("subword").asc())
-        .limit(top_k)
+        .limit(BPE_VOCAB_TOP_K)
     )

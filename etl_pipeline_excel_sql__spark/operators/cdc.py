@@ -9,8 +9,8 @@ chunk — byte-identical tails re-chunk identically and dedup against
 the store. Here the stream is the whitespace token sequence (the same
 unit every other text operator in this engine uses), and the boundary
 oracle is a hash of the last ``CDC_WINDOW`` tokens: a position is a
-cut point when ``md5_hash60(window) % divisor == 0``, giving chunks of
-``divisor`` tokens in expectation with content-defined alignment.
+cut point when ``md5_hash60(window) % CDC_DIVISOR == 0``, giving chunks
+of ``CDC_DIVISOR`` tokens in expectation with content-defined alignment.
 
 Distribution shape (100 TB):
 
@@ -48,21 +48,20 @@ CDC_WINDOW = 2
 CDC_DIVISOR = 8
 
 
-def cdc_chunk_rows(docs: DataFrame, divisor: int = CDC_DIVISOR) -> DataFrame:
+def cdc_chunk_rows(docs: DataFrame) -> DataFrame:
     """One row per content-defined chunk: ``(doc_id, chunk_no, pos0,
     n_toks, digest)`` with ``pos0`` the 0-based token index of the
     chunk start and ``digest`` the md5 of the space-joined chunk.
 
     A cut point AFTER token ``pos`` is declared when the 60-bit md5 of
     the last ``CDC_WINDOW`` tokens (``concat_ws`` skips the missing
-    predecessor at pos 0 — identical in DuckDB) is ≡ 0 mod ``divisor``;
+    predecessor at pos 0 — identical in DuckDB) is ≡ 0 mod
+    ``CDC_DIVISOR``;
     ``chunk_no`` is the running count of cut points strictly BEFORE the
     token, so the token after a cut starts the next chunk. Chunk text
     reassembles via sort-by-position inside the (doc, chunk) group —
     ``string_agg(tok, ' ' ORDER BY pos)`` in the oracle.
     """
-    if divisor < 1:
-        raise ValueError("cdc_chunk_rows: divisor must be >= 1")
     toks = docs.select(
         "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "__t")
     )
@@ -72,7 +71,7 @@ def cdc_chunk_rows(docs: DataFrame, divisor: int = CDC_DIVISOR) -> DataFrame:
         "doc_id",
         "pos",
         "__t",
-        (md5_hash60(gram) % divisor == 0).cast("int").alias("__bf"),
+        (md5_hash60(gram) % CDC_DIVISOR == 0).cast("int").alias("__bf"),
     )
     prior = (
         Window.partitionBy("doc_id")

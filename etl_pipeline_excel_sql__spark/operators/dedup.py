@@ -36,6 +36,13 @@ from etl_pipeline_excel_sql__spark.operators.iterative import (
 #: Mersenne prime 2**31 - 1: modulus (and bitmask) for the affine MinHash
 #: permutation families. Shared verbatim with the SQL oracle.
 MINHASH_PRIME = (1 << 31) - 1
+#: Signature length, rows per LSH band (``MINHASH_K // MINHASH_BAND_ROWS``
+#: bands) and word-shingle width of every MinHash operator here.
+MINHASH_K = 12
+MINHASH_BAND_ROWS = 2
+MINHASH_SHINGLE_N = 3
+#: Sketch size of the n-gram operators' bottom-k blocking keys.
+NGRAM_BOTTOM_K = 2
 
 
 def affine_consts(k: int) -> list[tuple[int, int]]:
@@ -163,9 +170,6 @@ def _minhash_band_expr(num_hashes: int, band_rows: int):
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    num_hashes: int = 12,
-    band_rows: int = 2,
-    shingle_n: int = 3,
     threshold: float = 0.2,
     cache: SignatureCache | None = None,
     exploded: DataFrame | None = None,
@@ -175,13 +179,14 @@ def minhash_lsh_pairs(
     Execution shape (chosen for 100 TB, verified fast locally):
 
     1. **Signatures via explode + min-aggregates** — one row per (doc,
-       shingle), ``num_hashes`` codegen'd md5 columns, ``groupBy(id)`` with
+       shingle), ``MINHASH_K`` codegen'd md5 columns, ``groupBy(id)`` with
        k ``min()`` aggregates. Fully inside whole-stage codegen with
        map-side partial aggregation (the interpreted higher-order
        ``transform``/``array_min`` form was ~100× slower at sf0.1).
-    2. **Banding** — bands of ``band_rows`` signature entries become bucket
-       keys; the band self-join carries ONLY (id, band, bucket) — never the
-       shingle arrays — so the shuffle payload is a few dozen bytes per doc.
+    2. **Banding** — bands of ``MINHASH_BAND_ROWS`` signature entries
+       become bucket keys; the band self-join carries ONLY (id, band,
+       bucket) — never the shingle arrays — so the shuffle payload is a
+       few dozen bytes per doc.
     3. **Verification** — candidate id pairs (distinct) re-join the shingle
        arrays and compute exact Jaccard (codegen'd ``array_intersect`` /
        ``array_union``), filtered by ``threshold``.
@@ -192,20 +197,18 @@ def minhash_lsh_pairs(
     of :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
 
     ``exploded``: prebuilt ``(__id, __sh)`` shingle-occurrence frame
-    (post empty-document filter, same ``shingle_n``); callers that feed
-    several operators from one corpus scan (e.g. the LSH recall audit,
-    which shares it with :func:`jaccard_prefix_pairs`) build and persist
-    it once and pass it here — ``df``/``shingle_n`` are then ignored for
-    shingling.
+    (post empty-document filter, ``MINHASH_SHINGLE_N``-word shingles);
+    callers that feed several operators from one corpus scan (e.g. the
+    LSH recall audit, which shares it with :func:`jaccard_prefix_pairs`)
+    build and persist it once and pass it here — ``df`` is then ignored
+    for shingling.
     """
-    assert num_hashes % band_rows == 0
-
     if exploded is None:
         # Empty/whitespace-only documents have no shingles: they vanish
         # from the exploded side naturally, and the oracle twin filters
         # them the same way — the invariant must not depend on content.
         df = df.filter(has_ws_tokens())
-        exploded = shingle_rows(df, shingle_n)
+        exploded = shingle_rows(df, MINHASH_SHINGLE_N)
     # The signature table is tiny (one row per doc, k ints) but its subtree
     # (explode + window + md5) is expensive, and the band self-join would
     # recompute it once per side — persist the result, not the heavy rows
@@ -213,8 +216,10 @@ def minhash_lsh_pairs(
     slot = cache or shared_slot(
         exploded.sparkSession, "dedup.signatures", SignatureCache
     )
-    sig = slot.swap(_minhash_signatures(exploded, num_hashes))
-    bands = sig.select("__id", _minhash_band_expr(num_hashes, band_rows))
+    sig = slot.swap(_minhash_signatures(exploded, MINHASH_K))
+    bands = sig.select(
+        "__id", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
+    )
     cand = (
         bands.alias("l")
         .join(bands.alias("r"), on=["band", "bucket"])
@@ -237,9 +242,6 @@ def minhash_lsh_pairs(
 def minhash_lsh_pairs_cross(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    num_hashes: int = 12,
-    band_rows: int = 2,
-    shingle_n: int = 3,
     threshold: float = 0.2,
     cache: SignatureCache | None = None,
 ) -> DataFrame:
@@ -263,24 +265,22 @@ def minhash_lsh_pairs_cross(
     Assumes disjoint id spaces between sides (callers split one table by
     a partition predicate).
     """
-    assert num_hashes % band_rows == 0
-
     tagged = new_df.select(
         "doc_id", "text", F.lit("new").alias("__side")
     ).unionByName(
         corpus_df.select("doc_id", "text", F.lit("corpus").alias("__side"))
     )
     tagged = tagged.filter(has_ws_tokens())
-    exploded = shingle_rows(tagged, shingle_n)
+    exploded = shingle_rows(tagged, MINHASH_SHINGLE_N)
     sides = tagged.select(F.col("doc_id").alias("__id"), "__side")
     slot = cache or shared_slot(
         tagged.sparkSession, "dedup.cross_signatures", SignatureCache
     )
     sig = slot.swap(
-        _minhash_signatures(exploded, num_hashes).join(sides, "__id")
+        _minhash_signatures(exploded, MINHASH_K).join(sides, "__id")
     )
     bands = sig.select(
-        "__id", "__side", _minhash_band_expr(num_hashes, band_rows)
+        "__id", "__side", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
     )
     new_b = bands.filter(F.col("__side") == "new").drop("__side")
     cor_b = bands.filter(F.col("__side") == "corpus").drop("__side")
@@ -307,12 +307,7 @@ def minhash_lsh_pairs_cross(
     )
 
 
-def minhash_index_tables(
-    corpus: DataFrame,
-    num_hashes: int = 12,
-    band_rows: int = 2,
-    shingle_n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
+def minhash_index_tables(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The corpus-side MinHash SEARCH INDEX an ingest service persists
     between batches: ``(bands, sets)`` — the (id, band, bucket) LSH
     band table new batches probe, and the (id, distinct-shingle-array)
@@ -326,9 +321,11 @@ def minhash_index_tables(
     corpus band tables would eliminate it too").
     """
     corpus = corpus.filter(has_ws_tokens())
-    exploded = shingle_rows(corpus, shingle_n)
-    sig = _minhash_signatures(exploded, num_hashes)
-    bands = sig.select("__id", _minhash_band_expr(num_hashes, band_rows))
+    exploded = shingle_rows(corpus, MINHASH_SHINGLE_N)
+    sig = _minhash_signatures(exploded, MINHASH_K)
+    bands = sig.select(
+        "__id", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
+    )
     sets = exploded.groupBy("__id").agg(F.collect_set("__sh").alias("__sh"))
     return bands, sets
 
@@ -337,9 +334,6 @@ def minhash_lsh_pairs_ingest_indexed(
     new_df: DataFrame,
     corpus_bands: DataFrame,
     corpus_sets: DataFrame,
-    num_hashes: int = 12,
-    band_rows: int = 2,
-    shingle_n: int = 3,
     threshold: float = 0.2,
     cache: SignatureCache | None = None,
 ) -> DataFrame:
@@ -355,7 +349,7 @@ def minhash_lsh_pairs_ingest_indexed(
     corpus-sized and is NOT hash-only: ``bands`` holds integer
     (id, band, bucket) rows, but ``sets`` holds each id's distinct
     shingle STRINGS (``collect_set`` of the shingle column). Each token
-    appears in up to ``shingle_n`` shingles, so ``sets`` can store
+    appears in up to ``MINHASH_SHINGLE_N`` shingles, so ``sets`` can store
     several times a document's token text; an ingest probe reads it in
     place of the documents.
 
@@ -376,15 +370,15 @@ def minhash_lsh_pairs_ingest_indexed(
     Precondition: disjoint id spaces between batch and corpus (callers
     split one table by a partition predicate).
     """
-    assert num_hashes % band_rows == 0
-
     new_df = new_df.filter(has_ws_tokens())
-    exploded = shingle_rows(new_df, shingle_n)
+    exploded = shingle_rows(new_df, MINHASH_SHINGLE_N)
     slot = cache or shared_slot(
         new_df.sparkSession, "dedup.ingest_signatures", SignatureCache
     )
-    sig = slot.swap(_minhash_signatures(exploded, num_hashes))
-    new_b = sig.select("__id", _minhash_band_expr(num_hashes, band_rows))
+    sig = slot.swap(_minhash_signatures(exploded, MINHASH_K))
+    new_b = sig.select(
+        "__id", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
+    )
     cand_cross = (
         new_b.alias("l")
         .join(corpus_bands.alias("r"), on=["band", "bucket"])
@@ -452,18 +446,17 @@ def simhash_signatures(df: DataFrame) -> DataFrame:
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.1,
-    bottom_k: int = 2,
 ) -> DataFrame:
     """Blocked exact word-3-gram Jaccard: bottom-k sketch blocking + exact
     verify.
 
-    Blocking key: each document's ``bottom_k`` smallest 60-bit shingle
+    Blocking key: each document's ``NGRAM_BOTTOM_K`` smallest 60-bit shingle
     hashes (a bottom-k min-hash sketch). Unlike the earlier first-token +
     length-bucket key, the sketch is uniform over hash space — on natural
     corpora where a large fraction of documents starts with the same word
     ("The ..."), no block grows with corpus size, so no block is quadratic
     at 100 TB. Near-dups share small hashes with probability ≈
-    1-(1-J)^bottom_k per side, and every surviving pair is verified with
+    1-(1-J)^NGRAM_BOTTOM_K per side, and every surviving pair is verified with
     EXACT Jaccard over the full shingle sets (the probabilistic step only
     selects candidates, never scores them).
 
@@ -488,7 +481,7 @@ def ngram_jaccard_pairs(
     w = Window.partitionBy("__id").orderBy("__h")
     keys = (
         hrows.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= bottom_k)
+        .filter(F.col("__rn") <= NGRAM_BOTTOM_K)
         .select("__id", F.col("__h").alias("__block"))
     )
     cand = (
@@ -511,7 +504,6 @@ def ngram_jaccard_pairs(
 
 def jaccard_prefix_pairs(
     df: DataFrame,
-    shingle_n: int = 3,
     threshold_num: int = 1,
     threshold_den: int = 2,
     exploded: DataFrame | None = None,
@@ -540,8 +532,8 @@ def jaccard_prefix_pairs(
 
     ``exploded``: prebuilt ``(__id, __sh)`` shingle-occurrence frame
     shared with other operators over the same corpus (see
-    :func:`minhash_lsh_pairs`); when given, ``df``/``shingle_n`` are
-    ignored for shingling.
+    :func:`minhash_lsh_pairs`); when given, ``df`` is ignored for
+    shingling. Shingles are ``MINHASH_SHINGLE_N`` words wide either way.
 
     The distinct ``(__id, __h)`` shingle-hash frame is referenced FOUR
     times (frequency aggregate, prefix ranking, both sides of the
@@ -553,7 +545,7 @@ def jaccard_prefix_pairs(
     p, q = threshold_num, threshold_den
     if exploded is None:
         df = df.filter(has_ws_tokens())
-        exploded = shingle_rows(df, shingle_n)
+        exploded = shingle_rows(df, MINHASH_SHINGLE_N)
     hrows = (
         exploded
         .select("__id", md5_hash60(F.col("__sh")).alias("__h"))
@@ -663,7 +655,6 @@ def jaccard_prefix_pairs(
 def ngram_containment_pairs(
     df: DataFrame,
     threshold: float = 0.5,
-    bottom_k: int = 2,
 ) -> DataFrame:
     """Blocked exact word-3-gram CONTAINMENT: |A∩B| / min(|A|,|B|).
 
@@ -673,7 +664,7 @@ def ngram_containment_pairs(
     quote/boilerplate/prefix-copy case every corpus dedup pass needs
     (Broder's resemblance-vs-containment distinction, public).
 
-    Candidate generation probes each document's ``bottom_k`` smallest
+    Candidate generation probes each document's ``NGRAM_BOTTOM_K`` smallest
     shingle hashes against the full inverted index of (hash → docs): if
     A ⊆ B, every one of A's sketch hashes IS in B's hash set, so a fully
     contained document is always a candidate — the bottom-k-vs-bottom-k
@@ -709,7 +700,7 @@ def ngram_containment_pairs(
     w = Window.partitionBy("__id").orderBy("__h")
     keys = (
         hrows.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= bottom_k)
+        .filter(F.col("__rn") <= NGRAM_BOTTOM_K)
         .select(F.col("__id").alias("__probe_id"), F.col("__h"))
     )
     cand = (

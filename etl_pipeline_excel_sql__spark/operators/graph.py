@@ -33,13 +33,16 @@ from etl_pipeline_excel_sql__spark.operators.iterative import (
 
 PAGERANK_SCALE = 10**9
 PAGERANK_DAMPING_PCT = 85
+PAGERANK_ITERS = 8
+#: Synchronous sweeps of :func:`label_propagation`.
+LPA_ROUNDS = 3
 
 
 def pagerank_integer(
     edges: DataFrame,
     nodes: DataFrame,
     n_nodes: int,
-    iters: int = 8,
+    iters: int = PAGERANK_ITERS,
     scale: int = PAGERANK_SCALE,
     damping_pct: int = PAGERANK_DAMPING_PCT,
     truncate_lineage: bool = True,
@@ -147,55 +150,6 @@ def pagerank_integer(
         if truncate_lineage:
             r = r_trunc.truncate(r)
     return r
-
-
-def pagerank_unrolled_sql(
-    edges_cte: str,
-    nodes_cte: str,
-    n_nodes: int,
-    iters: int = 8,
-) -> str:
-    """DuckDB oracle twin: the same iteration unrolled as chained CTEs.
-
-    ``edges_cte`` must yield (src, dst, w); ``nodes_cte`` must yield
-    (node). Returns the WITH-clause body up to and including ``r{iters}``;
-    the caller appends its own final SELECT over ``r{iters}``.
-    """
-    scale, damping_pct = PAGERANK_SCALE, PAGERANK_DAMPING_PCT
-    base = ((100 - damping_pct) * scale) // (100 * n_nodes)
-    # Every chained CTE is AS MATERIALIZED: r{i} references r{i-1} twice
-    # (dangling-mass sum + contribution join), so inlined CTEs re-evaluate
-    # the whole chain — 2^iters blowup (observed: 4 minutes at sf0.001
-    # before materialization, seconds after). Same fix as the Spark side's
-    # per-iteration localCheckpoint.
-    parts = [
-        f"edges AS MATERIALIZED ({edges_cte})",
-        f"nodes AS MATERIALIZED ({nodes_cte})",
-        "outw AS (SELECT src, SUM(w) AS tw FROM edges GROUP BY src)",
-        "ew AS MATERIALIZED (SELECT e.src, e.dst, e.w, o.tw"
-        " FROM edges e JOIN outw o ON e.src = o.src)",
-        f"r0 AS MATERIALIZED (SELECT node,"
-        f" CAST({scale // n_nodes} AS BIGINT) AS r FROM nodes)",
-    ]
-    parts.append("srcs AS MATERIALIZED (SELECT DISTINCT src FROM ew)")
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""d{i} AS MATERIALIZED (
-  SELECT COALESCE(SUM(r), 0) AS d FROM r{i - 1}
-  WHERE node NOT IN (SELECT src FROM srcs))"""
-        )
-        parts.append(
-            f"""r{i} AS MATERIALIZED (
-  SELECT n.node,
-         CAST({base} + ({damping_pct} * (COALESCE(s.c, 0)
-              + (SELECT d FROM d{i}) // {n_nodes})) // 100
-              AS BIGINT) AS r
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node, SUM((p.r * e.w) // e.tw) AS c
-    FROM r{i - 1} p JOIN ew e ON p.node = e.src
-    GROUP BY e.dst) s ON n.node = s.node)"""
-        )
-    return "WITH " + ",\n".join(parts)
 
 
 def triangle_participation(
@@ -367,7 +321,7 @@ def kcore_membership(
 
 def label_propagation(
     pairs: DataFrame,
-    rounds: int = 3,
+    rounds: int = LPA_ROUNDS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan/Albert/Kumara,
@@ -435,14 +389,14 @@ def label_propagation(
     return labels
 
 
-def label_propagation_unrolled_sql(edges_cte: str, rounds: int) -> str:
+def label_propagation_unrolled_sql(edges_cte: str) -> str:
     """DuckDB oracle twin of :func:`label_propagation`: the synchronous
     sweeps unrolled as chained MATERIALIZED CTEs (the
     :func:`kcore_unrolled_sql` convention — e0 replays the Spark side's
     canonicalization so reversed/duplicated/self pairs cannot desync the
-    twins). Returns a complete query; ``rounds`` must equal the Spark
-    side's fixed round count — both sides run the same sweep count by
-    construction, unlike a fixpoint loop there is no depth to guess."""
+    twins). Returns a complete query over ``LPA_ROUNDS`` sweeps, the
+    Spark side's default round count — unlike a fixpoint loop there is
+    no depth to guess."""
     parts = [
         f"""e0 AS MATERIALIZED (
   SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
@@ -453,7 +407,7 @@ def label_propagation_unrolled_sql(edges_cte: str, rounds: int) -> str:
   SELECT DISTINCT a AS node, a AS label FROM adj
 )"""
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, LPA_ROUNDS + 1):
         p = i - 1
         parts.append(
             f"""m{i} AS MATERIALIZED (
@@ -472,5 +426,5 @@ def label_propagation_unrolled_sql(edges_cte: str, rounds: int) -> str:
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT node, label FROM l{rounds}"
+        + f"\nSELECT node, label FROM l{LPA_ROUNDS}"
     )

@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 #: packing base for the (dist, candidate_key) arg-min — keys must stay
 #: below 2^40 (a trillion records) and distances below 2^23 characters.
 _PACK_BASE = 1 << 40
+#: Fuzzy-merge distance budget of :func:`blocked_match_pairs` (<= 2
+#: edits collapses the typo'd variants the generator plants without
+#: bridging distinct products).
+ER_MAX_DIST = 2
 
 
 def blocked_best_match(
@@ -89,10 +93,9 @@ def blocked_match_pairs(
     key_col: str,
     name_col: str,
     block_col: str,
-    max_dist: int,
 ) -> DataFrame:
     """All within-block record pairs with Levenshtein distance
-    ``<= max_dist``: ``(id_a, id_b, dist)`` with ``id_a < id_b`` — the
+    ``<= ER_MAX_DIST``: ``(id_a, id_b, dist)`` with ``id_a < id_b`` — the
     edge-list producer for cluster-level entity resolution (pairs →
     connected components → entities), where :func:`blocked_best_match`
     is the probe-batch/serving variant.
@@ -121,6 +124,6 @@ def blocked_match_pairs(
         .withColumn(
             "dist", F.levenshtein(F.col("__na"), F.col("__nb")).cast("bigint")
         )
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= ER_MAX_DIST)
         .select("id_a", "id_b", "dist")
     )

@@ -50,6 +50,10 @@ from etl_pipeline_excel_sql__spark.operators.iterative import (
     shared_slot,
 )
 
+#: Training rounds of :func:`perceptron_scores`.
+PERCEPTRON_ROUNDS = 3
+
+
 def feature_buckets(
     docs: DataFrame,
     label: Column,
@@ -155,9 +159,9 @@ def perceptron_scores(
     docs: DataFrame,
     label: Column,
     n_buckets: int,
-    rounds: int,
 ) -> DataFrame:
-    """Train, then score every document with the trained weights:
+    """Train ``PERCEPTRON_ROUNDS`` rounds, then score every document
+    with the trained weights:
     ``(doc_id, y, margin, pred)`` — ``pred`` is ±1 (margin 0 → -1, the
     mistake-driven convention), all integers, engine-exact. The feature
     table persists through a default slot under the slot rule of
@@ -169,7 +173,7 @@ def perceptron_scores(
     ).swap(
         feature_buckets(docs, label, n_buckets).repartition("doc_id")
     )
-    w = perceptron_train(feats, n_buckets, rounds)
+    w = perceptron_train(feats, n_buckets, PERCEPTRON_ROUNDS)
     return _margins(feats, docs.sparkSession, w).select(
         "doc_id",
         "y",

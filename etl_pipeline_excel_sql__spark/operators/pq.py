@@ -5,22 +5,22 @@ Quantization for Nearest Neighbor Search", TPAMI 2011], alongside the
 IVF coarse partitioner and SRP-LSH bucketing already in
 ``operators/similarity.py``:
 
-* the vector space splits into ``m`` contiguous subspaces of
-  ``dims // m`` components each;
-* per subspace, a small k-means codebook (``ncodes`` centroids) is
+* the vector space splits into ``PQ_M`` contiguous subspaces of
+  ``EMB_DIMS // PQ_M`` components each;
+* per subspace, a small k-means codebook (``PQ_NCODES`` centroids) is
   trained — same deterministic seeding (lowest-id vectors) and
   decimal-exact Lloyd rounds as the IVF trainer;
-* each corpus vector is ENCODED as ``m`` small code ids (here one byte
+* each corpus vector is ENCODED as ``PQ_M`` small code ids (here one byte
   each: 64-dim float32 → 8 bytes, a 32× compression) — the artifact that
   makes billion-scale in-memory search possible;
 * queries search via ADC (asymmetric distance computation): the query
   keeps full precision, per-subspace distances to every codebook entry
-  form an ``m × ncodes`` lookup table, and a corpus vector's
-  approximate distance is the sum of ``m`` table lookups — no vector
+  form a ``PQ_M × PQ_NCODES`` lookup table, and a corpus vector's
+  approximate distance is the sum of ``PQ_M`` table lookups — no vector
   math per corpus row at query time.
 
-Distribution shape (100 TB): codebooks are ``m × ncodes`` rows — always
-broadcast; training and encoding scan the corpus with NO corpus-row
+Distribution shape (100 TB): codebooks are ``PQ_M × PQ_NCODES`` rows —
+always broadcast; training and encoding scan the corpus with NO corpus-row
 shuffle except the per-(vector, subspace) argmin combine (map-side,
 co-partitioned by construction). ADC broadcasts the per-query lookup
 tables and shuffles only (query, vector, partial-sum) combine rows.
@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.iterative import (
     LineageTruncator,
     shared_slot,
@@ -45,6 +46,16 @@ from etl_pipeline_excel_sql__spark.operators.iterative import (
 
 #: Micro-unit scale for ADC distance accumulation.
 ADC_SCALE = 1_000_000
+#: Subspaces (64 dims → 8-dim subvectors, one byte code each), codebook
+#: size and Lloyd rounds of every codebook trained here.
+PQ_M = 8
+PQ_NCODES = 16
+PQ_ITERS = 2
+#: IVF-PQ coarse cells and the cells each query probes.
+IVFPQ_NCELLS = 8
+IVFPQ_NPROBE = 2
+#: Top-k of the oracle twins (queries ``vec_id < 5``).
+PQ_K = 5
 
 def _argmin_struct(sub: int) -> F.Column:
     """``min(when(sub == s, struct(d, code)))`` — the per-subspace
@@ -166,23 +177,19 @@ def _codebook_means(
 
 def pq_train_codebooks(
     corpus: DataFrame,
-    m: int = 8,
-    ncodes: int = 16,
-    iters: int = 2,
     vec_col: str = "embedding",
-    dims: int = 64,
     truncator: LineageTruncator | None = None,
 ) -> DataFrame:
-    """Train the ``m`` per-subspace codebooks → (sub, code, centroid).
+    """Train the ``PQ_M`` per-subspace codebooks → (sub, code, centroid).
 
-    Seeds: subvectors of the ``ncodes`` lowest-id vectors (code = seed
+    Seeds: subvectors of the ``PQ_NCODES`` lowest-id vectors (code = seed
     rank), per subspace — deterministic, no RNG, matching the IVF
-    trainer's doctrine. ``iters`` assignments with ``iters - 1`` mean
-    updates in between; the RETURNED codebooks are the means of the
+    trainer's doctrine. ``PQ_ITERS`` assignments with ``PQ_ITERS - 1``
+    mean updates in between; the RETURNED codebooks are the means of the
     final assignment (what encoding and ADC consume).
 
     Round-14 loop shape (guide §2.4/§5): the lineage cut moved from the
-    corpus-sized assignment to the m × ncodes CODEBOOK frame — each
+    corpus-sized assignment to the PQ_M × PQ_NCODES CODEBOOK frame — each
     Lloyd round is exactly ONE job (the truncator materializes the
     means aggregation, with the corpus assignment evaluated inside it),
     and every consumer of the returned codebooks (the encoder, the ADC
@@ -190,16 +197,14 @@ def pq_train_codebooks(
     of re-running the training subtree or reading a corpus-sized
     checkpoint. The cuts go through ``truncator`` under the slot rule of
     :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`."""
-    if dims % m != 0:
-        raise ValueError(f"pq: dims ({dims}) not divisible by m ({m})")
-    subdim = dims // m
+    subdim = EMB_DIMS // PQ_M
     spark = corpus.sparkSession
     trunc = truncator or shared_slot(
         spark, "pq.codebooks", lambda: LineageTruncator(spark)
     )
     seeds = (
         corpus.orderBy("vec_id")
-        .limit(ncodes)
+        .limit(PQ_NCODES)
         .select(
             F.col(vec_col),
             (F.row_number().over(Window.orderBy("vec_id")) - 1)
@@ -209,9 +214,9 @@ def pq_train_codebooks(
     )
     # seed codebooks stay LAZY: round 1's cut evaluates them once
     # (inside its broadcast build) — an eager cut here would be a
-    # whole extra job for a ncodes-row limit.
+    # whole extra job for a PQ_NCODES-row limit.
     cb = seeds.select(
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
+        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("sub"),
         "code",
         F.expr(
             f"transform(sequence(1, {subdim}),"
@@ -219,8 +224,8 @@ def pq_train_codebooks(
             f" AS DOUBLE))"
         ).alias("centroid"),
     )
-    for _ in range(iters):
-        assigned = _assign_codes(corpus, cb, vec_col, subdim, m)
+    for _ in range(PQ_ITERS):
+        assigned = _assign_codes(corpus, cb, vec_col, subdim, PQ_M)
         cb = trunc.truncate(_codebook_means(assigned, vec_col, subdim))
     return cb
 
@@ -229,10 +234,8 @@ def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame,
     vec_col: str = "embedding",
-    m: int = 8,
-    dims: int = 64,
 ) -> DataFrame:
-    """Encode every vector as its ``m`` nearest-codebook codes →
+    """Encode every vector as its ``PQ_M`` nearest-codebook codes →
     (vec_id, codes) with ``codes`` ordered by subspace. The 32×-compressed
     search artifact; at scale this is what you persist and broadcast-
     search against, not the float vectors.
@@ -242,14 +245,14 @@ def pq_encode(
     vector dropped before the shuffle — the previous form shuffled
     (id, sub, code, vec) rows to a second ``collect_list`` shuffle just
     to re-assemble the array the first aggregate already knew."""
-    subdim = dims // m
-    scored = _scored_rows(corpus, codebooks, vec_col, subdim, m)
+    subdim = EMB_DIMS // PQ_M
+    scored = _scored_rows(corpus, codebooks, vec_col, subdim, PQ_M)
     per_id = scored.groupBy("vec_id").agg(
-        *[_argmin_struct(s) for s in range(m)]
+        *[_argmin_struct(s) for s in range(PQ_M)]
     )
     return per_id.select(
         F.col("vec_id"),
-        F.array(*[F.col(f"__c{s}.code") for s in range(m)]).alias("codes"),
+        F.array(*[F.col(f"__c{s}.code") for s in range(PQ_M)]).alias("codes"),
     )
 
 
@@ -258,21 +261,19 @@ def pq_adc_topk(
     codebooks: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    m: int = 8,
-    dims: int = 64,
 ) -> DataFrame:
     """ADC top-k: approximate squared-L2 neighbors from codes alone.
 
-    Per query, the ``m × ncodes`` distance lookup table is computed once
+    Per query, the ``PQ_M × PQ_NCODES`` distance lookup table is computed once
     (queries × codebooks — both broadcast-scale) with each entry FLOOR-
     quantized to integer micro-units; a corpus vector's distance is the
-    int64 sum of its ``m`` looked-up entries — associative, so the
+    int64 sum of its ``PQ_M`` looked-up entries — associative, so the
     result is independent of partitioning and exactly replayable by the
     SQL oracle. Output: ``query_id, neighbor_id, adc_dist_micros, rank``
     (ties → lowest neighbor id; self-matches excluded)."""
-    subdim = dims // m
+    subdim = EMB_DIMS // PQ_M
     dtable = (
-        _sub_rows(queries, "embedding", m)
+        _sub_rows(queries, "embedding", PQ_M)
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebooks), "sub")
         .select(
@@ -326,10 +327,6 @@ def _pq_l2_duck(vec: str, cent: str, sub: str, subdim: int) -> str:
 
 
 def pq_unrolled_ctes(
-    m: int,
-    ncodes: int,
-    iters: int,
-    dims: int,
     src: str = "embeddings",
     vec: str = "embedding",
 ) -> list[str]:
@@ -341,8 +338,8 @@ def pq_unrolled_ctes(
     ``src``/``vec`` parametrize the quantized relation — the default is
     the raw embeddings table; the residual IVF-PQ oracle passes its
     residual CTE instead."""
-    subdim = dims // m
-    subs = f"(SELECT UNNEST(range(0, {m})) AS sub)"
+    subdim = EMB_DIMS // PQ_M
+    subs = f"(SELECT UNNEST(range(0, {PQ_M})) AS sub)"
 
     def assign(cb: str, name: str) -> str:
         return f"""{name} AS MATERIALIZED (
@@ -376,13 +373,13 @@ def pq_unrolled_ctes(
   FROM (SELECT {vec},
                CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
         FROM (SELECT vec_id, {vec} FROM {src}
-              ORDER BY vec_id LIMIT {ncodes})) q, {subs} s
+              ORDER BY vec_id LIMIT {PQ_NCODES})) q, {subs} s
 )"""
     ]
     cb = "cb0"
-    for r in range(1, iters + 1):
+    for r in range(1, PQ_ITERS + 1):
         parts.append(assign(cb, f"a{r}"))
-        cb = f"cb{r}" if r < iters else "cbf"
+        cb = f"cb{r}" if r < PQ_ITERS else "cbf"
         parts.append(means(f"a{r}", cb))
     parts.append(assign("cbf", "afinal"))
     parts.append(
@@ -394,10 +391,10 @@ def pq_unrolled_ctes(
     return parts
 
 
-def pq_codes_sql(m: int, ncodes: int, iters: int, dims: int) -> str:
+def pq_codes_sql() -> str:
     """Oracle twin of train → :func:`pq_encode`; ``codes`` rendered
     space-delimited to match the registered query's harness shape."""
-    parts = pq_unrolled_ctes(m, ncodes, iters, dims)
+    parts = pq_unrolled_ctes()
     return (
         "WITH " + ",\n".join(parts)
         + "\nSELECT vec_id, array_to_string(codes, ' ') AS codes"
@@ -405,19 +402,13 @@ def pq_codes_sql(m: int, ncodes: int, iters: int, dims: int) -> str:
     )
 
 
-def pq_adc_sql(
-    m: int,
-    ncodes: int,
-    iters: int,
-    dims: int,
-    k: int,
-) -> str:
+def pq_adc_sql() -> str:
     """Oracle twin of the full train → encode → :func:`pq_adc_topk`
     pipeline for the queries ``vec_id < 5`` (same micro-unit floor, same
     tie-breaks)."""
-    subdim = dims // m
-    subs = f"(SELECT UNNEST(range(0, {m})) AS sub)"
-    parts = pq_unrolled_ctes(m, ncodes, iters, dims)
+    subdim = EMB_DIMS // PQ_M
+    subs = f"(SELECT UNNEST(range(0, {PQ_M})) AS sub)"
+    parts = pq_unrolled_ctes()
     parts.append(
         f"""dtable AS MATERIALIZED (
   SELECT q.vec_id AS query_id, s.sub, c.code,
@@ -437,21 +428,21 @@ FROM (
          row_number() OVER (PARTITION BY d.query_id
            ORDER BY SUM(d.d_micros) ASC, x.vec_id ASC) AS rank
   FROM (SELECT vec_id, UNNEST(codes) AS code,
-               UNNEST(range(0, {m})) AS sub
+               UNNEST(range(0, {PQ_M})) AS sub
         FROM pq_codes_t) x
   JOIN dtable d ON d.sub = x.sub AND d.code = x.code
   WHERE x.vec_id <> d.query_id
   GROUP BY d.query_id, x.vec_id
-) WHERE rank <= {k}"""
+) WHERE rank <= {PQ_K}"""
 
 
-def l2sq_full_sql(dims: int) -> str:
+def l2sq_full_sql() -> str:
     """Unrolled full-vector squared L2 between ``embedding`` and the
     coarse centroid ``ccent`` — Spark SQL text with 1-based indices.
     The oracle uses the DuckDB twin :func:`_l2_full_duck`; both keep the
     same left-associative ``+`` term order."""
     terms = []
-    for i in range(1, dims + 1):
+    for i in range(1, EMB_DIMS + 1):
         d = (
             f"(CAST(element_at(embedding, {i}) AS DOUBLE)"
             f" - CAST(element_at(ccent, {i}) AS DOUBLE))"
@@ -461,11 +452,7 @@ def l2sq_full_sql(dims: int) -> str:
 
 
 def _coarse_kmeans(
-    corpus: DataFrame,
-    ncells: int,
-    iters: int,
-    dims: int,
-    trunc: LineageTruncator,
+    corpus: DataFrame, trunc: LineageTruncator
 ) -> tuple[DataFrame, DataFrame]:
     """L2 full-vector Lloyd loop shared by BOTH IVF-PQ compositions —
     one definition so a tie-break/precision/seeding fix cannot
@@ -479,13 +466,13 @@ def _coarse_kmeans(
 
     Round-14 loop shape (guide §2.4/§5, same doctrine as
     :func:`pq_train_codebooks`): intermediate rounds truncate the
-    ncells-row CENTROID table, not the corpus-sized assignment — one
+    IVFPQ_NCELLS-row CENTROID table, not the corpus-sized assignment — one
     job per round (the assignment evaluates inside the centroid cut),
-    and the next round's broadcast reads ncells materialized rows
+    and the next round's broadcast reads IVFPQ_NCELLS materialized rows
     instead of a corpus-sized checkpoint."""
     seeds = (
         corpus.orderBy("vec_id")
-        .limit(ncells)
+        .limit(IVFPQ_NCELLS)
         .select(
             F.col("embedding"),
             (F.row_number().over(Window.orderBy("vec_id")) - 1)
@@ -501,7 +488,7 @@ def _coarse_kmeans(
 
     def _assign_cells(cb: DataFrame) -> DataFrame:
         scored = corpus.crossJoin(F.broadcast(cb)).withColumn(
-            "__d", F.expr(l2sq_full_sql(dims))
+            "__d", F.expr(l2sq_full_sql())
         )
         return scored.groupBy("vec_id").agg(
             F.min_by(
@@ -537,7 +524,7 @@ def _coarse_kmeans(
             ).alias("ccent")
         )
 
-    for _ in range(iters - 1):
+    for _ in range(PQ_ITERS - 1):
         cb = trunc.truncate(_cell_means(_assign_cells(cb)))
     # Final assignment IS the corpus-scale cut: it has multiple
     # consumers (the final means, the caller's codes/cell join, the
@@ -552,13 +539,7 @@ def _coarse_kmeans(
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    ncells: int = 8,
-    nprobe: int = 2,
-    m: int = 8,
-    ncodes: int = 16,
-    iters: int = 2,
     k: int = 10,
-    dims: int = 64,
 ) -> DataFrame:
     """The full IVF-PQ composition: L2 coarse cells prune the corpus,
     PQ-ADC ranks inside the probed cells — the standard billion-scale
@@ -567,7 +548,7 @@ def ivfpq_topk(
     Simplification, stated plainly: codes quantize the RAW vectors, not
     the per-cell residuals of the canonical IVFADC — residual encoding
     improves recall but makes the query lookup table cell-dependent;
-    this variant keeps one ``m × ncodes`` table per query and composes
+    this variant keeps one ``PQ_M × PQ_NCODES`` table per query and composes
     the two pruning structures unchanged. Both stages train with the
     same deterministic lowest-id seeding and decimal-exact means.
 
@@ -576,27 +557,25 @@ def ivfpq_topk(
     at query time only code rows of the probed cells join the broadcast
     lookup tables. Output matches :func:`pq_adc_topk`'s schema.
     """
-    subdim = dims // m
+    subdim = EMB_DIMS // PQ_M
     spark = corpus.sparkSession
     trunc = shared_slot(
         spark, "pq.ivfpq_coarse", lambda: LineageTruncator(spark)
     )
 
-    assigned, coarse_final = _coarse_kmeans(corpus, ncells, iters, dims, trunc)
+    assigned, coarse_final = _coarse_kmeans(corpus, trunc)
 
     # --- fine quantizer: PQ codebooks + codes, cell kept alongside ---
-    codebooks = pq_train_codebooks(
-        corpus, m=m, ncodes=ncodes, iters=iters, dims=dims
-    )
-    codes = pq_encode(corpus, codebooks, m=m, dims=dims).join(
+    codebooks = pq_train_codebooks(corpus)
+    codes = pq_encode(corpus, codebooks).join(
         assigned.select("vec_id", "cell"), "vec_id"
     )
 
-    # --- query: probe nprobe nearest cells, ADC within ---------------
+    # --- query: probe IVFPQ_NPROBE nearest cells, ADC within --------
     probes = (
         queries.select(F.col("vec_id").alias("query_id"), F.col("embedding"))
         .crossJoin(F.broadcast(coarse_final))
-        .withColumn("__d", F.expr(l2sq_full_sql(dims)))
+        .withColumn("__d", F.expr(l2sq_full_sql()))
         .withColumn(
             "__rn",
             F.row_number().over(
@@ -605,11 +584,11 @@ def ivfpq_topk(
                 )
             ),
         )
-        .filter(F.col("__rn") <= nprobe)
+        .filter(F.col("__rn") <= IVFPQ_NPROBE)
         .select("query_id", "cell")
     )
     dtable = (
-        _sub_rows(queries, "embedding", m)
+        _sub_rows(queries, "embedding", PQ_M)
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebooks), "sub")
         .select(
@@ -658,7 +637,7 @@ def _l2_full_duck(a: str, b: str, dims: int) -> str:
     return " + ".join(terms)
 
 
-def _coarse_sql_ctes(ncells: int, iters: int, dims: int) -> list[str]:
+def _coarse_sql_ctes() -> list[str]:
     """The unrolled L2 coarse-k-means CTE chain (``ccb0`` seeds →
     ``ca{r}`` assignments → ``ccf`` final centroids) — ONE definition
     shared by both IVF-PQ oracles, mirroring ``_coarse_kmeans`` on the
@@ -669,7 +648,7 @@ def _coarse_sql_ctes(ncells: int, iters: int, dims: int) -> list[str]:
   SELECT vec_id, embedding, cell FROM (
     SELECT e.vec_id, e.embedding, c.cell,
            row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_l2_full_duck('e.embedding', 'c.ccent', dims)} ASC,
+             ORDER BY {_l2_full_duck('e.embedding', 'c.ccent', EMB_DIMS)} ASC,
                       c.cell ASC) AS rn
     FROM embeddings e CROSS JOIN {cb} c
   ) WHERE rn = 1
@@ -678,7 +657,7 @@ def _coarse_sql_ctes(ncells: int, iters: int, dims: int) -> list[str]:
     def cmeans(src: str, name: str) -> str:
         return f"""{name} AS MATERIALIZED (
   SELECT cell,
-    list_transform(range(1, {dims + 1}), i ->
+    list_transform(range(1, {EMB_DIMS + 1}), i ->
       CAST(list_sum(list_transform(vecs, v -> v[i]::DOUBLE::DECIMAL(20,10)))
         AS DOUBLE) / n) AS ccent
   FROM (SELECT cell, list(embedding) AS vecs, COUNT(*) AS n
@@ -690,44 +669,36 @@ def _coarse_sql_ctes(ncells: int, iters: int, dims: int) -> list[str]:
   SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell,
          list_transform(embedding, x -> x::DOUBLE) AS ccent
   FROM (SELECT vec_id, embedding FROM embeddings
-        ORDER BY vec_id LIMIT {ncells})
+        ORDER BY vec_id LIMIT {IVFPQ_NCELLS})
 )"""
     ]
     cb = "ccb0"
-    for r in range(1, iters + 1):
+    for r in range(1, PQ_ITERS + 1):
         parts.append(cassign(cb, f"ca{r}"))
-        cb = f"ccb{r}" if r < iters else "ccf"
+        cb = f"ccb{r}" if r < PQ_ITERS else "ccf"
         parts.append(cmeans(f"ca{r}", cb))
     return parts
 
 
-def ivfpq_sql(
-    ncells: int,
-    nprobe: int,
-    m: int,
-    ncodes: int,
-    iters: int,
-    dims: int,
-    k: int,
-) -> str:
+def ivfpq_sql() -> str:
     """DuckDB oracle twin of :func:`ivfpq_topk`: unrolled L2 coarse
     k-means + the PQ chain + probed-cell ADC, same tie-breaks and
     integer micro-unit totals throughout."""
-    subdim = dims // m
-    subs = f"(SELECT UNNEST(range(0, {m})) AS sub)"
+    subdim = EMB_DIMS // PQ_M
+    subs = f"(SELECT UNNEST(range(0, {PQ_M})) AS sub)"
 
-    parts = _coarse_sql_ctes(ncells, iters, dims)
-    parts.extend(pq_unrolled_ctes(m, ncodes, iters, dims))
+    parts = _coarse_sql_ctes()
+    parts.extend(pq_unrolled_ctes())
     parts.append(
         f"""probes AS MATERIALIZED (
   SELECT query_id, cell FROM (
     SELECT q.vec_id AS query_id, c.cell,
            row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', dims)} ASC,
+             ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', EMB_DIMS)} ASC,
                       c.cell ASC) AS rn
     FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
     CROSS JOIN ccf c
-  ) WHERE rn <= {nprobe}
+  ) WHERE rn <= {IVFPQ_NPROBE}
 )"""
     )
     parts.append(
@@ -748,26 +719,20 @@ FROM (
          row_number() OVER (PARTITION BY p.query_id
            ORDER BY SUM(d.d_micros) ASC, x.vec_id ASC) AS rank
   FROM probes p
-  JOIN ca{iters} cm ON cm.cell = p.cell
-  JOIN (SELECT vec_id, UNNEST(codes) AS code, UNNEST(range(0, {m})) AS sub
+  JOIN ca{PQ_ITERS} cm ON cm.cell = p.cell
+  JOIN (SELECT vec_id, UNNEST(codes) AS code, UNNEST(range(0, {PQ_M})) AS sub
         FROM pq_codes_t) x ON x.vec_id = cm.vec_id
   JOIN dtable d ON d.query_id = p.query_id
                 AND d.sub = x.sub AND d.code = x.code
   WHERE x.vec_id <> p.query_id
   GROUP BY p.query_id, x.vec_id
-) WHERE rank <= {k}"""
+) WHERE rank <= {PQ_K}"""
 
 
 def ivfpq_residual_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    ncells: int = 8,
-    nprobe: int = 2,
-    m: int = 8,
-    ncodes: int = 16,
-    iters: int = 2,
     k: int = 10,
-    dims: int = 64,
 ) -> DataFrame:
     """Canonical IVFADC [Jégou et al., TPAMI 2011 §IV]: PQ codes quantize
     the RESIDUAL ``v - coarse_centroid(cell(v))``, not the raw vector.
@@ -777,20 +742,20 @@ def ivfpq_residual_topk(
     finer distances — the recall case over :func:`ivfpq_topk`'s
     raw-vector simplification. The price is a cell-DEPENDENT query
     lookup table: the query's residual differs per probed cell, so the
-    table is (query × probed-cell × m × ncodes) — still
-    nq·nprobe·m·ncodes rows, broadcast-scale by construction.
+    table is (query × probed-cell × ``PQ_M`` × ``PQ_NCODES``) rows —
+    still broadcast-scale by construction.
 
     All arithmetic contracts match the rest of the module: decimal-exact
     means, left-associative double chains, integer micro-unit ADC sums,
     lowest-id/lowest-code tie-breaks. Output schema = pq_adc_topk's.
     """
-    subdim = dims // m
+    subdim = EMB_DIMS // PQ_M
     spark = corpus.sparkSession
     trunc = shared_slot(
         spark, "pq.ivfpq_coarse", lambda: LineageTruncator(spark)
     )
 
-    assigned, coarse_final = _coarse_kmeans(corpus, ncells, iters, dims, trunc)
+    assigned, coarse_final = _coarse_kmeans(corpus, trunc)
 
     # --- residuals: v - ccent(cell(v)), materialized once ------------
     resid_trunc = shared_slot(
@@ -807,10 +772,8 @@ def ivfpq_residual_topk(
     )
 
     # --- fine quantizer on residuals ---------------------------------
-    codebooks = pq_train_codebooks(
-        resid, m=m, ncodes=ncodes, iters=iters, vec_col="resid", dims=dims
-    )
-    codes = pq_encode(resid, codebooks, vec_col="resid", m=m, dims=dims).join(
+    codebooks = pq_train_codebooks(resid, vec_col="resid")
+    codes = pq_encode(resid, codebooks, vec_col="resid").join(
         resid.select("vec_id", "cell"), "vec_id"
     )
 
@@ -818,7 +781,7 @@ def ivfpq_residual_topk(
     probes = (
         queries.select(F.col("vec_id").alias("query_id"), F.col("embedding"))
         .crossJoin(F.broadcast(coarse_final))
-        .withColumn("__d", F.expr(l2sq_full_sql(dims)))
+        .withColumn("__d", F.expr(l2sq_full_sql()))
         .withColumn(
             "__rn",
             F.row_number().over(
@@ -827,7 +790,7 @@ def ivfpq_residual_topk(
                 )
             ),
         )
-        .filter(F.col("__rn") <= nprobe)
+        .filter(F.col("__rn") <= IVFPQ_NPROBE)
         .select(
             "query_id",
             "cell",
@@ -841,7 +804,7 @@ def ivfpq_residual_topk(
             "query_id",
             "cell",
             "qresid",
-            F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
+            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("sub"),
         )
         .join(F.broadcast(codebooks), "sub")
         .select(
@@ -886,46 +849,38 @@ def ivfpq_residual_topk(
     )
 
 
-def ivfpq_residual_sql(
-    ncells: int,
-    nprobe: int,
-    m: int,
-    ncodes: int,
-    iters: int,
-    dims: int,
-    k: int,
-) -> str:
+def ivfpq_residual_sql() -> str:
     """DuckDB oracle twin of :func:`ivfpq_residual_topk`: the coarse
     chain, the residual table, the PQ chain over residuals (via the
     parametrized :func:`pq_unrolled_ctes`), and the cell-dependent
     residual ADC."""
-    subdim = dims // m
-    subs = f"(SELECT UNNEST(range(0, {m})) AS sub)"
+    subdim = EMB_DIMS // PQ_M
+    subs = f"(SELECT UNNEST(range(0, {PQ_M})) AS sub)"
 
-    parts = _coarse_sql_ctes(ncells, iters, dims)
+    parts = _coarse_sql_ctes()
     parts.append(
         f"""resid_t AS MATERIALIZED (
   SELECT a.vec_id, a.cell,
-         list_transform(range(1, {dims + 1}),
+         list_transform(range(1, {EMB_DIMS + 1}),
            i -> a.embedding[i]::DOUBLE - c.ccent[i]) AS resid
-  FROM ca{iters} a JOIN ccf c ON c.cell = a.cell
+  FROM ca{PQ_ITERS} a JOIN ccf c ON c.cell = a.cell
 )"""
     )
     parts.extend(
-        pq_unrolled_ctes(m, ncodes, iters, dims, src="resid_t", vec="resid")
+        pq_unrolled_ctes(src="resid_t", vec="resid")
     )
     parts.append(
         f"""probes AS MATERIALIZED (
   SELECT query_id, cell, qresid FROM (
     SELECT q.vec_id AS query_id, c.cell,
-           list_transform(range(1, {dims + 1}),
+           list_transform(range(1, {EMB_DIMS + 1}),
              i -> q.embedding[i]::DOUBLE - c.ccent[i]) AS qresid,
            row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', dims)} ASC,
+             ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', EMB_DIMS)} ASC,
                       c.cell ASC) AS rn
     FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
     CROSS JOIN ccf c
-  ) WHERE rn <= {nprobe}
+  ) WHERE rn <= {IVFPQ_NPROBE}
 )"""
     )
     parts.append(
@@ -945,10 +900,10 @@ FROM (
          row_number() OVER (PARTITION BY d.query_id
            ORDER BY SUM(d.d_micros) ASC, x.vec_id ASC) AS rank
   FROM resid_t rt
-  JOIN (SELECT vec_id, UNNEST(codes) AS code, UNNEST(range(0, {m})) AS sub
+  JOIN (SELECT vec_id, UNNEST(codes) AS code, UNNEST(range(0, {PQ_M})) AS sub
         FROM pq_codes_t) x ON x.vec_id = rt.vec_id
   JOIN dtable d ON d.cell = rt.cell
                 AND d.sub = x.sub AND d.code = x.code
   WHERE x.vec_id <> d.query_id
   GROUP BY d.query_id, x.vec_id
-) WHERE rank <= {k}"""
+) WHERE rank <= {PQ_K}"""

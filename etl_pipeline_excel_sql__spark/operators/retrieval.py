@@ -77,6 +77,12 @@ BM25_SCALE = 1_000_000
 RRF_K = 60
 RRF_SCALE = 1_000_000_000
 
+#: Results per query of the registry's ranked retrievals.
+BM25_TOPK = 10
+#: PRF: feedback depth and expansion width (classic small Rocchio).
+PRF_FB_DOCS = 5
+PRF_FB_TERMS = 2
+
 
 def _rational_coeffs(k1: float, b: float, scale: int) -> tuple[int, int, int, int]:
     """Fold rational ``k1 = p/q``, ``b = r/s`` (exact from their decimal
@@ -344,27 +350,21 @@ def bm25_prf_expand(
     return query_terms.select("query_id", "term").unionByName(expansion)
 
 
-def bm25_prf_topk(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    k: int,
-    fb_docs: int,
-    fb_terms: int,
-) -> DataFrame:
+def bm25_prf_topk(docs: DataFrame, query_terms: DataFrame) -> DataFrame:
     """Two-pass BM25 with pseudo-relevance feedback: expand each query
-    with the ``fb_terms`` most frequent new terms of its ``fb_docs``
-    top documents, rescore, return top-``k`` — the classic second-stage
-    retrieval DAG, float-free end to end. ONE index build feeds both
-    passes."""
+    with the ``PRF_FB_TERMS`` most frequent new terms of its
+    ``PRF_FB_DOCS`` top documents, rescore, return top-``BM25_TOPK`` —
+    the classic second-stage retrieval DAG, float-free end to end. ONE
+    index build feeds both passes."""
     idx = bm25_build_index(docs)
-    expanded = bm25_prf_expand(idx, query_terms, fb_docs, fb_terms)
+    expanded = bm25_prf_expand(idx, query_terms, PRF_FB_DOCS, PRF_FB_TERMS)
     scored = bm25_scores_from_index(idx, expanded)
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u").desc(), F.col("doc_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= BM25_TOPK)
         .select("query_id", "doc_id", "n_hit", "score_u", "rank")
     )
 

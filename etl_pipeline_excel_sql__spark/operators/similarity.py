@@ -28,12 +28,23 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.vectors import cosine, dot, l2_norm_sq
+from etl_pipeline_excel_sql__spark.functions.vectors import (
+    EMB_DIMS,
+    cosine,
+    dot,
+    l2_norm_sq,
+)
 from etl_pipeline_excel_sql__spark.operators.iterative import (
     LineageTruncator,
     SignatureCache,
     shared_slot,
 )
+
+#: Trained k-means cells and Lloyd rounds of the IVF family's quantizer.
+IVF_NCELLS = 8
+IVF_ITERS = 2
+#: Hard negatives mined per query.
+HARDNEG_TOPK = 10
 
 
 def brute_force_topk(
@@ -81,12 +92,11 @@ def brute_force_topk(
 def hard_negatives_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     dims: int | None = None,
 ) -> DataFrame:
     """Contrastive-training hard-negative mining: for each query vector,
-    the top-``k`` most-similar corpus vectors with a DIFFERENT label —
-    the near-misses a contrastive objective learns the most from
+    the top-``HARDNEG_TOPK`` most-similar corpus vectors with a DIFFERENT
+    label — the near-misses a contrastive objective learns the most from
     (in-batch random negatives are mostly easy; mining by similarity is
     the standard hard-negative recipe).
 
@@ -124,7 +134,7 @@ def hard_negatives_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= HARDNEG_TOPK)
         .select(
             "query_id",
             "query_label",
@@ -274,26 +284,20 @@ def _assign_broadcast(
     )
 
 
-def kmeans_train_assign(
-    corpus: DataFrame,
-    ncells: int = 8,
-    iters: int = 2,
-    dims: int = 64,
-    truncator=None,
-) -> DataFrame:
+def kmeans_train_assign(corpus: DataFrame, truncator=None) -> DataFrame:
     """Lloyd's k-means as pure DataFrame ops → final (id, vec, cell).
 
-    * Seeds: the ``ncells`` lowest-id vectors (deterministic, no RNG).
+    * Seeds: the ``IVF_NCELLS`` lowest-id vectors (deterministic, no RNG).
     * Each round: broadcast-assign to max-cosine centroid, then recompute
       per-cell means with the decimal-exact trick (``cell_centroids``) so
       every round is order-independent and bit-reproducible — the DuckDB
       oracle unrolls the same rounds and matches exactly.
-    * Rounds are ``iters`` assignments with ``iters-1`` mean updates in
-      between; the caller (``ivf_topk``) derives the final probe centroids
-      as the means of the returned assignment, which is the ``iters``-th
-      update.
+    * Rounds are ``IVF_ITERS`` assignments with ``IVF_ITERS - 1`` mean
+      updates in between; the caller (``ivf_topk``) derives the final
+      probe centroids as the means of the returned assignment, which is
+      the ``IVF_ITERS``-th update.
 
-    At 100 TB: each round is one scan + one tiny aggregate (ncells×dims
+    At 100 TB: each round is one scan + one tiny aggregate (cells×dims
     partial sums, map-side combined); centroids always broadcast — the
     driver never collects them. Empty cells drop out naturally (their
     group vanishes), mirrored by the oracle's GROUP BY.
@@ -301,8 +305,6 @@ def kmeans_train_assign(
     Round cuts go through ``truncator`` under the slot rule of
     :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`.
     """
-    if iters < 1:
-        raise ValueError("kmeans_train_assign: iters must be >= 1")
     spark = corpus.sparkSession
     truncator = truncator or shared_slot(
         spark, "similarity.kmeans", lambda: LineageTruncator(spark)
@@ -310,7 +312,7 @@ def kmeans_train_assign(
     # seed centroids stay LAZY: round 1's cut evaluates them once.
     cents = (
         corpus.orderBy("vec_id")
-        .limit(ncells)
+        .limit(IVF_NCELLS)
         .select(
             F.col("vec_id"),
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias(
@@ -324,39 +326,34 @@ def kmeans_train_assign(
         .select("cell", "centroid")
     )
     # Round-14 loop shape (guide §2.4/§5, the pq_train_codebooks
-    # doctrine): intermediate rounds truncate the ncells-row CENTROID
+    # doctrine): intermediate rounds truncate the IVF_NCELLS-row CENTROID
     # table, not the corpus-sized assignment — each round is ONE job
     # (the assignment evaluates inside the centroid cut) and the next
-    # round's broadcast reads ncells materialized rows instead of a
+    # round's broadcast reads IVF_NCELLS materialized rows instead of a
     # corpus-sized checkpoint. The FINAL assignment is the one
     # corpus-scale cut kept: it is the multi-consumer frame (probe
     # centroids + both sides of the cell join read it). Truncating it
     # also retires the last centroid cut, and the truncator's next call
     # retires the final cut — the same lifetime contract as before.
-    for _ in range(iters - 1):
+    for _ in range(IVF_ITERS - 1):
         cents = truncator.truncate(
-            cell_centroids(_assign_broadcast(corpus, cents, dims), "cell")
+            cell_centroids(_assign_broadcast(corpus, cents, EMB_DIMS), "cell")
         )
-    return truncator.truncate(_assign_broadcast(corpus, cents, dims))
+    return truncator.truncate(_assign_broadcast(corpus, cents, EMB_DIMS))
 
 
 def ivf_topk_trained(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    ncells: int = 8,
-    iters: int = 2,
-    dims: int = 64,
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """IVF ANN over TRAINED k-means cells (no label stand-in).
 
-    Trains ``ncells`` centroids with :func:`kmeans_train_assign`, then runs
+    Trains ``IVF_NCELLS`` centroids with :func:`kmeans_train_assign`, then runs
     the standard IVF probe (the 2 nearest cells per query, exact
     cosine inside). Same output schema as :func:`brute_force_topk`; recall
     vs brute force is measured in tests/test_operators.py.
     """
-    assigned = kmeans_train_assign(corpus, ncells, iters, dims)
-    return ivf_topk(assigned, queries, k=k, cell_col="cell", dims=dims)
+    assigned = kmeans_train_assign(corpus)
+    return ivf_topk(assigned, queries, k=k, cell_col="cell", dims=EMB_DIMS)
 
 
 def cosine_neardup_pairs(
@@ -549,7 +546,7 @@ def srp_candidate_stats(
     }
 
 
-def gram_matrix(corpus: DataFrame, dims: int = 64) -> DataFrame:
+def gram_matrix(corpus: DataFrame) -> DataFrame:
     """Distributed Gram matrix X'X over the embedding corpus (upper
     triangle) — the one-pass reduction PCA / whitening / covariance
     preprocessing needs.
@@ -563,18 +560,16 @@ def gram_matrix(corpus: DataFrame, dims: int = 64) -> DataFrame:
     Magnitudes: |q| ≤ |x|·10⁶, so unit-norm-ish embeddings stay far
     inside int64 through products and corpus-level sums.
 
-    Scale shape: each batch emits dims·(dims+1)/2 rows (model-sized, data
-    -volume-independent); the only exchange carries (i, j, partial) —
-    the classic map-side-reduced Gram that needs no driver collect and
-    no O(n·d²) explode.
+    Scale shape: each batch emits EMB_DIMS·(EMB_DIMS+1)/2 rows
+    (model-sized, data-volume-independent); the only exchange carries
+    (i, j, partial) — the classic map-side-reduced Gram that needs no
+    driver collect and no O(n·d²) explode.
     """
     import numpy as np
     import pandas as pd
 
-    n_dims = dims
-
     def partial_gram(batches):
-        iu = np.triu_indices(n_dims)
+        iu = np.triu_indices(EMB_DIMS)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -602,7 +597,6 @@ def sq8_rerank_topk(
     queries: DataFrame,
     k: int = 10,
     candidates: int = 30,
-    dims: int = 64,
 ) -> DataFrame:
     """Two-stage serving ANN: int8 scalar-quantized candidate generation
     followed by exact-cosine rerank — the production pattern between
@@ -636,7 +630,7 @@ def sq8_rerank_topk(
                         F.element_at(F.col("embedding"), i + 1).cast("double")
                     )
                 )
-                for i in range(dims)
+                for i in range(EMB_DIMS)
             ]
         ).alias("__ma")
     )
@@ -670,7 +664,7 @@ def sq8_rerank_topk(
     terms = [
         F.element_at(F.col("__qc"), i + 1)
         * F.element_at(F.col("__cc"), i + 1)
-        for i in range(dims)
+        for i in range(EMB_DIMS)
     ]
     qdot = terms[0]
     for t in terms[1:]:
@@ -689,19 +683,19 @@ def sq8_rerank_topk(
     qv = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), EMB_DIMS)).alias("__qnorm"),
     )
     cv = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"), EMB_DIMS)).alias("__cnorm"),
     )
     rer = (
         cv.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
         .withColumn(
             "cosine_sim",
-            dot(F.col("__qvec"), F.col("__cvec"), dims)
+            dot(F.col("__qvec"), F.col("__cvec"), EMB_DIMS)
             / (F.col("__qnorm") * F.col("__cnorm")),
         )
     )

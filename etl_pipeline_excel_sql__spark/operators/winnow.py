@@ -1,11 +1,12 @@
 """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
 "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD 2003 —
-the MOSS algorithm): from every window of ``w`` consecutive character
-k-gram hashes, select the minimum (rightmost on ties). The guarantee the
-paper proves: any shared substring of length ``>= w + k - 1`` between two
-documents yields at least one SHARED selected fingerprint — so matching
-on fingerprints has guaranteed recall for long overlaps at a fraction of
-the all-grams index size (expected density 2/(w+1)).
+the MOSS algorithm): from every window of ``WINNOW_W`` consecutive
+character ``WINNOW_K``-gram hashes, select the minimum (rightmost on
+ties). The guarantee the paper proves: any shared substring of length
+``>= w + k - 1`` between two documents yields at least one SHARED
+selected fingerprint — so matching on fingerprints has guaranteed recall
+for long overlaps at a fraction of the all-grams index size (expected
+density 2/(w+1)).
 
 Relationship to the neighbors in this engine: ``text_fingerprint``'s
 rolling hash summarizes a whole document into one value (exact-dup
@@ -51,6 +52,9 @@ HASH40 = 1 << 40
 #: position budget: documents longer than 2^20 chars are excluded (and
 #: would be chunked upstream at real scale — the cap is the contract).
 POS_CAP = 1 << 20
+#: k-gram width (k) and window length (w) of the registry's fingerprints.
+WINNOW_K = 8
+WINNOW_W = 4
 
 
 #: Explicit whitespace class shared by both engine twins. Java's ``\s``
@@ -69,16 +73,15 @@ def _normalized() -> F.Column:
     return F.lower(F.trim(F.regexp_replace(F.col("text"), WS_CLASS, " ")))
 
 
-def winnow_fingerprint_stats(
-    df: DataFrame, k: int = 8, w: int = 4
-) -> DataFrame:
+def winnow_fingerprint_stats(df: DataFrame) -> DataFrame:
     """Per-document winnowing summary: ``doc_id, n_kgrams, n_fp,
     density_ppm`` where ``n_fp`` is the selected-fingerprint count and
     ``density_ppm = n_fp·1e6 DIV n_windows`` (paper expectation
     ~2/(w+1); guarantee ≥ 1/w since one pick per window, each pick
     covering at most w windows)."""
     base = df.select("doc_id", _normalized().alias("__t")).filter(
-        (F.length("__t") >= k + w - 1) & (F.length("__t") < POS_CAP)
+        (F.length("__t") >= WINNOW_K + WINNOW_W - 1)
+        & (F.length("__t") < POS_CAP)
     )
     # Round-13 optimization (guide §4.1 "prefer built-ins"/§1.2): explode
     # the POSITION sequence and slice each k-gram with a plain codegen'd
@@ -92,14 +95,17 @@ def winnow_fingerprint_stats(
     grams = base.select(
         "doc_id",
         F.posexplode(
-            F.sequence(F.lit(1), F.length("__t") - (k - 1))
+            F.sequence(F.lit(1), F.length("__t") - (WINNOW_K - 1))
         ).alias("__i", "pos"),
         "__t",
     ).select(
         "doc_id",
         "pos",
         (
-            (md5_hash60(F.expr(f"substring(__t, pos, {k})")) % HASH40)
+            (
+                md5_hash60(F.expr(f"substring(__t, pos, {WINNOW_K})"))
+                % HASH40
+            )
             * POS_CAP
             + (F.lit(POS_CAP - 1) - F.col("pos"))
         ).alias("key"),
@@ -108,12 +114,12 @@ def winnow_fingerprint_stats(
     wmin = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
-        .rowsBetween(Window.currentRow, w - 1)
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
     )
     picks = (
         grams.withColumn("__n", F.count(F.lit(1)).over(wn))
         .withColumn("__kmin", F.min("key").over(wmin))
-        .filter(F.col("pos") <= F.col("__n") - (w - 1))
+        .filter(F.col("pos") <= F.col("__n") - (WINNOW_W - 1))
         .select("doc_id", "__n", "__kmin")
     )
     return (
@@ -124,14 +130,14 @@ def winnow_fingerprint_stats(
         )
         .withColumn(
             "density_ppm",
-            F.expr(f"(n_fp * 1000000) div (n_kgrams - {w - 1})").cast(
-                "bigint"
-            ),
+            F.expr(
+                f"(n_fp * 1000000) div (n_kgrams - {WINNOW_W - 1})"
+            ).cast("bigint"),
         )
     )
 
 
-def winnow_stats_sql(k: int = 8, w: int = 4) -> str:
+def winnow_stats_sql() -> str:
     """DuckDB oracle twin of :func:`winnow_fingerprint_stats` over the
     ``documents`` table — same normalization, same packed-key min-window
     selection, same summary arithmetic."""
@@ -143,26 +149,26 @@ WITH base AS (
   FROM documents
 ), docs AS (
   SELECT doc_id, t FROM base
-  WHERE length(t) >= {k + w - 1} AND length(t) < {POS_CAP}
+  WHERE length(t) >= {WINNOW_K + WINNOW_W - 1} AND length(t) < {POS_CAP}
 ), grams AS (
   SELECT doc_id, i AS pos,
          ({h} % {HASH40}) * {POS_CAP} + ({POS_CAP - 1} - i) AS key
   FROM (
-    SELECT doc_id, i, substr(t, i, {k}) AS g
-    FROM docs, UNNEST(range(1, length(t) - {k - 1} + 1)) AS u(i)
+    SELECT doc_id, i, substr(t, i, {WINNOW_K}) AS g
+    FROM docs, UNNEST(range(1, length(t) - {WINNOW_K - 1} + 1)) AS u(i)
   )
 ), picks AS (
   SELECT doc_id, n, kmin FROM (
     SELECT doc_id, pos,
            COUNT(*) OVER (PARTITION BY doc_id) AS n,
            MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-                ROWS BETWEEN CURRENT ROW AND {w - 1} FOLLOWING) AS kmin
+                ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS kmin
     FROM grams
-  ) WHERE pos <= n - {w - 1}
+  ) WHERE pos <= n - {WINNOW_W - 1}
 )
 SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_kgrams,
        CAST(COUNT(DISTINCT kmin) AS BIGINT) AS n_fp,
-       CAST(COUNT(DISTINCT kmin) * 1000000 // (MAX(n) - {w - 1})
+       CAST(COUNT(DISTINCT kmin) * 1000000 // (MAX(n) - {WINNOW_W - 1})
             AS BIGINT) AS density_ppm
 FROM picks GROUP BY doc_id
 """

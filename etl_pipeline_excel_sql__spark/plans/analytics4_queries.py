@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 
@@ -153,8 +154,6 @@ def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
-
 ORACLE: dict[str, str] = {
     # every event belongs to the two hour-aligned starts covering it
     "window_sliding_counts": """
@@ -211,7 +210,7 @@ ORACLE: dict[str, str] = {
                CAST(len(frame) AS INT) AS frame_n
         FROM framed""",
     "explode_tokens": f"""
-        WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+        WITH d AS (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents),
         e AS (SELECT doc_id, toks,
                      unnest(generate_series(1, least(len(toks), 10))) AS i
               FROM d)

@@ -26,8 +26,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.operators.bpe import (
+    BPE_TRAIN_MERGES,
+    PACK_SEQ_LEN,
+    bpe_packed_sequences_unrolled_sql,
+    bpe_token_ids_unrolled_sql,
+    bpe_unrolled_sql,
+    bpe_vocab_unrolled_sql,
+)
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
+from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
 
 #: letter runs, digit runs, or INDIVIDUAL punctuation characters (the
 #: third alternative has no ``+`` on purpose: BPE-style vocabularies
@@ -385,9 +394,7 @@ def q_emb_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WS_N = (
-    "len(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> ''))"
-)
+_WS_N = f"len({WS_TOKENS_SQL})"
 
 ORACLE["corpus_length_profile"] = f"""
     WITH ranked AS (
@@ -479,10 +486,10 @@ ORACLE["cap_per_source"] = """
       FROM documents)
     WHERE rn <= 10"""
 
-ORACLE["heavy_hitter_terms"] = """
+ORACLE["heavy_hitter_terms"] = f"""
     WITH toks AS (
       SELECT doc_id, UNNEST(list_distinct(
-        list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')
+        {WS_TOKENS_SQL}
       )) AS term
       FROM documents
     ), n AS (SELECT COUNT(*) AS n_docs FROM documents)
@@ -543,12 +550,6 @@ ORACLE["bpe_pair_counts"] = f"""
 QUERIES["bpe_pair_counts"] = q_bpe_pair_counts
 
 
-#: merge rounds for the trained BPE table (small: each round is two
-#: bounded jobs over the distinct-word table, and the oracle unrolls
-#: the same count).
-BPE_TRAIN_MERGES = 6
-
-
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained BPE merge table itself — ``operators/bpe.py``'s
     iterative loop over the distinct-word frequency table; the oracle
@@ -560,17 +561,8 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train_merges(docs, BPE_TRAIN_MERGES)
 
 
-def _bpe_train_sql() -> str:
-    from etl_pipeline_excel_sql__spark.operators.bpe import bpe_unrolled_sql
-
-    return bpe_unrolled_sql(BPE_TRAIN_MERGES)
-
-
-ORACLE["bpe_train"] = _bpe_train_sql()
+ORACLE["bpe_train"] = bpe_unrolled_sql()
 QUERIES["bpe_train"] = q_bpe_train
-
-
-BPE_VOCAB_TOP_K = 40
 
 
 def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,18 +588,10 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             words, BPE_TRAIN_MERGES, batch_pairs=4, max_batch_pairs=64
         ).collect()
     ]
-    return bpe_subword_vocab(docs, merges, top_k=BPE_VOCAB_TOP_K, words=words)
+    return bpe_subword_vocab(docs, merges, words=words)
 
 
-def _bpe_vocab_sql() -> str:
-    from etl_pipeline_excel_sql__spark.operators.bpe import (
-        bpe_vocab_unrolled_sql,
-    )
-
-    return bpe_vocab_unrolled_sql(BPE_TRAIN_MERGES, BPE_VOCAB_TOP_K)
-
-
-ORACLE["bpe_vocab"] = _bpe_vocab_sql()
+ORACLE["bpe_vocab"] = bpe_vocab_unrolled_sql()
 QUERIES["bpe_vocab"] = q_bpe_vocab
 
 
@@ -641,20 +625,10 @@ def q_bpe_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_token_ids_sql() -> str:
-    from etl_pipeline_excel_sql__spark.operators.bpe import (
-        bpe_token_ids_unrolled_sql,
-    )
-
-    return bpe_token_ids_unrolled_sql(BPE_TRAIN_MERGES)
-
-
-ORACLE["bpe_token_ids"] = _bpe_token_ids_sql()
+ORACLE["bpe_token_ids"] = bpe_token_ids_unrolled_sql()
 QUERIES["bpe_token_ids"] = q_bpe_token_ids
 
 
-#: fixed LM training-sequence length for the packed-batch artifact
-PACK_SEQ_LEN = 64
 #: doc ids per prefix-sum range (two-phase global offset; small here so
 #: the range table is non-trivial even at sf0.001)
 PACK_IDS_RANGE = 100
@@ -688,18 +662,9 @@ def q_pack_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pack_token_ids_sql() -> str:
-    from etl_pipeline_excel_sql__spark.operators.bpe import (
-        bpe_packed_sequences_unrolled_sql,
-    )
-
-    return bpe_packed_sequences_unrolled_sql(
-        "SELECT doc_id, text FROM documents", BPE_TRAIN_MERGES,
-        PACK_SEQ_LEN,
-    )
-
-
-ORACLE["pack_token_ids"] = _pack_token_ids_sql()
+ORACLE["pack_token_ids"] = bpe_packed_sequences_unrolled_sql(
+    "SELECT doc_id, text FROM documents"
+)
 QUERIES["pack_token_ids"] = q_pack_token_ids
 
 
@@ -912,20 +877,12 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_fertility_sql() -> str:
-    from etl_pipeline_excel_sql__spark.operators.bpe import (
-        bpe_token_ids_unrolled_sql,
-    )
-
-    ids = bpe_token_ids_unrolled_sql(BPE_TRAIN_MERGES)
-    toks = (
-        "list_filter(regexp_split_to_array(trim(text), '\\s+'),"
-        " t -> t <> '')"
-    )
+    ids = bpe_token_ids_unrolled_sql()
     return f"""
 WITH f_ids AS MATERIALIZED (
   SELECT doc_id, n_subwords FROM ({ids})
 ), f_docs AS (
-  SELECT doc_id, lang, CAST(len({toks}) AS BIGINT) AS nw FROM documents
+  SELECT doc_id, lang, CAST(len({WS_TOKENS_SQL}) AS BIGINT) AS nw FROM documents
 )
 SELECT lang,
        CAST(SUM(n_subwords) AS BIGINT) AS n_subwords,

@@ -57,9 +57,6 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
 )
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-#: DuckDB twin of md5_hash60 (cited in functions/hashing.py docstring).
-_H60 = H60_SQL
-
 #: basis points trimmed from EACH tail of the per-group distribution.
 TRIM_BP = 500
 
@@ -427,7 +424,7 @@ ORACLE: dict[str, str] = {
         GROUP BY col_name""",
     "text_weighted_sample": f"""
         SELECT doc_id, lang, n_chars,
-               {_H60.format(x="'wsample:' || CAST(doc_id AS VARCHAR)")}
+               {H60_SQL.format(x="'wsample:' || CAST(doc_id AS VARCHAR)")}
                  // GREATEST(n_chars, 1) AS priority
         FROM documents
         ORDER BY priority, doc_id

@@ -33,7 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.text import lang_id, ws_tokens
+from etl_pipeline_excel_sql__spark.functions.text import (
+    WS_TOKENS_SQL,
+    lang_id,
+    ws_tokens,
+)
 from etl_pipeline_excel_sql__spark.plans.analytics2_queries import (
     ORACLE as _A2_ORACLE,
 )
@@ -174,7 +178,6 @@ _CENTROID_CTE = _A5_ORACLE["emb_label_centroids"]
 
 # Tokenizer + stopword-hit SQL fragments — DuckDB twins of
 # functions/text.py (same definitions as the text_lang_id oracle).
-_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
 
 
 def _sw_hits(lang: str) -> str:
@@ -211,7 +214,7 @@ ORACLE: dict[str, str] = {
             SELECT lang,
               {_sw_hits('de')} AS h_de, {_sw_hits('en')} AS h_en,
               {_sw_hits('es')} AS h_es, {_sw_hits('fr')} AS h_fr
-            FROM (SELECT lang, {_TOKS} AS toks FROM documents)
+            FROM (SELECT lang, {WS_TOKENS_SQL} AS toks FROM documents)
           )
         ), cells AS (
           SELECT lang, pred_lang, COUNT(*) AS n_docs

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.operators.linkage import (
     _PACK_BASE,
+    ER_MAX_DIST,
     blocked_best_match,
 )
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
@@ -95,11 +96,6 @@ QUERIES["linkage_best_match"] = q_linkage_best_match
 
 # --- composed entity-resolution capstone (round 11) -------------------------
 
-#: fuzzy-merge distance budget for representative names (<= 2 edits
-#: collapses the typo'd variants the generator plants without bridging
-#: distinct products; keep the oracle constant in sync).
-ER_MAX_DIST = 2
-
 
 def q_entity_resolution_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed entity-resolution capstone — the dirty-catalog shape a
@@ -149,7 +145,6 @@ def q_entity_resolution_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="rep_key",
         name_col="p_name",
         block_col="block",
-        max_dist=ER_MAX_DIST,
     ).select("id_a", "id_b")
     comp = connected_components(edges).select(
         F.col("member_id").alias("rep_key"), "cluster_id"

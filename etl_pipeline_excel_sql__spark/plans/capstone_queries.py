@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.text import (
     STOPWORDS,
+    WS_TOKENS_SQL,
     stopword_hits,
     ws_token_count,
     ws_tokens,
@@ -391,9 +392,6 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         minhash_lsh_pairs,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        MINHASH_BAND_ROWS,
-        MINHASH_K,
-        MINHASH_SHINGLE_N,
         MINHASH_THRESHOLD,
         NEW_SOURCES,
     )
@@ -408,9 +406,6 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         )
         base_pairs = minhash_lsh_pairs(
             corpus,
-            num_hashes=MINHASH_K,
-            band_rows=MINHASH_BAND_ROWS,
-            shingle_n=MINHASH_SHINGLE_N,
             threshold=MINHASH_THRESHOLD,
         ).select("id_a", "id_b")
         connected_components(base_pairs).select(
@@ -427,12 +422,7 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         ).select("doc_id").distinct().write.mode("overwrite").parquet(
             f"{path}/contam0"
         )
-        mh_bands, mh_sets = minhash_index_tables(
-            corpus,
-            num_hashes=MINHASH_K,
-            band_rows=MINHASH_BAND_ROWS,
-            shingle_n=MINHASH_SHINGLE_N,
-        )
+        mh_bands, mh_sets = minhash_index_tables(corpus)
         mh_bands.write.mode("overwrite").parquet(f"{path}/mh_bands")
         mh_sets.write.mode("overwrite").parquet(f"{path}/mh_sets")
 
@@ -484,9 +474,6 @@ def _incremental_dispositions(
         minhash_lsh_pairs_ingest_indexed,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        MINHASH_BAND_ROWS,
-        MINHASH_K,
-        MINHASH_SHINGLE_N,
         MINHASH_THRESHOLD,
         NEW_SOURCES,
     )
@@ -516,9 +503,6 @@ def _incremental_dispositions(
         batch,
         spark.read.parquet(f"{path}/mh_bands"),
         spark.read.parquet(f"{path}/mh_sets"),
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     ).select("id_a", "id_b")
     comp = connected_components(
@@ -698,10 +682,7 @@ def _curation_ctes(src: str = "documents") -> str:
     from etl_pipeline_excel_sql__spark.plans.corpus2_queries import (
         _neardup_groups_sql,
     )
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        _STOP,
-        _TOKS,
-    )
+    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _STOP
     from etl_pipeline_excel_sql__spark.plans.spans_queries import _occ_sql
 
     cases = " ".join(
@@ -723,7 +704,7 @@ scored AS MATERIALIZED (
   SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST((CASE {cases} ELSE 0 END) * 1000000
               // greatest(len(toks), 1) AS BIGINT) AS score
-  FROM (SELECT doc_id, lang, {_TOKS} AS toks FROM {src} AS cc_s
+  FROM (SELECT doc_id, lang, {WS_TOKENS_SQL} AS toks FROM {src} AS cc_s
         WHERE doc_id % {SPAN_BENCH_MOD} <> 0)
 ),
 ranked AS MATERIALIZED (
@@ -779,15 +760,13 @@ disp AS (
 
 
 def _pretrain_curation_sql() -> str:
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _TOKS
-
     return f"""{_curation_ctes()}
 SELECT disposition, CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
 FROM disp GROUP BY disposition
 UNION ALL
 SELECT 'benchmark' AS disposition, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COALESCE(SUM(len({_TOKS})), 0) AS BIGINT) AS n_tokens
+       CAST(COALESCE(SUM(len({WS_TOKENS_SQL})), 0) AS BIGINT) AS n_tokens
 FROM documents WHERE doc_id % {SPAN_BENCH_MOD} = 0
 """
 

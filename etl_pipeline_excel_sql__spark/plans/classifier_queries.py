@@ -16,18 +16,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import H60_SQL
-from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
+from etl_pipeline_excel_sql__spark.functions.text import (
+    WS_TOKENS_SQL,
+    ws_tokens,
+)
 from etl_pipeline_excel_sql__spark.operators.perceptron import (
+    PERCEPTRON_ROUNDS,
     perceptron_scores,
 )
-from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _TOKS
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 QUERIES: dict = {}
 ORACLE: dict = {}
 
 PERCEPTRON_BUCKETS = 512
-PERCEPTRON_ROUNDS = 3
 
 #: Deterministic supervision: the doc mentions the target token. A toy
 #: stand-in for human quality labels — the TRAINING MACHINERY is the
@@ -45,24 +47,20 @@ def q_perceptron_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_contains(ws_tokens(F.col("text")), PERCEPTRON_TARGET_TOKEN),
         F.lit(1),
     ).otherwise(F.lit(-1))
-    return perceptron_scores(
-        docs, label, PERCEPTRON_BUCKETS, PERCEPTRON_ROUNDS
-    )
+    return perceptron_scores(docs, label, PERCEPTRON_BUCKETS)
 
 
-def perceptron_unrolled_sql(
-    n_buckets: int, rounds: int, target_token: str
-) -> str:
+def perceptron_unrolled_sql() -> str:
     """DuckDB oracle twin: the identical rounds unrolled as CTEs."""
     h = H60_SQL.replace("{x}", "term")
     parts = [
         f"""feats AS MATERIALIZED (
-  SELECT DISTINCT doc_id, y, CAST({h} % {n_buckets} AS INT) AS bucket
+  SELECT DISTINCT doc_id, y, CAST({h} % {PERCEPTRON_BUCKETS} AS INT) AS bucket
   FROM (
     SELECT doc_id,
-           CASE WHEN list_contains({_TOKS}, '{target_token}')
+           CASE WHEN list_contains({WS_TOKENS_SQL}, '{PERCEPTRON_TARGET_TOKEN}')
                 THEN 1 ELSE -1 END AS y,
-           UNNEST({_TOKS}) AS term
+           UNNEST({WS_TOKENS_SQL}) AS term
     FROM documents
   )
 )""",
@@ -72,7 +70,7 @@ def perceptron_unrolled_sql(
   SELECT bucket, SUM(y) AS w FROM feats GROUP BY bucket
 )""",
     ]
-    for r in range(2, rounds + 1):
+    for r in range(2, PERCEPTRON_ROUNDS + 1):
         p = r - 1
         parts.append(
             f"""m{r} AS MATERIALIZED (
@@ -105,14 +103,12 @@ SELECT f.doc_id, f.y,
        CAST(SUM(COALESCE(w.w, 0)) AS BIGINT) AS margin,
        CAST(CASE WHEN SUM(COALESCE(w.w, 0)) > 0 THEN 1 ELSE -1 END AS INT)
          AS pred
-FROM feats f LEFT JOIN w{rounds} w ON w.bucket = f.bucket
+FROM feats f LEFT JOIN w{PERCEPTRON_ROUNDS} w ON w.bucket = f.bucket
 GROUP BY f.doc_id, f.y"""
     )
 
 
-ORACLE["perceptron_quality"] = perceptron_unrolled_sql(
-    PERCEPTRON_BUCKETS, PERCEPTRON_ROUNDS, PERCEPTRON_TARGET_TOKEN
-)
+ORACLE["perceptron_quality"] = perceptron_unrolled_sql()
 QUERIES["perceptron_quality"] = q_perceptron_quality
 
 

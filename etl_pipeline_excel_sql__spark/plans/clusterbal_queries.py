@@ -25,21 +25,19 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
     H60_SQL,
     md5_hash60,
 )
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.similarity import (
+    IVF_ITERS,
+    IVF_NCELLS,
     kmeans_train_assign,
 )
 from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    EMB_DIMS,
     _kmeans_assign_sql,
     _kmeans_means_sql,
 )
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-#: Lloyd cells / rounds — the IVF family's small trained quantizer.
-CB_NCELLS = 8
-CB_ITERS = 2
 
 #: per-cell keep quota.
 CB_K = 30
@@ -53,9 +51,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
-    assigned = kmeans_train_assign(
-        emb, ncells=CB_NCELLS, iters=CB_ITERS, dims=EMB_DIMS
-    )
+    assigned = kmeans_train_assign(emb)
     key = md5_hash60(
         F.concat(F.lit("cb:"), F.col("vec_id").cast("string"))
     )
@@ -79,16 +75,16 @@ def _cb_sql() -> str:
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          list_transform(embedding, x -> x::DOUBLE) AS centroid
   FROM (SELECT vec_id, embedding FROM embeddings
-        ORDER BY vec_id LIMIT {CB_NCELLS})
+        ORDER BY vec_id LIMIT {IVF_NCELLS})
 )""",
         f"a0 AS ({_kmeans_assign_sql('init', EMB_DIMS)}\n)",
     ]
-    for i in range(1, CB_ITERS):
+    for i in range(1, IVF_ITERS):
         ctes.append(
             f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}', EMB_DIMS)}\n)"
         )
         ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}', EMB_DIMS)}\n)")
-    last = f"a{CB_ITERS - 1}"
+    last = f"a{IVF_ITERS - 1}"
     return f"""
 WITH {', '.join(ctes)}
 SELECT vec_id, cell, cell_size, cell_rank FROM (

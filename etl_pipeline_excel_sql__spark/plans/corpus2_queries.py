@@ -39,7 +39,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import H60_SQL
-from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
+from etl_pipeline_excel_sql__spark.functions.text import (
+    WS_TOKENS_SQL,
+    ws_tokens,
+)
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 #: Chunk window / stride in tokens (25% overlap).
@@ -53,8 +56,7 @@ LM_SCALE = 1_000_000
 #: 24 leaves a real OOV tail).
 VOCAB_V = 24
 
-#: DuckDB twin of ws_tokens (same as pipeline_queries._TOKS).
-_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
+#: DuckDB twin of ws_tokens (same as pipeline_queries.WS_TOKENS_SQL).
 
 
 def q_doc_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,7 +368,7 @@ QUERIES = {
 ORACLE = {
     "text_passage_dedup": f"""
         WITH base AS (
-          SELECT doc_id, {_TOKS} AS toks, len({_TOKS}) AS n FROM documents
+          SELECT doc_id, {WS_TOKENS_SQL} AS toks, len({WS_TOKENS_SQL}) AS n FROM documents
         ), seg AS (
           SELECT doc_id, toks,
                  unnest(generate_series(0, n - 1, {PASSAGE_W})) AS start
@@ -396,7 +398,7 @@ ORACLE = {
         FROM base b LEFT JOIN rebuilt USING (doc_id)""",
     "doc_chunk_windows": f"""
         WITH t AS (
-          SELECT doc_id, {_TOKS} AS toks FROM documents
+          SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents
         ), nz AS (
           SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0
         ), s AS (
@@ -423,7 +425,7 @@ ORACLE = {
         WHERE quota_rank <= {QUOTA_CAP}""",
     "kn_lm_score": f"""
         WITH t AS (
-          SELECT doc_id, {_TOKS} AS toks FROM documents
+          SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents
         ), nz AS (
           SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 2
         ), b AS (
@@ -457,7 +459,7 @@ ORACLE = {
         FROM scored GROUP BY doc_id""",
     "ngram_lm_score": f"""
         WITH t AS (
-          SELECT doc_id, {_TOKS} AS toks FROM documents
+          SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents
         ), nz AS (
           SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 2
         ), b AS (
@@ -483,7 +485,7 @@ ORACLE = {
         FROM scored GROUP BY doc_id""",
     "vocab_coverage": f"""
         WITH t AS (
-          SELECT doc_id, {_TOKS} AS toks FROM documents
+          SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents
         ), nz AS (
           SELECT doc_id, toks FROM t WHERE len(toks) > 0
         ), counts AS (
@@ -610,14 +612,13 @@ def _neardup_groups_sql(src: str = "documents") -> str:
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
         _DOCS_TOKS_SRC,
         _MINHASH_SQL,
-        _TOKS,
     )
 
     mh = _MINHASH_SQL
     if src != "documents":
         mh = mh.replace(
             _DOCS_TOKS_SRC,
-            f"(SELECT doc_id, {_TOKS} AS toks FROM {src} AS nd_src)",
+            f"(SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM {src} AS nd_src)",
         )
     return f"""pairs AS MATERIALIZED (
   SELECT id_a, id_b FROM ({mh})
@@ -713,7 +714,7 @@ def q_effective_corpus_size(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _effective_size_sql() -> str:
-    toks = f"CAST(len({_TOKS}) AS BIGINT)"
+    toks = f"CAST(len({WS_TOKENS_SQL}) AS BIGINT)"
     return f"""
 WITH RECURSIVE {_neardup_groups_sql()},
 t AS (

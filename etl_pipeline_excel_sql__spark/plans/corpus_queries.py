@@ -30,16 +30,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.text import (
+    WS_TOKENS_SQL,
     has_ws_tokens,
     shingles,
     ws_token_count,
     ws_tokens,
 )
 from etl_pipeline_excel_sql__spark.plans.analytics_queries import DEC, dec_out
-from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    _shingle_sql,
-    _TOKS,
-)
+from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _shingle_sql
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 DECONTAM_SHINGLE_N = 4
@@ -209,7 +207,7 @@ def q_agg_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHINGLED = f"""
   SELECT doc_id, unnest({{sh}}) AS sh
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 """.format
 
@@ -227,7 +225,7 @@ ORACLE: dict[str, str] = {
         GROUP BY doc_id""",
     "text_repetition": f"""
         WITH base AS (
-          SELECT doc_id, toks FROM (SELECT doc_id, {_TOKS} AS toks
+          SELECT doc_id, toks FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks
                                     FROM documents)
           WHERE len(toks) > 0
         ), cnts AS (
@@ -360,7 +358,7 @@ def _curate_oracle() -> str:
     return f"""
         WITH staged AS (
           SELECT doc_id, lang, source, text,
-                 CAST(len({_TOKS}) AS INT) AS n_tokens
+                 CAST(len({WS_TOKENS_SQL}) AS INT) AS n_tokens
           FROM documents
         ), gated AS (
           SELECT * FROM staged

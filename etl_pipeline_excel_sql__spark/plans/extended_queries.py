@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.cleaning import to_str
+from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 
@@ -524,16 +525,13 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (  # noqa: E402
-    _STOP,
-    _TOKS,
-)
+from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _STOP  # noqa: E402
 
 ORACLE.update(
     {
         "text_top_terms": f"""
         WITH toks AS (
-          SELECT doc_id, unnest({_TOKS}) AS term FROM documents
+          SELECT doc_id, unnest({WS_TOKENS_SQL}) AS term FROM documents
         ), tf AS (
           SELECT doc_id, term, COUNT(*) AS tf
           FROM toks
@@ -611,7 +609,7 @@ ORACLE["array_funcs"] = f"""
            array_to_string(list_sort(list_distinct(toks[1:5])), ' ')
                AS first_five_sorted
     FROM (SELECT doc_id, {{toks}} AS toks FROM documents)
-""".format(toks=_TOKS)
+""".format(toks=WS_TOKENS_SQL)
 QUERIES["array_funcs"] = q_array_funcs
 
 

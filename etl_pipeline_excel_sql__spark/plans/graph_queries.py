@@ -13,13 +13,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.operators.graph import (
+    PAGERANK_DAMPING_PCT,
+    PAGERANK_ITERS,
+    PAGERANK_SCALE,
     pagerank_integer,
-    pagerank_unrolled_sql,
 )
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 N_NATIONS = 25
-PR_ITERS = 8
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,10 +58,7 @@ def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").cast("int").alias("node")
     )
     ranks = pagerank_integer(
-        _trade_edges(spark, sf_dir),
-        nodes,
-        n_nodes=N_NATIONS,
-        iters=PR_ITERS,
+        _trade_edges(spark, sf_dir), nodes, n_nodes=N_NATIONS
     )
     return ranks.join(
         F.broadcast(nation), ranks.node == nation.n_nationkey
@@ -83,13 +81,55 @@ _EDGES_SQL = """
 
 _NODES_SQL = "SELECT CAST(n_nationkey AS INT) AS node FROM nation"
 
+
+def _pagerank_nations_sql() -> str:
+    """DuckDB oracle twin of :func:`pagerank_integer` over the trade
+    graph: the same iteration unrolled as chained CTEs. Returns the
+    WITH-clause body up to and including ``r{PAGERANK_ITERS}``; the
+    caller appends its own final SELECT over it.
+    """
+    scale, damping_pct = PAGERANK_SCALE, PAGERANK_DAMPING_PCT
+    base = ((100 - damping_pct) * scale) // (100 * N_NATIONS)
+    # Every chained CTE is AS MATERIALIZED: r{i} references r{i-1} twice
+    # (dangling-mass sum + contribution join), so inlined CTEs re-evaluate
+    # the whole chain — 2^iters blowup (observed: 4 minutes at sf0.001
+    # before materialization, seconds after). Same fix as the Spark side's
+    # per-iteration localCheckpoint.
+    parts = [
+        f"edges AS MATERIALIZED ({_EDGES_SQL})",
+        f"nodes AS MATERIALIZED ({_NODES_SQL})",
+        "outw AS (SELECT src, SUM(w) AS tw FROM edges GROUP BY src)",
+        "ew AS MATERIALIZED (SELECT e.src, e.dst, e.w, o.tw"
+        " FROM edges e JOIN outw o ON e.src = o.src)",
+        f"r0 AS MATERIALIZED (SELECT node,"
+        f" CAST({scale // N_NATIONS} AS BIGINT) AS r FROM nodes)",
+    ]
+    parts.append("srcs AS MATERIALIZED (SELECT DISTINCT src FROM ew)")
+    for i in range(1, PAGERANK_ITERS + 1):
+        parts.append(
+            f"""d{i} AS MATERIALIZED (
+  SELECT COALESCE(SUM(r), 0) AS d FROM r{i - 1}
+  WHERE node NOT IN (SELECT src FROM srcs))"""
+        )
+        parts.append(
+            f"""r{i} AS MATERIALIZED (
+  SELECT n.node,
+         CAST({base} + ({damping_pct} * (COALESCE(s.c, 0)
+              + (SELECT d FROM d{i}) // {N_NATIONS})) // 100
+              AS BIGINT) AS r
+  FROM nodes n LEFT JOIN (
+    SELECT e.dst AS node, SUM((p.r * e.w) // e.tw) AS c
+    FROM r{i - 1} p JOIN ew e ON p.node = e.src
+    GROUP BY e.dst) s ON n.node = s.node)"""
+        )
+    return "WITH " + ",\n".join(parts)
+
+
 ORACLE: dict[str, str] = {
-    "pagerank_nations": pagerank_unrolled_sql(
-        _EDGES_SQL, _NODES_SQL, n_nodes=N_NATIONS, iters=PR_ITERS
-    )
+    "pagerank_nations": _pagerank_nations_sql()
     + f"""
 SELECT node AS nation_key, n_name AS nation_name, r AS rank_scaled
-FROM r{PR_ITERS} JOIN nation ON node = n_nationkey""",
+FROM r{PAGERANK_ITERS} JOIN nation ON node = n_nationkey""",
 }
 
 QUERIES = {
@@ -299,9 +339,6 @@ ORACLE["dedup_kcore"] = _kcore_sql()
 QUERIES["dedup_kcore"] = q_dedup_kcore
 
 
-LPA_ROUNDS = 3
-
-
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection on the MinHash near-dup graph: 3 synchronous
     label-propagation sweeps (deterministic min-tie-break variant) —
@@ -316,7 +353,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pairs = q_dedup_minhash(spark, sf_dir).select("id_a", "id_b")
-    return label_propagation(pairs, rounds=LPA_ROUNDS)
+    return label_propagation(pairs)
 
 
 def _lpa_sql() -> str:
@@ -327,7 +364,7 @@ def _lpa_sql() -> str:
         _MINHASH_SQL,
     )
 
-    return label_propagation_unrolled_sql(_MINHASH_SQL, rounds=LPA_ROUNDS)
+    return label_propagation_unrolled_sql(_MINHASH_SQL)
 
 
 ORACLE["label_propagation"] = _lpa_sql()

@@ -9,13 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.similarity import (
+    HARDNEG_TOPK,
     hard_negatives_topk,
 )
-from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    EMB_DIMS,
-    _cos_sql,
-)
+from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _cos_sql
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
 QUERIES: dict = {}
@@ -23,7 +22,6 @@ ORACLE: dict = {}
 
 #: the mining batch: bounded by construction (it broadcasts).
 HARDNEG_QUERY_MAX_ID = 8
-HARDNEG_TOPK = 10
 
 
 def q_hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,7 +33,6 @@ def q_hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hard_negatives_topk(
         emb,
         emb.filter(F.col("vec_id") < HARDNEG_QUERY_MAX_ID),
-        k=HARDNEG_TOPK,
         dims=EMB_DIMS,
     )
 

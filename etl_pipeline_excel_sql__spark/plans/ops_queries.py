@@ -40,9 +40,6 @@ from etl_pipeline_excel_sql__spark.operators.ordering import (
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 
-#: DuckDB twin of md5_hash60 (cited in functions/hashing.py docstring).
-_H60 = H60_SQL
-
 #: documents kept per language by sample_fixed_per_group.
 FIXED_K = 50
 
@@ -129,7 +126,7 @@ ORACLE: dict[str, str] = {
     "table_fingerprint": f"""
         WITH rows_h AS (
           SELECT l_returnflag,
-                 {_H60.format(x=_fp_expr("VARCHAR"))} AS h
+                 {H60_SQL.format(x=_fp_expr("VARCHAR"))} AS h
           FROM lineitem
         )
         SELECT l_returnflag, COUNT(*) AS n_rows,
@@ -142,7 +139,7 @@ ORACLE: dict[str, str] = {
         FROM (
           SELECT doc_id, lang, n_chars,
                  row_number() OVER (PARTITION BY lang ORDER BY
-                   {_H60.format(x="'fixedk:' || CAST(doc_id AS VARCHAR)")},
+                   {H60_SQL.format(x="'fixedk:' || CAST(doc_id AS VARCHAR)")},
                    doc_id) AS rank_in_lang
           FROM documents
         )

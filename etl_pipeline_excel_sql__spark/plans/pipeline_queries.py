@@ -18,6 +18,7 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
     rolling_fingerprint,
 )
 from etl_pipeline_excel_sql__spark.functions.text import (
+    WS_TOKENS_SQL,
     bpe_token_count,
     has_ws_tokens,
     lang_id,
@@ -25,8 +26,13 @@ from etl_pipeline_excel_sql__spark.functions.text import (
     ws_token_count,
     ws_tokens,
 )
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.dedup import (
+    MINHASH_BAND_ROWS,
+    MINHASH_K,
     MINHASH_PRIME,
+    MINHASH_SHINGLE_N,
+    NGRAM_BOTTOM_K,
     affine_consts,
     exact_dedup,
     jaccard_prefix_pairs,
@@ -46,6 +52,8 @@ from etl_pipeline_excel_sql__spark.operators.multimodal import (
     extract_features,
 )
 from etl_pipeline_excel_sql__spark.operators.similarity import (
+    IVF_ITERS,
+    IVF_NCELLS,
     brute_force_topk,
     cosine_neardup_pairs,
     ivf_topk,
@@ -58,9 +66,6 @@ from etl_pipeline_excel_sql__spark.sources.registry import (
 
 # --- Spark queries ----------------------------------------------------------
 
-MINHASH_K = 12
-MINHASH_BAND_ROWS = 2
-
 #: DuckDB twin of ``operators.dedup._minhash_band_expr``'s bucket —
 #: the comma-joined band slice of the signature. Generated from
 #: ``range(MINHASH_BAND_ROWS)`` exactly as the Spark side generates its
@@ -71,9 +76,7 @@ _BAND_BUCKET_SQL = " || ',' || ".join(
     for r in range(MINHASH_BAND_ROWS)
 )
 MINHASH_THRESHOLD = 0.1
-MINHASH_SHINGLE_N = 3
 NGRAM_THRESHOLD = 0.05
-NGRAM_BOTTOM_K = 2
 CONTAINMENT_THRESHOLD = 0.2
 SRP_NEARDUP_BITS = 6
 SRP_NEARDUP_TABLES = 3
@@ -111,10 +114,7 @@ _NV_CTE = "nv AS (SELECT {min_bits} + {ladder} AS bits FROM (SELECT COUNT(*) AS 
         for k in range(SRP_NEARDUP_BITS + 1, SRP_NEARDUP_MAX_BITS + 1)
     ),
 )
-IVF_NCELLS = 8
-IVF_ITERS = 2
 COSINE_THRESHOLD = 0.3
-EMB_DIMS = 64
 
 
 def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,9 +158,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(
         load_table(spark, "documents", sf_dir),
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     )
 
@@ -173,7 +170,6 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         load_table(spark, "documents", sf_dir),
         threshold=NGRAM_THRESHOLD,
-        bottom_k=NGRAM_BOTTOM_K,
     )
 
 
@@ -192,7 +188,6 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return jaccard_prefix_pairs(
         load_table(spark, "documents", sf_dir),
-        shingle_n=3,
         threshold_num=PREFIX_JACCARD_NUM,
         threshold_den=PREFIX_JACCARD_DEN,
     )
@@ -204,7 +199,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_containment_pairs(
         load_table(spark, "documents", sf_dir),
         threshold=CONTAINMENT_THRESHOLD,
-        bottom_k=NGRAM_BOTTOM_K,
     )
 
 
@@ -236,15 +230,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF over TRAINED k-means cells (Lloyd rounds as DataFrame ops);
     the oracle unrolls the identical deterministic rounds in SQL."""
     emb = load_table(spark, "embeddings", sf_dir)
-    return ivf_topk_trained(
-        emb,
-        emb.filter(F.col("vec_id") < 5),
-        k=5,
-        ncells=IVF_NCELLS,
-        iters=IVF_ITERS,
-        dims=EMB_DIMS,
-    )
-
+    return ivf_topk_trained(emb, emb.filter(F.col("vec_id") < 5), k=5)
 
 
 def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,7 +284,6 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- DuckDB oracle SQL ------------------------------------------------------
 
-_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
 # derived from the canonical template (placeholder renamed to {e} to
 # match this module's f-string convention)
 _HASH60 = H60_SQL.replace("{x}", "{e}")
@@ -344,7 +329,7 @@ def _shingle_sql(n: int) -> str:
 _MINHASH_SQL = f"""
 WITH base AS (
   SELECT doc_id, {_shingle_sql(MINHASH_SHINGLE_N)} AS sh
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 ), hashed AS (
   SELECT doc_id, sh,
@@ -382,7 +367,7 @@ SELECT doc_id,
   )) AS BIGINT) AS simhash
 FROM (
   SELECT doc_id,
-         list_transform({_TOKS}, t -> {_HASH60.format(e='t')}) AS hs
+         list_transform({WS_TOKENS_SQL}, t -> {_HASH60.format(e='t')}) AS hs
   FROM documents
 )
 """
@@ -390,7 +375,7 @@ FROM (
 _NGRAM_SQL = f"""
 WITH base AS (
   SELECT doc_id, {_shingle_sql(3)} AS sh
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 ), keys AS (
   SELECT doc_id, UNNEST(
@@ -417,7 +402,7 @@ _P, _Q = PREFIX_JACCARD_NUM, PREFIX_JACCARD_DEN
 _JACCARD_PREFIX_SQL = f"""
 WITH base AS (
   SELECT doc_id, {_shingle_sql(3)} AS sh
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 ), hr AS (
   SELECT DISTINCT doc_id, h FROM (
@@ -459,7 +444,7 @@ WHERE inter * {_P + _Q} >= {_P} * (sa.sz + sb.sz)
 _CONTAINMENT_SQL = f"""
 WITH base AS (
   SELECT doc_id, {_shingle_sql(3)} AS sh
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 ), hashes AS (
   SELECT DISTINCT doc_id,
@@ -626,7 +611,7 @@ _ANN_IVF_SQL = _ivf_trained_sql(
 ORACLE: dict[str, str] = {
     "text_token_count": f"""
         SELECT doc_id,
-          CAST(len({_TOKS}) AS BIGINT) AS n_ws_tokens,
+          CAST(len({WS_TOKENS_SQL}) AS BIGINT) AS n_ws_tokens,
           CAST(len(regexp_extract_all(text, '\\w+|[^\\w\\s]')) AS BIGINT)
             AS n_bpe_tokens
         FROM documents""",
@@ -641,7 +626,7 @@ ORACLE: dict[str, str] = {
             / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
           CAST({_sw_hits('en')} AS DOUBLE)
             / CAST(greatest(len(toks), 1) AS DOUBLE) AS stopword_ratio
-        FROM (SELECT doc_id, text, {_TOKS} AS toks FROM documents)""",
+        FROM (SELECT doc_id, text, {WS_TOKENS_SQL} AS toks FROM documents)""",
     "text_lang_id": f"""
         SELECT doc_id,
           CASE
@@ -655,13 +640,13 @@ ORACLE: dict[str, str] = {
           SELECT doc_id,
             {_sw_hits('de')} AS h_de, {_sw_hits('en')} AS h_en,
             {_sw_hits('es')} AS h_es, {_sw_hits('fr')} AS h_fr
-          FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+          FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
         )""",
     "text_fingerprint": f"""
         SELECT doc_id,
           list_reduce(
             list_prepend(CAST(0 AS BIGINT),
-              list_transform({_TOKS}, t -> {_HASH60.format(e='t')} % {_MOD})),
+              list_transform({WS_TOKENS_SQL}, t -> {_HASH60.format(e='t')} % {_MOD})),
             (a, b) -> (a * 31 + b) % {_MOD}) AS fingerprint
         FROM documents""",
     "dedup_exact": f"""
@@ -684,7 +669,7 @@ SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
 FROM (SELECT * FROM embeddings WHERE vec_id < 3) q
 CROSS JOIN (SELECT e.* FROM embeddings e
             JOIN (SELECT doc_id FROM documents
-                  WHERE list_contains({_TOKS}, 'spark')) d
+                  WHERE list_contains({WS_TOKENS_SQL}, 'spark')) d
               ON e.vec_id = d.doc_id) c
 WHERE c.vec_id <> q.vec_id
 QUALIFY rank <= 5""",
@@ -817,9 +802,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_lsh_pairs(
         load_table(spark, "documents", sf_dir),
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     )
     return connected_components(pairs)
@@ -858,9 +840,6 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_lsh_pairs(
         load_table(spark, "documents", sf_dir),
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     )
     return connected_components(pairs, algorithm="star")
@@ -943,9 +922,7 @@ def q_emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         gram_matrix,
     )
 
-    return gram_matrix(
-        load_table(spark, "embeddings", sf_dir), dims=EMB_DIMS
-    )
+    return gram_matrix(load_table(spark, "embeddings", sf_dir))
 
 
 ORACLE["emb_gram_matrix"] = f"""
@@ -1198,7 +1175,7 @@ QUERIES["text_scrub_pii"] = q_text_scrub_pii
 
 ORACLE["text_tfidf_topk"] = f"""
 WITH toks AS (
-  SELECT doc_id, UNNEST({_TOKS}) AS term FROM documents
+  SELECT doc_id, UNNEST({WS_TOKENS_SQL}) AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
 dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
@@ -1235,9 +1212,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs_cross(
         docs.filter(is_new),
         docs.filter(~is_new),
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     )
 
@@ -1250,7 +1224,7 @@ WITH base AS (
          CASE WHEN source IN ({_NEW_SRC_SQL}) THEN 'new' ELSE 'corpus' END
            AS side,
          {_shingle_sql(MINHASH_SHINGLE_N)} AS sh
-  FROM (SELECT doc_id, source, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, source, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 ), hashed AS (
   SELECT doc_id, side, sh,
@@ -1327,9 +1301,6 @@ def q_dedup_clusters_incremental(
         recomputes: cluster labels plus the MinHash band/set index."""
         base_pairs = minhash_lsh_pairs(
             corpus,
-            num_hashes=MINHASH_K,
-            band_rows=MINHASH_BAND_ROWS,
-            shingle_n=MINHASH_SHINGLE_N,
             threshold=MINHASH_THRESHOLD,
         ).select("id_a", "id_b")
         connected_components(base_pairs).select(
@@ -1340,12 +1311,7 @@ def q_dedup_clusters_incremental(
         # probe reads skinny index rows instead of re-scanning and
         # re-signaturing the corpus text on every evaluation — the one
         # non-incremental cost the r13 fused pass still paid.
-        mh_bands, mh_sets = minhash_index_tables(
-            corpus,
-            num_hashes=MINHASH_K,
-            band_rows=MINHASH_BAND_ROWS,
-            shingle_n=MINHASH_SHINGLE_N,
-        )
+        mh_bands, mh_sets = minhash_index_tables(corpus)
         mh_bands.write.mode("overwrite").parquet(f"{path}/mh_bands")
         mh_sets.write.mode("overwrite").parquet(f"{path}/mh_sets")
 
@@ -1356,9 +1322,6 @@ def q_dedup_clusters_incremental(
         new_docs,
         spark.read.parquet(f"{path}/mh_bands"),
         spark.read.parquet(f"{path}/mh_sets"),
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     ).select("id_a", "id_b")
     label_edges = state.select(
@@ -1446,7 +1409,6 @@ def _shared_jaccard_truth(
     def build(path: str) -> None:
         jaccard_prefix_pairs(
             docs,
-            shingle_n=MINHASH_SHINGLE_N,
             threshold_num=PREFIX_JACCARD_NUM,
             threshold_den=PREFIX_JACCARD_DEN,
             exploded=exploded,
@@ -1494,9 +1456,6 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         minhash_lsh_pairs(
             docs,
-            num_hashes=MINHASH_K,
-            band_rows=MINHASH_BAND_ROWS,
-            shingle_n=MINHASH_SHINGLE_N,
             threshold=MINHASH_THRESHOLD,
             exploded=exploded,
         )
@@ -1621,7 +1580,6 @@ def q_lsh_recall_audit_sampled(
     )
     truth = jaccard_prefix_pairs(
         sampled,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold_num=PREFIX_JACCARD_NUM,
         threshold_den=PREFIX_JACCARD_DEN,
         exploded=exploded,
@@ -1629,9 +1587,6 @@ def q_lsh_recall_audit_sampled(
     cand = (
         minhash_lsh_pairs(
             sampled,
-            num_hashes=MINHASH_K,
-            band_rows=MINHASH_BAND_ROWS,
-            shingle_n=MINHASH_SHINGLE_N,
             threshold=MINHASH_THRESHOLD,
             exploded=exploded,
         )
@@ -1658,7 +1613,7 @@ def q_lsh_recall_audit_sampled(
 #: the shared tokenized-docs source line in the two reused CTE chains;
 #: the sampled oracle swaps it for the sampled view (assert-guarded so
 #: a future edit to either chain can't silently miss the swap).
-_DOCS_TOKS_SRC = f"(SELECT doc_id, {_TOKS} AS toks FROM documents)"
+_DOCS_TOKS_SRC = f"(SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)"
 _SAMPLED_TOKS_SRC = "(SELECT doc_id, toks FROM lsr_sampled)"
 
 assert _MINHASH_SQL.count(_DOCS_TOKS_SRC) == 1
@@ -1880,7 +1835,7 @@ def _band_tuning_sql() -> str:
     sig_cte = f"""
 mh_base AS MATERIALIZED (
   SELECT doc_id, {_shingle_sql(MINHASH_SHINGLE_N)} AS sh
-  FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS toks FROM documents)
   WHERE len(toks) > 0
 ), mh_hashed AS (
   SELECT doc_id, sh,

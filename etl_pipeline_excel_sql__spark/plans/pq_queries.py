@@ -14,7 +14,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.pq import (
+    PQ_K,
+    ivfpq_residual_sql,
+    ivfpq_residual_topk,
+    ivfpq_sql,
+    ivfpq_topk,
     pq_adc_sql,
     pq_adc_topk,
     pq_codes_sql,
@@ -23,19 +29,10 @@ from etl_pipeline_excel_sql__spark.operators.pq import (
 )
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-PQ_M = 8  # subspaces (64 dims → 8-dim subvectors, one byte code each)
-PQ_NCODES = 16
-PQ_ITERS = 2
-PQ_K = 5
-EMB_DIMS = 64
-
 
 def _trained(spark: SparkSession, sf_dir: str):
     emb = load_table(spark, "embeddings", sf_dir)
-    cb = pq_train_codebooks(
-        emb, m=PQ_M, ncodes=PQ_NCODES, iters=PQ_ITERS, dims=EMB_DIMS
-    )
-    return emb, cb
+    return emb, pq_train_codebooks(emb)
 
 
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,7 +44,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb, cb = _trained(spark, sf_dir)
-    return pq_encode(emb, cb, m=PQ_M, dims=EMB_DIMS).withColumn(
+    return pq_encode(emb, cb).withColumn(
         "codes", F.array_join(F.col("codes").cast("array<string>"), " ")
     )
 
@@ -56,9 +53,9 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full PQ pipeline: train → encode → ADC top-k from codes alone
     (integer micro-unit distances; ties → lowest neighbor id)."""
     emb, cb = _trained(spark, sf_dir)
-    codes = pq_encode(emb, cb, m=PQ_M, dims=EMB_DIMS)
+    codes = pq_encode(emb, cb)
     queries = emb.filter("vec_id < 5")
-    return pq_adc_topk(codes, cb, queries, k=PQ_K, m=PQ_M, dims=EMB_DIMS)
+    return pq_adc_topk(codes, cb, queries, k=PQ_K)
 
 
 QUERIES = {
@@ -67,78 +64,32 @@ QUERIES = {
 }
 
 ORACLE = {
-    "pq_codes": pq_codes_sql(PQ_M, PQ_NCODES, PQ_ITERS, EMB_DIMS),
-    "pq_adc": pq_adc_sql(PQ_M, PQ_NCODES, PQ_ITERS, EMB_DIMS, PQ_K),
+    "pq_codes": pq_codes_sql(),
+    "pq_adc": pq_adc_sql(),
 }
-
-
-IVFPQ_NCELLS = 8
-IVFPQ_NPROBE = 2
 
 
 def q_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The billion-scale serving composition: L2 coarse cells prune,
     PQ-ADC ranks inside the probed cells (``operators/pq.ivfpq_topk``;
     raw-vector codes — the stated no-residual simplification)."""
-    from etl_pipeline_excel_sql__spark.operators.pq import ivfpq_topk
-
     emb = load_table(spark, "embeddings", sf_dir)
-    return ivfpq_topk(
-        emb,
-        emb.filter("vec_id < 5"),
-        ncells=IVFPQ_NCELLS,
-        nprobe=IVFPQ_NPROBE,
-        m=PQ_M,
-        ncodes=PQ_NCODES,
-        iters=PQ_ITERS,
-        k=PQ_K,
-        dims=EMB_DIMS,
-    )
-
-
-def _ivfpq_oracle() -> str:
-    from etl_pipeline_excel_sql__spark.operators.pq import ivfpq_sql
-
-    return ivfpq_sql(
-        IVFPQ_NCELLS, IVFPQ_NPROBE, PQ_M, PQ_NCODES, PQ_ITERS, EMB_DIMS, PQ_K
-    )
+    return ivfpq_topk(emb, emb.filter("vec_id < 5"), k=PQ_K)
 
 
 QUERIES["ivfpq_adc"] = q_ivfpq_adc
-ORACLE["ivfpq_adc"] = _ivfpq_oracle()
+ORACLE["ivfpq_adc"] = ivfpq_sql()
 
 
 def q_ivfpq_residual_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical IVFADC: PQ codes quantize the per-cell RESIDUALS, with
     cell-dependent query lookup tables (``ivfpq_residual_topk``)."""
-    from etl_pipeline_excel_sql__spark.operators.pq import (
-        ivfpq_residual_topk,
-    )
-
     emb = load_table(spark, "embeddings", sf_dir)
-    return ivfpq_residual_topk(
-        emb,
-        emb.filter("vec_id < 5"),
-        ncells=IVFPQ_NCELLS,
-        nprobe=IVFPQ_NPROBE,
-        m=PQ_M,
-        ncodes=PQ_NCODES,
-        iters=PQ_ITERS,
-        k=PQ_K,
-        dims=EMB_DIMS,
-    )
-
-
-def _ivfpq_residual_oracle() -> str:
-    from etl_pipeline_excel_sql__spark.operators.pq import ivfpq_residual_sql
-
-    return ivfpq_residual_sql(
-        IVFPQ_NCELLS, IVFPQ_NPROBE, PQ_M, PQ_NCODES, PQ_ITERS, EMB_DIMS, PQ_K
-    )
+    return ivfpq_residual_topk(emb, emb.filter("vec_id < 5"), k=PQ_K)
 
 
 QUERIES["ivfpq_residual_adc"] = q_ivfpq_residual_adc
-ORACLE["ivfpq_residual_adc"] = _ivfpq_residual_oracle()
+ORACLE["ivfpq_residual_adc"] = ivfpq_residual_sql()
 
 
 # --- SQ8 + exact rerank (round 10) --------------------------------------
@@ -168,7 +119,6 @@ def q_ann_sq8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < SQ8_QUERY_MAX_ID),
         k=SQ8_K,
         candidates=SQ8_CANDIDATES,
-        dims=EMB_DIMS,
     )
 
 

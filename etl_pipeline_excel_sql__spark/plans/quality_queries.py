@@ -22,6 +22,8 @@ from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
     q_ann_ivf_topk,
 )
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
+from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
+from etl_pipeline_excel_sql__spark.operators.winnow import winnow_stats_sql
 
 RECALL_K = 5
 
@@ -136,9 +138,6 @@ QUERIES["text_simpson_diversity"] = q_text_simpson_diversity
 
 # --- winnowing fingerprints (round 10b) ------------------------------------
 
-WINNOW_K = 8
-WINNOW_W = 4
-
 
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (SIGMOD'03 / MOSS) fingerprint summary per document:
@@ -152,20 +151,10 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-    return winnow_fingerprint_stats(
-        load_table(spark, "documents", sf_dir), k=WINNOW_K, w=WINNOW_W
-    )
+    return winnow_fingerprint_stats(load_table(spark, "documents", sf_dir))
 
 
-def _winnow_sql() -> str:
-    from etl_pipeline_excel_sql__spark.operators.winnow import (
-        winnow_stats_sql,
-    )
-
-    return winnow_stats_sql(k=WINNOW_K, w=WINNOW_W)
-
-
-ORACLE["winnow_fingerprint"] = _winnow_sql()
+ORACLE["winnow_fingerprint"] = winnow_stats_sql()
 QUERIES["winnow_fingerprint"] = q_winnow_fingerprint
 
 
@@ -232,10 +221,7 @@ def q_quality_domain_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_domain_rank_sql() -> str:
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        _STOP,
-        _TOKS,
-    )
+    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _STOP
 
     cases = " ".join(
         f"WHEN lang = '{lg}' THEN len(list_filter(toks,"
@@ -247,7 +233,7 @@ WITH scored AS (
   SELECT doc_id, lang,
          CAST((CASE {cases} ELSE 0 END) * 1000000
               // greatest(len(toks), 1) AS BIGINT) AS score_ppm
-  FROM (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, lang, {WS_TOKENS_SQL} AS toks FROM documents)
 )
 SELECT doc_id, lang, score_ppm,
        CAST(((row_number() OVER (PARTITION BY lang
@@ -385,10 +371,7 @@ def q_curation_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_budget_select_sql() -> str:
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        _STOP,
-        _TOKS,
-    )
+    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _STOP
 
     cases = " ".join(
         f"WHEN lang = '{lg}' THEN len(list_filter(toks,"
@@ -400,7 +383,7 @@ WITH scored AS (
   SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST((CASE {cases} ELSE 0 END) * 1000000
               // greatest(len(toks), 1) AS BIGINT) AS score
-  FROM (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, lang, {WS_TOKENS_SQL} AS toks FROM documents)
 ), ranked AS (
   SELECT doc_id, lang, n_tokens,
          CAST(((row_number() OVER (PARTITION BY lang
@@ -494,10 +477,7 @@ def q_quality_budget_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_tradeoff_sql() -> str:
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        _STOP,
-        _TOKS,
-    )
+    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _STOP
 
     cases = " ".join(
         f"WHEN lang = '{lg}' THEN len(list_filter(toks,"
@@ -510,7 +490,7 @@ WITH scored AS (
   SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST((CASE {cases} ELSE 0 END) * 1000000
               // greatest(len(toks), 1) AS BIGINT) AS score
-  FROM (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, lang, {WS_TOKENS_SQL} AS toks FROM documents)
 ), ranked AS (
   SELECT doc_id, lang, n_tokens,
          CAST(((row_number() OVER (PARTITION BY lang
@@ -626,10 +606,7 @@ def q_pareto_quality_length(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pareto_sql() -> str:
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        _STOP,
-        _TOKS,
-    )
+    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _STOP
 
     cases = " ".join(
         f"WHEN lang = '{lg}' THEN len(list_filter(toks,"
@@ -641,7 +618,7 @@ WITH scored AS (
   SELECT doc_id, lang, CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST((CASE {cases} ELSE 0 END) * 1000000
               // greatest(len(toks), 1) AS BIGINT) AS score_ppm
-  FROM (SELECT doc_id, lang, {_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, lang, {WS_TOKENS_SQL} AS toks FROM documents)
 ), grp AS (
   SELECT lang, score_ppm, MIN(n_tokens) AS gmin
   FROM scored GROUP BY lang, score_ppm

@@ -30,6 +30,9 @@ from etl_pipeline_excel_sql__spark.operators.retrieval import (
     BM25_B,
     BM25_K1,
     BM25_SCALE,
+    BM25_TOPK,
+    PRF_FB_DOCS,
+    PRF_FB_TERMS,
     RRF_K,
     RRF_SCALE,
     _rational_coeffs,
@@ -41,13 +44,11 @@ from etl_pipeline_excel_sql__spark.operators.retrieval import (
 )
 from etl_pipeline_excel_sql__spark.plans.spans_queries import _tok_sql
 from etl_pipeline_excel_sql__spark.operators.similarity import brute_force_topk
-from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    EMB_DIMS,
-    _cos_sql,
-    _TOKS,
-)
+from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _cos_sql
 from etl_pipeline_excel_sql__spark.sources.registry import built_dir, load_table
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
+from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -61,8 +62,6 @@ RETRIEVAL_QUERIES: list[tuple[int, list[str]]] = [
     (1, ["vector", "scan", "filter"]),
     (2, ["stream", "window", "agg"]),
 ]
-
-BM25_TOPK = 10
 
 
 def _query_terms_df(spark: SparkSession) -> DataFrame:
@@ -95,7 +94,7 @@ _C1, _C2, _C3, _C4 = _rational_coeffs(BM25_K1, BM25_B, BM25_SCALE)
 #: is one HUGEINT integer division — float-free, engine-build-proof.
 _BM25_CTES = f"""qt(query_id, term) AS (VALUES {_QT_VALUES}),
 toks AS MATERIALIZED (
-  SELECT doc_id, UNNEST({_TOKS}) AS term FROM documents
+  SELECT doc_id, UNNEST({WS_TOKENS_SQL}) AS term FROM documents
 ),
 tf AS MATERIALIZED (
   SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term
@@ -252,11 +251,6 @@ def _bm25_score_cte(qt: str, out: str) -> str:
 )"""
 
 
-#: PRF: feedback depth and expansion width (classic small Rocchio).
-PRF_FB_DOCS = 5
-PRF_FB_TERMS = 2
-
-
 def q_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-pass retrieval (round 10): BM25, expand each query with the
     2 most frequent new terms of its top-5 documents (pseudo-relevance
@@ -268,11 +262,7 @@ def q_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return bm25_prf_topk(
-        load_table(spark, "documents", sf_dir),
-        _query_terms_df(spark),
-        k=BM25_TOPK,
-        fb_docs=PRF_FB_DOCS,
-        fb_terms=PRF_FB_TERMS,
+        load_table(spark, "documents", sf_dir), _query_terms_df(spark)
     )
 
 
@@ -565,7 +555,7 @@ QUERIES["hybrid_rrf_topk"] = q_hybrid_rrf_topk
 ORACLE["rag_context_pipeline"] = f"""
 WITH {_HYBRID_CTES}
 SELECT h.query_id, h.doc_id, h.rrf_u, h.fused_rank,
-       array_to_string(list_slice({_TOKS}, 1, {RAG_SNIPPET_TOKENS}), ' ')
+       array_to_string(list_slice({WS_TOKENS_SQL}, 1, {RAG_SNIPPET_TOKENS}), ' ')
          AS snippet
 FROM hybrid h JOIN documents d ON d.doc_id = h.doc_id
 WHERE h.fused_rank <= {RAG_CONTEXTS_PER_QUERY}
@@ -643,7 +633,7 @@ def q_postings_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["postings_compression"] = f"""
 WITH postings AS (
   SELECT DISTINCT doc_id, term
-  FROM (SELECT doc_id, UNNEST({_TOKS}) AS term FROM documents)
+  FROM (SELECT doc_id, UNNEST({WS_TOKENS_SQL}) AS term FROM documents)
 ), gaps AS (
   SELECT term,
          COALESCE(doc_id - lag(doc_id) OVER (PARTITION BY term

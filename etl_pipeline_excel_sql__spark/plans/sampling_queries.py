@@ -35,7 +35,10 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
     H60_SQL,
     md5_hash60,
 )
-from etl_pipeline_excel_sql__spark.functions.text import ws_token_count
+from etl_pipeline_excel_sql__spark.functions.text import (
+    WS_TOKENS_SQL,
+    ws_token_count,
+)
 from etl_pipeline_excel_sql__spark.operators.bloom import (
     bloom_build,
     bloom_prefilter,
@@ -50,9 +53,6 @@ SAMPLE_RATE_OTHER_BP = 6000
 N_SHARDS = 16
 BUCKET_TOKENS = 16  # tokens per length band
 BATCH_DOCS = 8  # docs per batch within a band
-
-#: DuckDB twin of md5_hash60 (cited in functions/hashing.py docstring).
-_H60 = H60_SQL
 
 
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,9 +141,8 @@ def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_hx = _H60.format(x="'sample:' || CAST(doc_id AS VARCHAR)")
-_hs = _H60.format(x="'shard:' || CAST(doc_id AS VARCHAR)")
-_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
+_hx = H60_SQL.format(x="'sample:' || CAST(doc_id AS VARCHAR)")
+_hs = H60_SQL.format(x="'shard:' || CAST(doc_id AS VARCHAR)")
 
 #: Mixture recipe for the registry rows: weights normalize to exact
 #: binary fractions (0.5/0.25/0.25) so the oracle's float arithmetic is
@@ -297,7 +296,7 @@ ORACLE: dict[str, str] = {
         GROUP BY 1""",
     "curriculum_buckets": f"""
         WITH lens AS (
-          SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tokens
+          SELECT doc_id, CAST(len({WS_TOKENS_SQL}) AS BIGINT) AS n_tokens
           FROM documents
         )
         SELECT doc_id, n_tokens,
@@ -410,12 +409,10 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dsir_sql() -> str:
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _TOKS
-
     h = H60_SQL.format(x="bgr")
     return f"""
 WITH base AS (
-  SELECT doc_id, lang, {_TOKS} AS toks FROM documents
+  SELECT doc_id, lang, {WS_TOKENS_SQL} AS toks FROM documents
 ), bg AS (
   SELECT doc_id, lang, {h} % {DSIR_BUCKETS} AS bucket
   FROM (

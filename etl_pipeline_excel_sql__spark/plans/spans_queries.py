@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
 from etl_pipeline_excel_sql__spark.operators.spans import (
     contaminated_spans,
     duplicated_spans,
@@ -39,8 +40,6 @@ SPAN_K = 8
 #: corpus_queries.q_decontam_overlap (its BENCH_MOD).
 SPAN_BENCH_MOD = 37
 
-_TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
-
 
 def _tok_sql(src: str) -> str:
     """DuckDB positional tokens over ``src`` — zipped
@@ -50,7 +49,7 @@ def _tok_sql(src: str) -> str:
     (the same O(n·len) blowup the Spark side avoids via posexplode)."""
     return f"""
   SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tok
-  FROM (SELECT doc_id, {_TOKS} AS t FROM ({src}))"""
+  FROM (SELECT doc_id, {WS_TOKENS_SQL} AS t FROM ({src}))"""
 
 
 def _occ_sql(src: str) -> str:
@@ -139,7 +138,7 @@ covered AS MATERIALIZED (
   SELECT DISTINCT doc_id, pos + CAST(j AS BIGINT) AS pos
   FROM cut, UNNEST(range(0, {SPAN_K})) AS r(j)
 ), base AS MATERIALIZED (
-  SELECT doc_id, {_TOKS} AS t FROM documents
+  SELECT doc_id, {WS_TOKENS_SQL} AS t FROM documents
 ), tok AS MATERIALIZED ({_tok_sql("SELECT doc_id, text FROM documents")}
 ), kept AS MATERIALIZED (
   SELECT k.doc_id, COUNT(*) AS n_kept,
@@ -205,6 +204,8 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-gated; the trained id table is the bounded broadcast class.
     """
     from etl_pipeline_excel_sql__spark.operators.bpe import (
+        BPE_TRAIN_MERGES,
+        PACK_SEQ_LEN,
         bpe_doc_token_ids,
         bpe_train_merges_from_words,
         pack_lm_sequences,
@@ -212,9 +213,7 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_frequencies,
     )
     from etl_pipeline_excel_sql__spark.plans.analytics5_queries import (
-        BPE_TRAIN_MERGES,
         PACK_IDS_RANGE,
-        PACK_SEQ_LEN,
     )
 
     docs = load_table(spark, "documents", sf_dir)
@@ -240,10 +239,6 @@ def _curate_pack_sql() -> str:
     from etl_pipeline_excel_sql__spark.operators.bpe import (
         bpe_packed_sequences_unrolled_sql,
     )
-    from etl_pipeline_excel_sql__spark.plans.analytics5_queries import (
-        BPE_TRAIN_MERGES,
-        PACK_SEQ_LEN,
-    )
 
     prefix = (
         _TRIM_CTES
@@ -254,10 +249,7 @@ trimmed AS MATERIALIZED (
 )"""
     )
     return bpe_packed_sequences_unrolled_sql(
-        "SELECT doc_id, text FROM trimmed",
-        BPE_TRAIN_MERGES,
-        PACK_SEQ_LEN,
-        prefix_ctes=prefix,
+        "SELECT doc_id, text FROM trimmed", prefix_ctes=prefix
     )
 
 

@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
+from etl_pipeline_excel_sql__spark.operators.iterative import (
+    _persisted_rdd_ids,
+    _unpersist_rdd_ids,
+)
 
 #: ring-point salt prefix (matches the audit's `ring:s:v` convention)
 RING_POINT_SALT = "ring"
@@ -137,6 +141,7 @@ def reshard_add_shard(
     out = keepers.unionByName(incoming)
     # the rewrite reads the very files it overwrites — cut lineage to
     # materialized blocks first, or the overwrite truncates its own input
+    before_cut = _persisted_rdd_ids(spark)
     out = out.localCheckpoint(eager=True)
     n_moved = incoming.count()
     # Donors whose EVERY row moved contribute no keeper rows, so dynamic
@@ -158,6 +163,8 @@ def reshard_add_shard(
         out.write.mode("overwrite").partitionBy("shard").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        # the overwrite was the cut's last reader
+        _unpersist_rdd_ids(spark, _persisted_rdd_ids(spark) - before_cut)
     if emptied:
         jvm = spark.sparkContext._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()

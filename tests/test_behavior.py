@@ -80,7 +80,7 @@ def test_blocked_match_pairs_hand(spark):
     df = spark.createDataFrame(rows, ["k", "name", "b"])
     got = {
         (r.id_a, r.id_b): r.dist
-        for r in blocked_match_pairs(df, "k", "name", "b", max_dist=2).collect()
+        for r in blocked_match_pairs(df, "k", "name", "b").collect()
     }
     assert got == {(1, 2): 1}
 

@@ -50,11 +50,15 @@ def test_ring_sharded_write_and_reshard(spark, tmp_path):
     """Write-path contract: (1) files land under their ring-owner shard;
     (2) adding a shard moves ~1/(N+1) of rows, ALL to the new shard;
     (3) rows conserve exactly across the reshard; (4) partitions that
-    lost no rows are not rewritten."""
+    lost no rows are not rewritten; (5) the reshard leaves no persisted
+    blocks behind."""
     import os
 
     from pyspark.sql import functions as F
 
+    from etl_pipeline_excel_sql__spark.operators.iterative import (
+        _persisted_rdd_ids,
+    )
     from etl_pipeline_excel_sql__spark.plans.ops_queries import (
         RING_SPACE,
         SHARD_N,
@@ -87,7 +91,9 @@ def test_ring_sharded_write_and_reshard(spark, tmp_path):
                 if f.endswith(".parquet")
             }
 
+    persisted = _persisted_rdd_ids(spark)
     n_moved = reshard_add_shard(spark, path, SHARD_N, SHARD_VNODES, RING_SPACE)
+    assert _persisted_rdd_ids(spark) == persisted
     after = spark.read.parquet(path)
     rows_after = {
         r.doc_id: (int(r.shard), r.payload)

@@ -62,7 +62,7 @@ def test_cdc_matches_python_transcription(spark):
         "doc_id LONG, text STRING",
     )
     got: dict = {}
-    for r in cdc_chunk_rows(df, divisor=CDC_DIVISOR).collect():
+    for r in cdc_chunk_rows(df).collect():
         got.setdefault(r.doc_id, {})[r.chunk_no] = (
             r.pos0,
             r.n_toks,

@@ -2,9 +2,9 @@
 
 from __future__ import annotations
 
+from etl_pipeline_excel_sql__spark.operators.similarity import IVF_NCELLS
 from etl_pipeline_excel_sql__spark.plans.clusterbal_queries import (
     CB_K,
-    CB_NCELLS,
     q_cluster_balanced_sample,
 )
 
@@ -15,7 +15,7 @@ def test_quota_and_balance(spark, sf_dir):
     by_cell: dict[int, list] = {}
     for r in rows:
         by_cell.setdefault(r.cell, []).append(r)
-    assert len(by_cell) <= CB_NCELLS
+    assert len(by_cell) <= IVF_NCELLS
     for cell, kept in by_cell.items():
         # quota respected; small cells keep everything
         assert len(kept) == min(CB_K, kept[0].cell_size), cell

@@ -96,9 +96,6 @@ def test_dedup_incremental_equals_filtered_self_join(spark, sf_dir):
         minhash_lsh_pairs,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        MINHASH_BAND_ROWS,
-        MINHASH_K,
-        MINHASH_SHINGLE_N,
         MINHASH_THRESHOLD,
         NEW_SOURCES,
         q_dedup_incremental,
@@ -118,9 +115,6 @@ def test_dedup_incremental_equals_filtered_self_join(spark, sf_dir):
     }
     allp = minhash_lsh_pairs(
         docs,
-        num_hashes=MINHASH_K,
-        band_rows=MINHASH_BAND_ROWS,
-        shingle_n=MINHASH_SHINGLE_N,
         threshold=MINHASH_THRESHOLD,
     ).collect()
     want = []
@@ -262,7 +256,7 @@ def test_bpe_encode_applies_merges_in_order(spark):
 
     vocab = {
         r.subword: r.n_occurrences
-        for r in bpe_subword_vocab(df, merges, top_k=50).collect()
+        for r in bpe_subword_vocab(df, merges).collect()
     }
     want: dict[str, int] = {}
     for w, f in words.items():

@@ -103,19 +103,20 @@ def test_caller_owned_truncators_allow_interleaved_results(spark, sf_dir):
     runs (through the shared default truncator, call 2 would retire
     call 1's blocks and this read would fail block-not-found)."""
     from etl_pipeline_excel_sql__spark.operators.similarity import (
+        IVF_NCELLS,
         kmeans_train_assign,
     )
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
     t1, t2 = LineageTruncator(spark), LineageTruncator(spark)
-    r1 = kmeans_train_assign(emb.limit(60), ncells=4, iters=2, truncator=t1)
-    r2 = kmeans_train_assign(emb.limit(90), ncells=4, iters=2, truncator=t2)
+    r1 = kmeans_train_assign(emb.limit(60), truncator=t1)
+    r2 = kmeans_train_assign(emb.limit(90), truncator=t2)
     # Interleaved reads of BOTH results — r1 first ran, r2 truncated after.
     assert r2.count() == 90
     assert r1.count() == 60  # would raise via a shared truncator
     # And the assignments themselves differ (different corpora).
-    assert r1.select("cell").distinct().count() <= 4
+    assert r1.select("cell").distinct().count() <= IVF_NCELLS
 
 
 def test_caller_owned_truncator_interleaves_triangles(spark):

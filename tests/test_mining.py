@@ -27,7 +27,7 @@ def test_hard_negatives_exclude_same_label(spark):
         ],
     )
     rows = hard_negatives_topk(
-        corpus, corpus.filter("vec_id = 0"), k=10, dims=2
+        corpus, corpus.filter("vec_id = 0"), dims=2
     ).collect()
     got = [(r.neighbor_id, r.rank) for r in sorted(rows, key=lambda r: r.rank)]
     assert got == [(2, 1), (3, 2)]  # 1 excluded despite top similarity

@@ -22,12 +22,12 @@ def test_pq_codebooks_round_trip_drives_identical_codes(
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
-    cb = pq_train_codebooks(emb, m=8, ncodes=16, iters=2, dims=64)
+    cb = pq_train_codebooks(emb)
     path = str(tmp_path / "codebooks")
     save_artifact(cb, path)
     cb2 = load_artifact(spark, path, cb.schema)
-    a = {r.vec_id: r.codes for r in pq_encode(emb, cb, m=8, dims=64).collect()}
-    b = {r.vec_id: r.codes for r in pq_encode(emb, cb2, m=8, dims=64).collect()}
+    a = {r.vec_id: r.codes for r in pq_encode(emb, cb).collect()}
+    b = {r.vec_id: r.codes for r in pq_encode(emb, cb2).collect()}
     assert a == b
 
 

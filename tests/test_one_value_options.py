@@ -14,21 +14,32 @@ for the any-default rule):
   passes whatever values that function receives;
 * a literal argument passes its value, so a literal equal to the default
   sets nothing;
-* any other argument, ``*args`` or ``**kwargs`` counts as every value.
+* a named constant passes its value: an UPPER_CASE name assigned once at
+  module level in a package module, read directly or through
+  ``from <package module> import NAME [as ALIAS]``, or ``+ - * / // %``
+  arithmetic over such names and literals. Defaults resolve the same
+  way;
+* any other argument counts as every value: a name that a parameter,
+  local assignment, loop target or import from outside the package
+  binds, any other expression, ``*args`` or ``**kwargs``.
 
 The same resolver checks two more rules. A required parameter of a
 public function called outside ``tests/`` that every call, tests
-included, passes one literal is a constant too. A keyword option that
+included, passes one value is a constant too. A keyword option that
 only tests set is listed with its reason, so a new one is a decision.
 
-One rule outside the census: a ``LineageTruncator`` that is constructed and
-``.truncate``d in one expression has no prior cut to retire, so the
-call is a plain ``localCheckpoint(eager=True)``.
+Two rules outside the census: an UPPER_CASE name is assigned at module
+level in one package module only, so a constant is said once; and a
+``LineageTruncator`` that is constructed and ``.truncate``d in one
+expression has no prior cut to retire, so the call is a plain
+``localCheckpoint(eager=True)``.
 """
 
 from __future__ import annotations
 
 import ast
+import operator
+import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -69,28 +80,43 @@ KEPT_UNSET = {
 }
 
 _TEST_SEAM = "a test drives a path the registry's fixed inputs never reach"
+_SMALL_SPANS = "tests replay a naive transcription on short texts at k = 2-3"
+_MARGIN_REFERENCE = (
+    "tests replay a Python reference on hand-built 4-dim vectors with "
+    "every pair a candidate"
+)
 
 #: Keyword options that only tests set, with the reason they stay.
 SET_ONLY_BY_TESTS = {
     "bpe_train_merges_from_words.stats": (
         "out-parameter: tests read the driver round count to pin job scaling"
     ),
-    "cdc_chunk_rows.divisor": "tests pin the chunk-boundary parity contract",
     "connected_components.checkpoint_dir": _CHECKPOINT_DIR,
+    "contaminated_spans.k": _SMALL_SPANS,
     "connected_components.propagate_rounds": _TEST_SEAM,
     "download_pipeline.skip_cols": (
         "reference sheet layout; tests pin a different skip list"
     ),
+    "duplicated_spans.k": _SMALL_SPANS,
     "get_session.master": "deployment setting; tests build a small session",
     "get_session.shuffle_partitions": (
         "deployment setting; tests build a small session"
     ),
+    "ivf_topk.dims": "tests probe hand-built 4-dim vectors",
     "ivf_topk.nprobe": _TEST_SEAM,
     "kcore_membership.max_iters": "tests pin the non-convergence error",
     "kmeans_train_assign.truncator": _CALLER_SLOT,
+    "label_propagation.rounds": (
+        "tests pin single sweeps and convergence on hand-built graphs"
+    ),
+    "margin_topk.candidates": _MARGIN_REFERENCE,
+    "margin_topk.dims": _MARGIN_REFERENCE,
+    "margin_topk.k": _MARGIN_REFERENCE,
+    "margin_topk.k_nn": _MARGIN_REFERENCE,
     "minhash_lsh_pairs.cache": _CALLER_SLOT,
     "pagerank_integer.checkpoint_dir": _CHECKPOINT_DIR,
     "pagerank_integer.damping_pct": _TEST_SEAM,
+    "pagerank_integer.iters": "tests pin one hand-computed iteration",
     "pagerank_integer.scale": _TEST_SEAM,
     "pagerank_integer.truncate_lineage": KEPT["pagerank_integer.truncate_lineage"],
     "reconcile_schema.manual_overrides": (
@@ -101,7 +127,12 @@ SET_ONLY_BY_TESTS = {
         "tests pin state expiry, which the bounded registry drain never hits"
     ),
     "salted_join.how": _TEST_SEAM,
+    "sq8_rerank_topk.candidates": (
+        "tests widen the candidate pass to all pairs to equal brute force"
+    ),
+    "sq8_rerank_topk.k": "tests compare against a brute-force top-5",
     "srp_candidate_stats.block_col": _TEST_SEAM,
+    "trim_duplicated_spans.k": _SMALL_SPANS,
     "triangle_participation.truncator": _CALLER_SLOT,
     "upload_pipeline.order_tiebreak": (
         "the reference Upload's row order; tests pin the tie-break"
@@ -118,7 +149,7 @@ SET_ONLY_BY_TESTS = {
     "zorder_key.bits": "tests pin the bit-width bounds",
 }
 
-#: Required parameters that every caller passes one literal, with the
+#: Required parameters that every caller passes one value, with the
 #: reason they stay.
 KEPT_REQUIRED = {
     "scd2_upsert.load_date": "per-run input data (the load date), not a setting",
@@ -136,69 +167,226 @@ def _trees(paths):
     return [(p, ast.parse(p.read_text(), str(p))) for p in paths]
 
 
-def _value(expr, fallback=ANY):
-    try:
-        return repr(ast.literal_eval(expr))
-    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
-        return fallback
+_UPPER = re.compile(r"_?[A-Z][A-Z0-9_]*")
+SCOPES = FUNCS + (ast.Lambda, ast.ClassDef)
+_OPS = {
+    ast.Add: operator.add,
+    ast.Sub: operator.sub,
+    ast.Mult: operator.mul,
+    ast.FloorDiv: operator.floordiv,
+    ast.Div: operator.truediv,
+    ast.Mod: operator.mod,
+    ast.USub: operator.neg,
+    ast.UAdd: operator.pos,
+}
 
 
-def _options(trees, keep, required: bool = False):
+def _module(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _bindings(scope) -> dict[str, list]:
+    """Name → what binds it directly in ``scope``: a ``NAME = value``
+    statement, an ``(ImportFrom, alias)`` pair, or any other binding node
+    (parameter, loop or comprehension target, nested definition, ...).
+    Names bound only inside nested scopes are not included."""
+    out = defaultdict(list)
+    if isinstance(scope, FUNCS + (ast.Lambda,)):
+        a = scope.args
+        for x in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]:
+            if x:
+                out[x.arg].append(x)
+        stack = list(scope.body if isinstance(scope, FUNCS) else [scope.body])
+    else:
+        stack = list(scope.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, SCOPES):
+            if not isinstance(node, ast.Lambda):
+                out[node.name].append(node)
+            continue
+        targets = ()
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign) and node.value:
+            targets = [node.target]
+        if len(targets) == 1 and isinstance(targets[0], ast.Name):
+            out[targets[0].id].append(node)
+            stack.append(node.value)
+            continue
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Load):
+            out[node.id].append(node)
+        elif isinstance(node, ast.ImportFrom):
+            for al in node.names:
+                out[al.asname or al.name].append((node, al))
+        elif isinstance(node, ast.Import):
+            for al in node.names:
+                out[(al.asname or al.name).split(".")[0]].append(node)
+        elif isinstance(node, (ast.Global, ast.Nonlocal)):
+            for n in node.names:
+                out[n].append(node)
+        elif isinstance(node, ast.ExceptHandler) and node.name:
+            out[node.name].append(node)
+        stack.extend(ast.iter_child_nodes(node))
+    return out
+
+
+class _Resolver:
+    """Resolves an argument expression to its value where that value is
+    fixed by the source: a literal, or an UPPER_CASE constant assigned once
+    at module level in a package module and reached by name, directly or
+    through ``from <package module> import NAME [as ALIAS]``. A name that
+    any enclosing function binds otherwise (parameter, local assignment,
+    loop target, import from outside the package) is any value."""
+
+    def __init__(self, trees):
+        self.modules = {}
+        self.globals = defaultdict(set)  # module → ``global`` names
+        for path, tree in trees:
+            if path.is_relative_to(PKG):
+                mod = _module(path)
+                self.modules[mod] = (tree, path.name == "__init__.py")
+                for node in ast.walk(tree):
+                    if isinstance(node, ast.Global):
+                        self.globals[mod].update(node.names)
+        self._bindings = {}
+
+    def bindings(self, scope):
+        key = id(scope)
+        if key not in self._bindings:
+            self._bindings[key] = _bindings(scope)
+        return self._bindings[key]
+
+    def _source(self, imp, module):
+        if not imp.level:
+            return imp.module
+        _, is_pkg = self.modules.get(module, (None, False))
+        parts = module.split(".")
+        base = parts if is_pkg else parts[:-1]
+        base = base[: len(base) - (imp.level - 1)]
+        return ".".join(base + ([imp.module] if imp.module else []))
+
+    def constant(self, module, name, seen=()):
+        """The value of ``module``'s module-level constant ``name``."""
+        if module not in self.modules or (module, name) in seen:
+            raise LookupError(name)
+        tree = self.modules[module][0]
+        return self._lookup(name, (tree,), module, seen + ((module, name),))
+
+    def _lookup(self, name, chain, module, seen):
+        for scope in reversed(chain):
+            found = self.bindings(scope).get(name)
+            if not found:
+                continue
+            if len(found) == 1 and name not in self.globals.get(module, ()):
+                node = found[0]
+                if isinstance(node, tuple):
+                    imp, al = node
+                    src = self._source(imp, module)
+                    if (
+                        src
+                        and src.split(".")[0] == PKG.name
+                        and _UPPER.fullmatch(al.name)
+                    ):
+                        return self.constant(src, al.name, seen)
+                elif (
+                    isinstance(scope, ast.Module)
+                    and isinstance(node, (ast.Assign, ast.AnnAssign))
+                    and _UPPER.fullmatch(name)
+                    and module in self.modules
+                ):
+                    return self._eval(node.value, chain[:1], module, seen)
+            raise LookupError(name)
+        raise LookupError(name)
+
+    def _eval(self, expr, chain, module, seen):
+        def ev(e):
+            return self._eval(e, chain, module, seen)
+
+        if isinstance(expr, ast.Name):
+            return self._lookup(expr.id, chain, module, seen)
+        if isinstance(expr, (ast.Tuple, ast.List, ast.Set)):
+            kind = {ast.Tuple: tuple, ast.List: list, ast.Set: set}
+            return kind[type(expr)](ev(e) for e in expr.elts)
+        if isinstance(expr, ast.Dict) and None not in expr.keys:
+            return {ev(k): ev(v) for k, v in zip(expr.keys, expr.values)}
+        if isinstance(expr, ast.BinOp) and type(expr.op) in _OPS:
+            return _OPS[type(expr.op)](ev(expr.left), ev(expr.right))
+        if isinstance(expr, ast.UnaryOp) and type(expr.op) in _OPS:
+            return _OPS[type(expr.op)](ev(expr.operand))
+        return ast.literal_eval(expr)
+
+    def value(self, expr, chain, module, fallback=ANY):
+        """``repr`` of ``expr``'s value where the source fixes it, else
+        ``fallback``."""
+        try:
+            return repr(self._eval(expr, chain, module, ()))
+        except (
+            ValueError, TypeError, SyntaxError, LookupError,
+            ArithmeticError, MemoryError, RecursionError,
+        ):
+            return fallback
+
+
+def _walk(trees):
+    """Every function definition, with the scopes around it, and every
+    call, with its enclosing function's name and parameters and the
+    scopes around it."""
+    defs, calls = [], []
+
+    def visit(node, chain, module, encl, params):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name:
+                calls.append((name, node, params, encl, chain, module))
+        if isinstance(node, FUNCS):
+            defs.append((node, chain, module))
+            a = node.args
+            encl = node.name
+            params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        if isinstance(node, SCOPES):
+            chain = chain + (node,)
+        for child in ast.iter_child_nodes(node):
+            visit(child, chain, module, encl, params)
+
+    for path, tree in trees:
+        visit(tree, (tree,), _module(path), None, frozenset())
+    return defs, calls
+
+
+def _options(defs, resolver, keep, required: bool = False):
     """(function name, option) → (position or None, default) for every
     defaulted parameter of a package function for which
     ``keep(function name, default)`` holds. With ``required``, the
     undefaulted parameters instead, each with ``ANY`` as its default, so
     a call that omits one counts as any value."""
     opts = {}
-    for path, tree in trees:
-        if not path.is_relative_to(PKG):
+    for fn, chain, module in defs:
+        if module not in resolver.modules:
             continue
-        for fn in ast.walk(tree):
-            if not isinstance(fn, FUNCS):
-                continue
-            a = fn.args
-            pos = a.posonlyargs + a.args
-            skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
-            n_req = len(pos) - len(a.defaults)
-            if required:
-                pairs = [(x, None) for x in pos[skip:n_req]]
-                pairs += [
-                    (k, None) for k, d in zip(a.kwonlyargs, a.kw_defaults)
-                    if d is None
-                ]
-            else:
-                pairs = list(zip(pos[n_req:], a.defaults))
-                pairs += [
-                    (k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d
-                ]
-            for arg, d in pairs:
-                if keep(fn.name, d):
-                    i = pos.index(arg) - skip if arg in pos else None
-                    dflt = ANY if d is None else _value(d, ast.dump(d))
-                    opts[(fn.name, arg.arg)] = (i, dflt)
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+        n_req = len(pos) - len(a.defaults)
+        if required:
+            pairs = [(x, None) for x in pos[skip:n_req]]
+            pairs += [
+                (k, None) for k, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is None
+            ]
+        else:
+            pairs = list(zip(pos[n_req:], a.defaults))
+            pairs += [(k, d) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+        for arg, d in pairs:
+            if keep(fn.name, d):
+                i = pos.index(arg) - skip if arg in pos else None
+                dflt = ANY if d is None else resolver.value(
+                    d, chain, module, ast.dump(d)
+                )
+                opts[(fn.name, arg.arg)] = (i, dflt)
     return opts
-
-
-def _calls(trees):
-    """Every call with its enclosing function's name and parameters."""
-    out = []
-
-    def visit(node, encl, params):
-        if isinstance(node, ast.Call):
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name:
-                out.append((name, node, params, encl))
-        if isinstance(node, FUNCS):
-            a = node.args
-            encl = node.name
-            params = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
-        for child in ast.iter_child_nodes(node):
-            visit(child, encl, params)
-
-    for _, tree in trees:
-        visit(tree, None, frozenset())
-    return out
 
 
 def _census(
@@ -206,15 +394,17 @@ def _census(
 ) -> dict[str, tuple[str, set]]:
     """``"function.option"`` → (its default, the values its callers pass)."""
     trees = _trees(_caller_sources(tests))
-    opts = _options(trees, keep, required)
+    resolver = _Resolver(trees)
+    defs, calls = _walk(trees)
+    opts = _options(defs, resolver, keep, required)
     by_name = defaultdict(list)
-    for name, call, params, encl in _calls(trees):
-        by_name[name].append((call, params, encl))
+    for name, call, params, encl, chain, module in calls:
+        by_name[name].append((call, params, encl, chain, module))
 
     values: dict[tuple, set] = {k: set() for k in opts}
     forwards = defaultdict(set)  # (fn, opt) → enclosing (fn, opt) it forwards
     for (fn, opt), (pos, default) in opts.items():
-        for call, params, encl in by_name.get(fn, []):
+        for call, params, encl, chain, module in by_name.get(fn, []):
             kw = {k.arg: k.value for k in call.keywords}
             if None in kw or any(isinstance(a, ast.Starred) for a in call.args):
                 values[(fn, opt)].add(ANY)
@@ -229,7 +419,7 @@ def _census(
             if isinstance(expr, ast.Name) and expr.id in params:
                 forwards[(fn, opt)].add((encl, expr.id))
             else:
-                values[(fn, opt)].add(_value(expr))
+                values[(fn, opt)].add(resolver.value(expr, chain, module))
     changed = True
     while changed:
         changed = False
@@ -298,6 +488,86 @@ def test_every_required_parameter_takes_two_values():
     )
     # a stale KEPT_REQUIRED entry fails too
     assert one_value == sorted(KEPT_REQUIRED), (len(one_value), one_value)
+
+
+_SCOPING_DEFS = """
+SIG = 12
+"""
+
+_SCOPING_USES = """
+from etl_pipeline_excel_sql__spark.scoping_defs import SIG as ALIAS
+from os import SEEK_END
+
+ROUNDS = 3
+LIMIT = 5
+SHADOWED = 4
+STEP = 2
+
+
+def caller(LIMIT):
+    SHADOWED = LIMIT + 1
+    for STEP in range(2):
+        probe(
+            defined=ROUNDS,
+            aliased=ALIAS,
+            parameter=LIMIT,
+            shadowed=SHADOWED,
+            loop=STEP,
+            outside=SEEK_END,
+        )
+"""
+
+
+def test_resolver_scoping():
+    """Module constants and aliased package imports resolve; a name that
+    a parameter, a local assignment or a loop binds, or that comes from
+    outside the package, stays any value even where a module constant
+    of the same name exists."""
+    trees = [
+        (PKG / "scoping_defs.py", ast.parse(_SCOPING_DEFS)),
+        (PKG / "scoping_uses.py", ast.parse(_SCOPING_USES)),
+    ]
+    resolver = _Resolver(trees)
+    _, calls = _walk(trees)
+    ((call, chain, module),) = [
+        (c, ch, m) for name, c, _, _, ch, m in calls if name == "probe"
+    ]
+    got = {
+        k.arg: resolver.value(k.value, chain, module) for k in call.keywords
+    }
+    assert got == {
+        "defined": "3",
+        "aliased": "12",
+        "parameter": ANY,
+        "shadowed": ANY,
+        "loop": ANY,
+        "outside": ANY,
+    }
+
+
+#: Module-level names every registry module defines for itself.
+PER_MODULE = {"QUERIES", "ORACLE"}
+
+
+def test_no_constant_is_defined_in_two_modules():
+    """An UPPER_CASE name assigned at module level in two package modules
+    is one constant said twice (or two constants that read as one)."""
+    where = defaultdict(set)
+    for path, tree in _trees(sorted(PKG.rglob("*.py"))):
+        for node in tree.body:
+            targets = getattr(node, "targets", None) or [
+                getattr(node, "target", None)
+            ]
+            for t in targets:
+                for n in ast.walk(t) if t else ():
+                    if isinstance(n, ast.Name) and _UPPER.fullmatch(n.id):
+                        where[n.id].add(str(path.relative_to(PKG)))
+    twice = {
+        k: sorted(v)
+        for k, v in where.items()
+        if len(v) > 1 and k not in PER_MODULE
+    }
+    assert not twice, twice
 
 
 #: The environment variables the package may read: where it runs, not how

@@ -50,10 +50,7 @@ def test_shingle_rows_short_doc_whole_text(spark):
 
 
 def test_minhash_finds_near_and_exact_dups(spark):
-    pairs = minhash_lsh_pairs(
-        _docs(spark), num_hashes=12, band_rows=2,
-        shingle_n=3, threshold=0.2,
-    ).collect()
+    pairs = minhash_lsh_pairs(_docs(spark), threshold=0.2).collect()
     got = {(r.id_a, r.id_b): r.jaccard_sim for r in pairs}
     assert got[(1, 4)] == 1.0         # exact dup always collides
     assert (1, 2) in got and 0.4 < got[(1, 2)] < 1.0
@@ -341,7 +338,7 @@ def test_ivf_trained_recall_vs_brute_force(spark, sf_dir):
     ivf = {
         (r.query_id, r.neighbor_id)
         for r in ivf_topk_trained(
-            emb, q, k=5, ncells=8, iters=2, dims=64
+            emb, q, k=5
         ).collect()
     }
     recall = len(bf & ivf) / len(bf)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.text import ws_tokens
 from etl_pipeline_excel_sql__spark.operators.perceptron import (
+    PERCEPTRON_ROUNDS,
     feature_buckets,
     perceptron_scores,
     perceptron_train,
@@ -53,14 +54,14 @@ def test_matches_reference_transcription(spark):
         (5, "nothing notable here"),
         (6, "a slow disk"),
     ]
-    want = _reference(docs, "slow", 64, 3)
+    want = _reference(docs, "slow", 64, PERCEPTRON_ROUNDS)
     ddf = spark.createDataFrame(docs, ["doc_id", "text"])
     label = F.when(
         F.array_contains(ws_tokens(F.col("text")), "slow"), F.lit(1)
     ).otherwise(F.lit(-1))
     got = {
         r.doc_id: (r.y, r.margin, r.pred)
-        for r in perceptron_scores(ddf, label, 64, 3).collect()
+        for r in perceptron_scores(ddf, label, 64).collect()
     }
     assert got == want
 
@@ -75,7 +76,7 @@ def test_separable_corpus_reaches_full_accuracy(spark):
     label = F.when(
         F.array_contains(ws_tokens(F.col("text")), "slow"), F.lit(1)
     ).otherwise(F.lit(-1))
-    rows = perceptron_scores(ddf, label, 4096, 3).collect()
+    rows = perceptron_scores(ddf, label, 4096).collect()
     acc = sum(1 for r in rows if r.pred == r.y) / len(rows)
     assert acc == 1.0
 

@@ -6,34 +6,35 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.pq import (
+    PQ_M,
+    PQ_NCODES,
     pq_adc_topk,
     pq_encode,
     pq_train_codebooks,
 )
 from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
-M, NCODES, DIMS = 8, 16, 64
-
 
 @pytest.fixture(scope="module")
 def trained(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
-    cb = pq_train_codebooks(emb, m=M, ncodes=NCODES, iters=2, dims=DIMS)
-    codes = pq_encode(emb, cb, m=M, dims=DIMS)
+    cb = pq_train_codebooks(emb)
+    codes = pq_encode(emb, cb)
     return emb, cb, codes
 
 
 def test_codebooks_and_codes_shape(trained):
     emb, cb, codes = trained
     cb_rows = cb.collect()
-    assert {(r.sub) for r in cb_rows} == set(range(M))
-    assert all(0 <= r.code < NCODES for r in cb_rows)
-    assert all(len(r.centroid) == DIMS // M for r in cb_rows)
+    assert {(r.sub) for r in cb_rows} == set(range(PQ_M))
+    assert all(0 <= r.code < PQ_NCODES for r in cb_rows)
+    assert all(len(r.centroid) == EMB_DIMS // PQ_M for r in cb_rows)
     code_rows = codes.collect()
     assert len(code_rows) == emb.count()
-    assert all(len(r.codes) == M for r in code_rows)
-    assert all(0 <= c < NCODES for r in code_rows for c in r.codes)
+    assert all(len(r.codes) == PQ_M for r in code_rows)
+    assert all(0 <= c < PQ_NCODES for r in code_rows for c in r.codes)
 
 
 def test_encoding_is_deterministic(trained):
@@ -51,7 +52,7 @@ def test_adc_beats_chance_and_excludes_self(trained, spark):
     values, this pins usefulness."""
     emb, cb, codes = trained
     queries = emb.filter("vec_id < 5")
-    got = pq_adc_topk(codes, cb, queries, k=5, m=M, dims=DIMS).collect()
+    got = pq_adc_topk(codes, cb, queries, k=5).collect()
     by_q: dict[int, list[int]] = {}
     for r in got:
         assert r.neighbor_id != r.query_id
@@ -76,12 +77,6 @@ def test_adc_beats_chance_and_excludes_self(trained, spark):
     assert hits >= 4, f"ADC recall collapsed to chance: {hits}/25"
 
 
-def test_pq_validates_divisibility(spark, sf_dir):
-    emb = load_table(spark, "embeddings", sf_dir)
-    with pytest.raises(ValueError, match="not divisible"):
-        pq_train_codebooks(emb, m=7, dims=DIMS)
-
-
 def test_ivfpq_distances_agree_with_flat_adc(trained, spark):
     """IVF pruning must not change the ADC arithmetic: every
     (query, neighbor) the composed path returns carries exactly the
@@ -93,14 +88,9 @@ def test_ivfpq_distances_agree_with_flat_adc(trained, spark):
     queries = emb.filter("vec_id < 5")
     flat = {
         (r.query_id, r.neighbor_id): r.adc_dist_micros
-        for r in pq_adc_topk(
-            codes, cb, queries, k=10_000, m=M, dims=DIMS
-        ).collect()
+        for r in pq_adc_topk(codes, cb, queries, k=10_000).collect()
     }
-    composed = ivfpq_topk(
-        emb, queries, ncells=8, nprobe=2, m=M, ncodes=NCODES, iters=2,
-        k=5, dims=DIMS,
-    ).collect()
+    composed = ivfpq_topk(emb, queries, k=5).collect()
     assert len(composed) == 25
     for r in composed:
         assert flat[(r.query_id, r.neighbor_id)] == r.adc_dist_micros
@@ -126,10 +116,7 @@ def test_ivfpq_residual_is_above_chance_and_distinct(trained, spark, sf_dir):
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
-    got = ivfpq_residual_topk(
-        emb, emb.filter("vec_id < 5"), ncells=8, nprobe=2, m=M,
-        ncodes=NCODES, iters=2, k=5, dims=DIMS,
-    ).collect()
+    got = ivfpq_residual_topk(emb, emb.filter("vec_id < 5"), k=5).collect()
     by_q: dict[int, list[int]] = {}
     for r in got:
         assert r.neighbor_id != r.query_id

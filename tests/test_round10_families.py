@@ -34,7 +34,7 @@ def test_sq8_rerank_with_full_candidates_equals_brute_force(spark):
     staged = {
         (r.query_id, r.rank): r.neighbor_id
         for r in sq8_rerank_topk(
-            emb, queries, k=5, candidates=10**6, dims=64
+            emb, queries, k=5, candidates=10**6
         ).collect()
     }
     assert staged == exact
@@ -50,7 +50,7 @@ def test_sq8_codes_are_int8_range(spark):
 
     emb = load_table(spark, "embeddings", SF)
     rows = sq8_rerank_topk(
-        emb, emb.filter(F.col("vec_id") < 2), k=5, candidates=10, dims=64
+        emb, emb.filter(F.col("vec_id") < 2), k=5, candidates=10
     ).collect()
     bound = 64 * 127 * 127
     assert rows and all(abs(r.qdot) <= bound for r in rows)
@@ -249,6 +249,8 @@ def test_winnow_matches_python_reference(spark):
     import pyarrow.parquet as pq
 
     from etl_pipeline_excel_sql__spark.operators.winnow import (
+        WINNOW_K,
+        WINNOW_W,
         winnow_fingerprint_stats,
     )
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
@@ -256,13 +258,13 @@ def test_winnow_matches_python_reference(spark):
     docs = load_table(spark, "documents", SF).filter(F.col("doc_id") < 30)
     got = {
         r.doc_id: (r.n_kgrams, r.n_fp)
-        for r in winnow_fingerprint_stats(docs, k=8, w=4).collect()
+        for r in winnow_fingerprint_stats(docs).collect()
     }
     tbl = pq.read_table(f"{SF}/documents.parquet").to_pydict()
     for doc_id, text in zip(tbl["doc_id"], tbl["text"]):
         if doc_id >= 30:
             continue
-        n, fp = _py_winnow(text, 8, 4)
+        n, fp = _py_winnow(text, WINNOW_K, WINNOW_W)
         if n == 0:
             assert doc_id not in got
         else:

@@ -4,12 +4,12 @@ it feeds (tools/bench_scaling.py) is fiction."""
 
 from __future__ import annotations
 
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     cosine_neardup_pairs,
     srp_candidate_stats,
 )
 from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    EMB_DIMS,
     SRP_NEARDUP_BITS,
     SRP_NEARDUP_TABLES,
 )

@@ -27,6 +27,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import BENCH_QUERIES, run_one  # noqa: E402
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.plans import QUERIES  # noqa: E402
 from etl_pipeline_excel_sql__spark.session import get_session  # noqa: E402
 
@@ -36,7 +37,6 @@ def srp_diagnostics(spark, sf_dir: str) -> dict:
         srp_candidate_stats,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        EMB_DIMS,
         SRP_NEARDUP_MAX_BITS,
         SRP_NEARDUP_TABLES,
         adaptive_srp_bits,
