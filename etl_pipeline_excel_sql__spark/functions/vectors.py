@@ -16,102 +16,82 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 
-#: Width of the ``embeddings`` table's vectors.
+#: Width of the ``embeddings`` table's vectors, and of every vector the
+#: operators here and in ``operators/similarity.py`` read.
 EMB_DIMS = 64
+#: SRP-LSH geometry of the near-dup operators: hash tables per vector,
+#: and the plane stride between tables — the largest bit count any
+#: caller may ask for (see :func:`srp_planes_df`).
+SRP_NEARDUP_TABLES = 3
+SRP_NEARDUP_MAX_BITS = 16
 
 
-def dot_sql(a: str, b: str, dims: int) -> str:
-    """Unrolled left-associative dot product as Spark-SQL text.
+def dot_sql(a: str, b: str) -> str:
+    """Unrolled left-associative dot product over the ``EMB_DIMS``
+    components as Spark-SQL text.
 
     ``a``/``b`` are SQL expressions (column names or field paths). One
-    parsed string beats building ~2·dims Column ops through py4j by ~1000×
-    in driver time, and the text is byte-stable across invocations so the
-    codegen cache can reuse the compiled class.
+    parsed string beats building ~2·EMB_DIMS Column ops through py4j by
+    ~1000× in driver time, and the text is byte-stable across invocations
+    so the codegen cache can reuse the compiled class.
     """
     return " + ".join(
         f"CAST(element_at({a}, {i + 1}) AS DOUBLE)"
         f" * CAST(element_at({b}, {i + 1}) AS DOUBLE)"
-        for i in range(dims)
+        for i in range(EMB_DIMS)
     )
 
 
-def l2_norm_sq_sql(a: str, dims: int) -> str:
-    return dot_sql(a, a, dims)
+def l2_norm_sq_sql(a: str) -> str:
+    return dot_sql(a, a)
 
 
-def _sql_ref(c: Column | str) -> str | None:
-    """SQL text for a plain named column, else None (computed Columns have
-    no recoverable SQL text through the public API)."""
+def _plain_column_name(c: Column | str) -> str:
+    """Unwrap a plain named Column; reject computed expressions (the SQL
+    generators need a reference they can splice into text, and computed
+    Columns have no recoverable SQL text through the public API)."""
     if isinstance(c, str):
         return c
     s = str(c)
-    if s.startswith("Column<'") and s.endswith("'>"):
-        name = s[8:-2]
-        if name.isidentifier():
-            return name
-    return None
+    name = s[8:-2]
+    if s.startswith("Column<'") and s.endswith("'>") and name.isidentifier():
+        return name
+    raise ValueError(
+        f"need a plain column name, got {c!r}; pass the name instead"
+    )
 
 
-def dot(a: Column | str, b: Column | str, dims: int | None = None) -> Column:
-    """Sequential dot product: ``sum_i a[i]*b[i]`` in doubles.
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Sequential dot product: ``sum_i a[i]*b[i]`` in doubles over the
+    ``EMB_DIMS`` components.
 
-    With ``dims`` given, the sum is unrolled into a flat left-associative
-    expression chain — plain codegen'd arithmetic, ~50× faster than the
-    higher-order ``aggregate`` fold (HOF lambdas are interpreted per
-    element, outside whole-stage codegen). The unrolled chain computes the
-    exact same IEEE result as the fold (``0.0 + p1 == p1``), so oracle
-    parity is unaffected. Plain named columns take the SQL-text path
-    (parsed JVM-side in one call); computed Columns fall back to per-op
-    construction. Without ``dims`` (unknown width) it falls back to the
-    interpreted fold.
+    The sum is one parsed :func:`dot_sql` expression: a flat
+    left-associative chain of plain codegen'd arithmetic, ~50× faster
+    than a higher-order ``aggregate`` fold (HOF lambdas are interpreted
+    per element, outside whole-stage codegen). The chain computes the
+    exact IEEE result of the oracle's 0.0-seeded fold
+    (``0.0 + p1 == p1``). ``a`` and ``b`` must be plain column names (a
+    named Column is unwrapped); a computed Column raises ``ValueError``.
     """
-    if dims is not None:
-        ra, rb = _sql_ref(a), _sql_ref(b)
-        if ra is not None and rb is not None:
-            return F.expr(dot_sql(ra, rb, dims))
-        a, b = F.col(a) if isinstance(a, str) else a, (
-            F.col(b) if isinstance(b, str) else b
-        )
-        terms = [
-            F.element_at(a, i + 1).cast("double")
-            * F.element_at(b, i + 1).cast("double")
-            for i in range(dims)
-        ]
-        out = terms[0]
-        for t in terms[1:]:
-            out = out + t
-        return out
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return F.expr(dot_sql(_plain_column_name(a), _plain_column_name(b)))
 
 
-def l2_norm_sq(a: Column | str, dims: int | None = None) -> Column:
-    if dims is not None:
-        return dot(a, a, dims)
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def l2_norm_sq(a: Column | str) -> Column:
+    return dot(a, a)
 
 
-def cosine(a: Column | str, b: Column | str, dims: int | None = None) -> Column:
+def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity with deterministic evaluation order."""
-    return dot(a, b, dims) / (
-        F.sqrt(l2_norm_sq(a, dims)) * F.sqrt(l2_norm_sq(b, dims))
-    )
+    return dot(a, b) / (F.sqrt(l2_norm_sq(a)) * F.sqrt(l2_norm_sq(b)))
 
 
-def cosine_sql(dims: int) -> str:
+def cosine_sql() -> str:
     """Cosine of ``embedding`` and ``centroid`` as one SQL string (see
     :func:`dot_sql` for why text)."""
     return (
-        f"(({dot_sql('embedding', 'centroid', dims)})"
-        f" / (SQRT({l2_norm_sq_sql('embedding', dims)})"
-        f" * SQRT({l2_norm_sq_sql('centroid', dims)})))"
+        f"(({dot_sql('embedding', 'centroid')})"
+        f" / (SQRT({l2_norm_sq_sql('embedding')})"
+        f" * SQRT({l2_norm_sq_sql('centroid')})))"
     )
 
 
@@ -128,20 +108,9 @@ def _srp_plane(j: int, i: int) -> float:
     return (h % 100000) / 100000.0 - 0.5
 
 
-def _plain_column_name(c) -> str:
-    """Unwrap a plain named Column; reject computed expressions (the SQL
-    generator needs a reference it can splice into text)."""
-    name = _sql_ref(c)
-    if name is None:
-        raise ValueError(
-            f"need a plain column name, got {c!r}; pass the name instead"
-        )
-    return name
-
-
 def srp_signature(a: Column | str) -> Column:
     """Signed-random-projection LSH signature (for ANN bucketing): an
-    8-bit integer bucket id over the first 64 components of ``a``.
+    8-bit integer bucket id over the ``EMB_DIMS`` components of ``a``.
 
     Hyperplane components derive from md5 -- reproducible anywhere, no
     stored model. Hyperplanes 0..7 are the first table of
@@ -159,7 +128,7 @@ def srp_signature(a: Column | str) -> Column:
     for j in range(8):
         terms = " + ".join(
             f"CAST(element_at({col}, {i + 1}) AS DOUBLE) * {_srp_plane(j, i)!r}D"
-            for i in range(64)
+            for i in range(EMB_DIMS)
         )
         bit_sqls.append(
             f"(CASE WHEN ({terms}) > 0 THEN CAST({1 << j} AS BIGINT) "
@@ -168,37 +137,29 @@ def srp_signature(a: Column | str) -> Column:
     return F.expr(" + ".join(bit_sqls))
 
 
-def srp_planes_df(
-    spark, bits: int, dims: int, tables: int = 1,
-    plane_stride: int | None = None,
-):
+def srp_planes_df(spark, bits: int):
     """The hyperplane model as a tiny broadcastable table:
-    ``(__t, __j, __plane array<double>, __w = 2^j)`` — tables×bits rows.
-    Column names are __-reserved so the crossJoin in
-    :func:`srp_buckets_long` can never collide with a corpus column
-    (short names like ``t``/``w`` are common in caller frames). Plane
-    components come from the same md5 derivation as :func:`srp_signature`
-    (identical doubles), just computed driver-side once.
+    ``(__t, __j, __plane array<double>, __w = 2^j)`` —
+    ``SRP_NEARDUP_TABLES``×bits rows. Column names are __-reserved so the
+    crossJoin in :func:`srp_buckets_long` can never collide with a corpus
+    column (short names like ``t``/``w`` are common in caller frames).
+    Plane components come from the same md5 derivation as
+    :func:`srp_signature` (identical doubles), just computed driver-side
+    once.
 
-    ``plane_stride`` fixes table ``t``'s flat plane indices at
-    ``t*stride .. t*stride+bits-1`` (default ``stride=bits``, so tables
-    never share a plane). Callers that derive ``bits`` from
-    the corpus size pass a CONSTANT stride ≥ max bits so the plane
-    family is a prefix-stable function of (t, j): growing ``bits`` adds
-    planes without re-seeding the ones already in use — and the oracle
-    twin can enumerate a fixed plane set gated by a runtime bit count.
+    Table ``t``'s flat plane indices are ``t*SRP_NEARDUP_MAX_BITS ..
+    t*SRP_NEARDUP_MAX_BITS+bits-1``: a constant stride ≥ every bit count
+    makes the plane family a prefix-stable function of (t, j), so growing
+    ``bits`` with the corpus adds planes without re-seeding the ones
+    already in use — and the oracle twin can enumerate a fixed plane set
+    gated by a runtime bit count.
     """
-    stride = bits if plane_stride is None else plane_stride
+    stride = SRP_NEARDUP_MAX_BITS
     if stride < bits:
-        raise ValueError(f"plane_stride {stride} < bits {bits}: tables overlap")
+        raise ValueError(f"plane stride {stride} < bits {bits}: tables overlap")
     rows = [
-        (
-            t,
-            j,
-            [_srp_plane(t * stride + j, i) for i in range(dims)],
-            1 << j,
-        )
-        for t in range(tables)
+        (t, j, [_srp_plane(t * stride + j, i) for i in range(EMB_DIMS)], 1 << j)
+        for t in range(SRP_NEARDUP_TABLES)
         for j in range(bits)
     ]
     return local_df(
@@ -211,29 +172,25 @@ def srp_buckets_long(
     id_col: str,
     vec_col: str,
     bits: int,
-    dims: int,
-    tables: int = 1,
     extra_cols: tuple[str, ...] = (),
-    plane_stride: int | None = None,
 ) -> "DataFrame":
     """Multi-table SRP buckets in long form: ``(id, *extra, __table,
     __bucket)`` — one row per (vector, table).
 
     Planes enter as a broadcast TABLE (:func:`srp_planes_df`), so the
-    per-row expression is one ``dims``-term dot product — small enough to
-    whole-stage-codegen no matter how many tables/bits, with text that is
-    identical across invocations (codegen cache hit). The bucket integer
-    is an order-independent BIGINT sum of ``2^j`` votes, so the map-side
-    combined groupBy carries (tables) rows per vector and the result is
-    bit-identical to :func:`srp_signature`'s fused chain (same plane
-    doubles, same left-associative projection fold).
+    per-row expression is one ``EMB_DIMS``-term dot product — small enough
+    to whole-stage-codegen no matter how many tables/bits, with text that
+    is identical across invocations (codegen cache hit). The bucket
+    integer is an order-independent BIGINT sum of ``2^j`` votes, so the
+    map-side combined groupBy carries ``SRP_NEARDUP_TABLES`` rows per
+    vector and the result is bit-identical to :func:`srp_signature`'s
+    fused chain (same plane doubles, same left-associative projection
+    fold).
     """
-    planes = srp_planes_df(
-        corpus.sparkSession, bits, dims, tables, plane_stride=plane_stride
-    )
+    planes = srp_planes_df(corpus.sparkSession, bits)
     return (
         corpus.crossJoin(F.broadcast(planes))
-        .withColumn("__proj", F.expr(dot_sql(vec_col, "__plane", dims)))
+        .withColumn("__proj", F.expr(dot_sql(vec_col, "__plane")))
         .groupBy(F.col(id_col), *[F.col(c) for c in extra_cols], F.col("__t"))
         .agg(
             F.sum(

@@ -31,7 +31,7 @@ def zorder_key(a: Column, b: Column, bits: int = ZORDER_BITS) -> Column:
     ``bits`` budget (rank, bucket id, epoch-hour, ``pmod``-folded id);
     higher bits are ignored by construction (masking, not failure — a
     layout key tolerates coordinate overflow by coarsening, unlike
-    ``spans._packed_key`` where aliasing corrupts results).
+    ``spans.packed_doc_pos`` where aliasing corrupts results).
     """
     if not 1 <= bits <= 31:
         raise ValueError("zorder_key: bits must be in [1, 31]")

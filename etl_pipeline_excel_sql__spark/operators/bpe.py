@@ -56,6 +56,9 @@ from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 BPE_TRAIN_MERGES = 6
 BPE_VOCAB_TOP_K = 40
 PACK_SEQ_LEN = 64
+#: Doc ids per prefix-sum range of :func:`pack_lm_sequences` (two-phase
+#: global offset; small so the range table is non-trivial even at sf0.001).
+PACK_IDS_RANGE = 100
 
 MERGES_SCHEMA = StructType(
     [
@@ -331,12 +334,12 @@ def bpe_train_merges_from_words(
     return local_df(spark, merges, MERGES_SCHEMA)
 
 
-def _bpe_cte_parts(docs_cte: str, n_merges: int) -> list[str]:
+def _bpe_cte_parts(docs_cte: str) -> list[str]:
     """The shared unrolled-round CTE chain: ``w0`` (char-split distinct
-    words) through ``w{n}`` (fully merged), with ``m{i}`` holding round
-    i's winning pair. Every CTE is MATERIALIZED — each round references
-    the previous word table multiple times and DuckDB inlines plain
-    CTEs, re-expanding the chain exponentially."""
+    words) through ``w{BPE_TRAIN_MERGES}`` (fully merged), with ``m{i}``
+    holding round i's winning pair. Every CTE is MATERIALIZED — each
+    round references the previous word table multiple times and DuckDB
+    inlines plain CTEs, re-expanding the chain exponentially."""
     parts = [
         f"""w0 AS MATERIALIZED (
   SELECT w, CAST(COUNT(*) AS BIGINT) AS freq,
@@ -351,7 +354,7 @@ def _bpe_cte_parts(docs_cte: str, n_merges: int) -> list[str]:
   GROUP BY w
 )"""
     ]
-    for i in range(1, n_merges + 1):
+    for i in range(1, BPE_TRAIN_MERGES + 1):
         p = i - 1
         parts.append(
             f"""p{i} AS MATERIALIZED (
@@ -388,7 +391,7 @@ def bpe_unrolled_sql() -> str:
     Returns a complete query producing ``(merge_rank, left, right,
     pair_count)``.
     """
-    parts = _bpe_cte_parts("SELECT text FROM documents", BPE_TRAIN_MERGES)
+    parts = _bpe_cte_parts("SELECT text FROM documents")
     final = "\nUNION ALL\n".join(
         f"SELECT CAST({i - 1} AS INT) AS merge_rank, a AS \"left\","
         f" b AS \"right\", CAST(cnt AS BIGINT) AS pair_count FROM m{i}"
@@ -402,7 +405,7 @@ def bpe_vocab_unrolled_sql() -> str:
     feeding :func:`bpe_subword_vocab`) over ``documents``: the fully
     merged word table ``w{n}`` exploded into weighted subword
     frequencies, top-``BPE_VOCAB_TOP_K``."""
-    parts = _bpe_cte_parts("SELECT text FROM documents", BPE_TRAIN_MERGES)
+    parts = _bpe_cte_parts("SELECT text FROM documents")
     final = f"""SELECT subword, CAST(SUM(freq) AS BIGINT) AS n_occurrences
 FROM (SELECT freq, UNNEST(syms) AS subword FROM w{BPE_TRAIN_MERGES})
 GROUP BY subword
@@ -554,9 +557,7 @@ def bpe_doc_token_ids(
     )
 
 
-def _token_ids_ctes(
-    docs_cte: str, n_merges: int, prefix_ctes: str = ""
-) -> str:
+def _token_ids_ctes(docs_cte: str, prefix_ctes: str = "") -> str:
     """Shared oracle CTE chain ending at ``perdoc(doc_id, tids)`` —
     per-document token-id arrays (see :func:`bpe_token_ids_unrolled_sql`
     for the layout contract). ``prefix_ctes``, when non-empty, is spliced
@@ -564,11 +565,11 @@ def _token_ids_ctes(
     chain a DERIVED corpus — e.g. the span-trimmed documents of
     ``plans/spans_queries.q_curate_pack_pipeline`` — as ``docs_cte``
     referencing those CTEs."""
-    parts = _bpe_cte_parts(docs_cte, n_merges)
+    parts = _bpe_cte_parts(docs_cte)
     merge_ids = "\n    UNION ALL\n".join(
         f"    SELECT a || b AS sym,"
         f" (SELECT COUNT(*) FROM alpha) + {i - 1} AS id FROM m{i}"
-        for i in range(1, n_merges + 1)
+        for i in range(1, BPE_TRAIN_MERGES + 1)
     )
     return (
         "WITH "
@@ -587,7 +588,7 @@ alpha AS MATERIALIZED (
 ), wids AS MATERIALIZED (
   SELECT w, list(CAST(id AS INT) ORDER BY sp) AS ids
   FROM (SELECT w, generate_subscripts(syms, 1) AS sp, unnest(syms) AS sym
-        FROM w{n_merges}) e
+        FROM w{BPE_TRAIN_MERGES}) e
   JOIN vocab USING (sym)
   GROUP BY w
 ), tokpos AS MATERIALIZED (
@@ -612,7 +613,7 @@ def bpe_token_ids_unrolled_sql() -> str:
     per-document ordered flatten. ``token_ids`` is rendered to a
     space-delimited string (:func:`render_packed_for_harness` twin)."""
     return (
-        _token_ids_ctes("SELECT doc_id, text FROM documents", BPE_TRAIN_MERGES)
+        _token_ids_ctes("SELECT doc_id, text FROM documents")
         + """
 SELECT d.doc_id,
        CAST(COALESCE(len(p.tids), 0) AS INT) AS n_subwords,
@@ -634,7 +635,7 @@ def bpe_packed_sequences_unrolled_sql(
     on the Spark side (the harness canonicalizer needs hashable
     cells — the ``array_funcs`` doctrine)."""
     return (
-        _token_ids_ctes(docs_cte, BPE_TRAIN_MERGES, prefix_ctes)
+        _token_ids_ctes(docs_cte, prefix_ctes)
         + f""",
 offs AS MATERIALIZED (
   SELECT doc_id, tids,
@@ -655,7 +656,7 @@ FROM flat GROUP BY 1"""
 
 
 def pack_lm_sequences(
-    ids_df: DataFrame, seq_len: int, range_size: int = 1000
+    ids_df: DataFrame, seq_len: int, range_size: int = PACK_IDS_RANGE
 ) -> DataFrame:
     """Pack per-document token-id arrays into fixed-length LM training
     sequences — ``(seq_id, n_filled, token_ids)``, ids crossing document

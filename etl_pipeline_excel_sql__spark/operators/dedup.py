@@ -43,13 +43,19 @@ MINHASH_BAND_ROWS = 2
 MINHASH_SHINGLE_N = 3
 #: Sketch size of the n-gram operators' bottom-k blocking keys.
 NGRAM_BOTTOM_K = 2
+#: Verified-similarity cut of each near-dup operator: MinHash Jaccard,
+#: blocked n-gram Jaccard, and n-gram containment.
+MINHASH_THRESHOLD = 0.1
+NGRAM_THRESHOLD = 0.05
+CONTAINMENT_THRESHOLD = 0.2
 
 
-def affine_consts(k: int) -> list[tuple[int, int]]:
-    """Deterministic (a, b) pairs for the k affine hash families."""
+def affine_consts() -> list[tuple[int, int]]:
+    """Deterministic (a, b) pairs for the ``MINHASH_K`` affine hash
+    families."""
     return [
         (1234567 * (i + 1) % MINHASH_PRIME, 7654321 * (i + 1) % MINHASH_PRIME)
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
 
 
@@ -123,15 +129,15 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def _minhash_signatures(exploded: DataFrame, num_hashes: int) -> DataFrame:
-    """(__id, s0..s{k-1}) MinHash signature table from (__id, __sh)
+def _minhash_signatures(exploded: DataFrame) -> DataFrame:
+    """(__id, s0..s{MINHASH_K-1}) MinHash signature table from (__id, __sh)
     shingle rows — the ONE definition both the self-join and the
     cross-set band joins build on (a hashing tweak applied to one but
     not the other would make them silently disagree on near-dups).
 
-    One md5 per shingle; the k hash families are affine permutations of
-    the 31-bit base hash mod a Mersenne prime (standard one-permutation
-    MinHash). Products stay < 2**62, safely inside ANSI bigint.
+    One md5 per shingle; the MINHASH_K hash families are affine
+    permutations of the 31-bit base hash mod a Mersenne prime (standard
+    one-permutation MinHash). Products stay < 2**62, safely inside ANSI bigint.
     """
     hbase = md5_hash60(F.col("__sh")).bitwiseAND(F.lit(MINHASH_PRIME))
     hashed = exploded.select("__id", hbase.alias("hb"))
@@ -139,19 +145,19 @@ def _minhash_signatures(exploded: DataFrame, num_hashes: int) -> DataFrame:
         ((F.lit(a) * F.col("hb") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(
             f"h{i}"
         )
-        for i, (a, b) in enumerate(affine_consts(num_hashes))
+        for i, (a, b) in enumerate(affine_consts())
     ]
     return (
         hashed.select("__id", *hash_cols)
         .groupBy("__id")
-        .agg(*[F.min(f"h{i}").alias(f"s{i}") for i in range(num_hashes)])
+        .agg(*[F.min(f"h{i}").alias(f"s{i}") for i in range(MINHASH_K)])
     )
 
 
-def _minhash_band_expr(num_hashes: int, band_rows: int):
+def _minhash_band_expr(band_rows: int):
     """posexplode column producing (band, bucket) keys from a signature
     row — bucket is the comma-joined band slice of the signature."""
-    num_bands = num_hashes // band_rows
+    num_bands = MINHASH_K // band_rows
     return F.posexplode(
         F.array(
             *[
@@ -170,7 +176,7 @@ def _minhash_band_expr(num_hashes: int, band_rows: int):
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    threshold: float = 0.2,
+    threshold: float = MINHASH_THRESHOLD,
     cache: SignatureCache | None = None,
     exploded: DataFrame | None = None,
 ) -> DataFrame:
@@ -216,10 +222,8 @@ def minhash_lsh_pairs(
     slot = cache or shared_slot(
         exploded.sparkSession, "dedup.signatures", SignatureCache
     )
-    sig = slot.swap(_minhash_signatures(exploded, MINHASH_K))
-    bands = sig.select(
-        "__id", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
-    )
+    sig = slot.swap(_minhash_signatures(exploded))
+    bands = sig.select("__id", _minhash_band_expr(MINHASH_BAND_ROWS))
     cand = (
         bands.alias("l")
         .join(bands.alias("r"), on=["band", "bucket"])
@@ -242,7 +246,6 @@ def minhash_lsh_pairs(
 def minhash_lsh_pairs_cross(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    threshold: float = 0.2,
     cache: SignatureCache | None = None,
 ) -> DataFrame:
     """Incremental-ingestion near-dup: NEW batch vs EXISTING corpus.
@@ -261,7 +264,8 @@ def minhash_lsh_pairs_cross(
     :func:`minhash_index_tables` and probes it with
     :func:`minhash_lsh_pairs_ingest_indexed`.
 
-    Output: ``new_id, corpus_id, jaccard_sim`` (exact verify ≥ threshold).
+    Output: ``new_id, corpus_id, jaccard_sim`` (exact verify ≥
+    ``MINHASH_THRESHOLD``).
     Assumes disjoint id spaces between sides (callers split one table by
     a partition predicate).
     """
@@ -276,11 +280,9 @@ def minhash_lsh_pairs_cross(
     slot = cache or shared_slot(
         tagged.sparkSession, "dedup.cross_signatures", SignatureCache
     )
-    sig = slot.swap(
-        _minhash_signatures(exploded, MINHASH_K).join(sides, "__id")
-    )
+    sig = slot.swap(_minhash_signatures(exploded).join(sides, "__id"))
     bands = sig.select(
-        "__id", "__side", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
+        "__id", "__side", _minhash_band_expr(MINHASH_BAND_ROWS)
     )
     new_b = bands.filter(F.col("__side") == "new").drop("__side")
     cor_b = bands.filter(F.col("__side") == "corpus").drop("__side")
@@ -302,7 +304,7 @@ def minhash_lsh_pairs_cross(
         cand.join(sh_n, on="new_id")
         .join(sh_c, on="corpus_id")
         .withColumn("jaccard_sim", jaccard(F.col("sh_n"), F.col("sh_c")))
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= MINHASH_THRESHOLD)
         .select("new_id", "corpus_id", "jaccard_sim")
     )
 
@@ -322,10 +324,8 @@ def minhash_index_tables(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """
     corpus = corpus.filter(has_ws_tokens())
     exploded = shingle_rows(corpus, MINHASH_SHINGLE_N)
-    sig = _minhash_signatures(exploded, MINHASH_K)
-    bands = sig.select(
-        "__id", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
-    )
+    sig = _minhash_signatures(exploded)
+    bands = sig.select("__id", _minhash_band_expr(MINHASH_BAND_ROWS))
     sets = exploded.groupBy("__id").agg(F.collect_set("__sh").alias("__sh"))
     return bands, sets
 
@@ -334,7 +334,6 @@ def minhash_lsh_pairs_ingest_indexed(
     new_df: DataFrame,
     corpus_bands: DataFrame,
     corpus_sets: DataFrame,
-    threshold: float = 0.2,
     cache: SignatureCache | None = None,
 ) -> DataFrame:
     """All delta edges of an ingest against a PERSISTED corpus index: cross
@@ -375,10 +374,8 @@ def minhash_lsh_pairs_ingest_indexed(
     slot = cache or shared_slot(
         new_df.sparkSession, "dedup.ingest_signatures", SignatureCache
     )
-    sig = slot.swap(_minhash_signatures(exploded, MINHASH_K))
-    new_b = sig.select(
-        "__id", _minhash_band_expr(MINHASH_K, MINHASH_BAND_ROWS)
-    )
+    sig = slot.swap(_minhash_signatures(exploded))
+    new_b = sig.select("__id", _minhash_band_expr(MINHASH_BAND_ROWS))
     cand_cross = (
         new_b.alias("l")
         .join(corpus_bands.alias("r"), on=["band", "bucket"])
@@ -400,7 +397,7 @@ def minhash_lsh_pairs_ingest_indexed(
         cand.join(sh_a, on="id_a")
         .join(sh_b, on="id_b")
         .withColumn("jaccard_sim", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard_sim") >= threshold)
+        .filter(F.col("jaccard_sim") >= MINHASH_THRESHOLD)
         .select("id_a", "id_b", "jaccard_sim")
     )
 
@@ -445,7 +442,7 @@ def simhash_signatures(df: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    threshold: float = 0.1,
+    threshold: float = NGRAM_THRESHOLD,
 ) -> DataFrame:
     """Blocked exact word-3-gram Jaccard: bottom-k sketch blocking + exact
     verify.
@@ -654,7 +651,7 @@ def jaccard_prefix_pairs(
 
 def ngram_containment_pairs(
     df: DataFrame,
-    threshold: float = 0.5,
+    threshold: float = CONTAINMENT_THRESHOLD,
 ) -> DataFrame:
     """Blocked exact word-3-gram CONTAINMENT: |A∩B| / min(|A|,|B|).
 

@@ -24,10 +24,15 @@ engines; basis points make the oracle exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.hashing import md5_hash60
+
+#: The registry's mixture recipe: weights normalize to exact binary
+#: fractions (0.5/0.25/0.25) so the oracle's float arithmetic is
+#: bit-identical; es/zh are absent → weight 0 → dropped from the output.
+MIX_WEIGHTS = {"en": 2.0, "de": 1.0, "fr": 1.0}
 
 
 def domain_mixture_rates(
@@ -35,7 +40,7 @@ def domain_mixture_rates(
     domain_col: str,
     size_col: str,
     budget: int,
-    weights: dict[str, float] | None = None,
+    weights: dict[str, float] = MIX_WEIGHTS,
 ) -> DataFrame:
     """Per-domain keep-rates for a target mixture within ``budget``.
 
@@ -43,40 +48,25 @@ def domain_mixture_rates(
     ``(domain, domain_size, target_size, rate_bp)`` where ``rate_bp`` is
     the floored basis-point Bernoulli rate ``min(10000, 10000 * target /
     domain_size)``. ``weights`` maps domain → relative weight (it is
-    normalized over the domains it mentions; domains absent from an
-    explicit ``weights`` get weight 0 and drop out). ``weights=None``
-    means a uniform target over every observed domain.
+    normalized over the domains it mentions; domains absent from
+    ``weights`` get weight 0 and drop out).
     """
     if budget <= 0:
         raise ValueError("domain_mixture_rates: budget must be positive")
     totals = df.groupBy(F.col(domain_col).alias("domain")).agg(
         F.sum(F.col(size_col)).alias("domain_size")
     )
-    if weights is None:
-        # Uniform over observed domains: weight 1/n with n from the same
-        # aggregate — a window over the tiny rate table, not a new job.
-        n = F.count(F.lit(1)).over(Window.partitionBy())
-        weighted = totals.select(
-            "domain",
-            "domain_size",
-            (F.lit(budget) / n).cast("double").alias("target_size"),
-        )
-    else:
-        norm = sum(weights.values())
-        if norm <= 0:
-            raise ValueError("domain_mixture_rates: weights sum must be > 0")
-        wmap = F.create_map(
-            *[
-                F.lit(x)
-                for kv in weights.items()
-                for x in (kv[0], kv[1] / norm)
-            ]
-        )
-        weighted = totals.select(
-            "domain",
-            "domain_size",
-            (F.lit(budget) * wmap[F.col("domain")]).alias("target_size"),
-        ).filter(F.col("target_size").isNotNull())
+    norm = sum(weights.values())
+    if norm <= 0:
+        raise ValueError("domain_mixture_rates: weights sum must be > 0")
+    wmap = F.create_map(
+        *[F.lit(x) for kv in weights.items() for x in (kv[0], kv[1] / norm)]
+    )
+    weighted = totals.select(
+        "domain",
+        "domain_size",
+        (F.lit(budget) * wmap[F.col("domain")]).alias("target_size"),
+    ).filter(F.col("target_size").isNotNull())
     return weighted.select(
         "domain",
         "domain_size",
@@ -98,7 +88,7 @@ def domain_mixture_sample(
     id_col: str,
     size_col: str,
     budget: int,
-    weights: dict[str, float] | None = None,
+    weights: dict[str, float] = MIX_WEIGHTS,
 ) -> DataFrame:
     """Deterministic mixture resample of ``df``.
 

@@ -126,7 +126,7 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def sample_frames(media: DataFrame, every_ms: int = 100) -> DataFrame:
     """Sample frames from video payloads — a 1-to-N ``mapInPandas``.
 
     Demonstrates the cardinality-changing iterator shape: each input row

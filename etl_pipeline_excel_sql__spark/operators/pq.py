@@ -54,7 +54,7 @@ PQ_ITERS = 2
 #: IVF-PQ coarse cells and the cells each query probes.
 IVFPQ_NCELLS = 8
 IVFPQ_NPROBE = 2
-#: Top-k of the oracle twins (queries ``vec_id < 5``).
+#: Neighbors kept per query by the ADC searches and their oracle twins.
 PQ_K = 5
 
 def _argmin_struct(sub: int) -> F.Column:
@@ -63,8 +63,8 @@ def _argmin_struct(sub: int) -> F.Column:
     ordering is (d ASC, code ASC), exactly ``min_by(code, struct(d,
     code))``'s tie-break (lowest code on equal distance). ``when``
     yields NULL for other subspaces' rows and ``min`` ignores NULLs, so
-    a single ``groupBy(id)`` computes all m argmins at once — the
-    vector crosses the shuffle ONCE instead of m times (guide §2.3)."""
+    a single ``groupBy(id)`` computes all PQ_M argmins at once — the
+    vector crosses the shuffle ONCE instead of PQ_M times (guide §2.3)."""
     return F.min(
         F.when(
             F.col("sub") == sub,
@@ -74,13 +74,13 @@ def _argmin_struct(sub: int) -> F.Column:
 
 
 def _scored_rows(
-    corpus: DataFrame, codebooks: DataFrame, vec_col: str, subdim: int, m: int
+    corpus: DataFrame, codebooks: DataFrame, vec_col: str, subdim: int
 ) -> DataFrame:
     """One candidate row per (vector, subspace, code) with its unrolled
     squared-L2 distance — the map-side fan-out every assignment pass
     scores. Codebooks broadcast; no shuffle."""
     return (
-        _sub_rows(corpus, vec_col, m)
+        _sub_rows(corpus, vec_col)
         .join(F.broadcast(codebooks), "sub")
         .withColumn("__d", F.expr(l2sq_sub_sql(vec_col, subdim)))
     )
@@ -103,41 +103,41 @@ def l2sq_sub_sql(vec: str, subdim: int) -> str:
     return " + ".join(terms)
 
 
-def _sub_rows(corpus: DataFrame, vec_col: str, m: int) -> DataFrame:
+def _sub_rows(corpus: DataFrame, vec_col: str) -> DataFrame:
     """One row per (vector, subspace): the training/encoding fan-out.
     Narrow (explode of a literal sequence) — no shuffle."""
     return corpus.select(
         F.col("vec_id"),
         F.col(vec_col),
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
+        F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("sub"),
     )
 
 
 def _assign_codes(
-    corpus: DataFrame, codebooks: DataFrame, vec_col: str, subdim: int, m: int
+    corpus: DataFrame, codebooks: DataFrame, vec_col: str, subdim: int
 ) -> DataFrame:
     """Per (vector, subspace): the argmin-distance code, as
     ``(id, sub, code, vec)`` rows.
 
     Round-14 shape (guide §2.3 "shuffle fewer bytes"): ONE
     ``groupBy(id)`` computes every subspace's argmin via
-    :func:`_argmin_struct` (the m × ncodes candidate rows fan out
+    :func:`_argmin_struct` (the PQ_M × PQ_NCODES candidate rows fan out
     narrowly from each corpus row, so partial aggregation collapses
-    them map-side to one combined row per VECTOR), then the m codes
+    them map-side to one combined row per VECTOR), then the PQ_M codes
     re-explode. The previous ``groupBy(id, sub)`` shuffled the full
-    ``dims``-double vector once per subspace — m identical copies.
+    ``EMB_DIMS``-double vector once per subspace — PQ_M identical copies.
     Identical values: struct-min ordering (d ASC, code ASC) is exactly
     the old ``min_by(code, struct(d, code))`` tie-break.
     """
-    scored = _scored_rows(corpus, codebooks, vec_col, subdim, m)
+    scored = _scored_rows(corpus, codebooks, vec_col, subdim)
     per_id = scored.groupBy("vec_id").agg(
-        *[_argmin_struct(s) for s in range(m)],
+        *[_argmin_struct(s) for s in range(PQ_M)],
         F.first(vec_col).alias(vec_col),
     )
     return per_id.select(
         F.col("vec_id"),
         F.posexplode(
-            F.array(*[F.col(f"__c{s}.code") for s in range(m)])
+            F.array(*[F.col(f"__c{s}.code") for s in range(PQ_M)])
         ).alias("sub", "code"),
         F.col(vec_col),
     )
@@ -225,7 +225,7 @@ def pq_train_codebooks(
         ).alias("centroid"),
     )
     for _ in range(PQ_ITERS):
-        assigned = _assign_codes(corpus, cb, vec_col, subdim, PQ_M)
+        assigned = _assign_codes(corpus, cb, vec_col, subdim)
         cb = trunc.truncate(_codebook_means(assigned, vec_col, subdim))
     return cb
 
@@ -246,7 +246,7 @@ def pq_encode(
     (id, sub, code, vec) rows to a second ``collect_list`` shuffle just
     to re-assemble the array the first aggregate already knew."""
     subdim = EMB_DIMS // PQ_M
-    scored = _scored_rows(corpus, codebooks, vec_col, subdim, PQ_M)
+    scored = _scored_rows(corpus, codebooks, vec_col, subdim)
     per_id = scored.groupBy("vec_id").agg(
         *[_argmin_struct(s) for s in range(PQ_M)]
     )
@@ -260,7 +260,7 @@ def pq_adc_topk(
     codes: DataFrame,
     codebooks: DataFrame,
     queries: DataFrame,
-    k: int = 10,
+    k: int = PQ_K,
 ) -> DataFrame:
     """ADC top-k: approximate squared-L2 neighbors from codes alone.
 
@@ -273,7 +273,7 @@ def pq_adc_topk(
     (ties → lowest neighbor id; self-matches excluded)."""
     subdim = EMB_DIMS // PQ_M
     dtable = (
-        _sub_rows(queries, "embedding", PQ_M)
+        _sub_rows(queries, "embedding")
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebooks), "sub")
         .select(
@@ -313,14 +313,15 @@ def pq_adc_topk(
     )
 
 
-def _pq_l2_duck(vec: str, cent: str, sub: str, subdim: int) -> str:
+def _pq_l2_duck(vec: str, subdim: int) -> str:
     """DuckDB twin of :func:`l2sq_sub_sql` — same left-associative term
-    order, DuckDB list indexing."""
+    order, DuckDB list indexing; the codebook row is ``c`` and the
+    subspace row ``s``."""
     terms = []
     for i in range(1, subdim + 1):
         d = (
-            f"({vec}[CAST({sub} * {subdim} + {i} AS INT)]::DOUBLE"
-            f" - {cent}[{i}]::DOUBLE)"
+            f"({vec}[CAST(s.sub * {subdim} + {i} AS INT)]::DOUBLE"
+            f" - c.centroid[{i}]::DOUBLE)"
         )
         terms.append(f"{d} * {d}")
     return " + ".join(terms)
@@ -346,7 +347,7 @@ def pq_unrolled_ctes(
   SELECT vec_id, {vec}, sub, code FROM (
     SELECT e.vec_id, e.{vec}, s.sub, c.code,
            row_number() OVER (PARTITION BY e.vec_id, s.sub
-             ORDER BY {_pq_l2_duck(f'e.{vec}', 'c.centroid', 's.sub', subdim)} ASC,
+             ORDER BY {_pq_l2_duck(f'e.{vec}', subdim)} ASC,
                       c.code ASC) AS rn
     FROM {src} e, {subs} s
     JOIN {cb} c ON c.sub = s.sub
@@ -412,7 +413,7 @@ def pq_adc_sql() -> str:
     parts.append(
         f"""dtable AS MATERIALIZED (
   SELECT q.vec_id AS query_id, s.sub, c.code,
-         CAST(floor(({_pq_l2_duck('q.embedding', 'c.centroid', 's.sub', subdim)})
+         CAST(floor(({_pq_l2_duck('q.embedding', subdim)})
               * {ADC_SCALE}) AS BIGINT) AS d_micros
   FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q,
        {subs} s
@@ -536,11 +537,7 @@ def _coarse_kmeans(
     return assigned, coarse_final
 
 
-def ivfpq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
+def ivfpq_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """The full IVF-PQ composition: L2 coarse cells prune the corpus,
     PQ-ADC ranks inside the probed cells — the standard billion-scale
     serving shape (coarse partitioner × compressed fine codes).
@@ -588,7 +585,7 @@ def ivfpq_topk(
         .select("query_id", "cell")
     )
     dtable = (
-        _sub_rows(queries, "embedding", PQ_M)
+        _sub_rows(queries, "embedding")
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebooks), "sub")
         .select(
@@ -619,7 +616,7 @@ def ivfpq_topk(
                 )
             ),
         )
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PQ_K)
     )
     return ranked.select(
         "query_id",
@@ -629,10 +626,11 @@ def ivfpq_topk(
     )
 
 
-def _l2_full_duck(a: str, b: str, dims: int) -> str:
+def _l2_full_duck(a: str) -> str:
+    """Squared L2 between ``a`` and the coarse centroid ``c.ccent``."""
     terms = []
-    for i in range(1, dims + 1):
-        d = f"({a}[{i}]::DOUBLE - {b}[{i}]::DOUBLE)"
+    for i in range(1, EMB_DIMS + 1):
+        d = f"({a}[{i}]::DOUBLE - c.ccent[{i}]::DOUBLE)"
         terms.append(f"{d} * {d}")
     return " + ".join(terms)
 
@@ -648,7 +646,7 @@ def _coarse_sql_ctes() -> list[str]:
   SELECT vec_id, embedding, cell FROM (
     SELECT e.vec_id, e.embedding, c.cell,
            row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_l2_full_duck('e.embedding', 'c.ccent', EMB_DIMS)} ASC,
+             ORDER BY {_l2_full_duck('e.embedding')} ASC,
                       c.cell ASC) AS rn
     FROM embeddings e CROSS JOIN {cb} c
   ) WHERE rn = 1
@@ -694,7 +692,7 @@ def ivfpq_sql() -> str:
   SELECT query_id, cell FROM (
     SELECT q.vec_id AS query_id, c.cell,
            row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', EMB_DIMS)} ASC,
+             ORDER BY {_l2_full_duck('q.embedding')} ASC,
                       c.cell ASC) AS rn
     FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
     CROSS JOIN ccf c
@@ -704,7 +702,7 @@ def ivfpq_sql() -> str:
     parts.append(
         f"""dtable AS MATERIALIZED (
   SELECT q.vec_id AS query_id, s.sub, c.code,
-         CAST(floor(({_pq_l2_duck('q.embedding', 'c.centroid', 's.sub', subdim)})
+         CAST(floor(({_pq_l2_duck('q.embedding', subdim)})
               * {ADC_SCALE}) AS BIGINT) AS d_micros
   FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q,
        {subs} s
@@ -729,11 +727,7 @@ FROM (
 ) WHERE rank <= {PQ_K}"""
 
 
-def ivfpq_residual_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-) -> DataFrame:
+def ivfpq_residual_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Canonical IVFADC [Jégou et al., TPAMI 2011 §IV]: PQ codes quantize
     the RESIDUAL ``v - coarse_centroid(cell(v))``, not the raw vector.
 
@@ -839,7 +833,7 @@ def ivfpq_residual_topk(
                 )
             ),
         )
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= PQ_K)
     )
     return ranked.select(
         "query_id",
@@ -876,7 +870,7 @@ def ivfpq_residual_sql() -> str:
            list_transform(range(1, {EMB_DIMS + 1}),
              i -> q.embedding[i]::DOUBLE - c.ccent[i]) AS qresid,
            row_number() OVER (PARTITION BY q.vec_id
-             ORDER BY {_l2_full_duck('q.embedding', 'c.ccent', EMB_DIMS)} ASC,
+             ORDER BY {_l2_full_duck('q.embedding')} ASC,
                       c.cell ASC) AS rn
     FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5) q
     CROSS JOIN ccf c
@@ -886,7 +880,7 @@ def ivfpq_residual_sql() -> str:
     parts.append(
         f"""dtable AS MATERIALIZED (
   SELECT p.query_id, p.cell, s.sub, c.code,
-         CAST(floor(({_pq_l2_duck('p.qresid', 'c.centroid', 's.sub', subdim)})
+         CAST(floor(({_pq_l2_duck('p.qresid', subdim)})
               * {ADC_SCALE}) AS BIGINT) AS d_micros
   FROM probes p, {subs} s
   JOIN cbf c ON c.sub = s.sub

@@ -43,6 +43,9 @@ from etl_pipeline_excel_sql__spark.operators.iterative import (
 #: Trained k-means cells and Lloyd rounds of the IVF family's quantizer.
 IVF_NCELLS = 8
 IVF_ITERS = 2
+#: Neighbors kept per query and cells probed per query by IVF search.
+IVF_TOPK = 5
+IVF_NPROBE = 2
 #: Hard negatives mined per query.
 HARDNEG_TOPK = 10
 
@@ -51,7 +54,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    dims: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
@@ -63,19 +65,19 @@ def brute_force_topk(
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__qnorm"),
     )
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "cosine_sim",
-            dot(F.col("__qvec"), F.col("__cvec"), dims)
+            dot(F.col("__qvec"), F.col("__cvec"))
             / (F.col("__qnorm") * F.col("__cnorm")),
         )
     )
@@ -89,11 +91,7 @@ def brute_force_topk(
     )
 
 
-def hard_negatives_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dims: int | None = None,
-) -> DataFrame:
+def hard_negatives_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Contrastive-training hard-negative mining: for each query vector,
     the top-``HARDNEG_TOPK`` most-similar corpus vectors with a DIFFERENT
     label — the near-misses a contrastive objective learns the most from
@@ -112,20 +110,20 @@ def hard_negatives_topk(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("query_label"),
         F.col("embedding").alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__qnorm"),
     )
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("neighbor_label"),
         F.col("embedding").alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q))
         .filter(F.col("neighbor_label") != F.col("query_label"))
         .withColumn(
             "cosine_sim",
-            dot(F.col("__qvec"), F.col("__cvec"), dims)
+            dot(F.col("__qvec"), F.col("__cvec"))
             / (F.col("__qnorm") * F.col("__cnorm")),
         )
     )
@@ -146,10 +144,7 @@ def hard_negatives_topk(
     )
 
 
-def cell_centroids(
-    corpus: DataFrame,
-    cell_col: str = "label",
-) -> DataFrame:
+def cell_centroids(corpus: DataFrame, cell_col: str = "cell") -> DataFrame:
     """Per-cell mean vector: posexplode → mean per (cell, dim) → re-assemble.
 
     One shuffle keyed on (cell, dim) — tiny. The mean is computed as
@@ -189,10 +184,9 @@ def cell_centroids(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    cell_col: str = "label",
-    dims: int | None = 64,
+    k: int = IVF_TOPK,
+    nprobe: int = IVF_NPROBE,
+    cell_col: str = "cell",
 ) -> DataFrame:
     """IVF-style ANN: probe the ``nprobe`` nearest cells, brute-force inside.
 
@@ -204,14 +198,14 @@ def ivf_topk(
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__qnorm"),
     )
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("__cell_sim").desc(), F.col("cell").asc()
     )
     probes = (
         q.join(F.broadcast(cents))
-        .withColumn("__cell_sim", cosine(F.col("__qvec"), F.col("centroid"), dims))
+        .withColumn("__cell_sim", cosine(F.col("__qvec"), F.col("centroid")))
         .withColumn("__probe_rank", F.row_number().over(probe_w))
         .filter(F.col("__probe_rank") <= nprobe)
         .select("query_id", "__qvec", "__qnorm", "cell")
@@ -219,7 +213,7 @@ def ivf_topk(
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__cnorm"),
         F.col(cell_col).alias("cell"),
     )
     scored = (
@@ -227,7 +221,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "cosine_sim",
-            dot(F.col("__qvec"), F.col("__cvec"), dims)
+            dot(F.col("__qvec"), F.col("__cvec"))
             / (F.col("__qnorm") * F.col("__cnorm")),
         )
     )
@@ -241,15 +235,13 @@ def ivf_topk(
     )
 
 
-def _assign_broadcast(
-    corpus: DataFrame, cents: DataFrame, dims: int
-) -> DataFrame:
+def _assign_broadcast(corpus: DataFrame, cents: DataFrame) -> DataFrame:
     """Max-cosine assignment with centroids as a broadcast TABLE.
 
     One small cosine expression per (vector, centroid) row — the same
     shape that whole-stage-codegens cleanly in :func:`brute_force_topk`.
     A fused per-row argmax over all cells (whether literal-embedded or
-    packed into an array column) is ncells×2×dims products in one
+    packed into an array column) is ncells×2×EMB_DIMS products in one
     projection: janino rejects the >64KB method and Spark silently falls
     back to interpreted eval, and with literals every Lloyd round also
     recompiled from scratch. Here the expression text is identical across
@@ -266,7 +258,7 @@ def _assign_broadcast(
     from etl_pipeline_excel_sql__spark.functions.vectors import cosine_sql
 
     scored = corpus.crossJoin(F.broadcast(cents)).withColumn(
-        "__sim", F.expr(cosine_sql(dims))
+        "__sim", F.expr(cosine_sql())
     )
     return (
         scored.groupBy("vec_id")
@@ -337,41 +329,37 @@ def kmeans_train_assign(corpus: DataFrame, truncator=None) -> DataFrame:
     # retires the final cut — the same lifetime contract as before.
     for _ in range(IVF_ITERS - 1):
         cents = truncator.truncate(
-            cell_centroids(_assign_broadcast(corpus, cents, EMB_DIMS), "cell")
+            cell_centroids(_assign_broadcast(corpus, cents))
         )
-    return truncator.truncate(_assign_broadcast(corpus, cents, EMB_DIMS))
+    return truncator.truncate(_assign_broadcast(corpus, cents))
 
 
-def ivf_topk_trained(
-    corpus: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
+def ivf_topk_trained(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF ANN over TRAINED k-means cells (no label stand-in).
 
-    Trains ``IVF_NCELLS`` centroids with :func:`kmeans_train_assign`, then runs
-    the standard IVF probe (the 2 nearest cells per query, exact
-    cosine inside). Same output schema as :func:`brute_force_topk`; recall
-    vs brute force is measured in tests/test_operators.py.
+    Trains ``IVF_NCELLS`` centroids with :func:`kmeans_train_assign`, then
+    runs the standard IVF probe (the ``IVF_NPROBE`` nearest cells per
+    query, exact cosine inside, top-``IVF_TOPK`` per query). Same output
+    schema as :func:`brute_force_topk`; recall vs brute force is measured
+    in tests/test_operators.py.
     """
-    assigned = kmeans_train_assign(corpus)
-    return ivf_topk(assigned, queries, k=k, cell_col="cell", dims=EMB_DIMS)
+    return ivf_topk(kmeans_train_assign(corpus), queries)
 
 
 def cosine_neardup_pairs(
     corpus: DataFrame,
     threshold: float,
-    dims: int | None = None,
     srp_bits: int = 0,
-    srp_tables: int = 1,
-    srp_plane_stride: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs: cosine ≥ threshold, blocked + LSH-bucketed.
 
     Candidate generation composes two keys:
 
     * the ``label`` column — hard partition (IVF-style cell / label);
-    * ``srp_bits``/``srp_tables`` — multi-table signed-random-projection
-      LSH: each vector gets ``srp_tables`` independent ``srp_bits``-bit
-      signatures, and a pair is a candidate when it matches in ANY table.
+    * ``srp_bits`` — multi-table signed-random-projection LSH: each
+      vector gets ``SRP_NEARDUP_TABLES`` independent ``srp_bits``-bit
+      signatures (``functions/vectors.srp_buckets_long``), and a pair is
+      a candidate when it matches in ANY table.
 
     With SRP enabled, no cell is quadratic: the self-join key is
     (block, table, bucket), and the shuffle carries only (id, key) rows —
@@ -386,7 +374,7 @@ def cosine_neardup_pairs(
     base = corpus.select(
         F.col("vec_id").alias("__id"),
         F.col("embedding").alias("__vec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__norm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__norm"),
         F.col("label").alias("__block"),
     )
 
@@ -402,12 +390,9 @@ def cosine_neardup_pairs(
             "__id",
             "__vec",
             srp_bits,
-            dims,
-            srp_tables,
             extra_cols=("__block",),
-            plane_stride=srp_plane_stride,
         )
-        # The key table is tiny (srp_tables rows of four scalars per
+        # The key table is tiny (SRP_NEARDUP_TABLES rows of four scalars per
         # vector) but its signature subtree is wide, and both sides of
         # the self-join read it.
         keys = shared_slot(
@@ -452,7 +437,7 @@ def cosine_neardup_pairs(
     return (
         joined.withColumn(
             "cosine_sim",
-            dot(F.col("vec_a"), F.col("vec_b"), dims)
+            dot(F.col("vec_a"), F.col("vec_b"))
             / (F.col("norm_a") * F.col("norm_b")),
         )
         .filter(F.col("cosine_sim") >= threshold)
@@ -463,10 +448,7 @@ def cosine_neardup_pairs(
 def srp_candidate_stats(
     corpus: DataFrame,
     block_col: str | None = "label",
-    dims: int | None = None,
     srp_bits: int = 6,
-    srp_tables: int = 1,
-    srp_plane_stride: int | None = None,
 ) -> dict:
     """Bucket-occupancy and candidate-pair diagnostics for the SRP
     blocking that :func:`cosine_neardup_pairs` (and the semantic-dedup
@@ -484,10 +466,14 @@ def srp_candidate_stats(
     * ``distinct_candidates`` — after cross-table pair dedup, the exact
       cosine verifications actually performed.
 
+    The keys are the operator's own: ``srp_bits``-bit signatures in
+    ``SRP_NEARDUP_TABLES`` tables from
+    ``functions/vectors.srp_buckets_long``.
+
     Why it exists (VERDICT r6): ``neardup_cosine`` grew 6.5× on 10×
     data — sublinear, but the growth must be ATTRIBUTABLE before tuning
-    ``srp_bits``/``srp_tables`` at the next decade. Recording these per
-    SF decomposes wall-clock growth into bucket-occupancy growth
+    ``srp_bits`` or ``SRP_NEARDUP_TABLES`` at the next decade. Recording
+    these per SF decomposes wall-clock growth into bucket-occupancy growth
     (raw_candidates) vs cross-table overlap (distinct/raw ratio); the
     scaling probe (tools/bench_scaling.py) stores them alongside the
     timings. All aggregation is bucket-keyed and map-side combined —
@@ -510,10 +496,7 @@ def srp_candidate_stats(
         "__id",
         "__vec",
         srp_bits,
-        dims,
-        srp_tables,
         extra_cols=("__block",) if block_col else (),
-        plane_stride=srp_plane_stride,
     ).persist()
     key_cols = (["__block"] if block_col else []) + ["__table", "__bucket"]
     occ = keys.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("sz"))
@@ -683,19 +666,19 @@ def sq8_rerank_topk(
     qv = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), EMB_DIMS)).alias("__qnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__qnorm"),
     )
     cv = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), EMB_DIMS)).alias("__cnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__cnorm"),
     )
     rer = (
         cv.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qv), "query_id")
         .withColumn(
             "cosine_sim",
-            dot(F.col("__qvec"), F.col("__cvec"), EMB_DIMS)
+            dot(F.col("__qvec"), F.col("__cvec"))
             / (F.col("__qnorm") * F.col("__cnorm")),
         )
     )
@@ -715,7 +698,6 @@ def margin_topk(
     k_nn: int = 4,
     candidates: int = 20,
     k: int = 3,
-    dims: int = 64,
 ) -> DataFrame:
     """Margin-scored mining pairs (the bitext-mining criterion of
     Artetxe & Schwenk, TACL 2019, *distance* variant): a neighbor is a
@@ -743,12 +725,12 @@ def margin_topk(
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__qnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__qnorm"),
     )
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("__cvec"),
-        F.sqrt(l2_norm_sq(F.col("embedding"), dims)).alias("__cnorm"),
+        F.sqrt(l2_norm_sq(F.col("embedding"))).alias("__cnorm"),
     )
     scored = (
         c.join(F.broadcast(q))
@@ -757,7 +739,7 @@ def margin_topk(
             "query_id",
             "neighbor_id",
             F.floor(
-                dot(F.col("__qvec"), F.col("__cvec"), dims)
+                dot(F.col("__qvec"), F.col("__cvec"))
                 / (F.col("__qnorm") * F.col("__cnorm"))
                 * F.lit(1000000.0)
             )

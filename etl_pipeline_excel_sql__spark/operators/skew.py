@@ -19,7 +19,7 @@ replicate×random pairing preserves the join multiset).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

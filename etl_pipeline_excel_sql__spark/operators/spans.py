@@ -110,9 +110,6 @@ def packed_doc_pos(pos_col: str = "pos"):
     )
 
 
-_packed_key = packed_doc_pos
-
-
 def cut_occurrences(occ: DataFrame) -> DataFrame:
     """Occurrences to remove: every (doc_id, pos) of a k-gram seen
     2+ times corpus-wide, EXCEPT the canonical first
@@ -134,7 +131,7 @@ def cut_occurrences(occ: DataFrame) -> DataFrame:
     size-gated by the engine (the duplicated-gram table grows with the
     corpus — forced broadcast here is the banned census pattern).
     """
-    packed = _packed_key()
+    packed = packed_doc_pos()
     dup = (
         occ.groupBy("h")
         .agg(

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,7 +30,6 @@ from etl_pipeline_excel_sql__spark.functions.cleaning import (
     percent_format,
 )
 from etl_pipeline_excel_sql__spark.functions.normalize import (
-    norm_header,
     normalize_colname,
     quote,
     safe_fname_token,

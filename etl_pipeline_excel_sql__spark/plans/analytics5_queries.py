@@ -629,11 +629,6 @@ ORACLE["bpe_token_ids"] = bpe_token_ids_unrolled_sql()
 QUERIES["bpe_token_ids"] = q_bpe_token_ids
 
 
-#: doc ids per prefix-sum range (two-phase global offset; small here so
-#: the range table is non-trivial even at sf0.001)
-PACK_IDS_RANGE = 100
-
-
 def q_pack_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pretraining-batch pipeline: train BPE (batched), encode
     documents to token ids, and pack them into fixed-length sequences
@@ -657,9 +652,7 @@ def q_pack_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
     ids = bpe_doc_token_ids(docs, merges, words=words)
-    return render_packed_for_harness(
-        pack_lm_sequences(ids, PACK_SEQ_LEN, range_size=PACK_IDS_RANGE)
-    )
+    return render_packed_for_harness(pack_lm_sequences(ids, PACK_SEQ_LEN))
 
 
 ORACLE["pack_token_ids"] = bpe_packed_sequences_unrolled_sql(

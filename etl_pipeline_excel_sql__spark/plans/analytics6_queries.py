@@ -95,19 +95,18 @@ def q_agg_mode_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _median_by_rank(
-    ranked: DataFrame, val: str, out: str, group: str = "event_type"
-) -> DataFrame:
-    """Exact per-``group`` median of ``val`` from a (group, val, rn, cnt)
-    frame: the value at rank (cnt+1)//2 averaged with the value at rank
-    (cnt+2)//2 (the same rank when cnt is odd — one row survives the OR).
+def _median_by_rank(ranked: DataFrame, val: str, out: str) -> DataFrame:
+    """Exact per-``event_type`` median of ``val`` from an (event_type,
+    val, rn, cnt) frame: the value at rank (cnt+1)//2 averaged with the
+    value at rank (cnt+2)//2 (the same rank when cnt is odd — one row
+    survives the OR).
     Averaging two doubles is a commutative add + halve: bit-identical on
     both engines regardless of which engine visits which row first."""
     mid = ranked.filter(
         (F.col("rn") == F.expr("(cnt + 1) div 2"))
         | (F.col("rn") == F.expr("(cnt + 2) div 2"))
     )
-    return mid.groupBy(group).agg(
+    return mid.groupBy("event_type").agg(
         (F.sum(val) / F.count(F.lit(1))).alias(out)
     )
 

@@ -180,7 +180,7 @@ _CENTROID_CTE = _A5_ORACLE["emb_label_centroids"]
 # functions/text.py (same definitions as the text_lang_id oracle).
 
 
-def _sw_hits(lang: str) -> str:
+def _text_sw_hits(lang: str) -> str:
     from etl_pipeline_excel_sql__spark.functions.text import STOPWORDS
 
     arr = ", ".join(f"'{w}'" for w in STOPWORDS[lang])
@@ -212,8 +212,8 @@ ORACLE: dict[str, str] = {
             END AS pred_lang
           FROM (
             SELECT lang,
-              {_sw_hits('de')} AS h_de, {_sw_hits('en')} AS h_en,
-              {_sw_hits('es')} AS h_es, {_sw_hits('fr')} AS h_fr
+              {_text_sw_hits('de')} AS h_de, {_text_sw_hits('en')} AS h_en,
+              {_text_sw_hits('es')} AS h_es, {_text_sw_hits('fr')} AS h_fr
             FROM (SELECT lang, {WS_TOKENS_SQL} AS toks FROM documents)
           )
         ), cells AS (

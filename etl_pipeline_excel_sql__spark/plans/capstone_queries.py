@@ -392,7 +392,6 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         minhash_lsh_pairs,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        MINHASH_THRESHOLD,
         NEW_SOURCES,
     )
 
@@ -404,10 +403,7 @@ def _curation_state(spark: SparkSession, sf_dir: str) -> str:
         _quality_scores(train).write.mode("overwrite").parquet(
             f"{path}/scores"
         )
-        base_pairs = minhash_lsh_pairs(
-            corpus,
-            threshold=MINHASH_THRESHOLD,
-        ).select("id_a", "id_b")
+        base_pairs = minhash_lsh_pairs(corpus).select("id_a", "id_b")
         connected_components(base_pairs).select(
             "member_id", "cluster_id"
         ).write.mode("overwrite").parquet(f"{path}/labels")
@@ -474,7 +470,6 @@ def _incremental_dispositions(
         minhash_lsh_pairs_ingest_indexed,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        MINHASH_THRESHOLD,
         NEW_SOURCES,
     )
 
@@ -503,7 +498,6 @@ def _incremental_dispositions(
         batch,
         spark.read.parquet(f"{path}/mh_bands"),
         spark.read.parquet(f"{path}/mh_sets"),
-        threshold=MINHASH_THRESHOLD,
     ).select("id_a", "id_b")
     comp = connected_components(
         label_edges.unionByName(delta)

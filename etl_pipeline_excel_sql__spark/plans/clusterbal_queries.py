@@ -25,7 +25,6 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
     H60_SQL,
     md5_hash60,
 )
-from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     IVF_ITERS,
     IVF_NCELLS,
@@ -77,13 +76,11 @@ def _cb_sql() -> str:
   FROM (SELECT vec_id, embedding FROM embeddings
         ORDER BY vec_id LIMIT {IVF_NCELLS})
 )""",
-        f"a0 AS ({_kmeans_assign_sql('init', EMB_DIMS)}\n)",
+        f"a0 AS ({_kmeans_assign_sql('init')}\n)",
     ]
     for i in range(1, IVF_ITERS):
-        ctes.append(
-            f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}', EMB_DIMS)}\n)"
-        )
-        ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}', EMB_DIMS)}\n)")
+        ctes.append(f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}')}\n)")
+        ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}')}\n)")
     last = f"a{IVF_ITERS - 1}"
     return f"""
 WITH {', '.join(ctes)}

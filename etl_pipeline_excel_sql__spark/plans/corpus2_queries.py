@@ -38,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.hashing import H60_SQL
 from etl_pipeline_excel_sql__spark.functions.text import (
     WS_TOKENS_SQL,
     ws_tokens,

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     HARDNEG_TOPK,
     hard_negatives_topk,
@@ -33,7 +32,6 @@ def q_hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hard_negatives_topk(
         emb,
         emb.filter(F.col("vec_id") < HARDNEG_QUERY_MAX_ID),
-        dims=EMB_DIMS,
     )
 
 
@@ -41,7 +39,7 @@ ORACLE["hard_negatives_topk"] = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, q.label AS query_label,
          c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         {_cos_sql('q.embedding', 'c.embedding', EMB_DIMS)} AS cosine_sim
+         {_cos_sql('q.embedding', 'c.embedding')} AS cosine_sim
   FROM (SELECT * FROM embeddings WHERE vec_id < {HARDNEG_QUERY_MAX_ID}) q
   CROSS JOIN embeddings c
   WHERE c.label <> q.label
@@ -78,14 +76,13 @@ def q_margin_mining_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         k_nn=MARGIN_KNN,
         candidates=MARGIN_CANDIDATES,
         k=MARGIN_OUT_K,
-        dims=EMB_DIMS,
     )
 
 
 ORACLE["margin_mining_topk"] = f"""
 WITH scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(floor({_cos_sql('q.embedding', 'c.embedding', EMB_DIMS)}
+         CAST(floor({_cos_sql('q.embedding', 'c.embedding')}
               * 1000000.0) AS BIGINT) AS cos_ppm
   FROM (SELECT * FROM embeddings WHERE vec_id < {MARGIN_QUERY_MAX_ID}) q
   CROSS JOIN embeddings c

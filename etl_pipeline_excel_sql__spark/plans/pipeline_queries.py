@@ -26,13 +26,20 @@ from etl_pipeline_excel_sql__spark.functions.text import (
     ws_token_count,
     ws_tokens,
 )
-from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
+from etl_pipeline_excel_sql__spark.functions.vectors import (
+    EMB_DIMS,
+    SRP_NEARDUP_MAX_BITS,
+    SRP_NEARDUP_TABLES,
+)
 from etl_pipeline_excel_sql__spark.operators.dedup import (
+    CONTAINMENT_THRESHOLD,
     MINHASH_BAND_ROWS,
     MINHASH_K,
     MINHASH_PRIME,
     MINHASH_SHINGLE_N,
+    MINHASH_THRESHOLD,
     NGRAM_BOTTOM_K,
+    NGRAM_THRESHOLD,
     affine_consts,
     exact_dedup,
     jaccard_prefix_pairs,
@@ -54,9 +61,10 @@ from etl_pipeline_excel_sql__spark.operators.multimodal import (
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     IVF_ITERS,
     IVF_NCELLS,
+    IVF_NPROBE,
+    IVF_TOPK,
     brute_force_topk,
     cosine_neardup_pairs,
-    ivf_topk,
     ivf_topk_trained,
 )
 from etl_pipeline_excel_sql__spark.sources.registry import (
@@ -75,17 +83,12 @@ _BAND_BUCKET_SQL = " || ',' || ".join(
     f"CAST(mh[{MINHASH_BAND_ROWS} * b + {r + 1}] AS VARCHAR)"
     for r in range(MINHASH_BAND_ROWS)
 )
-MINHASH_THRESHOLD = 0.1
-NGRAM_THRESHOLD = 0.05
-CONTAINMENT_THRESHOLD = 0.2
 SRP_NEARDUP_BITS = 6
-SRP_NEARDUP_TABLES = 3
 #: Adaptive SRP sizing (SCALING.md knob rule, measured round 7): hold
 #: expected bucket occupancy ~constant by growing bits with the corpus —
 #: each +1 bit halves occupancy and ~quarters candidate pairs. The r7
 #: sf1 probe showed the fixed-6-bit family going quadratic (10× vectors
 #: → ~100× candidate pairs); bits ≈ log2(n / target_bucket) is the fix.
-SRP_NEARDUP_MAX_BITS = 16
 SRP_TARGET_BUCKET = 16
 
 
@@ -156,10 +159,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(
-        load_table(spark, "documents", sf_dir),
-        threshold=MINHASH_THRESHOLD,
-    )
+    return minhash_lsh_pairs(load_table(spark, "documents", sf_dir))
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,10 +167,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(
-        load_table(spark, "documents", sf_dir),
-        threshold=NGRAM_THRESHOLD,
-    )
+    return ngram_jaccard_pairs(load_table(spark, "documents", sf_dir))
 
 
 #: exact-recall Jaccard threshold p/q (0.5 — the clone band: 25 true
@@ -196,10 +193,7 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-dup: containment |A∩B| / min(|A|,|B|) — catches a
     short document embedded in a longer one, which Jaccard scores near 0."""
-    return ngram_containment_pairs(
-        load_table(spark, "documents", sf_dir),
-        threshold=CONTAINMENT_THRESHOLD,
-    )
+    return ngram_containment_pairs(load_table(spark, "documents", sf_dir))
 
 
 def q_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,23 +208,20 @@ def q_neardup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_neardup_pairs(
         emb,
         threshold=COSINE_THRESHOLD,
-        dims=EMB_DIMS,
         srp_bits=adaptive_srp_bits(emb.count()),
-        srp_tables=SRP_NEARDUP_TABLES,
-        srp_plane_stride=SRP_NEARDUP_MAX_BITS,
     )
 
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10, dims=EMB_DIMS)
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF over TRAINED k-means cells (Lloyd rounds as DataFrame ops);
     the oracle unrolls the identical deterministic rounds in SQL."""
     emb = load_table(spark, "embeddings", sf_dir)
-    return ivf_topk_trained(emb, emb.filter(F.col("vec_id") < 5), k=5)
+    return ivf_topk_trained(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,9 +241,7 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.join(cand, emb.vec_id == F.col("__cand_id")).select(
         "vec_id", "embedding"
     )
-    return brute_force_topk(
-        corpus, emb.filter(F.col("vec_id") < 3), k=5, dims=EMB_DIMS
-    )
+    return brute_force_topk(corpus, emb.filter(F.col("vec_id") < 3), k=5)
 
 
 def q_multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,7 +262,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     media = documents_as_media(load_table(spark, "documents", sf_dir))
-    frames = sample_frames(media, every_ms=100)
+    frames = sample_frames(media)
     return frames.select(
         "media_id",
         "frame_index",
@@ -301,10 +290,11 @@ def _sw_hits(lang: str) -> str:
     return f"len(list_filter(toks, t -> list_contains({_STOP[lang]}, t)))"
 
 
-def _cos_sql(a: str, b: str, dims: int = 64) -> str:
+def _cos_sql(a: str, b: str) -> str:
     """Sequential-fold cosine — mirrors functions/vectors.py exactly."""
     dot = (
-        f"list_reduce(list_prepend(0.0, list_transform(range(1, {dims + 1}), "
+        "list_reduce(list_prepend(0.0, list_transform("
+        f"range(1, {EMB_DIMS + 1}), "
         f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), (x, y) -> x + y)"
     )
     na = (
@@ -339,7 +329,7 @@ WITH base AS (
   SELECT doc_id, sh,
     [{', '.join(
         f"list_min(list_transform(hb, h -> ({a} * h + {b}) % {MINHASH_PRIME}))"
-        for a, b in affine_consts(MINHASH_K)
+        for a, b in affine_consts()
     )}] AS mh
   FROM hashed
 ), bands AS (
@@ -476,7 +466,7 @@ WHERE len(list_intersect(x.sh, y.sh))::DOUBLE
 
 
 def _srp_sql(
-    max_bits: int, dims: int = 64, plane_offset: int = 0, gate: str | None = None
+    max_bits: int, plane_offset: int = 0, gate: str | None = None
 ) -> str:
     """SRP bucket as a BIGINT bit-sum. With ``gate`` (a SQL ref to the
     runtime bit count, e.g. ``nv.bits``), the expression enumerates all
@@ -493,7 +483,8 @@ def _srp_sql(
         ).format(j=j)
         comp = f"(({h} % 100000)::DOUBLE / 100000.0 - 0.5)"
         proj = (
-            f"list_reduce(list_prepend(0.0, list_transform(range(1, {dims + 1}), "
+            "list_reduce(list_prepend(0.0, list_transform("
+            f"range(1, {EMB_DIMS + 1}), "
             f"i -> embedding[i]::DOUBLE * {comp})), (x, y) -> x + y)"
         )
         cond = f"{proj} > 0" if gate is None else f"{jj} < {gate} AND {proj} > 0"
@@ -508,7 +499,7 @@ WITH {_NV_CTE},
 sig AS (
   {" UNION ALL ".join(
       f'''SELECT vec_id, label, {t} AS t,
-          {_srp_sql(SRP_NEARDUP_MAX_BITS, EMB_DIMS,
+          {_srp_sql(SRP_NEARDUP_MAX_BITS,
                     plane_offset=t * SRP_NEARDUP_MAX_BITS, gate="nv.bits")}
             AS bucket FROM embeddings, nv'''
       for t in range(SRP_NEARDUP_TABLES)
@@ -539,74 +530,70 @@ WHERE c.vec_id <> q.vec_id
 QUALIFY rank <= 10
 """
 
-def _kmeans_means_sql(src: str, dims: int) -> str:
+def _kmeans_means_sql(src: str) -> str:
     """Per-cell mean centroids (decimal-exact sums, mirrors
     operators/similarity.cell_centroids)."""
     return f"""
   SELECT cell,
-    list_transform(range(1, {dims + 1}), i ->
+    list_transform(range(1, {EMB_DIMS + 1}), i ->
       CAST(list_sum(list_transform(vecs, v -> v[i]::DOUBLE::DECIMAL(20,10))) AS DOUBLE) / n
     ) AS centroid
   FROM (SELECT cell, list(embedding) AS vecs, COUNT(*) AS n
         FROM {src} GROUP BY cell)"""
 
 
-def _kmeans_assign_sql(cents: str, dims: int) -> str:
+def _kmeans_assign_sql(cents: str) -> str:
     """Max-cosine assignment (ties → lowest cell), mirrors
     ``similarity._assign_broadcast``."""
     return f"""
   SELECT vec_id, embedding, cell FROM (
     SELECT e.vec_id, e.embedding, i.cell,
            row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_cos_sql('e.embedding', 'i.centroid', dims)} DESC,
+             ORDER BY {_cos_sql('e.embedding', 'i.centroid')} DESC,
                       i.cell ASC) AS rn
     FROM embeddings e CROSS JOIN {cents} i
   ) WHERE rn = 1"""
 
 
-def _ivf_trained_sql(
-    ncells: int, iters: int, dims: int, k: int, nprobe: int
-) -> str:
+def _ivf_trained_sql() -> str:
     """Unrolled Lloyd rounds + IVF probe — the oracle twin of
     ivf_topk_trained (same seeds, same round count, same probe)."""
     ctes = [
         f"""init AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          list_transform(embedding, x -> x::DOUBLE) AS centroid
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {ncells})
+  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT {IVF_NCELLS})
 )""",
-        f"a0 AS ({_kmeans_assign_sql('init', dims)}\n)",
+        f"a0 AS ({_kmeans_assign_sql('init')}\n)",
     ]
-    for i in range(1, iters):
-        ctes.append(f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}', dims)}\n)")
-        ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}', dims)}\n)")
-    last = f"a{iters - 1}"
-    ctes.append(f"cfinal AS ({_kmeans_means_sql(last, dims)}\n)")
+    for i in range(1, IVF_ITERS):
+        ctes.append(f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}')}\n)")
+        ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}')}\n)")
+    last = f"a{IVF_ITERS - 1}"
+    ctes.append(f"cfinal AS ({_kmeans_means_sql(last)}\n)")
     ctes.append(
         f"""probes AS (
   SELECT q.vec_id AS query_id, q.embedding AS qvec, cfinal.cell
   FROM (SELECT * FROM embeddings WHERE vec_id < 5) q CROSS JOIN cfinal
   QUALIFY row_number() OVER (PARTITION BY q.vec_id
-    ORDER BY {_cos_sql('q.embedding', 'cfinal.centroid', dims)} DESC,
-             cfinal.cell ASC) <= {nprobe}
+    ORDER BY {_cos_sql('q.embedding', 'cfinal.centroid')} DESC,
+             cfinal.cell ASC) <= {IVF_NPROBE}
 )"""
     )
     return f"""
 WITH {', '.join(ctes)}
 SELECT p.query_id, c.vec_id AS neighbor_id,
-       {_cos_sql('p.qvec', 'c.embedding', dims)} AS cosine_sim,
+       {_cos_sql('p.qvec', 'c.embedding')} AS cosine_sim,
        CAST(row_number() OVER (PARTITION BY p.query_id
-            ORDER BY {_cos_sql('p.qvec', 'c.embedding', dims)} DESC,
+            ORDER BY {_cos_sql('p.qvec', 'c.embedding')} DESC,
                      c.vec_id ASC) AS INT) AS rank
 FROM probes p JOIN {last} c ON c.cell = p.cell
 WHERE c.vec_id <> p.query_id
-QUALIFY rank <= {k}
+QUALIFY rank <= {IVF_TOPK}
 """
 
 
-_ANN_IVF_SQL = _ivf_trained_sql(
-    ncells=IVF_NCELLS, iters=IVF_ITERS, dims=EMB_DIMS, k=5, nprobe=2
-)
+_ANN_IVF_SQL = _ivf_trained_sql()
 
 ORACLE: dict[str, str] = {
     "text_token_count": f"""
@@ -681,8 +668,9 @@ QUALIFY rank <= 5""",
                md5(text) AS content_hash
         FROM documents""",
     # replays sample_frames' deterministic fake: duration_ms =
-    # max(byte_length, 1); one frame per 100 ms tick (every_ms=100); frame
-    # bytes = md5(utf8(text) || ascii(ms)) — VARCHAR md5 hashes same bytes.
+    # max(byte_length, 1); one frame per 100 ms tick (its every_ms
+    # default); frame bytes = md5(utf8(text) || ascii(ms)) — VARCHAR md5
+    # hashes same bytes.
     "multimodal_frames": """
         WITH d AS (
           SELECT doc_id,
@@ -782,7 +770,7 @@ def q_ann_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE["ann_srp_buckets"] = f"""
-    SELECT vec_id, {_srp_sql(8, EMB_DIMS)} AS srp_bucket FROM embeddings
+    SELECT vec_id, {_srp_sql(8)} AS srp_bucket FROM embeddings
 """
 QUERIES["ann_srp_buckets"] = q_ann_srp_buckets
 
@@ -800,10 +788,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    pairs = minhash_lsh_pairs(
-        load_table(spark, "documents", sf_dir),
-        threshold=MINHASH_THRESHOLD,
-    )
+    pairs = minhash_lsh_pairs(load_table(spark, "documents", sf_dir))
     return connected_components(pairs)
 
 
@@ -838,10 +823,7 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    pairs = minhash_lsh_pairs(
-        load_table(spark, "documents", sf_dir),
-        threshold=MINHASH_THRESHOLD,
-    )
+    pairs = minhash_lsh_pairs(load_table(spark, "documents", sf_dir))
     return connected_components(pairs, algorithm="star")
 
 
@@ -879,10 +861,7 @@ def q_semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cosine_neardup_pairs(
         emb,
         threshold=COSINE_THRESHOLD,
-        dims=EMB_DIMS,
         srp_bits=adaptive_srp_bits(emb.count()),
-        srp_tables=SRP_NEARDUP_TABLES,
-        srp_plane_stride=SRP_NEARDUP_MAX_BITS,
     )
     comp = connected_components(pairs)
     drop = comp.filter(F.col("member_id") != F.col("cluster_id")).select(
@@ -1209,11 +1188,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     is_new = F.col("source").isin(*NEW_SOURCES)
-    return minhash_lsh_pairs_cross(
-        docs.filter(is_new),
-        docs.filter(~is_new),
-        threshold=MINHASH_THRESHOLD,
-    )
+    return minhash_lsh_pairs_cross(docs.filter(is_new), docs.filter(~is_new))
 
 
 _NEW_SRC_SQL = ", ".join(f"'{s}'" for s in NEW_SOURCES)
@@ -1234,7 +1209,7 @@ WITH base AS (
   SELECT doc_id, side, sh,
     [{', '.join(
         f"list_min(list_transform(hb, h -> ({a} * h + {b}) % {MINHASH_PRIME}))"
-        for a, b in affine_consts(MINHASH_K)
+        for a, b in affine_consts()
     )}] AS mh
   FROM hashed
 ), bands AS (
@@ -1299,10 +1274,7 @@ def q_dedup_clusters_incremental(
     def build(path: str) -> None:
         """The corpus-only state a production ingest loads, never
         recomputes: cluster labels plus the MinHash band/set index."""
-        base_pairs = minhash_lsh_pairs(
-            corpus,
-            threshold=MINHASH_THRESHOLD,
-        ).select("id_a", "id_b")
+        base_pairs = minhash_lsh_pairs(corpus).select("id_a", "id_b")
         connected_components(base_pairs).select(
             "member_id", "cluster_id"
         ).write.mode("overwrite").parquet(f"{path}/labels")
@@ -1322,7 +1294,6 @@ def q_dedup_clusters_incremental(
         new_docs,
         spark.read.parquet(f"{path}/mh_bands"),
         spark.read.parquet(f"{path}/mh_sets"),
-        threshold=MINHASH_THRESHOLD,
     ).select("id_a", "id_b")
     label_edges = state.select(
         F.col("member_id").alias("id_a"), F.col("cluster_id").alias("id_b")
@@ -1454,11 +1425,7 @@ def q_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b", "jaccard_ppm"
     )
     cand = (
-        minhash_lsh_pairs(
-            docs,
-            threshold=MINHASH_THRESHOLD,
-            exploded=exploded,
-        )
+        minhash_lsh_pairs(docs, exploded=exploded)
         .select("id_a", "id_b")
         .withColumn("__hit", F.lit(1))
     )
@@ -1585,11 +1552,7 @@ def q_lsh_recall_audit_sampled(
         exploded=exploded,
     ).select("id_a", "id_b", "jaccard_ppm")
     cand = (
-        minhash_lsh_pairs(
-            sampled,
-            threshold=MINHASH_THRESHOLD,
-            exploded=exploded,
-        )
+        minhash_lsh_pairs(sampled, exploded=exploded)
         .select("id_a", "id_b")
         .withColumn("__hit", F.lit(1))
     )
@@ -1783,7 +1746,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).swap(shingle_rows(docs, MINHASH_SHINGLE_N))
     sig = shared_slot(
         spark, "pipeline.tuning_signatures", SignatureCache
-    ).swap(_minhash_signatures(exploded, MINHASH_K))
+    ).swap(_minhash_signatures(exploded))
     truth = _shared_jaccard_truth(spark, sf_dir, docs, exploded).select(
         "id_a", "id_b"
     )
@@ -1791,7 +1754,7 @@ def q_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows = []
     for r in BAND_TUNING_ROWS:
-        bands = sig.select("__id", _minhash_band_expr(MINHASH_K, r))
+        bands = sig.select("__id", _minhash_band_expr(r))
         cand = (
             bands.alias("l")
             .join(bands.alias("r"), on=["band", "bucket"])
@@ -1845,7 +1808,7 @@ mh_base AS MATERIALIZED (
   SELECT doc_id,
     [{', '.join(
         f"list_min(list_transform(hb, h -> ({a} * h + {b}) % {MINHASH_PRIME}))"
-        for a, b in affine_consts(MINHASH_K)
+        for a, b in affine_consts()
     )}] AS mh
   FROM mh_hashed
 ), truth AS MATERIALIZED (

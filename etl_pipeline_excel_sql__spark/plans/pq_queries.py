@@ -16,7 +16,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.pq import (
-    PQ_K,
     ivfpq_residual_sql,
     ivfpq_residual_topk,
     ivfpq_sql,
@@ -55,7 +54,7 @@ def q_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb, cb = _trained(spark, sf_dir)
     codes = pq_encode(emb, cb)
     queries = emb.filter("vec_id < 5")
-    return pq_adc_topk(codes, cb, queries, k=PQ_K)
+    return pq_adc_topk(codes, cb, queries)
 
 
 QUERIES = {
@@ -74,7 +73,7 @@ def q_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ-ADC ranks inside the probed cells (``operators/pq.ivfpq_topk``;
     raw-vector codes — the stated no-residual simplification)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    return ivfpq_topk(emb, emb.filter("vec_id < 5"), k=PQ_K)
+    return ivfpq_topk(emb, emb.filter("vec_id < 5"))
 
 
 QUERIES["ivfpq_adc"] = q_ivfpq_adc
@@ -85,7 +84,7 @@ def q_ivfpq_residual_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical IVFADC: PQ codes quantize the per-cell RESIDUALS, with
     cell-dependent query lookup tables (``ivfpq_residual_topk``)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    return ivfpq_residual_topk(emb, emb.filter("vec_id < 5"), k=PQ_K)
+    return ivfpq_residual_topk(emb, emb.filter("vec_id < 5"))
 
 
 QUERIES["ivfpq_residual_adc"] = q_ivfpq_residual_adc
@@ -153,7 +152,7 @@ WITH ex AS (
   FROM qd QUALIFY crank <= {SQ8_CANDIDATES}
 ), rer AS (
   SELECT cand.query_id, cand.neighbor_id, cand.qdot,
-         {_cos_sql('q.embedding', 'c.embedding', EMB_DIMS)} AS cosine_sim
+         {_cos_sql('q.embedding', 'c.embedding')} AS cosine_sim
   FROM cand
   JOIN embeddings q ON q.vec_id = cand.query_id
   JOIN embeddings c ON c.vec_id = cand.neighbor_id

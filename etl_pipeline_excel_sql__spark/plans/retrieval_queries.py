@@ -48,7 +48,6 @@ from etl_pipeline_excel_sql__spark.plans.pipeline_queries import _cos_sql
 from etl_pipeline_excel_sql__spark.sources.registry import built_dir, load_table
 from etl_pipeline_excel_sql__spark.functions.localframe import local_df
 from etl_pipeline_excel_sql__spark.functions.text import WS_TOKENS_SQL
-from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -227,12 +226,10 @@ QUERIES["bm25_contrib"] = q_bm25_contrib
 _SERVE_IDX = "bm25_serve_idx_"
 
 
-def _bm25_score_cte(qt: str, out: str) -> str:
-    """The scoring aggregate as a reusable CTE fragment, parameterized
-    by the query-table name — the PRF oracle rescoring pass must be the
-    IDENTICAL arithmetic over a different term batch."""
-    return f"""{out} AS MATERIALIZED (
-  SELECT {qt}.query_id, tf.doc_id,
+#: The PRF oracle's rescoring pass over the expanded term batch ``qt2``:
+#: the IDENTICAL arithmetic to ``bm25`` in ``_BM25_CTES``.
+_BM25B_CTE = f"""bm25b AS MATERIALIZED (
+  SELECT qt2.query_id, tf.doc_id,
          CAST(COUNT(*) AS INT) AS n_hit,
          CAST(SUM(CAST(
            (CAST(2 * (s.n_docs - f.df) + 1 AS HUGEINT)
@@ -244,10 +241,10 @@ def _bm25_score_cte(qt: str, out: str) -> str:
                  + {_C4} * CAST(d.dl AS HUGEINT) * s.n_docs))
            AS BIGINT)) AS BIGINT) AS score_u
   FROM tf
-  JOIN {qt} ON {qt}.term = tf.term
+  JOIN qt2 ON qt2.term = tf.term
   JOIN dfreq f ON f.term = tf.term
   JOIN dl d ON d.doc_id = tf.doc_id, stats s
-  GROUP BY {qt}.query_id, tf.doc_id
+  GROUP BY qt2.query_id, tf.doc_id
 )"""
 
 
@@ -288,7 +285,7 @@ qt2 AS MATERIALIZED (
   SELECT query_id, term FROM qt
   UNION ALL SELECT query_id, term FROM expn
 ),
-{_bm25_score_cte('qt2', 'bm25b')}
+{_BM25B_CTE}
 SELECT query_id, doc_id, n_hit, score_u,
        CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY score_u DESC, doc_id ASC) AS INT) AS rank
@@ -478,7 +475,6 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         emb.filter(F.col("vec_id") < 3),
         k=BM25_TOPK,
-        dims=EMB_DIMS,
     ).select(
         F.col("query_id").cast("int").alias("query_id"),
         F.col("neighbor_id").alias("doc_id"),
@@ -522,7 +518,7 @@ _HYBRID_CTES = f"""{_BM25_CTES},
 dense AS MATERIALIZED (
   SELECT CAST(q.vec_id AS INT) AS query_id, c.vec_id AS doc_id,
          CAST(row_number() OVER (PARTITION BY q.vec_id
-              ORDER BY {_cos_sql('q.embedding', 'c.embedding', EMB_DIMS)} DESC,
+              ORDER BY {_cos_sql('q.embedding', 'c.embedding')} DESC,
                        c.vec_id ASC) AS INT) AS rank
   FROM (SELECT * FROM embeddings WHERE vec_id < 3) q
   CROSS JOIN embeddings c

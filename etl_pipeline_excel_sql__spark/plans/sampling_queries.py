@@ -144,11 +144,9 @@ def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _hx = H60_SQL.format(x="'sample:' || CAST(doc_id AS VARCHAR)")
 _hs = H60_SQL.format(x="'shard:' || CAST(doc_id AS VARCHAR)")
 
-#: Mixture recipe for the registry rows: weights normalize to exact
-#: binary fractions (0.5/0.25/0.25) so the oracle's float arithmetic is
-#: bit-identical; es/zh are absent → weight 0 → dropped from the output.
+#: Character budget of the registry's mixture rows (recipe:
+#: ``operators/mixing.MIX_WEIGHTS``).
 MIX_BUDGET_CHARS = 30000
-MIX_WEIGHTS = {"en": 2.0, "de": 1.0, "fr": 1.0}
 
 
 def q_mix_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -159,9 +157,7 @@ def q_mix_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     doc = load_table(spark, "documents", sf_dir)
-    return domain_mixture_rates(
-        doc, "lang", "n_chars", MIX_BUDGET_CHARS, MIX_WEIGHTS
-    )
+    return domain_mixture_rates(doc, "lang", "n_chars", MIX_BUDGET_CHARS)
 
 
 def q_mix_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,7 +171,7 @@ def q_mix_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     return domain_mixture_sample(
-        doc, "lang", "doc_id", "n_chars", MIX_BUDGET_CHARS, MIX_WEIGHTS
+        doc, "lang", "doc_id", "n_chars", MIX_BUDGET_CHARS
     )
 
 

@@ -212,9 +212,6 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         render_packed_for_harness,
         word_frequencies,
     )
-    from etl_pipeline_excel_sql__spark.plans.analytics5_queries import (
-        PACK_IDS_RANGE,
-    )
 
     docs = load_table(spark, "documents", sf_dir)
     trimmed = (
@@ -230,9 +227,7 @@ def q_curate_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     ]
     ids = bpe_doc_token_ids(trimmed, merges, words=words)
-    return render_packed_for_harness(
-        pack_lm_sequences(ids, PACK_SEQ_LEN, range_size=PACK_IDS_RANGE)
-    )
+    return render_packed_for_harness(pack_lm_sequences(ids, PACK_SEQ_LEN))
 
 
 def _curate_pack_sql() -> str:

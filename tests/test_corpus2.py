@@ -96,7 +96,6 @@ def test_dedup_incremental_equals_filtered_self_join(spark, sf_dir):
         minhash_lsh_pairs,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        MINHASH_THRESHOLD,
         NEW_SOURCES,
         q_dedup_incremental,
     )
@@ -113,10 +112,7 @@ def test_dedup_incremental_equals_filtered_self_join(spark, sf_dir):
         .select("doc_id")
         .collect()
     }
-    allp = minhash_lsh_pairs(
-        docs,
-        threshold=MINHASH_THRESHOLD,
-    ).collect()
+    allp = minhash_lsh_pairs(docs).collect()
     want = []
     for r in allp:
         a, b, j = r["id_a"], r["id_b"], round(r["jaccard_sim"], 9)

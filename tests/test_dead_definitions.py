@@ -10,6 +10,10 @@ definition; what it does flag has no caller anywhere and should go.
 A stricter census counts only the names outside ``tests/``: a definition
 that only tests reach is surface no program uses, and stays only when
 ``TEST_ONLY`` lists it with its reason.
+
+A third census reads each package module's imports: a name an import
+binds is loaded somewhere in that module, or in a string annotation
+there. ``__init__.py`` re-exports are exempt.
 """
 
 from __future__ import annotations
@@ -92,3 +96,52 @@ def test_every_definition_has_a_caller_outside_tests():
     assert sorted(n for n, _ in test_only) == sorted(TEST_ONLY), sorted(
         where for _, where in test_only
     )
+
+
+def _annotation_names(tree: ast.AST):
+    """Names read inside string annotations (``x: "GroupState"``)."""
+    for node in ast.walk(tree):
+        anns = []
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            anns = [
+                x.annotation
+                for x in a.posonlyargs + a.args + a.kwonlyargs
+                + [a.vararg, a.kwarg]
+                if x
+            ] + [node.returns]
+        elif isinstance(node, ast.AnnAssign):
+            anns = [node.annotation]
+        for ann in filter(None, anns):
+            for c in ast.walk(ann):
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    for n in ast.walk(ast.parse(c.value, mode="eval")):
+                        if isinstance(n, ast.Name):
+                            yield n.id
+
+
+def test_every_import_is_used():
+    unused = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text(), str(path))
+        bound = {}
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for al in node.names:
+                    name = al.asname or al.name.split(".")[0]
+                    if name != "annotations":  # from __future__
+                        bound[name] = node.lineno
+        used = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        used.update(_annotation_names(tree))
+        unused += [
+            f"{path.relative_to(ROOT)}:{line} {name}"
+            for name, line in bound.items()
+            if name not in used
+        ]
+    assert not unused, unused

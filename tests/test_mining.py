@@ -3,14 +3,18 @@ label exclusion and ranking semantics on a hand corpus."""
 
 from __future__ import annotations
 
+from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     hard_negatives_topk,
 )
 
 
 def _emb(spark, rows):
+    """Hand-built vectors, zero-padded to ``EMB_DIMS`` (each zero adds
+    exactly +0.0 to every dot product and norm)."""
     return spark.createDataFrame(
-        rows, "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
+        [(i, v + [0.0] * (EMB_DIMS - len(v)), lab) for i, v, lab in rows],
+        "vec_id LONG, embedding ARRAY<FLOAT>, label INT",
     )
 
 
@@ -26,9 +30,7 @@ def test_hard_negatives_exclude_same_label(spark):
             (3, [0.0, 1.0], 1),
         ],
     )
-    rows = hard_negatives_topk(
-        corpus, corpus.filter("vec_id = 0"), dims=2
-    ).collect()
+    rows = hard_negatives_topk(corpus, corpus.filter("vec_id = 0")).collect()
     got = [(r.neighbor_id, r.rank) for r in sorted(rows, key=lambda r: r.rank)]
     assert got == [(2, 1), (3, 2)]  # 1 excluded despite top similarity
     assert all(r.neighbor_label != r.query_label for r in rows)

@@ -23,10 +23,17 @@ for the any-default rule):
   local assignment, loop target or import from outside the package
   binds, any other expression, ``*args`` or ``**kwargs``.
 
-The same resolver checks two more rules. A required parameter of a
-public function called outside ``tests/`` that every call, tests
-included, passes one value is a constant too. A keyword option that
-only tests set is listed with its reason, so a new one is a decision.
+The same resolver checks more rules. A keyword option that every
+caller outside ``tests/`` sets to one value other than its default is
+a constant spelled as a parameter with the wrong default: the value
+becomes the default (or a constant), unless ``KEPT_NON_DEFAULT`` lists
+the option with its reason. A required parameter of a function called
+outside ``tests/`` that every call, tests included, passes one value is
+a constant too. A keyword option that only tests set is listed with its
+reason, so a new one is a decision. The any-default and the
+required-parameter rules cover private (``_``-prefixed) helpers as
+well; since calls resolve by bare name, no private function name is
+defined in two package modules.
 
 Two rules outside the census: an UPPER_CASE name is assigned at module
 level in one package module only, so a constant is said once; and a
@@ -48,14 +55,20 @@ PKG = ROOT / "etl_pipeline_excel_sql__spark"
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 ANY = "<any value>"
 
-#: Options that keep one value in use, with the reason they stay.
+#: Boolean options that keep one value in use, with the reason they stay.
 KEPT = {
     "pagerank_integer.truncate_lineage": (
         "plan-test seam: tests build the untruncated plan to count hints"
     ),
-    "download_pipeline.inject_vba": (
-        "perfbench passes it explicitly, and perfbench's calls are fixed"
-    ),
+}
+
+_PERFBENCH = "perfbench passes it explicitly, and perfbench's calls are fixed"
+
+#: Options every caller outside ``tests/`` sets to one value other than
+#: the default, with the reason they stay.
+KEPT_NON_DEFAULT = {
+    "compare_pipeline.old_order_col": _PERFBENCH,
+    "download_pipeline.inject_vba": _PERFBENCH,
 }
 
 _CHECKPOINT_DIR = (
@@ -81,9 +94,12 @@ KEPT_UNSET = {
 
 _TEST_SEAM = "a test drives a path the registry's fixed inputs never reach"
 _SMALL_SPANS = "tests replay a naive transcription on short texts at k = 2-3"
+_MIX_REFERENCE = (
+    "tests replay a Python reference on hand-built domains and weights"
+)
 _MARGIN_REFERENCE = (
-    "tests replay a Python reference on hand-built 4-dim vectors with "
-    "every pair a candidate"
+    "tests replay a Python reference on hand-built vectors (4 nonzero "
+    "components) with every pair a candidate"
 )
 
 #: Keyword options that only tests set, with the reason they stay.
@@ -91,9 +107,12 @@ SET_ONLY_BY_TESTS = {
     "bpe_train_merges_from_words.stats": (
         "out-parameter: tests read the driver round count to pin job scaling"
     ),
+    "cell_centroids.cell_col": "ivf_topk forwards its tests' label cells",
     "connected_components.checkpoint_dir": _CHECKPOINT_DIR,
     "contaminated_spans.k": _SMALL_SPANS,
     "connected_components.propagate_rounds": _TEST_SEAM,
+    "domain_mixture_rates.weights": _MIX_REFERENCE,
+    "domain_mixture_sample.weights": _MIX_REFERENCE,
     "download_pipeline.skip_cols": (
         "reference sheet layout; tests pin a different skip list"
     ),
@@ -102,7 +121,8 @@ SET_ONLY_BY_TESTS = {
     "get_session.shuffle_partitions": (
         "deployment setting; tests build a small session"
     ),
-    "ivf_topk.dims": "tests probe hand-built 4-dim vectors",
+    "ivf_topk.cell_col": "tests probe the label cells of hand-built vectors",
+    "ivf_topk.k": _TEST_SEAM,
     "ivf_topk.nprobe": _TEST_SEAM,
     "kcore_membership.max_iters": "tests pin the non-convergence error",
     "kmeans_train_assign.truncator": _CALLER_SLOT,
@@ -110,15 +130,23 @@ SET_ONLY_BY_TESTS = {
         "tests pin single sweeps and convergence on hand-built graphs"
     ),
     "margin_topk.candidates": _MARGIN_REFERENCE,
-    "margin_topk.dims": _MARGIN_REFERENCE,
     "margin_topk.k": _MARGIN_REFERENCE,
     "margin_topk.k_nn": _MARGIN_REFERENCE,
     "minhash_lsh_pairs.cache": _CALLER_SLOT,
+    "minhash_lsh_pairs.threshold": _TEST_SEAM,
+    "ngram_containment_pairs.threshold": _TEST_SEAM,
+    "ngram_jaccard_pairs.threshold": _TEST_SEAM,
+    "pack_lm_sequences.range_size": (
+        "tests force several prefix-sum ranges on a small corpus"
+    ),
     "pagerank_integer.checkpoint_dir": _CHECKPOINT_DIR,
     "pagerank_integer.damping_pct": _TEST_SEAM,
     "pagerank_integer.iters": "tests pin one hand-computed iteration",
     "pagerank_integer.scale": _TEST_SEAM,
     "pagerank_integer.truncate_lineage": KEPT["pagerank_integer.truncate_lineage"],
+    "pq_adc_topk.k": (
+        "tests rank every code to compare ADC distances with IVF-PQ's"
+    ),
     "reconcile_schema.manual_overrides": (
         "the reference Upload's user rename map; tests pin its contract"
     ),
@@ -127,6 +155,7 @@ SET_ONLY_BY_TESTS = {
         "tests pin state expiry, which the bounded registry drain never hits"
     ),
     "salted_join.how": _TEST_SEAM,
+    "sample_frames.every_ms": "tests sample a short payload at 4 ms ticks",
     "sq8_rerank_topk.candidates": (
         "tests widen the candidate pass to all pairs to equal brute force"
     ),
@@ -444,6 +473,10 @@ def _is_public(name, default):
     return not name.startswith("_")
 
 
+def _is_any(name, default):
+    return True
+
+
 def test_every_bool_option_is_passed_both_ways():
     census = _census(_is_bool)
     one_value = sorted(
@@ -452,12 +485,27 @@ def test_every_bool_option_is_passed_both_ways():
     # KEPT entries must still be found: this also shows the census
     # resolves calls at all
     assert set(KEPT) <= set(one_value), sorted(set(KEPT) - set(one_value))
-    flipped_by_none = [k for k in one_value if k not in KEPT]
+    flipped_by_none = [
+        k for k in one_value if k not in KEPT and k not in KEPT_NON_DEFAULT
+    ]
     assert not flipped_by_none, flipped_by_none
 
 
+def test_no_option_defaults_to_a_value_no_caller_passes():
+    """A keyword option that every caller outside ``tests/`` sets to one
+    value other than its default: that value is the one in use, and the
+    default is a path only tests or nothing reach."""
+    census = _census(_is_public)
+    other = sorted(
+        k for k, (d, v) in census.items()
+        if ANY not in v and len(v) == 1 and d not in v
+    )
+    # a stale KEPT_NON_DEFAULT entry fails too
+    assert other == sorted(KEPT_NON_DEFAULT), (len(other), other)
+
+
 def test_every_keyword_option_is_set_by_some_caller():
-    census = _census(_is_public, tests=True)
+    census = _census(_is_any, tests=True)
     unset = sorted(k for k, (d, v) in census.items() if not v - {d})
     # a stale KEPT_UNSET entry fails too
     assert unset == sorted(KEPT_UNSET), (len(unset), unset)
@@ -478,10 +526,10 @@ def test_options_set_only_by_tests_are_listed():
 
 
 def test_every_required_parameter_takes_two_values():
-    """A required parameter of a public function called outside ``tests/``
-    that every call, tests included, passes one literal is a constant."""
-    outside = _census(_is_public, required=True)
-    census = _census(_is_public, tests=True, required=True)
+    """A required parameter of a function called outside ``tests/`` that
+    every call, tests included, passes one value is a constant."""
+    outside = _census(_is_any, required=True)
+    census = _census(_is_any, tests=True, required=True)
     one_value = sorted(
         k for k, (_, v) in census.items()
         if k in outside and ANY not in v and len(v) == 1
@@ -547,6 +595,25 @@ def test_resolver_scoping():
 
 #: Module-level names every registry module defines for itself.
 PER_MODULE = {"QUERIES", "ORACLE"}
+
+
+def test_no_private_function_is_defined_in_two_modules():
+    """The census resolves a call by the bare function name, so a private
+    helper name defined (outside a class) in two package modules would
+    merge two helpers' callers into one census entry."""
+    where = defaultdict(set)
+
+    def visit(node, path):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, FUNCS) and child.name.startswith("_"):
+                where[child.name].add(str(path.relative_to(PKG)))
+            if not isinstance(child, ast.ClassDef):
+                visit(child, path)
+
+    for path, tree in _trees(sorted(PKG.rglob("*.py"))):
+        visit(tree, path)
+    twice = {k: sorted(v) for k, v in where.items() if len(v) > 1}
+    assert not twice, twice
 
 
 def test_no_constant_is_defined_in_two_modules():

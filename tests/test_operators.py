@@ -4,6 +4,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_pipeline_excel_sql__spark.functions.vectors import (
+    EMB_DIMS,
+    cosine,
+    dot,
+)
 from etl_pipeline_excel_sql__spark.operators.asof import asof_join, range_join
 from etl_pipeline_excel_sql__spark.operators.dedup import (
     exact_dedup,
@@ -193,6 +198,12 @@ def test_categorical_order(spark):
     assert [r.cat for r in out] == ["z", "x", "y"]
 
 
+def _pad(v):
+    """``v`` zero-padded to ``EMB_DIMS``: each zero adds exactly +0.0 to
+    every dot product, norm and SRP projection."""
+    return v + [0.0] * (EMB_DIMS - len(v))
+
+
 def _embeddings(spark):
     rows = [
         (1, [1.0, 0.0, 0.0, 0.0], 0),
@@ -202,22 +213,38 @@ def _embeddings(spark):
         (5, [1.0, 0.05, 0.0, 0.0], 0),  # closest to 1
     ]
     return spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
+        [(i, _pad(v), lab) for i, v, lab in rows],
+        "vec_id long, embedding array<float>, label int",
     )
+
+
+def test_vector_math_rejects_computed_columns():
+    """``dot``/``cosine`` splice plain column names into one SQL string;
+    a computed Column has no recoverable text and must raise, naming
+    what it was given."""
+    import re
+
+    import pytest
+
+    computed = F.col("a") + 1
+    named = f"plain column name, got {re.escape(repr(computed))}"
+    for fn in (dot, cosine):
+        with pytest.raises(ValueError, match=named):
+            fn(computed, F.col("b"))
+        with pytest.raises(ValueError, match=named):
+            fn("b", computed)
 
 
 def test_brute_force_topk(spark):
     emb = _embeddings(spark)
-    out = brute_force_topk(
-        emb, emb.filter(F.col("vec_id") == 1), k=2, dims=4
-    ).collect()
+    out = brute_force_topk(emb, emb.filter(F.col("vec_id") == 1), k=2).collect()
     assert [(r.neighbor_id, r.rank) for r in out] == [(5, 1), (2, 2)]
 
 
 def test_ivf_topk_probes_nearest_cells(spark):
     emb = _embeddings(spark)
     out = ivf_topk(
-        emb, emb.filter(F.col("vec_id") == 1), k=2, nprobe=1, dims=4
+        emb, emb.filter(F.col("vec_id") == 1), k=2, nprobe=1, cell_col="label"
     ).collect()
     # nprobe=1 restricts to label-0 cell; both neighbors are in-cell anyway
     assert [r.neighbor_id for r in out] == [5, 2]
@@ -226,7 +253,7 @@ def test_ivf_topk_probes_nearest_cells(spark):
 def test_cosine_neardup_pairs_blocked(spark):
     emb = _embeddings(spark)
     pairs = {(r.id_a, r.id_b) for r in cosine_neardup_pairs(
-        emb, threshold=0.9, dims=4).collect()}
+        emb, threshold=0.9).collect()}
     assert pairs == {(1, 2), (1, 5), (2, 5)}
 
 
@@ -296,25 +323,23 @@ def test_ngram_jaccard_blocking_resists_first_token_skew(spark):
 
 
 def test_cosine_neardup_srp_prefilter_shrinks_candidates(spark):
-    """Multi-table SRP bucketing (6 bits x 3 tables) still surfaces a
-    planted near-dup pair among 400 random vectors."""
+    """Multi-table SRP bucketing (6 bits x SRP_NEARDUP_TABLES) still
+    surfaces a planted near-dup pair among 400 random vectors."""
     import random
 
     rng = random.Random(3)
     rows = []
     for i in range(400):
-        rows.append((i, [rng.gauss(0, 1) for _ in range(16)], i % 2))
+        rows.append((i, _pad([rng.gauss(0, 1) for _ in range(16)]), i % 2))
     # planted near-dup: vec 1000 ≈ vec 1001 (tiny perturbation)
     base = [rng.gauss(0, 1) for _ in range(16)]
-    rows.append((1000, base, 0))
-    rows.append((1001, [v + 0.01 for v in base], 0))
+    rows.append((1000, _pad(base), 0))
+    rows.append((1001, _pad([v + 0.01 for v in base]), 0))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
 
     pairs = {
         (r.id_a, r.id_b)
-        for r in cosine_neardup_pairs(
-            emb, threshold=0.99, dims=16, srp_bits=6, srp_tables=3,
-        ).collect()
+        for r in cosine_neardup_pairs(emb, threshold=0.99, srp_bits=6).collect()
     }
     assert (1000, 1001) in pairs
 
@@ -333,13 +358,11 @@ def test_ivf_trained_recall_vs_brute_force(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 5)
     bf = {
         (r.query_id, r.neighbor_id)
-        for r in brute_force_topk(emb, q, k=5, dims=64).collect()
+        for r in brute_force_topk(emb, q, k=5).collect()
     }
     ivf = {
         (r.query_id, r.neighbor_id)
-        for r in ivf_topk_trained(
-            emb, q, k=5
-        ).collect()
+        for r in ivf_topk_trained(emb, q).collect()
     }
     recall = len(bf & ivf) / len(bf)
     assert recall >= 0.6, f"recall {recall}"

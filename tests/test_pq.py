@@ -90,7 +90,7 @@ def test_ivfpq_distances_agree_with_flat_adc(trained, spark):
         (r.query_id, r.neighbor_id): r.adc_dist_micros
         for r in pq_adc_topk(codes, cb, queries, k=10_000).collect()
     }
-    composed = ivfpq_topk(emb, queries, k=5).collect()
+    composed = ivfpq_topk(emb, queries).collect()
     assert len(composed) == 25
     for r in composed:
         assert flat[(r.query_id, r.neighbor_id)] == r.adc_dist_micros
@@ -116,7 +116,7 @@ def test_ivfpq_residual_is_above_chance_and_distinct(trained, spark, sf_dir):
     from etl_pipeline_excel_sql__spark.sources.registry import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
-    got = ivfpq_residual_topk(emb, emb.filter("vec_id < 5"), k=5).collect()
+    got = ivfpq_residual_topk(emb, emb.filter("vec_id < 5")).collect()
     by_q: dict[int, list[int]] = {}
     for r in got:
         assert r.neighbor_id != r.query_id

@@ -29,7 +29,7 @@ def test_sq8_rerank_with_full_candidates_equals_brute_force(spark):
     queries = emb.filter(F.col("vec_id") < 3)
     exact = {
         (r.query_id, r.rank): r.neighbor_id
-        for r in brute_force_topk(emb, queries, k=5, dims=64).collect()
+        for r in brute_force_topk(emb, queries, k=5).collect()
     }
     staged = {
         (r.query_id, r.rank): r.neighbor_id
@@ -63,6 +63,7 @@ def test_margin_matches_python_reference(spark):
     """Hand-computed margin on a 6-vector frame: quantize cosines to ppm,
     take fwd/bwd 2-NN sums, distance-variant margin — the operator must
     agree exactly."""
+    from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
     from etl_pipeline_excel_sql__spark.operators.similarity import margin_topk
 
     vecs = {
@@ -73,8 +74,13 @@ def test_margin_matches_python_reference(spark):
         12: [0.1, 0.9, 0.2, 0.0],
         13: [0.5, 0.5, 0.5, 0.5],
     }
+    # zero-padded to EMB_DIMS: each zero adds exactly +0.0 to the
+    # engine's dot products and norms, so the 4-dim reference holds
     df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs.items()],
+        [
+            (i, [float(x) for x in v] + [0.0] * (EMB_DIMS - len(v)))
+            for i, v in vecs.items()
+        ],
         "vec_id long, embedding array<float>",
     )
 
@@ -129,7 +135,6 @@ def test_margin_matches_python_reference(spark):
         k_nn=k_nn,
         candidates=100,
         k=100,
-        dims=4,
     ).collect()
     for r in got:
         assert r.margin_scaled == expected[(r.query_id, r.neighbor_id)], (

@@ -4,14 +4,17 @@ it feeds (tools/bench_scaling.py) is fiction."""
 
 from __future__ import annotations
 
-from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
+from etl_pipeline_excel_sql__spark.functions.vectors import (
+    EMB_DIMS,
+    SRP_NEARDUP_MAX_BITS,
+    SRP_NEARDUP_TABLES,
+)
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     cosine_neardup_pairs,
     srp_candidate_stats,
 )
 from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
     SRP_NEARDUP_BITS,
-    SRP_NEARDUP_TABLES,
 )
 from etl_pipeline_excel_sql__spark.plans.reference_queries import load_table
 
@@ -19,11 +22,7 @@ from etl_pipeline_excel_sql__spark.plans.reference_queries import load_table
 def test_stats_internally_consistent_and_bound_the_operator(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
     stats = srp_candidate_stats(
-        emb,
-        block_col="label",
-        dims=EMB_DIMS,
-        srp_bits=SRP_NEARDUP_BITS,
-        srp_tables=SRP_NEARDUP_TABLES,
+        emb, block_col="label", srp_bits=SRP_NEARDUP_BITS
     )
     n = stats["n_vectors"]
     assert n == emb.count() > 0
@@ -36,11 +35,7 @@ def test_stats_internally_consistent_and_bound_the_operator(spark, sf_dir):
     # the operator verifies exactly the distinct candidates -> its output
     # (threshold-filtered) can never exceed them
     verified = cosine_neardup_pairs(
-        emb,
-        threshold=0.0,
-        dims=EMB_DIMS,
-        srp_bits=SRP_NEARDUP_BITS,
-        srp_tables=SRP_NEARDUP_TABLES,
+        emb, threshold=0.0, srp_bits=SRP_NEARDUP_BITS
     ).count()
     assert verified <= stats["distinct_candidates"]
 
@@ -48,27 +43,24 @@ def test_stats_internally_consistent_and_bound_the_operator(spark, sf_dir):
 def test_stats_identical_vectors_collapse_to_one_bucket_per_table(spark):
     import pytest
 
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)]
+    rows = [(i, [1.0] + [0.0] * (EMB_DIMS - 1)) for i in range(30)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     # identical vectors share a bucket in every table -> one bucket per
     # table, all pairs raw, exactly C(n,2) distinct after cross-table dedup
-    stats = srp_candidate_stats(
-        df, block_col=None, dims=4, srp_bits=4, srp_tables=2
-    )
+    stats = srp_candidate_stats(df, block_col=None, srp_bits=4)
     assert stats["n_vectors"] == 30
-    assert stats["n_buckets"] == 2
+    assert stats["n_buckets"] == SRP_NEARDUP_TABLES
     assert stats["max_bucket"] == 30
-    assert stats["raw_candidates"] == 2 * 30 * 29 // 2
+    assert stats["raw_candidates"] == SRP_NEARDUP_TABLES * 30 * 29 // 2
     assert stats["distinct_candidates"] == 30 * 29 // 2
     with pytest.raises(ValueError, match="srp_bits"):
-        srp_candidate_stats(df, block_col=None, dims=4, srp_bits=0)
+        srp_candidate_stats(df, block_col=None, srp_bits=0)
 
 
 def test_adaptive_bits_matches_clamped_ceil_log2():
     import math
 
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        SRP_NEARDUP_MAX_BITS,
         SRP_TARGET_BUCKET,
         adaptive_srp_bits,
     )
@@ -94,18 +86,12 @@ def test_plane_stride_is_prefix_stable(spark):
     an adaptive re-derivation never re-seeds the planes already in use.
     """
     from etl_pipeline_excel_sql__spark.functions.vectors import srp_buckets_long
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        SRP_NEARDUP_MAX_BITS,
-    )
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").limit(50)
     def buckets(bits):
         return {
             (r["vec_id"], r["__table"]): r["__bucket"]
-            for r in srp_buckets_long(
-                emb, "vec_id", "embedding", bits, EMB_DIMS, 2,
-                plane_stride=SRP_NEARDUP_MAX_BITS,
-            ).collect()
+            for r in srp_buckets_long(emb, "vec_id", "embedding", bits).collect()
         }
 
     b6, b8 = buckets(6), buckets(8)
@@ -115,7 +101,7 @@ def test_plane_stride_is_prefix_stable(spark):
 
 def test_stats_empty_corpus_reports_zeros(spark):
     df = spark.createDataFrame([], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-    stats = srp_candidate_stats(df, block_col=None, dims=4, srp_bits=4)
+    stats = srp_candidate_stats(df, block_col=None, srp_bits=4)
     assert stats == {
         "n_vectors": 0,
         "n_buckets": 0,

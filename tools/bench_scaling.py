@@ -27,7 +27,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import BENCH_QUERIES, run_one  # noqa: E402
-from etl_pipeline_excel_sql__spark.functions.vectors import EMB_DIMS
 from etl_pipeline_excel_sql__spark.plans import QUERIES  # noqa: E402
 from etl_pipeline_excel_sql__spark.session import get_session  # noqa: E402
 
@@ -37,22 +36,13 @@ def srp_diagnostics(spark, sf_dir: str) -> dict:
         srp_candidate_stats,
     )
     from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        SRP_NEARDUP_MAX_BITS,
-        SRP_NEARDUP_TABLES,
         adaptive_srp_bits,
     )
     from etl_pipeline_excel_sql__spark.plans.reference_queries import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
     bits = adaptive_srp_bits(emb.count())
-    stats = srp_candidate_stats(
-        emb,
-        block_col="label",
-        dims=EMB_DIMS,
-        srp_bits=bits,
-        srp_tables=SRP_NEARDUP_TABLES,
-        srp_plane_stride=SRP_NEARDUP_MAX_BITS,
-    )
+    stats = srp_candidate_stats(emb, block_col="label", srp_bits=bits)
     stats["srp_bits"] = bits
     return stats
 
