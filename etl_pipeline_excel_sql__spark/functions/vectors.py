@@ -24,6 +24,29 @@ EMB_DIMS = 64
 #: caller may ask for (see :func:`srp_planes_df`).
 SRP_NEARDUP_TABLES = 3
 SRP_NEARDUP_MAX_BITS = 16
+SRP_NEARDUP_BITS = 6
+#: Adaptive SRP sizing (SCALING.md knob rule, measured round 7): hold
+#: expected bucket occupancy ~constant by growing bits with the corpus —
+#: each +1 bit halves occupancy and ~quarters candidate pairs. The r7
+#: sf1 probe showed the fixed-6-bit family going quadratic (10× vectors
+#: → ~100× candidate pairs); bits ≈ log2(n / target_bucket) is the fix.
+SRP_TARGET_BUCKET = 16
+
+
+def adaptive_srp_bits(n_vectors: int) -> int:
+    """``clamp(ceil(log2(n / SRP_TARGET_BUCKET)), MIN, MAX)`` in pure
+    integer arithmetic (an integer threshold ladder — no float log2, so
+    the DuckDB twin ``plans/pipeline_queries._NV_CTE`` reproduces it
+    bit-for-bit at every SF). ``MAX=16`` bounds the oracle's gated plane
+    enumeration; it is the registered queries' policy, not an operator
+    limit — a 100 TB deployment calls ``cosine_neardup_pairs`` with
+    whatever bits it needs.
+    """
+    return SRP_NEARDUP_BITS + sum(
+        1
+        for k in range(SRP_NEARDUP_BITS + 1, SRP_NEARDUP_MAX_BITS + 1)
+        if n_vectors > SRP_TARGET_BUCKET * (1 << (k - 1))
+    )
 
 
 def dot_sql(a: str, b: str) -> str:

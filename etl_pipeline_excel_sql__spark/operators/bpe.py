@@ -203,7 +203,6 @@ def _accept_batch(
 def bpe_train_merges(
     docs: DataFrame,
     n_merges: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Train ``n_merges`` BPE merges over whitespace-tokenized ``docs``.
 
@@ -215,9 +214,7 @@ def bpe_train_merges(
     """
     if n_merges < 1:
         raise ValueError("bpe_train_merges: n_merges must be >= 1")
-    return bpe_train_merges_from_words(
-        word_frequencies(docs), n_merges, checkpoint_dir
-    )
+    return bpe_train_merges_from_words(word_frequencies(docs), n_merges)
 
 
 def word_frequencies(docs: DataFrame) -> DataFrame:
@@ -234,7 +231,6 @@ def word_frequencies(docs: DataFrame) -> DataFrame:
 def bpe_train_merges_from_words(
     words: DataFrame,
     n_merges: int,
-    checkpoint_dir: str | None = None,
     batch_pairs: int = 1,
     stats: dict | None = None,
     max_batch_pairs: int | None = None,
@@ -270,7 +266,7 @@ def bpe_train_merges_from_words(
             "bpe_train_merges_from_words: max_batch_pairs >= batch_pairs"
         )
     spark = words.sparkSession
-    trunc = LineageTruncator(spark, checkpoint_dir)
+    trunc = LineageTruncator(spark)
     syms = words.select(
         "freq",
         F.expr(

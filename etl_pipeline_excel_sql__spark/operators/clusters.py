@@ -191,7 +191,6 @@ def _propagate_labels(
 
 def connected_components(
     pairs: DataFrame,
-    checkpoint_dir: str | None = None,
     algorithm: str = "auto",
     propagate_rounds: int = 8,
 ) -> DataFrame:
@@ -215,11 +214,7 @@ def connected_components(
     * ``"star"`` — pure large/small-star alternation from round 0
       [Kiveris et al., SoCC'14]; O(log² n) rounds on any shape.
 
-    ``checkpoint_dir`` switches per-round lineage truncation from
-    ``localCheckpoint`` (fast, sandbox default, NOT fault-tolerant) to a
-    reliable ``checkpoint`` under the given directory (HDFS/S3 on a
-    cluster) so an executor loss mid-loop cannot kill a long job.
-    Values are identical in every mode/algorithm.
+    Values are identical under either algorithm.
     """
     if algorithm not in ("auto", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -227,8 +222,8 @@ def connected_components(
     # Separate truncators: edges are read every round and must never be
     # retired; the loops retire round N-1's storage once round N has
     # materialized (bounded: ≤1 round of loop state alive).
-    edge_trunc = LineageTruncator(spark, checkpoint_dir)
-    loop_trunc = LineageTruncator(spark, checkpoint_dir)
+    edge_trunc = LineageTruncator(spark)
+    loop_trunc = LineageTruncator(spark)
     # Materialize the RAW pair table before anything derives from it.
     # Every derived set below (symmetric union, node set, self-looped
     # edges) references the pair plan 2-4 times WITHIN the first
@@ -293,7 +288,7 @@ def connected_components(
             )
             .distinct()
         )
-        star_trunc = LineageTruncator(spark, checkpoint_dir)
+        star_trunc = LineageTruncator(spark)
         roots = _star_labels(contracted, star_trunc).select(
             F.col("node").alias("lbl"), F.col("lbl").alias("root")
         )
@@ -320,7 +315,6 @@ def cluster_safe_split_audit(
     docs: DataFrame,
     pairs: DataFrame,
     salt: str,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Leakage-free train/val/test assignment + self-audit, one pair pass.
 
@@ -341,9 +335,7 @@ def cluster_safe_split_audit(
     Returns ``(split, n_docs, n_groups, leak_pairs)``; ``leak_pairs`` is
     zero by construction and the oracle recomputes the proof.
     """
-    spark = docs.sparkSession
-    trunc = LineageTruncator(spark, checkpoint_dir)
-    pairs_m = trunc.truncate(pairs.select("id_a", "id_b"))
+    pairs_m = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     comp = connected_components(pairs_m).select(
         F.col("member_id").alias("doc_id"), "cluster_id"
     )

@@ -246,7 +246,6 @@ def minhash_lsh_pairs(
 def minhash_lsh_pairs_cross(
     new_df: DataFrame,
     corpus_df: DataFrame,
-    cache: SignatureCache | None = None,
 ) -> DataFrame:
     """Incremental-ingestion near-dup: NEW batch vs EXISTING corpus.
 
@@ -277,7 +276,7 @@ def minhash_lsh_pairs_cross(
     tagged = tagged.filter(has_ws_tokens())
     exploded = shingle_rows(tagged, MINHASH_SHINGLE_N)
     sides = tagged.select(F.col("doc_id").alias("__id"), "__side")
-    slot = cache or shared_slot(
+    slot = shared_slot(
         tagged.sparkSession, "dedup.cross_signatures", SignatureCache
     )
     sig = slot.swap(_minhash_signatures(exploded).join(sides, "__id"))
@@ -334,7 +333,6 @@ def minhash_lsh_pairs_ingest_indexed(
     new_df: DataFrame,
     corpus_bands: DataFrame,
     corpus_sets: DataFrame,
-    cache: SignatureCache | None = None,
 ) -> DataFrame:
     """All delta edges of an ingest against a PERSISTED corpus index: cross
     (new × corpus) and within-batch (``id_a < id_b``) near-dup pairs as
@@ -371,7 +369,7 @@ def minhash_lsh_pairs_ingest_indexed(
     """
     new_df = new_df.filter(has_ws_tokens())
     exploded = shingle_rows(new_df, MINHASH_SHINGLE_N)
-    slot = cache or shared_slot(
+    slot = shared_slot(
         new_df.sparkSession, "dedup.ingest_signatures", SignatureCache
     )
     sig = slot.swap(_minhash_signatures(exploded))

@@ -43,10 +43,7 @@ def pagerank_integer(
     nodes: DataFrame,
     n_nodes: int,
     iters: int = PAGERANK_ITERS,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = PAGERANK_DAMPING_PCT,
     truncate_lineage: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Weighted PageRank with scaled-integer arithmetic.
 
@@ -66,30 +63,24 @@ def pagerank_integer(
     ``groupBy(dst)`` contribution sum. |V| must therefore fit in the
     broadcast budget.
 
-    ``checkpoint_dir`` switches per-iteration lineage truncation from
-    ``localCheckpoint`` to a reliable ``checkpoint`` under the given
-    directory so executor loss cannot kill a long run; each iteration
-    also retires the previous iteration's checkpoint storage, so block /
-    file usage stays O(|V|) however many iterations run.
+    Each iteration's lineage cut retires the previous iteration's
+    blocks, so block usage stays O(|V|) however many iterations run.
     """
-    spark = edges.sparkSession
-    # Separate truncators: ew is read every iteration and never retired;
-    # the rank loop retires iteration i-1's storage once i materializes.
-    ew_trunc = LineageTruncator(spark, checkpoint_dir)
-    r_trunc = LineageTruncator(spark, checkpoint_dir)
+    scale, damping_pct = PAGERANK_SCALE, PAGERANK_DAMPING_PCT
+    # ew is cut once and read every iteration; the rank loop's truncator
+    # retires iteration i-1's blocks once i materializes.
+    r_trunc = LineageTruncator(edges.sparkSession)
     outw = edges.groupBy("src").agg(F.sum("w").alias("tw"))
     ew = edges.join(outw, "src").select("src", "dst", "w", "tw")
     # materialize once: the loop below references ew `iters` times and the
     # final plan would otherwise re-aggregate the full edge table per
     # iteration. The table is |E'| (distinct src,dst) rows — small.
-    # The max-weight aggregate IS the materializing action
-    # (truncate_with), so the overflow guard below costs zero extra jobs
-    # — folding it in recovers the +10% the guard added in round 4 as a
-    # separate job against the already-materialized table.
-    ew, max_w = ew_trunc.truncate_with(
-        ew, lambda d: d.agg(F.max("w").alias("m")).collect()[0]["m"]
-    )
-    max_w = max_w or 0
+    # The max-weight aggregate IS the materializing action of the lazy
+    # cut, so the overflow guard below costs zero extra jobs — folding it
+    # in recovers the +10% the guard added in round 4 as a separate job
+    # against the already-materialized table.
+    ew = ew.localCheckpoint(eager=False)
+    max_w = ew.agg(F.max("w").alias("m")).collect()[0]["m"] or 0
 
     # Overflow guard (promised by the module docstring): every per-edge
     # product is r * w with r <= scale (total mass is conserved at
@@ -98,8 +89,7 @@ def pagerank_integer(
     if scale * max_w >= 1 << 62:
         raise ValueError(
             f"pagerank_integer: scale ({scale}) * max edge weight "
-            f"({max_w}) would overflow int64 — lower scale or rescale "
-            "weights"
+            f"({max_w}) would overflow int64 — rescale weights"
         )
 
     base = ((100 - damping_pct) * scale) // (100 * n_nodes)
@@ -143,8 +133,8 @@ def pagerank_integer(
         # iteration — 2^iters analysis cost. Checkpointing |V| rows per
         # iteration is the standard iterative-algorithm pattern (GraphX
         # does the same); values are unchanged, and the truncator retires
-        # r{i-1}'s blocks/files once r{i} is materialized so storage does
-        # not grow with iters. ``truncate_lineage=False`` exists only so
+        # r{i-1}'s blocks once r{i} is materialized so storage does not
+        # grow with iters. ``truncate_lineage=False`` exists only so
         # plan tests can inspect the iteration's logical plan
         # (checkpointing collapses it to a LogicalRDD scan).
         if truncate_lineage:
@@ -247,7 +237,6 @@ def kcore_membership(
     pairs: DataFrame,
     k: int,
     max_iters: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The k-core of an undirected pair graph: the (unique) maximal node
     subset in which every node keeps degree >= k within the subset.
@@ -278,8 +267,7 @@ def kcore_membership(
     """
     if k < 1:
         raise ValueError("kcore_membership: k must be >= 1")
-    spark = pairs.sparkSession
-    trunc = LineageTruncator(spark, checkpoint_dir)
+    trunc = LineageTruncator(pairs.sparkSession)
     e = (
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -322,7 +310,6 @@ def kcore_membership(
 def label_propagation(
     pairs: DataFrame,
     rounds: int = LPA_ROUNDS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan/Albert/Kumara,
     Phys. Rev. E 2007) over an undirected pair graph — the community
@@ -347,23 +334,21 @@ def label_propagation(
     every round (the components-loop practice) so the plan stays flat.
     Returns ``(node, label)``.
     """
-    spark = pairs.sparkSession
-    # Two truncators (the pagerank_integer convention, graph.py:78): adj
-    # is read every sweep and must never be retired by the labels loop's
-    # cleanup; without its own cut the whole upstream DAG (e.g. the full
-    # MinHash-LSH pipeline feeding `pairs`) re-evaluates once for the
-    # initial label frame and once per sweep — rounds+1 corpus passes.
-    adj_trunc = LineageTruncator(spark, checkpoint_dir)
-    trunc = LineageTruncator(spark, checkpoint_dir)
+    # adj is cut once, apart from the labels loop's truncator: it is read
+    # every sweep and must never be retired by the loop's cleanup; without
+    # its own cut the whole upstream DAG (e.g. the full MinHash-LSH
+    # pipeline feeding `pairs`) re-evaluates once for the initial label
+    # frame and once per sweep — rounds+1 corpus passes.
+    trunc = LineageTruncator(pairs.sparkSession)
     e = (
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
     )
-    adj = adj_trunc.truncate(
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    )
+    adj = e.union(
+        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).localCheckpoint(eager=True)
     labels = (
         adj.select(F.col("a").alias("node")).distinct()
         .select("node", F.col("node").alias("label"))

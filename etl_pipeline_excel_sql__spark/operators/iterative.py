@@ -1,29 +1,25 @@
 """Lineage truncation for iterative DataFrame algorithms, with bounded
-storage and an opt-in fault-tolerant mode.
+block storage.
 
 Iterative operators (connected components in ``clusters.py``, PageRank in
 ``graph.py``) must cut their logical plan every round or plan analysis
-doubles per iteration. The cut has two flavors:
+doubles per iteration. The cut is ``localCheckpoint``: the round's rows
+stored as blocks in the block manager, with no lineage behind them.
+Those blocks accumulate unless the previous round's are explicitly
+unpersisted (Spark's ContextCleaner frees them only on JVM GC, which is
+nondeterministic).
 
-* ``localCheckpoint`` (default) — blocks in the executor block manager.
-  Fast, but (a) NOT fault-tolerant: losing an executor mid-loop loses
-  blocks with no lineage to recompute them, failing a multi-hour job at
-  real scale; and (b) blocks accumulate unless the previous iteration's
-  are explicitly unpersisted (Spark's ContextCleaner frees them only on
-  JVM GC, which is nondeterministic).
-* reliable ``checkpoint`` — files under a checkpoint directory (HDFS/S3 on
-  a cluster). Survives executor loss; the right mode for 100-TB runs.
-
-``LineageTruncator`` wraps both behind one call and bounds storage either
-way: each ``truncate`` unpersists the previous iteration's blocks (local
-mode) or deletes its checkpoint files (reliable mode) once the new
-iteration has materialized. The caller must therefore only ever read the
-MOST RECENT truncated DataFrame — exactly the shape of a fixpoint loop.
+``LineageTruncator`` makes the cut and bounds storage: each ``truncate``
+unpersists the previous round's blocks once the new round has
+materialized. The caller must therefore only ever read the MOST RECENT
+truncated DataFrame — exactly the shape of a fixpoint loop. A frame cut
+once and never again needs no truncator: a plain ``localCheckpoint`` has
+no prior cut to retire.
 
 ``truncate_with`` additionally lets the convergence check BE the
-materializing action: a non-eager checkpoint is marked and the caller's
+materializing action: a non-eager cut is marked and the caller's
 action (e.g. "count changed labels") runs as the one job that both
-materializes the checkpoint and answers convergence — one job per round
+materializes the cut and answers convergence — one job per round
 instead of an eager-checkpoint job plus a separate count job.
 
 Call-spanning slots — the one lifetime rule
@@ -31,17 +27,19 @@ Call-spanning slots — the one lifetime rule
 Some operators must leave storage behind when they return, because the
 lazy result they hand back reads it: a persisted frame (held by a
 :class:`SignatureCache`) or a lineage cut (held by a
-:class:`LineageTruncator`). Each such operator takes a caller-owned
-``cache=`` or ``truncator=``; without one it uses a default slot from
-:func:`shared_slot`, which owns every default slot in the package: one
-slot per name per session, replaced when the session changes.
+:class:`LineageTruncator`). Three of them take a caller-owned slot:
+``minhash_lsh_pairs(cache=)``, ``kmeans_train_assign(truncator=)`` and
+``triangle_participation(truncator=)``. Without one, and in every other
+such operator, the slot is a default from :func:`shared_slot`, which
+owns every default slot in the package: one slot per name per session,
+replaced when the session changes.
 
 Every slot follows the same rule. Each call through a slot frees what
 that slot's previous call left behind, so a loop holds at most one
 lingering table per slot. Only the most recent result through a slot may
 still be read lazily: an older persisted result stays correct but
-recomputes, and an older checkpointed result has no lineage left and
-fails block-not-found. Callers that interleave calls, or make them from
+recomputes, and an older cut result has no lineage left and fails
+block-not-found. Callers that interleave calls, or make them from
 several threads, pass their own slot so each call sequence owns its
 lifetime (see tests/test_iterative.py).
 """
@@ -121,47 +119,16 @@ class SignatureCache:
 
 
 class LineageTruncator:
-    """Per-iteration plan truncation with previous-iteration cleanup.
+    """Per-iteration ``localCheckpoint`` with previous-iteration cleanup.
 
-    One instance per loop variable. ``checkpoint_dir=None`` (default)
-    keeps the sandbox-friendly ``localCheckpoint``; passing a directory
-    (e.g. an HDFS/S3 URI on a cluster) switches every cut to a reliable
-    ``checkpoint`` so executor loss cannot kill the loop. Results are
-    identical either way — only the storage substrate changes.
+    One instance per loop variable: each cut retires the blocks of the
+    instance's previous cut once the new one has materialized.
     """
 
-    def __init__(
-        self, spark: SparkSession, checkpoint_dir: str | None = None
-    ) -> None:
+    def __init__(self, spark: SparkSession) -> None:
         self._spark = spark
-        self._reliable = checkpoint_dir is not None
         self._prior_rdd_ids: set[int] = set()
-        self._prior_files: set[str] = set()
-        if self._reliable:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-            self._ckpt_root = checkpoint_dir
 
-    # -- reliable-mode file tracking ------------------------------------
-    def _rdd_dirs(self) -> set[str]:
-        """Glob rdd-* checkpoint dirs under the root, any filesystem."""
-        sc = self._spark.sparkContext
-        jvm = sc._jvm
-        path = jvm.org.apache.hadoop.fs.Path(self._ckpt_root + "/*/rdd-*")
-        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-        statuses = fs.globStatus(path)
-        if statuses is None:
-            return set()
-        return {str(s.getPath()) for s in statuses}
-
-    def _delete_files(self, paths: set[str]) -> None:
-        sc = self._spark.sparkContext
-        jvm = sc._jvm
-        for p in paths:
-            jpath = jvm.org.apache.hadoop.fs.Path(p)
-            fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-            fs.delete(jpath, True)
-
-    # -- public API ------------------------------------------------------
     def truncate(self, df: DataFrame) -> DataFrame:
         """Eagerly materialize a lineage cut of ``df``; free the prior one.
 
@@ -171,23 +138,9 @@ class LineageTruncator:
         iteration — measured ~0.1 s/iteration of pure driver overhead in
         the PageRank loop.
         """
-        before_ids = _persisted_rdd_ids(self._spark)
-        before_files = self._rdd_dirs() if self._reliable else set()
-        if self._reliable:
-            # Reliable checkpoint runs TWO jobs (the materializing action,
-            # then the file write recomputing all partitions from lineage)
-            # unless the plan is cached between them — persist around the
-            # cut keeps each round to one computation.
-            cached = df.persist()
-            try:
-                cut = cached.checkpoint(eager=True)
-            finally:
-                # unpersist even when checkpoint() raises — otherwise the
-                # cached blocks leak for the rest of the session
-                cached.unpersist()
-        else:
-            cut = df.localCheckpoint(eager=True)
-        self._retire_prior(before_ids, before_files)
+        before = _persisted_rdd_ids(self._spark)
+        cut = df.localCheckpoint(eager=True)
+        self._retire_prior(before)
         return cut
 
     def truncate_with(
@@ -199,37 +152,17 @@ class LineageTruncator:
         aggregate — never ``limit``), otherwise unvisited partitions stay
         unmaterialized and the cut is partial. Returns the truncated
         DataFrame and the action's result. The previous iteration's
-        storage is freed only after the new cut has fully materialized,
+        blocks are freed only after the new cut has fully materialized,
         so a failure mid-action never strands the loop without its input.
         """
-        before_ids = _persisted_rdd_ids(self._spark)
-        before_files = self._rdd_dirs() if self._reliable else set()
-        if self._reliable:
-            # same persist-around-the-cut as truncate(): the deferred
-            # file write replays the plan from the cache, not from
-            # scratch, keeping "one computation per round" true in
-            # reliable mode too
-            cached = df.persist()
-            try:
-                cut = cached.checkpoint(eager=False)
-                result = action(cut)
-            finally:
-                # runs even when the caller's action raises — the persisted
-                # blocks must never outlive the round that created them
-                cached.unpersist()
-        else:
-            cut = df.localCheckpoint(eager=False)
-            result = action(cut)
-        self._retire_prior(before_ids, before_files)
+        before = _persisted_rdd_ids(self._spark)
+        cut = df.localCheckpoint(eager=False)
+        result = action(cut)
+        self._retire_prior(before)
         return cut, result
 
-    def _retire_prior(
-        self, before_ids: set[int], before_files: set[str]
-    ) -> None:
+    def _retire_prior(self, before: set[int]) -> None:
         """The new cut is fully materialized: free the previous round's
-        storage and remember the new round's for next time."""
+        blocks and remember the new round's for next time."""
         _unpersist_rdd_ids(self._spark, self._prior_rdd_ids)
-        self._prior_rdd_ids = _persisted_rdd_ids(self._spark) - before_ids
-        if self._reliable:
-            self._delete_files(self._prior_files)
-            self._prior_files = self._rdd_dirs() - before_files
+        self._prior_rdd_ids = _persisted_rdd_ids(self._spark) - before

@@ -178,7 +178,6 @@ def _codebook_means(
 def pq_train_codebooks(
     corpus: DataFrame,
     vec_col: str = "embedding",
-    truncator: LineageTruncator | None = None,
 ) -> DataFrame:
     """Train the ``PQ_M`` per-subspace codebooks → (sub, code, centroid).
 
@@ -195,13 +194,12 @@ def pq_train_codebooks(
     and every consumer of the returned codebooks (the encoder, the ADC
     lookup table, the next round) reads ≤128 materialized rows instead
     of re-running the training subtree or reading a corpus-sized
-    checkpoint. The cuts go through ``truncator`` under the slot rule of
+    checkpoint. The cuts go through the default slot ``pq.codebooks``
+    under the slot rule of
     :mod:`~etl_pipeline_excel_sql__spark.operators.iterative`."""
     subdim = EMB_DIMS // PQ_M
     spark = corpus.sparkSession
-    trunc = truncator or shared_slot(
-        spark, "pq.codebooks", lambda: LineageTruncator(spark)
-    )
+    trunc = shared_slot(spark, "pq.codebooks", lambda: LineageTruncator(spark))
     seeds = (
         corpus.orderBy("vec_id")
         .limit(PQ_NCODES)

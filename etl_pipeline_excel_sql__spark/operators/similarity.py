@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.vectors import (
     EMB_DIMS,
+    SRP_NEARDUP_BITS,
     cosine,
     dot,
     l2_norm_sq,
@@ -448,7 +449,7 @@ def cosine_neardup_pairs(
 def srp_candidate_stats(
     corpus: DataFrame,
     block_col: str | None = "label",
-    srp_bits: int = 6,
+    srp_bits: int = SRP_NEARDUP_BITS,
 ) -> dict:
     """Bucket-occupancy and candidate-pair diagnostics for the SRP
     blocking that :func:`cosine_neardup_pairs` (and the semantic-dedup

@@ -6,9 +6,9 @@ recipes (every region of embedding space contributes equally, so a
 dominant mode can't drown the tails).
 
 The oracle unrolls the SAME Lloyd rounds as the IVF family
-(``pipeline_queries._kmeans_assign_sql`` / ``_kmeans_means_sql`` — one
-hash contract, one k-means definition) and replays the md5-rank quota,
-so the kept set hash-matches exactly.
+(``pipeline_queries._kmeans_unroll_sql`` — one hash contract, one
+k-means definition) and replays the md5-rank quota, so the kept set
+hash-matches exactly.
 
 Scale shape: training is the ``kmeans_train_assign`` loop (per round
 one scan + an ncells×dims decimal-exact aggregate; centroids only ever
@@ -26,13 +26,10 @@ from etl_pipeline_excel_sql__spark.functions.hashing import (
     md5_hash60,
 )
 from etl_pipeline_excel_sql__spark.operators.similarity import (
-    IVF_ITERS,
-    IVF_NCELLS,
     kmeans_train_assign,
 )
 from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    _kmeans_assign_sql,
-    _kmeans_means_sql,
+    _kmeans_unroll_sql,
 )
 
 QUERIES: dict = {}
@@ -69,19 +66,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cb_sql() -> str:
     _h = H60_SQL.format(x="'cb:' || CAST(vec_id AS VARCHAR)")
-    ctes = [
-        f"""init AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-         list_transform(embedding, x -> x::DOUBLE) AS centroid
-  FROM (SELECT vec_id, embedding FROM embeddings
-        ORDER BY vec_id LIMIT {IVF_NCELLS})
-)""",
-        f"a0 AS ({_kmeans_assign_sql('init')}\n)",
-    ]
-    for i in range(1, IVF_ITERS):
-        ctes.append(f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}')}\n)")
-        ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}')}\n)")
-    last = f"a{IVF_ITERS - 1}"
+    ctes, last = _kmeans_unroll_sql()
     return f"""
 WITH {', '.join(ctes)}
 SELECT vec_id, cell, cell_size, cell_rank FROM (

@@ -28,8 +28,11 @@ from etl_pipeline_excel_sql__spark.functions.text import (
 )
 from etl_pipeline_excel_sql__spark.functions.vectors import (
     EMB_DIMS,
+    SRP_NEARDUP_BITS,
     SRP_NEARDUP_MAX_BITS,
     SRP_NEARDUP_TABLES,
+    SRP_TARGET_BUCKET,
+    adaptive_srp_bits,
 )
 from etl_pipeline_excel_sql__spark.operators.dedup import (
     CONTAINMENT_THRESHOLD,
@@ -83,30 +86,6 @@ _BAND_BUCKET_SQL = " || ',' || ".join(
     f"CAST(mh[{MINHASH_BAND_ROWS} * b + {r + 1}] AS VARCHAR)"
     for r in range(MINHASH_BAND_ROWS)
 )
-SRP_NEARDUP_BITS = 6
-#: Adaptive SRP sizing (SCALING.md knob rule, measured round 7): hold
-#: expected bucket occupancy ~constant by growing bits with the corpus —
-#: each +1 bit halves occupancy and ~quarters candidate pairs. The r7
-#: sf1 probe showed the fixed-6-bit family going quadratic (10× vectors
-#: → ~100× candidate pairs); bits ≈ log2(n / target_bucket) is the fix.
-SRP_TARGET_BUCKET = 16
-
-
-def adaptive_srp_bits(n_vectors: int) -> int:
-    """``clamp(ceil(log2(n / SRP_TARGET_BUCKET)), MIN, MAX)`` in pure
-    integer arithmetic (an integer threshold ladder — no float log2, so
-    the DuckDB twin ``_NV_CTE`` reproduces it bit-for-bit at every SF).
-    ``MAX=16`` bounds the oracle's gated plane enumeration; it is a
-    registered-query policy, not an operator limit — a 100 TB deployment
-    calls :func:`cosine_neardup_pairs` with whatever bits it needs.
-    """
-    return SRP_NEARDUP_BITS + sum(
-        1
-        for k in range(SRP_NEARDUP_BITS + 1, SRP_NEARDUP_MAX_BITS + 1)
-        if n_vectors > SRP_TARGET_BUCKET * (1 << (k - 1))
-    )
-
-
 #: DuckDB twin of :func:`adaptive_srp_bits`: the same integer threshold
 #: ladder over COUNT(*), generated from the same constants so the two
 #: can never desynchronize.
@@ -555,9 +534,11 @@ def _kmeans_assign_sql(cents: str) -> str:
   ) WHERE rn = 1"""
 
 
-def _ivf_trained_sql() -> str:
-    """Unrolled Lloyd rounds + IVF probe — the oracle twin of
-    ivf_topk_trained (same seeds, same round count, same probe)."""
+def _kmeans_unroll_sql() -> tuple[list[str], str]:
+    """The oracle twin of ``kmeans_train_assign``'s training: seed
+    centroids from the ``IVF_NCELLS`` lowest ids, then ``IVF_ITERS``
+    assignments with a mean update between each two. Returns the CTEs and
+    the name of the last assignment."""
     ctes = [
         f"""init AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
@@ -569,7 +550,13 @@ def _ivf_trained_sql() -> str:
     for i in range(1, IVF_ITERS):
         ctes.append(f"c{i} AS ({_kmeans_means_sql(f'a{i - 1}')}\n)")
         ctes.append(f"a{i} AS ({_kmeans_assign_sql(f'c{i}')}\n)")
-    last = f"a{IVF_ITERS - 1}"
+    return ctes, f"a{IVF_ITERS - 1}"
+
+
+def _ivf_trained_sql() -> str:
+    """Unrolled Lloyd rounds + IVF probe — the oracle twin of
+    ivf_topk_trained (same seeds, same round count, same probe)."""
+    ctes, last = _kmeans_unroll_sql()
     ctes.append(f"cfinal AS ({_kmeans_means_sql(last)}\n)")
     ctes.append(
         f"""probes AS (

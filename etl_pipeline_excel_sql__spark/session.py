@@ -23,6 +23,15 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else 40% of physical memory in whole GB
+    (at least 1g, at most 32g): ``local[N]`` runs the executor inside the
+    driver JVM, and a fixed 32g got it killed on a 16 GB host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mem = min(32, max(1, phys * 2 // 5 // 2**30))
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{mem}g"
+
+
 def get_session(
     master: str | None = None,
     shuffle_partitions: int | None = None,
@@ -74,10 +83,10 @@ def get_session(
         # sources/registry.py converts to microsecond timestamps explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local[N] runs the executor inside the driver JVM: size it for 32
-        # concurrent tasks over wide array columns, or full-GC storms make
-        # run times bimodal (87s outliers on a 5s query at 8g were traced
-        # to exactly this).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # concurrent tasks over wide array columns where the host allows,
+        # or full-GC storms make run times bimodal (87s outliers on a 5s
+        # query at 8g were traced to exactly this).
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

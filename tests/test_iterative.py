@@ -1,5 +1,6 @@
-"""Tests for LineageTruncator: reliable-checkpoint mode parity and
-bounded storage across iterations (VERDICT r3 ask #3, ADVICE graph leak).
+"""Tests for LineageTruncator and the call-spanning slots: bounded
+block storage across iterations, and caller-owned slots that let
+interleaved results stay readable (ADVICE graph leak).
 """
 
 from __future__ import annotations
@@ -7,10 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_excel_sql__spark.operators.clusters import (
-    connected_components,
-)
-from etl_pipeline_excel_sql__spark.operators.graph import pagerank_integer
 from etl_pipeline_excel_sql__spark.operators.iterative import (
     LineageTruncator,
     SignatureCache,
@@ -18,60 +15,6 @@ from etl_pipeline_excel_sql__spark.operators.iterative import (
     _unpersist_rdd_ids,
     shared_slot,
 )
-
-EDGES = [(1, 2, 3), (2, 3, 1), (3, 1, 2), (1, 3, 1), (4, 1, 5)]
-PAIRS = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
-
-
-def _pairs_df(spark):
-    return spark.createDataFrame(PAIRS, "id_a long, id_b long")
-
-
-def test_cc_reliable_checkpoint_matches_local(spark, tmp_path):
-    local = {
-        (r.member_id, r.cluster_id, r.cluster_size)
-        for r in connected_components(_pairs_df(spark)).collect()
-    }
-    reliable = {
-        (r.member_id, r.cluster_id, r.cluster_size)
-        for r in connected_components(
-            _pairs_df(spark), checkpoint_dir=str(tmp_path / "cc_ckpt")
-        ).collect()
-    }
-    assert local == reliable
-    assert {(m, c) for m, c, _ in local} == {
-        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20),
-        (22, 20),
-    }
-
-
-def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
-    edges = spark.createDataFrame(EDGES, "src long, dst long, w long")
-    nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "node long")
-    kwargs = dict(n_nodes=5, iters=4)
-    local = {
-        r.node: r.r for r in pagerank_integer(edges, nodes, **kwargs).collect()
-    }
-    reliable = {
-        r.node: r.r
-        for r in pagerank_integer(
-            edges, nodes, checkpoint_dir=str(tmp_path / "pr_ckpt"), **kwargs
-        ).collect()
-    }
-    assert local == reliable
-
-
-def test_reliable_checkpoint_files_bounded(spark, tmp_path):
-    """Old iterations' rdd-* checkpoint dirs are deleted as the loop
-    advances: after N truncations only the latest survives on disk."""
-    root = tmp_path / "bounded_ckpt"
-    tr = LineageTruncator(spark, str(root))
-    df = spark.range(100).select(F.col("id").alias("v"))
-    for _ in range(4):
-        df = tr.truncate(df.withColumn("v", F.col("v") + 1))
-    rdd_dirs = list(root.glob("*/rdd-*"))
-    assert len(rdd_dirs) == 1, rdd_dirs
-    assert [r.v for r in df.orderBy("v").limit(3).collect()] == [4, 5, 6]
 
 
 def test_local_truncation_blocks_bounded(spark):

@@ -37,9 +37,8 @@ defined in two package modules.
 
 Two rules outside the census: an UPPER_CASE name is assigned at module
 level in one package module only, so a constant is said once; and a
-``LineageTruncator`` that is constructed and ``.truncate``d in one
-expression has no prior cut to retire, so the call is a plain
-``localCheckpoint(eager=True)``.
+``LineageTruncator`` that cuts once has no prior cut to retire, so the
+cut is a plain ``localCheckpoint``.
 """
 
 from __future__ import annotations
@@ -71,26 +70,10 @@ KEPT_NON_DEFAULT = {
     "download_pipeline.inject_vba": _PERFBENCH,
 }
 
-_CHECKPOINT_DIR = (
-    "deployment path for reliable checkpoints; tests set the same "
-    "parameter on connected_components and pagerank_integer"
-)
 _CALLER_SLOT = (
     "the caller-owned slot of operators/iterative.py's lifetime rule; "
     "omitted, the call uses the session's shared_slot default"
 )
-
-#: Keyword options that no caller sets, with the reason they stay.
-KEPT_UNSET = {
-    "bpe_train_merges.checkpoint_dir": _CHECKPOINT_DIR,
-    "bpe_train_merges_from_words.checkpoint_dir": _CHECKPOINT_DIR,
-    "cluster_safe_split_audit.checkpoint_dir": _CHECKPOINT_DIR,
-    "kcore_membership.checkpoint_dir": _CHECKPOINT_DIR,
-    "label_propagation.checkpoint_dir": _CHECKPOINT_DIR,
-    "minhash_lsh_pairs_cross.cache": _CALLER_SLOT,
-    "minhash_lsh_pairs_ingest_indexed.cache": _CALLER_SLOT,
-    "pq_train_codebooks.truncator": _CALLER_SLOT,
-}
 
 _TEST_SEAM = "a test drives a path the registry's fixed inputs never reach"
 _SMALL_SPANS = "tests replay a naive transcription on short texts at k = 2-3"
@@ -108,7 +91,6 @@ SET_ONLY_BY_TESTS = {
         "out-parameter: tests read the driver round count to pin job scaling"
     ),
     "cell_centroids.cell_col": "ivf_topk forwards its tests' label cells",
-    "connected_components.checkpoint_dir": _CHECKPOINT_DIR,
     "contaminated_spans.k": _SMALL_SPANS,
     "connected_components.propagate_rounds": _TEST_SEAM,
     "domain_mixture_rates.weights": _MIX_REFERENCE,
@@ -139,10 +121,7 @@ SET_ONLY_BY_TESTS = {
     "pack_lm_sequences.range_size": (
         "tests force several prefix-sum ranges on a small corpus"
     ),
-    "pagerank_integer.checkpoint_dir": _CHECKPOINT_DIR,
-    "pagerank_integer.damping_pct": _TEST_SEAM,
     "pagerank_integer.iters": "tests pin one hand-computed iteration",
-    "pagerank_integer.scale": _TEST_SEAM,
     "pagerank_integer.truncate_lineage": KEPT["pagerank_integer.truncate_lineage"],
     "pq_adc_topk.k": (
         "tests rank every code to compare ADC distances with IVF-PQ's"
@@ -507,8 +486,7 @@ def test_no_option_defaults_to_a_value_no_caller_passes():
 def test_every_keyword_option_is_set_by_some_caller():
     census = _census(_is_any, tests=True)
     unset = sorted(k for k, (d, v) in census.items() if not v - {d})
-    # a stale KEPT_UNSET entry fails too
-    assert unset == sorted(KEPT_UNSET), (len(unset), unset)
+    assert not unset, (len(unset), unset)
 
 
 def test_options_set_only_by_tests_are_listed():
@@ -683,15 +661,93 @@ def test_every_environment_read_is_a_deployment_setting():
     assert not bad, bad
 
 
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """Without ``SPARK_GRAFT_DRIVER_MEM`` the driver heap is 40% of
+    physical memory, never above it and never above 32g; the variable
+    wins when set."""
+    import os
+
+    from etl_pipeline_excel_sql__spark.session import default_driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    got = default_driver_memory()
+    assert re.fullmatch(r"[1-9][0-9]*g", got), got
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(got[:-1]) * 2**30 <= phys and int(got[:-1]) <= 32, got
+    pages = {"SC_PAGE_SIZE": 4096}
+    monkeypatch.setattr(os, "sysconf", lambda k: pages[k])
+    pages["SC_PHYS_PAGES"] = 16 * 2**30 // 4096
+    assert default_driver_memory() == "6g"
+    pages["SC_PHYS_PAGES"] = 2**40 // 4096
+    assert default_driver_memory() == "32g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert default_driver_memory() == "3g"
+
+
+#: Where a statement runs more than once per call of its function.
+_REPEATS = (
+    ast.For, ast.AsyncFor, ast.While,
+    ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp,
+) + SCOPES
+
+
+def _is_truncator(node) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "LineageTruncator"
+    )
+
+
+def _one_shot_truncators(fn) -> list[int]:
+    """Lines where ``fn`` cuts through a name bound to
+    ``LineageTruncator(...)`` whose ``.truncate``/``.truncate_with`` is
+    called at one site, outside any loop, when the name is passed to no
+    other call."""
+    bound, passed, cuts = set(), set(), defaultdict(list)
+
+    def visit(node, repeated):
+        if isinstance(node, ast.Assign) and _is_truncator(node.value):
+            bound.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        if isinstance(node, ast.Call):
+            f = node.func
+            if (
+                isinstance(f, ast.Attribute)
+                and f.attr in ("truncate", "truncate_with")
+                and isinstance(f.value, ast.Name)
+            ):
+                cuts[f.value.id].append((node.lineno, repeated))
+            passed.update(
+                a.id
+                for a in node.args + [k.value for k in node.keywords]
+                if isinstance(a, ast.Name)
+            )
+        for child in ast.iter_child_nodes(node):
+            visit(child, repeated or isinstance(child, _REPEATS))
+
+    for stmt in fn.body:
+        visit(stmt, isinstance(stmt, _REPEATS))
+    return [
+        cuts[name][0][0]
+        for name in bound - passed
+        if len(cuts[name]) == 1 and not cuts[name][0][1]
+    ]
+
+
 def test_no_one_shot_lineage_truncator():
-    sites = []
+    """A truncator that cuts once has no prior cut to retire: the cut is
+    a plain ``localCheckpoint``. Two shapes: ``LineageTruncator(...)``
+    cut in the same expression, and a name bound to one that is cut at
+    a single site outside any loop and handed to no other call."""
+    sites = set()
     for path, tree in _trees(_caller_sources()):
+        where = path.relative_to(ROOT)
         for node in ast.walk(tree):
             if (
                 isinstance(node, ast.Attribute)
-                and node.attr == "truncate"
-                and isinstance(node.value, ast.Call)
-                and getattr(node.value.func, "id", None) == "LineageTruncator"
+                and node.attr in ("truncate", "truncate_with")
+                and _is_truncator(node.value)
             ):
-                sites.append(f"{path.relative_to(ROOT)}:{node.lineno}")
-    assert not sites, sites
+                sites.add(f"{where}:{node.lineno}")
+            if isinstance(node, FUNCS):
+                sites.update(f"{where}:{n}" for n in _one_shot_truncators(node))
+    assert not sites, sorted(sites)

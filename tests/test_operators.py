@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from etl_pipeline_excel_sql__spark.functions.vectors import (
     EMB_DIMS,
+    SRP_NEARDUP_BITS,
     cosine,
     dot,
 )
@@ -22,6 +23,7 @@ from etl_pipeline_excel_sql__spark.operators.similarity import (
     brute_force_topk,
     cosine_neardup_pairs,
     ivf_topk,
+    srp_candidate_stats,
 )
 
 DOCS = [
@@ -323,8 +325,10 @@ def test_ngram_jaccard_blocking_resists_first_token_skew(spark):
 
 
 def test_cosine_neardup_srp_prefilter_shrinks_candidates(spark):
-    """Multi-table SRP bucketing (6 bits x SRP_NEARDUP_TABLES) still
-    surfaces a planted near-dup pair among 400 random vectors."""
+    """Multi-table SRP bucketing (SRP_NEARDUP_BITS bits x
+    SRP_NEARDUP_TABLES) verifies fewer candidate pairs than all pairs
+    within the ``label`` blocks, and still surfaces a planted near-dup
+    pair among 400 random vectors."""
     import random
 
     rng = random.Random(3)
@@ -337,9 +341,15 @@ def test_cosine_neardup_srp_prefilter_shrinks_candidates(spark):
     rows.append((1001, _pad([v + 0.01 for v in base]), 0))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
 
+    stats = srp_candidate_stats(emb, srp_bits=SRP_NEARDUP_BITS)
+    # blocks: 200 odd-id vectors, and 200 even ones plus the planted pair
+    all_pairs = 202 * 201 // 2 + 200 * 199 // 2
+    assert 0 < stats["distinct_candidates"] < all_pairs, stats
     pairs = {
         (r.id_a, r.id_b)
-        for r in cosine_neardup_pairs(emb, threshold=0.99, srp_bits=6).collect()
+        for r in cosine_neardup_pairs(
+            emb, threshold=0.99, srp_bits=SRP_NEARDUP_BITS
+        ).collect()
     }
     assert (1000, 1001) in pairs
 

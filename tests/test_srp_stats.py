@@ -6,15 +6,15 @@ from __future__ import annotations
 
 from etl_pipeline_excel_sql__spark.functions.vectors import (
     EMB_DIMS,
+    SRP_NEARDUP_BITS,
     SRP_NEARDUP_MAX_BITS,
     SRP_NEARDUP_TABLES,
+    SRP_TARGET_BUCKET,
+    adaptive_srp_bits,
 )
 from etl_pipeline_excel_sql__spark.operators.similarity import (
     cosine_neardup_pairs,
     srp_candidate_stats,
-)
-from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-    SRP_NEARDUP_BITS,
 )
 from etl_pipeline_excel_sql__spark.plans.reference_queries import load_table
 
@@ -59,11 +59,6 @@ def test_stats_identical_vectors_collapse_to_one_bucket_per_table(spark):
 
 def test_adaptive_bits_matches_clamped_ceil_log2():
     import math
-
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
-        SRP_TARGET_BUCKET,
-        adaptive_srp_bits,
-    )
 
     # integer threshold ladder == clamp(ceil(log2(n/target)), MIN, MAX)
     for n in [0, 1, 500, 1024, 1025, 2000, 2048, 2049, 20000, 10**7, 10**12]:

@@ -35,7 +35,7 @@ def srp_diagnostics(spark, sf_dir: str) -> dict:
     from etl_pipeline_excel_sql__spark.operators.similarity import (
         srp_candidate_stats,
     )
-    from etl_pipeline_excel_sql__spark.plans.pipeline_queries import (
+    from etl_pipeline_excel_sql__spark.functions.vectors import (
         adaptive_srp_bits,
     )
     from etl_pipeline_excel_sql__spark.plans.reference_queries import load_table

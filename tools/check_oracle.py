@@ -162,9 +162,6 @@ def run_chunked(args) -> int:
     env = {
         **os.environ,
         "ORACLE_DUCKDB_MEM": os.environ.get("ORACLE_DUCKDB_MEM", "24GB"),
-        "SPARK_GRAFT_DRIVER_MEM": os.environ.get(
-            "SPARK_GRAFT_DRIVER_MEM", "16g"
-        ),
     }
     here = os.path.dirname(os.path.abspath(__file__))
 
